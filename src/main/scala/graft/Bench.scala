@@ -1,34 +1,98 @@
 package graft
 import org.apache.spark.sql.SparkSession
+import graft.queries.Q
 object Bench {
   // written by the throttle probe's spin so the JIT can't eliminate it
   @volatile private var probeSink: Long = 0L
+
+  /** One timed run: wall seconds, plus the 1-minute loadavg and the
+    * host-throttle stretch probed just before it. */
+  final case class Sample(sec: Double, loadavg: Double, stretch: Double)
+
+  /** A query that completed every run: its result row count and samples. */
+  final case class Timed(name: String, rows: Long, samples: Seq[Sample]) {
+    def best: Double = samples.map(_.sec).min
+  }
+
+  /** One catalog pass. Only `timed` queries count towards `total`; each
+    * `failed` entry is a query name and the error its run threw. */
+  final case class Report(timed: Seq[Timed], failed: Seq[(String, String)]) {
+    def total: Double = timed.map(_.best).sum
+  }
+
+  def run(spark: SparkSession, queries: Seq[Q], sfDir: String, runs: Int): Report = {
+    val outcomes = queries.map(q => q.name -> sample(spark, q, sfDir, runs))
+    Report(outcomes.collect { case (_, Right(t)) => t },
+      outcomes.collect { case (name, Left(err)) => name -> err })
+  }
+
+  /** Runs `q` `runs` times back to back. The first run that throws ends
+    * the query: it comes back as its error, and none of its runs is
+    * timed — a failure must never read as a fast query. */
+  def sample(spark: SparkSession, q: Q, sfDir: String, runs: Int): Either[String, Timed] =
+    try {
+      val counted = (1 to runs).map { _ =>
+        val la = loadavg()
+        val st = stretch()
+        val t0 = System.nanoTime()
+        try {
+          val rows = q.fn(spark, sfDir).count()
+          rows -> Sample((System.nanoTime() - t0) / 1e9, la, st)
+        } finally clearBlocks(spark)
+      }
+      Right(Timed(q.name, counted.last._1, counted.map(_._2)))
+    } catch { case e: Throwable =>
+      val err = s"${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(200)}"
+      // stderr, so the stdout JSON line stays parseable
+      System.err.println(s"[bench] ${q.name} FAILED: $err")
+      Left(err)
+    }
+
+  /** Free cached tables AND localCheckpoint/persist blocks so one
+    * query's pinned blocks never inflate the next query's time. */
+  private def clearBlocks(spark: SparkSession): Unit = {
+    spark.catalog.clearCache()
+    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
+  }
+
+  /** 1-minute loadavg at the moment a run starts — recorded per run
+    * so a co-tenant spike on this shared box is visible in the
+    * artifact itself instead of being reconstructed forensically a
+    * round later (three rounds of bench numbers have swung 2-9x on
+    * untouched code). */
+  private def loadavg(): Double =
+    try {
+      val src = scala.io.Source.fromFile("/proc/loadavg")
+      try src.getLines().next().split(" ")(0).toDouble finally src.close()
+    } catch { case _: Throwable => -1.0 }
+
+  /** Host-throttle probe: a fixed single-thread spin timed in BOTH
+    * wall and thread-CPU nanoseconds; the ratio (wall/cpu, "stretch")
+    * is ~1.0 on an unthrottled box and grows when the hypervisor
+    * deschedules the whole VM — interference that guest loadavg and
+    * steal counters CANNOT see (measured r11: a fixed sleep(8) took
+    * 12.9 s wall at loadavg 0.2, and the same query swung 124 s -> 4 s
+    * across 20 min on an "idle" box). Runs OUTSIDE the timed query
+    * section, like loadavg(); ~30 ms/call, self-normalizing under
+    * JIT (interpretation slows wall and cpu together). */
+  private def stretch(): Double =
+    try {
+      val mx = java.lang.management.ManagementFactory.getThreadMXBean
+      val c0 = mx.getCurrentThreadCpuTime
+      val t0 = System.nanoTime()
+      var x = 0x9E3779B97F4A7C15L ^ t0
+      var i = 0
+      while (i < 30000000) { x ^= x << 13; x ^= x >>> 7; x ^= x << 17; i += 1 }
+      probeSink = x
+      val cpu = (mx.getCurrentThreadCpuTime - c0).toDouble
+      if (cpu > 0) (System.nanoTime() - t0) / cpu else -1.0
+    } catch { case _: Throwable => -1.0 }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR",
       s"${graft.queries.Fixtures.testdataRoot}/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.plans.GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // subset co-partitioning (public Spark conf, default true since
-      // 3.3): a join keyed (bkey, grp) with both sides already
-      // hash-partitioned on bkey must NOT re-shuffle the bucketed
-      // store to the full key — the capped wave-vs-index join
-      // (MinhashPipeline.verifiedDupPairsCapped) depends on this to
-      // keep the band table exchange-free under its widened join key
-      .config("spark.sql.requireAllClusterKeysForCoPartition", "false")
-      // A/B knob (r17, VERDICT r16 item 3): AQE partition coalescing
-      // sized by BYTES (parallelismFirst=false respects the advisory
-      // target — Spark's own production recommendation) instead of the
-      // parallelism-first default. Off unless set; adopted only if the
-      // full-suite A/B shows a box-state-clean win (the decision and
-      // both totals live in OPTIMIZATION_r17.md).
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        if (sys.env.get("SPARK_GRAFT_BENCH_BYTESIZED").contains("1")) "false"
-        else "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val cpus = GraftSession.envCpus
+    val spark = GraftSession.local(cpus)
     spark.sparkContext.setLogLevel("WARN")
     // clearBlocks() unpersists locally-checkpointed RDDs, which logs a
     // benign "lineage has been truncated" WARN per block (each query
@@ -54,81 +118,19 @@ object Bench {
     // the recorded per-run loadavg makes any surviving outlier
     // self-explaining in the artifact.
     val runs = sys.env.get("SPARK_GRAFT_BENCH_RUNS").map(_.toInt).getOrElse(3).max(1)
-    // A/B knob for the measured heavy-neighbor JVM cost (+0.5-1.5 s a
-    // query inherits from an expensive predecessor, which clearBlocks()
-    // alone does not recover — artifacts/r15_q110_isolation.md): when
-    // set, force a full GC and a short settle between queries so each
-    // starts from a comparable heap/JIT neighborhood. Off by default;
-    // adopted only if the A/B shows it recovers >=half the inflation.
-    val gcSettle = sys.env.get("SPARK_GRAFT_BENCH_GC").contains("1")
-    /** Free cached tables AND localCheckpoint/persist blocks so one
-      * query's pinned blocks never inflate the next query's time. */
-    def clearBlocks(): Unit = {
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
-    }
-    /** 1-minute loadavg at the moment a run starts — recorded per run
-      * so a co-tenant spike on this shared box is visible in the
-      * artifact itself instead of being reconstructed forensically a
-      * round later (three rounds of bench numbers have swung 2-9x on
-      * untouched code). */
-    def loadavg(): Double =
-      try {
-        val src = scala.io.Source.fromFile("/proc/loadavg")
-        try src.getLines().next().split(" ")(0).toDouble finally src.close()
-      } catch { case _: Throwable => -1.0 }
-    /** Host-throttle probe: a fixed single-thread spin timed in BOTH
-      * wall and thread-CPU nanoseconds; the ratio (wall/cpu, "stretch")
-      * is ~1.0 on an unthrottled box and grows when the hypervisor
-      * deschedules the whole VM — interference that guest loadavg and
-      * steal counters CANNOT see (measured r11: a fixed sleep(8) took
-      * 12.9 s wall at loadavg 0.2, and the same query swung 124 s -> 4 s
-      * across 20 min on an "idle" box). Runs OUTSIDE the timed query
-      * section, like loadavg(); ~30 ms/call, self-normalizing under
-      * JIT (interpretation slows wall and cpu together). */
-    def stretch(): Double =
-      try {
-        val mx = java.lang.management.ManagementFactory.getThreadMXBean
-        val c0 = mx.getCurrentThreadCpuTime
-        val t0 = System.nanoTime()
-        var x = 0x9E3779B97F4A7C15L ^ t0
-        var i = 0
-        while (i < 30000000) { x ^= x << 13; x ^= x >>> 7; x ^= x << 17; i += 1 }
-        probeSink = x
-        val cpu = (mx.getCurrentThreadCpuTime - c0).toDouble
-        if (cpu > 0) (System.nanoTime() - t0) / cpu else -1.0
-      } catch { case _: Throwable => -1.0 }
-    val results = selected.map { q =>
-      val samples = (1 to runs).map { _ =>
-        val la = loadavg()
-        val st = stretch()
-        val t0 = System.nanoTime()
-        try { q.fn(spark, sfDir).count() } catch { case e: Throwable =>
-          // stderr, so the stdout JSON line stays parseable — but never
-          // silent: a swallowed failure looks like a fast query
-          System.err.println(s"[bench] ${q.name} FAILED: " +
-            s"${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(200)}")
-          -1L
-        }
-        val dt = (System.nanoTime() - t0) / 1e9
-        clearBlocks()
-        if (gcSettle) { System.gc(); Thread.sleep(250) }
-        (dt, la, st)
-      }
-      q.name -> samples
-    }
-    val qs = results.map { case (k, v) => s"\"" + k + "\":" + v.map(_._1).min }
+    val report = run(spark, selected, sfDir, runs)
+    val results = report.timed
+    def perQuery(f: Timed => String): String =
+      results.map(t => s"\"${t.name}\":${f(t)}").mkString("{", ",", "}")
+    val qs = perQuery(_.best.toString)
+    val rows = perQuery(_.rows.toString)
+    val allRuns = perQuery(_.samples.map(_.sec).mkString("[", ",", "]"))
+    val loads = perQuery(_.samples.map(_.loadavg).mkString("[", ",", "]"))
+    val stretches = perQuery(_.samples.map(s => f"${s.stretch}%.2f").mkString("[", ",", "]"))
+    val failed = report.failed
+      .map { case (name, err) => s"\"$name\":${Verify.jsonString(err)}" }
       .mkString("{", ",", "}")
-    val allRuns = results.map { case (k, v) =>
-      s"\"" + k + "\":" + v.map(_._1).mkString("[", ",", "]")
-    }.mkString("{", ",", "}")
-    val loads = results.map { case (k, v) =>
-      s"\"" + k + "\":" + v.map(_._2).mkString("[", ",", "]")
-    }.mkString("{", ",", "}")
-    val stretches = results.map { case (k, v) =>
-      s"\"" + k + "\":" + v.map(s => f"${s._3}%.2f").mkString("[", ",", "]")
-    }.mkString("{", ",", "}")
-    val total = if (results.nonEmpty) results.map(_._2.map(_._1).min).sum else 0.0
+    val total = report.total
     // Contention self-identification in the HEADLINE: r10's driver
     // artifact read 257.6 s vs 171.7 s on a judge rerun and nothing in
     // the stdout line explained the gap — the per-run loadavg that
@@ -137,20 +139,20 @@ object Bench {
     // sample; spread_max names the query whose best-to-worst run gap
     // is largest (a box-wide stall shows up as one query 5-25x its
     // steady cost in a single run).
-    val allLoads = results.flatMap(_._2.map(_._2)).filter(_ >= 0)
+    val allLoads = results.flatMap(_.samples.map(_.loadavg)).filter(_ >= 0)
     val laMean = if (allLoads.nonEmpty) allLoads.sum / allLoads.size else -1.0
     val laMax = if (allLoads.nonEmpty) allLoads.max else -1.0
-    val allStretch = results.flatMap(_._2.map(_._3)).filter(_ >= 0)
+    val allStretch = results.flatMap(_.samples.map(_.stretch)).filter(_ >= 0)
     val stMean = if (allStretch.nonEmpty) allStretch.sum / allStretch.size else -1.0
     val stMax = if (allStretch.nonEmpty) allStretch.max else -1.0
     val (spreadQ, spreadSec) = results
-      .map { case (k, v) => (k, v.map(_._1).max - v.map(_._1).min) }
+      .map { t => (t.name, t.samples.map(_.sec).max - t.best) }
       .sortBy(-_._2).headOption.getOrElse(("none", 0.0))
     // stdout gets ONLY the headline fields: with 100+ queries the
     // per-query map alone outgrows the driver's tail capture, which
     // left BENCH_r05/r06.json unparseable (`parsed: null`). The full
-    // per-query minima, per-run arrays, and per-run loadavg all land
-    // in the detail file.
+    // per-query minima, row counts, per-run arrays, per-run loadavg
+    // and the failed queries all land in the detail file.
     // Box-state verdict FIRST in the JSON: BENCH_r15.json recorded a
     // +20% hypervisor-throttled total and nothing in the leading bytes
     // said so — a reader had to know to check stretch_max. Three-valued
@@ -177,11 +179,11 @@ object Bench {
       f""""loadavg_mean":$laMean%.2f,"loadavg_max":$laMax%.2f,""" +
       f""""stretch_mean":$stMean%.2f,""" +
       f""""spread_max_query":"$spreadQ","spread_max_sec":$spreadSec%.2f,""" +
-      s""""gc_settle":$gcSettle,"sf":"$sfDir"}""")
+      s""""sf":"$sfDir"}""")
     val full = f"""{"box":"$box","stretch_max":$stMax%.2f,"blip_frac":$blipFrac%.3f,""" +
       s""""metric":"total","value":$total,"unit":"sec","runs":$runs,""" +
-      s""""queries":$qs,"all_runs":$allRuns,"loadavg":$loads,""" +
-      s""""stretch":$stretches,"gc_settle":$gcSettle,"sf":"$sfDir"}"""
+      s""""queries":$qs,"rows":$rows,"failed":$failed,"all_runs":$allRuns,""" +
+      s""""loadavg":$loads,"stretch":$stretches,"sf":"$sfDir"}"""
     // absolute paths: a run from another working directory must not
     // scatter the detail files, and a failed write must say so.
     // Two copies of the same detail JSON:
@@ -212,5 +214,7 @@ object Bench {
       }
     }
     spark.stop()
+    // a failed query makes the whole run fail, after its record is written
+    if (report.failed.nonEmpty) sys.exit(1)
   }
 }

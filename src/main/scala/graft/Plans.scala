@@ -1,14 +1,7 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Plans {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.plans.GraftExtensions).master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      // subset co-partitioning — see Bench.scala: keeps bucketed stores
-      // exchange-free under composite-key probe joins
-      .config("spark.sql.requireAllClusterKeysForCoPartition", "false")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = GraftSession.local(8)
     spark.sparkContext.setLogLevel("ERROR")
     val dir = s"${graft.queries.Fixtures.testdataRoot}/sf0.01"
     val names =

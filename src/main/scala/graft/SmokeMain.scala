@@ -1,14 +1,7 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object SmokeMain {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.plans.GraftExtensions).master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      // subset co-partitioning — see Bench.scala: keeps bucketed stores
-      // exchange-free under composite-key probe joins
-      .config("spark.sql.requireAllClusterKeysForCoPartition", "false")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = GraftSession.local(4)
     spark.sparkContext.setLogLevel("ERROR")
     val df = SparkEntry.entry(spark)
     val n = df.count()

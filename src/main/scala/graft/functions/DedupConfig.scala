@@ -5,8 +5,7 @@ import org.apache.spark.sql.functions.{greatest, least}
 
 /** Tuning constants of the MinHash/LSH/Jaccard dedup family, shared by
   * the gated queries (q41/q43/q52 in [[graft.queries.QueriesLlm]]) and
-  * the stage profiler ([[graft.Prof]]) so a retune of the query can
-  * never silently diverge from the workload the profiler measures.
+  * the specs that pin them.
   */
 object DedupConfig {
   /** MinHash signature length. */

@@ -40,16 +40,9 @@ object RangeJoin {
                       pointKeys: Seq[String], intervalKeys: Seq[String],
                       pos: String, start: String, stop: String,
                       binSize: Long = 1000000L,
-                      broadcastIntervals: Boolean = false): DataFrame = {
-    val binned = explodeToBins(intervals, start, stop, binSize)
-    val right = if (broadcastIntervals) broadcast(binned) else binned
-    val joinCond = pointKeys.zip(intervalKeys)
-      .map { case (pk, ik) => points(pk) === right(ik) }
-      .foldLeft(
-        (floor(points(pos) / binSize) === right("__bin")) &&
-          points(pos) >= right(start) && points(pos) <= right(stop))(_ && _)
-    points.join(right, joinCond).drop("__bin")
-  }
+                      broadcastIntervals: Boolean = false): DataFrame =
+    binnedPointJoin(points, intervals, pointKeys, intervalKeys, pos, start, stop,
+      binSize, broadcastIntervals, "inner")
 
   /** Left-outer variant: every point kept; interval columns null when no
     * interval covers it. A point can only match intervals in its own bin,
@@ -60,16 +53,9 @@ object RangeJoin {
                                pointKeys: Seq[String], intervalKeys: Seq[String],
                                pos: String, start: String, stop: String,
                                binSize: Long = 1000000L,
-                               broadcastIntervals: Boolean = false): DataFrame = {
-    val binned = explodeToBins(intervals, start, stop, binSize)
-    val right = if (broadcastIntervals) broadcast(binned) else binned
-    val joinCond = pointKeys.zip(intervalKeys)
-      .map { case (pk, ik) => points(pk) === right(ik) }
-      .foldLeft(
-        (floor(points(pos) / binSize) === right("__bin")) &&
-          points(pos) >= right(start) && points(pos) <= right(stop))(_ && _)
-    points.join(right, joinCond, "left_outer").drop("__bin")
-  }
+                               broadcastIntervals: Boolean = false): DataFrame =
+    binnedPointJoin(points, intervals, pointKeys, intervalKeys, pos, start, stop,
+      binSize, broadcastIntervals, "left_outer")
 
   /** Left-semi variant: rows of `points` covered by at least one
     * interval, each emitted once (the existence form — "is this
@@ -79,7 +65,19 @@ object RangeJoin {
                           pointKeys: Seq[String], intervalKeys: Seq[String],
                           pos: String, start: String, stop: String,
                           binSize: Long = 1000000L,
-                          broadcastIntervals: Boolean = false): DataFrame = {
+                          broadcastIntervals: Boolean = false): DataFrame =
+    binnedPointJoin(points, intervals, pointKeys, intervalKeys, pos, start, stop,
+      binSize, broadcastIntervals, "left_semi")
+
+  /** The one binned point join behind the three variants above: an
+    * equi-join on (keys, bin) with the inclusive range as residual.
+    * A semi join outputs only the point side, so there is no bin
+    * column to drop. */
+  private def binnedPointJoin(points: DataFrame, intervals: DataFrame,
+                              pointKeys: Seq[String], intervalKeys: Seq[String],
+                              pos: String, start: String, stop: String,
+                              binSize: Long, broadcastIntervals: Boolean,
+                              joinType: String): DataFrame = {
     val binned = explodeToBins(intervals, start, stop, binSize)
     val right = if (broadcastIntervals) broadcast(binned) else binned
     val joinCond = pointKeys.zip(intervalKeys)
@@ -87,7 +85,8 @@ object RangeJoin {
       .foldLeft(
         (floor(points(pos) / binSize) === right("__bin")) &&
           points(pos) >= right(start) && points(pos) <= right(stop))(_ && _)
-    points.join(right, joinCond, "left_semi")
+    val joined = points.join(right, joinCond, joinType)
+    if (joinType == "left_semi") joined else joined.drop("__bin")
   }
 
   /** Interval-overlap inner join: pairs where

@@ -28,7 +28,7 @@ import org.apache.spark.sql.types.{DoubleType, LongType}
   * checks equality against the un-rewritten join).
   *
   * Install via `spark.experimental.extraOptimizations :+= BinnedIntervalJoinRule`
-  * or `SparkSession.builder().withExtensions(new GraftExtensions)`.
+  * or by building the session with [[GraftExtensions]].
   * Inner joins only (outer variants need the helper's explicit form,
   * `RangeJoin.pointInIntervalLeftOuter`). Bin width: 1e6 (gene-scale
   * intervals; SURVEY §4).
@@ -99,8 +99,7 @@ object BinnedIntervalJoinRule extends Rule[LogicalPlan] with PredicateHelper {
 
 /** `SparkSessionExtensions` installer for the graft optimizer rules and
   * native functions. Every session the library builds (`Verify`,
-  * `Bench`, smoke, tests) goes through
-  * `SparkSession.builder().withExtensions(new GraftExtensions)`. */
+  * `Bench`, smoke, tests) gets it from `graft.GraftSession.local`. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     ext.injectOptimizerRule(_ => BinnedIntervalJoinRule)

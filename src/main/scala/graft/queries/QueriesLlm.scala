@@ -30,7 +30,7 @@ object QueriesLlm {
 
   private val P = TF.HashMod            // 1e9+7
   private val MP = TF.MinhashPrime      // 2^31-1
-  // dedup-family tuning lives in DedupConfig (shared with graft.Prof)
+  // dedup-family tuning lives in DedupConfig
   import graft.functions.DedupConfig.{K, Bands, Rpb, JaccThreshold, sizeRatioOk}
   private val Dim = 64                  // embedding dimensionality
   private val Planes = 8                // LSH hyperplanes
@@ -863,8 +863,8 @@ object QueriesLlm {
       Some(
         // norms hoisted per vector (the engine's own precomputed-nrm
         // shape; identical doubles) — 3x less per-pair fold work over
-        // the O(n^2) join, which is what makes this oracle PRIMEABLE
-        // at sf1 (tools/prime_oracle.py) instead of a permanent skip
+        // the O(n^2) join, which is what makes this oracle feasible
+        // inline at sf1
         s"""WITH $embCte,
            |en AS MATERIALIZED (
            |  SELECT vec_id, v, sqrt(${normSqSql("v")}) AS nrm FROM e)
@@ -1119,7 +1119,7 @@ object QueriesLlm {
         // norms hoisted per vector (engine's precomputed-nrm shape;
         // identical doubles) — the O(q·n) scored join pays one 8-dim
         // fold per pair instead of three, making the sf1 replay
-        // primeable (tools/prime_oracle.py)
+        // feasible inline
         s"""WITH c AS (
            |  SELECT doc_id, list_transform(string_split_regex(text, ''), c -> ascii(c)) AS codes
            |  FROM documents),

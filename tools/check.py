@@ -11,10 +11,7 @@ TABLES = ['region','nation','customer','supplier','part','orders','lineitem',
 
 
 def cache_key(sf, sql):
-    """Cache key for one (sf_dir, oracle-sql) pair — the single source
-    of truth for the oracle-result cache layout; sweep.py's primed()
-    imports this so the two can never drift (a silent drift would make
-    primed QUADRATIC oracles quietly revert to being skipped)."""
+    """Cache key for one (sf_dir, oracle-sql) pair."""
     return hashlib.sha256((sf + '\0' + sql).encode()).hexdigest()[:24]
 
 

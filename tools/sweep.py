@@ -3,8 +3,7 @@
 
 The driver's correctness gate runs at sf0.01; this sweep re-validates
 each query's hash-match at another SF (one DuckDB run per query, with a
-timeout so the handful of quadratic oracles — infeasible in DuckDB at
-sf0.1 — skip instead of stalling everything). This is how the q64
+per-query timeout so one slow oracle cannot stall everything). This is how the q64
 window-pairing nondeterminism was caught: it passed at sf0.01 by luck
 and only diverged once duplicate sort keys landed in the same group.
 
@@ -25,31 +24,6 @@ import json
 import os
 import subprocess
 import sys
-
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
-from check import cache_key  # noqa: E402 — shared key derivation
-
-QUADRATIC = set()  # EMPTY as of r15 — every oracle sweeps inline.
-# History of the set (the skip-unless-primed mechanism stays for any
-# future oracle whose replay outgrows a budget):
-# - late r11: q46/q58/q118/q131 left — hoisting per-vector norms out
-#   of the pair joins (engine's precomputed-nrm shape, identical
-#   doubles) cut per-pair work ~3-6x into the 900s band.
-# - r14: q52/q88's rewrite (exact shingle dictionary + hoisted sizes +
-#   size-ratio cut + MATERIALIZED pairs/edges — the recursive closure
-#   had been re-running the quadratic scan per fringe round).
-# - r15: the remaining seven all left via CLASS BLOCKING — copies
-#   share every text/embedding-derived quantity (shingle sets,
-#   signatures, band keys, jaccard, cells, cosine), so the quadratic
-#   stages run over identical-content class representatives (~n/10 on
-#   gen_sf corpora) and qualifying class pairs re-expand to doc pairs;
-#   q119's transitive closure walks the class graph (~100x fewer
-#   edges — the closure was its measured infeasibility, >27min at
-#   sf1). Measured sf1 walls: q41 419s (vs >5400s abandonment),
-#   q43 136s (vs ~10h est), q52 136s (vs ~4h est), q92 ~8s at sf0.1
-#   (vs 1879-2336s at sf1 naive), q108 4s at sf0.1 (vs 663s sf1
-#   prime), q119 3s at sf0.1 (vs 3004s sf1 prime).
-#   artifacts/r15_sf1_oracles.md.
 
 # Oracles that are correct but expensive in DuckDB at sf1 — they get a
 # larger per-query budget instead of the sweep default, so the gate
@@ -97,14 +71,15 @@ SLOW_ORACLE_TIMEOUT = {
     # the centroid-assignment cross join is n^2/101 rows of 8-dim
     # cosine (25x cheaper per row than q53's 64-dim)
     "q130_multimodal_ann": 900,
-    # r15: class-blocked (see QUADRATIC note) — measured sf1 walls
+    # r15: class-blocked (identical-content classes, artifacts/
+    # r15_sf1_oracles.md) — measured sf1 walls
     # 419s / 136s / 136s, inside the 900s band at every SF
     "q41_dedup_minhash_lsh": 900,
     "q43_dedup_ngram_jaccard": 900,
     "q52_dedup_clusters": 900,
     # r14's MATERIALIZED-closure rewrite: 27.6s at sf1, 30s at sf0.1
     "q88_dedup_pipeline": 900,
-    # r15 class-blocked (see QUADRATIC history note): sub-minute at
+    # r15 class-blocked (as above): sub-minute at
     # sf0.1; 900s covers the sf1 signing/feature scans under load
     "q92_dedup_prefix_filter": 900,
     "q108_dedup_minhash_word": 900,
@@ -112,8 +87,7 @@ SLOW_ORACLE_TIMEOUT = {
     # measured inline-feasible at sf1 after all (r11 priming run,
     # 8 DuckDB threads): q44 57s (400 probes x corpus — linear in
     # corpus, not quadratic), q53 263s (n x n/40 64-dim assignment
-    # cross join), q45 1.4s (bucket equi-join). Moved out of QUADRATIC
-    # so future sweeps check them without a priming pass.
+    # cross join), q45 1.4s (bucket equi-join).
     "q44_knn_bruteforce": 900,
     "q45_knn_lsh": 300,
     "q53_knn_ivf": 900,
@@ -145,36 +119,17 @@ SLOW_ORACLE_TIMEOUT = {
 }
 
 
-def primed(cache_dir, sf_dir, sql):
-    """True iff check.py's run_oracle would hit the cache for this
-    oracle — key derivation imported from check.py (module scope) so
-    the two can never silently drift."""
-    return os.path.exists(f"{cache_dir}/{cache_key(sf_dir, sql)}.parquet")
-
-
 def main():
     sf_dir, out_dir = sys.argv[1], sys.argv[2]
     per_query_timeout = sys.argv[3] if len(sys.argv) > 3 else "150"
     oracle_sql = json.load(open(f"{out_dir}/oracle_sql.json"))
     names = sorted(oracle_sql.keys())
     # per-dump oracle-result cache (see check.py run_oracle): queries
-    # sharing one oracle verbatim pay DuckDB once, and a background
-    # priming run can pre-stage an expensive oracle's expected table
-    # so it sweeps as a real checked row instead of a timeout skip
+    # sharing one oracle verbatim pay DuckDB once
     cache_dir = f"{out_dir}/oracle_cache"
     env = dict(os.environ, GRAFT_ORACLE_CACHE=cache_dir)
-    ok, fail, timed_out, skipped = [], [], [], []
+    ok, fail, timed_out = [], [], []
     for n in names:
-        # a QUADRATIC query whose oracle was PRIMED into the cache by a
-        # budget-free background run sweeps as a real checked row — the
-        # skip exists because the DuckDB replay is infeasible inline,
-        # not because the comparison is
-        if n in QUADRATIC and not primed(cache_dir, sf_dir, oracle_sql[n]):
-            skipped.append(n)
-            # name the skip in the log so the artifact is
-            # self-enumerating (a silent skip reads as a missing row)
-            print(f"{n}: SKIP (quadratic oracle, not primed)", flush=True)
-            continue
         budget = str(SLOW_ORACLE_TIMEOUT.get(n, per_query_timeout))
         r = subprocess.run(
             ["timeout", budget, "python3", "-u", "tools/check.py",
@@ -192,7 +147,7 @@ def main():
             fail.append(n)
             print(f"{n}: FAIL {tail}", flush=True)
     print(f"== sweep {sf_dir}: {len(ok)} ok, {len(fail)} fail, "
-          f"{len(timed_out)} timeout, {len(skipped)} skipped ==")
+          f"{len(timed_out)} timeout ==")
     sys.exit(1 if fail else 0)
 
 

@@ -1,7 +1,9 @@
 package graft
 import java.nio.file.{Files, Paths}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the driver's DuckDB compare. Exits 1, after
+  * oracle_sql.json is written, when any selected query threw. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
@@ -12,19 +14,33 @@ object Verify {
     // runs with it unset = full dump)
     val filter = sys.env.get("SPARK_GRAFT_VERIFY_FILTER")
       .map(_.split(",").toSeq).getOrElse(Nil)
-    SparkEntry.queries
+    val failed = SparkEntry.queries.toSeq
       .filter { case (name, _) => filter.isEmpty || filter.exists(name.contains) }
-      .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-      }
-    }
+      .filterNot { case (name, fn) => dump(spark, name, fn, sfDir, outDir) }
+      .map(_._1).sorted
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${jsonString(k)}: ${jsonString(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
+    if (failed.nonEmpty) {
+      System.err.println(s"[verify] ${failed.size} failed: ${failed.mkString(", ")}")
+      sys.exit(1)
+    }
+  }
+
+  /** Writes query `name`'s result to `outDir/name` as parquet; false if
+    * it threw. The previous dump is deleted first: a query that throws
+    * before its write starts (an analysis error, an eager checkpoint
+    * inside `fn`) must leave no stale result for the compare to pass. */
+  def dump(spark: SparkSession, name: String, fn: (SparkSession, String) => DataFrame,
+           sfDir: String, outDir: String): Boolean = {
+    val out = new java.io.File(outDir, name)
+    graft.queries.Fixtures.rmrf(out)
+    try { fn(spark, sfDir).coalesce(1).write.parquet(out.getPath); true }
+    catch { case e: Throwable =>
+      System.err.println(s"[verify] $name failed: ${e.getMessage}")
+      false
+    }
   }
 
   /** JSON string literal: escapes backslash, quote, and ALL control

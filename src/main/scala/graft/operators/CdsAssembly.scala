@@ -1,21 +1,85 @@
 package graft.operators
 
-import org.apache.spark.sql.{Encoder, Encoders}
+import graft.functions.{DnaFunctions, VariantFunctions}
+import org.apache.spark.sql.{DataFrame, Encoder, Encoders}
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
-import org.apache.spark.sql.expressions.Aggregator
+import org.apache.spark.sql.expressions.{Aggregator, Window}
+import org.apache.spark.sql.functions._
 
-/** Typed building blocks for per-transcript CDS assembly.
+/** Per-transcript CDS assembly and the codon effect of an SNV on it —
+  * the post-processing stage (`VariantPostProcessing.processTranscript`,
+  * reference `VariantPostProcessing.java:370-551`).
   *
-  * The catalog's q60 assembles CDS with
-  * `sort_array(collect_list(struct(exon_idx, dna)))` — fine while a
-  * transcript's exons fit comfortably in one aggregation buffer. This
-  * typed [[Aggregator]] is the documented fallback (SURVEY §7.4.1) for
-  * the same semantics with explicit, incremental buffer management:
-  * partial aggregation runs map-side (chunks accumulate per partition
-  * and merge associatively), and only `finish` materializes the
-  * ordered concatenation.
+  * The catalog (q60, q82, q84) calls [[assemble]] and [[codonEffect]].
+  * [[OrderedConcat]] is a typed [[Aggregator]] for the same ordered
+  * concatenation with explicit, incremental buffer management (partial
+  * aggregation runs map-side, only `finish` sorts); it stays because the
+  * perfbench loader and `CdsAssemblySkewSpec` call it.
   */
 object CdsAssembly {
+
+  /** `exons` with `prior_len`, and the per-transcript `cds`. */
+  final case class Assembly(exons: DataFrame, cds: DataFrame)
+
+  /** Assembles the exons (tid, strand, exon_idx, dna, ...) of each
+    * transcript. `exons` gains `prior_len`, the summed DNA length of the
+    * transcript's earlier exons (W4), so a base at offset `o` (0-based)
+    * into an exon sits at CDS position `prior_len + o + 1`. `cds` is
+    * (tid, strand, cds): the exon DNA concatenated in `exon_idx` order
+    * (A10), stored strand, not reverse-complemented. */
+  def assemble(exons: DataFrame): Assembly = {
+    val prior = Window.partitionBy(col("tid")).orderBy(col("exon_idx"))
+      .rowsBetween(Window.unboundedPreceding, -1)
+    Assembly(
+      exons.withColumn("prior_len",
+        coalesce(sum(length(col("dna"))).over(prior), lit(0)).cast("long")),
+      exons.groupBy(col("tid"), col("strand"))
+        .agg(array_join(transform(
+          sort_array(collect_list(struct(col("exon_idx"), col("dna")))),
+          x => x("dna")), "").as("cds")))
+  }
+
+  /** Codon effect of the SNV `var_base` at CDS position `rel_pos` of
+    * `cds` on a transcript read on `strand`. Adds:
+    *  - `rel2`: the position on the coding strand (flipped on '-');
+    *  - `triplet_error` "T" when `rel2` lies past the CDS truncated to a
+    *    codon multiple (X19), else "F";
+    *  - `aa_pos`: the 1-based codon number (0 on a triplet error);
+    *  - `ref_codon`/`var_codon`, `ref_aa`/`var_aa` and `syn_status`
+    *    (X17, X21), "" and "skipped" on a triplet error.
+    * Only the mutated codon is cut and read back (reverse-complemented
+    * on '-'), never the whole CDS: O(1) per (variant, transcript) row
+    * where CDS are kilobases and a variant fans out to every
+    * overlapping transcript. */
+  def codonEffect(hits: DataFrame): DataFrame = {
+    val minus = col("strand") === "-"
+    val skip = col("triplet_error") === "T"
+    hits
+      .withColumn("rel2",
+        when(minus, length(col("cds")) - col("rel_pos") + 1).otherwise(col("rel_pos")))
+      .withColumn("triplet_error",
+        when(col("rel2") > expr("3 * (length(cds) DIV 3)"), "T").otherwise("F"))
+      .withColumn("aa_pos", when(skip, 0L).otherwise(expr("CAST((rel2 + 2) DIV 3 AS BIGINT)")))
+      // coding-strand codon [3*aa_pos-2, 3*aa_pos] is stored at
+      // [len-3*aa_pos+1, len-3*aa_pos+3] on '-'
+      .withColumn("ref_codon",
+        when(skip, lit(""))
+          .when(minus, DnaFunctions.reverseComplement(
+            expr("substring(cds, CAST(length(cds) - 3 * aa_pos + 1 AS INT), 3)")))
+          .otherwise(expr("substring(cds, CAST(3 * aa_pos - 2 AS INT), 3)")))
+      .withColumn("var_codon",
+        when(skip, lit(""))
+          .otherwise(overlay(col("ref_codon"),
+            when(minus, DnaFunctions.reverseComplement(col("var_base")))
+              .otherwise(col("var_base")),
+            (col("rel2") - col("aa_pos") * 3 + 3).cast("int"))))
+      .withColumn("ref_aa",
+        when(skip, "skipped").otherwise(DnaFunctions.translateCodon(col("ref_codon"))))
+      .withColumn("var_aa",
+        when(skip, "skipped").otherwise(DnaFunctions.translateCodon(col("var_codon"))))
+      .withColumn("syn_status",
+        when(skip, "skipped").otherwise(VariantFunctions.synStatus(col("ref_aa"), col("var_aa"))))
+  }
 
   /** One exon's DNA chunk within transcript `tid`. */
   case class ExonChunk(tid: Long, exon_idx: Int, dna: String)

@@ -28,6 +28,41 @@ object QueriesGenomic {
     s"CASE $c $whens ELSE 'X' END"
   }
 
+  /** DuckDB CTEs `ori`, `fin`, `aa` and `codon` over `src`, a relation
+    * with (strand, cds, rel_pos, var_base) plus the `keep` columns: the
+    * oracle of `CdsAssembly.codonEffect`, by a different algorithm. It
+    * applies the SNV to the whole CDS, reverse-complements both on '-',
+    * and translates the `aa_pos`-th codon of each. `codon` has `keep`,
+    * strand, rel2, triplet_error, aa_pos, ref_aa, var_aa, syn_status. */
+  private[queries] def codonEffectSql(src: String, keep: Seq[String]): String = {
+    val k = keep.map(_ + ", ").mkString
+    val revcomp = (c: String) => s"reverse(translate(upper($c), 'ACGT', 'TGCA'))"
+    s"""ori AS (
+       |  SELECT ${k}strand,
+       |    CASE WHEN strand = '-' THEN ${revcomp("cds")} ELSE cds END AS cds2,
+       |    CASE WHEN strand = '-' THEN ${revcomp("var_cds")} ELSE var_cds END AS var_cds2,
+       |    CASE WHEN strand = '-' THEN length(cds) - rel_pos + 1 ELSE rel_pos END AS rel2
+       |  FROM (SELECT *, substr(cds, 1, CAST(rel_pos - 1 AS INT)) || var_base ||
+       |          substr(cds, CAST(rel_pos + 1 AS INT)) AS var_cds FROM $src)),
+       |fin AS (
+       |  SELECT *, CASE WHEN rel2 > 3 * (length(cds2) // 3) THEN 'T' ELSE 'F' END AS triplet_error,
+       |    CASE WHEN rel2 > 3 * (length(cds2) // 3) THEN 0 ELSE (rel2 + 2) // 3 END AS aa_pos
+       |  FROM ori),
+       |aa AS (
+       |  SELECT ${k}strand, rel2, triplet_error, CAST(aa_pos AS BIGINT) AS aa_pos,
+       |    CASE WHEN triplet_error = 'T' THEN 'skipped'
+       |         ELSE ${codonCaseSql("substr(cds2, CAST(3 * aa_pos - 2 AS INT), 3)")} END AS ref_aa,
+       |    CASE WHEN triplet_error = 'T' THEN 'skipped'
+       |         ELSE ${codonCaseSql("substr(var_cds2, CAST(3 * aa_pos - 2 AS INT), 3)")} END AS var_aa
+       |  FROM fin),
+       |codon AS (
+       |  SELECT *, CASE WHEN triplet_error = 'T' THEN 'skipped'
+       |                 WHEN ref_aa = 'X' OR var_aa = 'X' THEN 'unassignable'
+       |                 WHEN ref_aa = var_aa THEN 'synonymous'
+       |                 ELSE 'nonsynonymous' END AS syn_status
+       |  FROM aa)""".stripMargin
+  }
+
   /** Shared DuckDB fragment: synthetic DNA per part row (must mirror the
     * Spark derivation in q28 below). */
   private val dnaSqlCte =

@@ -2,8 +2,8 @@ package graft.queries
 
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.functions.{DnaFunctions, VariantFunctions}
-import graft.operators.WigParser
+import graft.functions.VariantFunctions
+import graft.operators.{CdsAssembly, WigParser}
 
 /** The reference's pipeline-shaped operators, re-expressed Spark-first:
   * CDS assembly + codon translation (SURVEY §3.3 / A10 / W4 / X18-X21),
@@ -24,21 +24,20 @@ object QueriesPipeline {
   // `VariantPostProcessing.java:370-551`): per transcript, exons are
   // collected in genomic order, concatenated into a CDS, the variant is
   // applied at its CDS-relative position (prefix sum of prior exon
-  // lengths — W4), minus-strand transcripts are reverse-complemented
+  // lengths — W4), minus-strand transcripts are read reverse-complemented
   // with the relative position flipped, the CDS is truncated to a
   // multiple of 3 (variant beyond the truncation => triplet error), and
-  // both sequences are codon-translated to call synonymous status.
+  // both codons are translated to call synonymous status.
   //
   // Synthetic transcript model (from `part`): 2-4 exons per transcript,
   // deterministic per-base DNA, one SNV per transcript landing in exon
   // (tid % n_exons).
 
   private def cdsQuery(spark: org.apache.spark.sql.SparkSession, dir: String) = {
-    val t = table(spark, dir, "part").select(
-      col("p_partkey").as("tid"),
-      (col("p_partkey") % 3 + 2).cast("int").as("n_exons"),
-      when(col("p_partkey") % 2 === 1, "-").otherwise("+").as("strand"))
-    val ex = t
+    val ex = table(spark, dir, "part").select(
+        col("p_partkey").as("tid"),
+        (col("p_partkey") % 3 + 2).cast("int").as("n_exons"),
+        when(col("p_partkey") % 2 === 1, "-").otherwise("+").as("strand"))
       .withColumn("exon_idx", explode(sequence(lit(0), col("n_exons") - 1)))
       .withColumn("e_len", (lit(24) + (col("tid") * 7 + col("exon_idx") * 13) % 33).cast("int"))
       .withColumn("dna", array_join(
@@ -46,62 +45,21 @@ object QueriesPipeline {
           i => element_at(split(lit("ACGT"), ""),
             ((col("tid") * 31 + col("exon_idx") * 7 + i * 3) % 4).cast("int") + 1)),
         ""))
-    // W4: prefix sum of prior exon lengths = the variant's CDS offset base
-    val w = Window.partitionBy(col("tid")).orderBy(col("exon_idx"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val hit = ex
-      .withColumn("prior_len", coalesce(sum(col("e_len")).over(w), lit(0)).cast("long"))
+    val asm = CdsAssembly.assemble(ex)
+    val hit = asm.exons
       .filter(col("exon_idx") === col("tid") % col("n_exons"))
-      .withColumn("offset", (col("tid") * 13) % col("e_len"))
-      .withColumn("rel_pos", col("prior_len") + col("offset") + 1)
+      .withColumn("rel_pos", col("prior_len") + (col("tid") * 13) % col("e_len") + 1)
       .withColumn("var_base", element_at(split(lit("ACGT"), ""),
         ((col("tid") * 17 + 3) % 4).cast("int") + 1))
       .select(col("tid"), col("rel_pos"), col("var_base"))
-    // A10: ordered CDS assembly (collect + sort by exon_idx, concat)
-    val cds = ex.groupBy(col("tid"))
-      .agg(sort_array(collect_list(struct(col("exon_idx"), col("dna")))).as("exons"))
-      .select(col("tid"),
-        array_join(transform(col("exons"), x => x("dna")), "").as("cds"))
-    val asm = t.join(cds, "tid").join(hit, "tid")
-      // X20: apply the SNV at rel_pos
-      .withColumn("var_cds", concat(
-        expr("substring(cds, 1, CAST(rel_pos - 1 AS INT))"),
-        col("var_base"),
-        expr("substring(cds, CAST(rel_pos + 1 AS INT))")))
-      // X2 + relPos flip for minus strand
-      .withColumn("cds2", when(col("strand") === "-",
-        DnaFunctions.reverseComplement(col("cds"))).otherwise(col("cds")))
-      .withColumn("var_cds2", when(col("strand") === "-",
-        DnaFunctions.reverseComplement(col("var_cds"))).otherwise(col("var_cds")))
-      .withColumn("rel2", when(col("strand") === "-",
-        length(col("cds")) - col("rel_pos") + 1).otherwise(col("rel_pos")))
-      // X19: truncate to a codon multiple; variant past it = triplet error
-      .withColumn("trunc_len", expr("3 * (length(cds2) DIV 3)"))
-      .withColumn("triplet_error", when(col("rel2") > col("trunc_len"), "T").otherwise("F"))
-      // X21: aa position + codons
-      .withColumn("aa_pos",
-        when(col("triplet_error") === "T", 0L)
-          .otherwise(expr("CAST((rel2 + 2) DIV 3 AS BIGINT)")))
-      .withColumn("ref_aa",
-        when(col("triplet_error") === "T", "skipped")
-          .otherwise(DnaFunctions.translateCodon(
-            expr("substring(cds2, CAST(3 * aa_pos - 2 AS INT), 3)"))))
-      .withColumn("var_aa",
-        when(col("triplet_error") === "T", "skipped")
-          .otherwise(DnaFunctions.translateCodon(
-            expr("substring(var_cds2, CAST(3 * aa_pos - 2 AS INT), 3)"))))
-      // X17
-      .withColumn("syn_status",
-        when(col("triplet_error") === "T", "skipped")
-          .otherwise(VariantFunctions.synStatus(col("ref_aa"), col("var_aa"))))
-    asm.groupBy(col("strand"), col("triplet_error"), col("syn_status"))
+    CdsAssembly.codonEffect(asm.cds.join(hit, "tid"))
+      .groupBy(col("strand"), col("triplet_error"), col("syn_status"))
       .agg(count(lit(1)).as("cnt"), sum(col("aa_pos")).as("sum_aa_pos"),
         sum(col("rel2")).as("sum_rel_pos"))
       .orderBy(col("strand"), col("triplet_error"), col("syn_status"))
   }
 
-  private val cdsOracle: String = {
-    val revcomp = (c: String) => s"reverse(translate(upper($c), 'ACGT', 'TGCA'))"
+  private val cdsOracle: String =
     s"""WITH t AS (
        |  SELECT p_partkey AS tid, CAST(p_partkey % 3 + 2 AS INT) AS n_exons,
        |    CASE WHEN p_partkey % 2 = 1 THEN '-' ELSE '+' END AS strand
@@ -124,37 +82,14 @@ object QueriesPipeline {
        |  FROM exd QUALIFY exon_idx = tid % n_exons),
        |cds AS (SELECT tid, string_agg(dna, '' ORDER BY exon_idx) AS cds FROM exd GROUP BY tid),
        |asm AS (
-       |  SELECT t.tid, t.strand, c.cds, h.rel_pos,
-       |    substr(c.cds, 1, CAST(h.rel_pos - 1 AS INT)) || h.var_base
-       |      || substr(c.cds, CAST(h.rel_pos + 1 AS INT)) AS var_cds
+       |  SELECT t.strand, c.cds, h.rel_pos, h.var_base
        |  FROM t JOIN cds c ON c.tid = t.tid JOIN hit h ON h.tid = t.tid),
-       |ori AS (
-       |  SELECT tid, strand,
-       |    CASE WHEN strand = '-' THEN ${revcomp("cds")} ELSE cds END AS cds2,
-       |    CASE WHEN strand = '-' THEN ${revcomp("var_cds")} ELSE var_cds END AS var_cds2,
-       |    CASE WHEN strand = '-' THEN length(cds) - rel_pos + 1 ELSE rel_pos END AS rel2
-       |  FROM asm),
-       |fin AS (
-       |  SELECT *, CASE WHEN rel2 > 3 * (length(cds2) // 3) THEN 'T' ELSE 'F' END AS triplet_error,
-       |    CASE WHEN rel2 > 3 * (length(cds2) // 3) THEN 0 ELSE (rel2 + 2) // 3 END AS aa_pos
-       |  FROM ori),
-       |aa AS (
-       |  SELECT strand, triplet_error, CAST(aa_pos AS BIGINT) AS aa_pos, rel2,
-       |    CASE WHEN triplet_error = 'T' THEN 'skipped'
-       |         ELSE ${QueriesGenomic.codonCaseSql("substr(cds2, CAST(3 * aa_pos - 2 AS INT), 3)")} END AS ref_aa,
-       |    CASE WHEN triplet_error = 'T' THEN 'skipped'
-       |         ELSE ${QueriesGenomic.codonCaseSql("substr(var_cds2, CAST(3 * aa_pos - 2 AS INT), 3)")} END AS var_aa
-       |  FROM fin)
-       |SELECT strand, triplet_error,
-       |  CASE WHEN triplet_error = 'T' THEN 'skipped'
-       |       WHEN ref_aa = 'X' OR var_aa = 'X' THEN 'unassignable'
-       |       WHEN ref_aa = var_aa THEN 'synonymous'
-       |       ELSE 'nonsynonymous' END AS syn_status,
+       |${QueriesGenomic.codonEffectSql("asm", Nil)}
+       |SELECT strand, triplet_error, syn_status,
        |  count(*) AS cnt, CAST(sum(aa_pos) AS BIGINT) AS sum_aa_pos,
        |  CAST(sum(rel2) AS BIGINT) AS sum_rel_pos
-       |FROM aa
+       |FROM codon
        |GROUP BY 1, 2, 3 ORDER BY 1, 2, 3""".stripMargin
-  }
 
   // ================= q62: wig fixedStep parse =========================
 
@@ -733,38 +668,25 @@ object QueriesPipeline {
     // deterministic synthetic FASTA text (5 chromosomes from region,
     // 20 x 40bp lines each) is parsed (header spans -> per-line
     // offsets), re-chunked to a fixed-width chunk table, and a random
-    // 333bp window is extracted per chromosome via chunk-pruned
-    // substring concat. The oracle rebuilds the same sequences with
-    // string aggregation and plain substr.
+    // 333bp window is extracted per chromosome by one `Fasta.fetch` of
+    // the five intervals (five one-interval `getSequence` calls would
+    // add one broadcast job each). The oracle rebuilds the same
+    // sequences with string aggregation and plain substr.
     Q("q72_fasta_extract",
       (spark, dir) => {
-        val bases = typedlit(Seq("A", "C", "G", "T"))
         val chrs = table(spark, dir, "region").select((col("r_regionkey") + 1).as("c"))
-        val headers = chrs.select((col("c") * 10000).as("line_id"),
-          concat(lit(">chr"), col("c")).as("line"))
-        val seqLines = chrs.withColumn("i", explode(sequence(lit(1), lit(20))))
-          .select((col("c") * 10000 + col("i")).as("line_id"),
-            array_join(transform(sequence(lit(1), lit(40)),
-              j => element_at(bases,
-                ((col("c") * 7 + col("i") * 3 + j) % 4 + 1).cast("int"))), "").as("line"))
         val chunks = graft.sources.Fasta.toChunks(
-          graft.sources.Fasta.parseLines(headers.unionByName(seqLines)), width = 128)
-          .localCheckpoint(true) // five extracts below share the parse
-        (1 to 5).map(c =>
-            graft.sources.Fasta.getSequence(chunks, s"chr$c", 123L, 456L, width = 128))
-          .reduce(_ unionByName _)
+          graft.sources.Fasta.parseLines(Synthetic.genomeLines(chrs, lines = 20)), width = 128)
+        val windows = chrs.select(concat(lit("chr"), col("c")).as("chr"),
+          lit(124L).as("start"), lit(456L).as("stop"))
+        graft.sources.Fasta.fetch(windows, chunks, 128)
+          .select(col("chr"), col("dna").as("seq"))
           .orderBy(col("chr"))
       },
       Some(
-        """WITH c AS (SELECT r_regionkey + 1 AS c FROM region),
-          |ln AS (
-          |  SELECT c, i, string_agg(ch, '' ORDER BY j) AS line
-          |  FROM (SELECT c, i, j, ['A','C','G','T'][(c*7 + i*3 + j) % 4 + 1] AS ch
-          |        FROM c, generate_series(1, 20) s(i), generate_series(1, 40) t(j))
-          |  GROUP BY c, i),
-          |chrseq AS (SELECT c, string_agg(line, '' ORDER BY i) AS seq FROM ln GROUP BY c)
-          |SELECT 'chr' || CAST(c AS STRING) AS chr, substr(seq, 124, 333) AS seq
-          |FROM chrseq ORDER BY chr""".stripMargin)),
+        s"""WITH ${Synthetic.genomeSql("SELECT r_regionkey + 1 AS c FROM region", 20)}
+           |SELECT 'chr' || CAST(c AS STRING) AS chr, substr(seq, 124, 333) AS seq
+           |FROM chrseq ORDER BY chr""".stripMargin)),
 
     // X9/F4/A5: FORMAT-field index resolution (AD with CLCAD2 fallback),
     // genotype filter, AD-array depth sum.
@@ -1006,12 +928,11 @@ object QueriesPipeline {
     // The §3.3 heart of the reference (`VariantPostProcessing.java:157-551`)
     // with the DNA coming from the FASTA *chunk table* instead of inline
     // synthesis: variants ⋈ exon features (binned interval join, J1) →
-    // exon DNA fetched by a shuffled (chr, chunk_idx) equi-join against
-    // Fasta.toChunks output (S5 — DNA travels to executors, never
-    // broadcast) → per-transcript CDS assembly (A10) → SNV application,
-    // strand flip, codon translation, synonymous call (X17-X21), same
-    // math as q60. A variant hits EVERY covering transcript (the
-    // reference's per-variant transcript loop), not just its origin.
+    // exon DNA by `Fasta.fetch` (S5 — DNA travels to executors, never
+    // broadcast) → per-transcript CDS assembly (A10) → SNV codon effect
+    // (X17-X21), the same `CdsAssembly` path as q60. A variant hits
+    // EVERY covering transcript (the reference's per-variant transcript
+    // loop), not just its origin.
     // 100 TB: the chunk join replaces the reference's driver-side mmap
     // (`ChrFastaFile.java:20-102`) — the genome shards across executors
     // keyed by (chr, chunk_idx); exon rows replicate onto at most 2
@@ -1020,22 +941,13 @@ object QueriesPipeline {
     Q("q82_postprocess_fasta",
       (spark, dir) => {
         val W = 128
-        val bases = typedlit(Seq("A", "C", "G", "T"))
-        // genome: 25 chromosomes x 800bp, deterministic per-base
-        val chrs = table(spark, dir, "nation").select((col("n_nationkey") + 1).as("c"))
-        val headers = chrs.select((col("c") * 10000).as("line_id"),
-          concat(lit(">chr"), col("c")).as("line"))
-        val seqLines = chrs.withColumn("i", explode(sequence(lit(1), lit(20))))
-          .select((col("c") * 10000 + col("i")).as("line_id"),
-            array_join(transform(sequence(lit(1), lit(40)),
-              j => element_at(bases,
-                ((col("c") * 7 + col("i") * 3 + j) % 4 + 1).cast("int"))), "").as("line"))
-        // no checkpoint on the chunk table (r17): unlike q72, where the
-        // parse feeds 5 extracts, q82 consumes it exactly once (the
-        // pieces join below) — an eager materialization here was one
-        // extra full pass for nothing
-        val chunks = graft.sources.Fasta.toChunks(
-          graft.sources.Fasta.parseLines(headers.unionByName(seqLines)), width = W)
+        // genome: 25 chromosomes x 800bp. No checkpoint on the chunk
+        // table: unlike q72, where the parse feeds 5 extracts, q82
+        // consumes it exactly once (the fetch below)
+        val chunks = graft.sources.Fasta.toChunks(graft.sources.Fasta.parseLines(
+          Synthetic.genomeLines(
+            table(spark, dir, "nation").select((col("n_nationkey") + 1).as("c")), lines = 20)),
+          width = W)
         // transcripts: 2-3 exons in genomic order, disjoint 250bp bands
         val t = table(spark, dir, "part").select(
           col("p_partkey").as("tid"),
@@ -1047,34 +959,10 @@ object QueriesPipeline {
             (lit(37) + col("exon_idx") * 250 + (col("tid") * 53) % 190).cast("long"))
           .withColumn("e_len", (lit(24) + (col("tid") * 7 + col("exon_idx") * 13) % 33).cast("int"))
           .withColumn("e_stop", col("e_start") + col("e_len") - 1)
-        // exon DNA: explode exon onto covering chunks, equi-join, concat
-        val pieces = ex
-          .withColumn("from0", col("e_start") - 1)
-          .withColumn("upto0", col("e_stop"))
-          .withColumn("chunk_idx", explode(sequence(
-            (col("from0") / W).cast("int"), ((col("upto0") - 1) / W).cast("int"))))
-          .join(chunks, Seq("chr", "chunk_idx"))
-          .withColumn("cbase", col("chunk_idx").cast("long") * W)
-          .withColumn("cut_from", greatest(col("cbase"), col("from0")) - col("cbase"))
-          .withColumn("cut_upto", least(col("cbase") + W, col("upto0")) - col("cbase"))
-          .withColumn("piece",
-            expr("substring(seq, CAST(cut_from + 1 AS INT), CAST(cut_upto - cut_from AS INT))"))
-        val wp = Window.partitionBy(col("tid")).orderBy(col("exon_idx"))
-          .rowsBetween(Window.unboundedPreceding, -1)
-        val exd = pieces
-          .groupBy(col("tid"), col("exon_idx"), col("chr"), col("n_exons"),
-            col("strand"), col("e_start"), col("e_stop"), col("e_len"))
-          .agg(array_join(transform(
-            sort_array(collect_list(struct(col("chunk_idx"), col("piece")))),
-            x => x("piece")), "").as("dna"))
-          .withColumn("prior_len", coalesce(sum(col("e_len")).over(wp), lit(0)).cast("long"))
-          // consumed twice (cds aggregation + hits interval join) —
-          // materialize once so the chunk join + assembly run a single time
-          .localCheckpoint(true)
-        val cds = exd.groupBy(col("tid"), col("strand"))
-          .agg(array_join(transform(
-            sort_array(collect_list(struct(col("exon_idx"), col("dna")))),
-            x => x("dna")), "").as("cds"))
+        // consumed twice (cds aggregation + hits interval join) —
+        // materialize once so the chunk join runs a single time
+        val asm = CdsAssembly.assemble(graft.sources.Fasta.fetch(
+          ex, chunks, W, start = "e_start", stop = "e_stop").localCheckpoint(true))
         // variants: one SNV per origin transcript, then matched to ALL
         // covering exons by (chr, position) — identity forgotten
         val hk = col("p_partkey") % (col("p_partkey") % 2 + 2)
@@ -1084,65 +972,21 @@ object QueriesPipeline {
           concat(lit("chr"), col("p_partkey") % 25 + 1).as("v_chr"),
           (lit(37) + hk * 250 + (col("p_partkey") * 53) % 190
             + (col("p_partkey") * 13) % vlen).cast("long").as("g_pos"),
-          element_at(bases, ((col("p_partkey") * 17 + 3) % 4 + 1).cast("int")).as("var_base"))
+          element_at(typedlit(Seq("A", "C", "G", "T")),
+            ((col("p_partkey") * 17 + 3) % 4 + 1).cast("int")).as("var_base"))
         val hits = graft.operators.RangeJoin.pointInInterval(
-            v, exd.drop("dna"), Seq("v_chr"), Seq("chr"),
+            v, asm.exons.drop("dna"), Seq("v_chr"), Seq("chr"),
             "g_pos", "e_start", "e_stop", binSize = 256L)
           .withColumn("rel_pos", col("prior_len") + (col("g_pos") - col("e_start")) + 1)
           .select(col("vid"), col("tid"), col("rel_pos"), col("var_base"))
-        // Codon-local evaluation: the mutated codon occupies coding-strand
-        // positions [3*aa_pos-2, 3*aa_pos]; on '-' that maps to stored
-        // positions [len-3*aa_pos+1, len-3*aa_pos+3] read back
-        // reverse-complemented, and the variant base lands at codon
-        // offset rel2-3*aa_pos+3 (complemented on '-'). Cutting 3 bases
-        // beats materializing var_cds + reverse-complementing the whole
-        // CDS per (variant, transcript) row — O(1) vs O(|CDS|) per hit,
-        // which is the real cost at genome scale where CDS are kilobases
-        // and a variant fans out to every overlapping transcript.
-        val asm = hits.join(cds, "tid")
-          .withColumn("cds_len", length(col("cds")))
-          .withColumn("rel2", when(col("strand") === "-",
-            col("cds_len") - col("rel_pos") + 1).otherwise(col("rel_pos")))
-          .withColumn("trunc_len", expr("3 * (cds_len DIV 3)"))
-          .withColumn("triplet_error", when(col("rel2") > col("trunc_len"), "T").otherwise("F"))
-          .withColumn("aa_pos",
-            when(col("triplet_error") === "T", 0L)
-              .otherwise(expr("CAST((rel2 + 2) DIV 3 AS BIGINT)")))
-          .withColumn("ref_codon",
-            when(col("triplet_error") === "T", lit(""))
-              .when(col("strand") === "-", DnaFunctions.reverseComplement(
-                expr("substring(cds, CAST(cds_len - 3 * aa_pos + 1 AS INT), 3)")))
-              .otherwise(expr("substring(cds, CAST(3 * aa_pos - 2 AS INT), 3)")))
-          .withColumn("var_codon",
-            when(col("triplet_error") === "T", lit(""))
-              .otherwise(overlay(col("ref_codon"),
-                when(col("strand") === "-",
-                  DnaFunctions.reverseComplement(col("var_base")))
-                  .otherwise(col("var_base")),
-                (col("rel2") - col("aa_pos") * 3 + 3).cast("int"))))
-          .withColumn("ref_aa",
-            when(col("triplet_error") === "T", "skipped")
-              .otherwise(DnaFunctions.translateCodon(col("ref_codon"))))
-          .withColumn("var_aa",
-            when(col("triplet_error") === "T", "skipped")
-              .otherwise(DnaFunctions.translateCodon(col("var_codon"))))
-          .withColumn("syn_status",
-            when(col("triplet_error") === "T", "skipped")
-              .otherwise(VariantFunctions.synStatus(col("ref_aa"), col("var_aa"))))
-        asm.groupBy(col("strand"), col("triplet_error"), col("syn_status"))
+        CdsAssembly.codonEffect(hits.join(asm.cds, "tid"))
+          .groupBy(col("strand"), col("triplet_error"), col("syn_status"))
           .agg(count(lit(1)).as("cnt"), sum(col("aa_pos")).as("sum_aa_pos"),
             sum(col("rel2")).as("sum_rel_pos"), sum(col("vid")).as("sum_vid"))
           .orderBy(col("strand"), col("triplet_error"), col("syn_status"))
       },
-      Some {
-        val revcomp = (c: String) => s"reverse(translate(upper($c), 'ACGT', 'TGCA'))"
-        s"""WITH chrs AS (SELECT n_nationkey + 1 AS c FROM nation),
-           |ln AS (
-           |  SELECT c, i, string_agg(ch, '' ORDER BY j) AS line
-           |  FROM (SELECT c, i, j, ['A','C','G','T'][(c*7 + i*3 + j) % 4 + 1] AS ch
-           |        FROM chrs, generate_series(1, 20) s(i), generate_series(1, 40) t(j))
-           |  GROUP BY c, i),
-           |chrseq AS (SELECT c, string_agg(line, '' ORDER BY i) AS seq FROM ln GROUP BY c),
+      Some(
+        s"""WITH ${Synthetic.genomeSql("SELECT n_nationkey + 1 AS c FROM nation", 20)},
            |t AS (
            |  SELECT p_partkey AS tid, CAST(p_partkey % 2 + 2 AS INT) AS n_exons,
            |    CASE WHEN p_partkey % 2 = 1 THEN '-' ELSE '+' END AS strand,
@@ -1172,38 +1016,15 @@ object QueriesPipeline {
            |  SELECT v.vid, e.tid, e.prior_len + (v.g_pos - e.e_start) + 1 AS rel_pos, v.var_base
            |  FROM v JOIN exd e ON v.chrn = e.chrn AND v.g_pos BETWEEN e.e_start AND e.e_stop),
            |asm AS (
-           |  SELECT h.vid, h.tid, c.strand, c.cds, h.rel_pos,
-           |    substr(c.cds, 1, CAST(h.rel_pos - 1 AS INT)) || h.var_base
-           |      || substr(c.cds, CAST(h.rel_pos + 1 AS INT)) AS var_cds
+           |  SELECT h.vid, c.strand, c.cds, h.rel_pos, h.var_base
            |  FROM hits h JOIN cds c ON c.tid = h.tid),
-           |ori AS (
-           |  SELECT vid, strand,
-           |    CASE WHEN strand = '-' THEN ${revcomp("cds")} ELSE cds END AS cds2,
-           |    CASE WHEN strand = '-' THEN ${revcomp("var_cds")} ELSE var_cds END AS var_cds2,
-           |    CASE WHEN strand = '-' THEN length(cds) - rel_pos + 1 ELSE rel_pos END AS rel2
-           |  FROM asm),
-           |fin AS (
-           |  SELECT *, CASE WHEN rel2 > 3 * (length(cds2) // 3) THEN 'T' ELSE 'F' END AS triplet_error,
-           |    CASE WHEN rel2 > 3 * (length(cds2) // 3) THEN 0 ELSE (rel2 + 2) // 3 END AS aa_pos
-           |  FROM ori),
-           |aa AS (
-           |  SELECT vid, strand, triplet_error, CAST(aa_pos AS BIGINT) AS aa_pos, rel2,
-           |    CASE WHEN triplet_error = 'T' THEN 'skipped'
-           |         ELSE ${QueriesGenomic.codonCaseSql("substr(cds2, CAST(3 * aa_pos - 2 AS INT), 3)")} END AS ref_aa,
-           |    CASE WHEN triplet_error = 'T' THEN 'skipped'
-           |         ELSE ${QueriesGenomic.codonCaseSql("substr(var_cds2, CAST(3 * aa_pos - 2 AS INT), 3)")} END AS var_aa
-           |  FROM fin)
-           |SELECT strand, triplet_error,
-           |  CASE WHEN triplet_error = 'T' THEN 'skipped'
-           |       WHEN ref_aa = 'X' OR var_aa = 'X' THEN 'unassignable'
-           |       WHEN ref_aa = var_aa THEN 'synonymous'
-           |       ELSE 'nonsynonymous' END AS syn_status,
+           |${QueriesGenomic.codonEffectSql("asm", Seq("vid"))}
+           |SELECT strand, triplet_error, syn_status,
            |  count(*) AS cnt, CAST(sum(aa_pos) AS BIGINT) AS sum_aa_pos,
            |  CAST(sum(rel2) AS BIGINT) AS sum_rel_pos,
            |  CAST(sum(vid) AS BIGINT) AS sum_vid
-           |FROM aa
-           |GROUP BY 1, 2, 3 ORDER BY 1, 2, 3""".stripMargin
-      }),
+           |FROM codon
+           |GROUP BY 1, 2, 3 ORDER BY 1, 2, 3""".stripMargin)),
 
     // ============ q90: cross-chromosome exon patch (J16) ==============
     // `VariantPostProcessing.getProperChunk:1281-1300`: an exon whose
@@ -1220,21 +1041,11 @@ object QueriesPipeline {
     Q("q90_cross_chr_patch",
       (spark, dir) => {
         val W = 128
-        val bases = typedlit(Seq("A", "C", "G", "T"))
-        val chrs = table(spark, dir, "nation").select((col("n_nationkey") + 1).as("c"))
-        val headers = chrs.select((col("c") * 10000).as("line_id"),
-          concat(lit(">chr"), col("c")).as("line"))
-        val seqLines = chrs.withColumn("i", explode(sequence(lit(1), lit(20))))
-          .select((col("c") * 10000 + col("i")).as("line_id"),
-            array_join(transform(sequence(lit(1), lit(40)),
-              j => element_at(bases,
-                ((col("c") * 7 + col("i") * 3 + j) % 4 + 1).cast("int"))), "").as("line"))
-        val chunks = graft.sources.Fasta.toChunks(
-          graft.sources.Fasta.parseLines(headers.unionByName(seqLines)), width = W)
-          .withColumnRenamed("chr", "c_chr")
-          .withColumnRenamed("chunk_idx", "c_idx")
-        // (r17: no checkpoint — single consumer, the DNA-fetch join
-        // below; same reasoning as q82's chunk table)
+        // no checkpoint: single consumer, the fetch below (as q82)
+        val chunks = graft.sources.Fasta.toChunks(graft.sources.Fasta.parseLines(
+          Synthetic.genomeLines(
+            table(spark, dir, "nation").select((col("n_nationkey") + 1).as("c")), lines = 20)),
+          width = W)
         val t = table(spark, dir, "part").select(
           col("p_partkey").as("tid"),
           (col("p_partkey") % 2 + 2).cast("int").as("n_exons"),
@@ -1256,22 +1067,9 @@ object QueriesPipeline {
         val patched = graft.sources.Fasta.patchIntervals(
           ex.select("tid", "exon_idx", "chr", "start", "stop"),
           crossRows.unionByName(decoys), "tid")
-        val dna = patched
-          .withColumn("from0", col("src_start") - 1)
-          .withColumn("upto0", col("src_stop"))
-          .withColumn("pc_idx", explode(sequence(
-            (col("from0") / W).cast("int"), ((col("upto0") - 1) / W).cast("int"))))
-          .join(chunks, col("src_chr") === col("c_chr") &&
-            col("pc_idx") === col("c_idx"))
-          .withColumn("cbase", col("pc_idx").cast("long") * W)
-          .withColumn("cut_from", greatest(col("cbase"), col("from0")) - col("cbase"))
-          .withColumn("cut_upto", least(col("cbase") + W, col("upto0")) - col("cbase"))
-          .withColumn("piece",
-            expr("substring(seq, CAST(cut_from + 1 AS INT), CAST(cut_upto - cut_from AS INT))"))
-          .groupBy(col("tid"), col("exon_idx"), col("patched"), col("src_chr"))
-          .agg(array_join(transform(
-            sort_array(collect_list(struct(col("pc_idx"), col("piece")))),
-            x => x("piece")), "").as("dna"))
+        val dna = graft.sources.Fasta.fetch(
+          patched.select("tid", "exon_idx", "patched", "src_chr", "src_start", "src_stop"),
+          chunks, W, chr = "src_chr", start = "src_start", stop = "src_stop")
         dna.groupBy(col("patched"), col("src_chr"))
           .agg(count(lit(1)).as("n_exons"),
             sum(length(col("dna")).cast("long")).as("sum_len"),
@@ -1283,13 +1081,7 @@ object QueriesPipeline {
           s"""list_reduce(list_prepend(CAST(0 AS BIGINT),
              |  list_transform(string_split_regex($c, ''), ch -> CAST(ascii(ch) AS BIGINT))),
              |  (acc, x) -> (acc * 31 + x) % 1000000007)""".stripMargin
-        s"""WITH chrs AS (SELECT n_nationkey + 1 AS c FROM nation),
-           |ln AS (
-           |  SELECT c, i, string_agg(ch, '' ORDER BY j) AS line
-           |  FROM (SELECT c, i, j, ['A','C','G','T'][(c*7 + i*3 + j) % 4 + 1] AS ch
-           |        FROM chrs, generate_series(1, 20) s(i), generate_series(1, 40) t(j))
-           |  GROUP BY c, i),
-           |chrseq AS (SELECT c, string_agg(line, '' ORDER BY i) AS seq FROM ln GROUP BY c),
+        s"""WITH ${Synthetic.genomeSql("SELECT n_nationkey + 1 AS c FROM nation", 20)},
            |t AS (
            |  SELECT p_partkey AS tid, CAST(p_partkey % 2 + 2 AS INT) AS n_exons,
            |    (p_partkey % 25) + 1 AS chrn

@@ -1,9 +1,8 @@
 package graft.queries
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
 
-import graft.functions.DnaFunctions
+import graft.operators.CdsAssembly
 import graft.sources.{Cf2, Fasta, Polyphen, Vcf}
 
 /** File-format source queries — the reference pipeline's *front door*
@@ -372,7 +371,6 @@ object QueriesSources {
       s"""SELECT c1 AS chrom, CAST(c2 AS BIGINT) AS pos, c4 AS ref,
          |       c5 AS alt, c${10 + i} AS gt FROM raw""".stripMargin
     }.mkString("\nUNION ALL\n")
-    val revcomp = (c: String) => s"reverse(translate(upper($c), 'ACGT', 'TGCA'))"
     s"""WITH raw AS (
        |  SELECT * FROM read_csv('$ChainVcfPath', delim='$Tab', header=false,
        |    auto_detect=false, null_padding=true, columns=$cols)
@@ -407,13 +405,7 @@ object QueriesSources {
        |    row_number() OVER (
        |      ORDER BY chromosome, position, ref_nuc, var_nuc) AS assigned_id
        |  FROM conv GROUP BY 1, 2, 3, 4
-       |), chrs AS (SELECT n_nationkey + 1 AS c FROM nation WHERE n_nationkey < 5),
-       |ln AS (
-       |  SELECT c, i, string_agg(ch, '' ORDER BY j) AS line
-       |  FROM (SELECT c, i, j, ['A','C','G','T'][(c*7 + i*3 + j) % 4 + 1] AS ch
-       |        FROM chrs, generate_series(1, 225) s(i), generate_series(1, 40) t(j))
-       |  GROUP BY c, i),
-       |chrseq AS (SELECT c, string_agg(line, '' ORDER BY i) AS seq FROM ln GROUP BY c),
+       |), ${Synthetic.genomeSql("SELECT n_nationkey + 1 AS c FROM nation WHERE n_nationkey < 5", 225)},
        |t AS (
        |  SELECT p_partkey AS tid, CAST(p_partkey % 2 + 2 AS INT) AS n_exons,
        |    CASE WHEN p_partkey % 2 = 1 THEN '-' ELSE '+' END AS strand,
@@ -439,35 +431,10 @@ object QueriesSources {
        |    AND v.position BETWEEN e.e_start AND e.e_stop),
        |genic AS (SELECT DISTINCT assigned_id FROM allhits),
        |asm AS (
-       |  SELECT h.assigned_id, h.tid, c.strand, c.cds, h.rel_pos,
-       |    substr(c.cds, 1, CAST(h.rel_pos - 1 AS INT)) || h.var_nuc
-       |      || substr(c.cds, CAST(h.rel_pos + 1 AS INT)) AS var_cds
+       |  SELECT h.assigned_id, h.tid, c.strand, c.cds, h.rel_pos, h.var_nuc AS var_base
        |  FROM allhits h JOIN cds c ON c.tid = h.tid
        |  WHERE h.variant_type = 'snv'),
-       |ori AS (
-       |  SELECT assigned_id, tid,
-       |    CASE WHEN strand = '-' THEN ${revcomp("cds")} ELSE cds END AS cds2,
-       |    CASE WHEN strand = '-' THEN ${revcomp("var_cds")} ELSE var_cds END AS var_cds2,
-       |    CASE WHEN strand = '-' THEN length(cds) - rel_pos + 1 ELSE rel_pos END AS rel2
-       |  FROM asm),
-       |fin AS (
-       |  SELECT *, CASE WHEN rel2 > 3 * (length(cds2) // 3) THEN 'T' ELSE 'F' END AS triplet_error,
-       |    CASE WHEN rel2 > 3 * (length(cds2) // 3) THEN 0 ELSE (rel2 + 2) // 3 END AS aa_pos
-       |  FROM ori),
-       |aa AS (
-       |  SELECT assigned_id, tid, CAST(aa_pos AS BIGINT) AS aa_pos, triplet_error,
-       |    CASE WHEN triplet_error = 'T' THEN 'skipped'
-       |         ELSE ${QueriesGenomic.codonCaseSql("substr(cds2, CAST(3 * aa_pos - 2 AS INT), 3)")} END AS ref_aa,
-       |    CASE WHEN triplet_error = 'T' THEN 'skipped'
-       |         ELSE ${QueriesGenomic.codonCaseSql("substr(var_cds2, CAST(3 * aa_pos - 2 AS INT), 3)")} END AS var_aa
-       |  FROM fin),
-       |aa2 AS (
-       |  SELECT assigned_id, tid, aa_pos,
-       |    CASE WHEN triplet_error = 'T' THEN 'skipped'
-       |         WHEN ref_aa = 'X' OR var_aa = 'X' THEN 'unassignable'
-       |         WHEN ref_aa = var_aa THEN 'synonymous'
-       |         ELSE 'nonsynonymous' END AS syn_status
-       |  FROM aa),
+       |${QueriesGenomic.codonEffectSql("asm", Seq("assigned_id", "tid"))},
        |base AS (
        |  SELECT v.variant_type,
        |    CASE WHEN g.assigned_id IS NOT NULL THEN 'GENIC' ELSE 'INTERGENIC' END AS genic_status,
@@ -475,7 +442,7 @@ object QueriesSources {
        |    v.assigned_id, v.n_samples, v.n_het, a.aa_pos
        |  FROM vars v
        |  LEFT JOIN genic g ON g.assigned_id = v.assigned_id
-       |  LEFT JOIN aa2 a ON a.assigned_id = v.assigned_id)
+       |  LEFT JOIN codon a ON a.assigned_id = v.assigned_id)
        |SELECT variant_type, genic_status, syn_status,
        |  count(*) AS cnt,
        |  CAST(count(DISTINCT assigned_id) AS BIGINT) AS n_vars,
@@ -687,7 +654,6 @@ object QueriesSources {
       (spark, dir) => {
         writeChainVcfFixture()
         val W = 256
-        val bases = typedlit(Seq("A", "C", "G", "T"))
         // ---- convert (S1/X8/F2): strain + alt-allele explode, zygosity,
         // padding-base strip, variant typing
         val gtParts = split(col("gt"), "/")
@@ -726,18 +692,10 @@ object QueriesSources {
           keys, "assigned_id")
         // ---- post-process inputs: genome chunk table + exon DNA
         // (5 chromosomes x 9000 bp; same shapes as q82)
-        val chrs = table(spark, dir, "nation")
-          .filter(col("n_nationkey") < 5)
-          .select((col("n_nationkey") + 1).as("c"))
-        val headers = chrs.select((col("c") * 100000).as("line_id"),
-          concat(lit(">"), col("c")).as("line"))
-        val seqLines = chrs.withColumn("i", explode(sequence(lit(1), lit(225))))
-          .select((col("c") * 100000 + col("i")).as("line_id"),
-            array_join(transform(sequence(lit(1), lit(40)),
-              j => element_at(bases,
-                ((col("c") * 7 + col("i") * 3 + j) % 4 + 1).cast("int"))), "").as("line"))
-        val chunks = Fasta.toChunks(
-          Fasta.parseLines(headers.unionByName(seqLines)), width = W)
+        val chunks = Fasta.toChunks(Fasta.parseLines(Synthetic.genomeLines(
+            table(spark, dir, "nation").filter(col("n_nationkey") < 5)
+              .select((col("n_nationkey") + 1).as("c")), lines = 225, prefix = "")),
+          width = W)
         val t = table(spark, dir, "part")
           .filter(col("p_partkey") % 25 < 5)
           .select(col("p_partkey").as("tid"),
@@ -749,78 +707,24 @@ object QueriesSources {
             (lit(37) + col("exon_idx") * 2500 + (col("tid") * 53) % 2300).cast("long"))
           .withColumn("e_len", (lit(24) + (col("tid") * 7 + col("exon_idx") * 13) % 33).cast("int"))
           .withColumn("e_stop", col("e_start") + col("e_len") - 1)
-        val pieces = ex
-          .withColumn("from0", col("e_start") - 1)
-          .withColumn("upto0", col("e_stop"))
-          .withColumn("chunk_idx", explode(sequence(
-            (col("from0") / W).cast("int"), ((col("upto0") - 1) / W).cast("int"))))
-          .join(chunks, Seq("chr", "chunk_idx"))
-          .withColumn("cbase", col("chunk_idx").cast("long") * W)
-          .withColumn("cut_from", greatest(col("cbase"), col("from0")) - col("cbase"))
-          .withColumn("cut_upto", least(col("cbase") + W, col("upto0")) - col("cbase"))
-          .withColumn("piece",
-            expr("substring(seq, CAST(cut_from + 1 AS INT), CAST(cut_upto - cut_from AS INT))"))
-        val wp = Window.partitionBy(col("tid")).orderBy(col("exon_idx"))
-          .rowsBetween(Window.unboundedPreceding, -1)
-        val exd = pieces
-          .groupBy(col("tid"), col("exon_idx"), col("chr"), col("n_exons"),
-            col("strand"), col("e_start"), col("e_stop"), col("e_len"))
-          .agg(array_join(transform(
-            sort_array(collect_list(struct(col("chunk_idx"), col("piece")))),
-            x => x("piece")), "").as("dna"))
-          .withColumn("prior_len", coalesce(sum(col("e_len")).over(wp), lit(0)).cast("long"))
-          // consumed twice (cds + the variant interval join)
-          .localCheckpoint(true)
-        val cds = exd.groupBy(col("tid"), col("strand"))
-          .agg(array_join(transform(
-            sort_array(collect_list(struct(col("exon_idx"), col("dna")))),
-            x => x("dna")), "").as("cds"))
+        // consumed twice (cds + the variant interval join)
+        val asm = CdsAssembly.assemble(
+          Fasta.fetch(ex, chunks, W, start = "e_start", stop = "e_stop").localCheckpoint(true))
         // ---- genic status + transcript hits from ONE interval join
         val allHits = graft.operators.RangeJoin.pointInInterval(
             vars.select(col("assigned_id"), col("chromosome"), col("position"),
               col("variant_type"), col("var_nuc")),
-            exd.drop("dna"), Seq("chromosome"), Seq("chr"),
+            asm.exons.drop("dna"), Seq("chromosome"), Seq("chr"),
             "position", "e_start", "e_stop", binSize = 1024L)
           .withColumn("rel_pos", col("prior_len") + (col("position") - col("e_start")) + 1)
-          .select(col("assigned_id"), col("variant_type"), col("var_nuc"),
+          .select(col("assigned_id"), col("variant_type"), col("var_nuc").as("var_base"),
             col("tid"), col("rel_pos"))
           // consumed twice (genic existence + SNV codon math)
           .localCheckpoint(true)
         val genic = allHits.select(col("assigned_id")).distinct()
           .withColumn("genic_status", lit("GENIC"))
-        // ---- SNV codon math (codon-local, as q82)
-        val aa = allHits.filter(col("variant_type") === "snv")
-          .join(cds, "tid")
-          .withColumn("cds_len", length(col("cds")))
-          .withColumn("rel2", when(col("strand") === "-",
-            col("cds_len") - col("rel_pos") + 1).otherwise(col("rel_pos")))
-          .withColumn("trunc_len", expr("3 * (cds_len DIV 3)"))
-          .withColumn("triplet_error", when(col("rel2") > col("trunc_len"), "T").otherwise("F"))
-          .withColumn("aa_pos",
-            when(col("triplet_error") === "T", 0L)
-              .otherwise(expr("CAST((rel2 + 2) DIV 3 AS BIGINT)")))
-          .withColumn("ref_codon",
-            when(col("triplet_error") === "T", lit(""))
-              .when(col("strand") === "-", DnaFunctions.reverseComplement(
-                expr("substring(cds, CAST(cds_len - 3 * aa_pos + 1 AS INT), 3)")))
-              .otherwise(expr("substring(cds, CAST(3 * aa_pos - 2 AS INT), 3)")))
-          .withColumn("var_codon",
-            when(col("triplet_error") === "T", lit(""))
-              .otherwise(overlay(col("ref_codon"),
-                when(col("strand") === "-",
-                  DnaFunctions.reverseComplement(col("var_nuc")))
-                  .otherwise(col("var_nuc")),
-                (col("rel2") - col("aa_pos") * 3 + 3).cast("int"))))
-          .withColumn("ref_aa",
-            when(col("triplet_error") === "T", "skipped")
-              .otherwise(DnaFunctions.translateCodon(col("ref_codon"))))
-          .withColumn("var_aa",
-            when(col("triplet_error") === "T", "skipped")
-              .otherwise(DnaFunctions.translateCodon(col("var_codon"))))
-          .withColumn("syn_status",
-            when(col("triplet_error") === "T", "skipped")
-              .otherwise(graft.functions.VariantFunctions.synStatus(
-                col("ref_aa"), col("var_aa"))))
+        val aa = CdsAssembly.codonEffect(
+            allHits.filter(col("variant_type") === "snv").join(asm.cds, "tid"))
           .select(col("assigned_id"), col("tid"), col("aa_pos"), col("syn_status"))
         // ---- final: variant rows fanned out per transcript hit
         vars

@@ -1,6 +1,7 @@
 package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions._
 
 /** Deterministic synthetic genomic inputs derived from the TPC-H-ish
   * test tables, so every genomic operator can be validated against a
@@ -163,6 +164,32 @@ object Synthetic {
       .unionByName(o.filter("o_orderkey % 9 = 0")
         .selectExpr(mapsExtraCols.map { case (n, e) => s"($e) AS $n" }: _*))
   }
+
+  /** FASTA text (line_id, line) of the synthetic genome: for each
+    * chromosome number `c` of `chrs`, a `>{prefix}c` header and `lines`
+    * 40-base lines, base j of line i being ACGT[(c*7 + i*3 + j) % 4]. */
+  def genomeLines(chrs: DataFrame, lines: Int, prefix: String = "chr"): DataFrame = {
+    val bases = typedlit(Seq("A", "C", "G", "T"))
+    val header = col("c") * (lines + 1)
+    chrs.select(header.as("line_id"), concat(lit(">" + prefix), col("c")).as("line"))
+      .unionByName(chrs.withColumn("i", explode(sequence(lit(1), lit(lines))))
+        .select((header + col("i")).as("line_id"),
+          array_join(transform(sequence(lit(1), lit(40)),
+            j => element_at(bases,
+              ((col("c") * 7 + col("i") * 3 + j) % 4 + 1).cast("int"))), "").as("line")))
+  }
+
+  /** The same genome as DuckDB CTEs: `chrs` (the chromosome numbers `c`
+    * that `chrsSql` selects) and `chrseq` (c, seq), each chromosome's
+    * bases as one string. */
+  def genomeSql(chrsSql: String, lines: Int): String =
+    s"""chrs AS ($chrsSql),
+       |ln AS (
+       |  SELECT c, i, string_agg(ch, '' ORDER BY j) AS line
+       |  FROM (SELECT c, i, j, ['A','C','G','T'][(c*7 + i*3 + j) % 4 + 1] AS ch
+       |        FROM chrs, generate_series(1, $lines) s(i), generate_series(1, 40) t(j))
+       |  GROUP BY c, i),
+       |chrseq AS (SELECT c, string_agg(line, '' ORDER BY i) AS seq FROM ln GROUP BY c)""".stripMargin
 
   def elements(spark: SparkSession, dir: String): DataFrame = {
     val o = spark.read.parquet(s"$dir/orders.parquet")

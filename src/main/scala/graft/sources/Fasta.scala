@@ -13,11 +13,11 @@ import org.apache.spark.sql.expressions.Window
   *
   * Distributed re-expression: preprocess FASTA text into a *chunk
   * table* `(chr, chunk_idx, seq)` of fixed-width sequence chunks with
-  * deterministic genomic offsets. A range fetch `getSequence(chr, from,
-  * to)` becomes a filter on the (tiny) covering chunk range + one
-  * groupBy concat — or, in joins, the chunk table participates directly
-  * keyed by `(chr, chunk_idx)` so DNA travels to the executors that
-  * need it (never broadcast a whole genome; SURVEY §7.4.7).
+  * deterministic genomic offsets. `fetch` reads the DNA of many
+  * intervals at once: the chunk table participates in an equi-join keyed
+  * by `(chr, chunk_idx)` so DNA travels to the executors that need it
+  * (never broadcast a whole genome; SURVEY §7.4.7). `getSequence(chr,
+  * from, to)` is `fetch` of one interval over the pruned chunk range.
   *
   * Parsing keeps per-line offsets without a global sort: header rows
   * (`>chr`) are interval-joined to sequence lines exactly like wig
@@ -124,22 +124,44 @@ object Fasta {
       .drop("cands", "m")
   }
 
-  /** Random-access substring [from, to) 0-based over the chunk table:
-    * prune to covering chunks, cut, concat. Returns (chr, seq). */
+  /** Adds `dna` to each row of `intervals`: the bases [`start`, `stop`]
+    * (1-based, inclusive) of chromosome `chr`, read from the chunk table.
+    * Each interval is exploded over its covering chunks and equi-joined
+    * on (chr, chunk_idx), so DNA travels to the rows that need it and the
+    * genome is never broadcast; the pieces are cut to the interval and
+    * concatenated in chunk order. The pieces regroup by every input
+    * column, so the rows of `intervals` must be distinct. An interval
+    * that no chunk covers drops out. */
+  def fetch(intervals: DataFrame, chunks: DataFrame, width: Int,
+            chr: String = "chr", start: String = "start",
+            stop: String = "stop"): DataFrame = {
+    val keys = intervals.columns.map(c => col(s"`$c`"))
+    intervals
+      .withColumn("__idx", explode(sequence(
+        ((col(start) - 1) / width).cast("int"), ((col(stop) - 1) / width).cast("int"))))
+      .join(chunks.select(col("chr").as("__chr"), col("chunk_idx").as("__cidx"),
+          col("seq").as("__seq")),
+        col(chr) === col("__chr") && col("__idx") === col("__cidx"))
+      .withColumn("__base", col("__idx").cast("long") * width)
+      .withColumn("__cut_from", greatest(col("__base"), col(start) - 1) - col("__base"))
+      .withColumn("__cut_upto", least(col("__base") + width, col(stop)) - col("__base"))
+      .withColumn("__piece", expr(
+        "substring(__seq, CAST(__cut_from + 1 AS INT), CAST(__cut_upto - __cut_from AS INT))"))
+      .groupBy(keys: _*)
+      .agg(array_join(transform(
+        sort_array(collect_list(struct(col("__idx"), col("__piece")))),
+        x => x("__piece")), "").as("dna"))
+  }
+
+  /** Random-access substring [from, to) 0-based: `fetch` of one literal
+    * interval over the covering chunks only. Returns (chr, seq). */
   def getSequence(chunks: DataFrame, chr: String, from: Long, to: Long,
                   width: Int = 10000): DataFrame = {
     val lo = (from / width).toInt
     val hi = ((to - 1) / width).toInt
-    chunks
-      .filter(col("chr") === chr && col("chunk_idx").between(lo, hi))
-      .withColumn("base", col("chunk_idx").cast("long") * width)
-      .withColumn("cut_from", greatest(col("base"), lit(from)) - col("base"))
-      .withColumn("cut_upto", least(col("base") + width, lit(to)) - col("base"))
-      .select(col("chr"), col("chunk_idx"),
-        expr("substring(seq, CAST(cut_from + 1 AS INT), CAST(cut_upto - cut_from AS INT))").as("part"))
-      .groupBy(col("chr"))
-      .agg(array_join(transform(
-        sort_array(collect_list(struct(col("chunk_idx"), col("part")))),
-        x => x("part")), "").as("seq"))
+    val interval = chunks.sparkSession.range(1)
+      .select(lit(chr).as("chr"), lit(from + 1).as("start"), lit(to).as("stop"))
+    fetch(interval, chunks.filter(col("chr") === chr && col("chunk_idx").between(lo, hi)), width)
+      .select(col("chr"), col("dna").as("seq"))
   }
 }

@@ -73,5 +73,15 @@ class VcfFastaSpec extends SparkSpec {
     val got2 = Fasta.getSequence(chunks, "chr2", 2L, 6L, width = 8)
       .collect().head.getString(1)
     assert(got2 == "GTAC")
+    // per-row intervals, 1-based inclusive: two borders (8, 16) crossed,
+    // inside one chunk, starting on a border, and on chr2
+    val iv = Seq((1, "chr1", 6L, 19L), (2, "chr1", 2L, 5L), (3, "chr1", 17L, 26L),
+        (4, "chr2", 3L, 6L))
+      .toDF("id", "chr", "start", "stop")
+    val fetched = Fasta.fetch(iv, chunks, width = 8)
+      .select($"id", $"chr", $"start", $"stop", $"dna").as[(Int, String, Long, Long, String)]
+      .collect().sortBy(_._1).toSeq
+    assert(fetched == Seq((1, "chr1", 6L, 19L, "FGHIJKLMNOPQRS"), (2, "chr1", 2L, 5L, "BCDE"),
+      (3, "chr1", 17L, 26L, "QRSTUVWXYZ"), (4, "chr2", 3L, 6L, "GTAC")))
   }
 }

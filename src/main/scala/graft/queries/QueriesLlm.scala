@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.functions.{TextFunctions => TF, VectorFunctions => VF}
+import graft.operators.OperatingPoint
 
 /** Large-scale training-data pipeline operators over the `documents`
   * and `embeddings` tables: deduplication (exact, MinHash+LSH, SimHash,
@@ -434,6 +435,55 @@ object QueriesLlm {
            |   FOR i IN generate_series(1, $Dim)]), (x, y) -> x + y)""".stripMargin
       s"(CASE WHEN ($proj) > 0.0 THEN ${1L << j} ELSE 0 END)"
     }.mkString("(", " + ", ")")
+
+  private val MaxProbe = 4 // q117/q125's widest nprobe level
+
+  /** q117/q125's IVF nprobe search state: K=8 cells trained by three
+    * Lloyd iterations, the probes (vec_id % 17, as `qid`/`pqv`) and ONE
+    * candidate join at the widest level `MaxProbe`, materialized.
+    * Narrower levels are `crank` filters over it; each corpus vector
+    * lives in one cell, so no dedup. Returns (probes, assigned, cand). */
+  private def ivfNprobe(spark: org.apache.spark.sql.SparkSession, dir: String) = {
+    import graft.operators.IvfKmeans
+    val q = spark.read.parquet(s"$dir/embeddings.parquet")
+      .select(col("vec_id"), IvfKmeans.quantize(col("embedding"), 4000L).as("qv"))
+    val cents = IvfKmeans.train(q, 8, 3)
+    val assigned = IvfKmeans.assign(q, cents)
+      .select(col("vec_id"), col("qv"), col("cid").as("cell"))
+      .localCheckpoint(true)
+    val probes = assigned.filter(col("vec_id") % 17 === 0)
+      .select(col("vec_id").as("qid"), col("qv").as("pqv"))
+    // all K centroid distances ride in the 1-row broadcast; the
+    // (dist, cid) tie-break is exactly what the oracle replays
+    val ranked = IvfKmeans.rankCells(probes, "pqv", cents, MaxProbe)
+    val cand = ranked.join(assigned, Seq("cell"))
+      .filter(col("vec_id") =!= col("qid"))
+      .withColumn("dist", IvfKmeans.distL2(col("pqv"), col("qv")))
+      .select(col("qid"), col("vec_id"), col("dist"), col("crank"))
+      .localCheckpoint(true)
+    (probes, assigned, cand)
+  }
+
+  /** SQL twin of [[ivfNprobe]]: the Lloyd and final-assignment CTEs
+    * (`afin`), `ps` (probes), `pc` (each probe's ranked cells) and
+    * `cand`. */
+  private val ivfNprobeCtes: String = {
+    import graft.operators.IvfKmeans.{assignCte, distSql, lloydCtes}
+    s"""${lloydCtes(8, 3, Dim, 4000L)},
+       |${assignCte(3, Dim)},
+       |ps AS (SELECT vec_id AS qid, qv AS pqv FROM afin WHERE vec_id % 17 = 0),
+       |pc AS (
+       |  SELECT qid, pqv, cid AS cell, crank FROM (
+       |    SELECT p.qid, p.pqv, c.cid,
+       |      row_number() OVER (PARTITION BY p.qid
+       |        ORDER BY ${distSql("p.pqv", "c.cqv", Dim)}, c.cid) AS crank
+       |    FROM ps p, c3 c)
+       |  WHERE crank <= $MaxProbe),
+       |cand AS (
+       |  SELECT pc.qid, a.vec_id,
+       |    ${distSql("pc.pqv", "a.qv", Dim)} AS dist, pc.crank
+       |  FROM pc JOIN afin a ON a.cell = pc.cell AND a.vec_id <> pc.qid)""".stripMargin
+  }
 
   val all: Seq[Q] = Seq(
 
@@ -2997,13 +3047,11 @@ object QueriesLlm {
           .select(col("vec_id").as("qid"), col("v").as("pv"),
             col("nrm").as("pnrm"), col("bucket").as("pbucket"),
             col("cell").as("pcell"))
-        val w = Window.partitionBy(col("qid")).orderBy(col("sim").desc, col("vec_id"))
         def top5(p: org.apache.spark.sql.DataFrame, cond: org.apache.spark.sql.Column) =
-          p.join(base, cond && col("vec_id") =!= col("qid"))
+          OperatingPoint.topK(p.join(base, cond && col("vec_id") =!= col("qid"))
             .withColumn("sim",
-              VF.quantize1e6(VF.dot(col("pv"), col("v")) / (col("pnrm") * col("nrm"))))
-            .withColumn("rn", row_number().over(w))
-            .filter(col("rn") <= 5)
+              VF.quantize1e6(VF.dot(col("pv"), col("v")) / (col("pnrm") * col("nrm")))),
+            5, col("sim").desc, col("vec_id"))
             .select(col("qid"), col("vec_id"))
         // multi-probe LSH: also search every bucket at Hamming
         // distance 1 from the query's (flip each of the 8 plane bits).
@@ -3013,33 +3061,20 @@ object QueriesLlm {
           explode(array(col("pbucket") +: (0 until Planes).map(j =>
             col("pbucket").bitwiseXOR(lit(1L << j))): _*)).as("pbucket"))
         val exact = top5(probes, lit(true)).localCheckpoint(true) // joined 3x below
-        val lsh = top5(probes, col("bucket") === col("pbucket"))
-        val mlsh = top5(mprobes, col("bucket") === col("pbucket"))
-        val ivf = top5(probes, col("cell") === col("pcell"))
-        exact
-          .join(lsh.withColumn("l", lit(1)), Seq("qid", "vec_id"), "left_outer")
-          .join(mlsh.withColumn("m", lit(1)), Seq("qid", "vec_id"), "left_outer")
-          .join(ivf.withColumn("i", lit(1)), Seq("qid", "vec_id"), "left_outer")
-          .groupBy(col("qid"))
-          .agg(count(lit(1)).as("n_exact"),
-            sum(coalesce(col("l"), lit(0))).cast("long").as("lsh_hits"),
-            sum(coalesce(col("m"), lit(0))).cast("long").as("mlsh_hits"),
-            sum(coalesce(col("i"), lit(0))).cast("long").as("ivf_hits"))
+        OperatingPoint.recall(exact,
+          "lsh_hits" -> top5(probes, col("bucket") === col("pbucket")),
+          "mlsh_hits" -> top5(mprobes, col("bucket") === col("pbucket")),
+          "ivf_hits" -> top5(probes, col("cell") === col("pcell")))
           .orderBy(col("qid"))
       },
       Some {
         import graft.operators.IvfKmeans
-        def top5Sql(name: String, cond: String) =
+        def top5Sql(name: String, probes: String, cond: String) =
           s"""${name}s AS (
              |  SELECT p.qid, eb.vec_id,
              |    CAST(floor((${cosSql("p.pv", "eb.v")}) * 1e6) AS BIGINT) AS sim
-             |  FROM ps p JOIN eb ON eb.vec_id <> p.qid$cond),
-             |$name AS (
-             |  SELECT qid, vec_id FROM (
-             |    SELECT qid, vec_id,
-             |      row_number() OVER (PARTITION BY qid ORDER BY sim DESC, vec_id) AS rn
-             |    FROM ${name}s)
-             |  WHERE rn <= 5)""".stripMargin
+             |  FROM $probes p JOIN eb ON eb.vec_id <> p.qid$cond),
+             |$name AS (${OperatingPoint.topKSql(s"${name}s", 5, "sim DESC, vec_id")})""".stripMargin
         val flips = (0 until Planes).map(j => s"xor(pbucket, ${1L << j})")
         s"""WITH ${IvfKmeans.lloydCtes(8, 3, Dim, 4000L)},
            |${IvfKmeans.assignCte(3, Dim)},
@@ -3053,19 +3088,13 @@ object QueriesLlm {
            |  SELECT qid, pv,
            |    unnest([CAST(pbucket AS BIGINT), ${flips.mkString(", ")}]) AS pbucket
            |  FROM ps),
-           |${top5Sql("ex", "")},
-           |${top5Sql("ls", " AND eb.bucket = p.pbucket")},
-           |${top5Sql("iv", " AND eb.cell = p.pcell")},
-           |${top5Sql("ml", " AND eb.bucket = p.pbucket").replace("FROM ps p", "FROM mp p")}
-           |SELECT ex.qid, count(*) AS n_exact,
-           |  CAST(sum(CASE WHEN ls.vec_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS lsh_hits,
-           |  CAST(sum(CASE WHEN ml.vec_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS mlsh_hits,
-           |  CAST(sum(CASE WHEN iv.vec_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS ivf_hits
-           |FROM ex
-           |LEFT JOIN ls ON ls.qid = ex.qid AND ls.vec_id = ex.vec_id
-           |LEFT JOIN ml ON ml.qid = ex.qid AND ml.vec_id = ex.vec_id
-           |LEFT JOIN iv ON iv.qid = ex.qid AND iv.vec_id = ex.vec_id
-           |GROUP BY ex.qid ORDER BY ex.qid""".stripMargin
+           |${top5Sql("ex", "ps", "")},
+           |${top5Sql("ls", "ps", " AND eb.bucket = p.pbucket")},
+           |${top5Sql("iv", "ps", " AND eb.cell = p.pcell")},
+           |${top5Sql("ml", "mp", " AND eb.bucket = p.pbucket")}
+           |${OperatingPoint.recallSql("ex",
+              "lsh_hits" -> "ls", "mlsh_hits" -> "ml", "ivf_hits" -> "iv")}
+           |ORDER BY ex.qid""".stripMargin
       }),
 
     // -- REAL CONTAINER DECODE under oracle check: deterministic
@@ -3166,95 +3195,35 @@ object QueriesLlm {
     // the search join still shuffles by cell only; exact ground truth
     // is the one O(q·n) pass, bounded by the probe stride exactly as
     // in q115.
-    Q("q117_ivf_nprobe",
-      (spark, dir) => {
-        import graft.operators.IvfKmeans
-        val KC = 8; val Iters = 3; val Off = 4000L; val MaxProbe = 4
-        val q = spark.read.parquet(s"$dir/embeddings.parquet")
-          .select(col("vec_id"), IvfKmeans.quantize(col("embedding"), Off).as("qv"))
-        val cents = IvfKmeans.train(q, KC, Iters)
-        val assigned = IvfKmeans.assign(q, cents)
-          .select(col("vec_id"), col("qv"), col("cid").as("cell"))
-          .localCheckpoint(true)
-        val probes = assigned.filter(col("vec_id") % 17 === 0)
-          .select(col("vec_id").as("qid"), col("qv").as("pqv"))
-        // per-probe cell ranking (IvfKmeans.rankCells): all K centroid
-        // distances ride in the 1-row broadcast; the (dist, cid)
-        // tie-break is exactly what the oracle replays
-        val ranked = IvfKmeans.rankCells(probes, "pqv", cents, MaxProbe)
-        // ONE candidate join at the widest probe level; narrower levels
-        // are filters over it (cells are disjoint per probe, so no
-        // dedup). Materialized — it feeds three windows + the exact set
-        val cand = ranked.join(assigned, Seq("cell"))
-          .filter(col("vec_id") =!= col("qid"))
-          .withColumn("dist", IvfKmeans.distL2(col("pqv"), col("qv")))
-          .select(col("qid"), col("vec_id"), col("dist"), col("crank"))
-          .localCheckpoint(true)
-        val w = Window.partitionBy(col("qid")).orderBy(col("dist"), col("vec_id"))
-        def top5At(p: Int) = cand.filter(col("crank") <= p)
-          .withColumn("rn", row_number().over(w)).filter(col("rn") <= 5)
-          .select(col("qid"), col("vec_id"))
-        val exact = probes.join(assigned, col("vec_id") =!= col("qid"))
-          .withColumn("dist", IvfKmeans.distL2(col("pqv"), col("qv")))
-          .withColumn("rn", row_number().over(w)).filter(col("rn") <= 5)
-          .select(col("qid"), col("vec_id"))
-        exact
-          .join(top5At(1).withColumn("h1", lit(1)), Seq("qid", "vec_id"), "left_outer")
-          .join(top5At(2).withColumn("h2", lit(1)), Seq("qid", "vec_id"), "left_outer")
-          .join(top5At(4).withColumn("h4", lit(1)), Seq("qid", "vec_id"), "left_outer")
-          .groupBy(col("qid"))
-          .agg(count(lit(1)).as("n_exact"),
-            sum(coalesce(col("h1"), lit(0))).cast("long").as("p1_hits"),
-            sum(coalesce(col("h2"), lit(0))).cast("long").as("p2_hits"),
-            sum(coalesce(col("h4"), lit(0))).cast("long").as("p4_hits"))
-          .orderBy(col("qid"))
-      },
-      Some {
-        import graft.operators.IvfKmeans
-        def topAt(name: String, cond: String) =
-          s"""$name AS (
-             |  SELECT qid, vec_id FROM (
-             |    SELECT qid, vec_id,
-             |      row_number() OVER (PARTITION BY qid ORDER BY dist, vec_id) AS rn
-             |    FROM cand WHERE $cond)
-             |  WHERE rn <= 5)""".stripMargin
-        s"""WITH ${IvfKmeans.lloydCtes(8, 3, Dim, 4000L)},
-           |${IvfKmeans.assignCte(3, Dim)},
-           |ps AS (SELECT vec_id AS qid, qv AS pqv FROM afin WHERE vec_id % 17 = 0),
-           |pc AS (
-           |  SELECT qid, pqv, cid AS cell, crank FROM (
-           |    SELECT p.qid, p.pqv, c.cid,
-           |      row_number() OVER (PARTITION BY p.qid
-           |        ORDER BY ${IvfKmeans.distSql("p.pqv", "c.cqv", Dim)}, c.cid) AS crank
-           |    FROM ps p, c3 c)
-           |  WHERE crank <= 4),
-           |cand AS (
-           |  SELECT pc.qid, a.vec_id,
-           |    ${IvfKmeans.distSql("pc.pqv", "a.qv", Dim)} AS dist, pc.crank
-           |  FROM pc JOIN afin a ON a.cell = pc.cell AND a.vec_id <> pc.qid),
-           |exd AS (
-           |  SELECT p.qid, a.vec_id,
-           |    ${IvfKmeans.distSql("p.pqv", "a.qv", Dim)} AS dist
-           |  FROM ps p JOIN afin a ON a.vec_id <> p.qid),
-           |ex AS (
-           |  SELECT qid, vec_id FROM (
-           |    SELECT qid, vec_id,
-           |      row_number() OVER (PARTITION BY qid ORDER BY dist, vec_id) AS rn
-           |    FROM exd)
-           |  WHERE rn <= 5),
-           |${topAt("t1", "crank <= 1")},
-           |${topAt("t2", "crank <= 2")},
-           |${topAt("t4", "crank <= 4")}
-           |SELECT ex.qid, count(*) AS n_exact,
-           |  CAST(sum(CASE WHEN t1.vec_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS p1_hits,
-           |  CAST(sum(CASE WHEN t2.vec_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS p2_hits,
-           |  CAST(sum(CASE WHEN t4.vec_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS p4_hits
-           |FROM ex
-           |LEFT JOIN t1 ON t1.qid = ex.qid AND t1.vec_id = ex.vec_id
-           |LEFT JOIN t2 ON t2.qid = ex.qid AND t2.vec_id = ex.vec_id
-           |LEFT JOIN t4 ON t4.qid = ex.qid AND t4.vec_id = ex.vec_id
-           |GROUP BY ex.qid ORDER BY ex.qid""".stripMargin
-      }),
+    {
+      val Levels = Seq(1, 2, MaxProbe)
+      Q("q117_ivf_nprobe",
+        (spark, dir) => {
+          import graft.operators.IvfKmeans
+          val (probes, assigned, cand) = ivfNprobe(spark, dir)
+          def top5(df: org.apache.spark.sql.DataFrame) =
+            OperatingPoint.topK(df, 5, col("dist"), col("vec_id"))
+          val exact = top5(probes.join(assigned, col("vec_id") =!= col("qid"))
+            .withColumn("dist", IvfKmeans.distL2(col("pqv"), col("qv"))))
+          OperatingPoint.recall(exact,
+            Levels.map(p => s"p${p}_hits" -> top5(cand.filter(col("crank") <= p))): _*)
+            .orderBy(col("qid"))
+        },
+        Some {
+          import OperatingPoint.{recallSql, topKSql}
+          val tops = Levels.map(p =>
+            s"t$p AS (${topKSql(s"cand WHERE crank <= $p", 5, "dist, vec_id")})")
+          s"""WITH $ivfNprobeCtes,
+             |exd AS (
+             |  SELECT p.qid, a.vec_id,
+             |    ${graft.operators.IvfKmeans.distSql("p.pqv", "a.qv", Dim)} AS dist
+             |  FROM ps p JOIN afin a ON a.vec_id <> p.qid),
+             |ex AS (${topKSql("exd", 5, "dist, vec_id")}),
+             |${tops.mkString(",\n")}
+             |${recallSql("ex", Levels.map(p => s"p${p}_hits" -> s"t$p"): _*)}
+             |ORDER BY ex.qid""".stripMargin
+        })
+    },
 
     // -- SEMANTIC DEDUP, the SCALE PATH for q46: q46 is the exact
     // all-pairs cosine near-dup baseline (O(n²), corpus broadcast —
@@ -3778,249 +3747,142 @@ object QueriesLlm {
     // A held-out TUNING sample of probes (every 2nd probe, qid % 34)
     // gets the exact ground truth and integer recall@5 numerators per
     // nprobe level; the smallest level whose tuning recall meets the
-    // 50% floor (hits*100 >= n*50, integer on both engines; the max
+    // floor (hits*100 >= n*FloorPct, integer on both engines; the max
     // ladder level is the fallback if none qualifies) is selected —
     // and the FULL probe workload is served at that operating point.
     // The oracle re-derives the same nprobe from the same integer
     // counts and the same served top-5, so a drift anywhere in
     // measure -> select -> serve fails the hash. 100 TB: the exact
     // O(q_t·n) leg runs ONLY over the tuning sample (you tune on a
-    // fixed-size sample, serve everything); the chosen point rides as
-    // a 1-row broadcast into the serving filter — no driver collect;
-    // serving itself is q117's shape (ONE candidate join at the
-    // widest level, narrower levels are filters).
-    Q("q125_ivf_operating_point",
-      (spark, dir) => {
-        import graft.operators.IvfKmeans
-        val KC = 8; val Iters = 3; val Off = 4000L; val MaxProbe = 4
-        val FloorPct = 50
-        val q = spark.read.parquet(s"$dir/embeddings.parquet")
-          .select(col("vec_id"), IvfKmeans.quantize(col("embedding"), Off).as("qv"))
-        val cents = IvfKmeans.train(q, KC, Iters)
-        val assigned = IvfKmeans.assign(q, cents)
-          .select(col("vec_id"), col("qv"), col("cid").as("cell"))
-          .localCheckpoint(true)
-        val probes = assigned.filter(col("vec_id") % 17 === 0)
-          .select(col("vec_id").as("qid"), col("qv").as("pqv"))
-        val ranked = IvfKmeans.rankCells(probes, "pqv", cents, MaxProbe)
-        // ONE candidate join at the widest level for ALL probes; the
-        // tuning filters and the serving filter are both views of it
-        val cand = ranked.join(assigned, Seq("cell"))
-          .filter(col("vec_id") =!= col("qid"))
-          .withColumn("dist", IvfKmeans.distL2(col("pqv"), col("qv")))
-          .select(col("qid"), col("vec_id"), col("dist"), col("crank"))
-          .localCheckpoint(true)
-        val w = Window.partitionBy(col("qid")).orderBy(col("dist"), col("vec_id"))
-        def tuneTop5(p: Int) = cand
-          .filter(col("qid") % 34 === 0 && col("crank") <= p)
-          .withColumn("rn", row_number().over(w)).filter(col("rn") <= 5)
-          .select(col("qid"), col("vec_id"))
-        // exact ground truth ONLY over the tuning sample — the one
-        // deliberate O(q_t·n) pass, bounded by the sample size
-        val exactT = probes.filter(col("qid") % 34 === 0)
-          .join(assigned, col("vec_id") =!= col("qid"))
-          .withColumn("dist", IvfKmeans.distL2(col("pqv"), col("qv")))
-          .withColumn("rn", row_number().over(w)).filter(col("rn") <= 5)
-          .select(col("qid"), col("vec_id"))
-        val totals = exactT
-          .join(tuneTop5(1).withColumn("h1", lit(1)), Seq("qid", "vec_id"), "left_outer")
-          .join(tuneTop5(2).withColumn("h2", lit(1)), Seq("qid", "vec_id"), "left_outer")
-          .agg(count(lit(1)).as("n"),
-            sum(coalesce(col("h1"), lit(0))).as("h1"),
-            sum(coalesce(col("h2"), lit(0))).as("h2"))
-        val chosen = totals.select(
-          when(col("h1") * 100 >= col("n") * FloorPct, 1)
-            .when(col("h2") * 100 >= col("n") * FloorPct, 2)
-            .otherwise(MaxProbe).as("nprobe"))
-        cand.crossJoin(chosen) // 1-row side -> broadcast
-          .filter(col("crank") <= col("nprobe"))
-          .withColumn("rn", row_number().over(w))
-          .filter(col("rn") <= 5)
-          .select(col("qid"), col("rn").cast("long").as("rn"),
-            col("vec_id"), col("nprobe"))
-          .orderBy(col("qid"), col("rn"))
-      },
-      Some {
-        import graft.operators.IvfKmeans
-        def tuneAt(name: String, p: Int) =
-          s"""$name AS (
-             |  SELECT qid, vec_id FROM (
-             |    SELECT qid, vec_id,
-             |      row_number() OVER (PARTITION BY qid ORDER BY dist, vec_id) AS rn
-             |    FROM cand WHERE qid % 34 = 0 AND crank <= $p)
-             |  WHERE rn <= 5)""".stripMargin
-        s"""WITH ${IvfKmeans.lloydCtes(8, 3, Dim, 4000L)},
-           |${IvfKmeans.assignCte(3, Dim)},
-           |ps AS (SELECT vec_id AS qid, qv AS pqv FROM afin WHERE vec_id % 17 = 0),
-           |pc AS (
-           |  SELECT qid, pqv, cid AS cell, crank FROM (
-           |    SELECT p.qid, p.pqv, c.cid,
-           |      row_number() OVER (PARTITION BY p.qid
-           |        ORDER BY ${IvfKmeans.distSql("p.pqv", "c.cqv", Dim)}, c.cid) AS crank
-           |    FROM ps p, c3 c)
-           |  WHERE crank <= 4),
-           |cand AS (
-           |  SELECT pc.qid, a.vec_id,
-           |    ${IvfKmeans.distSql("pc.pqv", "a.qv", Dim)} AS dist, pc.crank
-           |  FROM pc JOIN afin a ON a.cell = pc.cell AND a.vec_id <> pc.qid),
-           |exd AS (
-           |  SELECT p.qid, a.vec_id,
-           |    ${IvfKmeans.distSql("p.pqv", "a.qv", Dim)} AS dist
-           |  FROM ps p JOIN afin a ON a.vec_id <> p.qid
-           |  WHERE p.qid % 34 = 0),
-           |ex AS (
-           |  SELECT qid, vec_id FROM (
-           |    SELECT qid, vec_id,
-           |      row_number() OVER (PARTITION BY qid ORDER BY dist, vec_id) AS rn
-           |    FROM exd)
-           |  WHERE rn <= 5),
-           |${tuneAt("t1", 1)},
-           |${tuneAt("t2", 2)},
-           |tot AS (
-           |  SELECT count(*) AS n,
-           |    sum(CASE WHEN t1.vec_id IS NOT NULL THEN 1 ELSE 0 END) AS h1,
-           |    sum(CASE WHEN t2.vec_id IS NOT NULL THEN 1 ELSE 0 END) AS h2
-           |  FROM ex
-           |  LEFT JOIN t1 ON t1.qid = ex.qid AND t1.vec_id = ex.vec_id
-           |  LEFT JOIN t2 ON t2.qid = ex.qid AND t2.vec_id = ex.vec_id),
-           |ch AS (
-           |  SELECT CASE WHEN h1 * 100 >= n * 50 THEN 1
-           |              WHEN h2 * 100 >= n * 50 THEN 2
-           |              ELSE 4 END AS nprobe
-           |  FROM tot)
-           |SELECT qid, rn, vec_id, nprobe FROM (
-           |  SELECT c.qid, c.vec_id, ch.nprobe,
-           |    row_number() OVER (PARTITION BY c.qid ORDER BY c.dist, c.vec_id) AS rn
-           |  FROM cand c, ch WHERE c.crank <= ch.nprobe)
-           |WHERE rn <= 5 ORDER BY qid, rn""".stripMargin
-      }),
+    // fixed-size sample, serve everything), with the sample side
+    // broadcast; the chosen point rides as a 1-row broadcast into the
+    // serving filter — no driver collect; serving itself is q117's
+    // shape (ONE candidate join at the widest level, narrower levels
+    // are filters).
+    {
+      val Tune = Seq(1, 2); val FloorPct = 50
+      Q("q125_ivf_operating_point",
+        (spark, dir) => {
+          import graft.operators.IvfKmeans
+          val (probes, assigned, cand) = ivfNprobe(spark, dir)
+          def top5(df: org.apache.spark.sql.DataFrame) =
+            OperatingPoint.topK(df, 5, col("dist"), col("vec_id"))
+          val sample = col("qid") % 34 === 0
+          val exactT = top5(broadcast(probes.filter(sample))
+            .join(assigned, col("vec_id") =!= col("qid"))
+            .withColumn("dist", IvfKmeans.distL2(col("pqv"), col("qv"))))
+          val chosen = OperatingPoint.choose(
+            OperatingPoint.recallLadder(exactT, "nprobe", Tune.map(p =>
+              p -> top5(cand.filter(sample && col("crank") <= p))): _*),
+            "nprobe", col("hits") * 100 >= col("n") * FloorPct, MaxProbe)
+          top5(cand.crossJoin(chosen).filter(col("crank") <= col("nprobe")))
+            .select(col("qid"), col("rn").cast("long").as("rn"),
+              col("vec_id"), col("nprobe"))
+            .orderBy(col("qid"), col("rn"))
+        },
+        Some {
+          import OperatingPoint._
+          val tune = Tune.map(p => s"t$p AS (${topKSql(
+            s"cand WHERE qid % 34 = 0 AND crank <= $p", 5, "dist, vec_id")})")
+          s"""WITH $ivfNprobeCtes,
+             |exd AS (
+             |  SELECT p.qid, a.vec_id,
+             |    ${graft.operators.IvfKmeans.distSql("p.pqv", "a.qv", Dim)} AS dist
+             |  FROM ps p JOIN afin a ON a.vec_id <> p.qid
+             |  WHERE p.qid % 34 = 0),
+             |ex AS (${topKSql("exd", 5, "dist, vec_id")}),
+             |${tune.mkString(",\n")},
+             |lad AS (${recallLadderSql("ex", "nprobe", Tune.map(p => p -> s"t$p"): _*)}),
+             |ch AS (${chooseSql("lad", "nprobe", s"hits * 100 >= n * $FloorPct", MaxProbe)})
+             |SELECT qid, rn, vec_id, nprobe
+             |FROM (${topKSql("cand c, ch WHERE c.crank <= ch.nprobe", 5, "dist, vec_id")})
+             |ORDER BY qid, rn""".stripMargin
+        })
+    },
 
     // -- LSH PLANE-COUNT operating point: the corrective for q115's
     // headline finding (single-table LSH at 0.05 recall@5 — 2^8
-    // buckets over ~2k vectors over-partitions, and `Planes` was a
-    // fixed constant nothing consumed). q125's measure→select→serve
-    // loop applied to the HYPERPLANE COUNT: coarser buckets are
-    // PREFIX MASKS of the 8-plane bucket (plane j contributes bit j),
-    // so the 4/6/8-plane candidate sets nest and ONE candidate join
-    // at the coarsest (4-plane) level serves every level — finer
+    // buckets over ~2k vectors over-partitions). q125's
+    // measure→select→serve loop applied to the HYPERPLANE COUNT:
+    // coarser buckets are PREFIX MASKS of the 8-plane bucket (plane j
+    // contributes bit j), so the n-plane candidate sets nest and ONE
+    // candidate join at the coarsest level serves every level — finer
     // levels are bitmask FILTERS over it, the q117 pattern. A
     // held-out tuning sample (qid % 34) pays the exact leg; the
-    // LARGEST plane count meeting the 50% recall floor wins (most
-    // selective buckets = cheapest serving; the 4-plane coarsest is
+    // LARGEST plane count meeting the recall floor wins (most
+    // selective buckets = cheapest serving; the coarsest level is
     // the fallback — max recall the ladder offers); the FULL probe
     // workload is served at the chosen width. 100 TB: bucket masks
     // are map-side bit ops; the one candidate join shuffles by the
     // coarse bucket; the chosen width rides as a 1-row broadcast —
-    // no driver collect; the exact O(q_t·n) leg is tuning-only.
-    Q("q126_lsh_operating_point",
-      (spark, dir) => {
-        val FloorPct = 50
-        val e = table(spark, dir, "embeddings")
-          .select(col("vec_id"), VF.asDouble(col("embedding")).as("v"))
-          .withColumn("nrm", sqrt(VF.normSq(col("v"))))
-          .withColumn("b8", VF.lshBucket(col("v"), Planes, Dim))
-          .localCheckpoint(true) // probe side + corpus side + exact leg
-        val q = e.filter(col("vec_id") % 17 === 0)
-          .select(col("vec_id").as("qid"), col("v").as("qv"),
-            col("nrm").as("qnrm"), col("b8").as("qb8"))
-        val cand = q.join(e,
-            col("b8").bitwiseAND(lit(15L)) === col("qb8").bitwiseAND(lit(15L)) &&
-              col("vec_id") =!= col("qid"))
-          .withColumn("sim_x1e6",
-            VF.quantize1e6(VF.dot(col("qv"), col("v")) / (col("qnrm") * col("nrm"))))
-          .withColumn("m6",
-            col("b8").bitwiseAND(lit(63L)) === col("qb8").bitwiseAND(lit(63L)))
-          .withColumn("m8", col("b8") === col("qb8"))
-          .select(col("qid"), col("vec_id"), col("sim_x1e6"), col("m6"), col("m8"))
-          .localCheckpoint(true) // three tuning views + the serving pass
-        val w = Window.partitionBy(col("qid"))
-          .orderBy(col("sim_x1e6").desc, col("vec_id"))
-        def tuneTop5(pred: org.apache.spark.sql.Column) = cand
-          .filter(col("qid") % 34 === 0 && pred)
-          .withColumn("rn", row_number().over(w)).filter(col("rn") <= 5)
-          .select(col("qid"), col("vec_id"))
-        val exactT = q.filter(col("qid") % 34 === 0)
-          .join(e, col("vec_id") =!= col("qid"))
-          .withColumn("sim_x1e6",
-            VF.quantize1e6(VF.dot(col("qv"), col("v")) / (col("qnrm") * col("nrm"))))
-          .withColumn("rn", row_number().over(w)).filter(col("rn") <= 5)
-          .select(col("qid"), col("vec_id"))
-        val totals = exactT
-          .join(tuneTop5(col("m8")).withColumn("h8", lit(1)),
-            Seq("qid", "vec_id"), "left_outer")
-          .join(tuneTop5(col("m6")).withColumn("h6", lit(1)),
-            Seq("qid", "vec_id"), "left_outer")
-          .agg(count(lit(1)).as("n"),
-            sum(coalesce(col("h8"), lit(0))).as("h8"),
-            sum(coalesce(col("h6"), lit(0))).as("h6"))
-        val chosen = totals.select(
-          when(col("h8") * 100 >= col("n") * FloorPct, 8)
-            .when(col("h6") * 100 >= col("n") * FloorPct, 6)
-            .otherwise(4).as("n_planes"))
-        cand.crossJoin(chosen) // 1-row side -> broadcast
-          .filter(when(col("n_planes") === 8, col("m8"))
-            .when(col("n_planes") === 6, col("m6")).otherwise(lit(true)))
-          .withColumn("rn", row_number().over(w)).filter(col("rn") <= 5)
-          .select(col("qid"), col("rn").cast("long").as("rn"),
-            col("vec_id"), col("n_planes"))
-          .orderBy(col("qid"), col("rn"))
-      },
-      Some {
-        def tuneAt(name: String, pred: String) =
-          s"""$name AS (
-             |  SELECT qid, vec_id FROM (
-             |    SELECT qid, vec_id,
-             |      row_number() OVER (PARTITION BY qid
-             |        ORDER BY sim_x1e6 DESC, vec_id) AS rn
-             |    FROM cand WHERE qid % 34 = 0 AND $pred)
-             |  WHERE rn <= 5)""".stripMargin
-        s"""WITH $embCte,
-           |eb AS (SELECT vec_id, v, ${bucketSql("v")} AS b8 FROM e),
-           |qb AS (SELECT vec_id AS qid, v AS qv, b8 AS qb8
-           |       FROM eb WHERE vec_id % 17 = 0),
-           |cand AS (
-           |  SELECT q.qid, e.vec_id,
-           |    CAST(floor((${cosSql("q.qv", "e.v")}) * 1e6) AS BIGINT) AS sim_x1e6,
-           |    (e.b8 & 63) = (q.qb8 & 63) AS m6,
-           |    e.b8 = q.qb8 AS m8
-           |  FROM qb q JOIN eb e
-           |    ON (e.b8 & 15) = (q.qb8 & 15) AND e.vec_id <> q.qid),
-           |exd AS (
-           |  SELECT q.qid, e.vec_id,
-           |    CAST(floor((${cosSql("q.qv", "e.v")}) * 1e6) AS BIGINT) AS sim_x1e6
-           |  FROM qb q JOIN eb e ON e.vec_id <> q.qid
-           |  WHERE q.qid % 34 = 0),
-           |ex AS (
-           |  SELECT qid, vec_id FROM (
-           |    SELECT qid, vec_id,
-           |      row_number() OVER (PARTITION BY qid
-           |        ORDER BY sim_x1e6 DESC, vec_id) AS rn
-           |    FROM exd)
-           |  WHERE rn <= 5),
-           |${tuneAt("t8", "m8")},
-           |${tuneAt("t6", "m6")},
-           |tot AS (
-           |  SELECT count(*) AS n,
-           |    sum(CASE WHEN t8.vec_id IS NOT NULL THEN 1 ELSE 0 END) AS h8,
-           |    sum(CASE WHEN t6.vec_id IS NOT NULL THEN 1 ELSE 0 END) AS h6
-           |  FROM ex
-           |  LEFT JOIN t8 ON t8.qid = ex.qid AND t8.vec_id = ex.vec_id
-           |  LEFT JOIN t6 ON t6.qid = ex.qid AND t6.vec_id = ex.vec_id),
-           |ch AS (
-           |  SELECT CASE WHEN h8 * 100 >= n * 50 THEN 8
-           |              WHEN h6 * 100 >= n * 50 THEN 6
-           |              ELSE 4 END AS n_planes
-           |  FROM tot)
-           |SELECT qid, rn, vec_id, n_planes FROM (
-           |  SELECT c.qid, c.vec_id, ch.n_planes,
-           |    row_number() OVER (PARTITION BY c.qid
-           |      ORDER BY c.sim_x1e6 DESC, c.vec_id) AS rn
-           |  FROM cand c, ch
-           |  WHERE CASE WHEN ch.n_planes = 8 THEN c.m8
-           |             WHEN ch.n_planes = 6 THEN c.m6
-           |             ELSE TRUE END)
-           |WHERE rn <= 5 ORDER BY qid, rn""".stripMargin
-      }),
+    // no driver collect; the exact O(q_t·n) leg is tuning-only, with
+    // the sample side broadcast.
+    {
+      val Tune = Seq(8, 6); val FloorPct = 50; val Coarse = 4
+      Q("q126_lsh_operating_point",
+        (spark, dir) => {
+          import org.apache.spark.sql.{Column, DataFrame}
+          // same n-plane bucket: equal low n bits of the 8-plane buckets
+          def same(n: Column): Column = {
+            val mask = call_function("shiftleft", lit(1L), n) - 1
+            col("b8").bitwiseAND(mask) === col("qb8").bitwiseAND(mask)
+          }
+          def top5(df: DataFrame) =
+            OperatingPoint.topK(df, 5, col("sim_x1e6").desc, col("vec_id"))
+          val sim = VF.quantize1e6(VF.dot(col("qv"), col("v")) / (col("qnrm") * col("nrm")))
+          val e = table(spark, dir, "embeddings")
+            .select(col("vec_id"), VF.asDouble(col("embedding")).as("v"))
+            .withColumn("nrm", sqrt(VF.normSq(col("v"))))
+            .withColumn("b8", VF.lshBucket(col("v"), Planes, Dim))
+            .localCheckpoint(true) // probe side + corpus side + exact leg
+          val q = e.filter(col("vec_id") % 17 === 0)
+            .select(col("vec_id").as("qid"), col("v").as("qv"),
+              col("nrm").as("qnrm"), col("b8").as("qb8"))
+          val cand = q.join(e, same(lit(Coarse)) && col("vec_id") =!= col("qid"))
+            .select(col("qid"), col("vec_id"), sim.as("sim_x1e6"), col("b8"), col("qb8"))
+            .localCheckpoint(true) // the tuning views + the serving pass
+          val sample = col("qid") % 34 === 0
+          val exactT = top5(broadcast(q.filter(sample))
+            .join(e, col("vec_id") =!= col("qid"))
+            .withColumn("sim_x1e6", sim))
+          val chosen = OperatingPoint.choose(
+            OperatingPoint.recallLadder(exactT, "n_planes", Tune.map(p =>
+              p -> top5(cand.filter(sample && same(lit(p))))): _*),
+            "n_planes", col("hits") * 100 >= col("n") * FloorPct, Coarse,
+            lowest = false)
+          top5(cand.crossJoin(chosen).filter(same(col("n_planes"))))
+            .select(col("qid"), col("rn").cast("long").as("rn"),
+              col("vec_id"), col("n_planes"))
+            .orderBy(col("qid"), col("rn"))
+        },
+        Some {
+          import OperatingPoint._
+          def same(n: Any) = s"(b8 & ((1 << $n) - 1)) = (qb8 & ((1 << $n) - 1))"
+          val simSql = s"CAST(floor((${cosSql("q.qv", "e.v")}) * 1e6) AS BIGINT) AS sim_x1e6"
+          val order = "sim_x1e6 DESC, vec_id"
+          val tune = Tune.map(p => s"t$p AS (${topKSql(
+            s"cand WHERE qid % 34 = 0 AND ${same(p)}", 5, order)})")
+          s"""WITH $embCte,
+             |eb AS (SELECT vec_id, v, ${bucketSql("v")} AS b8 FROM e),
+             |qb AS (SELECT vec_id AS qid, v AS qv, b8 AS qb8
+             |       FROM eb WHERE vec_id % 17 = 0),
+             |cand AS (
+             |  SELECT q.qid, e.vec_id, $simSql, e.b8, q.qb8
+             |  FROM qb q JOIN eb e ON ${same(Coarse)} AND e.vec_id <> q.qid),
+             |exd AS (
+             |  SELECT q.qid, e.vec_id, $simSql
+             |  FROM qb q JOIN eb e ON e.vec_id <> q.qid
+             |  WHERE q.qid % 34 = 0),
+             |ex AS (${topKSql("exd", 5, order)}),
+             |${tune.mkString(",\n")},
+             |lad AS (${recallLadderSql("ex", "n_planes", Tune.map(p => p -> s"t$p"): _*)}),
+             |ch AS (${chooseSql("lad", "n_planes", s"hits * 100 >= n * $FloorPct", Coarse,
+                lowest = false)})
+             |SELECT qid, rn, vec_id, n_planes
+             |FROM (${topKSql(s"cand, ch WHERE ${same("ch.n_planes")}", 5, order)})
+             |ORDER BY qid, rn""".stripMargin
+        })
+    },
 
     // -- HOT-BUCKET CONTROL AT PRODUCTION GRANULARITY: q121's
     // content-fingerprint split + per-group cap applied to the
@@ -4305,161 +4167,160 @@ object QueriesLlm {
     // no driver collect anywhere. Reference anchor:
     // VariantXdbIdLoad.java:73-123 (match-threshold discipline on
     // external-id joins: the accept criterion is data, not code).
-    Q("q129_semantic_threshold_point",
-      (spark, dir) => {
-        import graft.operators.IvfKmeans
-        import org.apache.spark.sql.{Column, DataFrame}
-        val Off = 4000L; val FloorPct = 95
-        val Ladder = Seq(400000L, 550000L, 700000L)
-        val e = table(spark, dir, "embeddings")
-          .select(col("vec_id"), VF.asDouble(col("embedding")).as("v"),
-            IvfKmeans.quantize(col("embedding"), Off).as("qv"))
-          .withColumn("nrm", sqrt(VF.normSq(col("v"))))
-        val seed = e.filter(col("vec_id") % 2 === 0)
-        val cents = IvfKmeans.train(seed.select(col("vec_id"), col("qv")), 8, 3)
-          .localCheckpoint(true)
-        // in-memory 2x-spill index (q118's shape — the operating
-        // point is CONFIG, not state; the persistent-store lifecycle
-        // is q120/q122-q124's job)
-        val idx = IvfKmeans.rankCells(
-            seed.select("vec_id", "v", "nrm", "qv"), "qv", cents, 2)
-          .select(col("cell"), col("v").as("iv"), col("nrm").as("inrm"))
-          .localCheckpoint(true)
-        // acceptWave's probe shape: crank-1 cell, max cosine against
-        // the cell's index entries; -1 = empty cell (never a dup)
-        def maxCos(probe: DataFrame): DataFrame =
-          IvfKmeans.rankCells(
-              probe.select("vec_id", "v", "nrm", "qv"), "qv", cents, 1)
-            .join(idx, Seq("cell"), "left_outer")
-            .groupBy(col("vec_id"))
-            .agg(coalesce(max(VF.quantize1e6(VF.dot(col("v"), col("iv"))
-              / (col("nrm") * col("inrm")))), lit(-1L)).as("mc"))
-        def remix(src: DataFrame, comp: DataFrame, compCol: String,
-                  eps: Column, offset: Long): DataFrame = src
-          .crossJoin(broadcast(comp)) // 1-row side -> broadcast
-          .withColumn("eps", eps)
-          .withColumn("v", zip_with(col("v"), col(compCol),
-            (x, p) => x + p * col("eps")))
-          .withColumn("qv", transform(col("v"),
-            x => floor(x * 1000).cast("long") + lit(Off)))
-          .withColumn("nrm", sqrt(VF.normSq(col("v"))))
-          .withColumn("vec_id", col("vec_id") + offset)
-          .select("vec_id", "v", "qv", "nrm")
-        val partner = e.filter(col("vec_id") % 20 === 3)
-          .orderBy(col("vec_id")).limit(1).select(col("v").as("pv"))
-        val anchorC = seed.orderBy(col("vec_id")).limit(1)
-          .select(col("v").as("acv"))
-        // labeled tuning probes: id < 600000 = true dup, else distinct
-        val pos = remix(e.filter(col("vec_id") % 10 === 0), partner, "pv",
-          when(expr("(vec_id DIV 10) % 2 = 0"), lit(0.25)).otherwise(lit(1.0)),
-          500000L)
-        val neg = remix(e.filter(col("vec_id") % 20 === 7), anchorC, "acv",
-          lit(0.5), 600000L)
-        val mc = maxCos(pos.unionByName(neg)).localCheckpoint(true)
-        import spark.implicits._
-        val counts = mc.crossJoin(broadcast(Ladder.toDF("t")))
-          .groupBy(col("t")).agg(
-            sum(when(col("vec_id") < 600000L && col("mc") >= col("t"), 1L)
-              .otherwise(0L)).as("tp"),
-            sum(when(col("vec_id") >= 600000L && col("mc") >= col("t"), 1L)
-              .otherwise(0L)).as("fp"))
-          .localCheckpoint(true)
-        val chosen = counts.agg(coalesce(
-          min(when(col("tp") * 100 >= (col("tp") + col("fp")) * FloorPct,
-            col("t"))), lit(Ladder.last)).as("ct"))
-        // serve a mixed ingest wave at the chosen point: plain fresh
-        // vectors + borderline-correlated mixtures whose fate DEPENDS
-        // on the selection — a selection drift shifts the accept set
-        val fresh = e.filter(col("vec_id") % 20 === 9)
-          .withColumn("vec_id", col("vec_id") + 700000L)
-          .select("vec_id", "v", "qv", "nrm")
-        val border = remix(e.filter(col("vec_id") % 20 === 13), anchorC,
-          "acv", lit(0.5), 800000L)
-        val served = maxCos(fresh.unionByName(border))
-          .crossJoin(chosen) // 1-row side -> broadcast
-          .filter(col("mc") < col("ct"))
-          .select(lit("accept").as("sect"), col("vec_id").as("id"),
-            lit(0L).as("n1"), lit(0L).as("n2"))
-        counts.select(lit("ladder").as("sect"), col("t").as("id"),
-            col("tp").as("n1"), col("fp").as("n2"))
-          .unionByName(chosen.select(lit("chosen").as("sect"),
-            col("ct").as("id"), lit(0L).as("n1"), lit(0L).as("n2")))
-          .unionByName(served)
-          .orderBy(col("sect"), col("id"))
-      },
-      Some {
-        import graft.operators.IvfKmeans
-        def mixSql(where: String, comp: String, compCol: String,
-                   eps: String, offset: Long) =
-          s"""SELECT e.vec_id + $offset AS vec_id,
-             |  [e.v[i] + $compCol[i] * ($eps) FOR i IN generate_series(1, $Dim)] AS v,
-             |  [CAST(floor((e.v[i] + $compCol[i] * ($eps)) * 1000) AS BIGINT) + 4000
-             |   FOR i IN generate_series(1, $Dim)] AS qv
-             |FROM eall e, $comp WHERE $where""".stripMargin
-        s"""WITH ${IvfKmeans.lloydCtes(8, 3, Dim, 4000L, " WHERE vec_id % 2 = 0")},
-           |$semEallCte,
-           |sd AS (SELECT vec_id, v, qv FROM eall WHERE vec_id % 2 = 0),
-           |${semSpillCte("idx", "sd")},
-           |pn AS (SELECT v AS pv FROM eall WHERE vec_id % 20 = 3
-           |       ORDER BY vec_id LIMIT 1),
-           |ac AS (SELECT v AS acv FROM eall WHERE vec_id % 2 = 0
-           |       ORDER BY vec_id LIMIT 1),
-           |tune AS (
-           |  ${mixSql("e.vec_id % 10 = 0", "pn", "pn.pv",
-                "CASE WHEN (e.vec_id // 10) % 2 = 0 THEN 0.25 ELSE 1.0 END",
-                500000L)}
-           |  UNION ALL
-           |  ${mixSql("e.vec_id % 20 = 7", "ac", "ac.acv", "0.5", 600000L)}),
-           |${semProbeCte("tp1", "tune")},
-           |mc AS (
-           |  SELECT p.vec_id,
-           |    COALESCE(MAX(CAST(floor((${cosSql("p.v", "i.v")}) * 1e6)
-           |      AS BIGINT)), -1) AS mc
-           |  FROM tp1 p LEFT JOIN idx i ON i.cell = p.cell
-           |  GROUP BY p.vec_id),
-           |ladder AS (SELECT CAST(400000 AS BIGINT) AS t
-           |           UNION ALL SELECT 550000 UNION ALL SELECT 700000),
-           |counts AS (
-           |  SELECT t,
-           |    CAST(sum(CASE WHEN vec_id < 600000 AND mc >= t
-           |      THEN 1 ELSE 0 END) AS BIGINT) AS tp,
-           |    CAST(sum(CASE WHEN vec_id >= 600000 AND mc >= t
-           |      THEN 1 ELSE 0 END) AS BIGINT) AS fp
-           |  FROM mc, ladder GROUP BY t),
-           |chosen AS (
-           |  SELECT COALESCE(MIN(CASE WHEN tp * 100 >= (tp + fp) * 95
-           |    THEN t END), 700000) AS ct FROM counts),
-           |serve AS (
-           |  SELECT vec_id + 700000 AS vec_id, v, qv FROM eall
-           |  WHERE vec_id % 20 = 9
-           |  UNION ALL
-           |  ${mixSql("e.vec_id % 20 = 13", "ac", "ac.acv", "0.5", 800000L)}),
-           |${semProbeCte("sp1", "serve")},
-           |smc AS (
-           |  SELECT p.vec_id,
-           |    COALESCE(MAX(CAST(floor((${cosSql("p.v", "i.v")}) * 1e6)
-           |      AS BIGINT)), -1) AS mc
-           |  FROM sp1 p LEFT JOIN idx i ON i.cell = p.cell
-           |  GROUP BY p.vec_id)
-           |SELECT * FROM (
-           |  SELECT 'ladder' AS sect, t AS id, tp AS n1, fp AS n2 FROM counts
-           |  UNION ALL
-           |  SELECT 'chosen', ct, CAST(0 AS BIGINT), CAST(0 AS BIGINT) FROM chosen
-           |  UNION ALL
-           |  SELECT 'accept', s.vec_id, CAST(0 AS BIGINT), CAST(0 AS BIGINT)
-           |  FROM smc s, chosen ch WHERE s.mc < ch.ct)
-           |ORDER BY sect, id""".stripMargin
-      }),
+    {
+      val Ladder = Seq(400000L, 550000L, 700000L); val FloorPct = 95
+      Q("q129_semantic_threshold_point",
+        (spark, dir) => {
+          import graft.operators.IvfKmeans
+          import org.apache.spark.sql.{Column, DataFrame}
+          val Off = 4000L
+          val e = table(spark, dir, "embeddings")
+            .select(col("vec_id"), VF.asDouble(col("embedding")).as("v"),
+              IvfKmeans.quantize(col("embedding"), Off).as("qv"))
+            .withColumn("nrm", sqrt(VF.normSq(col("v"))))
+          val seed = e.filter(col("vec_id") % 2 === 0)
+          val cents = IvfKmeans.train(seed.select(col("vec_id"), col("qv")), 8, 3)
+            .localCheckpoint(true)
+          // in-memory 2x-spill index (q118's shape — the operating
+          // point is CONFIG, not state; the persistent-store lifecycle
+          // is q120/q122-q124's job)
+          val idx = IvfKmeans.rankCells(
+              seed.select("vec_id", "v", "nrm", "qv"), "qv", cents, 2)
+            .select(col("cell"), col("v").as("iv"), col("nrm").as("inrm"))
+            .localCheckpoint(true)
+          // acceptWave's probe shape: crank-1 cell, max cosine against
+          // the cell's index entries; -1 = empty cell (never a dup)
+          def maxCos(probe: DataFrame): DataFrame =
+            IvfKmeans.rankCells(
+                probe.select("vec_id", "v", "nrm", "qv"), "qv", cents, 1)
+              .join(idx, Seq("cell"), "left_outer")
+              .groupBy(col("vec_id"))
+              .agg(coalesce(max(VF.quantize1e6(VF.dot(col("v"), col("iv"))
+                / (col("nrm") * col("inrm")))), lit(-1L)).as("mc"))
+          def remix(src: DataFrame, comp: DataFrame, compCol: String,
+                    eps: Column, offset: Long): DataFrame = src
+            .crossJoin(broadcast(comp)) // 1-row side -> broadcast
+            .withColumn("eps", eps)
+            .withColumn("v", zip_with(col("v"), col(compCol),
+              (x, p) => x + p * col("eps")))
+            .withColumn("qv", transform(col("v"),
+              x => floor(x * 1000).cast("long") + lit(Off)))
+            .withColumn("nrm", sqrt(VF.normSq(col("v"))))
+            .withColumn("vec_id", col("vec_id") + offset)
+            .select("vec_id", "v", "qv", "nrm")
+          val partner = e.filter(col("vec_id") % 20 === 3)
+            .orderBy(col("vec_id")).limit(1).select(col("v").as("pv"))
+          val anchorC = seed.orderBy(col("vec_id")).limit(1)
+            .select(col("v").as("acv"))
+          // labeled tuning probes: id < 600000 = true dup, else distinct
+          val pos = remix(e.filter(col("vec_id") % 10 === 0), partner, "pv",
+            when(expr("(vec_id DIV 10) % 2 = 0"), lit(0.25)).otherwise(lit(1.0)),
+            500000L)
+          val neg = remix(e.filter(col("vec_id") % 20 === 7), anchorC, "acv",
+            lit(0.5), 600000L)
+          val mc = maxCos(pos.unionByName(neg)).localCheckpoint(true)
+          import spark.implicits._
+          val counts = mc.crossJoin(broadcast(Ladder.toDF("t")))
+            .groupBy(col("t")).agg(
+              sum(when(col("vec_id") < 600000L && col("mc") >= col("t"), 1L)
+                .otherwise(0L)).as("tp"),
+              sum(when(col("vec_id") >= 600000L && col("mc") >= col("t"), 1L)
+                .otherwise(0L)).as("fp"))
+            .localCheckpoint(true)
+          val chosen = OperatingPoint.choose(counts, "t",
+            col("tp") * 100 >= (col("tp") + col("fp")) * FloorPct, Ladder.last)
+          // serve a mixed ingest wave at the chosen point: plain fresh
+          // vectors + borderline-correlated mixtures whose fate DEPENDS
+          // on the selection — a selection drift shifts the accept set
+          val fresh = e.filter(col("vec_id") % 20 === 9)
+            .withColumn("vec_id", col("vec_id") + 700000L)
+            .select("vec_id", "v", "qv", "nrm")
+          val border = remix(e.filter(col("vec_id") % 20 === 13), anchorC,
+            "acv", lit(0.5), 800000L)
+          val served = maxCos(fresh.unionByName(border))
+            .crossJoin(chosen)
+            .filter(col("mc") < col("t"))
+            .select(lit("accept").as("sect"), col("vec_id").as("id"),
+              lit(0L).as("n1"), lit(0L).as("n2"))
+          counts.select(lit("ladder").as("sect"), col("t").as("id"),
+              col("tp").as("n1"), col("fp").as("n2"))
+            .unionByName(chosen.select(lit("chosen").as("sect"),
+              col("t").as("id"), lit(0L).as("n1"), lit(0L).as("n2")))
+            .unionByName(served)
+            .orderBy(col("sect"), col("id"))
+        },
+        Some {
+          import graft.operators.IvfKmeans
+          def mixSql(where: String, comp: String, compCol: String,
+                     eps: String, offset: Long) =
+            s"""SELECT e.vec_id + $offset AS vec_id,
+               |  [e.v[i] + $compCol[i] * ($eps) FOR i IN generate_series(1, $Dim)] AS v,
+               |  [CAST(floor((e.v[i] + $compCol[i] * ($eps)) * 1000) AS BIGINT) + 4000
+               |   FOR i IN generate_series(1, $Dim)] AS qv
+               |FROM eall e, $comp WHERE $where""".stripMargin
+          s"""WITH ${IvfKmeans.lloydCtes(8, 3, Dim, 4000L, " WHERE vec_id % 2 = 0")},
+             |$semEallCte,
+             |sd AS (SELECT vec_id, v, qv FROM eall WHERE vec_id % 2 = 0),
+             |${semSpillCte("idx", "sd")},
+             |pn AS (SELECT v AS pv FROM eall WHERE vec_id % 20 = 3
+             |       ORDER BY vec_id LIMIT 1),
+             |ac AS (SELECT v AS acv FROM eall WHERE vec_id % 2 = 0
+             |       ORDER BY vec_id LIMIT 1),
+             |tune AS (
+             |  ${mixSql("e.vec_id % 10 = 0", "pn", "pn.pv",
+                  "CASE WHEN (e.vec_id // 10) % 2 = 0 THEN 0.25 ELSE 1.0 END",
+                  500000L)}
+             |  UNION ALL
+             |  ${mixSql("e.vec_id % 20 = 7", "ac", "ac.acv", "0.5", 600000L)}),
+             |${semProbeCte("tp1", "tune")},
+             |mc AS (
+             |  SELECT p.vec_id,
+             |    COALESCE(MAX(CAST(floor((${cosSql("p.v", "i.v")}) * 1e6)
+             |      AS BIGINT)), -1) AS mc
+             |  FROM tp1 p LEFT JOIN idx i ON i.cell = p.cell
+             |  GROUP BY p.vec_id),
+             |ladder AS (
+             |  ${Ladder.map(t => s"SELECT CAST($t AS BIGINT) AS t").mkString(" UNION ALL ")}),
+             |counts AS (
+             |  SELECT t,
+             |    CAST(sum(CASE WHEN vec_id < 600000 AND mc >= t
+             |      THEN 1 ELSE 0 END) AS BIGINT) AS tp,
+             |    CAST(sum(CASE WHEN vec_id >= 600000 AND mc >= t
+             |      THEN 1 ELSE 0 END) AS BIGINT) AS fp
+             |  FROM mc, ladder GROUP BY t),
+             |chosen AS (${OperatingPoint.chooseSql("counts", "t",
+                s"tp * 100 >= (tp + fp) * $FloorPct", Ladder.last)}),
+             |serve AS (
+             |  SELECT vec_id + 700000 AS vec_id, v, qv FROM eall
+             |  WHERE vec_id % 20 = 9
+             |  UNION ALL
+             |  ${mixSql("e.vec_id % 20 = 13", "ac", "ac.acv", "0.5", 800000L)}),
+             |${semProbeCte("sp1", "serve")},
+             |smc AS (
+             |  SELECT p.vec_id,
+             |    COALESCE(MAX(CAST(floor((${cosSql("p.v", "i.v")}) * 1e6)
+             |      AS BIGINT)), -1) AS mc
+             |  FROM sp1 p LEFT JOIN idx i ON i.cell = p.cell
+             |  GROUP BY p.vec_id)
+             |SELECT * FROM (
+             |  SELECT 'ladder' AS sect, t AS id, tp AS n1, fp AS n2 FROM counts
+             |  UNION ALL
+             |  SELECT 'chosen', t, CAST(0 AS BIGINT), CAST(0 AS BIGINT) FROM chosen
+             |  UNION ALL
+             |  SELECT 'accept', s.vec_id, CAST(0 AS BIGINT), CAST(0 AS BIGINT)
+             |  FROM smc s, chosen ch WHERE s.mc < ch.t)
+             |ORDER BY sect, id""".stripMargin
+        })
+    },
 
     // -- MULTIMODAL ANN (the q58 baseline's PRODUCTION path): the
     // same opaque-bytes -> 8-bin byte-histogram feature extraction,
     // but the similarity search is CELL-BLOCKED by a TRAINED FIXED-K
     // coarse quantizer — IvfKmeans.train over the quantized histogram
-    // features, q114's lifecycle on the multimodal feature space. r11
-    // shipped this gate with centroids = every 101st document, which
-    // made the ASSIGNMENT leg O(n·(n/101)) — the q58 blowup class
-    // divided by a constant (VERDICT r11's one `weak`); with a trained
-    // K=16 quantizer, assignment is O(n·K) — K is CONFIG, independent
+    // features, q114's lifecycle on the multimodal feature space. With
+    // a trained K=16 quantizer, assignment is O(n·K) — K is CONFIG
+    // (sampled centroids, one per 101 documents, would make it
+    // O(n·(n/101)), the q58 blowup class), independent
     // of corpus size — and only the per-cell candidate lists grow with
     // the corpus (bounded by retrain/cap, the q128/q131 machinery).
     // The gate also carries its own MEASURED RECALL FLOOR (q125's
@@ -4522,14 +4383,12 @@ object QueriesLlm {
         val q = assign.filter(col("vec_id") % 37 === 0)
           .select(col("vec_id").as("qid"), col("v").as("pv"),
             col("nrm").as("pnrm"), col("cell"))
-        val w = Window.partitionBy(col("qid"))
-          .orderBy(col("sim_x1e6").desc, col("vec_id"))
-        val served = mat(q.join(assign, Seq("cell"))
-          .filter(col("vec_id") =!= col("qid"))
-          .withColumn("sim_x1e6",
-            VF.quantize1e6(VF.dot(col("pv"), col("v")) / (col("pnrm") * col("nrm"))))
-          .withColumn("rn", row_number().over(w))
-          .filter(col("rn") <= 3)
+        def top3(df: org.apache.spark.sql.DataFrame) = OperatingPoint.topK(
+          df.withColumn("sim_x1e6",
+            VF.quantize1e6(VF.dot(col("pv"), col("v")) / (col("pnrm") * col("nrm")))),
+          3, col("sim_x1e6").desc, col("vec_id"))
+        val served = mat(top3(q.join(assign, Seq("cell"))
+            .filter(col("vec_id") =!= col("qid")))
           .select(col("qid"), col("rn").cast("long").as("rn"),
             col("vec_id"), col("sim_x1e6"))) // serve rows + recall join below
         // measured recall floor: exact ground truth ONLY over the
@@ -4538,40 +4397,30 @@ object QueriesLlm {
         // join must plan as a broadcast nested loop over the corpus
         // scan, never a corpus×corpus CartesianProduct — the hint is
         // honored even with autoBroadcastJoinThreshold forced off,
-        // which is exactly what the q130 plan gate forces (r12's one
-        // red test: this leg planned cartesian under the gate config).
-        val exact = broadcast(q.filter(col("qid") % 74 === 0)
+        // which is exactly what the q130 plan gate forces.
+        val exact = top3(broadcast(q.filter(col("qid") % 74 === 0)
             .drop("cell"))
           .join(e.select(col("vec_id"), col("v"), col("nrm")),
-            col("vec_id") =!= col("qid"))
-          .withColumn("sim_x1e6",
-            VF.quantize1e6(VF.dot(col("pv"), col("v")) / (col("pnrm") * col("nrm"))))
-          .withColumn("rn", row_number().over(w))
-          .filter(col("rn") <= 3)
-          .select(col("qid"), col("vec_id"))
-        val rec = mat(exact
-          .join(served.select(col("qid"), col("vec_id"))
-            .withColumn("h", lit(1)), Seq("qid", "vec_id"), "left_outer")
-          .groupBy(col("qid"))
-          .agg(count(lit(1)).as("n1"), sum(coalesce(col("h"), lit(0))).as("n2")))
-        // ABSOLUTE recall floor, enforced IN-PLAN (r12 ADVICE): the
-        // hashed numerators only catch engine/oracle ASYMMETRY — a
+            col("vec_id") =!= col("qid")))
+        val rec = mat(OperatingPoint.recall(exact, "n2" -> served)
+          .withColumnRenamed("n_exact", "n1"))
+        // ABSOLUTE recall floor, enforced IN-PLAN: the hashed
+        // numerators only catch engine/oracle ASYMMETRY — a
         // regression in the shared IvfKmeans definition shifts both
         // sides identically and still hash-matches. assert_true is the
         // absolute bar: aggregate recall@3 over the tuning sample must
         // hold 0.7 (measured: 16/21 = 0.762 at sf0.01 where the sample
-        // is 7 probes, 198/204 = 0.97 at sf0.1, 0.997 at sf1 —
-        // tmp/r12_mmrecall_sf1.log; the collapse mode this floor
-        // exists to catch — the raw-counts quantizer bug — measured
-        // 0.14/0.21), and a violation aborts EVERY materialization of
-        // the gate (Verify, bench, sweep), not just a build-time
-        // check. The 1-row floor frame broadcasts.
+        // is 7 probes, 198/204 = 0.97 at sf0.1, 0.997 at sf1; the
+        // collapse mode this floor exists to catch — the raw-counts
+        // quantizer bug — measured 0.14/0.21), and a violation aborts
+        // EVERY materialization of the gate (Verify, bench, sweep), not
+        // just a build-time check. The 1-row floor frame broadcasts.
         val floorOk = rec.agg(
           (sum(col("n2")) * 10 >= sum(col("n1")) * 7).as("floor_ok"))
         served.select(lit("serve").as("sect"), col("qid"),
             col("rn").as("n1"), col("vec_id").as("n2"), col("sim_x1e6").as("n3"))
           .unionByName(rec.select(lit("recall").as("sect"), col("qid"),
-            col("n1"), col("n2").cast("long"), lit(0L).as("n3")))
+            col("n1"), col("n2"), lit(0L).as("n3")))
           .crossJoin(broadcast(floorOk))
           .filter(isnull(assert_true(col("floor_ok"),
             lit("multimodal ANN recall@3 collapsed below the 0.7 floor"))))
@@ -4608,37 +4457,20 @@ object QueriesLlm {
            |    CAST(floor(((${dot8("q.pv", "a.v")}) / (q.pnrm * a.nrm)) * 1e6)
            |      AS BIGINT) AS sim_x1e6
            |  FROM qs q JOIN ev a ON a.cell = q.cell AND a.vec_id <> q.qid),
-           |srv AS (
-           |  SELECT qid, CAST(rn AS BIGINT) AS rn, vec_id, sim_x1e6 FROM (
-           |    SELECT qid, vec_id, sim_x1e6,
-           |      row_number() OVER (PARTITION BY qid
-           |        ORDER BY sim_x1e6 DESC, vec_id) AS rn
-           |    FROM cand)
-           |  WHERE rn <= 3),
+           |srv AS (${OperatingPoint.topKSql("cand", 3, "sim_x1e6 DESC, vec_id")}),
            |exd AS (
            |  SELECT q.qid, a.vec_id,
            |    CAST(floor(((${dot8("q.pv", "a.v")}) / (q.pnrm * a.nrm)) * 1e6)
            |      AS BIGINT) AS sim_x1e6
            |  FROM qs q JOIN ev a ON a.vec_id <> q.qid
            |  WHERE q.qid % 74 = 0),
-           |ex AS (
-           |  SELECT qid, vec_id FROM (
-           |    SELECT qid, vec_id,
-           |      row_number() OVER (PARTITION BY qid
-           |        ORDER BY sim_x1e6 DESC, vec_id) AS rn
-           |    FROM exd)
-           |  WHERE rn <= 3),
-           |rec AS (
-           |  SELECT ex.qid, count(*) AS n1,
-           |    CAST(sum(CASE WHEN s.vec_id IS NOT NULL THEN 1 ELSE 0 END)
-           |      AS BIGINT) AS n2
-           |  FROM ex LEFT JOIN srv s ON s.qid = ex.qid AND s.vec_id = ex.vec_id
-           |  GROUP BY ex.qid)
+           |ex AS (${OperatingPoint.topKSql("exd", 3, "sim_x1e6 DESC, vec_id")}),
+           |rec AS (${OperatingPoint.recallSql("ex", "n2" -> "srv")})
            |SELECT * FROM (
            |  SELECT 'serve' AS sect, qid, rn AS n1, vec_id AS n2, sim_x1e6 AS n3
            |  FROM srv
            |  UNION ALL
-           |  SELECT 'recall', qid, n1, n2, CAST(0 AS BIGINT) FROM rec)
+           |  SELECT 'recall', qid, n_exact, n2, CAST(0 AS BIGINT) FROM rec)
            |ORDER BY sect, qid, n1, n2""".stripMargin
       }),
 
@@ -4983,10 +4815,9 @@ object QueriesLlm {
     // -- INDEX GEOMETRY OPERATING POINT (K from measurement, not
     // config faith): every cell index in the engine trains at a
     // constant K (semantic 8, multimodal 16, IndexBuckets 8) that
-    // nothing measured — VERDICT r11/r12's standing item. The
-    // q125/q126 measure -> select -> serve discipline applied to the
-    // GEOMETRY itself: train a K ladder {4, 8, 16} on a HELD-OUT
-    // third of the corpus (training cost is rung-bounded, never
+    // nothing measured. The q125/q126 measure -> select -> serve
+    // discipline applied to the GEOMETRY itself: train a K ladder on a
+    // HELD-OUT third of the corpus (training cost is rung-bounded, never
     // corpus-rung×corpus), assign the FULL corpus at each rung
     // (map-side vs the K-row broadcast centroid frame), and measure
     // the occupancy integers (effective cells, max, total). The
@@ -5004,15 +4835,14 @@ object QueriesLlm {
     // uniformly and cancels against a doubled budget). Ladder rows,
     // the chosen K, and the full-corpus occupancy rollup SERVED at
     // the chosen K are all hashed; the oracle re-derives all three
-    // (three prefixed Lloyd chains), so a drift anywhere in
+    // (one prefixed Lloyd chain per rung), so a drift anywhere in
     // measure -> select -> serve fails the gate. Selection is
     // corpus-dependent by design, and the ladder is corpus-SCALED
-    // (geometric {4..256}, r13 VERDICT item 1 — the r13 arithmetic
-    // ladder {4,8,16} topped out below bench scale, so sf0.1+ only
-    // ever exercised the fallback): K=8 on the 500-vector driver
-    // corpora (mean 500/8 <= 96), a REAL above-8 selection K=64 at
-    // sf0.1 (2000/16 = 125 > 96 but 2000/64 fits), K=256 at sf1
-    // (20000/64 > 96, 20000/256 = 78 fits). Rungs above the corpus
+    // (geometric {4..256}: an arithmetic {4, 8, 16} tops out below
+    // bench scale, where only the fallback would run): K=8 on the
+    // 500-vector sf0.01 corpus (mean 500/8 <= 96), a REAL above-8
+    // selection K=64 at sf0.1 (2000/16 = 125 > 96 but 2000/64 fits),
+    // K=256 at sf1 (20000/64 > 96, 20000/256 = 78 fits). Rungs above the corpus
     // degrade honestly: seeding is rank-based (ORDER BY vec_id
     // LIMIT k in both engines), so K=256 over a 167-vector held-out
     // third trains 167 effective cells and the occupancy math stays
@@ -5027,96 +4857,94 @@ object QueriesLlm {
     // VariantLoad3.java:483-495 (cache capacity sized from the data
     // it must hold, rebuilt when outgrown — the same discipline on
     // cell geometry).
-    Q("q134_index_geometry_point",
-      (spark, dir) => {
-        import graft.operators.IvfKmeans
-        val Off = 4000L; val Iters = 2; val OccBudget = 96L
-        val Ladder = Seq(4, 8, 16, 64, 256)
-        val q = table(spark, dir, "embeddings")
-          .select(col("vec_id"), IvfKmeans.quantize(col("embedding"), Off).as("qv"))
-          .localCheckpoint(true) // 5 trainings + 5 full assignments
-        val sample = q.filter(col("vec_id") % 3 === 0)
-        val occs = Ladder.map { k =>
-          val cents = IvfKmeans.train(sample, k, Iters)
-          // full-corpus occupancy at rung k — ladder row + (if chosen)
-          // the served rollup read it, so materialize once
-          k -> IvfKmeans.assign(q, cents)
-            .groupBy(col("cid")).agg(count(lit(1)).as("n"))
-            .select(col("cid").as("cell"), col("n"))
-            .localCheckpoint(true)
-        }
-        val ladder = occs.map { case (k, o) =>
-          o.agg(count(lit(1)).as("n_cells"), max(col("n")).as("n_max"),
-              sum(col("n")).as("n_total"))
-            .select(lit(k.toLong).as("k"), col("n_cells"), col("n_max"),
-              col("n_total"))
-        }.reduce(_ unionByName _)
-          .localCheckpoint(true) // 5 rows: ladder section + decision
-        val chosen = ladder.agg(coalesce(
-          min(when(col("n_total") <= col("n_cells") * OccBudget, col("k"))),
-          lit(Ladder.max.toLong)).as("k_sel"))
-        val occAll = occs.map { case (k, o) =>
-          o.select(lit(k.toLong).as("k"), col("cell"), col("n"))
-        }.reduce(_ unionByName _)
-        ladder.select(lit("ladder").as("sect"), col("k").as("id"),
-            col("n_cells").as("n1"), col("n_max").as("n2"),
-            col("n_total").as("n3"))
-          .unionByName(chosen.select(lit("chosen").as("sect"),
-            col("k_sel").as("id"), lit(0L).as("n1"), lit(0L).as("n2"),
-            lit(0L).as("n3")))
-          .unionByName(occAll.join(broadcast(chosen), col("k") === col("k_sel"))
-            .select(lit("occ").as("sect"), col("cell").as("id"),
-              col("n").as("n1"), lit(0L).as("n2"), lit(0L).as("n3")))
-          .orderBy(col("sect"), col("id"))
-      },
-      Some {
-        import graft.operators.IvfKmeans
-        val rungs = Seq(4, 8, 16, 64, 256)
-        val chains = rungs.map { k =>
-          s"""${IvfKmeans.lloydCtes(k, 2, Dim, 4000L,
-               " WHERE vec_id % 3 = 0", pfx = s"g$k")},
-             |${IvfKmeans.spillAssignCte(s"a$k", "fq", Dim,
-               cents = s"g${k}c2", maxProbe = 1)},
-             |o$k AS (SELECT cell, count(*) AS n FROM a$k GROUP BY cell)"""
-            .stripMargin
-        }.mkString(",\n")
-        val ladSql = rungs.map(k =>
-          s"""SELECT CAST($k AS BIGINT) AS k, count(*) AS n_cells,
-             |    max(n) AS n_max, CAST(sum(n) AS BIGINT) AS n_total FROM o$k"""
-            .stripMargin).mkString("\n  UNION ALL\n  ")
-        val occSql = rungs.map(k =>
-          s"SELECT CAST($k AS BIGINT) AS k, cell, n FROM o$k")
-          .mkString("\n  UNION ALL\n  ")
-        s"""WITH fq AS (
-           |  SELECT vec_id,
-           |    list_transform(embedding,
-           |      x -> CAST(floor(CAST(x AS DOUBLE) * 1000) AS BIGINT) + 4000) AS qv
-           |  FROM embeddings),
-           |$chains,
-           |lad AS (
-           |  $ladSql),
-           |ch AS (
-           |  SELECT coalesce(min(CASE WHEN n_total <= n_cells * 96 THEN k END),
-           |    256) AS k_sel FROM lad),
-           |ou AS (
-           |  $occSql)
-           |SELECT * FROM (
-           |  SELECT 'ladder' AS sect, k AS id, n_cells AS n1, n_max AS n2,
-           |    n_total AS n3 FROM lad
-           |  UNION ALL
-           |  SELECT 'chosen', k_sel, CAST(0 AS BIGINT), CAST(0 AS BIGINT),
-           |    CAST(0 AS BIGINT) FROM ch
-           |  UNION ALL
-           |  SELECT 'occ', o.cell, o.n, CAST(0 AS BIGINT), CAST(0 AS BIGINT)
-           |  FROM ou o JOIN ch ON o.k = ch.k_sel)
-           |ORDER BY sect, id""".stripMargin
-      }),
+    {
+      val Ladder = Seq(4, 8, 16, 64, 256); val OccBudget = 96L; val Iters = 2
+      Q("q134_index_geometry_point",
+        (spark, dir) => {
+          import graft.operators.IvfKmeans
+          val Off = 4000L
+          val q = table(spark, dir, "embeddings")
+            .select(col("vec_id"), IvfKmeans.quantize(col("embedding"), Off).as("qv"))
+            .localCheckpoint(true) // 5 trainings + 5 full assignments
+          val sample = q.filter(col("vec_id") % 3 === 0)
+          val occs = Ladder.map { k =>
+            val cents = IvfKmeans.train(sample, k, Iters)
+            // full-corpus occupancy at rung k — ladder row + (if chosen)
+            // the served rollup read it, so materialize once
+            k -> IvfKmeans.assign(q, cents)
+              .groupBy(col("cid")).agg(count(lit(1)).as("n"))
+              .select(col("cid").as("cell"), col("n"))
+              .localCheckpoint(true)
+          }
+          val ladder = occs.map { case (k, o) =>
+            o.agg(count(lit(1)).as("n_cells"), max(col("n")).as("n_max"),
+                sum(col("n")).as("n_total"))
+              .select(lit(k.toLong).as("k"), col("n_cells"), col("n_max"),
+                col("n_total"))
+          }.reduce(_ unionByName _)
+            .localCheckpoint(true) // 5 rows: ladder section + decision
+          val chosen = OperatingPoint.choose(ladder, "k",
+            col("n_total") <= col("n_cells") * OccBudget, Ladder.max)
+          val occAll = occs.map { case (k, o) =>
+            o.select(lit(k.toLong).as("k"), col("cell"), col("n"))
+          }.reduce(_ unionByName _)
+          ladder.select(lit("ladder").as("sect"), col("k").as("id"),
+              col("n_cells").as("n1"), col("n_max").as("n2"),
+              col("n_total").as("n3"))
+            .unionByName(chosen.select(lit("chosen").as("sect"),
+              col("k").as("id"), lit(0L).as("n1"), lit(0L).as("n2"),
+              lit(0L).as("n3")))
+            .unionByName(occAll.join(chosen, Seq("k"))
+              .select(lit("occ").as("sect"), col("cell").as("id"),
+                col("n").as("n1"), lit(0L).as("n2"), lit(0L).as("n3")))
+            .orderBy(col("sect"), col("id"))
+        },
+        Some {
+          import graft.operators.IvfKmeans
+          val chains = Ladder.map { k =>
+            s"""${IvfKmeans.lloydCtes(k, Iters, Dim, 4000L,
+                 " WHERE vec_id % 3 = 0", pfx = s"g$k")},
+               |${IvfKmeans.spillAssignCte(s"a$k", "fq", Dim,
+                 cents = s"g${k}c$Iters", maxProbe = 1)},
+               |o$k AS (SELECT cell, count(*) AS n FROM a$k GROUP BY cell)"""
+              .stripMargin
+          }.mkString(",\n")
+          val ladSql = Ladder.map(k =>
+            s"""SELECT CAST($k AS BIGINT) AS k, count(*) AS n_cells,
+               |    max(n) AS n_max, CAST(sum(n) AS BIGINT) AS n_total FROM o$k"""
+              .stripMargin).mkString("\n  UNION ALL\n  ")
+          val occSql = Ladder.map(k =>
+            s"SELECT CAST($k AS BIGINT) AS k, cell, n FROM o$k")
+            .mkString("\n  UNION ALL\n  ")
+          s"""WITH fq AS (
+             |  SELECT vec_id,
+             |    list_transform(embedding,
+             |      x -> CAST(floor(CAST(x AS DOUBLE) * 1000) AS BIGINT) + 4000) AS qv
+             |  FROM embeddings),
+             |$chains,
+             |lad AS (
+             |  $ladSql),
+             |ch AS (${OperatingPoint.chooseSql("lad", "k",
+                s"n_total <= n_cells * $OccBudget", Ladder.max)}),
+             |ou AS (
+             |  $occSql)
+             |SELECT * FROM (
+             |  SELECT 'ladder' AS sect, k AS id, n_cells AS n1, n_max AS n2,
+             |    n_total AS n3 FROM lad
+             |  UNION ALL
+             |  SELECT 'chosen', k, CAST(0 AS BIGINT), CAST(0 AS BIGINT),
+             |    CAST(0 AS BIGINT) FROM ch
+             |  UNION ALL
+             |  SELECT 'occ', o.cell, o.n, CAST(0 AS BIGINT), CAST(0 AS BIGINT)
+             |  FROM ou o JOIN ch ON o.k = ch.k)
+             |ORDER BY sect, id""".stripMargin
+        })
+    },
 
     // -- HOT-BUCKET CAP OPERATING POINT: HotBucketCap=32
     // (DedupConfig.scala) was the last load-bearing dedup constant
-    // nothing measured — VERDICT r11/r12's standing item, and the
-    // gate artifacts/r12_semcap_lostpair.md derived the price formula
-    // for (kept pairs = C(min(m, cap), 2) of C(m, 2)). This gate
+    // nothing measured; its price is kept pairs = C(min(m, cap), 2)
+    // of C(m, 2) (artifacts/r12_semcap_lostpair.md). This gate
     // turns the formula into a measured choice, q125/q129's
     // measure -> select -> serve on the text family's cap: the q127
     // corpus (documents + exact copies of every 7th doc) is extended
@@ -5128,8 +4956,8 @@ object QueriesLlm {
     // pair recall — pairs whose full sorted shingle-hash fingerprints
     // match, Σ C(m,2) over fingerprint families, the precise recall
     // class capBands' contract promises to preserve through hot
-    // buckets (sub-1.0 near-dup loss is the separately-measured
-    // artifact, r10/r11_hotcap_quality). Ladder caps {16, 32, 64}
+    // buckets (sub-1.0 near-dup loss is measured separately,
+    // artifacts/r10_hotcap_quality.json). Ladder caps {16, 32, 64}
     // each run the capped band self-join; integer TP (same-
     // fingerprint candidate pairs) and candidate count (the O(m·cap)
     // price) are measured per rung; the SMALLEST cap meeting the 50%
@@ -5149,161 +4977,155 @@ object QueriesLlm {
     // its length, a config constant. Reference anchor:
     // VariantLoad3.java:483-495 (bound the in-flight candidate set,
     // sized from data, never the corpus).
-    Q("q135_hotcap_operating_point",
-      (spark, dir) => {
-        import graft.functions.MinhashPipeline
-        val Ladder = Seq(16, 32, 64); val FloorPct = 50L
-        val MonsterN = 48
-        val d = table(spark, dir, "documents").select("doc_id", "text")
-        // the planted flood: MonsterN exact copies of the lowest-id
-        // doc. Offset 9e8 is BY CONSTRUCTION clear of both the source
-        // ids (gen_sf key shifts reach k·1e6) and the +100000 copy
-        // plant — a colliding doc_id would make the cap windows'
-        // row_number tie-break nondeterministic (the q64 bug class)
-        val monster = d.orderBy(col("doc_id")).limit(1).select(col("text"))
-          .crossJoin(spark.range(MonsterN.toLong).toDF("i"))
-          .select((col("i") + 900000000L).as("doc_id"), col("text"))
-        val corpus = d
-          .unionByName(d.filter(col("doc_id") % 7 === 0)
-            .withColumn("doc_id", col("doc_id") + 100000L))
-          .unionByName(monster)
-        // one signature pass feeds every rung's banding + the verify
-        // sides + the fingerprint ground truth
-        val sig = signedDocsWord(corpus).localCheckpoint(true)
-        val fps = sig.select(col("doc_id"),
-            aggregate(col("hl"), lit(0L), (a, x) => (a * 31 + x) % P).as("fp"))
-          .localCheckpoint(true) // ground truth + 3 rungs' TP tagging
-        val totalTrue = fps.groupBy(col("fp")).agg(count(lit(1)).as("m"))
-          .filter(col("m") >= 2)
-          .agg(coalesce(sum(expr("m * (m - 1) DIV 2")), lit(0L))
-            .as("total_true")) // 1 row -> broadcast
-        val rungs = Ladder.map { cap =>
-          val capped = MinhashPipeline.capBands(sig, cap)
-            .localCheckpoint(true) // both sides of the self-join
-          cap -> capped.as("a").join(capped.as("b"),
-              col("a.bkey") === col("b.bkey") &&
-                col("a.grp") === col("b.grp") &&
-                col("a.doc_id") < col("b.doc_id"))
-            .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-            .distinct()
-            .localCheckpoint(true) // TP/price row + the serving verify
-        }
-        val ladder = rungs.map { case (cap, cand) =>
-          cand
-            .join(fps.select(col("doc_id").as("doc_a"), col("fp").as("fp_a")),
-              "doc_a")
-            .join(fps.select(col("doc_id").as("doc_b"), col("fp").as("fp_b")),
-              "doc_b")
-            .agg(coalesce(sum(when(col("fp_a") === col("fp_b"), 1L)
-                .otherwise(0L)), lit(0L)).as("tp"),
-              count(lit(1)).as("n_cand"))
-            .select(lit(cap.toLong).as("cap"), col("tp"), col("n_cand"))
-        }.reduce(_ unionByName _)
-          .crossJoin(broadcast(totalTrue))
-          .localCheckpoint(true) // 3 rows: ladder section + decision
-        val chosen = ladder.agg(coalesce(
-          min(when(col("tp") * 100 >= col("total_true") * FloorPct,
-            col("cap"))),
-          lit(Ladder.max.toLong)).as("cap_sel"))
-        val pairs = rungs.map { case (cap, cand) =>
-          cand
-            .join(sig.select(col("doc_id").as("doc_a"), col("hl").as("hl_a"),
-              col("sz").as("sz_a")), "doc_a")
-            .join(sig.select(col("doc_id").as("doc_b"), col("hl").as("hl_b"),
-              col("sz").as("sz_b")), "doc_b")
-            .filter(sizeRatioOk(col("sz_a"), col("sz_b")))
-            .withColumn("inter",
-              call_function("sorted_inter_count", col("hl_a"), col("hl_b")))
-            .withColumn("jacc_x1000",
-              expr("inter * 1000 DIV (sz_a + sz_b - inter)"))
-            .filter(col("jacc_x1000") >= JaccThreshold)
-            .select(lit(cap.toLong).as("cap"), col("doc_a"), col("doc_b"),
-              col("jacc_x1000"))
-        }.reduce(_ unionByName _)
-        ladder.select(lit("ladder").as("sect"), col("cap").as("id"),
-            col("tp").as("n1"), col("n_cand").as("n2"),
-            col("total_true").as("n3"))
-          .unionByName(chosen.select(lit("chosen").as("sect"),
-            col("cap_sel").as("id"), lit(0L).as("n1"), lit(0L).as("n2"),
-            lit(0L).as("n3")))
-          .unionByName(pairs.join(broadcast(chosen),
-              col("cap") === col("cap_sel"))
-            .select(lit("pair").as("sect"), col("doc_a").as("id"),
-              col("doc_b").as("n1"), col("jacc_x1000").as("n2"),
+    {
+      val Ladder = Seq(16, 32, 64); val FloorPct = 50L; val MonsterN = 48
+      Q("q135_hotcap_operating_point",
+        (spark, dir) => {
+          import graft.functions.MinhashPipeline
+          val d = table(spark, dir, "documents").select("doc_id", "text")
+          // the planted flood: MonsterN exact copies of the lowest-id
+          // doc. Offset 9e8 is BY CONSTRUCTION clear of both the source
+          // ids (gen_sf key shifts reach k·1e6) and the +100000 copy
+          // plant — a colliding doc_id would make the cap windows'
+          // row_number tie-break nondeterministic (the q64 bug class)
+          val monster = d.orderBy(col("doc_id")).limit(1).select(col("text"))
+            .crossJoin(spark.range(MonsterN.toLong).toDF("i"))
+            .select((col("i") + 900000000L).as("doc_id"), col("text"))
+          val corpus = d
+            .unionByName(d.filter(col("doc_id") % 7 === 0)
+              .withColumn("doc_id", col("doc_id") + 100000L))
+            .unionByName(monster)
+          // one signature pass feeds every rung's banding + the verify
+          // sides + the fingerprint ground truth
+          val sig = signedDocsWord(corpus).localCheckpoint(true)
+          val fps = sig.select(col("doc_id"),
+              aggregate(col("hl"), lit(0L), (a, x) => (a * 31 + x) % P).as("fp"))
+            .localCheckpoint(true) // ground truth + 3 rungs' TP tagging
+          val totalTrue = fps.groupBy(col("fp")).agg(count(lit(1)).as("m"))
+            .filter(col("m") >= 2)
+            .agg(coalesce(sum(expr("m * (m - 1) DIV 2")), lit(0L))
+              .as("total_true")) // 1 row -> broadcast
+          val rungs = Ladder.map { cap =>
+            val capped = MinhashPipeline.capBands(sig, cap)
+              .localCheckpoint(true) // both sides of the self-join
+            cap -> capped.as("a").join(capped.as("b"),
+                col("a.bkey") === col("b.bkey") &&
+                  col("a.grp") === col("b.grp") &&
+                  col("a.doc_id") < col("b.doc_id"))
+              .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
+              .distinct()
+              .localCheckpoint(true) // TP/price row + the serving verify
+          }
+          val ladder = rungs.map { case (cap, cand) =>
+            cand
+              .join(fps.select(col("doc_id").as("doc_a"), col("fp").as("fp_a")),
+                "doc_a")
+              .join(fps.select(col("doc_id").as("doc_b"), col("fp").as("fp_b")),
+                "doc_b")
+              .agg(coalesce(sum(when(col("fp_a") === col("fp_b"), 1L)
+                  .otherwise(0L)), lit(0L)).as("tp"),
+                count(lit(1)).as("n_cand"))
+              .select(lit(cap.toLong).as("cap"), col("tp"), col("n_cand"))
+          }.reduce(_ unionByName _)
+            .crossJoin(broadcast(totalTrue))
+            .localCheckpoint(true) // 3 rows: ladder section + decision
+          val chosen = OperatingPoint.choose(ladder, "cap",
+            col("tp") * 100 >= col("total_true") * FloorPct, Ladder.max)
+          val pairs = rungs.map { case (cap, cand) =>
+            cand
+              .join(sig.select(col("doc_id").as("doc_a"), col("hl").as("hl_a"),
+                col("sz").as("sz_a")), "doc_a")
+              .join(sig.select(col("doc_id").as("doc_b"), col("hl").as("hl_b"),
+                col("sz").as("sz_b")), "doc_b")
+              .filter(sizeRatioOk(col("sz_a"), col("sz_b")))
+              .withColumn("inter",
+                call_function("sorted_inter_count", col("hl_a"), col("hl_b")))
+              .withColumn("jacc_x1000",
+                expr("inter * 1000 DIV (sz_a + sz_b - inter)"))
+              .filter(col("jacc_x1000") >= JaccThreshold)
+              .select(lit(cap.toLong).as("cap"), col("doc_a"), col("doc_b"),
+                col("jacc_x1000"))
+          }.reduce(_ unionByName _)
+          ladder.select(lit("ladder").as("sect"), col("cap").as("id"),
+              col("tp").as("n1"), col("n_cand").as("n2"),
+              col("total_true").as("n3"))
+            .unionByName(chosen.select(lit("chosen").as("sect"),
+              col("cap").as("id"), lit(0L).as("n1"), lit(0L).as("n2"),
               lit(0L).as("n3")))
-          .orderBy(col("sect"), col("id"), col("n1"))
-      },
-      Some {
-        import graft.functions.MinhashPipeline.capBandsCte
-        val rungs = Seq(16, 32, 64)
-        // list_sort: minhashWordCtes' hl is distinct-but-unsorted while
-        // the engine's signedDocsWord hl is sorted by construction
-        val fold = s"""list_reduce(list_prepend(CAST(0 AS BIGINT), list_sort(hl)),
-           |      (a, x) -> (a * 31 + x) % ${TF.HashMod})""".stripMargin
-        val caps = rungs.map(cap =>
-          s"""${capBandsCte("c", cap, out = s"k$cap")},
-             |cand$cap AS (
-             |  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-             |  FROM k${cap}cap a JOIN k${cap}cap b
-             |    ON a.bkey = b.bkey AND a.grp = b.grp AND a.doc_id < b.doc_id),
-             |row$cap AS (
-             |  SELECT CAST($cap AS BIGINT) AS cap,
-             |    CAST(coalesce(sum(CASE WHEN x.fp = y.fp THEN 1 ELSE 0 END), 0)
-             |      AS BIGINT) AS tp,
-             |    count(*) AS n_cand
-             |  FROM cand$cap c
-             |  JOIN fps x ON x.doc_id = c.doc_a
-             |  JOIN fps y ON y.doc_id = c.doc_b),
-             |pr$cap AS (
-             |  SELECT CAST($cap AS BIGINT) AS cap, doc_a, doc_b, jacc_x1000
-             |  FROM (
-             |    SELECT c.doc_a, c.doc_b,
-             |      CAST(len(list_intersect(x.hl, y.hl)) AS BIGINT) * 1000
-             |        // (x.sz + y.sz - CAST(len(list_intersect(x.hl, y.hl)) AS BIGINT))
-             |        AS jacc_x1000
-             |    FROM cand$cap c
-             |    JOIN cdocs x ON x.doc_id = c.doc_a
-             |    JOIN cdocs y ON y.doc_id = c.doc_b
-             |    WHERE least(x.sz, y.sz) * 10 >= greatest(x.sz, y.sz) * 7)
-             |  WHERE jacc_x1000 >= $JaccThreshold)""".stripMargin)
-          .mkString(",\n")
-        s"""WITH m0 AS (SELECT text FROM documents ORDER BY doc_id LIMIT 1),
-           |cp AS (
-           |  SELECT doc_id, text FROM documents
-           |  UNION ALL
-           |  SELECT doc_id + 100000, text FROM documents WHERE doc_id % 7 = 0
-           |  UNION ALL
-           |  SELECT 900000000 + g.i AS doc_id, m0.text
-           |  FROM m0, generate_series(0, 47) AS g(i)),
-           |${minhashWordCtes("c", "cp")},
-           |fps AS (SELECT doc_id, $fold AS fp FROM cdocs),
-           |tt AS (
-           |  SELECT CAST(coalesce(sum(m * (m - 1) // 2), 0) AS BIGINT)
-           |    AS total_true
-           |  FROM (SELECT count(*) AS m FROM fps GROUP BY fp)
-           |  WHERE m >= 2),
-           |$caps,
-           |lad AS (
-           |  SELECT r.cap, r.tp, r.n_cand, t.total_true FROM (
-           |    SELECT * FROM row16 UNION ALL SELECT * FROM row32
-           |    UNION ALL SELECT * FROM row64) r, tt t),
-           |ch AS (
-           |  SELECT coalesce(min(CASE WHEN tp * 100 >= total_true * 50
-           |    THEN cap END), 64) AS cap_sel FROM lad),
-           |prs AS (
-           |  SELECT * FROM pr16 UNION ALL SELECT * FROM pr32
-           |  UNION ALL SELECT * FROM pr64)
-           |SELECT * FROM (
-           |  SELECT 'ladder' AS sect, cap AS id, tp AS n1, n_cand AS n2,
-           |    total_true AS n3 FROM lad
-           |  UNION ALL
-           |  SELECT 'chosen', cap_sel, CAST(0 AS BIGINT), CAST(0 AS BIGINT),
-           |    CAST(0 AS BIGINT) FROM ch
-           |  UNION ALL
-           |  SELECT 'pair', p.doc_a, p.doc_b, p.jacc_x1000, CAST(0 AS BIGINT)
-           |  FROM prs p JOIN ch ON p.cap = ch.cap_sel)
-           |ORDER BY sect, id, n1""".stripMargin
-      }),
+            .unionByName(pairs.join(chosen, Seq("cap"))
+              .select(lit("pair").as("sect"), col("doc_a").as("id"),
+                col("doc_b").as("n1"), col("jacc_x1000").as("n2"),
+                lit(0L).as("n3")))
+            .orderBy(col("sect"), col("id"), col("n1"))
+        },
+        Some {
+          import graft.functions.MinhashPipeline.capBandsCte
+          // list_sort: minhashWordCtes' hl is distinct-but-unsorted while
+          // the engine's signedDocsWord hl is sorted by construction
+          val fold = s"""list_reduce(list_prepend(CAST(0 AS BIGINT), list_sort(hl)),
+             |      (a, x) -> (a * 31 + x) % ${TF.HashMod})""".stripMargin
+          val caps = Ladder.map(cap =>
+            s"""${capBandsCte("c", cap, out = s"k$cap")},
+               |cand$cap AS (
+               |  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
+               |  FROM k${cap}cap a JOIN k${cap}cap b
+               |    ON a.bkey = b.bkey AND a.grp = b.grp AND a.doc_id < b.doc_id),
+               |row$cap AS (
+               |  SELECT CAST($cap AS BIGINT) AS cap,
+               |    CAST(coalesce(sum(CASE WHEN x.fp = y.fp THEN 1 ELSE 0 END), 0)
+               |      AS BIGINT) AS tp,
+               |    count(*) AS n_cand
+               |  FROM cand$cap c
+               |  JOIN fps x ON x.doc_id = c.doc_a
+               |  JOIN fps y ON y.doc_id = c.doc_b),
+               |pr$cap AS (
+               |  SELECT CAST($cap AS BIGINT) AS cap, doc_a, doc_b, jacc_x1000
+               |  FROM (
+               |    SELECT c.doc_a, c.doc_b,
+               |      CAST(len(list_intersect(x.hl, y.hl)) AS BIGINT) * 1000
+               |        // (x.sz + y.sz - CAST(len(list_intersect(x.hl, y.hl)) AS BIGINT))
+               |        AS jacc_x1000
+               |    FROM cand$cap c
+               |    JOIN cdocs x ON x.doc_id = c.doc_a
+               |    JOIN cdocs y ON y.doc_id = c.doc_b
+               |    WHERE least(x.sz, y.sz) * 10 >= greatest(x.sz, y.sz) * 7)
+               |  WHERE jacc_x1000 >= $JaccThreshold)""".stripMargin)
+            .mkString(",\n")
+          s"""WITH m0 AS (SELECT text FROM documents ORDER BY doc_id LIMIT 1),
+             |cp AS (
+             |  SELECT doc_id, text FROM documents
+             |  UNION ALL
+             |  SELECT doc_id + 100000, text FROM documents WHERE doc_id % 7 = 0
+             |  UNION ALL
+             |  SELECT 900000000 + g.i AS doc_id, m0.text
+             |  FROM m0, generate_series(0, ${MonsterN - 1}) AS g(i)),
+             |${minhashWordCtes("c", "cp")},
+             |fps AS (SELECT doc_id, $fold AS fp FROM cdocs),
+             |tt AS (
+             |  SELECT CAST(coalesce(sum(m * (m - 1) // 2), 0) AS BIGINT)
+             |    AS total_true
+             |  FROM (SELECT count(*) AS m FROM fps GROUP BY fp)
+             |  WHERE m >= 2),
+             |$caps,
+             |lad AS (
+             |  SELECT r.cap, r.tp, r.n_cand, t.total_true FROM (
+             |    ${Ladder.map(c => s"SELECT * FROM row$c").mkString(" UNION ALL ")}) r, tt t),
+             |ch AS (${OperatingPoint.chooseSql("lad", "cap",
+                s"tp * 100 >= total_true * $FloorPct", Ladder.max)}),
+             |prs AS (
+             |  ${Ladder.map(c => s"SELECT * FROM pr$c").mkString(" UNION ALL ")})
+             |SELECT * FROM (
+             |  SELECT 'ladder' AS sect, cap AS id, tp AS n1, n_cand AS n2,
+             |    total_true AS n3 FROM lad
+             |  UNION ALL
+             |  SELECT 'chosen', cap, CAST(0 AS BIGINT), CAST(0 AS BIGINT),
+             |    CAST(0 AS BIGINT) FROM ch
+             |  UNION ALL
+             |  SELECT 'pair', p.doc_a, p.doc_b, p.jacc_x1000, CAST(0 AS BIGINT)
+             |  FROM prs p JOIN ch ON p.cap = ch.cap)
+             |ORDER BY sect, id, n1""".stripMargin
+        })
+    },
 
     // -- MULTIMODAL INDEX COMPACTION + RETRACTION: the remaining
     // lifecycle legs on q133's index, completing the third family's

@@ -218,22 +218,30 @@ class PlanAssertionsSpec extends SparkSpec {
   }
 
   test("q134: geometry ladder decision rides as a broadcast — no corpus re-key, no cartesian") {
-    // the rung occupancies and ladder rows are materialized behind
-    // localCheckpoints (each is K-row scale); the visible plan is the
-    // decision + served-rollup assembly. The chosen-K frame is 1 row
-    // and must join the tagged occupancy union as a broadcast, never
-    // re-keying anything.
+    // every operating-point gate serves through OperatingPoint.choose's
+    // 1-row frame, which must join or cross-join serving as a
+    // broadcast; q125/q126's exact tuning leg is a non-equi join whose
+    // sample side is broadcast. With the threshold forced off only
+    // those hints decide, so a lost hint plans a CartesianProduct.
+    // q134's rung occupancies and ladder rows are materialized behind
+    // localCheckpoints (each is K-row scale), so its visible plan is
+    // the decision + served-rollup assembly, which re-keys nothing.
     val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      val p = plan("q134_index_geometry_point")
-      assert(!p.contains("CartesianProduct"), p)
-      assert(p.contains("BroadcastHashJoin") || p.contains("BroadcastNestedLoopJoin"),
-        "the 1-row chosen-K frame must broadcast into the serving filter\n" + p)
-      val badKeys = "Exchange hashpartitioning\\(([^)]*)".r
-        .findAllMatchIn(p).map(_.group(1)).toList
-      assert(badKeys.isEmpty,
-        s"the decision/serve assembly needs no hash exchange at all (found: $badKeys)\n" + p)
+      for (name <- Seq("q125_ivf_operating_point", "q126_lsh_operating_point",
+             "q129_semantic_threshold_point", "q134_index_geometry_point")) {
+        val p = plan(name)
+        assert(!p.contains("CartesianProduct"), s"$name\n" + p)
+        assert(p.contains("BroadcastHashJoin") || p.contains("BroadcastNestedLoopJoin"),
+          s"$name: the 1-row chosen frame must broadcast into serving\n" + p)
+        if (name.startsWith("q134")) {
+          val badKeys = "Exchange hashpartitioning\\(([^)]*)".r
+            .findAllMatchIn(p).map(_.group(1)).toList
+          assert(badKeys.isEmpty,
+            s"the decision/serve assembly needs no hash exchange at all (found: $badKeys)\n" + p)
+        }
+      }
     } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
   }
 

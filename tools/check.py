@@ -38,6 +38,39 @@ def run_oracle(con, sf, sql):
     os.replace(tmp, cpath)  # atomic: a killed run never leaves a torn cache
     return duck
 
+def sort_frame(df):
+    """Columns sorted by name, then rows sorted by every column."""
+    df = df[sorted(df.columns)]
+    return df.sort_values(by=list(df.columns)).reset_index(drop=True)
+
+
+def dtypes(df):
+    """Column dtypes in column-name order."""
+    return list(df[sorted(df.columns)].dtypes.astype(str))
+
+
+def compare(a, b, names=('spark', 'duck')):
+    """Compare two result frames as the oracle gate does: columns sorted
+    by name, rows sorted, values stringified. Returns None when they
+    match, else the failure report; `names` label the two sides."""
+    na, nb = names
+    if sorted(a.columns) != sorted(b.columns):
+        return f'SCHEMA-MISMATCH {na}={sorted(a.columns)} {nb}={sorted(b.columns)}'
+    a, b = sort_frame(a), sort_frame(b)
+    if len(a) != len(b):
+        return f'ROWCOUNT {na}={len(a)} {nb}={len(b)}'
+    sa, sb = a.astype(str), b.astype(str)
+    if sa.equals(sb):
+        return None
+    diff = (sa != sb).any(axis=1)
+    lines = [f'VALUE-MISMATCH {int(diff.sum())}/{len(a)} rows differ',
+             f'  {na} dtypes: {dict(a.dtypes.astype(str))}',
+             f'  {nb} dtypes: {dict(b.dtypes.astype(str))}']
+    for i in diff[diff].index[:3]:
+        lines.append(f'  row {i}: {na}={a.loc[i].to_dict()} {nb}={b.loc[i].to_dict()}')
+    return '\n'.join(lines)
+
+
 def main():
     sf = sys.argv[1] if len(sys.argv) > 1 else '/root/testdata/sf0.01'
     out = sys.argv[2] if len(sys.argv) > 2 else '/root/repo/tmp/verify_out'
@@ -63,35 +96,16 @@ def main():
             print(f'{name}: SPARK-MISSING {e}')
             n_fail += 1
             continue
-        s = spark[sorted(spark.columns)]
-        d = duck[sorted(duck.columns)]
-        if list(s.columns) != list(d.columns):
-            print(f'{name}: SCHEMA-MISMATCH spark={list(s.columns)} duck={list(d.columns)}')
-            n_fail += 1
-            continue
-        s = s.sort_values(by=list(s.columns)).reset_index(drop=True)
-        d = d.sort_values(by=list(d.columns)).reset_index(drop=True)
-        if len(s) != len(d):
-            print(f'{name}: ROWCOUNT spark={len(s)} duck={len(d)}')
-            n_fail += 1
-            continue
-        ss = s.astype(str)
-        dd = d.astype(str)
-        if not ss.equals(dd):
-            diff = (ss != dd).any(axis=1)
-            print(f'{name}: VALUE-MISMATCH {int(diff.sum())}/{len(s)} rows differ')
-            print('  spark dtypes:', dict(s.dtypes.astype(str)))
-            print('  duck  dtypes:', dict(d.dtypes.astype(str)))
-            bad = diff[diff].index[:3]
-            for i in bad:
-                print(f'  row {i}: spark={s.loc[i].to_dict()} duck={d.loc[i].to_dict()}')
+        err = compare(spark, duck)
+        if err:
+            print(f'{name}: {err}')
             n_fail += 1
             continue
         # flag dtype divergences even when values stringify equal
         dt_note = ''
-        if list(s.dtypes.astype(str)) != list(d.dtypes.astype(str)):
-            dt_note = f'  [dtypes spark={list(s.dtypes.astype(str))} duck={list(d.dtypes.astype(str))}]'
-        print(f'{name}: OK rows={len(s)}{dt_note}')
+        if dtypes(spark) != dtypes(duck):
+            dt_note = f'  [dtypes spark={dtypes(spark)} duck={dtypes(duck)}]'
+        print(f'{name}: OK rows={len(spark)}{dt_note}')
         n_ok += 1
     print(f'== {n_ok} ok, {n_fail} fail ==')
     sys.exit(1 if n_fail else 0)

@@ -17,15 +17,17 @@ object DedupConfig {
   /** Near-dup decision threshold: jaccard*1000 >= this. */
   val JaccThreshold = 700
 
-  /** Bucket count for the persistent dedup-index tables (q99's batch
-    * index, q109's streaming epochs). A CAPACITY parameter, not a
-    * tuning constant: the bucket count fixes per-bucket file size and
-    * join parallelism for the life of the table, so size it at write
-    * time as `indexBytes / ~256 MB` for the deployment corpus (a
-    * 100 TB corpus' band table wants thousands of buckets, not 8) and
-    * re-bucket via the epoch-compaction job when the index outgrows
-    * it (PLANS.md, q109 "index maintenance"). 8 suits the gate
-    * corpora. */
+  /** Seed bucket count of the persistent dedup indexes — the MinHash
+    * index's band and doc tables and the semantic index's cell table,
+    * all seeded through `Bucketed.EpochStore.seed`. A CAPACITY
+    * parameter, not a tuning constant: the bucket count fixes
+    * per-bucket file size and join parallelism for the life of the
+    * table, so size it at seed time as `indexBytes / ~256 MB` for the
+    * deployment corpus (a 100 TB corpus' band table wants thousands of
+    * buckets, not 8) and re-bucket with `EpochStore.compact` when the
+    * index outgrows it (q110/q122/q136 grow it to 16). Later commits
+    * and retractions keep whatever count the catalog holds. 8 suits the
+    * gate corpora. */
   val IndexBuckets = 8
 
   /** Hot-bucket threshold/cap for the LSH band join

@@ -45,7 +45,7 @@ object MinhashPipeline {
     * mirror. Output (doc_id, <passthru>, hl, sz, sig) — [[signedDocs]]'s
     * shape minus `lang`, so [[bandKeysOf]]/[[capBands]] compose
     * unchanged. `passthru` names extra input columns to carry through
-    * (r16: q108's class-blocked form rides its class doc-id list). */
+    * (q108's class-blocked form rides its class doc-id list). */
   def signedDocsWord(df: DataFrame, passthru: Seq[String] = Nil): DataFrame = {
     val keep = (col("doc_id") +: passthru.map(col)) :+
       TF.tokens(lower(col("text"))).as("t")
@@ -91,7 +91,7 @@ object MinhashPipeline {
        |  $bandSelects)""".stripMargin
   }
 
-  /** CLASS-level variant of [[minhashWordCtes]] (r15): signatures,
+  /** CLASS-level variant of [[minhashWordCtes]]: signatures,
     * band keys, and jaccard depend only on a document's TEXT, so docs
     * with identical text form one class and the quadratic band
     * self-join can run over class representatives (~n/10 classes on
@@ -217,9 +217,9 @@ object MinhashPipeline {
   /** Verified near-duplicate PAIRS of a signed wave against the
     * persistent bucketed index — the ENGINE side of the
     * verify-before-insert contract, one definition for the whole index
-    * lifecycle (q99 build, q109 stream, q110 compact, q112 retract;
-    * each carried an inline copy until r9 — exactly the retune-drift
-    * hazard this object exists to prevent). Shape: band-key equi-join
+    * lifecycle (q99 build, q109 stream, q110 compact, q112 retract —
+    * inline copies are exactly the retune-drift hazard this object
+    * exists to prevent). Shape: band-key equi-join
     * for candidates (the index side enters exchange-free from its
     * bucketed scan), size-ratio necessary-condition prune BEFORE the
     * intersect, then the native allocation-free two-pointer
@@ -260,7 +260,7 @@ object MinhashPipeline {
   /** HOT-BUCKET CONTROL for the wave-vs-INDEX candidate join — the
     * production form of [[verifiedDupPairs]] for copy-dense corpora.
     *
-    * The r16 scaling study (artifacts/r16_scaling_study.md) measured
+    * The scaling study (artifacts/r16_scaling_study.md) measured
     * the uncapped wave-vs-index band join as the LAST super-linear
     * candidate generator in the engine: a band bucket holding m index
     * docs pairs EVERY colliding wave doc with all m, so when exact-copy

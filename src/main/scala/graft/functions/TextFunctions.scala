@@ -188,8 +188,4 @@ object TextFunctions {
         (acc, h) => acc + (shiftright(h, b) % 2) * 2 - 1)
       when(bitSum >= 0, lit(1L << b)).otherwise(lit(0L))
     }.reduce(_ + _)
-
-  /** Hamming distance between two 16-bit values. */
-  def hamming16(a: Column, b: Column): Column =
-    bit_count(a.bitwiseXOR(b)).cast("int")
 }

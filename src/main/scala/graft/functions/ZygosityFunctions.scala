@@ -46,10 +46,6 @@ object ZygosityFunctions {
     when(total > 0, count.cast("double") * 100.0 / total.cast("double"))
       .otherwise(lit(0.0))
 
-  /** Integer percent-read as stored: round-half-up, i.e. (int)(pct+0.5). */
-  def percentReadInt(count: Column, total: Column): Column =
-    floor(percentRead(count, total) + 0.5).cast("int")
-
   /** Zygosity status ladder given a raw (double) percent, the chromosome,
     * position and sample gender. Follows
     * `Zygosity.computeZygosityStatusPseudoError`. */

@@ -4,21 +4,22 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.{VectorFunctions => VF}
+import graft.sources.Bucketed.EpochStore
 
 /** The persistent SEMANTIC dedup index — the embedding-family sibling
-  * of the minhash index lifecycle (q99 build / q109 stream / q110
-  * compact / q112 retract), as ONE definition shared by every gate
-  * that drives it (q120 incremental ingest, q122 compaction, q123
-  * retraction, q124 retrain) so a retune of the probe/verify contract
-  * can never drift the gates apart — the
-  * [[graft.functions.MinhashPipeline.acceptAgainstIndex]] discipline
-  * applied to the embedding family.
+  * of [[MinhashIndex]] (q99 build / q109 stream / q110 compact / q112
+  * retract), as ONE definition shared by every gate that drives it
+  * (q120/q132 ingest, q122/q136 compaction, q123/q136/q137 retraction,
+  * q124/q128 retrain, q133 multimodal) so a retune of the probe/verify
+  * contract can never drift the gates apart. Both index kinds keep
+  * their tables in one [[EpochStore]], which owns seeding, commit
+  * order, the current bucket count, compaction and tombstone rewrites.
   *
-  * Layout: each vector is stored in its 2 nearest TRAINED cells
-  * ([[IvfKmeans.rankCells]] spill — boundary near-dups still collide),
-  * bucketed on `cell` so every wave's candidate join enters
-  * exchange-free on the store side; centroids are trained once and
-  * FROZEN in the [[Handle]] (waves assign against frozen cells;
+  * Layout: one store table, each vector stored in its 2 nearest
+  * TRAINED cells ([[IvfKmeans.rankCells]] spill — boundary near-dups
+  * still collide), bucketed on `cell` so every wave's candidate join
+  * enters exchange-free on the store side; centroids are trained once
+  * and FROZEN in the [[Handle]] (waves assign against frozen cells;
   * retraining is the scheduled maintenance job, q124).
   *
   * 100 TB: waves shuffle only themselves (probe side), the index
@@ -35,8 +36,14 @@ object SemanticIndex {
   /** One index handle: the cell-bucketed store plus the FROZEN
     * centroid frame its waves probe against. `threshX1e6` is the
     * cosine near-dup threshold (floor(cos*1e6)). */
-  final case class Handle(spark: SparkSession, table: String, path: String,
-                          cents: DataFrame, buckets: Int, threshX1e6: Long)
+  final case class Handle(store: EpochStore, cents: DataFrame, threshX1e6: Long)
+
+  /** The one-table store `root/table`, bucketed on `cell`. Touches
+    * nothing: [[writeEpoch0]] creates it, a reader may attach to it. */
+  def store(spark: SparkSession, root: String, table: String): EpochStore =
+    EpochStore(spark, root, Seq(table -> Seq("cell")))
+
+  private def vecs(h: Handle): DataFrame = h.store.spark.table(h.store.names.head)
 
   /** Spill assignment of (vec_id, v, nrm, qv [, extra...]) rows into
     * their 2 nearest cells — the index's storage layout. `extra`
@@ -49,10 +56,8 @@ object SemanticIndex {
 
   /** Write the epoch-0 seed index (one bucketed shuffle, paid once —
     * every later wave joins it exchange-free). */
-  def writeEpoch0(h: Handle, seed: DataFrame): Unit =
-    graft.sources.Bucketed.writeBucketed(
-      spilled(h, seed).withColumn("epoch", lit(0)),
-      h.table, h.buckets, Seq("cell"), path = Some(h.path))
+  def writeEpoch0(h: Handle, seed: DataFrame, buckets: Int): Unit =
+    h.store.seed(buckets, spilled(h, seed).withColumn("epoch", lit(0)))
 
   /** The ACCEPT side of the verify-before-insert contract: wave rows
     * with NO stored neighbor at >= threshX1e6 cosine in their crank-1
@@ -66,15 +71,15 @@ object SemanticIndex {
     *
     * Precondition: wave vec_ids must be unique (or duplicate vec_id
     * rows must carry identical vectors). The anti join keeps or drops
-    * each ROW independently; the pre-r13 distinct+anti-on-vec_id
-    * shape dropped every row of a matched vec_id. All callers build
+    * each ROW independently; a distinct+anti-on-vec_id shape would
+    * drop every row of a matched vec_id. All callers build
     * waves keyed 1:1 by vec_id, where the two coincide. */
   def acceptWave(h: Handle, w: DataFrame): DataFrame = {
     val probe = IvfKmeans.rankCells(
         w.select(col("vec_id"), col("v"), col("nrm"), col("qv")),
         "qv", h.cents, 1)
       .select(col("vec_id"), col("v"), col("nrm"), col("qv"), col("cell"))
-    val idx = h.spark.table(h.table)
+    val idx = vecs(h)
       .select(col("cell").as("icell"), col("v").as("iv"), col("nrm").as("inrm"))
     // ONE anti join, cell-keyed with the cosine as residual condition:
     // a probe row is accepted iff NO stored same-cell row reaches the
@@ -97,7 +102,7 @@ object SemanticIndex {
     // plan un-checkpointed so the anti-join shape is assertable;
     // normal runs materialize — the result feeds the spill-commit AND
     // whatever count/replay the caller does
-    if (h.spark.conf.getOption("graft.planOnly").contains("true")) acc
+    if (h.store.spark.conf.getOption("graft.planOnly").contains("true")) acc
     else acc.localCheckpoint(true)
   }
 
@@ -113,11 +118,11 @@ object SemanticIndex {
     * Plan shape = [[acceptWave]]'s ONE cell-keyed ANTI join with the
     * foreignness (`ifp <> fp`) folded into the residual condition
     * (store side bucket-scan, exchange-free; probe side one cell
-    * shuffle) — gated by SemanticIndexPlanSpec. The pre-r15 form
-    * counted foreign covers with an inner join + (vec_id, fp)
-    * aggregate, which materialized every (probe, cover) pair: a flood
-    * class parked in one cell cost O(m^2) PAIR ROWS there plus an
-    * aggregate exchange. The selection only ever consumed
+    * shuffle) — gated by SemanticIndexPlanSpec. Counting foreign
+    * covers with an inner join + (vec_id, fp) aggregate would
+    * materialize every (probe, cover) pair: a flood class parked in
+    * one cell costs O(m^2) PAIR ROWS there plus an aggregate
+    * exchange. The selection only ever consumes
     * `n_foreign = 0`, i.e. existence — the anti join short-circuits
     * each probe row at its FIRST foreign cover, materializes nothing,
     * and drops the aggregate shuffle entirely (the per-probe worst
@@ -127,21 +132,21 @@ object SemanticIndex {
     *
     * Precondition: probe vectors must already be IN the store (each
     * probe's own spilled copy guarantees it has >=1 cover). The anti
-    * join keeps any probe row with NO qualifying cover at all — the
-    * pre-r15 inner-join form silently DROPPED cover-less probes, and
-    * the two shapes agree only under the self-cover invariant (which
+    * join keeps any probe row with NO qualifying cover at all — an
+    * inner-join form silently DROPS cover-less probes, and the two
+    * shapes agree only under the self-cover invariant (which
     * every current caller satisfies: q137 probes rows selected from
     * the store itself, and the flood-corpus equivalence spec exercises
     * exactly that regime). A caller probing store-external vectors
     * would see uncovered probes classified as "self-covered-only" —
-    * decide keep-vs-drop explicitly there rather than assuming the old
+    * decide keep-vs-drop explicitly there rather than assuming
     * covered-probes-only semantics. */
   def selfCoveredOnly(h: Handle, probe: DataFrame): DataFrame = {
     val p = IvfKmeans.rankCells(
         probe.select(col("vec_id"), col("fp"), col("v"), col("nrm"),
           col("qv")), "qv", h.cents, 1)
       .select(col("vec_id"), col("fp"), col("v"), col("nrm"), col("cell"))
-    val idx = h.spark.table(h.table)
+    val idx = vecs(h)
       .select(col("cell").as("icell"), col("fp").as("ifp"),
         col("v").as("iv"), col("nrm").as("inrm"))
     p.join(idx,
@@ -152,21 +157,15 @@ object SemanticIndex {
       .select(col("vec_id"), col("fp"))
   }
 
-  /** Commit an accepted frame as `epoch`: spill-assign and append.
-    * `buckets` must match the table's CURRENT bucket spec (it changes
-    * across a q122 compaction). */
-  def commit(h: Handle, acc: DataFrame, epoch: Int,
-             buckets: Int): Unit = {
-    graft.sources.Bucketed.writeBucketed(
-      spilled(h, acc).withColumn("epoch", lit(epoch)),
-      h.table, buckets, Seq("cell"), mode = "append", path = Some(h.path))
-    h.spark.catalog.refreshByPath(h.path)
-  }
+  /** Commit an accepted frame as `epoch`: spill-assign and append at
+    * the store's current bucket count. */
+  def commit(h: Handle, acc: DataFrame, epoch: Int): Unit =
+    h.store.commit(spilled(h, acc).withColumn("epoch", lit(epoch)))
 
   /** The gate rollup: per-epoch distinct-vector count + id sum (each
     * vector has 2 spill rows; distinct collapses them). */
   def rollup(h: Handle): DataFrame =
-    h.spark.table(h.table).select(col("epoch"), col("vec_id")).distinct()
+    vecs(h).select(col("epoch"), col("vec_id")).distinct()
       .groupBy(col("epoch"))
       .agg(count(lit(1)).as("n_vecs"), sum(col("vec_id")).as("sum_id"))
       .orderBy(col("epoch"))
@@ -177,17 +176,9 @@ object SemanticIndex {
     * can reject a future wave. Run at an epoch barrier; at 100 TB the
     * same tombstone frame can instead be anti-joined per wave until
     * the next compaction physically purges it (q112's note).
-    *
-    * `buckets` must match the table's CURRENT bucket spec, same as
-    * [[commit]]: an external `Bucketed.compact` (q122) grows the
-    * bucket count without updating the Handle, so a retract keyed off
-    * stale `h.buckets` would silently shrink the spec back. Callers
-    * that never compacted pass nothing (defaults to `h.buckets`). */
-  def retract(h: Handle, tombstones: DataFrame,
-              buckets: Int = -1): Unit =
-    graft.sources.Bucketed.replaceWith(h.spark, h.table,
-      h.spark.table(h.table).join(tombstones, Seq("vec_id"), "left_anti"),
-      if (buckets > 0) buckets else h.buckets, Seq("cell"), h.path)
+    * `tombstones` has the one column `vec_id`. */
+  def retract(h: Handle, tombstones: DataFrame): Unit =
+    h.store.retract(tombstones)
 
   /** The DISTINCT committed vectors of the store with their quantized
     * coordinates recomputed from the stored doubles (bit-identical to
@@ -195,7 +186,7 @@ object SemanticIndex {
     * the input a retrain (q124) consumes. Keeps (epoch, vec_id, v,
     * nrm, qv). */
   def committedVectors(h: Handle, offset: Long): DataFrame =
-    h.spark.table(h.table)
+    vecs(h)
       .select(col("epoch"), col("vec_id"), col("v"), col("nrm"))
       .distinct()
       .withColumn("qv", transform(col("v"),
@@ -205,8 +196,8 @@ object SemanticIndex {
     * design defers to (q110's compaction analog for cell geometry):
     * train fresh centroids on the committed corpus, spill-reassign
     * every stored vector to the NEW cells, and swap the store
-    * crash-safely. Returns the NEW handle (new frozen centroids, new
-    * bucket count) that subsequent waves must probe with. Epoch
+    * crash-safely at `buckets`. Returns the NEW handle (new frozen
+    * centroids) that subsequent waves must probe with. Epoch
     * labels survive reassignment — provenance is orthogonal to
     * geometry. */
   def retrainReassign(h: Handle, offset: Long, k: Int, iters: Int,
@@ -214,10 +205,8 @@ object SemanticIndex {
     val cm = committedVectors(h, offset).localCheckpoint(true)
     val cents = IvfKmeans.train(cm.select(col("vec_id"), col("qv")), k, iters)
       .localCheckpoint(true)
-    val h2 = h.copy(cents = cents, buckets = buckets)
-    graft.sources.Bucketed.replaceWith(h.spark, h.table,
-      spilled(h2, cm, extra = Seq("epoch")),
-      buckets, Seq("cell"), h.path)
+    val h2 = h.copy(cents = cents)
+    h.store.replace(buckets, spilled(h2, cm, extra = Seq("epoch")))
     h2
   }
 }

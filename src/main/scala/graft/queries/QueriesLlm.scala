@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.functions.{TextFunctions => TF, VectorFunctions => VF}
-import graft.operators.OperatingPoint
+import graft.operators.{MinhashIndex, OperatingPoint}
 
 /** Large-scale training-data pipeline operators over the `documents`
   * and `embeddings` tables: deduplication (exact, MinHash+LSH, SimHash,
@@ -32,7 +32,8 @@ object QueriesLlm {
   private val P = TF.HashMod            // 1e9+7
   private val MP = TF.MinhashPrime      // 2^31-1
   // dedup-family tuning lives in DedupConfig
-  import graft.functions.DedupConfig.{K, Bands, Rpb, JaccThreshold, sizeRatioOk}
+  import graft.functions.DedupConfig.{K, Bands, Rpb, JaccThreshold, sizeRatioOk,
+    IndexBuckets}
   private val Dim = 64                  // embedding dimensionality
   private val Planes = 8                // LSH hyperplanes
 
@@ -41,7 +42,46 @@ object QueriesLlm {
   // functions/MinhashPipeline (one definition for q99/q108/q109/q110)
   import graft.functions.MinhashPipeline.{signedDocs, signedDocsWord,
     bandKeysOf, minhashCtes, minhashWordCtes, minhashWordClassCtes,
-    verifiedDupCte, verifiedDupPairs, acceptAgainstIndex}
+    verifiedDupCte, verifiedDupPairs}
+
+  /** The corpus of the MinHash index gates (q99/q109/q110/q112/q138):
+    * a doc_id%4 subset, for the same reason as q92 — the template
+    * corpus's ~400-shingle universe makes minhash bands collide across
+    * non-similar docs (q41's documented artifact), and here every false
+    * candidate pays an exact verify; the subset keeps the gates at
+    * catalog-friendly cost without changing any operator shape.
+    * `length(text) >= 3`: for sub-3-char strings native shingle_hashes
+    * falls back to one whole-string hash (doc kept) while the oracle's
+    * 3-gram comprehension yields an empty list (doc dropped) —
+    * filtering identically on both sides ([[dedupCorpusCte]]) removes
+    * the engine asymmetry. */
+  private def dedupCorpus(spark: org.apache.spark.sql.SparkSession,
+                          dir: String): org.apache.spark.sql.DataFrame =
+    table(spark, dir, "documents")
+      .filter(col("doc_id") % 4 === 0 && length(col("text")) >= 3)
+      .select("doc_id", "lang", "text")
+
+  /** Oracle mirror of [[dedupCorpus]]: the `corpus` CTE. */
+  private val dedupCorpusCte: String =
+    """corpus AS (SELECT doc_id, lang, text FROM documents
+      |  WHERE doc_id % 4 = 0 AND len(text) >= 3)""".stripMargin
+
+  /** The two ingest waves of q109/q110 (q99's wave is `w1`): wave 1
+    * mixes exact copies of indexed docs (%20==0, +200000 — rejected vs
+    * epoch 0) with reversed-text decoys (%20==4, +300000 — accepted);
+    * wave 2 replays the SAME decoy texts under new ids (+400000 —
+    * rejected, by their epoch-1 twin or by whatever matched it) plus
+    * fresh decoys (%20==8, +500000 — accepted). */
+  private def epochWaves(corpus: org.apache.spark.sql.DataFrame)
+      : (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) = {
+    def decoys(m: Int, shift: Long) = corpus.filter(col("doc_id") % 20 === m)
+      .withColumn("doc_id", col("doc_id") + shift)
+      .withColumn("text", reverse(col("text")))
+    val w1 = corpus.filter(col("doc_id") % 20 === 0)
+      .withColumn("doc_id", col("doc_id") + 200000L)
+      .unionByName(decoys(4, 300000L))
+    (w1, decoys(4, 400000L).unionByName(decoys(8, 500000L)))
+  }
 
   /** The two-sequential-waves epoch-dedup oracle, shared VERBATIM by
     * q109 (streaming path) and q110 (batch path with a mid-pipeline
@@ -49,8 +89,7 @@ object QueriesLlm {
     * per-epoch rollup, which is exactly what makes q110's compaction
     * provably semantics-free — same oracle, different physical path. */
   private lazy val epochDedupOracle: String =
-    s"""WITH corpus AS (SELECT doc_id, lang, text FROM documents
-       |  WHERE doc_id % 4 = 0 AND len(text) >= 3),
+    s"""WITH $dedupCorpusCte,
        |w1 AS (
        |  SELECT doc_id + 200000 AS doc_id, lang, text FROM corpus WHERE doc_id % 20 = 0
        |  UNION ALL
@@ -330,13 +369,12 @@ object QueriesLlm {
   // dot) instead of three (dot + both norms) — algebraically identical
   // doubles (sqrt of the same fold, same multiply order), ~3x cheaper.
   // This mirrors the engine, which precomputes `nrm` per vector
-  // (SemanticIndex.acceptWave). r11: q128's sf1 oracle was the one
-  // sweep timeout (>900s); the per-pair norm recomputation was the
-  // dominant term.
+  // (SemanticIndex.acceptWave). Per-pair norm recomputation was the
+  // dominant term of q128's sf1 oracle (>900 s).
   // `qv` rides INTO the materialized ${d}p so the accept CTE $a reads
   // it back from there — the probe spill-assignment $p is scanned
-  // exactly once per wave (r11 ADVICE: $a's direct re-read of $p let
-  // DuckDB evaluate the assignment twice)
+  // exactly once per wave ($a re-reading $p directly lets DuckDB
+  // evaluate the assignment twice)
   private def semWaveCte(p: String, idx: String, d: String, a: String) =
     s"""${d}p AS MATERIALIZED (
        |  SELECT vec_id, v, qv, cell, sqrt(${normSqSql("v")}) AS nrm FROM $p),
@@ -1944,54 +1982,28 @@ object QueriesLlm {
     // reversed-text decoys (%20==4 → shingle sets differ; band
     // collisions, if any, must die in the verify). The oracle replays
     // index build + wave + banding + verify from scratch in DuckDB.
-    //
-    // The gate runs on a doc_id%4 corpus subset for the same reason as
-    // q92: the template corpus's ~400-shingle universe makes minhash
-    // bands collide across non-similar docs (q41's documented
-    // artifact), and here every false candidate pays an
-    // array_intersect — the subset keeps the gate at catalog-friendly
-    // cost without changing any operator shape.
+    // The corpus is the shared doc_id%4 subset (`dedupCorpus`).
     Q("q99_incremental_dedup",
       (spark, dir) => {
-        val docPath = s"${QueriesSources.FixtureDir}/dedup_index_docs"
-        val bandPath = s"${QueriesSources.FixtureDir}/dedup_index_bands"
-        spark.sql("DROP TABLE IF EXISTS graft_q99_docs")
-        spark.sql("DROP TABLE IF EXISTS graft_q99_bands")
-        Fixtures.rmrf(new java.io.File(docPath))
-        Fixtures.rmrf(new java.io.File(bandPath))
-        // shingle-hash lists + signatures via the shared signedDocs /
-        // bandKeysOf front end (hl SORTED for the native two-pointer
+        val corpus = dedupCorpus(spark, dir)
+        // the index is the shared MinhashIndex store; shingle-hash
+        // lists + signatures via the shared signedDocs / bandKeysOf
+        // front end (hl SORTED for the native two-pointer
         // `sorted_inter_count` verify — allocation-free, codegen; ~3x
         // over array_intersect on the candidate-pair loop; no shingle
-        // strings, no bitmap dictionary).
-        // length(text) >= 3 is mirrored in the oracle's corpus CTE: for
-        // sub-3-char strings native shingle_hashes falls back to one
-        // whole-string hash (doc kept) while the oracle's 3-gram
-        // comprehension yields an empty list (doc dropped) — filtering
-        // identically on both sides removes the engine asymmetry.
-        val corpus = table(spark, dir, "documents")
-          .filter(col("doc_id") % 4 === 0 && length(col("text")) >= 3)
-          .select("doc_id", "lang", "text")
-        val index = signedDocs(corpus).localCheckpoint(true) // docs write + bands write
-        graft.sources.Bucketed.writeBucketed(index.select("doc_id", "hl", "sz"),
-          "graft_q99_docs", graft.functions.DedupConfig.IndexBuckets,
-          Seq("doc_id"), path = Some(docPath))
-        graft.sources.Bucketed.writeBucketed(bandKeysOf(index),
-          "graft_q99_bands", graft.functions.DedupConfig.IndexBuckets,
-          Seq("bkey"), path = Some(bandPath))
-        spark.catalog.refreshByPath(docPath)
-        spark.catalog.refreshByPath(bandPath)
-        // ---- the ingest wave (exact copies + reversed decoys)
-        val wave = corpus.filter(col("doc_id") % 20 === 0)
-          .withColumn("doc_id", col("doc_id") + 200000L)
-          .unionByName(corpus.filter(col("doc_id") % 20 === 4)
-            .withColumn("doc_id", col("doc_id") + 300000L)
-            .withColumn("text", reverse(col("text"))))
+        // strings, no bitmap dictionary)
+        val idx = MinhashIndex.store(spark, s"${Fixtures.scratchRoot}/dedupindex",
+          "graft_q99")
+        MinhashIndex.seed(idx, IndexBuckets,
+          signedDocs(corpus).localCheckpoint(true)) // docs write + bands write
+        // ---- the ingest wave (exact copies + reversed decoys): q109's wave 1
+        val (wave, _) = epochWaves(corpus)
         val wsig = signedDocs(wave).localCheckpoint(true) // bands + verify + rollup
         // candidate band join + size-ratio prune + native
         // sorted_inter_count verify — the shared engine-side block
         // (functions/MinhashPipeline), one definition with q109/q110/q112
-        val verified = verifiedDupPairs(wsig, "graft_q99_docs", "graft_q99_bands")
+        val verified = verifiedDupPairs(wsig, MinhashIndex.docs(idx),
+          MinhashIndex.bands(idx))
         wsig.select(col("doc_id"), col("lang"))
           .join(verified.groupBy(col("w_id").as("doc_id"))
             .agg(count(lit(1)).as("n_matches"), min(col("idx_id")).as("first_match")),
@@ -2004,8 +2016,7 @@ object QueriesLlm {
       },
       Some {
         // shingle/minhash/band replay via the shared minhashCtes mirror
-        s"""WITH corpus AS (SELECT doc_id, lang, text FROM documents
-           |  WHERE doc_id % 4 = 0 AND len(text) >= 3),
+        s"""WITH $dedupCorpusCte,
            |wave AS (
            |  SELECT doc_id + 200000 AS doc_id, lang, text FROM corpus WHERE doc_id % 20 = 0
            |  UNION ALL
@@ -2480,56 +2491,27 @@ object QueriesLlm {
     // against the committed index, so even a whole-wave replay AFTER
     // its epoch committed re-accepts nothing (every novelty now
     // matches its own epoch entry) — the q91 pass-2-adds-0-rows
-    // contract applied to the epoch index. r17 (VERDICT r16 item 1):
-    // the proof of that leg — a commit-level re-commit and a
-    // checkpoint-cleared whole-wave replay, both required to add 0 —
-    // used to run INSIDE this gate every bench pass, re-deriving all
-    // of wave 1 (2 extra micro-batches + 2 no-op commits, ~4.3 s of
-    // the row's ~9 s wall, artifacts/r16_q109_attrib.md) to prove a
-    // property that does not depend on the corpus. It is now pinned
-    // once per build by `StreamReplaySpec` (replay acceptance == 0
-    // and staged re-commit == 0 against the committed index this
-    // query leaves on disk); the computed result is unchanged — the
-    // replay legs added 0 rows by construction.
+    // contract applied to the epoch index. That property does not
+    // depend on the corpus, so it is pinned once per build by
+    // `StreamReplaySpec` (replay acceptance == 0 and staged re-commit
+    // == 0 against the committed index this query leaves on disk),
+    // not re-derived per bench pass; replay legs add 0 rows by
+    // construction.
     Q("q109_stream_dedup",
       (spark, dir) => {
         import org.apache.spark.sql.streaming.Trigger
         val root = s"${Fixtures.scratchRoot}/streamdedup"
-        val docPath = s"$root/idx_docs"
-        val bandPath = s"$root/idx_bands"
-        val docTable = "graft_q109_docs"
-        val bandTable = "graft_q109_bands"
-        spark.sql(s"DROP TABLE IF EXISTS $docTable")
-        spark.sql(s"DROP TABLE IF EXISTS $bandTable")
+        // stream sources, checkpoints and stages live beside the index
         Fixtures.rmrf(new java.io.File(root))
-        // doc_id%4 subset + len>=3, exactly q99's corpus contract
-        // (both documented there: gate cost + short-doc symmetry)
-        val corpus = table(spark, dir, "documents")
-          .filter(col("doc_id") % 4 === 0 && length(col("text")) >= 3)
-          .select("doc_id", "lang", "text")
-        // ---- epoch 0: the seed index
-        val seed = signedDocs(corpus).localCheckpoint(true) // 2 writes
-        // bucket count is a CAPACITY parameter (DedupConfig scaladoc);
-        // IndexBuckets suits the gate corpora
-        val nb = graft.functions.DedupConfig.IndexBuckets
-        graft.sources.Bucketed.writeBucketed(
-          seed.select(col("doc_id"), col("lang"), col("hl"), col("sz"))
-            .withColumn("epoch", lit(0)),
-          docTable, nb, Seq("doc_id"), path = Some(docPath))
-        graft.sources.Bucketed.writeBucketed(bandKeysOf(seed),
-          bandTable, nb, Seq("bkey"), path = Some(bandPath))
+        val idx = MinhashIndex.store(spark, root, "graft_q109")
+        val corpus = dedupCorpus(spark, dir)
+        // ---- epoch 0: the seed index. The bucket count is a CAPACITY
+        // parameter (DedupConfig scaladoc); IndexBuckets suits the gate
+        // corpora
+        MinhashIndex.seed(idx, IndexBuckets,
+          signedDocs(corpus).localCheckpoint(true)) // 2 writes
         // ---- wave sources on disk (4 files each -> 2 micro-batches)
-        val w1 = corpus.filter(col("doc_id") % 20 === 0)
-          .withColumn("doc_id", col("doc_id") + 200000L)
-          .unionByName(corpus.filter(col("doc_id") % 20 === 4)
-            .withColumn("doc_id", col("doc_id") + 300000L)
-            .withColumn("text", reverse(col("text"))))
-        val w2 = corpus.filter(col("doc_id") % 20 === 4)
-          .withColumn("doc_id", col("doc_id") + 400000L)
-          .withColumn("text", reverse(col("text")))
-          .unionByName(corpus.filter(col("doc_id") % 20 === 8)
-            .withColumn("doc_id", col("doc_id") + 500000L)
-            .withColumn("text", reverse(col("text"))))
+        val (w1, w2) = epochWaves(corpus)
         w1.repartition(4).write.mode("overwrite").parquet(s"$root/src1")
         w2.repartition(4).write.mode("overwrite").parquet(s"$root/src2")
         val srcSchema = spark.read.parquet(s"$root/src1").schema
@@ -2549,7 +2531,7 @@ object QueriesLlm {
               // batchId is stable across retries -> a replayed batch
               // OVERWRITES its own staging directory (idempotent),
               // never appends a second copy
-              acceptAgainstIndex(bs, docTable, bandTable)
+              MinhashIndex.accept(idx, bs)
                 .select(col("doc_id"), col("lang"), col("hl"), col("sz"), col("sig"))
                 .write.mode("overwrite").parquet(s"$stage/batch=$batchId")
             }
@@ -2564,8 +2546,7 @@ object QueriesLlm {
           // `batch=*` glob: FileStreamSink.hasMetadata stats the
           // literal glob string, catches the FileNotFoundException,
           // and logs the full stack trace at WARN — 4 crash-lookalike
-          // traces per bench pass (one became the visible tail of the
-          // r10 driver bench artifact). Each listed dir is its own
+          // traces per bench pass. Each listed dir is its own
           // base path, so no `batch` partition column is inferred and
           // a zero-accept batch (dir with no part files) reads empty
           // under the explicit schema — glob semantics, no traces.
@@ -2590,23 +2571,12 @@ object QueriesLlm {
           // semantics. Cost: one id-only anti-join against the
           // bucketed index (exchange-free on the index side).
           val novel = staged
-            .join(spark.table(docTable).select("doc_id"), Seq("doc_id"), "left_anti")
+            .join(spark.table(MinhashIndex.docs(idx)).select("doc_id"),
+              Seq("doc_id"), "left_anti")
             .localCheckpoint(true) // 2 writes + count
-          // bands BEFORE docs: novelty is judged against the doc
-          // table, so a crash between the appends leaves bands
-          // committed but docs not — the retry re-appends both, and
-          // the duplicate band rows are absorbed by the candidate
-          // `distinct()`. The reverse order would leave committed
-          // docs with NO band entries: unfindable, silently missed
-          // duplicates forever after.
-          graft.sources.Bucketed.writeBucketed(bandKeysOf(novel),
-            bandTable, nb, Seq("bkey"), mode = "append", path = Some(bandPath))
-          graft.sources.Bucketed.writeBucketed(
-            novel.select(col("doc_id"), col("lang"), col("hl"), col("sz"))
-              .withColumn("epoch", lit(epoch)),
-            docTable, nb, Seq("doc_id"), mode = "append", path = Some(docPath))
-          spark.catalog.refreshByPath(docPath)
-          spark.catalog.refreshByPath(bandPath)
+          // bands BEFORE docs (MinhashIndex's declared order): a crash
+          // between the appends leaves no doc without its band rows
+          MinhashIndex.commit(idx, novel, epoch)
           novel.count()
         }
         runStream(1, s"$root/src1")
@@ -2616,11 +2586,7 @@ object QueriesLlm {
         // not re-proven per bench pass; see the RETRY SAFETY note.)
         runStream(2, s"$root/src2")
         commitEpoch(2)
-        spark.table(docTable)
-          .groupBy(col("epoch"), col("lang"))
-          .agg(count(lit(1)).as("n_docs"), sum(col("sz")).as("sum_sz"),
-            sum(col("doc_id")).as("sum_id"))
-          .orderBy(col("epoch"), col("lang"))
+        MinhashIndex.rollup(idx)
       },
       Some(epochDedupOracle)),
 
@@ -2628,7 +2594,7 @@ object QueriesLlm {
     // batch twin of q109 (same corpus contract, same two wave strata,
     // same epoch commits) with one difference — between the epoch-1
     // commit and wave 2, the doc and band index tables are compacted
-    // with `Bucketed.compact` (epoch file sets collapsed AND bucket
+    // by the index store (epoch file sets collapsed AND bucket
     // count doubled 8 -> 16, the capacity-growth rewrite from the
     // q109 maintenance note in PLANS.md). Wave 2 then dedups against
     // the COMPACTED index — exchange-free at the new bucket count —
@@ -2640,67 +2606,24 @@ object QueriesLlm {
     // ingestion pipeline without changing any acceptance decision.
     Q("q110_index_compaction",
       (spark, dir) => {
-        val root = s"${Fixtures.scratchRoot}/compactdedup"
-        val docPath = s"$root/idx_docs"
-        val bandPath = s"$root/idx_bands"
-        val docTable = "graft_q110_docs"
-        val bandTable = "graft_q110_bands"
-        spark.sql(s"DROP TABLE IF EXISTS $docTable")
-        spark.sql(s"DROP TABLE IF EXISTS $bandTable")
-        Fixtures.rmrf(new java.io.File(root))
-        val corpus = table(spark, dir, "documents")
-          .filter(col("doc_id") % 4 === 0 && length(col("text")) >= 3)
-          .select("doc_id", "lang", "text")
-        val nb = graft.functions.DedupConfig.IndexBuckets
+        val idx = MinhashIndex.store(spark, s"${Fixtures.scratchRoot}/compactdedup",
+          "graft_q110")
+        val corpus = dedupCorpus(spark, dir)
         // ---- epoch 0: the seed index (q109's batch shape)
-        val seed = signedDocs(corpus).localCheckpoint(true) // 2 writes
-        graft.sources.Bucketed.writeBucketed(
-          seed.select(col("doc_id"), col("lang"), col("hl"), col("sz"))
-            .withColumn("epoch", lit(0)),
-          docTable, nb, Seq("doc_id"), path = Some(docPath))
-        graft.sources.Bucketed.writeBucketed(bandKeysOf(seed),
-          bandTable, nb, Seq("bkey"), path = Some(bandPath))
-        // accepted (novel) docs of a signed wave vs the CURRENT index —
-        // the shared acceptAgainstIndex (functions/MinhashPipeline)
-        def accept(wsig: org.apache.spark.sql.DataFrame) =
-          acceptAgainstIndex(wsig, docTable, bandTable)
-            .localCheckpoint(true) // 2 writes below
-        // append must match the table's CURRENT bucket spec
-        def commit(epoch: Int, accepted: org.apache.spark.sql.DataFrame,
-                   buckets: Int): Unit = {
-          graft.sources.Bucketed.writeBucketed(
-            accepted.select(col("doc_id"), col("lang"), col("hl"), col("sz"))
-              .withColumn("epoch", lit(epoch)),
-            docTable, buckets, Seq("doc_id"), mode = "append", path = Some(docPath))
-          graft.sources.Bucketed.writeBucketed(bandKeysOf(accepted),
-            bandTable, buckets, Seq("bkey"), mode = "append", path = Some(bandPath))
-          spark.catalog.refreshByPath(docPath)
-          spark.catalog.refreshByPath(bandPath)
-        }
-        val w1 = corpus.filter(col("doc_id") % 20 === 0)
-          .withColumn("doc_id", col("doc_id") + 200000L)
-          .unionByName(corpus.filter(col("doc_id") % 20 === 4)
-            .withColumn("doc_id", col("doc_id") + 300000L)
-            .withColumn("text", reverse(col("text"))))
-        val w2 = corpus.filter(col("doc_id") % 20 === 4)
-          .withColumn("doc_id", col("doc_id") + 400000L)
-          .withColumn("text", reverse(col("text")))
-          .unionByName(corpus.filter(col("doc_id") % 20 === 8)
-            .withColumn("doc_id", col("doc_id") + 500000L)
-            .withColumn("text", reverse(col("text"))))
-        commit(1, accept(signedDocs(w1)), nb)
+        MinhashIndex.seed(idx, IndexBuckets,
+          signedDocs(corpus).localCheckpoint(true)) // 2 writes
+        // commit a wave's accepted (novel) docs vs the CURRENT index
+        def ingest(epoch: Int, wave: org.apache.spark.sql.DataFrame): Unit =
+          MinhashIndex.commit(idx,
+            MinhashIndex.accept(idx, signedDocs(wave)).localCheckpoint(true), // 2 writes
+            epoch)
+        val (w1, w2) = epochWaves(corpus)
+        ingest(1, w1)
         // ---- THE OPERATION UNDER TEST: collapse epoch file sets and
         // grow capacity 8 -> 16 buckets, at the epoch barrier
-        graft.sources.Bucketed.compact(spark, docTable, nb * 2,
-          Seq("doc_id"), docPath)
-        graft.sources.Bucketed.compact(spark, bandTable, nb * 2,
-          Seq("bkey"), bandPath)
-        commit(2, accept(signedDocs(w2)), nb * 2)
-        spark.table(docTable)
-          .groupBy(col("epoch"), col("lang"))
-          .agg(count(lit(1)).as("n_docs"), sum(col("sz")).as("sum_sz"),
-            sum(col("doc_id")).as("sum_id"))
-          .orderBy(col("epoch"), col("lang"))
+        idx.compact(IndexBuckets * 2)
+        ingest(2, w2)
+        MinhashIndex.rollup(idx)
       },
       Some(epochDedupOracle)),
 
@@ -2723,39 +2646,18 @@ object QueriesLlm {
     // the hash.
     Q("q112_index_retraction",
       (spark, dir) => {
-        val root = s"${Fixtures.scratchRoot}/retractdedup"
-        val docPath = s"$root/idx_docs"
-        val bandPath = s"$root/idx_bands"
-        val docTable = "graft_q112_docs"
-        val bandTable = "graft_q112_bands"
-        spark.sql(s"DROP TABLE IF EXISTS $docTable")
-        spark.sql(s"DROP TABLE IF EXISTS $bandTable")
-        Fixtures.rmrf(new java.io.File(root))
-        val corpus = table(spark, dir, "documents")
-          .filter(col("doc_id") % 4 === 0 && length(col("text")) >= 3)
-          .select("doc_id", "lang", "text")
-        val nb = graft.functions.DedupConfig.IndexBuckets
-        val seed = signedDocs(corpus).localCheckpoint(true) // 2 writes
-        graft.sources.Bucketed.writeBucketed(
-          seed.select(col("doc_id"), col("lang"), col("hl"), col("sz"))
-            .withColumn("epoch", lit(0)),
-          docTable, nb, Seq("doc_id"), path = Some(docPath))
-        graft.sources.Bucketed.writeBucketed(bandKeysOf(seed),
-          bandTable, nb, Seq("bkey"), path = Some(bandPath))
+        val idx = MinhashIndex.store(spark, s"${Fixtures.scratchRoot}/retractdedup",
+          "graft_q112")
+        val corpus = dedupCorpus(spark, dir)
+        MinhashIndex.seed(idx, IndexBuckets,
+          signedDocs(corpus).localCheckpoint(true)) // 2 writes
         // ---- retract R = every 10th indexed doc (doc_id % 40 == 0):
-        // tombstone anti-join + bucketed rewrite of BOTH tables (the
-        // band table must lose R's entries too, or ghosts remain)
-        val tombstones = corpus.filter(col("doc_id") % 40 === 0)
-          .select("doc_id").localCheckpoint(true) // 2 rewrites below
-        // filtered rewrite through the crash-safe staged swap
-        // (Bucketed.replaceWith): the kept set is written to a sibling
-        // path from the OLD files before anything is dropped
-        def retract(t: String, keys: Seq[String], p: String): Unit =
-          graft.sources.Bucketed.replaceWith(spark, t,
-            spark.table(t).join(tombstones, Seq("doc_id"), "left_anti"),
-            nb, keys, p)
-        retract(docTable, Seq("doc_id"), docPath)
-        retract(bandTable, Seq("bkey"), bandPath)
+        // tombstone anti-join + staged rewrite of BOTH tables (the band
+        // table must lose R's entries too, or ghosts remain); the kept
+        // set is written to a sibling path from the OLD files before
+        // anything is dropped
+        idx.retract(corpus.filter(col("doc_id") % 40 === 0)
+          .select("doc_id").localCheckpoint(true)) // 2 rewrites
         // ---- the probe wave: exact copies of RETRACTED docs (must
         // now be accepted — the observable effect of deletion) mixed
         // with exact copies of RETAINED docs (must still be rejected)
@@ -2764,23 +2666,15 @@ object QueriesLlm {
           .unionByName(corpus.filter(col("doc_id") % 40 === 20)
             .withColumn("doc_id", col("doc_id") + 700000L))
         val wsig = signedDocs(wave).localCheckpoint(true) // bands + verify + anti
-        // shared acceptAgainstIndex: index side exchange-free, verify
-        // is the native sorted_inter_count (functions/MinhashPipeline)
-        val accepted = acceptAgainstIndex(wsig, docTable, bandTable)
-        graft.sources.Bucketed.writeBucketed(
-          accepted.select(col("doc_id"), col("lang"), col("hl"), col("sz"))
-            .withColumn("epoch", lit(1)),
-          docTable, nb, Seq("doc_id"), mode = "append", path = Some(docPath))
-        spark.catalog.refreshByPath(docPath)
-        spark.table(docTable)
-          .groupBy(col("epoch"), col("lang"))
-          .agg(count(lit(1)).as("n_docs"), sum(col("sz")).as("sum_sz"),
-            sum(col("doc_id")).as("sum_id"))
-          .orderBy(col("epoch"), col("lang"))
+        // shared accept: index side exchange-free, verify is the native
+        // sorted_inter_count (functions/MinhashPipeline); the epoch-1
+        // commit appends band rows as well as docs
+        MinhashIndex.commit(idx,
+          MinhashIndex.accept(idx, wsig).localCheckpoint(true), 1) // 2 writes
+        MinhashIndex.rollup(idx)
       },
       Some(
-        s"""WITH corpus AS (SELECT doc_id, lang, text FROM documents
-           |  WHERE doc_id % 4 = 0 AND len(text) >= 3),
+        s"""WITH $dedupCorpusCte,
            |retained AS (SELECT * FROM corpus WHERE doc_id % 40 <> 0),
            |wave AS (
            |  SELECT doc_id + 600000 AS doc_id, lang, text FROM corpus WHERE doc_id % 40 = 0
@@ -3377,8 +3271,8 @@ object QueriesLlm {
     // rejected ONLY if epoch 1 actually committed, so the gate proves
     // commit visibility. A replay of wave 1 after its commit accepts
     // exactly 0 (every acceptance now self-matches its own index
-    // entry) — pinned in StreamReplaySpec since r17, not re-proven per
-    // bench pass. The oracle replays training, spill indexing, and
+    // entry) — pinned in StreamReplaySpec, not re-proven per bench
+    // pass. The oracle replays training, spill indexing, and
     // both sequential waves in SQL; the rollup hashes per-epoch
     // committed (n_vecs, sum_id). 100 TB: waves shuffle only
     // themselves (probe side), the index never re-shuffles; spill
@@ -3388,25 +3282,21 @@ object QueriesLlm {
       (spark, dir) => {
         import graft.operators.{IvfKmeans, SemanticIndex}
         val Off = 4000L; val Thresh = 400000L
-        val root = s"${Fixtures.scratchRoot}/semdedup"
-        val tbl = "graft_q120_vecs"
-        spark.sql(s"DROP TABLE IF EXISTS $tbl")
-        Fixtures.rmrf(new java.io.File(root))
         val e = table(spark, dir, "embeddings")
           .select(col("vec_id"), VF.asDouble(col("embedding")).as("v"),
             IvfKmeans.quantize(col("embedding"), Off).as("qv"))
           .withColumn("nrm", sqrt(VF.normSq(col("v"))))
         val seed = e.filter(col("vec_id") % 2 === 0)
         // rank-based seeding (IvfKmeans.seedCents): the restricted
-        // training corpus still yields 8 EFFECTIVE cells — the old
-        // vec_id < k seed silently halved this index to 4 (r9 ADVICE)
+        // training corpus still yields 8 EFFECTIVE cells — a
+        // vec_id < k seed silently halves this index to 4
         val cents = IvfKmeans.train(seed.select(col("vec_id"), col("qv")), 8, 3)
           .localCheckpoint(true)
         // the whole ingest lifecycle is the shared SemanticIndex
         // operator (one definition for q120/q122/q123/q124)
-        val h = SemanticIndex.Handle(spark, tbl, s"$root/idx_vecs", cents,
-          graft.functions.DedupConfig.IndexBuckets, Thresh)
-        SemanticIndex.writeEpoch0(h, seed)
+        val h = SemanticIndex.Handle(SemanticIndex.store(spark,
+          s"${Fixtures.scratchRoot}/semdedup", "graft_q120_vecs"), cents, Thresh)
+        SemanticIndex.writeEpoch0(h, seed, IndexBuckets)
         val w1 = e.filter(col("vec_id") % 20 === 1)
           .withColumn("vec_id", col("vec_id") + 100000L)
           .unionByName(e.filter(col("vec_id") % 10 === 0)
@@ -3415,12 +3305,12 @@ object QueriesLlm {
           .withColumn("vec_id", col("vec_id") + 300000L)
           .unionByName(e.filter(col("vec_id") % 20 === 1)
             .withColumn("vec_id", col("vec_id") + 400000L))
-        SemanticIndex.commit(h, SemanticIndex.acceptWave(h, w1), 1, h.buckets)
+        SemanticIndex.commit(h, SemanticIndex.acceptWave(h, w1), 1)
         // (replay-accepts-0 — every wave-1 acceptance self-matches its
         // own index entry, probe cell ∈ its spilled cells at cos = 1 —
         // is pinned in StreamReplaySpec rather than re-proven per
-        // bench pass; r17, see q109's RETRY SAFETY note.)
-        SemanticIndex.commit(h, SemanticIndex.acceptWave(h, w2), 2, h.buckets)
+        // bench pass; see q109's RETRY SAFETY note.)
+        SemanticIndex.commit(h, SemanticIndex.acceptWave(h, w2), 2)
         SemanticIndex.rollup(h)
       },
       Some(semanticEpochOracle)),
@@ -3529,10 +3419,6 @@ object QueriesLlm {
       (spark, dir) => {
         import graft.operators.{IvfKmeans, SemanticIndex}
         val Off = 4000L; val Thresh = 400000L
-        val root = s"${Fixtures.scratchRoot}/semcompact"
-        val tbl = "graft_q122_vecs"
-        spark.sql(s"DROP TABLE IF EXISTS $tbl")
-        Fixtures.rmrf(new java.io.File(root))
         val e = table(spark, dir, "embeddings")
           .select(col("vec_id"), VF.asDouble(col("embedding")).as("v"),
             IvfKmeans.quantize(col("embedding"), Off).as("qv"))
@@ -3540,10 +3426,9 @@ object QueriesLlm {
         val seed = e.filter(col("vec_id") % 2 === 0)
         val cents = IvfKmeans.train(seed.select(col("vec_id"), col("qv")), 8, 3)
           .localCheckpoint(true)
-        val nb = graft.functions.DedupConfig.IndexBuckets
-        val h = SemanticIndex.Handle(spark, tbl, s"$root/idx_vecs", cents,
-          nb, Thresh)
-        SemanticIndex.writeEpoch0(h, seed)
+        val h = SemanticIndex.Handle(SemanticIndex.store(spark,
+          s"${Fixtures.scratchRoot}/semcompact", "graft_q122_vecs"), cents, Thresh)
+        SemanticIndex.writeEpoch0(h, seed, IndexBuckets)
         val w1 = e.filter(col("vec_id") % 20 === 1)
           .withColumn("vec_id", col("vec_id") + 100000L)
           .unionByName(e.filter(col("vec_id") % 10 === 0)
@@ -3552,11 +3437,11 @@ object QueriesLlm {
           .withColumn("vec_id", col("vec_id") + 300000L)
           .unionByName(e.filter(col("vec_id") % 20 === 1)
             .withColumn("vec_id", col("vec_id") + 400000L))
-        SemanticIndex.commit(h, SemanticIndex.acceptWave(h, w1), 1, nb)
+        SemanticIndex.commit(h, SemanticIndex.acceptWave(h, w1), 1)
         // ---- THE OPERATION UNDER TEST: collapse epoch file sets and
         // grow capacity 8 -> 16 buckets, at the epoch barrier
-        graft.sources.Bucketed.compact(spark, tbl, nb * 2, Seq("cell"), h.path)
-        SemanticIndex.commit(h, SemanticIndex.acceptWave(h, w2), 2, nb * 2)
+        h.store.compact(IndexBuckets * 2)
+        SemanticIndex.commit(h, SemanticIndex.acceptWave(h, w2), 2)
         SemanticIndex.rollup(h)
       },
       Some(semanticEpochOracle)),
@@ -3580,10 +3465,6 @@ object QueriesLlm {
       (spark, dir) => {
         import graft.operators.{IvfKmeans, SemanticIndex}
         val Off = 4000L; val Thresh = 400000L
-        val root = s"${Fixtures.scratchRoot}/semretract"
-        val tbl = "graft_q123_vecs"
-        spark.sql(s"DROP TABLE IF EXISTS $tbl")
-        Fixtures.rmrf(new java.io.File(root))
         val e = table(spark, dir, "embeddings")
           .select(col("vec_id"), VF.asDouble(col("embedding")).as("v"),
             IvfKmeans.quantize(col("embedding"), Off).as("qv"))
@@ -3591,9 +3472,9 @@ object QueriesLlm {
         val seed = e.filter(col("vec_id") % 2 === 0)
         val cents = IvfKmeans.train(seed.select(col("vec_id"), col("qv")), 8, 3)
           .localCheckpoint(true)
-        val h = SemanticIndex.Handle(spark, tbl, s"$root/idx_vecs", cents,
-          graft.functions.DedupConfig.IndexBuckets, Thresh)
-        SemanticIndex.writeEpoch0(h, seed)
+        val h = SemanticIndex.Handle(SemanticIndex.store(spark,
+          s"${Fixtures.scratchRoot}/semretract", "graft_q123_vecs"), cents, Thresh)
+        SemanticIndex.writeEpoch0(h, seed, IndexBuckets)
         // ---- retract R = every 4th seeded vector (vec_id % 8 == 0):
         // filtered rewrite of the store via the staged swap
         val tombstones = seed.filter(col("vec_id") % 8 === 0)
@@ -3606,7 +3487,7 @@ object QueriesLlm {
           .withColumn("vec_id", col("vec_id") + 600000L)
           .unionByName(e.filter(col("vec_id") % 8 === 4)
             .withColumn("vec_id", col("vec_id") + 700000L))
-        SemanticIndex.commit(h, SemanticIndex.acceptWave(h, wave), 1, h.buckets)
+        SemanticIndex.commit(h, SemanticIndex.acceptWave(h, wave), 1)
         SemanticIndex.rollup(h)
       },
       Some {
@@ -3655,10 +3536,7 @@ object QueriesLlm {
       (spark, dir) => {
         import graft.operators.{IvfKmeans, SemanticIndex}
         val Off = 4000L; val Thresh = 400000L
-        val root = s"${Fixtures.scratchRoot}/semretrain"
         val tbl = "graft_q124_vecs"
-        spark.sql(s"DROP TABLE IF EXISTS $tbl")
-        Fixtures.rmrf(new java.io.File(root))
         val e = table(spark, dir, "embeddings")
           .select(col("vec_id"), VF.asDouble(col("embedding")).as("v"),
             IvfKmeans.quantize(col("embedding"), Off).as("qv"))
@@ -3666,35 +3544,35 @@ object QueriesLlm {
         val seed = e.filter(col("vec_id") % 2 === 0)
         val cents0 = IvfKmeans.train(seed.select(col("vec_id"), col("qv")), 8, 3)
           .localCheckpoint(true)
-        val nb = graft.functions.DedupConfig.IndexBuckets
-        val h = SemanticIndex.Handle(spark, tbl, s"$root/idx_vecs", cents0,
-          nb, Thresh)
-        SemanticIndex.writeEpoch0(h, seed)
+        val h = SemanticIndex.Handle(
+          SemanticIndex.store(spark, s"${Fixtures.scratchRoot}/semretrain", tbl),
+          cents0, Thresh)
+        SemanticIndex.writeEpoch0(h, seed, IndexBuckets)
         val w1 = e.filter(col("vec_id") % 20 === 1)
           .withColumn("vec_id", col("vec_id") + 100000L)
           .unionByName(e.filter(col("vec_id") % 10 === 0)
             .withColumn("vec_id", col("vec_id") + 200000L))
-        SemanticIndex.commit(h, SemanticIndex.acceptWave(h, w1), 1, nb)
+        SemanticIndex.commit(h, SemanticIndex.acceptWave(h, w1), 1)
         // ---- THE OPERATION UNDER TEST: retrain on the committed
         // corpus, reassign the store to the new cells, swap; waves
         // from here on probe the NEW frozen centroids
-        val h2 = SemanticIndex.retrainReassign(h, Off, 8, 3, nb * 2)
+        val h2 = SemanticIndex.retrainReassign(h, Off, 8, 3, IndexBuckets * 2)
         // (post-retrain replay idempotence — no committed vector is
         // re-accepted under the new geometry, because its self-match
         // survives any spill that includes the crank-1 cell — is a
         // STRUCTURAL property of retrainReassign, pinned by
         // SemanticIndexSpec's "keeps self-matches: replay accepts 0"
-        // test; r17 removed the per-bench-pass re-proof here, which
-        // contributed 0 rows to the rollup by construction. The old
-        // scoping note stands: a previously-REJECTED wave-1 vector MAY
-        // legitimately become acceptable under the new geometry —
-        // replay idempotence for an index means "never duplicate an
-        // existing entry", not "reproduce old rejections".)
+        // test, not re-proven per bench pass; it contributes 0 rows to
+        // the rollup by construction. Scoping note: a previously-
+        // REJECTED wave-1 vector MAY legitimately become acceptable
+        // under the new geometry — replay idempotence for an index
+        // means "never duplicate an existing entry", not "reproduce old
+        // rejections".)
         val w2 = e.filter(col("vec_id") % 20 === 11)
           .withColumn("vec_id", col("vec_id") + 300000L)
           .unionByName(e.filter(col("vec_id") % 20 === 1)
             .withColumn("vec_id", col("vec_id") + 400000L))
-        SemanticIndex.commit(h2, SemanticIndex.acceptWave(h2, w2), 2, nb * 2)
+        SemanticIndex.commit(h2, SemanticIndex.acceptWave(h2, w2), 2)
         // geometry-visible rollup: per-epoch distinct cells hash the
         // NEW cell assignment, not just membership
         spark.table(tbl).groupBy(col("epoch"))
@@ -3991,10 +3869,7 @@ object QueriesLlm {
       (spark, dir) => {
         import graft.operators.{IvfKmeans, SemanticIndex}
         val Off = 4000L; val Thresh = 400000L
-        val root = s"${Fixtures.scratchRoot}/semdrift"
         val tbl = "graft_q128_vecs"
-        spark.sql(s"DROP TABLE IF EXISTS $tbl")
-        Fixtures.rmrf(new java.io.File(root))
         val e = table(spark, dir, "embeddings")
           .select(col("vec_id"), VF.asDouble(col("embedding")).as("v"),
             IvfKmeans.quantize(col("embedding"), Off).as("qv"))
@@ -4002,10 +3877,10 @@ object QueriesLlm {
         val seed = e.filter(col("vec_id") % 2 === 0)
         val cents0 = IvfKmeans.train(seed.select(col("vec_id"), col("qv")), 8, 3)
           .localCheckpoint(true)
-        val nb = graft.functions.DedupConfig.IndexBuckets
-        val h = SemanticIndex.Handle(spark, tbl, s"$root/idx_vecs", cents0,
-          nb, Thresh)
-        SemanticIndex.writeEpoch0(h, seed)
+        val h = SemanticIndex.Handle(
+          SemanticIndex.store(spark, s"${Fixtures.scratchRoot}/semdrift", tbl),
+          cents0, Thresh)
+        SemanticIndex.writeEpoch0(h, seed, IndexBuckets)
         // the drift signal: occupancy skew over ALL store rows (spill
         // included — spill rows are what a probe actually scans)
         def skew(): (Long, Long, Long) = {
@@ -4017,7 +3892,7 @@ object QueriesLlm {
         // wave 1: in-distribution growth -> trigger must HOLD
         val w1 = e.filter(col("vec_id") % 20 === 1)
           .withColumn("vec_id", col("vec_id") + 100000L)
-        SemanticIndex.commit(h, SemanticIndex.acceptWave(h, w1), 1, nb)
+        SemanticIndex.commit(h, SemanticIndex.acceptWave(h, w1), 1)
         val (mx1, tot1, nc1) = skew()
         val fire1 = mx1 * nc1 * 2 >= tot1 * 3
         require(!fire1, s"drift trigger fired on in-distribution " +
@@ -4036,20 +3911,20 @@ object QueriesLlm {
           .withColumn("nrm", sqrt(VF.normSq(col("v"))))
           .withColumn("vec_id", col("vec_id") + 200000L)
           .select("vec_id", "v", "qv", "nrm")
-        SemanticIndex.commit(h, SemanticIndex.acceptWave(h, w2), 2, nb)
+        SemanticIndex.commit(h, SemanticIndex.acceptWave(h, w2), 2)
         val (mx2, tot2, nc2) = skew()
         val fire2 = mx2 * nc2 * 2 >= tot2 * 3
         require(fire2, s"drift trigger held after the drifted wave " +
           s"($mx2 rows max cell, $tot2 total over $nc2 cells)")
         // the decision: retrain fires ONLY because the signal crossed
-        val h2 = if (fire2) SemanticIndex.retrainReassign(h, Off, 8, 3, nb * 2)
+        val h2 = if (fire2) SemanticIndex.retrainReassign(h, Off, 8, 3, IndexBuckets * 2)
                  else h
         val (mx3, tot3, nc3) = skew() // post-retrain read (informational)
         val fire3 = mx3 * nc3 * 2 >= tot3 * 3
         // wave 3 probes whatever geometry the decision produced
         val w3 = e.filter(col("vec_id") % 20 === 11)
           .withColumn("vec_id", col("vec_id") + 300000L)
-        SemanticIndex.commit(h2, SemanticIndex.acceptWave(h2, w3), 3, nb * 2)
+        SemanticIndex.commit(h2, SemanticIndex.acceptWave(h2, w3), 3)
         // hashed output: decision rows (step 1-3: n_max/n_total =
         // occupancy max/total) + per-epoch rollup rows (step 10+epoch:
         // n_max/n_total = n_vecs/sum_id) on the final geometry
@@ -4589,11 +4464,11 @@ object QueriesLlm {
     // anti-join against the committed store (a commit-level retry and
     // a checkpoint-cleared whole-wave replay both add 0 vectors — the
     // second is also semantic: every wave-1 acceptance self-matches
-    // its own spill entry at cos = 1). r17: both proofs are pinned in
+    // its own spill entry at cos = 1). Both proofs are pinned in
     // `StreamReplaySpec` rather than re-run per bench pass (q109's
-    // RETRY SAFETY note has the accounting). Batch dirs are
-    // enumerated with the Hadoop FS API, not a `batch=*`
-    // glob (the r10 FileStreamSink WARN-trace lesson). 100 TB:
+    // RETRY SAFETY note). Batch dirs are enumerated with the Hadoop FS
+    // API, not a `batch=*` glob (q109's FileStreamSink WARN-trace
+    // note). 100 TB:
     // per-batch cost is batch-sized (probe assignment vs the 1-row
     // broadcast centroid frame + one cell-keyed join); the store pays
     // one bucketed shuffle per EPOCH at commit, never per batch.
@@ -4603,8 +4478,7 @@ object QueriesLlm {
         import graft.operators.{IvfKmeans, SemanticIndex}
         val Off = 4000L; val Thresh = 400000L
         val root = s"${Fixtures.scratchRoot}/semstream"
-        val tbl = "graft_q132_vecs"
-        spark.sql(s"DROP TABLE IF EXISTS $tbl")
+        // stream sources, checkpoints and stages live beside the index
         Fixtures.rmrf(new java.io.File(root))
         val e = table(spark, dir, "embeddings")
           .select(col("vec_id"), VF.asDouble(col("embedding")).as("v"),
@@ -4613,10 +4487,9 @@ object QueriesLlm {
         val seed = e.filter(col("vec_id") % 2 === 0)
         val cents = IvfKmeans.train(seed.select(col("vec_id"), col("qv")), 8, 3)
           .localCheckpoint(true)
-        val nb = graft.functions.DedupConfig.IndexBuckets
-        val h = SemanticIndex.Handle(spark, tbl, s"$root/idx_vecs", cents,
-          nb, Thresh)
-        SemanticIndex.writeEpoch0(h, seed)
+        val tbl = "graft_q132_vecs"
+        val h = SemanticIndex.Handle(SemanticIndex.store(spark, root, tbl), cents, Thresh)
+        SemanticIndex.writeEpoch0(h, seed, IndexBuckets)
         // q120's wave strata, verbatim (the shared-oracle contract)
         val w1 = e.filter(col("vec_id") % 20 === 1)
           .withColumn("vec_id", col("vec_id") + 100000L)
@@ -4634,9 +4507,9 @@ object QueriesLlm {
           // a fresh stream run owns its stage directory: clear it so a
           // checkpoint-cleared replay that happened to produce FEWER
           // micro-batches than the prior run could never leave stale
-          // batch= dirs for commitEpoch to union in (r11 ADVICE — today
-          // the id anti-join makes stale dirs harmless, but the
-          // invariant should be structural, not incidental)
+          // batch= dirs for commitEpoch to union in (the id anti-join
+          // makes stale dirs harmless too, but the invariant should be
+          // structural, not incidental)
           Fixtures.rmrf(new java.io.File(s"$root/stage_$epoch"))
           val q = spark.readStream.schema(srcSchema)
             .option("maxFilesPerTrigger", 2).parquet(srcPath)
@@ -4674,7 +4547,7 @@ object QueriesLlm {
             .join(spark.table(tbl).select("vec_id").distinct(),
               Seq("vec_id"), "left_anti")
             .localCheckpoint(true) // commit write + count
-          SemanticIndex.commit(h, novel, epoch, nb)
+          SemanticIndex.commit(h, novel, epoch)
           novel.count()
         }
         runStream(1, s"$root/src1")
@@ -4688,10 +4561,10 @@ object QueriesLlm {
       },
       Some(semanticEpochOracle)),
 
-    // -- MULTIMODAL PERSISTENT INDEX (build + ingest): the lifecycle
-    // decision VERDICT r11 asked for — the third feature family gets
-    // the same persistent dedup index as text (q99/q109/q110/q112)
-    // and semantic (q120/q132/q122/q123/q124), via the SAME operator:
+    // -- MULTIMODAL PERSISTENT INDEX (build + ingest): the third
+    // feature family gets the same persistent dedup index as text
+    // (q99/q109/q110/q112) and semantic (q120/q132/q122/q123/q124),
+    // via the SAME operator:
     // SemanticIndex is feature-agnostic (a byte-histogram is just a
     // vector), so build + ingest is a FEATURE-EXTRACTION swap, not new
     // index machinery — which is exactly the design thesis the mirror
@@ -4718,10 +4591,6 @@ object QueriesLlm {
       (spark, dir) => {
         import graft.operators.{IvfKmeans, SemanticIndex}
         val Thresh = 900000L
-        val root = s"${Fixtures.scratchRoot}/mmindex"
-        val tbl = "graft_q133_mm"
-        spark.sql(s"DROP TABLE IF EXISTS $tbl")
-        Fixtures.rmrf(new java.io.File(root))
         val hist = (0 until 8).map(b =>
           s"size(filter(codes, c -> c div 16 = $b))").mkString(", ")
         def feats(src: org.apache.spark.sql.DataFrame) = src
@@ -4736,9 +4605,9 @@ object QueriesLlm {
           .localCheckpoint(true) // feeds training AND the epoch-0 write
         val cents = IvfKmeans.train(seed.select(col("vec_id"), col("qv")), 8, 2)
           .localCheckpoint(true)
-        val nb = graft.functions.DedupConfig.IndexBuckets
-        val h = SemanticIndex.Handle(spark, tbl, s"$root/idx", cents, nb, Thresh)
-        SemanticIndex.writeEpoch0(h, seed)
+        val h = SemanticIndex.Handle(SemanticIndex.store(spark,
+          s"${Fixtures.scratchRoot}/mmindex", "graft_q133_mm"), cents, Thresh)
+        SemanticIndex.writeEpoch0(h, seed, IndexBuckets)
         val w1 = feats(
           d.filter(col("doc_id") % 5 === 0)
             .select((col("doc_id") + 100000L).as("vec_id"), col("text").as("txt"))
@@ -4746,9 +4615,9 @@ object QueriesLlm {
             .select((col("doc_id") + 200000L).as("vec_id"),
               upper(col("text")).as("txt"))))
         val acc1 = SemanticIndex.acceptWave(h, w1)
-        // stratum membership BY CONSTRUCTION (r12 ADVICE), not by id
-        // range: on key-shifted gen_sf corpora doc_id reaches k·1e6,
-        // so `vec_id < 200000` no longer bounds the stratum — the
+        // stratum membership BY CONSTRUCTION, not by id range: on
+        // key-shifted gen_sf corpora doc_id reaches k·1e6, so
+        // `vec_id < 200000` no longer bounds the stratum — the
         // semi-join against the planted id frame does at any scale
         val copy1 = d.filter(col("doc_id") % 5 === 0)
           .select((col("doc_id") + 100000L).as("vec_id"))
@@ -4756,7 +4625,7 @@ object QueriesLlm {
           "an exact byte-copy passed the multimodal accept gate")
         require(acc1.count() > 0L,
           "the case-flipped stratum was wholly rejected — accept path dead")
-        SemanticIndex.commit(h, acc1, 1, nb)
+        SemanticIndex.commit(h, acc1, 1)
         val w2 = feats(
           d.filter(col("doc_id") % 5 === 1)
             .select((col("doc_id") + 300000L).as("vec_id"),
@@ -4771,7 +4640,7 @@ object QueriesLlm {
           "a copy of an epoch-1 commit re-entered — commit not visible")
         require(acc2.count() > 0L,
           "the mixed-case stratum was wholly rejected — accept path dead")
-        SemanticIndex.commit(h, acc2, 2, nb)
+        SemanticIndex.commit(h, acc2, 2)
         SemanticIndex.rollup(h)
       },
       Some {
@@ -5131,7 +5000,7 @@ object QueriesLlm {
     // lifecycle legs on q133's index, completing the third family's
     // mirror (build+ingest q133 / compact+retract here / retrain is
     // geometry-only and feature-agnostic, q124). Both operations are
-    // the SAME `Bucketed`/`SemanticIndex` calls q122/q123 prove on the
+    // the SAME `EpochStore`/`SemanticIndex` calls q122/q123 prove on the
     // embedding family — which is the point: the lifecycle machinery
     // is feature-agnostic, so this gate's work is proving it against
     // byte-histogram content. Lifecycle: epoch-0 seed (every doc),
@@ -5165,10 +5034,6 @@ object QueriesLlm {
       (spark, dir) => {
         import graft.operators.{IvfKmeans, SemanticIndex}
         val Thresh = 900000L
-        val root = s"${Fixtures.scratchRoot}/mmcr"
-        val tbl = "graft_q136_mm"
-        spark.sql(s"DROP TABLE IF EXISTS $tbl")
-        Fixtures.rmrf(new java.io.File(root))
         val hist = (0 until 8).map(b =>
           s"size(filter(codes, c -> c div 16 = $b))").mkString(", ")
         def feats(src: org.apache.spark.sql.DataFrame) = src
@@ -5183,9 +5048,9 @@ object QueriesLlm {
           .localCheckpoint(true) // training + epoch-0 write
         val cents = IvfKmeans.train(seed.select(col("vec_id"), col("qv")), 8, 2)
           .localCheckpoint(true)
-        val nb = graft.functions.DedupConfig.IndexBuckets
-        val h = SemanticIndex.Handle(spark, tbl, s"$root/idx", cents, nb, Thresh)
-        SemanticIndex.writeEpoch0(h, seed)
+        val h = SemanticIndex.Handle(SemanticIndex.store(spark,
+          s"${Fixtures.scratchRoot}/mmcr", "graft_q136_mm"), cents, Thresh)
+        SemanticIndex.writeEpoch0(h, seed, IndexBuckets)
         val w1 = feats(
           d.filter(col("doc_id") % 5 === 0)
             .select((col("doc_id") + 100000L).as("vec_id"), col("text").as("txt"))
@@ -5199,13 +5064,13 @@ object QueriesLlm {
           "an exact byte-copy passed the multimodal accept gate")
         require(acc1.count() > 0L,
           "the case-flipped stratum was wholly rejected — accept path dead")
-        SemanticIndex.commit(h, acc1, 1, nb)
+        SemanticIndex.commit(h, acc1, 1)
         // ---- THE OPERATIONS UNDER TEST, both at the epoch barrier:
         // collapse epoch file sets + grow capacity nb -> 2nb, then
         // tombstone the full epoch-1 commit set (the accepted ids BY
         // CONSTRUCTION — what the store actually holds)
-        graft.sources.Bucketed.compact(spark, tbl, nb * 2, Seq("cell"), h.path)
-        SemanticIndex.retract(h, acc1.select("vec_id"), nb * 2)
+        h.store.compact(IndexBuckets * 2)
+        SemanticIndex.retract(h, acc1.select("vec_id"))
         // ---- probe wave against the compacted, retracted store
         val w2 = feats(
           d.filter(col("doc_id") % 4 === 2)
@@ -5228,7 +5093,7 @@ object QueriesLlm {
         require(nAcc == nRetr,
           s"only $nAcc of $nRetr copies of retracted content re-accepted — " +
             "ghost index rows survive retraction")
-        SemanticIndex.commit(h, acc2, 2, nb * 2)
+        SemanticIndex.commit(h, acc2, 2)
         // epoch-11 accounting row: wave-1's accept set is retracted
         // from the store, so the rollup alone would not hash it
         SemanticIndex.rollup(h).unionByName(
@@ -5279,8 +5144,8 @@ object QueriesLlm {
     // word-bigram 61-bin histograms over the byte stream tokenized at
     // whitespace — bins = (polyhash(tok_i)*31 + polyhash(tok_{i+1}))
     // % 61. Byte-level bins measurably CANNOT resolve this corpus at
-    // any width (max inter-doc cos 0.9999 at 37 byte-bigram bins —
-    // the r13 "32-bin variant" hypothesis is dead), while word
+    // any width (max inter-doc cos 0.9999 at 37 byte-bigram bins, so
+    // no narrower byte-bin variant resolves it either), while word
     // granularity measures p99 inter-doc cos 0.69, far under the
     // family threshold; 61 is prime so case variants never alias
     // (any M dividing 32*(31+1)=1024 maps case-shifted bigrams to
@@ -5321,10 +5186,6 @@ object QueriesLlm {
       (spark, dir) => {
         import graft.operators.{IvfKmeans, SemanticIndex}
         val Thresh = 900000L; val FD = 61
-        val root = s"${Fixtures.scratchRoot}/mmsel"
-        val tbl = "graft_q137_mm"
-        spark.sql(s"DROP TABLE IF EXISTS $tbl")
-        Fixtures.rmrf(new java.io.File(root))
         val histD = (0 until FD).map(b =>
           s"size(filter(bg, x -> x = $b))").mkString(", ")
         def feats(src: org.apache.spark.sql.DataFrame) = src // (vec_id, txt)
@@ -5345,16 +5206,15 @@ object QueriesLlm {
           .localCheckpoint(true) // train + epoch-0 + cover sides + probes
         val cents = IvfKmeans.train(seed.select(col("vec_id"), col("qv")), 8, 2)
           .localCheckpoint(true)
-        val nb = graft.functions.DedupConfig.IndexBuckets
-        val h = SemanticIndex.Handle(spark, tbl, s"$root/idx", cents, nb, Thresh)
+        val h = SemanticIndex.Handle(SemanticIndex.store(spark,
+          s"${Fixtures.scratchRoot}/mmsel", "graft_q137_mm"), cents, Thresh)
         // the index CARRIES the entity fingerprint as metadata (the
         // per-entity bookkeeping the reference anchor keeps) — so the
         // cover analysis reads fp off the bucket scan with no store
         // re-key, and the fingerprint-keyed tombstone derives from
         // the store itself
-        graft.sources.Bucketed.writeBucketed(
-          SemanticIndex.spilled(h, seed, Seq("fp")).withColumn("epoch", lit(0)),
-          tbl, nb, Seq("cell"), path = Some(h.path))
+        h.store.seed(IndexBuckets,
+          SemanticIndex.spilled(h, seed, Seq("fp")).withColumn("epoch", lit(0)))
         // cover analysis: each content re-probes its crank-1 cell; a
         // cover is FOREIGN iff its text fingerprint differs, and the
         // selection only needs EXISTENCE. One cell-keyed ANTI join —
@@ -5375,7 +5235,7 @@ object QueriesLlm {
           .localCheckpoint(true) // retract + probe stratum + accounting
         require(tomb.count() > 0L,
           "empty tombstone — cover analysis found no self-only entity")
-        SemanticIndex.retract(h, tomb, nb)
+        SemanticIndex.retract(h, tomb)
         // probe strata reuse the seed feature rows under shifted ids
         // (fp rides along so the epoch-2 commit keeps the store's
         // metadata schema; acceptWave itself ignores it)
@@ -5411,13 +5271,11 @@ object QueriesLlm {
           "a copy of the RETAINED control entity re-entered — over-delete")
         // epoch-2 commit keeps the fingerprint metadata (joined back
         // from the wave — acceptWave's output drops extras)
-        graft.sources.Bucketed.writeBucketed(
+        h.store.commit(
           SemanticIndex.spilled(h,
               acc2.join(wave.select(col("vec_id"), col("fp")), "vec_id"),
               Seq("fp"))
-            .withColumn("epoch", lit(2)),
-          tbl, nb, Seq("cell"), mode = "append", path = Some(h.path))
-        spark.catalog.refreshByPath(h.path)
+            .withColumn("epoch", lit(2)))
         SemanticIndex.rollup(h)
           .unionByName(tomb.agg(count(lit(1)).as("n_vecs"),
               sum(col("vec_id")).as("sum_id"))
@@ -5438,10 +5296,9 @@ object QueriesLlm {
           (1 to 61).map(i => s"$a[$i] * $b[$i]").mkString(" + ")
         val bins = (0 until 61).map(b =>
           s"CAST(len(list_filter(bg, x -> x = $b)) AS DOUBLE)").mkString(", ")
-        // r15 (the q88 playbook, VERDICT r14 item 1): the corpus
-        // carries EXACT text copies (gen_sf corpora are 10x key-shifted
-        // copies), and copies share fp, v, nrm, qv and therefore cells
-        // — so features are derived ONCE per DISTINCT text (fd) and
+        // The q88 playbook: the corpus carries EXACT text copies
+        // (gen_sf corpora are 10x key-shifted copies), and copies share
+        // fp, v, nrm, qv and therefore cells — so features are derived ONCE per DISTINCT text (fd) and
         // joined back per doc (f0), and the quadratic cover analysis
         // runs over distinct texts on BOTH sides (pd x idd: ~100x
         // fewer pairs at sf1), as a NOT EXISTS (the engine's anti-join
@@ -5532,8 +5389,8 @@ object QueriesLlm {
       }),
 
     // -- HOT-BUCKET-CONTROLLED wave-vs-INDEX accept: the production
-    // form of the index lifecycle's candidate generator. The r16
-    // scaling study (artifacts/r16_scaling_study.md) measured the
+    // form of the index lifecycle's candidate generator. The scaling
+    // study (artifacts/r16_scaling_study.md) measured the
     // UNCAPPED wave-vs-index band join of verifiedDupPairs — the
     // accept path q99/q109/q110/q112 gate — at wall ∝ scale^~1.3 on
     // the copy-dense scale-ups while the capped self-join siblings
@@ -5565,16 +5422,9 @@ object QueriesLlm {
       (spark, dir) => {
         import graft.functions.DedupConfig.HotBucketCap
         import graft.functions.MinhashPipeline.{contentFp, acceptAgainstIndexCapped}
-        val root = s"${Fixtures.scratchRoot}/idxacccap"
-        val docTable = "graft_q138_docs"
-        val bandTable = "graft_q138_bands"
-        spark.sql(s"DROP TABLE IF EXISTS $docTable")
-        spark.sql(s"DROP TABLE IF EXISTS $bandTable")
-        Fixtures.rmrf(new java.io.File(root))
-        // q99/q109/q110's corpus contract
-        val corpus = table(spark, dir, "documents")
-          .filter(col("doc_id") % 4 === 0 && length(col("text")) >= 3)
-          .select("doc_id", "lang", "text")
+        val idx = MinhashIndex.store(spark, s"${Fixtures.scratchRoot}/idxacccap",
+          "graft_q138")
+        val corpus = dedupCorpus(spark, dir)
         // flood source: first substantial doc (deterministic; 1 row,
         // read twice — seed family and wave copies)
         val fl = corpus.filter(length(col("text")) >= 50)
@@ -5586,17 +5436,11 @@ object QueriesLlm {
           .select((lit(base) + col("i")).as("doc_id"), col("lang"), col("text"))
         // seed index = corpus + a 48-copy flood family (hot at cap 32)
         val seed = corpus.unionByName(copies(700000L, 48))
-        val sig = signedDocs(seed).localCheckpoint(true)
-        val nb = graft.functions.DedupConfig.IndexBuckets
-        graft.sources.Bucketed.writeBucketed(
-          sig.select(col("doc_id"), col("lang"), col("hl"), col("sz")),
-          docTable, nb, Seq("doc_id"), path = Some(s"$root/docs"))
         // band rows carry the content fingerprint the capped join
         // splits hot buckets by — written once at commit time
-        graft.sources.Bucketed.writeBucketed(
-          bandKeysOf(sig.withColumn("sg", contentFp(col("hl"))),
-            passthru = Seq("sg")),
-          bandTable, nb, Seq("bkey"), path = Some(s"$root/bands"))
+        MinhashIndex.seed(idx, IndexBuckets,
+          signedDocs(seed).localCheckpoint(true)
+            .withColumn("sg", contentFp(col("hl"))), passthru = Seq("sg"))
         val wave = corpus.filter(col("doc_id") % 20 === 0)
           .withColumn("doc_id", col("doc_id") + 200000L) // exact copies -> reject
           .unionByName(copies(750000L, 6)) // flood re-sends -> reject THROUGH the hot bucket
@@ -5604,8 +5448,8 @@ object QueriesLlm {
             .withColumn("doc_id", col("doc_id") + 400000L)
             .withColumn("text", reverse(col("text")))) // decoys -> accept
         val wsig = signedDocs(wave).localCheckpoint(true)
-        val acc = acceptAgainstIndexCapped(wsig, docTable, bandTable,
-          HotBucketCap).localCheckpoint(true)
+        val acc = acceptAgainstIndexCapped(wsig, MinhashIndex.docs(idx),
+          MinhashIndex.bands(idx), HotBucketCap).localCheckpoint(true)
         // recall-through-the-cap proof the oracle hash cannot give:
         // the flood family's wave copies must still be FOUND (rejected)
         // even though their bucket is over-cap
@@ -5622,8 +5466,7 @@ object QueriesLlm {
       Some {
         import graft.functions.DedupConfig.HotBucketCap
         import graft.functions.MinhashPipeline.verifiedDupCappedCte
-        s"""WITH corpus AS (SELECT doc_id, lang, text FROM documents
-           |  WHERE doc_id % 4 = 0 AND len(text) >= 3),
+        s"""WITH $dedupCorpusCte,
            |fl AS (SELECT lang, text FROM corpus WHERE len(text) >= 50
            |       ORDER BY doc_id LIMIT 1),
            |seedt AS (

@@ -16,8 +16,7 @@ import org.apache.spark.sql.expressions.Window
   * deterministic genomic offsets. `fetch` reads the DNA of many
   * intervals at once: the chunk table participates in an equi-join keyed
   * by `(chr, chunk_idx)` so DNA travels to the executors that need it
-  * (never broadcast a whole genome; SURVEY §7.4.7). `getSequence(chr,
-  * from, to)` is `fetch` of one interval over the pruned chunk range.
+  * (never broadcast a whole genome; SURVEY §7.4.7).
   *
   * Parsing keeps per-line offsets without a global sort: header rows
   * (`>chr`) are interval-joined to sequence lines exactly like wig
@@ -151,17 +150,5 @@ object Fasta {
       .agg(array_join(transform(
         sort_array(collect_list(struct(col("__idx"), col("__piece")))),
         x => x("__piece")), "").as("dna"))
-  }
-
-  /** Random-access substring [from, to) 0-based: `fetch` of one literal
-    * interval over the covering chunks only. Returns (chr, seq). */
-  def getSequence(chunks: DataFrame, chr: String, from: Long, to: Long,
-                  width: Int = 10000): DataFrame = {
-    val lo = (from / width).toInt
-    val hi = ((to - 1) / width).toInt
-    val interval = chunks.sparkSession.range(1)
-      .select(lit(chr).as("chr"), lit(from + 1).as("start"), lit(to).as("stop"))
-    fetch(interval, chunks.filter(col("chr") === chr && col("chunk_idx").between(lo, hi)), width)
-      .select(col("chr"), col("dna").as("seq"))
   }
 }

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Structured Streaming re-expressions of the reference's incremental
@@ -32,64 +32,6 @@ object StreamingOps {
       .agg(count(lit(1)).as("cnt"))
       .select(col("window.start").as("window_start"),
         col("window.end").as("window_end"), col(keyCol), col("cnt"))
-
-  /** One input event for the stateful sessionizer. */
-  final case class UserEvent(userId: Long, tsMicros: Long)
-
-  /** Session assignment emitted per event. */
-  final case class SessionAssign(userId: Long, tsMicros: Long, sessionSeq: Long)
-
-  /** Per-user sessionizer state carried across micro-batches. */
-  final case class SessState(seq: Long, lastMicros: Long)
-
-  /** Stateful streaming sessionization via `flatMapGroupsWithState` —
-    * the custom-state extension point (`KeyValueGroupedDataset`) for
-    * semantics the built-in `session_window` can't express (here:
-    * emitting the per-event session label, with the session counter
-    * surviving micro-batch boundaries in the state store).
-    *
-    * Same gap rule as the batch `operators.Sessionize` (diff > gap
-    * opens a session), so for in-order delivery the labels match the
-    * batch windows exactly (asserted in `StreamingOpsSpec`). Events
-    * inside one micro-batch are sorted per user before applying the
-    * rule; LATE events (older than the user's last seen ts) would need
-    * a watermark + reordering buffer in the state — out of scope here,
-    * as the reference has no late data (SURVEY §2.10).
-    *
-    * State is O(1) per user (seq + last ts): at 100 TB the state store
-    * shuffles by user exactly like the batch window partitioning.
-    */
-  def sessionizeStream(events: Dataset[UserEvent], gapMicros: Long): Dataset[SessionAssign] = {
-    import events.sparkSession.implicits._
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-    events.groupByKey(_.userId)
-      .flatMapGroupsWithState[SessState, SessionAssign](
-        OutputMode.Update, GroupStateTimeout.NoTimeout) {
-        (user: Long, batch: Iterator[UserEvent], state: GroupState[SessState]) =>
-          var st = state.getOption.getOrElse(SessState(0L, Long.MinValue))
-          val out = batch.toSeq.sortBy(_.tsMicros).map { e =>
-            st =
-              if (st.seq == 0L || e.tsMicros - st.lastMicros > gapMicros)
-                SessState(st.seq + 1, e.tsMicros)
-              else SessState(st.seq, e.tsMicros)
-            SessionAssign(user, e.tsMicros, st.seq)
-          }
-          state.update(st)
-          out.iterator
-      }
-  }
-
-  /** Streaming exactly-once-per-key ingestion: `dropDuplicates` over a
-    * watermarked event-time column keeps per-key state only within the
-    * lateness horizon, so duplicate deliveries (at-least-once sources,
-    * replays) are dropped across micro-batches while state stays
-    * bounded — the streaming form of the exact-dedup operator (q40)
-    * and the front half of the reference's verify-before-insert load.
-    */
-  def dedupStream(events: DataFrame, tsCol: String, keys: Seq[String],
-                  lateness: String): DataFrame =
-    events.withWatermark(tsCol, lateness)
-      .dropDuplicates(keys :+ tsCol)
 
   /** Idempotent upsert of one micro-batch into an existing keyed store:
     * only rows whose key is absent are appended (the reference's

@@ -64,7 +64,7 @@ class TextVectorFunctionsSpec extends SparkSpec {
     assert(sigs(0).length == 16)
   }
 
-  test("simhash of identical token sets match; hamming16 bounds") {
+  test("simhash of identical token sets match and fit in 16 bits") {
     val df = Seq("alpha beta gamma", "gamma beta alpha", "delta epsilon zeta")
       .toDF("t")
       .withColumn("hs", transform(array_distinct(TextFunctions.tokens(lower($"t"))),
@@ -73,9 +73,6 @@ class TextVectorFunctionsSpec extends SparkSpec {
     val vals = df.collect().map(_.getLong(0))
     assert(vals(0) == vals(1)) // order-independent
     assert(vals.forall(v => v >= 0 && v < (1L << 16)))
-    val d = Seq((vals(0), vals(2))).toDF("a", "b")
-      .select(TextFunctions.hamming16($"a", $"b")).collect().head.getInt(0)
-    assert(d >= 0 && d <= 16)
   }
 
   test("langId picks the marker-majority language, und when none") {

@@ -11,7 +11,9 @@ import org.apache.spark.sql.functions._
   *  - epoch 1 holds ONLY +600000-range ids (copies of retracted docs
   *    — the observable effect of forgetting them);
   *  - no +700000-range id (copies of RETAINED docs) ever commits —
-  *    retraction must not weaken dedup against what is still indexed.
+  *    retraction must not weaken dedup against what is still indexed;
+  *  - every indexed doc, the epoch-1 commit included, has band rows —
+  *    a doc without them is unfindable by every later wave.
   */
 class IndexRetractionSpec extends SparkSpec {
 
@@ -29,5 +31,8 @@ class IndexRetractionSpec extends SparkSpec {
       .count() == 0L, "epoch 1 must hold only retracted-copy ids")
     assert(ep1.count() > 0L,
       "no retracted copy was accepted — the retraction had no observable effect")
+    val bandless = store.join(spark.table("graft_q112_bands").select("doc_id"),
+      Seq("doc_id"), "left_anti")
+    assert(bandless.count() == 0L, "an indexed doc has no band rows")
   }
 }

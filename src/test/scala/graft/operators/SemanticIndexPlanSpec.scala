@@ -19,9 +19,7 @@ class SemanticIndexPlanSpec extends SparkSpec {
   test("acceptWave: one cell-keyed anti join, store side exchange-free") {
     import spark.implicits._
     val tbl = "graft_acceptwave_planspec"
-    spark.sql(s"DROP TABLE IF EXISTS $tbl")
-    val path = s"${graft.queries.Fixtures.scratchRoot}/acceptwave_planspec"
-    graft.queries.Fixtures.rmrf(new java.io.File(path))
+    val root = s"${graft.queries.Fixtures.scratchRoot}/acceptwave_planspec"
     val e = spark.range(200).toDF("vec_id")
       .withColumn("v", transform(sequence(lit(0), lit(7)),
         i => (col("vec_id") % 17 + i).cast("double")))
@@ -30,8 +28,8 @@ class SemanticIndexPlanSpec extends SparkSpec {
     val cents = IvfKmeans.train(
       e.filter(col("vec_id") % 2 === 0).select(col("vec_id"), col("qv")),
       4, 1).localCheckpoint(true)
-    val h = SemanticIndex.Handle(spark, tbl, path, cents, 2, 400000L)
-    SemanticIndex.writeEpoch0(h, e.filter(col("vec_id") % 2 === 0))
+    val h = SemanticIndex.Handle(SemanticIndex.store(spark, root, tbl), cents, 400000L)
+    SemanticIndex.writeEpoch0(h, e.filter(col("vec_id") % 2 === 0), 2)
     val prevB = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try {
       // force the large-store shape (tiny fixtures would broadcast
@@ -87,9 +85,7 @@ class SemanticIndexPlanSpec extends SparkSpec {
     // nested loop fails here.
     import spark.implicits._
     val tbl = "graft_covers_planspec"
-    spark.sql(s"DROP TABLE IF EXISTS $tbl")
-    val path = s"${graft.queries.Fixtures.scratchRoot}/covers_planspec"
-    graft.queries.Fixtures.rmrf(new java.io.File(path))
+    val root = s"${graft.queries.Fixtures.scratchRoot}/covers_planspec"
     val e = spark.range(200).toDF("vec_id")
       .withColumn("fp", col("vec_id") % 50)
       .withColumn("v", transform(sequence(lit(0), lit(7)),
@@ -98,10 +94,9 @@ class SemanticIndexPlanSpec extends SparkSpec {
       .withColumn("qv", IvfKmeans.quantize(col("v"), 4000L))
     val cents = IvfKmeans.train(e.select(col("vec_id"), col("qv")), 4, 1)
       .localCheckpoint(true)
-    val h = SemanticIndex.Handle(spark, tbl, path, cents, 2, 400000L)
-    graft.sources.Bucketed.writeBucketed(
-      SemanticIndex.spilled(h, e, Seq("fp")).withColumn("epoch", lit(0)),
-      tbl, 2, Seq("cell"), path = Some(path))
+    val h = SemanticIndex.Handle(SemanticIndex.store(spark, root, tbl), cents, 400000L)
+    h.store.seed(2,
+      SemanticIndex.spilled(h, e, Seq("fp")).withColumn("epoch", lit(0)))
     val prevB = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
@@ -145,9 +140,7 @@ class SemanticIndexPlanSpec extends SparkSpec {
     // counting formulation is rebuilt inline as the reference.
     import spark.implicits._
     val tbl = "graft_covers_floodspec"
-    spark.sql(s"DROP TABLE IF EXISTS $tbl")
-    val path = s"${graft.queries.Fixtures.scratchRoot}/covers_floodspec"
-    graft.queries.Fixtures.rmrf(new java.io.File(path))
+    val root = s"${graft.queries.Fixtures.scratchRoot}/covers_floodspec"
     // 400-copy flood family (fp=1, one shared vector on axis 0) + 100
     // singletons in 5 shapes on axes 1..5 — shapes are mutually
     // orthogonal (and orthogonal to the flood), but each shape's 20
@@ -169,10 +162,9 @@ class SemanticIndexPlanSpec extends SparkSpec {
       .localCheckpoint(true)
     val cents = IvfKmeans.train(e.select(col("vec_id"), col("qv")), 4, 1)
       .localCheckpoint(true)
-    val h = SemanticIndex.Handle(spark, tbl, path, cents, 2, 900000L)
-    graft.sources.Bucketed.writeBucketed(
-      SemanticIndex.spilled(h, e, Seq("fp")).withColumn("epoch", lit(0)),
-      tbl, 2, Seq("cell"), path = Some(path))
+    val h = SemanticIndex.Handle(SemanticIndex.store(spark, root, tbl), cents, 900000L)
+    h.store.seed(2,
+      SemanticIndex.spilled(h, e, Seq("fp")).withColumn("epoch", lit(0)))
     try {
       val got = SemanticIndex.selfCoveredOnly(h, e)
         .select("vec_id").as[Long].collect().toSet

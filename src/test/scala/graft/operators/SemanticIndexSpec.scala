@@ -25,14 +25,14 @@ class SemanticIndexSpec extends SparkSpec {
   private def handle(name: String, seed: org.apache.spark.sql.DataFrame) = {
     val tbl = s"graft_semspec_$name"
     val root = s"${graft.queries.Fixtures.scratchRoot}/semspec_$name"
-    spark.sql(s"DROP TABLE IF EXISTS $tbl")
-    graft.queries.Fixtures.rmrf(new java.io.File(root))
     val cents = IvfKmeans.train(seed.select(col("vec_id"), col("qv")), 2, 2)
       .localCheckpoint(true)
-    val h = SemanticIndex.Handle(spark, tbl, s"$root/idx", cents, 2, Thresh)
-    SemanticIndex.writeEpoch0(h, seed)
+    val h = SemanticIndex.Handle(SemanticIndex.store(spark, root, tbl), cents, Thresh)
+    SemanticIndex.writeEpoch0(h, seed, 2)
     h
   }
+
+  private def table(h: SemanticIndex.Handle) = h.store.names.head
 
   test("accept contract: exact copy rejected, orthogonal vector accepted") {
     // two orthogonal seed clusters; cos(copy, original) = 1 >= 0.4,
@@ -43,12 +43,12 @@ class SemanticIndexSpec extends SparkSpec {
                         101L -> Seq(-1.0, 0.001))) // ~opposite -> accept
     val acc = SemanticIndex.acceptWave(h, wave)
     assert(acc.select("vec_id").as[Long].collect().toSet == Set(101L))
-    SemanticIndex.commit(h, acc, 1, h.buckets)
+    SemanticIndex.commit(h, acc, 1)
     // each committed vector stores exactly 2 spill rows
-    assert(spark.table(h.table).filter(col("vec_id") === 101L).count() == 2)
+    assert(spark.table(table(h)).filter(col("vec_id") === 101L).count() == 2)
     // replay: the committed acceptance now self-matches (cos = 1)
     assert(SemanticIndex.acceptWave(h, wave).count() == 0)
-    spark.sql(s"DROP TABLE ${h.table}")
+    spark.sql(s"DROP TABLE ${table(h)}")
   }
 
   test("retract removes both spill rows and un-rejects copies of the retracted") {
@@ -58,11 +58,11 @@ class SemanticIndexSpec extends SparkSpec {
     assert(SemanticIndex.acceptWave(h, copyOf0).count() == 0) // rejected
     SemanticIndex.retract(h, Seq(0L).toDF("vec_id"))
     // BOTH spill rows of vec 0 are gone — no ghost cell entry
-    assert(spark.table(h.table).filter(col("vec_id") === 0L).count() == 0)
-    assert(spark.table(h.table).filter(col("vec_id") === 1L).count() == 2)
+    assert(spark.table(table(h)).filter(col("vec_id") === 0L).count() == 0)
+    assert(spark.table(table(h)).filter(col("vec_id") === 1L).count() == 2)
     // the copy is now judged against the retained store only: accepted
     assert(SemanticIndex.acceptWave(h, copyOf0).count() == 1)
-    spark.sql(s"DROP TABLE ${h.table}")
+    spark.sql(s"DROP TABLE ${table(h)}")
   }
 
   test("retrainReassign preserves epoch membership, changes buckets, keeps self-matches") {
@@ -70,17 +70,17 @@ class SemanticIndexSpec extends SparkSpec {
       2L -> Seq(0.9, 0.1), 3L -> Seq(0.1, 0.9)))
     val h = handle("retrain", seed)
     val w1 = vecs(Seq(300L -> Seq(-1.0, 0.001), 301L -> Seq(0.001, -1.0)))
-    SemanticIndex.commit(h, SemanticIndex.acceptWave(h, w1), 1, h.buckets)
-    val before = spark.table(h.table).select("epoch", "vec_id").distinct()
+    SemanticIndex.commit(h, SemanticIndex.acceptWave(h, w1), 1)
+    val before = spark.table(table(h)).select("epoch", "vec_id").distinct()
       .as[(Int, Long)].collect().toSet
-    val h2 = SemanticIndex.retrainReassign(h, Off, 2, 2, h.buckets * 2)
+    val h2 = SemanticIndex.retrainReassign(h, Off, 2, 2, 4)
     // membership + epoch provenance identical under the new geometry
-    val after = spark.table(h.table).select("epoch", "vec_id").distinct()
+    val after = spark.table(table(h)).select("epoch", "vec_id").distinct()
       .as[(Int, Long)].collect().toSet
     assert(after == before, s"membership drifted: $before -> $after")
-    assert(h2.buckets == h.buckets * 2)
+    assert(h2.store.buckets(table(h2)) == 4)
     // every committed vector still self-matches: replay accepts 0
     assert(SemanticIndex.acceptWave(h2, w1).count() == 0)
-    spark.sql(s"DROP TABLE ${h.table}")
+    spark.sql(s"DROP TABLE ${table(h)}")
   }
 }

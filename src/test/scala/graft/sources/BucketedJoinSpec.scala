@@ -97,14 +97,15 @@ class BucketedJoinSpec extends SparkSpec {
   }
 
   test("compact: epoch-appended index re-buckets to one file set, same rows, still exchange-free") {
-    // the q99/q109 maintenance job: each epoch commit appends its own
-    // file set per bucket, and the bucket count is a capacity
+    // the index store's maintenance job: each epoch commit appends its
+    // own file set per bucket, and the bucket count is a capacity
     // parameter the corpus outgrows — compact() collapses the files
     // AND re-buckets in one paid shuffle, with identical rows and the
     // exchange-free join preserved at the new parallelism
     val t = "graft_compact_bkt"
-    val p = "/root/repo/tmp/compact_bkt"
-    spark.sql(s"DROP TABLE IF EXISTS $t")
+    val store = Bucketed.EpochStore(spark, graft.queries.Fixtures.scratchRoot,
+      Seq(t -> Seq("k")))
+    val p = store.path(t)
     val prevThreshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
     def parquetFiles(): Int = {
@@ -117,20 +118,28 @@ class BucketedJoinSpec extends SparkSpec {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
       def epoch(e: Int) = (0 until 2000)
         .map(i => (i.toLong + e * 10000, i.toLong % 7, e)).toDF("k", "v", "epoch")
-      Bucketed.writeBucketed(epoch(0), t, 4, Seq("k"), path = Some(p))
-      (1 to 3).foreach(e =>
-        Bucketed.writeBucketed(epoch(e), t, 4, Seq("k"), mode = "append", path = Some(p)))
+      store.seed(4, epoch(0))
+      (1 to 3).foreach(e => store.commit(epoch(e)))
       val filesBefore = parquetFiles()
       val rowsBefore = spark.table(t).count()
       val sumBefore = spark.table(t).agg(sum($"k")).head.getLong(0)
       assert(rowsBefore == 8000L)
 
-      Bucketed.compact(spark, t, 8, Seq("k"), p)
+      store.compact(8)
 
       assert(spark.table(t).count() == rowsBefore, "compact must not change rows")
       assert(spark.table(t).agg(sum($"k")).head.getLong(0) == sumBefore)
       assert(parquetFiles() < filesBefore,
         s"compaction must shrink the file count (before=$filesBefore after=${parquetFiles()})")
+      assert(store.buckets(t) == 8)
+      // later writes read the count from the catalog, so neither an
+      // append nor a tombstone rewrite re-specs the table back to 4
+      store.commit(epoch(4))
+      assert(store.buckets(t) == 8, "a commit after compaction changed the bucket count")
+      store.retract(epoch(4).select("k"))
+      assert(store.buckets(t) == 8, "a retract after compaction changed the bucket count")
+      assert(spark.table(t).count() == rowsBefore, "retract must drop exactly the epoch-4 rows")
+      assert(spark.table(t).agg(sum($"k")).head.getLong(0) == sumBefore)
       // the join is exchange-free on the bucketed side at the NEW
       // bucket count: only the probe side shuffles
       spark.conf.set("spark.sql.shuffle.partitions", "8")

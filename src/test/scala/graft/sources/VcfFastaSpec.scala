@@ -66,15 +66,9 @@ class VcfFastaSpec extends SparkSpec {
     val c1 = chunks.filter($"chr" === "chr1").orderBy("chunk_idx")
       .collect().map(r => (r.getInt(1), r.getString(2)))
     assert(c1.toSeq == Seq((0, "ABCDEFGH"), (1, "IJKLMNOP"), (2, "QRSTUVWX"), (3, "YZ")))
-    // fetch [5, 19) crosses two chunk borders
-    val got = Fasta.getSequence(chunks, "chr1", 5L, 19L, width = 8)
-      .collect().head.getString(1)
-    assert(got == "FGHIJKLMNOPQRS")
-    val got2 = Fasta.getSequence(chunks, "chr2", 2L, 6L, width = 8)
-      .collect().head.getString(1)
-    assert(got2 == "GTAC")
     // per-row intervals, 1-based inclusive: two borders (8, 16) crossed,
-    // inside one chunk, starting on a border, and on chr2
+    // inside one chunk, starting on a border, on chr2, and a single
+    // interval read from its covering chunks only
     val iv = Seq((1, "chr1", 6L, 19L), (2, "chr1", 2L, 5L), (3, "chr1", 17L, 26L),
         (4, "chr2", 3L, 6L))
       .toDF("id", "chr", "start", "stop")
@@ -83,5 +77,9 @@ class VcfFastaSpec extends SparkSpec {
       .collect().sortBy(_._1).toSeq
     assert(fetched == Seq((1, "chr1", 6L, 19L, "FGHIJKLMNOPQRS"), (2, "chr1", 2L, 5L, "BCDE"),
       (3, "chr1", 17L, 26L, "QRSTUVWXYZ"), (4, "chr2", 3L, 6L, "GTAC")))
+    val one = Fasta.fetch(Seq(("chr1", 6L, 19L)).toDF("chr", "start", "stop"),
+        chunks.filter($"chr" === "chr1" && $"chunk_idx".between(0, 2)), width = 8)
+      .select($"dna").as[String].collect().toSeq
+    assert(one == Seq("FGHIJKLMNOPQRS"))
   }
 }

@@ -82,8 +82,8 @@ class StreamReplaySpec extends SparkSpec {
     val seed = e.filter(col("vec_id") % 2 === 0)
     val cents = IvfKmeans.train(seed.select(col("vec_id"), col("qv")), 8, 3)
       .localCheckpoint(true)
-    val h = SemanticIndex.Handle(spark, "graft_q132_vecs", s"$root/idx_vecs",
-      cents, graft.functions.DedupConfig.IndexBuckets, Thresh)
+    val h = SemanticIndex.Handle(SemanticIndex.store(spark, root, "graft_q132_vecs"),
+      cents, Thresh)
     // whole-wave replay from the on-disk wave source
     val w1 = spark.read.parquet(s"$root/src1")
     val replayAccepted = SemanticIndex.acceptWave(h, w1).count()
@@ -100,8 +100,8 @@ class StreamReplaySpec extends SparkSpec {
     // (batch) replay property is the same acceptWave == 0 assertion,
     // exercised against its own committed store
     graft.SparkEntry.queries("q120_incremental_semantic_dedup")(spark, sf).collect()
-    val h120 = h.copy(table = "graft_q120_vecs",
-      path = s"$scratch/semdedup/idx_vecs")
+    val h120 = h.copy(store =
+      SemanticIndex.store(spark, s"$scratch/semdedup", "graft_q120_vecs"))
     val w1b = e.filter(col("vec_id") % 20 === 1)
       .withColumn("vec_id", col("vec_id") + 100000L)
       .unionByName(e.filter(col("vec_id") % 10 === 0)

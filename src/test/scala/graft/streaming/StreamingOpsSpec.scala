@@ -29,62 +29,6 @@ class StreamingOpsSpec extends SparkSpec {
     assert(rows == Set(("10:00", "a", 2L), ("10:00", "b", 1L), ("10:10", "a", 1L)))
   }
 
-  test("stateful sessionizer: state survives micro-batches, labels match batch windows") {
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[StreamingOps.UserEvent]
-    val sessions = StreamingOps.sessionizeStream(input.toDS(), gapMicros = 50L)
-    // batch 1: user 1 opens session 1 (two events), user 2 session 1
-    input.addData(
-      StreamingOps.UserEvent(1L, 0L), StreamingOps.UserEvent(1L, 5L),
-      StreamingOps.UserEvent(2L, 7L))
-    val q = sessions.writeStream
-      .format("memory").queryName("sess_assign")
-      .outputMode("update")
-      .start()
-    q.processAllAvailable()
-    // batch 2: user 1 continues session 1 (gap 30 <= 50 across the
-    // BATCH BOUNDARY — needs the carried state), then opens session 2
-    input.addData(
-      StreamingOps.UserEvent(1L, 35L), StreamingOps.UserEvent(1L, 200L),
-      StreamingOps.UserEvent(2L, 100L))
-    q.processAllAvailable()
-    q.stop()
-    val got = spark.table("sess_assign")
-      .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
-    assert(got == Map(
-      (1L, 0L) -> 1L, (1L, 5L) -> 1L, (1L, 35L) -> 1L, (1L, 200L) -> 2L,
-      (2L, 7L) -> 1L, (2L, 100L) -> 2L))
-    // agrees with the batch operator over the same (in-order) events
-    val batchDf = Seq((1L, 0L, 0L), (1L, 5L, 1L), (1L, 35L, 2L), (1L, 200L, 3L),
-        (2L, 7L, 4L), (2L, 100L, 5L))
-      .toDF("user_id", "m", "event_id")
-      .withColumn("ts", timestamp_micros($"m"))
-    val batchGot = graft.operators.Sessionize
-      .withSessions(batchDf, "user_id", "ts", 50L, Seq("event_id"))
-      .select($"user_id", $"m", $"session_seq")
-      .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
-    assert(batchGot == got)
-  }
-
-  test("dedupStream drops duplicate deliveries across micro-batches") {
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[(Timestamp, Long)]
-    val deduped = StreamingOps.dedupStream(
-      input.toDF().toDF("ts", "id"), "ts", Seq("id"), "10 minutes")
-    def t(m: Int) = Timestamp.valueOf(f"2024-01-01 10:$m%02d:00")
-    val q = deduped.writeStream
-      .format("memory").queryName("dedup_stream")
-      .outputMode("append")
-      .start()
-    input.addData((t(1), 1L), (t(1), 1L), (t(2), 2L)) // in-batch dup
-    q.processAllAvailable()
-    input.addData((t(1), 1L), (t(3), 3L))             // cross-batch replay
-    q.processAllAvailable()
-    q.stop()
-    val ids = spark.table("dedup_stream").collect().map(_.getLong(1)).sorted
-    assert(ids.toSeq == Seq(1L, 2L, 3L)) // each delivered exactly once
-  }
-
   test("upsertBatch is idempotent: replays insert nothing new") {
     val existing = Seq((1L, "x"), (2L, "y")).toDF("id", "v")
     val batch = Seq((2L, "y2"), (3L, "z"), (3L, "z-dup")).toDF("id", "v")

@@ -38,6 +38,13 @@ def run_oracle(con, sf, sql):
     os.replace(tmp, cpath)  # atomic: a killed run never leaves a torn cache
     return duck
 
+def selected(name, only):
+    """True when `name` contains one of the comma-separated substrings in
+    `only` (the SPARK_GRAFT_VERIFY_FILTER syntax); every name passes when
+    `only` is empty."""
+    return not only or any(s in name for s in only.split(',') if s)
+
+
 def sort_frame(df):
     """Columns sorted by name, then rows sorted by every column."""
     df = df[sorted(df.columns)]
@@ -81,7 +88,7 @@ def main():
     oracle = json.load(open(f'{out}/oracle_sql.json'))
     n_ok = n_fail = 0
     for name in sorted(oracle):
-        if only and only not in name:
+        if not selected(name, only):
             continue
         sql = oracle[name]
         try:

@@ -6,16 +6,17 @@ engine and its oracle onto one shared definition, a change mirrored on
 both sides still passes check.py; comparing the dump against one made at
 the parent commit catches it.
 
-    python3 tools/dump_diff.py <old_dump> <new_dump> [substring]
+    python3 tools/dump_diff.py <old_dump> <new_dump> [substrings]
 
 Values are compared as check.py compares them (columns sorted by name,
 rows sorted, values stringified), then the dtypes column by column.
 Every query directory in either dump is compared (only those whose name
-contains `substring`, when given); exits 1 on any difference or missing
+contains one of the comma-separated `substrings`, when given — the
+SPARK_GRAFT_VERIFY_FILTER syntax); exits 1 on any difference or missing
 query."""
 import os, sys
 import pandas as pd
-from check import compare, dtypes
+from check import compare, dtypes, selected
 
 
 def main():
@@ -27,7 +28,7 @@ def main():
                     if os.path.isdir(os.path.join(root, d))})
     n_ok = n_fail = 0
     for name in names:
-        if only and only not in name:
+        if not selected(name, only):
             continue
         try:
             a = pd.read_parquet(f'{old}/{name}')

@@ -3,9 +3,13 @@ package graft.functions
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions.{greatest, least}
 
-/** Tuning constants of the MinHash/LSH/Jaccard dedup family, shared by
-  * the gated queries (q41/q43/q52 in [[graft.queries.QueriesLlm]]) and
-  * the specs that pin them.
+/** Tuning constants of the dedup families, shared by the gated queries
+  * in [[graft.queries.QueriesLlm]], both engines' SQL, and the specs
+  * that pin them: the MinHash/LSH/Jaccard family (q41/q43/q52 ...),
+  * the index capacity, and the vector families' quantization, accept
+  * thresholds and IVF geometry. Each constant has one definition here,
+  * so a retune (q129 measures the threshold, q134 the K) changes every
+  * engine expression and oracle that reads it at once.
   */
 object DedupConfig {
   /** MinHash signature length. */
@@ -44,6 +48,39 @@ object DedupConfig {
     * O(m·cap). Size it above the expected copy-family size for the
     * deployment corpus. */
   val HotBucketCap = 32
+
+  /** Fixed-point offset of the embedding quantization
+    * ([[graft.operators.IvfKmeans.vectors]]: `floor(x * 1000) +
+    * offset`). The embeddings are unit-scale, so +4000 makes every
+    * coordinate positive; that keeps Spark's truncating `DIV` and
+    * DuckDB's `//` equal on the centroid means. The unit-normalized
+    * feature families quantize at offset 0
+    * ([[graft.operators.IvfKmeans.unitVectors]]). */
+  val VecOffset = 4000L
+
+  /** Near-dup accept threshold of the semantic (embedding) family,
+    * as `floor(cos * 1e6)`: a probe with a stored neighbor at cosine
+    * >= 0.4 is a duplicate. q129 measures it against a ladder. */
+  val SemThreshX1e6 = 400000L
+
+  /** Accept threshold of the multimodal (histogram) family: 0.9 sits
+    * between exact byte copies (1.0) and case-flipped content (max
+    * 0.12 against the index) or mixed-case concatenations (max 0.75). */
+  val MmThreshX1e6 = 900000L
+
+  /** IVF geometry of the semantic family: K cells, Lloyd iterations.
+    * K=8 is q134's measured choice on the embeddings corpus
+    * (`OperatingPointBandSpec`). */
+  val SemK = 8
+  val SemIters = 3
+
+  /** IVF geometry of the multimodal index (q133/q136/q137). */
+  val MmK = 8
+  val MmIters = 2
+
+  /** Cell count of the multimodal ANN search (q130), trained with
+    * [[MmIters]] iterations. */
+  val MmAnnK = 16
 
   /** Size-ratio necessary condition for J >= JaccThreshold/1000:
     * J(A,B) <= min(|A|,|B|)/max(|A|,|B|), so pairs failing

@@ -41,10 +41,25 @@ object VectorFunctions {
     * sequence. */
   def normSq(a: Column): Column = dot(a, a)
 
+  /** L2 norm: sqrt of the [[normSq]] fold. [[normSql]] is its twin. */
+  def norm(a: Column): Column = sqrt(normSq(a))
+
   /** Cosine similarity, computed as dot/(sqrt(na)*sqrt(nb)) — keep this
     * exact expression shape in any oracle SQL. */
   def cosine(a: Column, b: Column): Column =
-    dot(a, b) / (sqrt(normSq(a)) * sqrt(normSq(b)))
+    dot(a, b) / (norm(a) * norm(b))
+
+  /** The multimodal stand-in for an image/audio encoder: the 8-bin
+    * histogram of the high nibble of each character's code
+    * (`ascii(c) div 16`), as array<double>. Exact in both engines on
+    * ASCII text. [[byteHistSql]] is its twin. */
+  def byteHist(txt: Column): Column =
+    // the single-element transform binds the code list to a lambda
+    // variable, so it is built once per row, not once per bin
+    element_at(transform(array(transform(split(txt, ""), c => ascii(c))),
+      codes => array((0 until 8).map(b => size(filter(codes,
+        c => call_function("div", c, lit(16)) === b))): _*)), 1)
+      .cast("array<double>")
 
   // Note (measured, sf0.1, local[32]): an "unrolled" dot product —
   // 64 element_at products summed as a flat expression tree — is ~3x
@@ -77,4 +92,29 @@ object VectorFunctions {
     (0 until nPlanes).map { j =>
       when(lshProjection(v, j, dim) > 0.0, lit(1L << j)).otherwise(lit(0L))
     }.reduce(_ + _)
+
+  // ---- DuckDB twins: each emits the SQL of the expression above it
+  // in the same fold order, so the oracle computes identical doubles.
+
+  /** Twin of [[dot]] for `$a[i]`/`$b[i]`-style list refs of length
+    * `dim`. */
+  def dotSql(a: String, b: String, dim: Int): String =
+    s"""list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
+       |  [$a[i] * $b[i] FOR i IN generate_series(1, $dim)]), (x, y) -> x + y)""".stripMargin
+
+  /** Twin of [[normSq]]. */
+  def normSqSql(a: String): String =
+    s"""list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
+       |  [x * x FOR x IN $a]), (x, y) -> x + y)""".stripMargin
+
+  /** Twin of [[norm]]. */
+  def normSql(a: String): String = s"sqrt(${normSqSql(a)})"
+
+  /** Twin of [[byteHist]]: a DOUBLE list of 8 bin counts of `txt`. */
+  def byteHistSql(txt: String): String = {
+    val codes = s"list_transform(string_split_regex($txt, ''), c -> ascii(c))"
+    (0 until 8).map(b =>
+      s"CAST(len(list_filter($codes, c -> c // 16 = $b)) AS DOUBLE)")
+      .mkString("[", ",\n    ", "]")
+  }
 }

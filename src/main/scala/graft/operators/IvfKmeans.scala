@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.functions.{VectorFunctions => VF}
+
 /** Exact integer-fixed-point k-means (Lloyd) training for IVF
   * similarity search — the producer side of the cell index that
   * q53/q114 search consumes, as one shared definition for the engine
@@ -11,13 +13,25 @@ import org.apache.spark.sql.functions._
   * or tie-break can never drift a query from its oracle, or q113's
   * single step from q114's iterated training).
   *
+  * The row contract of the vector family is defined here once:
+  * [[vectors]] turns a `(vec_id, v, …)` frame (`v` an array<double>)
+  * into `(vec_id, v, …, nrm, qv)` — the L2 norm the cosine verify
+  * divides by and the quantized coordinates the cells are trained and
+  * assigned on. [[unitVectors]] is the same row for the histogram
+  * feature families, which quantize the length-normalized vector.
+  * Every gate, [[SemanticIndex]] and the retrain read their rows from
+  * these two, and every DuckDB oracle from [[quantizeSql]] /
+  * [[unitVectorsSql]].
+  *
   * All arithmetic is integer-exact so the gates are hash matches, not
   * tolerances:
   *  - embeddings quantize to fixed point `floor(double(x) * 1000) +
-  *    offset` — double on both engines, so the floor is bit-identical;
-  *    an `offset` large enough to make every coordinate positive (the
-  *    corpus is unit-scale, so +4000 is ample) keeps every derived sum
-  *    positive, which makes Spark's `DIV` (truncating) and DuckDB's
+  *    offset` — double on both engines, so the floor is bit-identical
+  *    (a float cast to double is exact, so quantizing the float
+  *    embedding and its double `v` give the same integers); an
+  *    `offset` large enough to make every coordinate positive
+  *    ([[graft.functions.DedupConfig.VecOffset]]) keeps every derived
+  *    sum positive, which makes Spark's `DIV` (truncating) and DuckDB's
   *    `//` agree on the centroid mean without sign-dependent fixups.
   *    Assignment is offset-invariant: `(q_d - c_d)` cancels the shift.
   *  - distances are BIGINT sums of squared differences; ties break by
@@ -44,9 +58,39 @@ import org.apache.spark.sql.functions._
   */
 object IvfKmeans {
 
-  /** Fixed-point quantization of a float-array embedding column. */
-  def quantize(embedding: Column, offset: Long): Column =
-    transform(embedding, x => floor(x.cast("double") * 1000).cast("long") + offset)
+  /** Fixed-point quantization of a float- or double-array column. */
+  def quantize(v: Column, offset: Long): Column =
+    transform(v, x => floor(x.cast("double") * 1000).cast("long") + offset)
+
+  /** Twin of [[quantize]] over a DuckDB list expression. */
+  def quantizeSql(list: String, offset: Long): String =
+    s"list_transform($list, x -> CAST(floor(CAST(x AS DOUBLE) * 1000) AS BIGINT) + $offset)"
+
+  /** Adds `nrm`, the L2 norm of `v`. For the gates that score by
+    * cosine but never quantize. */
+  def withNorm(df: DataFrame): DataFrame =
+    df.withColumn("nrm", VF.norm(col("v")))
+
+  /** The vector row: adds `nrm` and `qv = quantize(v, offset)` to a
+    * `(vec_id, v, …)` frame. */
+  def vectors(df: DataFrame, offset: Long): DataFrame =
+    withNorm(df).withColumn("qv", quantize(col("v"), offset))
+
+  /** The vector row of the histogram feature families: adds `nrm` and
+    * the offset-0 quantization of `v / nrm`. Raw counts scale with
+    * document length, so an L2 quantizer over them clusters by length
+    * while the search ranks by cosine; on unit vectors L2 is monotone
+    * in cosine (|a-b|^2 = 2 - 2cos), so the cells block by the same
+    * geometry the search scores. */
+  def unitVectors(df: DataFrame): DataFrame =
+    withNorm(df).withColumn("qv",
+      quantize(transform(col("v"), x => x / col("nrm")), 0L))
+
+  /** Twin of [[unitVectors]]: `SELECT $cols, v, nrm, qv` over a `$src`
+    * relation carrying `$cols` and the DOUBLE list `v`. */
+  def unitVectorsSql(cols: String, src: String): String =
+    s"""SELECT $cols, v, nrm, ${quantizeSql("[x / nrm FOR x IN v]", 0L)} AS qv
+       |FROM (SELECT $cols, v, ${VF.normSql("v")} AS nrm FROM $src)""".stripMargin
 
   /** Integer squared-L2 distance between two quantized vectors — the
     * native codegen expression ([[graft.functions.ArrayL2Sq]], one
@@ -69,8 +113,8 @@ object IvfKmeans {
     * (sort_array fixes collect_list's arrival order). Rank-based, not
     * `vec_id < k`: a RESTRICTED training corpus (q120 trains on the
     * seed half, vec_id % 2 == 0) still yields k effective cells —
-    * the id-filter form silently halved q120's index to 4 cells
-    * (r9 ADVICE). For a contiguous-id corpus the two are identical,
+    * an id-filter form would halve q120's index to 4 cells. For a
+    * contiguous-id corpus the two are identical,
     * so every full-corpus gate's rows are unchanged. Scale: the
     * sort+limit plans as TakeOrderedAndProject — per-partition top-k,
     * k rows to the driver, no global sort. */
@@ -138,10 +182,9 @@ object IvfKmeans {
     * still collide in the spill cell), candidates are same-cell
     * pairs, and only candidates pay the exact cosine verify. ONE
     * definition for the q118 (pair listing) and q119 (clustering
-    * pipeline) gates — each carried an inline copy until r10, exactly
-    * the retune-drift hazard
-    * [[graft.functions.MinhashPipeline.acceptAgainstIndex]]
-    * eliminated for the minhash family. `e` needs (vec_id, v, nrm,
+    * pipeline) gates, so a retune cannot drift one from the other
+    * ([[graft.functions.MinhashPipeline.acceptAgainstIndex]]'s
+    * discipline on the minhash family). `e` needs (vec_id, v, nrm,
     * qv); returns (vec_a, vec_b, sim_x1e6) with vec_a < vec_b,
     * DISTINCT (a pair sharing both cells collides twice).
     * 100 TB: no corpus broadcast — centroids ride as one K·dim row,
@@ -149,7 +192,6 @@ object IvfKmeans {
     * inflation at exactly 2×. [[spillPairsCtes]] is the oracle
     * mirror. */
   def spillPairs(e: DataFrame, cents: DataFrame, threshX1e6: Long): DataFrame = {
-    import graft.functions.{VectorFunctions => VF}
     // materialized once: the spill assignment feeds both sides of the
     // candidate self-join, which would otherwise replay the centroid
     // ranking twice (at scale this frame IS the index — a bucketed
@@ -226,7 +268,6 @@ object IvfKmeans {
     * vec_a < vec_b, DISTINCT. */
   def cappedSpillPairs(e: DataFrame, cents: DataFrame, threshX1e6: Long,
                        k: Int, cap: Int): DataFrame = {
-    import graft.functions.{VectorFunctions => VF}
     // materialized once: the capped frame feeds both sides of the
     // candidate self-join (the cap windows would otherwise run twice)
     val capped = capCells(
@@ -285,9 +326,7 @@ object IvfKmeans {
                 pfx: String = ""): String = {
     val head =
       s"""${pfx}q AS (
-         |  SELECT vec_id,
-         |    list_transform(embedding,
-         |      x -> CAST(floor(CAST(x AS DOUBLE) * 1000) AS BIGINT) + $offset) AS qv
+         |  SELECT vec_id, ${quantizeSql("embedding", offset)} AS qv
          |  FROM $src$where),
          |${pfx}c0 AS (SELECT vec_id AS cid, qv AS cqv FROM ${pfx}q ORDER BY vec_id LIMIT $k)""".stripMargin
     val steps = (1 to iters).map { t =>
@@ -313,10 +352,12 @@ object IvfKmeans {
   /** SQL mirror of one [[rankCells]] spill/probe assignment: emits
     * `$name(vec_id, <passthru>, cell)` — each `$src` row exploded to
     * its `maxProbe` nearest `$cents` cells under the (dist, cid)
-    * tie-break. Shared by the q118/q119 pairs mirror
-    * ([[spillPairsCtes]]) and q120's index/probe CTEs. */
+    * tie-break. `$cents` is the trained chain's last centroid CTE
+    * (`c$iters` of [[lloydCtes]]), so it follows the caller's iteration
+    * count. Shared by the q118/q119 pairs mirror ([[spillPairsCtes]])
+    * and q120's index/probe CTEs. */
   def spillAssignCte(name: String, src: String, dim: Int,
-                     passthru: Seq[String] = Nil, cents: String = "c3",
+                     passthru: Seq[String] = Nil, cents: String,
                      maxProbe: Int = 2): String = {
     val outer = passthru.map(c => s", $c").mkString
     val inner = passthru.map(c => s", s.$c").mkString
@@ -330,27 +371,23 @@ object IvfKmeans {
   }
 
   /** Oracle mirror of [[spillPairs]]: spill assignment (`sp`, from the
-    * [[lloydCtes]] `q` frame), vector fetch (`ev`, joining a CTE `e`
+    * [[lloydCtes]] `q` frame against `$cents`), vector fetch (`ev`, joining a CTE `e`
     * of (vec_id, v) double lists), and the verified-pair set `spairs`
-    * (vec_a, vec_b, sim_x1e6). `dot`/`normSq` render the caller's
-    * float-fold SQL (the engine/oracle folds live with the queries).
-    * Norms are hoisted into the MATERIALIZED `ev` (one sqrt-of-fold
-    * per VECTOR, the engine's own precomputed-`nrm` shape) and the
-    * cosine is computed once per pair then filtered by alias —
-    * algebraically identical doubles to the inline form, ~6x less
-    * per-pair work in DuckDB (r11: this is what makes the same-cell
-    * pair oracles primeable at sf1). */
-  def spillPairsCtes(dim: Int, threshX1e6: Long,
-                     dot: (String, String) => String,
-                     normSq: String => String): String =
-    s"""${spillAssignCte("sp", "q", dim)},
+    * (vec_a, vec_b, sim_x1e6). Norms are hoisted into the
+    * MATERIALIZED `ev` (one sqrt-of-fold per VECTOR, the engine's own
+    * precomputed-`nrm` shape) and the cosine is computed once per pair
+    * then filtered by alias — algebraically identical doubles to the
+    * inline form, ~6x less per-pair work in DuckDB, which is what
+    * makes the same-cell pair oracles feasible at sf1. */
+  def spillPairsCtes(dim: Int, threshX1e6: Long, cents: String): String =
+    s"""${spillAssignCte("sp", "q", dim, cents = cents)},
        |ev AS MATERIALIZED (
-       |  SELECT sp.vec_id, sp.cell, e.v, sqrt(${normSq("e.v")}) AS nrm
+       |  SELECT sp.vec_id, sp.cell, e.v, ${VF.normSql("e.v")} AS nrm
        |  FROM sp JOIN e USING (vec_id)),
        |spairs AS (
        |  SELECT DISTINCT vec_a, vec_b, sim_x1e6 FROM (
        |    SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
-       |      CAST(floor(((${dot("a.v", "b.v")}) / (a.nrm * b.nrm)) * 1e6)
+       |      CAST(floor(((${VF.dotSql("a.v", "b.v", dim)}) / (a.nrm * b.nrm)) * 1e6)
        |        AS BIGINT) AS sim_x1e6
        |    FROM ev a JOIN ev b ON a.cell = b.cell AND a.vec_id < b.vec_id)
        |  WHERE sim_x1e6 >= $threshX1e6)""".stripMargin

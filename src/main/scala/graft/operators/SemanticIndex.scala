@@ -15,12 +15,19 @@ import graft.sources.Bucketed.EpochStore
   * their tables in one [[EpochStore]], which owns seeding, commit
   * order, the current bucket count, compaction and tombstone rewrites.
   *
+  * Row contract: every frame the index reads — the seed, a wave, the
+  * committed corpus a retrain consumes — is the vector row
+  * `(vec_id, v, nrm, qv)` of [[IvfKmeans.vectors]] (or
+  * [[IvfKmeans.unitVectors]] for the histogram families): `v` the
+  * double vector the cosine verify scores, `nrm` its L2 norm, `qv` the
+  * quantized coordinates the cells are assigned on.
+  *
   * Layout: one store table, each vector stored in its 2 nearest
   * TRAINED cells ([[IvfKmeans.rankCells]] spill — boundary near-dups
   * still collide), bucketed on `cell` so every wave's candidate join
   * enters exchange-free on the store side; centroids are trained once
-  * and FROZEN in the [[Handle]] (waves assign against frozen cells;
-  * retraining is the scheduled maintenance job, q124).
+  * by [[build]] and FROZEN in the [[Handle]] (waves assign against
+  * frozen cells; retraining is the scheduled maintenance job, q124).
   *
   * 100 TB: waves shuffle only themselves (probe side), the index
   * never re-shuffles on ingest; spill bounds index inflation at
@@ -35,11 +42,14 @@ object SemanticIndex {
 
   /** One index handle: the cell-bucketed store plus the FROZEN
     * centroid frame its waves probe against. `threshX1e6` is the
-    * cosine near-dup threshold (floor(cos*1e6)). */
+    * cosine near-dup threshold (floor(cos*1e6)). [[build]] makes a new
+    * index; construct a Handle directly only to attach to a store
+    * another job built, or to seed a store whose rows carry extra
+    * columns (q137's fingerprint). */
   final case class Handle(store: EpochStore, cents: DataFrame, threshX1e6: Long)
 
   /** The one-table store `root/table`, bucketed on `cell`. Touches
-    * nothing: [[writeEpoch0]] creates it, a reader may attach to it. */
+    * nothing: [[build]] creates it, a reader may attach to it. */
   def store(spark: SparkSession, root: String, table: String): EpochStore =
     EpochStore(spark, root, Seq(table -> Seq("cell")))
 
@@ -54,10 +64,23 @@ object SemanticIndex {
         "qv", h.cents, 2)
       .select((Seq("vec_id", "v", "nrm", "cell") ++ extra).map(col): _*)
 
-  /** Write the epoch-0 seed index (one bucketed shuffle, paid once —
-    * every later wave joins it exchange-free). */
-  def writeEpoch0(h: Handle, seed: DataFrame, buckets: Int): Unit =
-    h.store.seed(buckets, spilled(h, seed).withColumn("epoch", lit(0)))
+  /** The training step every index shares: `iters` Lloyd iterations
+    * of `k` cells over the frame's `qv`, materialized — each wave
+    * probes the frozen result. */
+  def trainCells(vectors: DataFrame, k: Int, iters: Int): DataFrame =
+    IvfKmeans.train(vectors.select(col("vec_id"), col("qv")), k, iters)
+      .localCheckpoint(true)
+
+  /** A new index over `store`: trains the cells on `seed`
+    * `(vec_id, v, nrm, qv)`, then writes `seed` as epoch 0 at
+    * `buckets` (one bucketed shuffle, paid once — every later wave
+    * joins it exchange-free). */
+  def build(store: EpochStore, seed: DataFrame, k: Int, iters: Int,
+            threshX1e6: Long, buckets: Int): Handle = {
+    val h = Handle(store, trainCells(seed, k, iters), threshX1e6)
+    store.seed(buckets, spilled(h, seed).withColumn("epoch", lit(0)))
+    h
+  }
 
   /** The ACCEPT side of the verify-before-insert contract: wave rows
     * with NO stored neighbor at >= threshX1e6 cosine in their crank-1
@@ -181,16 +204,15 @@ object SemanticIndex {
     h.store.retract(tombstones)
 
   /** The DISTINCT committed vectors of the store with their quantized
-    * coordinates recomputed from the stored doubles (bit-identical to
-    * quantizing the original floats: both are floor(double*1000)) —
-    * the input a retrain (q124) consumes. Keeps (epoch, vec_id, v,
-    * nrm, qv). */
+    * coordinates recomputed from the stored doubles by
+    * [[IvfKmeans.quantize]] (bit-identical to the seed's and waves'
+    * `qv`: a float cast to double is exact) — the input a retrain
+    * (q124) consumes. Keeps (epoch, vec_id, v, nrm, qv). */
   def committedVectors(h: Handle, offset: Long): DataFrame =
     vecs(h)
       .select(col("epoch"), col("vec_id"), col("v"), col("nrm"))
       .distinct()
-      .withColumn("qv", transform(col("v"),
-        x => floor(x * 1000).cast("long") + offset))
+      .withColumn("qv", IvfKmeans.quantize(col("v"), offset))
 
   /** RETRAIN + REASSIGN — the maintenance job the frozen-centroid
     * design defers to (q110's compaction analog for cell geometry):
@@ -203,9 +225,7 @@ object SemanticIndex {
   def retrainReassign(h: Handle, offset: Long, k: Int, iters: Int,
                       buckets: Int): Handle = {
     val cm = committedVectors(h, offset).localCheckpoint(true)
-    val cents = IvfKmeans.train(cm.select(col("vec_id"), col("qv")), k, iters)
-      .localCheckpoint(true)
-    val h2 = h.copy(cents = cents)
+    val h2 = h.copy(cents = trainCells(cm, k, iters))
     h.store.replace(buckets, spilled(h2, cm, extra = Seq("epoch")))
     h2
   }

@@ -2,8 +2,10 @@ package graft.queries
 
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.functions.{TextFunctions => TF, VectorFunctions => VF}
-import graft.operators.{MinhashIndex, OperatingPoint}
+import graft.functions.VectorFunctions.{dotSql, normSql, byteHist, byteHistSql}
+import graft.operators.{IvfKmeans, MinhashIndex, OperatingPoint, SemanticIndex}
 
 /** Large-scale training-data pipeline operators over the `documents`
   * and `embeddings` tables: deduplication (exact, MinHash+LSH, SimHash,
@@ -33,7 +35,8 @@ object QueriesLlm {
   private val MP = TF.MinhashPrime      // 2^31-1
   // dedup-family tuning lives in DedupConfig
   import graft.functions.DedupConfig.{K, Bands, Rpb, JaccThreshold, sizeRatioOk,
-    IndexBuckets}
+    IndexBuckets, VecOffset, SemThreshX1e6, MmThreshX1e6, SemK, SemIters, MmK,
+    MmIters, MmAnnK}
   private val Dim = 64                  // embedding dimensionality
   private val Planes = 8                // LSH hyperplanes
 
@@ -338,31 +341,32 @@ object QueriesLlm {
        |      (acc, x) -> (acc * 31 + x) % $P)) AS hs
        |  FROM documents)""".stripMargin
 
+  /** The catalog's embedding frame `(vec_id, v)`: the float embedding
+    * as the double vector every score reads. [[embCte]] is its twin;
+    * [[IvfKmeans.vectors]] adds the norm and the quantized row. */
+  private[graft] def embeddings(spark: SparkSession, dir: String): DataFrame =
+    table(spark, dir, "embeddings")
+      .select(col("vec_id"), VF.asDouble(col("embedding")).as("v"))
+
   /** DuckDB: embeddings as DOUBLE lists. */
   private val embCte =
     "e AS (SELECT vec_id, [CAST(x AS DOUBLE) FOR x IN embedding] AS v FROM embeddings)"
 
-  /** DuckDB sequential-fold dot product of `$a.v` x `$b.v`-style refs. */
-  private def dotSql(a: String, b: String): String =
-    s"""list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-       |  [$a[i] * $b[i] FOR i IN generate_series(1, $Dim)]), (x, y) -> x + y)""".stripMargin
-
-  private def normSqSql(a: String): String =
-    s"""list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-       |  [x * x FOR x IN $a]), (x, y) -> x + y)""".stripMargin
-
+  /** Twin of [[graft.functions.VectorFunctions.cosine]] over 64-dim
+    * embedding lists. */
   private def cosSql(a: String, b: String): String =
-    s"(${dotSql(a, b)}) / (sqrt(${normSqSql(a)}) * sqrt(${normSqSql(b)}))"
+    s"(${dotSql(a, b, Dim)}) / (${normSql(a)} * ${normSql(b)})"
 
   // ---- semantic-index oracle building blocks, shared by the
   // embedding-family lifecycle gates (q120 ingest / q122 compaction /
   // q123 retraction / q124 retrain) the way minhashCtes/verifiedDupCte
   // are shared by the minhash family. All mirror
   // operators/SemanticIndex against the trained-centroid CTE `cents`.
-  private def semSpillCte(name: String, src: String, cents: String = "c3") =
-    graft.operators.IvfKmeans.spillAssignCte(name, src, Dim, Seq("v"), cents)
-  private def semProbeCte(name: String, src: String, cents: String = "c3") =
-    graft.operators.IvfKmeans.spillAssignCte(name, src, Dim, Seq("v", "qv"),
+  private val semCents = s"c$SemIters" // the trained chain's last CTE
+  private def semSpillCte(name: String, src: String, cents: String = semCents) =
+    IvfKmeans.spillAssignCte(name, src, Dim, Seq("v"), cents)
+  private def semProbeCte(name: String, src: String, cents: String = semCents) =
+    IvfKmeans.spillAssignCte(name, src, Dim, Seq("v", "qv"),
       cents, maxProbe = 1)
   // Norms are hoisted into per-vector MATERIALIZED CTEs (${d}p/${d}i)
   // so the probe x index join evaluates ONE 64-dim fold per pair (the
@@ -377,22 +381,85 @@ object QueriesLlm {
   // evaluate the assignment twice)
   private def semWaveCte(p: String, idx: String, d: String, a: String) =
     s"""${d}p AS MATERIALIZED (
-       |  SELECT vec_id, v, qv, cell, sqrt(${normSqSql("v")}) AS nrm FROM $p),
+       |  SELECT vec_id, v, qv, cell, ${normSql("v")} AS nrm FROM $p),
        |${d}i AS MATERIALIZED (
-       |  SELECT cell, v, sqrt(${normSqSql("v")}) AS nrm FROM $idx),
+       |  SELECT cell, v, ${normSql("v")} AS nrm FROM $idx),
        |$d AS (
        |  SELECT DISTINCT p.vec_id FROM ${d}p p JOIN ${d}i i ON i.cell = p.cell
-       |  WHERE CAST(floor(((${dotSql("p.v", "i.v")}) / (p.nrm * i.nrm)) * 1e6)
-       |    AS BIGINT) >= 400000),
+       |  WHERE CAST(floor(((${dotSql("p.v", "i.v", Dim)}) / (p.nrm * i.nrm)) * 1e6)
+       |    AS BIGINT) >= $SemThreshX1e6),
        |$a AS (
        |  SELECT p.vec_id, p.v, p.qv FROM ${d}p p
        |  LEFT JOIN $d d ON d.vec_id = p.vec_id WHERE d.vec_id IS NULL)""".stripMargin
+  /** The semantic family's Lloyd chain (`q`, `c0`..`c3`) over the whole
+    * corpus. */
+  private val semLloydCtes = IvfKmeans.lloydCtes(SemK, SemIters, Dim, VecOffset)
+
+  /** Twin of `SemanticIndex.retrainReassign` over a committed-corpus
+    * CTE `cm` (epoch, vec_id, v): the retrained chain `rq`, `rc0`..
+    * and the reassigned store `ri`; later waves probe [[retrainCents]]. */
+  private val retrainCents = s"r$semCents"
+  private val semRetrainCtes =
+    s"""${IvfKmeans.lloydCtes(SemK, SemIters, Dim, VecOffset,
+         src = "(SELECT vec_id, v AS embedding FROM cm)", pfx = "r")},
+       |rsrc AS (
+       |  SELECT cm.epoch, cm.vec_id, cm.v, r.qv
+       |  FROM cm JOIN rq r ON r.vec_id = cm.vec_id),
+       |${IvfKmeans.spillAssignCte("ri", "rsrc", Dim, Seq("epoch", "v"),
+         cents = retrainCents)}""".stripMargin
+
+  /** Twin of `IvfKmeans.vectors(embeddings(...), VecOffset)` without
+    * the norm (the wave CTEs hoist it). */
   private val semEallCte =
-    """eall AS (
-      |  SELECT vec_id, [CAST(x AS DOUBLE) FOR x IN embedding] AS v,
-      |    list_transform(embedding,
-      |      x -> CAST(floor(CAST(x AS DOUBLE) * 1000) AS BIGINT) + 4000) AS qv
-      |  FROM embeddings)""".stripMargin
+    s"""eall AS (
+       |  SELECT vec_id, [CAST(x AS DOUBLE) FOR x IN embedding] AS v,
+       |    ${IvfKmeans.quantizeSql("embedding", VecOffset)} AS qv
+       |  FROM embeddings)""".stripMargin
+
+  /** Twin of the seed half [[semanticIndex]] trains on and seeds: the
+    * trained chain, `eall` and the seed rows `sd`. */
+  private val semSeedCtes =
+    s"""${IvfKmeans.lloydCtes(SemK, SemIters, Dim, VecOffset, " WHERE vec_id % 2 = 0")},
+       |$semEallCte,
+       |sd AS (SELECT vec_id, v, qv FROM eall WHERE vec_id % 2 = 0)""".stripMargin
+
+  /** q120's two ingest waves over a vector frame, the Spark twin of
+    * [[semanticEpochOracle]]'s `w1`/`w2`: wave 1 is new vectors
+    * (vec_id % 20 = 1) plus exact copies of seeded ones
+    * (vec_id % 10 = 0); wave 2 is new vectors (vec_id % 20 = 11) plus
+    * copies of wave 1's new ones — rejected only if epoch 1 committed. */
+  private[graft] def semanticWaves(e: DataFrame): (DataFrame, DataFrame) = {
+    def shifted(m: Int, r: Int, by: Long) =
+      e.filter(col("vec_id") % m === r).withColumn("vec_id", col("vec_id") + by)
+    (shifted(20, 1, 100000L).unionByName(shifted(10, 0, 200000L)),
+      shifted(20, 11, 300000L).unionByName(shifted(20, 1, 400000L)))
+  }
+
+  /** A fresh semantic index at `scratchRoot/dir` seeded with the
+    * vec_id % 2 = 0 half of `e` (the [[semanticEpochOracle]] seed). */
+  private def semanticIndex(spark: SparkSession, e: DataFrame, dir: String,
+                            tbl: String): SemanticIndex.Handle =
+    SemanticIndex.build(
+      SemanticIndex.store(spark, s"${Fixtures.scratchRoot}/$dir", tbl),
+      e.filter(col("vec_id") % 2 === 0), SemK, SemIters, SemThreshX1e6,
+      IndexBuckets)
+
+  /** Twin of [[semanticIndex]] and [[semanticWaves]] up to wave 1's
+    * accept: the seed-trained chain, `eall`, the epoch-0 store `i0`,
+    * the waves `w1`/`w2` and wave 1's accept set `ac1`. */
+  private val semWave1Ctes =
+    s"""$semSeedCtes,
+       |${semSpillCte("i0", "sd")},
+       |w1 AS (
+       |  SELECT vec_id + 100000 AS vec_id, v, qv FROM eall WHERE vec_id % 20 = 1
+       |  UNION ALL
+       |  SELECT vec_id + 200000, v, qv FROM eall WHERE vec_id % 10 = 0),
+       |w2 AS (
+       |  SELECT vec_id + 300000 AS vec_id, v, qv FROM eall WHERE vec_id % 20 = 11
+       |  UNION ALL
+       |  SELECT vec_id + 400000, v, qv FROM eall WHERE vec_id % 20 = 1),
+       |${semProbeCte("p1", "w1")},
+       |${semWaveCte("p1", "i0", "dd1", "ac1")}""".stripMargin
 
   /** The two-sequential-waves SEMANTIC epoch-dedup oracle, shared
     * VERBATIM by q120 (plain batch ingest), q122 (ingest with a
@@ -403,24 +470,10 @@ object QueriesLlm {
     * semantics-free and q132's batching/staging/commit machinery
     * provably acceptance-neutral. */
   private lazy val semanticEpochOracle: String = {
-    import graft.operators.IvfKmeans
-    s"""WITH ${IvfKmeans.lloydCtes(8, 3, Dim, 4000L, " WHERE vec_id % 2 = 0")},
-       |$semEallCte,
-       |sd AS (SELECT vec_id, v, qv FROM eall WHERE vec_id % 2 = 0),
-       |${semSpillCte("i0", "sd")},
-       |w1 AS (
-       |  SELECT vec_id + 100000 AS vec_id, v, qv FROM eall WHERE vec_id % 20 = 1
-       |  UNION ALL
-       |  SELECT vec_id + 200000, v, qv FROM eall WHERE vec_id % 10 = 0),
-       |${semProbeCte("p1", "w1")},
-       |${semWaveCte("p1", "i0", "dd1", "ac1")},
+    s"""WITH $semWave1Ctes,
        |${semSpillCte("sp1", "ac1")},
        |i1 AS (SELECT vec_id, v, cell FROM i0
        |       UNION ALL SELECT vec_id, v, cell FROM sp1),
-       |w2 AS (
-       |  SELECT vec_id + 300000 AS vec_id, v, qv FROM eall WHERE vec_id % 20 = 11
-       |  UNION ALL
-       |  SELECT vec_id + 400000, v, qv FROM eall WHERE vec_id % 20 = 1),
        |${semProbeCte("p2", "w2")},
        |${semWaveCte("p2", "i1", "dd2", "ac2")},
        |committed AS (
@@ -436,30 +489,69 @@ object QueriesLlm {
   // ingest) and q136 (compact + retract) — semWaveCte's discipline at
   // the multimodal family's feature granularity, one definition so a
   // feature or threshold retune can never drift the two gates apart.
-  private val mmHistSql = (0 until 8).map(b =>
-    s"CAST(len(list_filter(codes, c -> c // 16 = $b)) AS DOUBLE)")
-    .mkString(",\n      ")
+  /** The multimodal feature row of `(vec_id, txt)` rows:
+    * [[IvfKmeans.unitVectors]] over the byte histogram. */
+  private def mmFeats(src: DataFrame): DataFrame =
+    IvfKmeans.unitVectors(src.select(col("vec_id"), byteHist(col("txt")).as("v")))
   private def mmFeatsCte(name: String, src: String): String =
-    s"""${name}h AS (
-       |  SELECT vec_id, [
-       |      $mmHistSql] AS v
-       |  FROM (SELECT vec_id, list_transform(string_split_regex(txt, ''),
-       |          c -> ascii(c)) AS codes FROM $src)),
-       |$name AS (
-       |  SELECT vec_id, v, nrm,
-       |    list_transform(v, x -> CAST(floor(x / nrm * 1000) AS BIGINT)) AS qv
-       |  FROM (SELECT vec_id, v,
-       |          sqrt(list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-       |            [x * x FOR x IN v]), (a, b) -> a + b)) AS nrm
-       |        FROM ${name}h))""".stripMargin
-  private def mmDot8(a: String, b: String): String =
-    s"""list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-       |      [$a[i] * $b[i] FOR i IN generate_series(1, 8)]), (x, y) -> x + y)""".stripMargin
+    s"""${name}h AS (SELECT vec_id, ${byteHistSql("txt")} AS v FROM $src),
+       |$name AS (${IvfKmeans.unitVectorsSql("vec_id", s"${name}h")})""".stripMargin
+  private val mmCents = s"c$MmIters" // the trained chain's last CTE
+
+  /** The multimodal index q133 and q136 both drive, after its first
+    * wave: every document seeded as epoch 0, then wave 1 — exact
+    * copies (doc_id % 5 = 0, +100000), which must all reject, and
+    * case-flipped content (doc_id % 5 = 1, +200000), which must
+    * accept — committed as epoch 1. Returns the documents, the handle
+    * and wave 1's accept set. [[mmWave1Ctes]] is its twin. */
+  private def mmIndexWave1(spark: SparkSession, dir: String, root: String,
+                           tbl: String): (DataFrame, SemanticIndex.Handle, DataFrame) = {
+    val d = table(spark, dir, "documents").select(col("doc_id"), col("text"))
+    val seed = mmFeats(d.select(col("doc_id").as("vec_id"), col("text").as("txt")))
+      .localCheckpoint(true) // feeds training AND the epoch-0 write
+    val h = SemanticIndex.build(
+      SemanticIndex.store(spark, s"${Fixtures.scratchRoot}/$root", tbl),
+      seed, MmK, MmIters, MmThreshX1e6, IndexBuckets)
+    val copy1 = d.filter(col("doc_id") % 5 === 0)
+      .select((col("doc_id") + 100000L).as("vec_id"))
+    val acc1 = SemanticIndex.acceptWave(h, mmFeats(
+      d.filter(col("doc_id") % 5 === 0)
+        .select((col("doc_id") + 100000L).as("vec_id"), col("text").as("txt"))
+      .unionByName(d.filter(col("doc_id") % 5 === 1)
+        .select((col("doc_id") + 200000L).as("vec_id"), upper(col("text")).as("txt")))))
+    // stratum membership BY CONSTRUCTION, not by id range: on
+    // key-shifted gen_sf corpora doc_id reaches k·1e6, so
+    // `vec_id < 200000` no longer bounds the stratum — the semi-join
+    // against the planted id frame does at any scale
+    require(acc1.join(copy1, Seq("vec_id"), "left_semi").count() == 0L,
+      "an exact byte-copy passed the multimodal accept gate")
+    require(acc1.count() > 0L,
+      "the case-flipped stratum was wholly rejected — accept path dead")
+    SemanticIndex.commit(h, acc1, 1)
+    (d, h, acc1)
+  }
+
+  private lazy val mmWave1Ctes: String =
+    s"""dsrc AS (SELECT doc_id, text FROM documents),
+       |${mmFeatsCte("f0", "(SELECT doc_id AS vec_id, text AS txt FROM dsrc)")},
+       |${IvfKmeans.lloydCtes(MmK, MmIters, 8, 0L,
+          src = "(SELECT vec_id, [x / nrm FOR x IN v] AS embedding FROM f0)")},
+       |${IvfKmeans.spillAssignCte("i0", "f0", 8, Seq("v", "nrm"), cents = mmCents)},
+       |${mmFeatsCte("w1f",
+          """(SELECT doc_id + 100000 AS vec_id, text AS txt FROM dsrc
+             |      WHERE doc_id % 5 = 0
+             |      UNION ALL
+             |      SELECT doc_id + 200000, upper(text) FROM dsrc
+             |      WHERE doc_id % 5 = 1)""".stripMargin)},
+       |${IvfKmeans.spillAssignCte("p1", "w1f", 8, Seq("v", "nrm", "qv"),
+          cents = mmCents, maxProbe = 1)},
+       |${mmWaveCte("p1", "i0", "dd1", "ac1")}""".stripMargin
+
   private def mmWaveCte(p: String, idx: String, d: String, a: String): String =
     s"""$d AS (
        |  SELECT DISTINCT p.vec_id FROM $p p JOIN $idx i ON i.cell = p.cell
-       |  WHERE CAST(floor(((${mmDot8("p.v", "i.v")}) / (p.nrm * i.nrm)) * 1e6)
-       |    AS BIGINT) >= 900000),
+       |  WHERE CAST(floor(((${dotSql("p.v", "i.v", 8)}) / (p.nrm * i.nrm)) * 1e6)
+       |    AS BIGINT) >= $MmThreshX1e6),
        |$a AS (
        |  SELECT p.vec_id, p.v, p.nrm, p.qv FROM $p p
        |  LEFT JOIN $d d ON d.vec_id = p.vec_id WHERE d.vec_id IS NULL)""".stripMargin
@@ -481,11 +573,9 @@ object QueriesLlm {
     * candidate join at the widest level `MaxProbe`, materialized.
     * Narrower levels are `crank` filters over it; each corpus vector
     * lives in one cell, so no dedup. Returns (probes, assigned, cand). */
-  private def ivfNprobe(spark: org.apache.spark.sql.SparkSession, dir: String) = {
-    import graft.operators.IvfKmeans
-    val q = spark.read.parquet(s"$dir/embeddings.parquet")
-      .select(col("vec_id"), IvfKmeans.quantize(col("embedding"), 4000L).as("qv"))
-    val cents = IvfKmeans.train(q, 8, 3)
+  private def ivfNprobe(spark: SparkSession, dir: String) = {
+    val q = IvfKmeans.vectors(embeddings(spark, dir), VecOffset).select("vec_id", "qv")
+    val cents = IvfKmeans.train(q, SemK, SemIters)
     val assigned = IvfKmeans.assign(q, cents)
       .select(col("vec_id"), col("qv"), col("cid").as("cell"))
       .localCheckpoint(true)
@@ -506,16 +596,16 @@ object QueriesLlm {
     * (`afin`), `ps` (probes), `pc` (each probe's ranked cells) and
     * `cand`. */
   private val ivfNprobeCtes: String = {
-    import graft.operators.IvfKmeans.{assignCte, distSql, lloydCtes}
-    s"""${lloydCtes(8, 3, Dim, 4000L)},
-       |${assignCte(3, Dim)},
+    import graft.operators.IvfKmeans.{assignCte, distSql}
+    s"""$semLloydCtes,
+       |${assignCte(SemIters, Dim)},
        |ps AS (SELECT vec_id AS qid, qv AS pqv FROM afin WHERE vec_id % 17 = 0),
        |pc AS (
        |  SELECT qid, pqv, cid AS cell, crank FROM (
        |    SELECT p.qid, p.pqv, c.cid,
        |      row_number() OVER (PARTITION BY p.qid
        |        ORDER BY ${distSql("p.pqv", "c.cqv", Dim)}, c.cid) AS crank
-       |    FROM ps p, c3 c)
+       |    FROM ps p, $semCents c)
        |  WHERE crank <= $MaxProbe),
        |cand AS (
        |  SELECT pc.qid, a.vec_id,
@@ -871,9 +961,7 @@ object QueriesLlm {
         // per-vector norms are computed once on each side, not per pair
         // (sqrt is deterministic, so sim is bit-identical to the inline
         // form the oracle computes)
-        val e = table(spark, dir, "embeddings")
-          .select(col("vec_id"), VF.asDouble(col("embedding")).as("v"))
-          .withColumn("nrm", sqrt(VF.normSq(col("v"))))
+        val e = IvfKmeans.withNorm(embeddings(spark, dir))
         val q = e.filter(col("vec_id") % 50 === 0)
           .select(col("vec_id").as("qid"), col("v").as("qv"), col("nrm").as("qnrm"))
         val w = Window.partitionBy(col("qid")).orderBy(col("sim").desc, col("vec_id"))
@@ -903,10 +991,8 @@ object QueriesLlm {
     // (shuffles by bucket; no broadcast needed when queries are many).
     Q("q45_knn_lsh",
       (spark, dir) => {
-        val e = table(spark, dir, "embeddings")
-          .select(col("vec_id"), VF.asDouble(col("embedding")).as("v"))
+        val e = IvfKmeans.withNorm(embeddings(spark, dir))
           .withColumn("bucket", VF.lshBucket(col("v"), Planes, Dim))
-          .withColumn("nrm", sqrt(VF.normSq(col("v"))))
         val q = e.filter(col("vec_id") % 50 === 0)
           .select(col("vec_id").as("qid"), col("v").as("qv"),
             col("bucket").as("qbucket"), col("nrm").as("qnrm"))
@@ -938,13 +1024,11 @@ object QueriesLlm {
     // q45's bucket join is the scale path).
     Q("q46_dedup_embedding",
       (spark, dir) => {
-        val e = table(spark, dir, "embeddings")
-          .select(col("vec_id"), VF.asDouble(col("embedding")).as("v"))
-          .withColumn("nrm", sqrt(VF.normSq(col("v"))))
+        val e = IvfKmeans.withNorm(embeddings(spark, dir))
         e.as("a").join(broadcast(e.as("b")), col("a.vec_id") < col("b.vec_id"))
           .withColumn("sim", VF.dot(col("a.v"), col("b.v")) / (col("a.nrm") * col("b.nrm")))
           .withColumn("sim_x1e6", VF.quantize1e6(col("sim")))
-          .filter(col("sim_x1e6") >= 400000L)
+          .filter(col("sim_x1e6") >= SemThreshX1e6)
           .select(col("a.vec_id").as("vec_a"), col("b.vec_id").as("vec_b"), col("sim_x1e6"))
           .orderBy(col("vec_a"), col("vec_b"))
       },
@@ -954,14 +1038,13 @@ object QueriesLlm {
         // the O(n^2) join, which is what makes this oracle feasible
         // inline at sf1
         s"""WITH $embCte,
-           |en AS MATERIALIZED (
-           |  SELECT vec_id, v, sqrt(${normSqSql("v")}) AS nrm FROM e)
+           |en AS MATERIALIZED (SELECT vec_id, v, ${normSql("v")} AS nrm FROM e)
            |SELECT vec_a, vec_b, sim_x1e6 FROM (
            |  SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
-           |    CAST(floor(((${dotSql("a.v", "b.v")}) / (a.nrm * b.nrm)) * 1e6)
+           |    CAST(floor(((${dotSql("a.v", "b.v", Dim)}) / (a.nrm * b.nrm)) * 1e6)
            |      AS BIGINT) AS sim_x1e6
            |  FROM en a JOIN en b ON a.vec_id < b.vec_id)
-           |WHERE sim_x1e6 >= 400000
+           |WHERE sim_x1e6 >= $SemThreshX1e6
            |ORDER BY vec_a, vec_b""".stripMargin)),
 
     // -- IVF (inverted-file) ANN: the third point on the ANN ladder —
@@ -978,9 +1061,7 @@ object QueriesLlm {
     // candidate count drops by ~C× vs the brute-force scan.
     Q("q53_knn_ivf",
       (spark, dir) => {
-        val e = table(spark, dir, "embeddings")
-          .select(col("vec_id"), VF.asDouble(col("embedding")).as("v"))
-          .withColumn("nrm", sqrt(VF.normSq(col("v"))))
+        val e = IvfKmeans.withNorm(embeddings(spark, dir))
         val cents = e.filter(col("vec_id") % 40 === 0)
           .select(col("vec_id").as("cid"), col("v").as("cv"), col("nrm").as("cnrm"))
         // nearest-centroid assignment on quantized sims (stable across
@@ -1176,13 +1257,8 @@ object QueriesLlm {
     // multimodal training-data pipeline end to end.
     Q("q58_multimodal_embed",
       (spark, dir) => {
-        val hist = (0 until 8).map(b =>
-          s"size(filter(codes, c -> c div 16 = $b))").mkString(", ")
-        val e = table(spark, dir, "documents")
-          .selectExpr("doc_id",
-            "transform(split(text, ''), c -> ascii(c)) AS codes")
-          .selectExpr("doc_id", s"CAST(array($hist) AS array<double>) AS v")
-          .withColumn("nrm", sqrt(VF.normSq(col("v"))))
+        val e = IvfKmeans.withNorm(table(spark, dir, "documents")
+          .select(col("doc_id"), byteHist(col("text")).as("v")))
         val q = e.filter(col("doc_id") % 37 === 0)
           .select(col("doc_id").as("qid"), col("v").as("qv"), col("nrm").as("qnrm"))
         val w = Window.partitionBy(col("qid")).orderBy(col("sim_x1e6").desc, col("doc_id"))
@@ -1195,30 +1271,17 @@ object QueriesLlm {
             col("doc_id"), col("sim_x1e6"))
           .orderBy(col("qid"), col("rn"))
       },
-      Some {
-        val histSql = (0 until 8).map(b =>
-          s"CAST(len(list_filter(codes, c -> c // 16 = $b)) AS DOUBLE)").mkString(",\n    ")
-        val dot8 = (a: String, b: String) =>
-          s"""list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-             |      [$a[i] * $b[i] FOR i IN generate_series(1, 8)]), (x, y) -> x + y)""".stripMargin
-        val norm = (a: String) =>
-          s"""sqrt(list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-             |      [x * x FOR x IN $a]), (x, y) -> x + y))""".stripMargin
-        // norms hoisted per vector (engine's precomputed-nrm shape;
-        // identical doubles) — the O(q·n) scored join pays one 8-dim
-        // fold per pair instead of three, making the sf1 replay
-        // feasible inline
-        s"""WITH c AS (
-           |  SELECT doc_id, list_transform(string_split_regex(text, ''), c -> ascii(c)) AS codes
-           |  FROM documents),
-           |e AS MATERIALIZED (SELECT doc_id, v, ${norm("v")} AS nrm FROM (
-           |  SELECT doc_id, [
-           |    $histSql] AS v FROM c)),
+      // norms hoisted per vector (engine's precomputed-nrm shape;
+      // identical doubles) — the O(q·n) scored join pays one 8-dim fold
+      // per pair instead of three, making the sf1 replay feasible inline
+      Some(
+        s"""WITH e AS MATERIALIZED (SELECT doc_id, v, ${normSql("v")} AS nrm FROM (
+           |  SELECT doc_id, ${byteHistSql("text")} AS v FROM documents)),
            |q AS (SELECT doc_id AS qid, v AS qv, nrm AS qnrm FROM e
            |      WHERE doc_id % 37 = 0),
            |scored AS (
            |  SELECT q.qid, e.doc_id,
-           |    CAST(floor((${dot8("qv", "e.v")})
+           |    CAST(floor((${dotSql("qv", "e.v", 8)})
            |      / (q.qnrm * e.nrm) * 1e6) AS BIGINT) AS sim_x1e6
            |  FROM q JOIN e ON e.doc_id <> q.qid)
            |SELECT qid, CAST(rn AS BIGINT) AS rn, doc_id, sim_x1e6
@@ -1226,8 +1289,7 @@ object QueriesLlm {
            |        row_number() OVER (PARTITION BY qid
            |          ORDER BY sim_x1e6 DESC, doc_id) AS rn
            |      FROM scored)
-           |WHERE rn <= 3 ORDER BY qid, rn""".stripMargin
-      }),
+           |WHERE rn <= 3 ORDER BY qid, rn""".stripMargin)),
 
     // -- Typed Dataset pipeline: case-class encoders + groupByKey/
     // mapGroups — the per-group imperative escape hatch (the CDS
@@ -2714,7 +2776,6 @@ object QueriesLlm {
     // same one-exchange shape (posexplode + groupBy(cid, dim)).
     Q("q113_kmeans_step",
       (spark, dir) => {
-        import graft.operators.IvfKmeans
         val K8 = 8
         // quantization / seeding / argmin are the shared IvfKmeans
         // expressions (offset 0 — a single step needs no positive-sum
@@ -2860,11 +2921,8 @@ object QueriesLlm {
     // keyed by anything but cell/qid.
     Q("q114_ivf_lifecycle",
       (spark, dir) => {
-        import graft.operators.IvfKmeans
-        val KC = 8; val Iters = 3; val Off = 4000L
-        val q = spark.read.parquet(s"$dir/embeddings.parquet")
-          .select(col("vec_id"), IvfKmeans.quantize(col("embedding"), Off).as("qv"))
-        val cents = IvfKmeans.train(q, KC, Iters)
+        val q = IvfKmeans.vectors(embeddings(spark, dir), VecOffset).select("vec_id", "qv")
+        val cents = IvfKmeans.train(q, SemK, SemIters)
         // one assignment pass against the trained centroids builds the
         // index; materialized once — it feeds both sides of the search
         val assigned = IvfKmeans.assign(q, cents)
@@ -2882,9 +2940,8 @@ object QueriesLlm {
           .orderBy(col("qid"), col("rn"))
       },
       Some {
-        import graft.operators.IvfKmeans
-        s"""WITH ${IvfKmeans.lloydCtes(8, 3, Dim, 4000L)},
-           |${IvfKmeans.assignCte(3, Dim)},
+        s"""WITH $semLloydCtes,
+           |${IvfKmeans.assignCte(SemIters, Dim)},
            |cand AS (
            |  SELECT p.vec_id AS qid, a.vec_id,
            |    ${IvfKmeans.distSql("p.qv", "a.qv", Dim)} AS dist
@@ -2922,14 +2979,9 @@ object QueriesLlm {
     // 9x probe-side explode, never a corpus-side one.
     Q("q115_ann_recall",
       (spark, dir) => {
-        import graft.operators.IvfKmeans
-        val Off = 4000L
-        val e = table(spark, dir, "embeddings")
-          .select(col("vec_id"), VF.asDouble(col("embedding")).as("v"),
-            IvfKmeans.quantize(col("embedding"), Off).as("qv"))
-          .withColumn("nrm", sqrt(VF.normSq(col("v"))))
+        val e = IvfKmeans.vectors(embeddings(spark, dir), VecOffset)
           .withColumn("bucket", VF.lshBucket(col("v"), Planes, Dim))
-        val cents = IvfKmeans.train(e.select(col("vec_id"), col("qv")), 8, 3)
+        val cents = IvfKmeans.train(e.select(col("vec_id"), col("qv")), SemK, SemIters)
         val cells = IvfKmeans.assign(e.select(col("vec_id"), col("qv")), cents)
           .select(col("vec_id"), col("cid").as("cell"))
         // one row per vector with every retrieval key; materialized —
@@ -2962,7 +3014,6 @@ object QueriesLlm {
           .orderBy(col("qid"))
       },
       Some {
-        import graft.operators.IvfKmeans
         def top5Sql(name: String, probes: String, cond: String) =
           s"""${name}s AS (
              |  SELECT p.qid, eb.vec_id,
@@ -2970,8 +3021,8 @@ object QueriesLlm {
              |  FROM $probes p JOIN eb ON eb.vec_id <> p.qid$cond),
              |$name AS (${OperatingPoint.topKSql(s"${name}s", 5, "sim DESC, vec_id")})""".stripMargin
         val flips = (0 until Planes).map(j => s"xor(pbucket, ${1L << j})")
-        s"""WITH ${IvfKmeans.lloydCtes(8, 3, Dim, 4000L)},
-           |${IvfKmeans.assignCte(3, Dim)},
+        s"""WITH $semLloydCtes,
+           |${IvfKmeans.assignCte(SemIters, Dim)},
            |$embCte,
            |eb AS (
            |  SELECT e.vec_id, e.v, ${bucketSql("e.v")} AS bucket, a.cell
@@ -3093,7 +3144,6 @@ object QueriesLlm {
       val Levels = Seq(1, 2, MaxProbe)
       Q("q117_ivf_nprobe",
         (spark, dir) => {
-          import graft.operators.IvfKmeans
           val (probes, assigned, cand) = ivfNprobe(spark, dir)
           def top5(df: org.apache.spark.sql.DataFrame) =
             OperatingPoint.topK(df, 5, col("dist"), col("vec_id"))
@@ -3139,24 +3189,18 @@ object QueriesLlm {
     // sharing both cells.
     Q("q118_semantic_dedup_ivf",
       (spark, dir) => {
-        import graft.operators.IvfKmeans
-        val Off = 4000L
-        val e = table(spark, dir, "embeddings")
-          .select(col("vec_id"), VF.asDouble(col("embedding")).as("v"),
-            IvfKmeans.quantize(col("embedding"), Off).as("qv"))
-          .withColumn("nrm", sqrt(VF.normSq(col("v"))))
-        val cents = IvfKmeans.train(e.select(col("vec_id"), col("qv")), 8, 3)
+        val e = IvfKmeans.vectors(embeddings(spark, dir), VecOffset)
+        val cents = IvfKmeans.train(e.select(col("vec_id"), col("qv")), SemK, SemIters)
         // spill-block + cosine-verify is the shared IvfKmeans
         // definition (one block for q118/q119, the acceptAgainstIndex
         // discipline applied to the embedding family)
-        IvfKmeans.spillPairs(e, cents, 400000L)
+        IvfKmeans.spillPairs(e, cents, SemThreshX1e6)
           .orderBy(col("vec_a"), col("vec_b"))
       },
       Some {
-        import graft.operators.IvfKmeans
-        s"""WITH ${IvfKmeans.lloydCtes(8, 3, Dim, 4000L)},
+        s"""WITH $semLloydCtes,
            |$embCte,
-           |${IvfKmeans.spillPairsCtes(Dim, 400000L, dotSql, normSqSql)}
+           |${IvfKmeans.spillPairsCtes(Dim, SemThreshX1e6, semCents)}
            |SELECT vec_a, vec_b, sim_x1e6 FROM spairs
            |ORDER BY vec_a, vec_b""".stripMargin
       }),
@@ -3177,16 +3221,11 @@ object QueriesLlm {
     // rollup shuffles cluster-count rows only.
     Q("q119_semantic_dedup_pipeline",
       (spark, dir) => {
-        import graft.operators.IvfKmeans
-        val Off = 4000L
-        val e = table(spark, dir, "embeddings")
-          .select(col("vec_id"), VF.asDouble(col("embedding")).as("v"),
-            IvfKmeans.quantize(col("embedding"), Off).as("qv"))
-          .withColumn("nrm", sqrt(VF.normSq(col("v"))))
-        val cents = IvfKmeans.train(e.select(col("vec_id"), col("qv")), 8, 3)
+        val e = IvfKmeans.vectors(embeddings(spark, dir), VecOffset)
+        val cents = IvfKmeans.train(e.select(col("vec_id"), col("qv")), SemK, SemIters)
         // same shared spill-block + verify as q118; only the pair set
         // feeds the clustering here
-        val pairs = IvfKmeans.spillPairs(e, cents, 400000L)
+        val pairs = IvfKmeans.spillPairs(e, cents, SemThreshX1e6)
           .select(col("vec_a"), col("vec_b"))
         graft.operators.ConnectedComponents.components(pairs, "vec_a", "vec_b")
           .groupBy(col("comp"))
@@ -3195,7 +3234,7 @@ object QueriesLlm {
           .agg(count(lit(1)).as("n_clusters"), sum(col("comp")).as("sum_canonical"))
           .orderBy(col("cluster_size"))
       },
-      // r15: class-blocked components. Cell assignment and cosine
+      // Class-blocked components. Cell assignment and cosine
       // depend only on the embedding, so identical vectors form one
       // class: the same-cell pair join runs over class reps, the
       // recursive closure walks the CLASS graph (~100x fewer edges on
@@ -3207,37 +3246,34 @@ object QueriesLlm {
       // copies passing the self-cosine verify — the same membership
       // rule the doc-level graph induces.
       Some {
-        import graft.operators.IvfKmeans
-        s"""WITH RECURSIVE ${IvfKmeans.lloydCtes(8, 3, Dim, 4000L)},
+        s"""WITH RECURSIVE $semLloydCtes,
            |$embCte,
            |ecls AS MATERIALIZED (
            |  SELECT v, list_sort(list(vec_id)) AS dids, min(vec_id) AS rid,
-           |    sqrt(${normSqSql("v")}) AS nrm
+           |    ${normSql("v")} AS nrm
            |  FROM e GROUP BY v),
            |qd AS (
-           |  SELECT rid AS vec_id,
-           |    list_transform(v,
-           |      x -> CAST(floor(CAST(x AS DOUBLE) * 1000) AS BIGINT) + 4000) AS qv
+           |  SELECT rid AS vec_id, ${IvfKmeans.quantizeSql("v", VecOffset)} AS qv
            |  FROM ecls),
-           |${IvfKmeans.spillAssignCte("spc", "qd", Dim, cents = "c3")},
+           |${IvfKmeans.spillAssignCte("spc", "qd", Dim, cents = semCents)},
            |evc AS MATERIALIZED (
            |  SELECT sp.vec_id AS rid, sp.cell, e2.v, e2.nrm
            |  FROM spc sp JOIN ecls e2 ON e2.rid = sp.vec_id),
            |cspairs AS MATERIALIZED (
            |  SELECT DISTINCT ra, rb FROM (
            |    SELECT a.rid AS ra, b.rid AS rb,
-           |      CAST(floor(((${dotSql("a.v", "b.v")}) / (a.nrm * b.nrm)) * 1e6)
+           |      CAST(floor(((${dotSql("a.v", "b.v", Dim)}) / (a.nrm * b.nrm)) * 1e6)
            |        AS BIGINT) AS sim_x1e6
            |    FROM evc a JOIN evc b ON a.cell = b.cell AND a.rid < b.rid)
-           |  WHERE sim_x1e6 >= 400000),
+           |  WHERE sim_x1e6 >= $SemThreshX1e6),
            |active AS (
            |  SELECT ra AS rid FROM cspairs
            |  UNION SELECT rb FROM cspairs
            |  UNION
            |  SELECT rid FROM ecls
            |  WHERE len(dids) >= 2
-           |    AND CAST(floor(((${dotSql("v", "v")}) / (nrm * nrm)) * 1e6)
-           |      AS BIGINT) >= 400000),
+           |    AND CAST(floor(((${dotSql("v", "v", Dim)}) / (nrm * nrm)) * 1e6)
+           |      AS BIGINT) >= $SemThreshX1e6),
            |cedges AS (
            |  SELECT ra AS x, rb AS y FROM cspairs
            |  UNION SELECT rb, ra FROM cspairs),
@@ -3280,31 +3316,14 @@ object QueriesLlm {
     // is corpus/K per probe cell.
     Q("q120_incremental_semantic_dedup",
       (spark, dir) => {
-        import graft.operators.{IvfKmeans, SemanticIndex}
-        val Off = 4000L; val Thresh = 400000L
-        val e = table(spark, dir, "embeddings")
-          .select(col("vec_id"), VF.asDouble(col("embedding")).as("v"),
-            IvfKmeans.quantize(col("embedding"), Off).as("qv"))
-          .withColumn("nrm", sqrt(VF.normSq(col("v"))))
-        val seed = e.filter(col("vec_id") % 2 === 0)
+        val e = IvfKmeans.vectors(embeddings(spark, dir), VecOffset)
         // rank-based seeding (IvfKmeans.seedCents): the restricted
         // training corpus still yields 8 EFFECTIVE cells — a
-        // vec_id < k seed silently halves this index to 4
-        val cents = IvfKmeans.train(seed.select(col("vec_id"), col("qv")), 8, 3)
-          .localCheckpoint(true)
-        // the whole ingest lifecycle is the shared SemanticIndex
-        // operator (one definition for q120/q122/q123/q124)
-        val h = SemanticIndex.Handle(SemanticIndex.store(spark,
-          s"${Fixtures.scratchRoot}/semdedup", "graft_q120_vecs"), cents, Thresh)
-        SemanticIndex.writeEpoch0(h, seed, IndexBuckets)
-        val w1 = e.filter(col("vec_id") % 20 === 1)
-          .withColumn("vec_id", col("vec_id") + 100000L)
-          .unionByName(e.filter(col("vec_id") % 10 === 0)
-            .withColumn("vec_id", col("vec_id") + 200000L))
-        val w2 = e.filter(col("vec_id") % 20 === 11)
-          .withColumn("vec_id", col("vec_id") + 300000L)
-          .unionByName(e.filter(col("vec_id") % 20 === 1)
-            .withColumn("vec_id", col("vec_id") + 400000L))
+        // vec_id < k seed would halve this index to 4. The whole
+        // ingest lifecycle is the shared SemanticIndex operator (one
+        // definition for q120/q122/q123/q124)
+        val h = semanticIndex(spark, e, "semdedup", "graft_q120_vecs")
+        val (w1, w2) = semanticWaves(e)
         SemanticIndex.commit(h, SemanticIndex.acceptWave(h, w1), 1)
         // (replay-accepts-0 — every wave-1 acceptance self-matches its
         // own index entry, probe cell ∈ its spilled cells at cos = 1 —
@@ -3417,26 +3436,9 @@ object QueriesLlm {
     // live ingest pipeline without changing any acceptance decision.
     Q("q122_semantic_index_compaction",
       (spark, dir) => {
-        import graft.operators.{IvfKmeans, SemanticIndex}
-        val Off = 4000L; val Thresh = 400000L
-        val e = table(spark, dir, "embeddings")
-          .select(col("vec_id"), VF.asDouble(col("embedding")).as("v"),
-            IvfKmeans.quantize(col("embedding"), Off).as("qv"))
-          .withColumn("nrm", sqrt(VF.normSq(col("v"))))
-        val seed = e.filter(col("vec_id") % 2 === 0)
-        val cents = IvfKmeans.train(seed.select(col("vec_id"), col("qv")), 8, 3)
-          .localCheckpoint(true)
-        val h = SemanticIndex.Handle(SemanticIndex.store(spark,
-          s"${Fixtures.scratchRoot}/semcompact", "graft_q122_vecs"), cents, Thresh)
-        SemanticIndex.writeEpoch0(h, seed, IndexBuckets)
-        val w1 = e.filter(col("vec_id") % 20 === 1)
-          .withColumn("vec_id", col("vec_id") + 100000L)
-          .unionByName(e.filter(col("vec_id") % 10 === 0)
-            .withColumn("vec_id", col("vec_id") + 200000L))
-        val w2 = e.filter(col("vec_id") % 20 === 11)
-          .withColumn("vec_id", col("vec_id") + 300000L)
-          .unionByName(e.filter(col("vec_id") % 20 === 1)
-            .withColumn("vec_id", col("vec_id") + 400000L))
+        val e = IvfKmeans.vectors(embeddings(spark, dir), VecOffset)
+        val h = semanticIndex(spark, e, "semcompact", "graft_q122_vecs")
+        val (w1, w2) = semanticWaves(e)
         SemanticIndex.commit(h, SemanticIndex.acceptWave(h, w1), 1)
         // ---- THE OPERATION UNDER TEST: collapse epoch file sets and
         // grow capacity 8 -> 16 buckets, at the epoch barrier
@@ -3463,21 +3465,11 @@ object QueriesLlm {
     // q124's retrain, not a side effect of deletes.
     Q("q123_semantic_index_retraction",
       (spark, dir) => {
-        import graft.operators.{IvfKmeans, SemanticIndex}
-        val Off = 4000L; val Thresh = 400000L
-        val e = table(spark, dir, "embeddings")
-          .select(col("vec_id"), VF.asDouble(col("embedding")).as("v"),
-            IvfKmeans.quantize(col("embedding"), Off).as("qv"))
-          .withColumn("nrm", sqrt(VF.normSq(col("v"))))
-        val seed = e.filter(col("vec_id") % 2 === 0)
-        val cents = IvfKmeans.train(seed.select(col("vec_id"), col("qv")), 8, 3)
-          .localCheckpoint(true)
-        val h = SemanticIndex.Handle(SemanticIndex.store(spark,
-          s"${Fixtures.scratchRoot}/semretract", "graft_q123_vecs"), cents, Thresh)
-        SemanticIndex.writeEpoch0(h, seed, IndexBuckets)
+        val e = IvfKmeans.vectors(embeddings(spark, dir), VecOffset)
+        val h = semanticIndex(spark, e, "semretract", "graft_q123_vecs")
         // ---- retract R = every 4th seeded vector (vec_id % 8 == 0):
         // filtered rewrite of the store via the staged swap
-        val tombstones = seed.filter(col("vec_id") % 8 === 0)
+        val tombstones = e.filter(col("vec_id") % 8 === 0)
           .select("vec_id").localCheckpoint(true)
         SemanticIndex.retract(h, tombstones)
         // ---- probe wave: exact copies of RETRACTED vectors (now
@@ -3491,10 +3483,7 @@ object QueriesLlm {
         SemanticIndex.rollup(h)
       },
       Some {
-        import graft.operators.IvfKmeans
-        s"""WITH ${IvfKmeans.lloydCtes(8, 3, Dim, 4000L, " WHERE vec_id % 2 = 0")},
-           |$semEallCte,
-           |sd AS (SELECT vec_id, v, qv FROM eall WHERE vec_id % 2 = 0),
+        s"""WITH $semSeedCtes,
            |ret AS (SELECT vec_id, v, qv FROM sd WHERE vec_id % 8 <> 0),
            |${semSpillCte("i0", "ret")},
            |wave AS (
@@ -3534,29 +3523,16 @@ object QueriesLlm {
     // paid bucketed rewrite, amortized over every later wave.
     Q("q124_semantic_index_retrain",
       (spark, dir) => {
-        import graft.operators.{IvfKmeans, SemanticIndex}
-        val Off = 4000L; val Thresh = 400000L
         val tbl = "graft_q124_vecs"
-        val e = table(spark, dir, "embeddings")
-          .select(col("vec_id"), VF.asDouble(col("embedding")).as("v"),
-            IvfKmeans.quantize(col("embedding"), Off).as("qv"))
-          .withColumn("nrm", sqrt(VF.normSq(col("v"))))
-        val seed = e.filter(col("vec_id") % 2 === 0)
-        val cents0 = IvfKmeans.train(seed.select(col("vec_id"), col("qv")), 8, 3)
-          .localCheckpoint(true)
-        val h = SemanticIndex.Handle(
-          SemanticIndex.store(spark, s"${Fixtures.scratchRoot}/semretrain", tbl),
-          cents0, Thresh)
-        SemanticIndex.writeEpoch0(h, seed, IndexBuckets)
-        val w1 = e.filter(col("vec_id") % 20 === 1)
-          .withColumn("vec_id", col("vec_id") + 100000L)
-          .unionByName(e.filter(col("vec_id") % 10 === 0)
-            .withColumn("vec_id", col("vec_id") + 200000L))
+        val e = IvfKmeans.vectors(embeddings(spark, dir), VecOffset)
+        val h = semanticIndex(spark, e, "semretrain", tbl)
+        val (w1, w2) = semanticWaves(e)
         SemanticIndex.commit(h, SemanticIndex.acceptWave(h, w1), 1)
         // ---- THE OPERATION UNDER TEST: retrain on the committed
         // corpus, reassign the store to the new cells, swap; waves
         // from here on probe the NEW frozen centroids
-        val h2 = SemanticIndex.retrainReassign(h, Off, 8, 3, IndexBuckets * 2)
+        val h2 = SemanticIndex.retrainReassign(h, VecOffset, SemK, SemIters,
+          IndexBuckets * 2)
         // (post-retrain replay idempotence — no committed vector is
         // re-accepted under the new geometry, because its self-match
         // survives any spill that includes the crank-1 cell — is a
@@ -3568,10 +3544,6 @@ object QueriesLlm {
         // under the new geometry — replay idempotence for an index
         // means "never duplicate an existing entry", not "reproduce old
         // rejections".)
-        val w2 = e.filter(col("vec_id") % 20 === 11)
-          .withColumn("vec_id", col("vec_id") + 300000L)
-          .unionByName(e.filter(col("vec_id") % 20 === 1)
-            .withColumn("vec_id", col("vec_id") + 400000L))
         SemanticIndex.commit(h2, SemanticIndex.acceptWave(h2, w2), 2)
         // geometry-visible rollup: per-epoch distinct cells hash the
         // NEW cell assignment, not just membership
@@ -3582,35 +3554,15 @@ object QueriesLlm {
           .orderBy(col("epoch"))
       },
       Some {
-        import graft.operators.IvfKmeans
-        s"""WITH ${IvfKmeans.lloydCtes(8, 3, Dim, 4000L, " WHERE vec_id % 2 = 0")},
-           |$semEallCte,
-           |sd AS (SELECT vec_id, v, qv FROM eall WHERE vec_id % 2 = 0),
-           |${semSpillCte("i0", "sd")},
-           |w1 AS (
-           |  SELECT vec_id + 100000 AS vec_id, v, qv FROM eall WHERE vec_id % 20 = 1
-           |  UNION ALL
-           |  SELECT vec_id + 200000, v, qv FROM eall WHERE vec_id % 10 = 0),
-           |${semProbeCte("p1", "w1")},
-           |${semWaveCte("p1", "i0", "dd1", "ac1")},
+        s"""WITH $semWave1Ctes,
            |cm AS (
            |  SELECT 0 AS epoch, vec_id, v FROM (SELECT DISTINCT vec_id, v FROM i0)
            |  UNION ALL SELECT 1, vec_id, v FROM ac1),
-           |${IvfKmeans.lloydCtes(8, 3, Dim, 4000L,
-              src = "(SELECT vec_id, v AS embedding FROM cm)", pfx = "r")},
-           |rsrc AS (
-           |  SELECT cm.epoch, cm.vec_id, cm.v, r.qv
-           |  FROM cm JOIN rq r ON r.vec_id = cm.vec_id),
-           |${IvfKmeans.spillAssignCte("ri", "rsrc", Dim, Seq("epoch", "v"),
-              cents = "rc3")},
-           |w2 AS (
-           |  SELECT vec_id + 300000 AS vec_id, v, qv FROM eall WHERE vec_id % 20 = 11
-           |  UNION ALL
-           |  SELECT vec_id + 400000, v, qv FROM eall WHERE vec_id % 20 = 1),
-           |${semProbeCte("p2", "w2", cents = "rc3")},
+           |$semRetrainCtes,
+           |${semProbeCte("p2", "w2", cents = retrainCents)},
            |${semWaveCte("p2", "ri", "dd2", "ac2")},
            |${IvfKmeans.spillAssignCte("sp2", "(SELECT vec_id, v, qv FROM ac2)",
-              Dim, Seq("v"), cents = "rc3")},
+              Dim, Seq("v"), cents = retrainCents)},
            |fin AS (SELECT epoch, vec_id, cell FROM ri
            |        UNION ALL SELECT 2, vec_id, cell FROM sp2)
            |SELECT epoch, count(DISTINCT vec_id) AS n_vecs,
@@ -3641,7 +3593,6 @@ object QueriesLlm {
       val Tune = Seq(1, 2); val FloorPct = 50
       Q("q125_ivf_operating_point",
         (spark, dir) => {
-          import graft.operators.IvfKmeans
           val (probes, assigned, cand) = ivfNprobe(spark, dir)
           def top5(df: org.apache.spark.sql.DataFrame) =
             OperatingPoint.topK(df, 5, col("dist"), col("vec_id"))
@@ -3708,9 +3659,7 @@ object QueriesLlm {
           def top5(df: DataFrame) =
             OperatingPoint.topK(df, 5, col("sim_x1e6").desc, col("vec_id"))
           val sim = VF.quantize1e6(VF.dot(col("qv"), col("v")) / (col("qnrm") * col("nrm")))
-          val e = table(spark, dir, "embeddings")
-            .select(col("vec_id"), VF.asDouble(col("embedding")).as("v"))
-            .withColumn("nrm", sqrt(VF.normSq(col("v"))))
+          val e = IvfKmeans.withNorm(embeddings(spark, dir))
             .withColumn("b8", VF.lshBucket(col("v"), Planes, Dim))
             .localCheckpoint(true) // probe side + corpus side + exact leg
           val q = e.filter(col("vec_id") % 17 === 0)
@@ -3867,20 +3816,9 @@ object QueriesLlm {
     // trigger rather than a constant schedule).
     Q("q128_semantic_drift_retrain",
       (spark, dir) => {
-        import graft.operators.{IvfKmeans, SemanticIndex}
-        val Off = 4000L; val Thresh = 400000L
         val tbl = "graft_q128_vecs"
-        val e = table(spark, dir, "embeddings")
-          .select(col("vec_id"), VF.asDouble(col("embedding")).as("v"),
-            IvfKmeans.quantize(col("embedding"), Off).as("qv"))
-          .withColumn("nrm", sqrt(VF.normSq(col("v"))))
-        val seed = e.filter(col("vec_id") % 2 === 0)
-        val cents0 = IvfKmeans.train(seed.select(col("vec_id"), col("qv")), 8, 3)
-          .localCheckpoint(true)
-        val h = SemanticIndex.Handle(
-          SemanticIndex.store(spark, s"${Fixtures.scratchRoot}/semdrift", tbl),
-          cents0, Thresh)
-        SemanticIndex.writeEpoch0(h, seed, IndexBuckets)
+        val e = IvfKmeans.vectors(embeddings(spark, dir), VecOffset)
+        val h = semanticIndex(spark, e, "semdrift", tbl)
         // the drift signal: occupancy skew over ALL store rows (spill
         // included — spill rows are what a probe actually scans)
         def skew(): (Long, Long, Long) = {
@@ -3902,13 +3840,10 @@ object QueriesLlm {
         // never-committed vector (vec_id % 20 = 3), a 1-row broadcast.
         val anchor = e.filter(col("vec_id") % 20 === 3)
           .orderBy(col("vec_id")).limit(1).select(col("v").as("av"))
-        val w2 = e.filter(col("vec_id") % 4 === 3)
-          .crossJoin(broadcast(anchor)) // 1-row side -> broadcast
-          .withColumn("v", zip_with(col("v"), col("av"),
-            (x, a) => x + a * lit(5)))
-          .withColumn("qv", transform(col("v"),
-            x => floor(x * 1000).cast("long") + lit(Off)))
-          .withColumn("nrm", sqrt(VF.normSq(col("v"))))
+        val w2 = IvfKmeans.vectors(e.filter(col("vec_id") % 4 === 3)
+            .crossJoin(broadcast(anchor)) // 1-row side -> broadcast
+            .withColumn("v", zip_with(col("v"), col("av"),
+              (x, a) => x + a * lit(5))), VecOffset)
           .withColumn("vec_id", col("vec_id") + 200000L)
           .select("vec_id", "v", "qv", "nrm")
         SemanticIndex.commit(h, SemanticIndex.acceptWave(h, w2), 2)
@@ -3917,8 +3852,10 @@ object QueriesLlm {
         require(fire2, s"drift trigger held after the drifted wave " +
           s"($mx2 rows max cell, $tot2 total over $nc2 cells)")
         // the decision: retrain fires ONLY because the signal crossed
-        val h2 = if (fire2) SemanticIndex.retrainReassign(h, Off, 8, 3, IndexBuckets * 2)
-                 else h
+        val h2 =
+          if (fire2) SemanticIndex.retrainReassign(h, VecOffset, SemK, SemIters,
+            IndexBuckets * 2)
+          else h
         val (mx3, tot3, nc3) = skew() // post-retrain read (informational)
         val fire3 = mx3 * nc3 * 2 >= tot3 * 3
         // wave 3 probes whatever geometry the decision produced
@@ -3946,7 +3883,6 @@ object QueriesLlm {
         dec.unionByName(roll).orderBy(col("step"))
       },
       Some {
-        import graft.operators.IvfKmeans
         val fireSql = "CASE WHEN max(n) * count(*) * 2 >= sum(n) * 3 " +
           "THEN 1 ELSE 0 END"
         def dSql(step: Int, occ: String) =
@@ -3954,9 +3890,7 @@ object QueriesLlm {
              |  max(n) AS n_max, CAST(sum(n) AS BIGINT) AS n_total,
              |  count(*) AS n_cells, CAST($fireSql AS BIGINT) AS fired
              |FROM $occ""".stripMargin
-        s"""WITH ${IvfKmeans.lloydCtes(8, 3, Dim, 4000L, " WHERE vec_id % 2 = 0")},
-           |$semEallCte,
-           |sd AS (SELECT vec_id, v, qv FROM eall WHERE vec_id % 2 = 0),
+        s"""WITH $semSeedCtes,
            |${semSpillCte("i0", "sd")},
            |w1 AS (SELECT vec_id + 100000 AS vec_id, v, qv FROM eall
            |       WHERE vec_id % 20 = 1),
@@ -3970,11 +3904,10 @@ object QueriesLlm {
            |an AS (SELECT v AS av FROM eall WHERE vec_id % 20 = 3
            |       ORDER BY vec_id LIMIT 1),
            |w2 AS (
-           |  SELECT e.vec_id + 200000 AS vec_id,
-           |    [e.v[i] + an.av[i] * 5 FOR i IN generate_series(1, $Dim)] AS v,
-           |    [CAST(floor((e.v[i] + an.av[i] * 5) * 1000) AS BIGINT) + 4000
-           |     FOR i IN generate_series(1, $Dim)] AS qv
-           |  FROM eall e, an WHERE e.vec_id % 4 = 3),
+           |  SELECT vec_id, v, ${IvfKmeans.quantizeSql("v", VecOffset)} AS qv FROM (
+           |    SELECT e.vec_id + 200000 AS vec_id,
+           |      [e.v[i] + an.av[i] * 5 FOR i IN generate_series(1, $Dim)] AS v
+           |    FROM eall e, an WHERE e.vec_id % 4 = 3)),
            |${semProbeCte("p2", "w2")},
            |${semWaveCte("p2", "i1", "dd2", "ac2")},
            |${semSpillCte("sp2", "ac2")},
@@ -3985,20 +3918,14 @@ object QueriesLlm {
            |  SELECT 0 AS epoch, vec_id, v FROM (SELECT DISTINCT vec_id, v FROM i0)
            |  UNION ALL SELECT 1, vec_id, v FROM ac1
            |  UNION ALL SELECT 2, vec_id, v FROM ac2),
-           |${IvfKmeans.lloydCtes(8, 3, Dim, 4000L,
-              src = "(SELECT vec_id, v AS embedding FROM cm)", pfx = "r")},
-           |rsrc AS (
-           |  SELECT cm.epoch, cm.vec_id, cm.v, r.qv
-           |  FROM cm JOIN rq r ON r.vec_id = cm.vec_id),
-           |${IvfKmeans.spillAssignCte("ri", "rsrc", Dim, Seq("epoch", "v"),
-              cents = "rc3")},
+           |$semRetrainCtes,
            |occ3 AS (SELECT cell, count(*) AS n FROM ri GROUP BY cell),
            |w3 AS (SELECT vec_id + 300000 AS vec_id, v, qv FROM eall
            |       WHERE vec_id % 20 = 11),
-           |${semProbeCte("p3", "w3", cents = "rc3")},
+           |${semProbeCte("p3", "w3", cents = retrainCents)},
            |${semWaveCte("p3", "ri", "dd3", "ac3")},
            |${IvfKmeans.spillAssignCte("sp3", "(SELECT vec_id, v, qv FROM ac3)",
-              Dim, Seq("v"), cents = "rc3")},
+              Dim, Seq("v"), cents = retrainCents)},
            |fin AS (SELECT epoch, vec_id, cell FROM ri
            |        UNION ALL SELECT 3, vec_id, cell FROM sp3),
            |roll AS (
@@ -4046,16 +3973,10 @@ object QueriesLlm {
       val Ladder = Seq(400000L, 550000L, 700000L); val FloorPct = 95
       Q("q129_semantic_threshold_point",
         (spark, dir) => {
-          import graft.operators.IvfKmeans
-          import org.apache.spark.sql.{Column, DataFrame}
-          val Off = 4000L
-          val e = table(spark, dir, "embeddings")
-            .select(col("vec_id"), VF.asDouble(col("embedding")).as("v"),
-              IvfKmeans.quantize(col("embedding"), Off).as("qv"))
-            .withColumn("nrm", sqrt(VF.normSq(col("v"))))
+          import org.apache.spark.sql.Column
+          val e = IvfKmeans.vectors(embeddings(spark, dir), VecOffset)
           val seed = e.filter(col("vec_id") % 2 === 0)
-          val cents = IvfKmeans.train(seed.select(col("vec_id"), col("qv")), 8, 3)
-            .localCheckpoint(true)
+          val cents = SemanticIndex.trainCells(seed, SemK, SemIters)
           // in-memory 2x-spill index (q118's shape — the operating
           // point is CONFIG, not state; the persistent-store lifecycle
           // is q120/q122-q124's job)
@@ -4073,16 +3994,14 @@ object QueriesLlm {
               .agg(coalesce(max(VF.quantize1e6(VF.dot(col("v"), col("iv"))
                 / (col("nrm") * col("inrm")))), lit(-1L)).as("mc"))
           def remix(src: DataFrame, comp: DataFrame, compCol: String,
-                    eps: Column, offset: Long): DataFrame = src
-            .crossJoin(broadcast(comp)) // 1-row side -> broadcast
-            .withColumn("eps", eps)
-            .withColumn("v", zip_with(col("v"), col(compCol),
-              (x, p) => x + p * col("eps")))
-            .withColumn("qv", transform(col("v"),
-              x => floor(x * 1000).cast("long") + lit(Off)))
-            .withColumn("nrm", sqrt(VF.normSq(col("v"))))
-            .withColumn("vec_id", col("vec_id") + offset)
-            .select("vec_id", "v", "qv", "nrm")
+                    eps: Column, offset: Long): DataFrame =
+            IvfKmeans.vectors(src
+                .crossJoin(broadcast(comp)) // 1-row side -> broadcast
+                .withColumn("eps", eps)
+                .withColumn("v", zip_with(col("v"), col(compCol),
+                  (x, p) => x + p * col("eps"))), VecOffset)
+              .withColumn("vec_id", col("vec_id") + offset)
+              .select("vec_id", "v", "qv", "nrm")
           val partner = e.filter(col("vec_id") % 20 === 3)
             .orderBy(col("vec_id")).limit(1).select(col("v").as("pv"))
           val anchorC = seed.orderBy(col("vec_id")).limit(1)
@@ -4125,17 +4044,13 @@ object QueriesLlm {
             .orderBy(col("sect"), col("id"))
         },
         Some {
-          import graft.operators.IvfKmeans
           def mixSql(where: String, comp: String, compCol: String,
                      eps: String, offset: Long) =
-            s"""SELECT e.vec_id + $offset AS vec_id,
-               |  [e.v[i] + $compCol[i] * ($eps) FOR i IN generate_series(1, $Dim)] AS v,
-               |  [CAST(floor((e.v[i] + $compCol[i] * ($eps)) * 1000) AS BIGINT) + 4000
-               |   FOR i IN generate_series(1, $Dim)] AS qv
-               |FROM eall e, $comp WHERE $where""".stripMargin
-          s"""WITH ${IvfKmeans.lloydCtes(8, 3, Dim, 4000L, " WHERE vec_id % 2 = 0")},
-             |$semEallCte,
-             |sd AS (SELECT vec_id, v, qv FROM eall WHERE vec_id % 2 = 0),
+            s"""SELECT vec_id, v, ${IvfKmeans.quantizeSql("v", VecOffset)} AS qv FROM (
+               |  SELECT e.vec_id + $offset AS vec_id,
+               |    [e.v[i] + $compCol[i] * ($eps) FOR i IN generate_series(1, $Dim)] AS v
+               |  FROM eall e, $comp WHERE $where)""".stripMargin
+          s"""WITH $semSeedCtes,
              |${semSpillCte("idx", "sd")},
              |pn AS (SELECT v AS pv FROM eall WHERE vec_id % 20 = 3
              |       ORDER BY vec_id LIMIT 1),
@@ -4218,8 +4133,6 @@ object QueriesLlm {
     // of variant count.
     Q("q130_multimodal_ann",
       (spark, dir) => {
-        import graft.operators.IvfKmeans
-        val Kc = 16; val Iters = 2
         // plan-inspection mode (PlanAssertionsSpec): skip the stage
         // materializations so the COMPLETE declarative plan — search
         // join, exact recall leg, floor assert — is assertable end to
@@ -4230,27 +4143,14 @@ object QueriesLlm {
         val planOnly = spark.conf.getOption("graft.planOnly").contains("true")
         def mat(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
           if (planOnly) df else df.localCheckpoint(true)
-        val hist = (0 until 8).map(b =>
-          s"size(filter(codes, c -> c div 16 = $b))").mkString(", ")
         // materialized once — feeds training, assignment, and the
-        // exact tuning leg
-        val e0 = table(spark, dir, "documents")
-          .selectExpr("doc_id",
-            "transform(split(text, ''), c -> ascii(c)) AS codes")
-          .selectExpr("doc_id AS vec_id",
-            s"CAST(array($hist) AS array<double>) AS v")
-          .withColumn("nrm", sqrt(VF.normSq(col("v"))))
-          // quantize the LENGTH-NORMALIZED histogram: raw counts scale
-          // with document length, so an L2 quantizer over them clusters
-          // by length while the search ranks by cosine (direction) —
-          // measured recall@3 was 0.14/0.21 at sf0.01/sf0.1 on the raw
-          // counts vs 0.86+ required. On unit vectors L2 is monotone in
-          // cosine (|a-b|^2 = 2 - 2cos), so the trained cells block by
-          // the SAME geometry the search scores.
-          .withColumn("qv", IvfKmeans.quantize(
-            transform(col("v"), x => x / col("nrm")), 0L))
-        val e = mat(e0)
-        val cents = mat(IvfKmeans.train(e.select(col("vec_id"), col("qv")), Kc, Iters))
+        // exact tuning leg. The quantizer runs on the LENGTH-NORMALIZED
+        // histogram (IvfKmeans.unitVectors): measured recall@3 was
+        // 0.14/0.21 at sf0.01/sf0.1 on the raw counts vs 0.86+ required.
+        val e = mat(IvfKmeans.unitVectors(table(spark, dir, "documents")
+          .select(col("doc_id").as("vec_id"), byteHist(col("text")).as("v"))))
+        val cents = mat(IvfKmeans.train(e.select(col("vec_id"), col("qv")),
+          MmAnnK, MmIters))
         // O(n·K) assignment against the trained frozen quantizer;
         // materialized once — probe side + candidate side + recall
         val assign = mat(IvfKmeans.rankCells(e, "qv", cents, 1)
@@ -4303,40 +4203,24 @@ object QueriesLlm {
           .orderBy(col("sect"), col("qid"), col("n1"), col("n2"))
       },
       Some {
-        import graft.operators.IvfKmeans
-        val histSql = (0 until 8).map(b =>
-          s"CAST(len(list_filter(codes, c -> c // 16 = $b)) AS DOUBLE)")
-          .mkString(",\n    ")
-        val dot8 = (a: String, b: String) =>
-          s"""list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-             |      [$a[i] * $b[i] FOR i IN generate_series(1, 8)]), (x, y) -> x + y)""".stripMargin
-        val norm8 = (a: String) =>
-          s"""sqrt(list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-             |      [x * x FOR x IN $a]), (x, y) -> x + y))""".stripMargin
-        s"""WITH mcodes AS (
-           |  SELECT doc_id, list_transform(string_split_regex(text, ''), c -> ascii(c)) AS codes
-           |  FROM documents),
-           |he AS (SELECT doc_id AS vec_id, [
-           |    $histSql] AS v FROM mcodes),
-           |hn AS (SELECT vec_id, v, ${norm8("v")} AS nrm FROM he),
-           |${IvfKmeans.lloydCtes(16, 2, 8, 0L,
+        val simSql = s"""CAST(floor(((${dotSql("q.pv", "a.v", 8)}) / (q.pnrm * a.nrm)) * 1e6)
+           |      AS BIGINT) AS sim_x1e6""".stripMargin
+        s"""WITH he AS (SELECT doc_id AS vec_id, ${byteHistSql("text")} AS v FROM documents),
+           |hn AS (SELECT vec_id, v, ${normSql("v")} AS nrm FROM he),
+           |${IvfKmeans.lloydCtes(MmAnnK, MmIters, 8, 0L,
               src = "(SELECT vec_id, [x / nrm FOR x IN v] AS embedding FROM hn)")},
-           |${IvfKmeans.assignCte(2, 8)},
+           |${IvfKmeans.assignCte(MmIters, 8)},
            |ev AS MATERIALIZED (
-           |  SELECT a.vec_id, a.cell, h.v, ${norm8("h.v")} AS nrm
+           |  SELECT a.vec_id, a.cell, h.v, ${normSql("h.v")} AS nrm
            |  FROM afin a JOIN he h USING (vec_id)),
            |qs AS (SELECT vec_id AS qid, v AS pv, nrm AS pnrm, cell FROM ev
            |       WHERE vec_id % 37 = 0),
            |cand AS (
-           |  SELECT q.qid, a.vec_id,
-           |    CAST(floor(((${dot8("q.pv", "a.v")}) / (q.pnrm * a.nrm)) * 1e6)
-           |      AS BIGINT) AS sim_x1e6
+           |  SELECT q.qid, a.vec_id, $simSql
            |  FROM qs q JOIN ev a ON a.cell = q.cell AND a.vec_id <> q.qid),
            |srv AS (${OperatingPoint.topKSql("cand", 3, "sim_x1e6 DESC, vec_id")}),
            |exd AS (
-           |  SELECT q.qid, a.vec_id,
-           |    CAST(floor(((${dot8("q.pv", "a.v")}) / (q.pnrm * a.nrm)) * 1e6)
-           |      AS BIGINT) AS sim_x1e6
+           |  SELECT q.qid, a.vec_id, $simSql
            |  FROM qs q JOIN ev a ON a.vec_id <> q.qid
            |  WHERE q.qid % 74 = 0),
            |ex AS (${OperatingPoint.topKSql("exd", 3, "sim_x1e6 DESC, vec_id")}),
@@ -4385,33 +4269,22 @@ object QueriesLlm {
     // never the corpus).
     Q("q131_semantic_hotcell_cap",
       (spark, dir) => {
-        import graft.operators.IvfKmeans
         import graft.functions.DedupConfig.HotBucketCap
-        val Off = 4000L; val Thresh = 400000L; val Kc = 8
-        val base = table(spark, dir, "embeddings")
-          .select(col("vec_id"), col("embedding"))
-        val anchor = base.orderBy(col("vec_id")).limit(1)
-          .select(col("embedding").as("ae"))
+        val base = embeddings(spark, dir)
+        val anchor = base.orderBy(col("vec_id")).limit(1).select(col("v").as("av"))
         val corpus = base
           .unionByName(base.filter(col("vec_id") % 7 === 0)
             .withColumn("vec_id", col("vec_id") + 100000L))
           .unionByName(base
             .crossJoin(broadcast(anchor)) // 1-row side -> broadcast
-            .select((col("vec_id") + 200000L).as("vec_id"),
-              col("ae").as("embedding")))
+            .select((col("vec_id") + 200000L).as("vec_id"), col("av").as("v")))
         // materialized once: feeds training AND the spill assignment
-        val e = corpus.select(col("vec_id"),
-            VF.asDouble(col("embedding")).as("v"),
-            IvfKmeans.quantize(col("embedding"), Off).as("qv"))
-          .withColumn("nrm", sqrt(VF.normSq(col("v"))))
-          .localCheckpoint(true)
-        val cents = IvfKmeans.train(e.select(col("vec_id"), col("qv")), Kc, 3)
-          .localCheckpoint(true)
-        IvfKmeans.cappedSpillPairs(e, cents, Thresh, Kc, HotBucketCap)
+        val e = IvfKmeans.vectors(corpus, VecOffset).localCheckpoint(true)
+        val cents = SemanticIndex.trainCells(e, SemK, SemIters)
+        IvfKmeans.cappedSpillPairs(e, cents, SemThreshX1e6, SemK, HotBucketCap)
           .orderBy(col("vec_a"), col("vec_b"))
       },
       Some {
-        import graft.operators.IvfKmeans
         import graft.functions.DedupConfig.HotBucketCap
         s"""WITH corp AS (
            |  SELECT vec_id, embedding FROM embeddings
@@ -4422,21 +4295,21 @@ object QueriesLlm {
            |  SELECT e.vec_id + 200000, a.embedding
            |  FROM embeddings e,
            |    (SELECT embedding FROM embeddings ORDER BY vec_id LIMIT 1) a),
-           |${IvfKmeans.lloydCtes(8, 3, Dim, 4000L, src = "corp")},
+           |${IvfKmeans.lloydCtes(SemK, SemIters, Dim, VecOffset, src = "corp")},
            |ce AS (SELECT vec_id, [CAST(x AS DOUBLE) FOR x IN embedding] AS v
            |       FROM corp),
-           |${IvfKmeans.spillAssignCte("sp", "q", Dim, Seq("qv"))},
-           |${IvfKmeans.capCellsCte("sp", 8, HotBucketCap)},
+           |${IvfKmeans.spillAssignCte("sp", "q", Dim, Seq("qv"), semCents)},
+           |${IvfKmeans.capCellsCte("sp", SemK, HotBucketCap)},
            |ev AS MATERIALIZED (
-           |  SELECT s.vec_id, s.cell, s.grp, c.v, sqrt(${normSqSql("c.v")}) AS nrm
+           |  SELECT s.vec_id, s.cell, s.grp, c.v, ${normSql("c.v")} AS nrm
            |  FROM spcap s JOIN ce c USING (vec_id))
            |SELECT vec_a, vec_b, sim_x1e6 FROM (
            |  SELECT DISTINCT a.vec_id AS vec_a, b.vec_id AS vec_b,
-           |    CAST(floor(((${dotSql("a.v", "b.v")}) / (a.nrm * b.nrm)) * 1e6)
+           |    CAST(floor(((${dotSql("a.v", "b.v", Dim)}) / (a.nrm * b.nrm)) * 1e6)
            |      AS BIGINT) AS sim_x1e6
            |  FROM ev a JOIN ev b ON a.cell = b.cell AND a.grp = b.grp
            |    AND a.vec_id < b.vec_id)
-           |WHERE sim_x1e6 >= 400000
+           |WHERE sim_x1e6 >= $SemThreshX1e6
            |ORDER BY vec_a, vec_b""".stripMargin
       }),
 
@@ -4475,30 +4348,14 @@ object QueriesLlm {
     Q("q132_stream_semantic_dedup",
       (spark, dir) => {
         import org.apache.spark.sql.streaming.Trigger
-        import graft.operators.{IvfKmeans, SemanticIndex}
-        val Off = 4000L; val Thresh = 400000L
         val root = s"${Fixtures.scratchRoot}/semstream"
         // stream sources, checkpoints and stages live beside the index
         Fixtures.rmrf(new java.io.File(root))
-        val e = table(spark, dir, "embeddings")
-          .select(col("vec_id"), VF.asDouble(col("embedding")).as("v"),
-            IvfKmeans.quantize(col("embedding"), Off).as("qv"))
-          .withColumn("nrm", sqrt(VF.normSq(col("v"))))
-        val seed = e.filter(col("vec_id") % 2 === 0)
-        val cents = IvfKmeans.train(seed.select(col("vec_id"), col("qv")), 8, 3)
-          .localCheckpoint(true)
+        val e = IvfKmeans.vectors(embeddings(spark, dir), VecOffset)
         val tbl = "graft_q132_vecs"
-        val h = SemanticIndex.Handle(SemanticIndex.store(spark, root, tbl), cents, Thresh)
-        SemanticIndex.writeEpoch0(h, seed, IndexBuckets)
+        val h = semanticIndex(spark, e, "semstream", tbl)
         // q120's wave strata, verbatim (the shared-oracle contract)
-        val w1 = e.filter(col("vec_id") % 20 === 1)
-          .withColumn("vec_id", col("vec_id") + 100000L)
-          .unionByName(e.filter(col("vec_id") % 10 === 0)
-            .withColumn("vec_id", col("vec_id") + 200000L))
-        val w2 = e.filter(col("vec_id") % 20 === 11)
-          .withColumn("vec_id", col("vec_id") + 300000L)
-          .unionByName(e.filter(col("vec_id") % 20 === 1)
-            .withColumn("vec_id", col("vec_id") + 400000L))
+        val (w1, w2) = semanticWaves(e)
         // 4 files per wave source -> 2 micro-batches at trigger=2
         w1.repartition(4).write.mode("overwrite").parquet(s"$root/src1")
         w2.repartition(4).write.mode("overwrite").parquet(s"$root/src2")
@@ -4589,44 +4446,8 @@ object QueriesLlm {
     // per epoch, decode/feature extraction is map-only.
     Q("q133_multimodal_index",
       (spark, dir) => {
-        import graft.operators.{IvfKmeans, SemanticIndex}
-        val Thresh = 900000L
-        val hist = (0 until 8).map(b =>
-          s"size(filter(codes, c -> c div 16 = $b))").mkString(", ")
-        def feats(src: org.apache.spark.sql.DataFrame) = src
-          .selectExpr("vec_id", "transform(split(txt, ''), c -> ascii(c)) AS codes")
-          .selectExpr("vec_id", s"CAST(array($hist) AS array<double>) AS v")
-          .withColumn("nrm", sqrt(VF.normSq(col("v"))))
-          .withColumn("qv", IvfKmeans.quantize(
-            transform(col("v"), x => x / col("nrm")), 0L))
-        val d = table(spark, dir, "documents").select(col("doc_id"), col("text"))
-        val seed = feats(d.select(col("doc_id").as("vec_id"),
-            col("text").as("txt")))
-          .localCheckpoint(true) // feeds training AND the epoch-0 write
-        val cents = IvfKmeans.train(seed.select(col("vec_id"), col("qv")), 8, 2)
-          .localCheckpoint(true)
-        val h = SemanticIndex.Handle(SemanticIndex.store(spark,
-          s"${Fixtures.scratchRoot}/mmindex", "graft_q133_mm"), cents, Thresh)
-        SemanticIndex.writeEpoch0(h, seed, IndexBuckets)
-        val w1 = feats(
-          d.filter(col("doc_id") % 5 === 0)
-            .select((col("doc_id") + 100000L).as("vec_id"), col("text").as("txt"))
-          .unionByName(d.filter(col("doc_id") % 5 === 1)
-            .select((col("doc_id") + 200000L).as("vec_id"),
-              upper(col("text")).as("txt"))))
-        val acc1 = SemanticIndex.acceptWave(h, w1)
-        // stratum membership BY CONSTRUCTION, not by id range: on
-        // key-shifted gen_sf corpora doc_id reaches k·1e6, so
-        // `vec_id < 200000` no longer bounds the stratum — the
-        // semi-join against the planted id frame does at any scale
-        val copy1 = d.filter(col("doc_id") % 5 === 0)
-          .select((col("doc_id") + 100000L).as("vec_id"))
-        require(acc1.join(copy1, Seq("vec_id"), "left_semi").count() == 0L,
-          "an exact byte-copy passed the multimodal accept gate")
-        require(acc1.count() > 0L,
-          "the case-flipped stratum was wholly rejected — accept path dead")
-        SemanticIndex.commit(h, acc1, 1)
-        val w2 = feats(
+        val (d, h, _) = mmIndexWave1(spark, dir, "mmindex", "graft_q133_mm")
+        val w2 = mmFeats(
           d.filter(col("doc_id") % 5 === 1)
             .select((col("doc_id") + 300000L).as("vec_id"),
               upper(col("text")).as("txt"))
@@ -4644,24 +4465,10 @@ object QueriesLlm {
         SemanticIndex.rollup(h)
       },
       Some {
-        import graft.operators.IvfKmeans
-        s"""WITH dsrc AS (SELECT doc_id, text FROM documents),
-           |${mmFeatsCte("f0", "(SELECT doc_id AS vec_id, text AS txt FROM dsrc)")},
-           |${IvfKmeans.lloydCtes(8, 2, 8, 0L,
-              src = "(SELECT vec_id, [x / nrm FOR x IN v] AS embedding FROM f0)")},
-           |${IvfKmeans.spillAssignCte("i0", "f0", 8, Seq("v", "nrm"), cents = "c2")},
-           |${mmFeatsCte("w1f",
-              """(SELECT doc_id + 100000 AS vec_id, text AS txt FROM dsrc
-                 |      WHERE doc_id % 5 = 0
-                 |      UNION ALL
-                 |      SELECT doc_id + 200000, upper(text) FROM dsrc
-                 |      WHERE doc_id % 5 = 1)""".stripMargin)},
-           |${IvfKmeans.spillAssignCte("p1", "w1f", 8, Seq("v", "nrm", "qv"),
-              cents = "c2", maxProbe = 1)},
-           |${mmWaveCte("p1", "i0", "dd1", "ac1")},
+        s"""WITH $mmWave1Ctes,
            |${IvfKmeans.spillAssignCte("sp1",
               "(SELECT vec_id, v, nrm, qv FROM ac1)", 8, Seq("v", "nrm"),
-              cents = "c2")},
+              cents = mmCents)},
            |i1 AS (SELECT vec_id, v, nrm, cell FROM i0
            |       UNION ALL SELECT vec_id, v, nrm, cell FROM sp1),
            |${mmFeatsCte("w2f",
@@ -4671,7 +4478,7 @@ object QueriesLlm {
                  |      SELECT doc_id + 400000, text || upper(text) FROM dsrc
                  |      WHERE doc_id % 5 = 2)""".stripMargin)},
            |${IvfKmeans.spillAssignCte("p2", "w2f", 8, Seq("v", "nrm", "qv"),
-              cents = "c2", maxProbe = 1)},
+              cents = mmCents, maxProbe = 1)},
            |${mmWaveCte("p2", "i1", "dd2", "ac2")},
            |committed AS (
            |  SELECT 0 AS epoch, vec_id FROM (SELECT DISTINCT vec_id FROM i0)
@@ -4730,10 +4537,8 @@ object QueriesLlm {
       val Ladder = Seq(4, 8, 16, 64, 256); val OccBudget = 96L; val Iters = 2
       Q("q134_index_geometry_point",
         (spark, dir) => {
-          import graft.operators.IvfKmeans
-          val Off = 4000L
-          val q = table(spark, dir, "embeddings")
-            .select(col("vec_id"), IvfKmeans.quantize(col("embedding"), Off).as("qv"))
+          val q = IvfKmeans.vectors(embeddings(spark, dir), VecOffset)
+            .select("vec_id", "qv")
             .localCheckpoint(true) // 5 trainings + 5 full assignments
           val sample = q.filter(col("vec_id") % 3 === 0)
           val occs = Ladder.map { k =>
@@ -4769,9 +4574,8 @@ object QueriesLlm {
             .orderBy(col("sect"), col("id"))
         },
         Some {
-          import graft.operators.IvfKmeans
           val chains = Ladder.map { k =>
-            s"""${IvfKmeans.lloydCtes(k, Iters, Dim, 4000L,
+            s"""${IvfKmeans.lloydCtes(k, Iters, Dim, VecOffset,
                  " WHERE vec_id % 3 = 0", pfx = s"g$k")},
                |${IvfKmeans.spillAssignCte(s"a$k", "fq", Dim,
                  cents = s"g${k}c$Iters", maxProbe = 1)},
@@ -4786,9 +4590,7 @@ object QueriesLlm {
             s"SELECT CAST($k AS BIGINT) AS k, cell, n FROM o$k")
             .mkString("\n  UNION ALL\n  ")
           s"""WITH fq AS (
-             |  SELECT vec_id,
-             |    list_transform(embedding,
-             |      x -> CAST(floor(CAST(x AS DOUBLE) * 1000) AS BIGINT) + 4000) AS qv
+             |  SELECT vec_id, ${IvfKmeans.quantizeSql("embedding", VecOffset)} AS qv
              |  FROM embeddings),
              |$chains,
              |lad AS (
@@ -5032,39 +4834,7 @@ object QueriesLlm {
     // the barrier); SURVEY §5.5 retention discipline.
     Q("q136_multimodal_compact_retract",
       (spark, dir) => {
-        import graft.operators.{IvfKmeans, SemanticIndex}
-        val Thresh = 900000L
-        val hist = (0 until 8).map(b =>
-          s"size(filter(codes, c -> c div 16 = $b))").mkString(", ")
-        def feats(src: org.apache.spark.sql.DataFrame) = src
-          .selectExpr("vec_id", "transform(split(txt, ''), c -> ascii(c)) AS codes")
-          .selectExpr("vec_id", s"CAST(array($hist) AS array<double>) AS v")
-          .withColumn("nrm", sqrt(VF.normSq(col("v"))))
-          .withColumn("qv", IvfKmeans.quantize(
-            transform(col("v"), x => x / col("nrm")), 0L))
-        val d = table(spark, dir, "documents").select(col("doc_id"), col("text"))
-        val seed = feats(d.select(col("doc_id").as("vec_id"),
-            col("text").as("txt")))
-          .localCheckpoint(true) // training + epoch-0 write
-        val cents = IvfKmeans.train(seed.select(col("vec_id"), col("qv")), 8, 2)
-          .localCheckpoint(true)
-        val h = SemanticIndex.Handle(SemanticIndex.store(spark,
-          s"${Fixtures.scratchRoot}/mmcr", "graft_q136_mm"), cents, Thresh)
-        SemanticIndex.writeEpoch0(h, seed, IndexBuckets)
-        val w1 = feats(
-          d.filter(col("doc_id") % 5 === 0)
-            .select((col("doc_id") + 100000L).as("vec_id"), col("text").as("txt"))
-          .unionByName(d.filter(col("doc_id") % 5 === 1)
-            .select((col("doc_id") + 200000L).as("vec_id"),
-              upper(col("text")).as("txt"))))
-        val acc1 = SemanticIndex.acceptWave(h, w1)
-        val copy1 = d.filter(col("doc_id") % 5 === 0)
-          .select((col("doc_id") + 100000L).as("vec_id"))
-        require(acc1.join(copy1, Seq("vec_id"), "left_semi").count() == 0L,
-          "an exact byte-copy passed the multimodal accept gate")
-        require(acc1.count() > 0L,
-          "the case-flipped stratum was wholly rejected — accept path dead")
-        SemanticIndex.commit(h, acc1, 1)
+        val (d, h, acc1) = mmIndexWave1(spark, dir, "mmcr", "graft_q136_mm")
         // ---- THE OPERATIONS UNDER TEST, both at the epoch barrier:
         // collapse epoch file sets + grow capacity nb -> 2nb, then
         // tombstone the full epoch-1 commit set (the accepted ids BY
@@ -5072,7 +4842,7 @@ object QueriesLlm {
         h.store.compact(IndexBuckets * 2)
         SemanticIndex.retract(h, acc1.select("vec_id"))
         // ---- probe wave against the compacted, retracted store
-        val w2 = feats(
+        val w2 = mmFeats(
           d.filter(col("doc_id") % 4 === 2)
             .select((col("doc_id") + 400000L).as("vec_id"), col("text").as("txt"))
           .unionByName(d.filter(col("doc_id") % 5 === 1)
@@ -5102,21 +4872,7 @@ object QueriesLlm {
           .orderBy(col("epoch"))
       },
       Some {
-        import graft.operators.IvfKmeans
-        s"""WITH dsrc AS (SELECT doc_id, text FROM documents),
-           |${mmFeatsCte("f0", "(SELECT doc_id AS vec_id, text AS txt FROM dsrc)")},
-           |${IvfKmeans.lloydCtes(8, 2, 8, 0L,
-              src = "(SELECT vec_id, [x / nrm FOR x IN v] AS embedding FROM f0)")},
-           |${IvfKmeans.spillAssignCte("i0", "f0", 8, Seq("v", "nrm"), cents = "c2")},
-           |${mmFeatsCte("w1f",
-              """(SELECT doc_id + 100000 AS vec_id, text AS txt FROM dsrc
-                 |      WHERE doc_id % 5 = 0
-                 |      UNION ALL
-                 |      SELECT doc_id + 200000, upper(text) FROM dsrc
-                 |      WHERE doc_id % 5 = 1)""".stripMargin)},
-           |${IvfKmeans.spillAssignCte("p1", "w1f", 8, Seq("v", "nrm", "qv"),
-              cents = "c2", maxProbe = 1)},
-           |${mmWaveCte("p1", "i0", "dd1", "ac1")},
+        s"""WITH $mmWave1Ctes,
            |${mmFeatsCte("w2f",
               """(SELECT doc_id + 400000 AS vec_id, text AS txt FROM dsrc
                  |      WHERE doc_id % 4 = 2
@@ -5124,7 +4880,7 @@ object QueriesLlm {
                  |      SELECT doc_id + 500000, upper(text) FROM dsrc
                  |      WHERE doc_id % 5 = 1)""".stripMargin)},
            |${IvfKmeans.spillAssignCte("p2", "w2f", 8, Seq("v", "nrm", "qv"),
-              cents = "c2", maxProbe = 1)},
+              cents = mmCents, maxProbe = 1)},
            |${mmWaveCte("p2", "i0", "dd2", "ac2")},
            |committed AS (
            |  SELECT 0 AS epoch, vec_id FROM (SELECT DISTINCT vec_id FROM i0)
@@ -5184,30 +4940,21 @@ object QueriesLlm {
     // (per-entity, not per-class, sequence bookkeeping).
     Q("q137_multimodal_selective_retract",
       (spark, dir) => {
-        import graft.operators.{IvfKmeans, SemanticIndex}
-        val Thresh = 900000L; val FD = 61
+        val FD = 61
         val histD = (0 until FD).map(b =>
           s"size(filter(bg, x -> x = $b))").mkString(", ")
-        def feats(src: org.apache.spark.sql.DataFrame) = src // (vec_id, txt)
-          .select(col("vec_id"), TF.fingerprint(col("txt")).as("fp"),
-            TF.tokens(lower(col("txt"))).as("t"))
-          .filter(size(col("t")) >= 2)
-          .withColumn("bg", transform(sequence(lit(1), size(col("t")) - 1),
-            i => (TF.polyHash(element_at(col("t"), i)) * 31 +
-              TF.polyHash(element_at(col("t"), i + 1))) % FD))
-          .selectExpr("vec_id", "fp",
-            s"CAST(array($histD) AS array<double>) AS v")
-          .withColumn("nrm", sqrt(VF.normSq(col("v"))))
-          .withColumn("qv", IvfKmeans.quantize(
-            transform(col("v"), x => x / col("nrm")), 0L))
-        val d = table(spark, dir, "documents").select(col("doc_id"), col("text"))
-        val seed = feats(d.select(col("doc_id").as("vec_id"),
-            col("text").as("txt")))
+        val seed = IvfKmeans.unitVectors(table(spark, dir, "documents")
+            .select(col("doc_id").as("vec_id"), TF.fingerprint(col("text")).as("fp"),
+              TF.tokens(lower(col("text"))).as("t"))
+            .filter(size(col("t")) >= 2)
+            .withColumn("bg", transform(sequence(lit(1), size(col("t")) - 1),
+              i => (TF.polyHash(element_at(col("t"), i)) * 31 +
+                TF.polyHash(element_at(col("t"), i + 1))) % FD))
+            .selectExpr("vec_id", "fp", s"CAST(array($histD) AS array<double>) AS v"))
           .localCheckpoint(true) // train + epoch-0 + cover sides + probes
-        val cents = IvfKmeans.train(seed.select(col("vec_id"), col("qv")), 8, 2)
-          .localCheckpoint(true)
         val h = SemanticIndex.Handle(SemanticIndex.store(spark,
-          s"${Fixtures.scratchRoot}/mmsel", "graft_q137_mm"), cents, Thresh)
+            s"${Fixtures.scratchRoot}/mmsel", "graft_q137_mm"),
+          SemanticIndex.trainCells(seed, MmK, MmIters), MmThreshX1e6)
         // the index CARRIES the entity fingerprint as metadata (the
         // per-entity bookkeeping the reference anchor keeps) — so the
         // cover analysis reads fp off the bucket scan with no store
@@ -5287,7 +5034,6 @@ object QueriesLlm {
           .orderBy(col("epoch"))
       },
       Some {
-        import graft.operators.IvfKmeans
         // unrolled 61-term dot: same left-to-right summation order as
         // the prior fold (0.0 + x1 == x1 bit-exact for the nonnegative
         // histogram products), ~an order of magnitude less per-pair
@@ -5328,31 +5074,25 @@ object QueriesLlm {
            |               (acc, x) -> (acc * 31 + x) % $P)) AS h
            |      FROM dt)
            |    WHERE len(h) >= 2)),
-           |fd AS MATERIALIZED (
-           |  SELECT text, rep_id, fp, v, nrm,
-           |    list_transform(v, x -> CAST(floor(x / nrm * 1000) AS BIGINT)) AS qv
-           |  FROM (SELECT text, rep_id, fp, v,
-           |          sqrt(list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-           |            [x * x FOR x IN v]), (a, b) -> a + b)) AS nrm
-           |        FROM fdh)),
+           |fd AS MATERIALIZED (${IvfKmeans.unitVectorsSql("text, rep_id, fp", "fdh")}),
            |f0 AS MATERIALIZED (
            |  SELECT d.doc_id AS vec_id, f.fp, f.v, f.nrm, f.qv
            |  FROM dsrc d JOIN fd f USING (text)),
-           |${IvfKmeans.lloydCtes(8, 2, 61, 0L,
+           |${IvfKmeans.lloydCtes(MmK, MmIters, 61, 0L,
               src = "(SELECT vec_id, [x / nrm FOR x IN v] AS embedding FROM f0)")},
            |${IvfKmeans.spillAssignCte("idd",
               "(SELECT rep_id AS vec_id, fp, v, nrm, qv FROM fd)", 61,
-              Seq("fp", "v", "nrm"), cents = "c2")},
+              Seq("fp", "v", "nrm"), cents = mmCents)},
            |${IvfKmeans.spillAssignCte("pd",
               "(SELECT rep_id AS vec_id, fp, v, nrm, qv FROM fd)", 61,
-              Seq("fp", "v", "nrm"), cents = "c2", maxProbe = 1)},
+              Seq("fp", "v", "nrm"), cents = mmCents, maxProbe = 1)},
            |nfz AS MATERIALIZED (
            |  SELECT p.vec_id, p.fp FROM pd p
            |  WHERE NOT EXISTS (
            |    SELECT 1 FROM idd i
            |    WHERE i.cell = p.cell AND i.fp <> p.fp
            |      AND CAST(floor(((${dot61("p.v", "i.v")}) / (p.nrm * i.nrm))
-           |        * 1e6) AS BIGINT) >= 900000)),
+           |        * 1e6) AS BIGINT) >= $MmThreshX1e6)),
            |xsel AS (SELECT min(vec_id) AS x_id FROM nfz),
            |fpx AS (SELECT f.fp AS fp_x FROM fd f, xsel WHERE f.rep_id = xsel.x_id),
            |ysel AS (SELECT min(n.vec_id) AS y_id FROM nfz n, fpx
@@ -5369,11 +5109,11 @@ object QueriesLlm {
            |  SELECT f.vec_id + 800000000, f.v, f.nrm, f.qv
            |  FROM f0 f, fpy WHERE f.fp = fpy.fp_y),
            |${IvfKmeans.spillAssignCte("pp", "pw", 61, Seq("v", "nrm"),
-              cents = "c2", maxProbe = 1)},
+              cents = mmCents, maxProbe = 1)},
            |dd AS (
            |  SELECT DISTINCT p.vec_id FROM pp p JOIN st2d i ON i.cell = p.cell
            |  WHERE CAST(floor(((${dot61("p.v", "i.v")}) / (p.nrm * i.nrm)) * 1e6)
-           |    AS BIGINT) >= 900000),
+           |    AS BIGINT) >= $MmThreshX1e6),
            |ac2 AS (
            |  SELECT p.vec_id FROM (SELECT DISTINCT vec_id FROM pp) p
            |  LEFT JOIN dd d ON d.vec_id = p.vec_id WHERE d.vec_id IS NULL),

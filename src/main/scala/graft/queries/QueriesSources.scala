@@ -949,27 +949,19 @@ object QueriesSources {
     // duplicated, or mis-bucketed by the bucketed write fails the hash.
     Q("q98_bucketed_join",
       (spark, dir) => {
-        val ordPath = s"$FixtureDir/bkt_orders"
-        val liPath = s"$FixtureDir/bkt_lineitem"
-        // start from a clean slate AND drop any session-cached listing
-        // for these paths: overwriting an external-table path whose
-        // files a previous run wrote can otherwise leave a stale
-        // file-status entry behind (observed once as FILE_NOT_EXIST on
-        // the just-written table in a 97-query session)
-        spark.sql("DROP TABLE IF EXISTS graft_q98_orders")
-        spark.sql("DROP TABLE IF EXISTS graft_q98_lineitem")
-        Fixtures.rmrf(new java.io.File(ordPath))
-        Fixtures.rmrf(new java.io.File(liPath))
-        graft.sources.Bucketed.writeBucketed(
-          table(spark, dir, "orders")
-            .select(col("o_orderkey"), col("o_orderpriority")),
-          "graft_q98_orders", 8, Seq("o_orderkey"), path = Some(ordPath))
-        graft.sources.Bucketed.writeBucketed(
-          table(spark, dir, "lineitem")
-            .select(col("l_orderkey"), col("l_quantity"), col("l_extendedprice")),
-          "graft_q98_lineitem", 8, Seq("l_orderkey"), path = Some(liPath))
-        spark.catalog.refreshByPath(ordPath)
-        spark.catalog.refreshByPath(liPath)
+        // one store of both sides, seeded from a clean slate: `seed`
+        // drops the catalog entries and directories first and refreshes
+        // the paths after (an overwritten external-table path can
+        // otherwise leave a stale file-status entry behind — observed
+        // once as FILE_NOT_EXIST on the just-written table)
+        graft.sources.Bucketed.EpochStore(spark, FixtureDir, Seq(
+            "graft_q98_orders" -> Seq("o_orderkey"),
+            "graft_q98_lineitem" -> Seq("l_orderkey")))
+          .seed(8,
+            table(spark, dir, "orders")
+              .select(col("o_orderkey"), col("o_orderpriority")),
+            table(spark, dir, "lineitem")
+              .select(col("l_orderkey"), col("l_quantity"), col("l_extendedprice")))
         spark.table("graft_q98_lineitem")
           .join(spark.table("graft_q98_orders"),
             col("l_orderkey") === col("o_orderkey"))

@@ -92,9 +92,7 @@ object QueriesStreaming {
       (spark, dir) => {
         val root = s"${Fixtures.scratchRoot}/streamgate"
         val src = s"$root/src"
-        val store = s"$root/store"
         val storeTable = "graft_q91_store"
-        spark.sql(s"DROP TABLE IF EXISTS $storeTable")
         Fixtures.rmrf(new java.io.File(root))
         table(spark, dir, "events")
           .select(col("event_id"), col("user_id"), col("event_type"))
@@ -103,9 +101,9 @@ object QueriesStreaming {
         // seed an empty BUCKETED store so every batch anti-joins the
         // same table (no first-batch special case) and the store scan
         // always reports its HashPartitioning to the planner
-        graft.sources.Bucketed.writeBucketed(
-          spark.read.parquet(src).limit(0), storeTable, 8,
-          Seq("user_id"), path = Some(store))
+        val store = graft.sources.Bucketed.EpochStore(spark, root,
+          Seq(storeTable -> Seq("user_id")))
+        store.seed(8, spark.read.parquet(src).limit(0))
         val schema = spark.read.parquet(src).schema
         def pass(n: Int): Unit = {
           val q = spark.readStream.schema(schema)
@@ -120,8 +118,7 @@ object QueriesStreaming {
                 // materialize BEFORE appending: the write must not
                 // re-read the table it is appending to
                 .localCheckpoint(true)
-              graft.sources.Bucketed.writeBucketed(inserts, storeTable, 8,
-                Seq("user_id"), mode = "append", path = Some(store))
+              store.commit(inserts)
             }
             .start()
           q.awaitTermination()

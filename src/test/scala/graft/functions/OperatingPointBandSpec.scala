@@ -114,40 +114,35 @@ class OperatingPointBandSpec extends SparkSpec {
   }
 
   test("the semantic family's pinned K=8 is q134's measured choice on embeddings") {
-    val e = spark.read.parquet(s"$Sf/embeddings.parquet")
-      .select(col("vec_id"), IvfKmeans.quantize(col("embedding"), 4000L).as("qv"))
+    import DedupConfig.{SemK, VecOffset}
+    val e = IvfKmeans.vectors(graft.queries.QueriesLlm.embeddings(spark, Sf), VecOffset)
+      .select(col("vec_id"), col("qv"))
     val occ = geometryLadder(e, Seq(4, 8, 16, 64, 256), iters = 2) // q134's rungs
     val band = occ.collect { case (k, (cells, total)) if total <= cells * 96 => k }
       .toSeq.sorted
-    assert(band.contains(8),
-      s"pinned semantic K=8 fell out of the occupancy band $band " +
+    assert(band.contains(SemK),
+      s"pinned semantic K=$SemK fell out of the occupancy band $band " +
         s"(occ=$occ) — the embeddings corpus outgrew the family gates' K")
-    assert(band.min == 8,
-      s"q134's choice (smallest fitting rung) moved off 8 to ${band.min} — " +
+    assert(band.min == SemK,
+      s"q134's choice (smallest fitting rung) moved off $SemK to ${band.min} — " +
         s"the pinned family K no longer matches the measured operating point")
   }
 
   test("the multimodal family's pinned Ks sit inside the occupancy band on its feature space") {
-    // q130 pins Kc=16, q133's index pins K=8, both over the 8-bin
+    // q130 pins MmAnnK, q133's index pins MmK, both over the 8-bin
     // byte-histogram feature space of `documents` — a DIFFERENT
     // corpus/feature geometry than q134's embeddings, so the band is
     // measured on the family's own frame (unit-normalized, offset 0,
     // q133's exact derivation)
-    val hist = (0 until 8).map(b =>
-      s"size(filter(codes, c -> c div 16 = $b))").mkString(", ")
-    val q = docs
-      .selectExpr("doc_id AS vec_id",
-        "transform(split(text, ''), c -> ascii(c)) AS codes")
-      .selectExpr("vec_id", s"CAST(array($hist) AS array<double>) AS v")
-      .withColumn("nrm", sqrt(VectorFunctions.normSq(col("v"))))
-      .withColumn("qv", IvfKmeans.quantize(
-        transform(col("v"), x => x / col("nrm")), 0L))
+    import DedupConfig.{MmAnnK, MmK, MmIters}
+    val q = IvfKmeans.unitVectors(docs
+        .select(col("doc_id").as("vec_id"), VectorFunctions.byteHist(col("text")).as("v")))
       .select(col("vec_id"), col("qv"))
-    val occ = geometryLadder(q, Seq(8, 16), iters = 2)
+    val occ = geometryLadder(q, Seq(MmK, MmAnnK).distinct, iters = MmIters)
     val band = occ.collect { case (k, (cells, total)) if total <= cells * 96 => k }
       .toSeq.sorted
-    assert(band.contains(8) && band.contains(16),
-      s"a pinned multimodal K (q133's 8 / q130's 16) fell out of the " +
+    assert(band.contains(MmK) && band.contains(MmAnnK),
+      s"a pinned multimodal K (q133's $MmK / q130's $MmAnnK) fell out of the " +
         s"occupancy band $band (occ=$occ) — the documents corpus outgrew " +
         s"the family gates' geometry")
   }
@@ -164,26 +159,24 @@ class OperatingPointBandSpec extends SparkSpec {
     // deployment the cover analysis inherits the q134-measured K for
     // the serving corpus instead of this pinned 8 — that hand-off is
     // what bounds its per-cell O((n/K)^2) growth.
+    import DedupConfig.{MmK, MmIters}
     val FD = 61
     val histD = (0 until FD).map(b =>
       s"size(filter(bg, x -> x = $b))").mkString(", ")
-    val q = docs
-      .select(col("doc_id").as("vec_id"),
-        TextFunctions.tokens(lower(col("text"))).as("t"))
-      .filter(size(col("t")) >= 2)
-      .withColumn("bg", transform(sequence(lit(1), size(col("t")) - 1),
-        i => (TextFunctions.polyHash(element_at(col("t"), i)) * 31 +
-          TextFunctions.polyHash(element_at(col("t"), i + 1))) % FD))
-      .selectExpr("vec_id", s"CAST(array($histD) AS array<double>) AS v")
-      .withColumn("nrm", sqrt(VectorFunctions.normSq(col("v"))))
-      .withColumn("qv", IvfKmeans.quantize(
-        transform(col("v"), x => x / col("nrm")), 0L))
+    val q = IvfKmeans.unitVectors(docs
+        .select(col("doc_id").as("vec_id"),
+          TextFunctions.tokens(lower(col("text"))).as("t"))
+        .filter(size(col("t")) >= 2)
+        .withColumn("bg", transform(sequence(lit(1), size(col("t")) - 1),
+          i => (TextFunctions.polyHash(element_at(col("t"), i)) * 31 +
+            TextFunctions.polyHash(element_at(col("t"), i + 1))) % FD))
+        .selectExpr("vec_id", s"CAST(array($histD) AS array<double>) AS v"))
       .select(col("vec_id"), col("qv"))
-    val occ = geometryLadder(q, Seq(4, 8, 16), iters = 2)
+    val occ = geometryLadder(q, Seq(4, 8, 16), iters = MmIters)
     val band = occ.collect { case (k, (cells, total)) if total <= cells * 96 => k }
       .toSeq.sorted
-    assert(band.contains(8),
-      s"q137's pinned K=8 fell out of the occupancy band $band (occ=$occ) " +
+    assert(band.contains(MmK),
+      s"q137's pinned K=$MmK fell out of the occupancy band $band (occ=$occ) " +
         s"on the 61-bin word-bigram frame — the documents corpus outgrew " +
         s"the gate's geometry; re-measure and retune the q137 constant")
   }

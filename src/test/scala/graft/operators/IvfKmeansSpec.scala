@@ -82,4 +82,55 @@ class IvfKmeansSpec extends SparkSpec {
     assert(cents1.select(explode(col("cents")).as("c"))
       .select(col("c.cid")).as[Long].head() == 0L)
   }
+
+  test("property: one quantization serves the float embedding, its double row and the store") {
+    import graft.functions.DedupConfig.{SemThreshX1e6, VecOffset}
+    import graft.functions.{VectorFunctions => VF}
+    // seeded: 240 4-dim float vectors — random values of both signs,
+    // +-0.0, and floats on either side of k/1000, where a rounding
+    // slip in the float -> double -> x1000 chain would move a floor
+    val rnd = new scala.util.Random(20261018L)
+    val edges = (-3 to 3).flatMap { k =>
+      val f = k / 1000f
+      Seq(f, Math.nextUp(f), Math.nextDown(f))
+    } ++ Seq(0.0f, -0.0f)
+    val rows = (0 until 240).map { i =>
+      val x = (0 until 4).map(_ =>
+        if (rnd.nextInt(3) == 0) edges(rnd.nextInt(edges.size))
+        else (rnd.nextGaussian() * 2).toFloat)
+      (i.toLong, x.toArray)
+    }
+    val emb = rows.toDF("vec_id", "embedding")
+    // quantizing the float embedding == quantizing its `asDouble` row
+    val both = IvfKmeans.vectors(
+        emb.select(col("vec_id"), col("embedding"),
+          VF.asDouble(col("embedding")).as("v")), VecOffset)
+      .select(col("vec_id"),
+        IvfKmeans.quantize(col("embedding"), VecOffset).as("qe"), col("qv"))
+      .as[(Long, Seq[Long], Seq[Long])].collect()
+    assert(both.length == 240)
+    both.foreach { case (id, qe, qv) =>
+      assert(qe == qv, s"vec $id: float quantized to $qe, double row to $qv")
+      // and both are floor(double(x) * 1000) + offset
+      assert(qv == rows(id.toInt)._2.toSeq.map(x =>
+        math.floor(x.toDouble * 1000).toLong + VecOffset), s"vec $id")
+    }
+    // the store keeps v; committedVectors re-quantizes it to the seed's qv
+    val seed = IvfKmeans.vectors(
+      emb.select(col("vec_id"), VF.asDouble(col("embedding")).as("v")), VecOffset)
+      .localCheckpoint(true)
+    val tbl = "graft_quantize_property"
+    val h = SemanticIndex.build(SemanticIndex.store(spark,
+        s"${graft.queries.Fixtures.scratchRoot}/quantize_property", tbl),
+      seed, 4, 2, SemThreshX1e6, 2)
+    try {
+      val stored = SemanticIndex.committedVectors(h, VecOffset)
+        .select(col("vec_id"), col("qv")).as[(Long, Seq[Long])].collect().toMap
+      val want = seed.select(col("vec_id"), col("qv")).as[(Long, Seq[Long])]
+        .collect().toMap
+      assert(stored == want,
+        s"committed qv diverged on ${(stored.keySet ++ want.keySet)
+          .filter(k => stored.get(k) != want.get(k)).take(5)}")
+    } finally spark.sql(s"DROP TABLE IF EXISTS $tbl")
+  }
 }

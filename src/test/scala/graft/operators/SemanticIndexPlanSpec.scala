@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
 import graft.functions.{VectorFunctions => VF}
+import graft.functions.DedupConfig.{MmThreshX1e6, SemThreshX1e6, VecOffset}
 
 /** Plan-shape guard for the r13 anti-join accept: the scale property
   * `artifacts/r13_mmlife_attrib.md` measures, locked into the suite.
@@ -20,16 +21,11 @@ class SemanticIndexPlanSpec extends SparkSpec {
     import spark.implicits._
     val tbl = "graft_acceptwave_planspec"
     val root = s"${graft.queries.Fixtures.scratchRoot}/acceptwave_planspec"
-    val e = spark.range(200).toDF("vec_id")
+    val e = IvfKmeans.vectors(spark.range(200).toDF("vec_id")
       .withColumn("v", transform(sequence(lit(0), lit(7)),
-        i => (col("vec_id") % 17 + i).cast("double")))
-      .withColumn("nrm", sqrt(VF.normSq(col("v"))))
-      .withColumn("qv", IvfKmeans.quantize(col("v"), 4000L))
-    val cents = IvfKmeans.train(
-      e.filter(col("vec_id") % 2 === 0).select(col("vec_id"), col("qv")),
-      4, 1).localCheckpoint(true)
-    val h = SemanticIndex.Handle(SemanticIndex.store(spark, root, tbl), cents, 400000L)
-    SemanticIndex.writeEpoch0(h, e.filter(col("vec_id") % 2 === 0), 2)
+        i => (col("vec_id") % 17 + i).cast("double"))), VecOffset)
+    val h = SemanticIndex.build(SemanticIndex.store(spark, root, tbl),
+      e.filter(col("vec_id") % 2 === 0), 4, 1, SemThreshX1e6, 2)
     val prevB = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try {
       // force the large-store shape (tiny fixtures would broadcast
@@ -86,15 +82,14 @@ class SemanticIndexPlanSpec extends SparkSpec {
     import spark.implicits._
     val tbl = "graft_covers_planspec"
     val root = s"${graft.queries.Fixtures.scratchRoot}/covers_planspec"
-    val e = spark.range(200).toDF("vec_id")
+    val e = IvfKmeans.vectors(spark.range(200).toDF("vec_id")
       .withColumn("fp", col("vec_id") % 50)
       .withColumn("v", transform(sequence(lit(0), lit(7)),
-        i => (col("vec_id") % 17 + i).cast("double")))
-      .withColumn("nrm", sqrt(VF.normSq(col("v"))))
-      .withColumn("qv", IvfKmeans.quantize(col("v"), 4000L))
-    val cents = IvfKmeans.train(e.select(col("vec_id"), col("qv")), 4, 1)
-      .localCheckpoint(true)
-    val h = SemanticIndex.Handle(SemanticIndex.store(spark, root, tbl), cents, 400000L)
+        i => (col("vec_id") % 17 + i).cast("double"))), VecOffset)
+    // the store carries the extra `fp` column, so it is seeded through
+    // the Handle directly (q137's shape)
+    val h = SemanticIndex.Handle(SemanticIndex.store(spark, root, tbl),
+      SemanticIndex.trainCells(e, 4, 1), SemThreshX1e6)
     h.store.seed(2,
       SemanticIndex.spilled(h, e, Seq("fp")).withColumn("epoch", lit(0)))
     val prevB = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
@@ -156,13 +151,10 @@ class SemanticIndexPlanSpec extends SparkSpec {
         transform(sequence(lit(0), lit(7)),
           i => when(i === col("vec_id") % 5 + 1, lit(10.0))
             .otherwise(lit(0.0))).as("v"))
-    val e = flood.unionByName(singles)
-      .withColumn("nrm", sqrt(VF.normSq(col("v"))))
-      .withColumn("qv", IvfKmeans.quantize(col("v"), 4000L))
+    val e = IvfKmeans.vectors(flood.unionByName(singles), VecOffset)
       .localCheckpoint(true)
-    val cents = IvfKmeans.train(e.select(col("vec_id"), col("qv")), 4, 1)
-      .localCheckpoint(true)
-    val h = SemanticIndex.Handle(SemanticIndex.store(spark, root, tbl), cents, 900000L)
+    val h = SemanticIndex.Handle(SemanticIndex.store(spark, root, tbl),
+      SemanticIndex.trainCells(e, 4, 1), MmThreshX1e6)
     h.store.seed(2,
       SemanticIndex.spilled(h, e, Seq("fp")).withColumn("epoch", lit(0)))
     try {

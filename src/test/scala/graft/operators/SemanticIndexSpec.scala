@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.SparkSpec
+import graft.functions.DedupConfig.{SemThreshX1e6, VecOffset}
 import org.apache.spark.sql.functions._
 
 /** Lifecycle semantics of the persistent semantic (cell) index that
@@ -12,25 +13,16 @@ import org.apache.spark.sql.functions._
 class SemanticIndexSpec extends SparkSpec {
   import spark.implicits._
 
-  private val Off = 4000L
-  private val Thresh = 400000L // cos >= 0.4
-
   /** (vec_id, v, nrm, qv) frame from raw 2-d doubles. */
   private def vecs(rows: Seq[(Long, Seq[Double])]) =
-    rows.toDF("vec_id", "v")
-      .withColumn("nrm", sqrt(aggregate(col("v"), lit(0.0), (a, x) => a + x * x)))
-      .withColumn("qv", transform(col("v"),
-        x => floor(x * 1000).cast("long") + Off))
+    IvfKmeans.vectors(rows.toDF("vec_id", "v"), VecOffset)
 
-  private def handle(name: String, seed: org.apache.spark.sql.DataFrame) = {
-    val tbl = s"graft_semspec_$name"
-    val root = s"${graft.queries.Fixtures.scratchRoot}/semspec_$name"
-    val cents = IvfKmeans.train(seed.select(col("vec_id"), col("qv")), 2, 2)
-      .localCheckpoint(true)
-    val h = SemanticIndex.Handle(SemanticIndex.store(spark, root, tbl), cents, Thresh)
-    SemanticIndex.writeEpoch0(h, seed, 2)
-    h
-  }
+  /** A 2-cell index (2 Lloyd iterations, 2 buckets) seeded with `seed`;
+    * the semantic family's cos >= 0.4 accept threshold. */
+  private def handle(name: String, seed: org.apache.spark.sql.DataFrame) =
+    SemanticIndex.build(SemanticIndex.store(spark,
+        s"${graft.queries.Fixtures.scratchRoot}/semspec_$name", s"graft_semspec_$name"),
+      seed, 2, 2, SemThreshX1e6, 2)
 
   private def table(h: SemanticIndex.Handle) = h.store.names.head
 
@@ -39,6 +31,9 @@ class SemanticIndexSpec extends SparkSpec {
     // cos(orthogonal, anything indexed) = 0 < 0.4
     val seed = vecs(Seq(0L -> Seq(1.0, 0.0), 1L -> Seq(0.0, 1.0)))
     val h = handle("accept", seed)
+    // build writes exactly the seed's vectors, as epoch 0
+    assert(spark.table(table(h)).select("epoch", "vec_id").distinct()
+      .as[(Int, Long)].collect().toSet == Set(0 -> 0L, 0 -> 1L))
     val wave = vecs(Seq(100L -> Seq(1.0, 0.0),    // copy of 0 -> reject
                         101L -> Seq(-1.0, 0.001))) // ~opposite -> accept
     val acc = SemanticIndex.acceptWave(h, wave)
@@ -73,7 +68,7 @@ class SemanticIndexSpec extends SparkSpec {
     SemanticIndex.commit(h, SemanticIndex.acceptWave(h, w1), 1)
     val before = spark.table(table(h)).select("epoch", "vec_id").distinct()
       .as[(Int, Long)].collect().toSet
-    val h2 = SemanticIndex.retrainReassign(h, Off, 2, 2, 4)
+    val h2 = SemanticIndex.retrainReassign(h, VecOffset, 2, 2, 4)
     // membership + epoch provenance identical under the new geometry
     val after = spark.table(table(h)).select("epoch", "vec_id").distinct()
       .as[(Int, Long)].collect().toSet

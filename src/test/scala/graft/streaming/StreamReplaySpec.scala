@@ -3,9 +3,10 @@ package graft.streaming
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
 
+import graft.functions.DedupConfig.{SemIters, SemK, SemThreshX1e6, VecOffset}
 import graft.functions.MinhashPipeline.{acceptAgainstIndex, signedDocs}
-import graft.functions.{VectorFunctions => VF}
 import graft.operators.{IvfKmeans, SemanticIndex}
+import graft.queries.QueriesLlm.{embeddings, semanticWaves}
 
 /** Replay / retry idempotence of the streaming index gates (q91, q109,
   * q120, q132) — the properties their in-gate replay legs used to
@@ -71,19 +72,14 @@ class StreamReplaySpec extends SparkSpec {
 
   test("q132/q120: post-commit wave-1 replay accepts 0 vectors; staged re-commit adds 0") {
     graft.SparkEntry.queries("q132_stream_semantic_dedup")(spark, sf).collect()
-    val Off = 4000L; val Thresh = 400000L
     val root = s"$scratch/semstream"
-    // rebuild the frozen handle exactly as the gate does (IvfKmeans
-    // training is deterministic: rank-based seeding, fixed iters)
-    val e = graft.queries.table(spark, sf, "embeddings")
-      .select(col("vec_id"), VF.asDouble(col("embedding")).as("v"),
-        IvfKmeans.quantize(col("embedding"), Off).as("qv"))
-      .withColumn("nrm", sqrt(VF.normSq(col("v"))))
-    val seed = e.filter(col("vec_id") % 2 === 0)
-    val cents = IvfKmeans.train(seed.select(col("vec_id"), col("qv")), 8, 3)
-      .localCheckpoint(true)
+    // attach to the committed store with the frozen cells rebuilt
+    // exactly as the gate trains them (IvfKmeans training is
+    // deterministic: rank-based seeding, fixed iters)
+    val e = IvfKmeans.vectors(embeddings(spark, sf), VecOffset)
+    val cents = SemanticIndex.trainCells(e.filter(col("vec_id") % 2 === 0), SemK, SemIters)
     val h = SemanticIndex.Handle(SemanticIndex.store(spark, root, "graft_q132_vecs"),
-      cents, Thresh)
+      cents, SemThreshX1e6)
     // whole-wave replay from the on-disk wave source
     val w1 = spark.read.parquet(s"$root/src1")
     val replayAccepted = SemanticIndex.acceptWave(h, w1).count()
@@ -102,10 +98,7 @@ class StreamReplaySpec extends SparkSpec {
     graft.SparkEntry.queries("q120_incremental_semantic_dedup")(spark, sf).collect()
     val h120 = h.copy(store =
       SemanticIndex.store(spark, s"$scratch/semdedup", "graft_q120_vecs"))
-    val w1b = e.filter(col("vec_id") % 20 === 1)
-      .withColumn("vec_id", col("vec_id") + 100000L)
-      .unionByName(e.filter(col("vec_id") % 10 === 0)
-        .withColumn("vec_id", col("vec_id") + 200000L))
+    val (w1b, _) = semanticWaves(e)
     val re120 = SemanticIndex.acceptWave(h120, w1b).count()
     assert(re120 == 0L,
       s"post-commit replay of q120's wave 1 accepted $re120 vectors")

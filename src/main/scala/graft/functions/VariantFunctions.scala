@@ -108,20 +108,4 @@ object VariantFunctions {
     * Reference `Zygosity.computeZygosity` (decompiled rgdcore jar). */
   def numAllele(a: Column, c: Column, g: Column, t: Column): Column =
     (a > 0).cast("int") + (c > 0).cast("int") + (g > 0).cast("int") + (t > 0).cast("int")
-
-  /** CDS geometry (X18): clip an ordered exon array to the coding span
-    * [cdsStart, cdsEnd] — exons wholly inside a UTR are dropped, exons
-    * straddling the boundary are trimmed. On the minus strand the
-    * caller swaps which UTR supplies which bound (the reference's
-    * 3'/5' role swap, `VariantPostProcessing.handleUTRs:553-587`,
-    * strand swap `:373-378`).
-    *
-    * @param exons array<struct<start:long, stop:long>> in genomic order
-    */
-  def clipExonsToCds(exons: Column, cdsStart: Column, cdsEnd: Column): Column =
-    filter(
-      transform(exons, e => struct(
-        greatest(e.getField("start"), cdsStart).as("start"),
-        least(e.getField("stop"), cdsEnd).as("stop"))),
-      e => e.getField("start") <= e.getField("stop"))
 }

@@ -10,11 +10,12 @@ import org.apache.spark.sql.functions._
   * the post-processing stage (`VariantPostProcessing.processTranscript`,
   * reference `VariantPostProcessing.java:370-551`).
   *
-  * The catalog (q60, q82, q84) calls [[assemble]] and [[codonEffect]].
-  * [[OrderedConcat]] is a typed [[Aggregator]] for the same ordered
-  * concatenation with explicit, incremental buffer management (partial
-  * aggregation runs map-side, only `finish` sorts); it stays because the
-  * perfbench loader and `CdsAssemblySkewSpec` call it.
+  * The catalog (q60, q82) and [[StrainLoader]] (q84) call [[assemble]]
+  * and [[codonEffect]]. [[OrderedConcat]] is a typed [[Aggregator]] for
+  * the same ordered concatenation with explicit, incremental buffer
+  * management (partial aggregation runs map-side, only `finish` sorts);
+  * it stays only because perfbench's own copy of the loader and
+  * `CdsAssemblySkewSpec` call it, until perfbench calls [[StrainLoader]].
   */
 object CdsAssembly {
 

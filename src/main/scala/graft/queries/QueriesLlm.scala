@@ -4906,6 +4906,7 @@ object QueriesLlm {
     // family threshold; 61 is prime so case variants never alias
     // (any M dividing 32*(31+1)=1024 maps case-shifted bigrams to
     // one bin). Full numbers: artifacts/r14_mmselect_features.md.
+    // One definition: `VF.wordBigramHist` and its twin.
     // Because the corpus deliberately contains near-dup families
     // (and gen_sf corpora carry 10x exact content copies), the
     // retraction target is SELECTED BY MEASUREMENT, not assumed:
@@ -4940,17 +4941,10 @@ object QueriesLlm {
     // (per-entity, not per-class, sequence bookkeeping).
     Q("q137_multimodal_selective_retract",
       (spark, dir) => {
-        val FD = 61
-        val histD = (0 until FD).map(b =>
-          s"size(filter(bg, x -> x = $b))").mkString(", ")
         val seed = IvfKmeans.unitVectors(table(spark, dir, "documents")
             .select(col("doc_id").as("vec_id"), TF.fingerprint(col("text")).as("fp"),
-              TF.tokens(lower(col("text"))).as("t"))
-            .filter(size(col("t")) >= 2)
-            .withColumn("bg", transform(sequence(lit(1), size(col("t")) - 1),
-              i => (TF.polyHash(element_at(col("t"), i)) * 31 +
-                TF.polyHash(element_at(col("t"), i + 1))) % FD))
-            .selectExpr("vec_id", "fp", s"CAST(array($histD) AS array<double>) AS v"))
+              VF.wordBigramHist(col("text")).as("v"))
+            .filter(col("v").isNotNull))
           .localCheckpoint(true) // train + epoch-0 + cover sides + probes
         val h = SemanticIndex.Handle(SemanticIndex.store(spark,
             s"${Fixtures.scratchRoot}/mmsel", "graft_q137_mm"),
@@ -5039,9 +5033,7 @@ object QueriesLlm {
         // histogram products), ~an order of magnitude less per-pair
         // work in DuckDB than a per-pair list comprehension + reduce
         val dot61 = (a: String, b: String) =>
-          (1 to 61).map(i => s"$a[$i] * $b[$i]").mkString(" + ")
-        val bins = (0 until 61).map(b =>
-          s"CAST(len(list_filter(bg, x -> x = $b)) AS DOUBLE)").mkString(", ")
+          (1 to VF.WordBigramBins).map(i => s"$a[$i] * $b[$i]").mkString(" + ")
         // The q88 playbook: the corpus carries EXACT text copies
         // (gen_sf corpora are 10x key-shifted copies), and copies share
         // fp, v, nrm, qv and therefore cells — so features are derived ONCE per DISTINCT text (fd) and
@@ -5057,34 +5049,26 @@ object QueriesLlm {
            |dt AS MATERIALIZED (
            |  SELECT text, min(doc_id) AS rep_id FROM dsrc GROUP BY text),
            |fdh AS (
-           |  SELECT text, rep_id, fp, [$bins] AS v FROM (
-           |    SELECT text, rep_id, fp,
-           |      [ (h[i] * 31 + h[i + 1]) % 61
-           |        FOR i IN generate_series(1, len(h) - 1) ] AS bg
-           |    FROM (
-           |      SELECT text, rep_id,
-           |        list_reduce(list_prepend(CAST(0 AS BIGINT),
-           |          list_transform(string_split_regex(text, ''),
-           |            c -> CAST(ascii(c) AS BIGINT))),
-           |          (acc, x) -> (acc * 31 + x) % $P) AS fp,
-           |        list_transform(string_split_regex(trim(lower(text)), '\\s+'),
-           |          t -> list_reduce(list_prepend(CAST(0 AS BIGINT),
-           |                 list_transform(string_split_regex(t, ''),
-           |                   c -> CAST(ascii(c) AS BIGINT))),
-           |               (acc, x) -> (acc * 31 + x) % $P)) AS h
-           |      FROM dt)
-           |    WHERE len(h) >= 2)),
+           |  SELECT * FROM (
+           |    SELECT text, rep_id,
+           |      list_reduce(list_prepend(CAST(0 AS BIGINT),
+           |        list_transform(string_split_regex(text, ''),
+           |          c -> CAST(ascii(c) AS BIGINT))),
+           |        (acc, x) -> (acc * 31 + x) % $P) AS fp,
+           |      ${VF.wordBigramHistSql("text")} AS v
+           |    FROM dt)
+           |  WHERE v IS NOT NULL),
            |fd AS MATERIALIZED (${IvfKmeans.unitVectorsSql("text, rep_id, fp", "fdh")}),
            |f0 AS MATERIALIZED (
            |  SELECT d.doc_id AS vec_id, f.fp, f.v, f.nrm, f.qv
            |  FROM dsrc d JOIN fd f USING (text)),
-           |${IvfKmeans.lloydCtes(MmK, MmIters, 61, 0L,
+           |${IvfKmeans.lloydCtes(MmK, MmIters, VF.WordBigramBins, 0L,
               src = "(SELECT vec_id, [x / nrm FOR x IN v] AS embedding FROM f0)")},
            |${IvfKmeans.spillAssignCte("idd",
-              "(SELECT rep_id AS vec_id, fp, v, nrm, qv FROM fd)", 61,
+              "(SELECT rep_id AS vec_id, fp, v, nrm, qv FROM fd)", VF.WordBigramBins,
               Seq("fp", "v", "nrm"), cents = mmCents)},
            |${IvfKmeans.spillAssignCte("pd",
-              "(SELECT rep_id AS vec_id, fp, v, nrm, qv FROM fd)", 61,
+              "(SELECT rep_id AS vec_id, fp, v, nrm, qv FROM fd)", VF.WordBigramBins,
               Seq("fp", "v", "nrm"), cents = mmCents, maxProbe = 1)},
            |nfz AS MATERIALIZED (
            |  SELECT p.vec_id, p.fp FROM pd p
@@ -5108,7 +5092,7 @@ object QueriesLlm {
            |  UNION ALL
            |  SELECT f.vec_id + 800000000, f.v, f.nrm, f.qv
            |  FROM f0 f, fpy WHERE f.fp = fpy.fp_y),
-           |${IvfKmeans.spillAssignCte("pp", "pw", 61, Seq("v", "nrm"),
+           |${IvfKmeans.spillAssignCte("pp", "pw", VF.WordBigramBins, Seq("v", "nrm"),
               cents = mmCents, maxProbe = 1)},
            |dd AS (
            |  SELECT DISTINCT p.vec_id FROM pp p JOIN st2d i ON i.cell = p.cell

@@ -1,9 +1,10 @@
 package graft.queries
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.operators.CdsAssembly
-import graft.sources.{Cf2, Fasta, Polyphen, Vcf}
+import graft.operators.StrainLoader
+import graft.sources.{Cf2, Fasta, Jdbc, Polyphen, Vcf}
 
 /** File-format source queries — the reference pipeline's *front door*
   * (S1-S3/K1): real text files written to disk, read back through the
@@ -308,149 +309,220 @@ object QueriesSources {
   }
 
   // ---------------------------------------------------------------- q84
-  // The reference's production flow chained end to end over ONE input
+  // The reference's production flow end to end over one input
   // (`run_converter.sh` -> `run_varload.sh` -> `run_varpostprocessing.sh`,
-  // SURVEY §3): a multi-sample/multi-allele VCF with indels is read
-  // (S1), strains and alt alleles exploded with genotype filtering and
-  // zygosity (X8, `VcfToCommonFormat2Converter.java:126-290`), the
-  // shared padding base stripped and the variant typed
-  // (`VariantLoad3.java:236-314`), distinct natural keys get dense ids
-  // (J5/K4, `VariantProcessingBase.insertVariantRgdIds2`), genic status
-  // comes from the exon interval join (`VariantLoad3.java:682-694`),
-  // and SNVs run the full transcript/codon math of q82
-  // (`VariantPostProcessing.java:157-551`). One aggregate; the DuckDB
-  // oracle replays every stage over the same file + tables.
+  // SURVEY §3): one `StrainLoader` pass over a multi-sample VCF with
+  // multi-allelic sites, indels and short lines, into the loader's
+  // tables, output files and an embedded Derby VARIANT table. The gate
+  // aggregates every span's written output and the pass's counters; the
+  // DuckDB oracle derives them from the same files under the reference's
+  // convert, load and post-processing rules.
 
-  private val ChainVcfPath = s"$FixtureDir/chain.vcf"
-  private val ChainVcfLines = 800
+  private val ChainRoot = new java.io.File(s"$FixtureDir/chain")
+  private val ChainChrs = 5
+  private val ChainGenomeLines = 450 // 40-base lines: 18 kb per chromosome
+  private val ChainSample = 19       // 1 in 19 synthetic variants is a VCF line
+  private val ChainGenders = Map("BN" -> "F", "SHR" -> "M", "WKY" -> "F", "F344" -> "M")
 
-  /** Deterministic chain fixture: shapes cycle SNV / multi-allele SNV /
-    * deletion / insertion, genotypes cycle hom/het/missing (incl. 1/2
-    * and 0/2 on the multi-allele lines), positions land in and out of
-    * the synthetic exon bands. */
-  private def writeChainVcfFixture(): Unit = {
-    val f = new java.io.File(ChainVcfPath)
-    f.getParentFile.mkdirs()
-    val w = new java.io.PrintWriter(f)
-    try {
-      w.println("##fileformat=VCFv4.2")
-      w.println("##source=graft-chain")
-      w.println((Seq("#CHROM", "POS", "ID", "REF", "ALT", "QUAL", "FILTER",
-        "INFO", "FORMAT") ++ VcfStrains).mkString("\t"))
-      val bases = "ACGT"
-      val gts4 = Array("0/0", "0/1", "1/1", "./.")
-      val gts6 = Array("0/1", "1/1", "1/2", "0/2", "2/2", "./.")
-      var i = 0
-      while (i < ChainVcfLines) {
-        val chrom = ((i % 5) + 1).toString
-        val pos = 1000 + i * 9
-        val b1 = bases.charAt(i % 4).toString
-        val b2 = bases.charAt((i + 1 + i % 3) % 4).toString
-        val b3 = bases.charAt((i + 3) % 4).toString
-        val (ref, alt) = (i % 4) match {
-          case 0 => (b1, b2)                              // SNV
-          case 1 => (b1, bases.charAt((i % 4 + 1) % 4).toString + "," +
-            bases.charAt((i % 4 + 2) % 4).toString)       // 2-allele SNV
-          case 2 => (b1 + b3, b1)                         // deletion
-          case _ => (b1, b1 + b3)                         // insertion
-        }
-        val gts = VcfStrains.indices.map { s =>
-          if (i % 4 == 1) gts6((i * 7 + s * 3) % 6) else gts4((i * 7 + s * 3) % 4)
-        }
-        w.println((Seq(chrom, pos.toString, "rs" + (200000 + i), ref, alt,
-          (i % 60).toString, "PASS", "DP=" + (20 + i % 80), "GT") ++ gts)
-          .mkString("\t"))
-        i += 1
-      }
-    } finally w.close()
+  /** One VCF genotype cell (GT:AD:DP) of strain `s`, from integer
+    * columns of the line: ~20 % hom-ref, ~10 % missing, ~40 % het with
+    * the alt read share spread over 0..100 % (so the possible-error
+    * rule bites), ~30 % hom-alt; multi-allelic lines also call 0/2,
+    * 1/2 and 2/2. */
+  private def chainCell(s: Int): String = {
+    val h = s"(CAST(vid DIV $ChainSample AS INT) + count_a + $s * (3 + count_c)) % 10"
+    val dp = s"(8 + (total_depth + ${13 * s}) % 50)"
+    val x = s"(allele_depth + ${11 * s}) % ($dp + 1)" // alt reads of a het
+    val y = s"($dp - (vid + $s) % 2)"                 // alt reads of a hom-alt
+    def ad(gt: String, r: String, a1: String, a2: String) =
+      s"concat('$gt:', $r, ',', $a1, CASE WHEN multi THEN concat(',', $a2) ELSE '' END, ':', $dp)"
+    s"""CASE WHEN $h < 2 THEN ${ad("0/0", dp, "0", "0")}
+       |  WHEN $h = 2 THEN './.:.:.'
+       |  WHEN multi AND $h = 4 THEN ${ad("0/2", s"$dp - $x", "0", x)}
+       |  WHEN multi AND $h = 5 THEN ${ad("1/2", "0", x, s"$dp - $x")}
+       |  WHEN $h < 7 THEN ${ad("0/1", s"$dp - $x", x, "0")}
+       |  WHEN multi AND $h = 9 THEN ${ad("2/2", s"$dp - $y", "0", y)}
+       |  ELSE ${ad("1/1", s"$dp - $y", y, "0")} END""".stripMargin
   }
 
+  /** q84's inputs in the loader's layout (`StrainLoader.Paths`): the
+    * synthetic genome (chromosomes 1-5), transcripts and exons from
+    * `part` (2-3 coding exons of 24-56 bp each), and `in/wave1.vcf`, one
+    * line per sampled synthetic variant (about 3k lines at sf0.01, ten
+    * times that at sf0.1). Sites on chromosomes 1-5 fold into the
+    * genome's span; the rest keep their position (intergenic, and on X/Y
+    * mostly outside the pseudo-autosomal region). Line shapes by `kind`:
+    * insertion and deletion with a padding base (every third deletion an
+    * equal-length substitution instead), SNV, and two-allele SNV; every
+    * 97th line lacks the last strain's cell. */
+  private def writeChainFixture(spark: SparkSession, dir: String): StrainLoader.Paths = {
+    val p = StrainLoader.Paths(ChainRoot)
+    Jdbc.shutdownEmbeddedDerby(p.derby)
+    Fixtures.rmrf(p.root)
+    Synthetic.genomeLines(table(spark, dir, "nation").filter(col("n_nationkey") < ChainChrs)
+        .select((col("n_nationkey") + 1).as("c")), ChainGenomeLines, prefix = "")
+      .orderBy("line_id").select("line").coalesce(1).write.text(p.in("genome.fa"))
+    val ex = table(spark, dir, "part").filter(col("p_partkey") % 25 < ChainChrs)
+      .select(col("p_partkey").cast("int").as("tid"),
+        (col("p_partkey") % 25 + 1).cast("string").as("e_chr"),
+        when(col("p_partkey") % 2 === 1, "-").otherwise("+").as("strand"),
+        explode(sequence(lit(0), (col("p_partkey") % 2 + 1).cast("int"))).as("exon_idx"))
+      .withColumn("e_start",
+        (lit(37) + col("exon_idx") * 2500 + (col("tid") * 53) % 2300).cast("long"))
+      .withColumn("e_stop", col("e_start") + (col("tid") * 7 + col("exon_idx") * 13) % 33 + 23)
+    def tsv(df: DataFrame, name: String): Unit =
+      df.coalesce(1).write.option("sep", "\t").csv(p.in(name))
+    tsv(ex.groupBy("tid", "e_chr", "strand").agg(min("e_start"), max("e_stop")), "transcripts.tsv")
+    tsv(ex.select("tid", "exon_idx", "e_chr", "e_start", "e_stop"), "exons.tsv")
+    val span = ChainGenomeLines * 40
+    val genomeChrs = (1 to ChainChrs).map(c => s"'$c'").mkString(", ")
+    val lines = Synthetic.variants(spark, dir).filter(col("vid") % ChainSample === 0)
+      .selectExpr("*", "kind = 3 AS multi",
+        s"CASE WHEN chromosome IN ($genomeChrs) THEN start_pos % $span + 1 " +
+          "ELSE start_pos END AS pos",
+        "substr('ACGT', CAST(vid % 4 AS INT) + 1, 1) AS pad")
+      .selectExpr("chromosome AS chrom", "CAST(pos AS BIGINT) AS pos",
+        "concat('rs', CAST(vid AS STRING)) AS id",
+        s"""concat_ws('$Tab', chromosome, CAST(pos AS STRING), concat('rs', CAST(vid AS STRING)),
+           |  CASE WHEN kind = 0 THEN pad WHEN kind = 1 AND vid % 3 = 0 THEN ref_nuc
+           |       WHEN kind = 1 THEN concat(pad, ref_nuc) ELSE ref_nuc END,
+           |  CASE WHEN kind = 0 THEN concat(pad, var_nuc)
+           |       WHEN kind = 1 AND vid % 3 = 0 THEN reverse(ref_nuc)
+           |       WHEN kind = 1 THEN pad
+           |       WHEN multi THEN concat(var_nuc, ',', substr(replace(replace('ACGT',
+           |         ref_nuc, ''), var_nuc, ''), CAST(vid % 2 AS INT) + 1, 1))
+           |       ELSE var_nuc END,
+           |  CAST(vid % 60 AS STRING), 'PASS', concat('DP=', CAST(total_depth AS STRING)),
+           |  'GT:AD:DP', ${VcfStrains.indices.init.map(chainCell).mkString(",\n")},
+           |  CASE WHEN vid % 97 <> 0 THEN ${chainCell(VcfStrains.size - 1)} END) AS line"""
+          .stripMargin)
+    Vcf.writeSorted(spark, lines, Seq("##fileformat=VCFv4.2", "##source=graft-chain",
+      "##FORMAT=<ID=GT,Number=1,Type=String>", "##FORMAT=<ID=AD,Number=R,Type=Integer>",
+      "##FORMAT=<ID=DP,Number=1,Type=Integer>",
+      (Vcf.FixedCols.map(_.toUpperCase).updated(0, "#CHROM") ++ VcfStrains).mkString(Tab)),
+      p.in("wave1.vcf"))
+    p
+  }
+
+  /** The gate's result columns after the grouping keys. */
+  private val ChainAggs =
+    Seq("cnt", "n_vars", "sum_id", "sum_samples", "sum_het", "sum_aa_pos", "n_frameshift")
+
   private val chainOracle: String = {
-    val cols = (1 to 13).map(i => s"'c$i':'VARCHAR'").mkString("{", ",", "}")
+    val p = StrainLoader.Paths(ChainRoot)
+    def csv(name: String, cols: String, extra: String = "") =
+      s"read_csv('${p.in(name)}/part-*', delim='$Tab', header=false, auto_detect=false$extra, " +
+        s"columns={$cols})"
+    val cols = (1 to 9 + VcfStrains.size).map(i => s"'c$i':'VARCHAR'").mkString(",")
     val perStrain = VcfStrains.zipWithIndex.map { case (s, i) =>
-      s"""SELECT c1 AS chrom, CAST(c2 AS BIGINT) AS pos, c4 AS ref,
-         |       c5 AS alt, c${10 + i} AS gt FROM raw""".stripMargin
-    }.mkString("\nUNION ALL\n")
+      s"SELECT c1 AS chrom, CAST(c2 AS BIGINT) AS pos, c4 AS ref, c5 AS alt, " +
+        s"c${10 + i} AS gt, '${ChainGenders(s)}' AS gender FROM raw"
+    }.mkString("\n  UNION ALL ")
+    // pseudo-autosomal regions of X and Y (build 36)
+    val par = "(chromosome = 'X' AND (position BETWEEN 1 AND 2709520 OR " +
+      "position BETWEEN 154584238 AND 154913754)) OR (chromosome = 'Y' AND " +
+      "(position BETWEEN 1 AND 2709520 OR position BETWEEN 57443438 AND 57772954))"
+    val facts = Seq(
+      "rowsIn" -> "SELECT count(*) FROM parsed",
+      "homRef" -> "SELECT count(*) FROM parsed WHERE call = '0/0'",
+      "missing" -> "SELECT count(*) FROM parsed WHERE call = './.'",
+      "short" -> "SELECT count(*) FROM parsed WHERE gt IS NULL",
+      "called" -> "SELECT count(*) FROM parsed WHERE gt IS NOT NULL AND call NOT IN ('0/0', './.')",
+      "alleleRows" -> "SELECT count(*) FROM al",
+      "possibleError" -> "SELECT count(*) FROM al WHERE pct <= 15",
+      "cf2Rows" -> "SELECT count(*) FROM conv",
+      "waveKeys" -> "SELECT count(*) FROM vars",
+      "newKeys" -> "SELECT count(*) FROM vars",
+      "maxSeedId" -> "SELECT 0",
+      "mergeAffected" -> "SELECT -1",
+      "polyphenRecords" -> "SELECT count(*) FROM vt WHERE syn_status = 'nonsynonymous'",
+      "derbyRows" -> "SELECT count(*) FROM vars")
+      .map { case (n, q) =>
+        s"SELECT '~pass', '$n', '', CAST(($q) AS BIGINT)${", 0" * (ChainAggs.size - 1)}"
+      }.mkString("\nUNION ALL ")
     s"""WITH raw AS (
-       |  SELECT * FROM read_csv('$ChainVcfPath', delim='$Tab', header=false,
-       |    auto_detect=false, null_padding=true, columns=$cols)
-       |  WHERE c1 NOT LIKE '#%'
-       |), long AS (
-       |$perStrain
-       |), al AS (
-       |  SELECT l.chrom, l.pos, l.ref, l.gt,
-       |    string_split(l.alt, ',')[u.a_idx] AS va
-       |  FROM long l, LATERAL (
-       |    SELECT DISTINCT TRY_CAST(x AS INT) AS a_idx
-       |    FROM unnest(string_split(l.gt, '/')) t(x)
-       |    WHERE TRY_CAST(x AS INT) > 0) u
-       |), conv AS (
-       |  SELECT chrom AS chromosome,
-       |    CASE WHEN string_split(gt, '/')[1] = string_split(gt, '/')[2]
-       |         THEN 'hom' ELSE 'het' END AS zyg,
-       |    CASE WHEN share THEN substr(ref, 2) ELSE ref END AS ref_nuc,
-       |    CASE WHEN share THEN substr(va, 2) ELSE va END AS var_nuc,
-       |    CASE WHEN share THEN pos + 1 ELSE pos END AS position
-       |  FROM (SELECT *, (length(ref) > 1 OR length(va) > 1)
-       |          AND substr(ref, 1, 1) = substr(va, 1, 1) AS share FROM al)
-       |), vars AS (
+       |  SELECT * FROM ${csv("wave1.vcf", cols, ", quote='', null_padding=true")}
+       |  WHERE c1 NOT LIKE '#%'),
+       |long AS ($perStrain),
+       |parsed AS (
+       |  SELECT chrom, pos, ref, alt, gender, gt, split_part(gt, ':', 1) AS call,
+       |    string_split(split_part(gt, ':', 2), ',') AS ad,
+       |    TRY_CAST(split_part(gt, ':', 3) AS INTEGER) AS dp
+       |  FROM long),
+       |al AS (
+       |  SELECT *, CASE WHEN dp > 0 THEN adA * 100.0 / dp ELSE 0.0 END AS pct FROM (
+       |    SELECT p.chrom, p.pos, p.ref, p.gender, p.dp, string_split(p.alt, ',')[u.a] AS va,
+       |      coalesce(TRY_CAST(p.ad[u.a + 1] AS INTEGER), 0) AS adA
+       |    FROM parsed p, LATERAL (
+       |      SELECT DISTINCT TRY_CAST(x AS INTEGER) AS a
+       |      FROM unnest(string_split(p.call, '/')) t(x)
+       |      WHERE TRY_CAST(x AS INTEGER) > 0) u)),
+       |conv AS (
+       |  SELECT chrom AS chromosome, gender, pct,
+       |    CASE WHEN indel AND shared THEN pos + 1 ELSE pos END AS position,
+       |    CASE WHEN ins AND shared THEN '' WHEN indel AND shared THEN substr(ref, 2)
+       |         ELSE ref END AS ref_nuc,
+       |    CASE WHEN ins AND shared THEN substr(va, 2) WHEN indel AND shared THEN ''
+       |         ELSE va END AS var_nuc
+       |  FROM (SELECT *, ins OR (length(va) = 1 AND length(ref) > 1) AS indel
+       |        FROM (SELECT *, length(ref) = 1 AND length(va) > 1 AS ins,
+       |                substr(ref, 1, 1) = substr(va, 1, 1) AS shared
+       |              FROM al WHERE pct > 15))),
+       |vars AS (
        |  SELECT chromosome, position, ref_nuc, var_nuc,
-       |    max(CASE WHEN ref_nuc = '' AND var_nuc <> '' THEN 'ins'
-       |             WHEN var_nuc = '' AND ref_nuc <> '' THEN 'del'
-       |             WHEN length(ref_nuc) = 1 AND length(var_nuc) = 1 THEN 'snv'
-       |             WHEN length(ref_nuc) = length(var_nuc) THEN 'mnv'
-       |             ELSE 'delins' END) AS variant_type,
+       |    max(CASE WHEN ref_nuc = '' THEN 'ins' WHEN var_nuc = '' THEN 'del'
+       |             ELSE 'snv' END) AS variant_type,
        |    count(*) AS n_samples,
-       |    sum(CASE WHEN zyg = 'het' THEN 1 ELSE 0 END) AS n_het,
-       |    row_number() OVER (
-       |      ORDER BY chromosome, position, ref_nuc, var_nuc) AS assigned_id
-       |  FROM conv GROUP BY 1, 2, 3, 4
-       |), ${Synthetic.genomeSql("SELECT n_nationkey + 1 AS c FROM nation WHERE n_nationkey < 5", 225)},
-       |t AS (
-       |  SELECT p_partkey AS tid, CAST(p_partkey % 2 + 2 AS INT) AS n_exons,
-       |    CASE WHEN p_partkey % 2 = 1 THEN '-' ELSE '+' END AS strand,
-       |    (p_partkey % 25) + 1 AS chrn
-       |  FROM part WHERE p_partkey % 25 < 5),
-       |ex AS (
-       |  SELECT tid, n_exons, strand, chrn, exon_idx,
-       |    CAST(37 + exon_idx * 2500 + (tid * 53) % 2300 AS BIGINT) AS e_start,
-       |    CAST(24 + (tid * 7 + exon_idx * 13) % 33 AS INT) AS e_len
-       |  FROM t, LATERAL (SELECT unnest(generate_series(0, n_exons - 1)) AS exon_idx)),
+       |    sum(CASE WHEN gender = 'M' AND chromosome IN ('X', 'Y') AND NOT ($par) THEN 0
+       |             WHEN pct < 85 THEN 1 ELSE 0 END) AS n_het,
+       |    row_number() OVER (ORDER BY chromosome, position, ref_nuc, var_nuc) AS rgd_id
+       |  FROM conv GROUP BY 1, 2, 3, 4),
+       |${Synthetic.genomeSql(s"SELECT n_nationkey + 1 AS c FROM nation WHERE n_nationkey < $ChainChrs", ChainGenomeLines)},
+       |tx AS (SELECT * FROM ${csv("transcripts.tsv", "'tid':'INTEGER','t_chr':'VARCHAR','strand':'VARCHAR','t_start':'BIGINT','t_stop':'BIGINT'")}),
        |exd AS (
-       |  SELECT ex.*, e_start + e_len - 1 AS e_stop,
-       |    substr(cs.seq, CAST(e_start AS INT), e_len) AS dna,
-       |    CAST(coalesce(sum(e_len) OVER (PARTITION BY tid ORDER BY exon_idx
-       |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS prior_len
-       |  FROM ex JOIN chrseq cs ON cs.c = ex.chrn),
+       |  SELECT e.*, t.strand,
+       |    substr(cs.seq, CAST(e.e_start AS INT), CAST(e.e_stop - e.e_start + 1 AS INT)) AS dna,
+       |    coalesce(sum(e.e_stop - e.e_start + 1) OVER (PARTITION BY e.tid ORDER BY e.exon_idx
+       |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS prior_len
+       |  FROM ${csv("exons.tsv", "'tid':'INTEGER','exon_idx':'INTEGER','e_chr':'VARCHAR','e_start':'BIGINT','e_stop':'BIGINT'")} e
+       |  JOIN tx t USING (tid) JOIN chrseq cs ON CAST(cs.c AS VARCHAR) = e.e_chr),
        |cds AS (SELECT tid, strand, string_agg(dna, '' ORDER BY exon_idx) AS cds
        |        FROM exd GROUP BY tid, strand),
-       |allhits AS (
-       |  SELECT v.assigned_id, v.variant_type, v.var_nuc, e.tid,
+       |genic AS (
+       |  SELECT DISTINCT v.rgd_id FROM vars v
+       |  JOIN tx t ON t.t_chr = v.chromosome AND v.position BETWEEN t.t_start AND t.t_stop),
+       |hits AS (
+       |  SELECT v.rgd_id, e.tid, v.ref_nuc, v.var_nuc,
        |    e.prior_len + (v.position - e.e_start) + 1 AS rel_pos
-       |  FROM vars v JOIN exd e ON CAST(e.chrn AS VARCHAR) = v.chromosome
+       |  FROM vars v JOIN exd e ON e.e_chr = v.chromosome
        |    AND v.position BETWEEN e.e_start AND e.e_stop),
-       |genic AS (SELECT DISTINCT assigned_id FROM allhits),
        |asm AS (
-       |  SELECT h.assigned_id, h.tid, c.strand, c.cds, h.rel_pos, h.var_nuc AS var_base
-       |  FROM allhits h JOIN cds c ON c.tid = h.tid
-       |  WHERE h.variant_type = 'snv'),
-       |${QueriesGenomic.codonEffectSql("asm", Seq("assigned_id", "tid"))},
+       |  SELECT h.rgd_id, h.tid, c.strand, c.cds, h.rel_pos, h.var_nuc AS var_base
+       |  FROM hits h JOIN cds c USING (tid)),
+       |${QueriesGenomic.codonEffectSql("asm", Seq("rgd_id", "tid"))},
+       |vt AS (
+       |  SELECT h.rgd_id, c.aa_pos,
+       |    CASE WHEN length(h.ref_nuc) = 1 AND length(h.var_nuc) = 1 THEN c.syn_status
+       |         END AS syn_status,
+       |    CASE WHEN abs(length(h.ref_nuc) - length(h.var_nuc)) % 3 <> 0 THEN 'T'
+       |         ELSE 'F' END AS frameshift
+       |  FROM hits h JOIN codon c USING (rgd_id, tid)),
        |base AS (
        |  SELECT v.variant_type,
-       |    CASE WHEN g.assigned_id IS NOT NULL THEN 'GENIC' ELSE 'INTERGENIC' END AS genic_status,
-       |    coalesce(a.syn_status, 'none') AS syn_status,
-       |    v.assigned_id, v.n_samples, v.n_het, a.aa_pos
-       |  FROM vars v
-       |  LEFT JOIN genic g ON g.assigned_id = v.assigned_id
-       |  LEFT JOIN codon a ON a.assigned_id = v.assigned_id)
+       |    CASE WHEN g.rgd_id IS NOT NULL THEN 'GENIC' ELSE 'INTERGENIC' END AS genic_status,
+       |    coalesce(t.syn_status, 'none') AS syn_status,
+       |    v.rgd_id, v.n_samples, v.n_het, t.aa_pos, t.frameshift
+       |  FROM vars v LEFT JOIN genic g USING (rgd_id) LEFT JOIN vt t USING (rgd_id))
        |SELECT variant_type, genic_status, syn_status,
        |  count(*) AS cnt,
-       |  CAST(count(DISTINCT assigned_id) AS BIGINT) AS n_vars,
-       |  CAST(sum(assigned_id) AS BIGINT) AS sum_id,
+       |  CAST(count(DISTINCT rgd_id) AS BIGINT) AS n_vars,
+       |  CAST(sum(rgd_id) AS BIGINT) AS sum_id,
        |  CAST(sum(n_samples) AS BIGINT) AS sum_samples,
        |  CAST(sum(n_het) AS BIGINT) AS sum_het,
-       |  CAST(coalesce(sum(aa_pos), 0) AS BIGINT) AS sum_aa_pos
-       |FROM base GROUP BY 1, 2, 3 ORDER BY 1, 2, 3""".stripMargin
+       |  CAST(coalesce(sum(aa_pos), 0) AS BIGINT) AS sum_aa_pos,
+       |  CAST(count(*) FILTER (WHERE frameshift = 'T') AS BIGINT) AS n_frameshift
+       |FROM base GROUP BY 1, 2, 3
+       |UNION ALL $facts""".stripMargin
   }
 
   // ---------------------------------------------------------------- q85
@@ -652,93 +724,36 @@ object QueriesSources {
 
     Q("q84_pipeline_chain",
       (spark, dir) => {
-        writeChainVcfFixture()
-        val W = 256
-        // ---- convert (S1/X8/F2): strain + alt-allele explode, zygosity,
-        // padding-base strip, variant typing
-        val gtParts = split(col("gt"), "/")
-        val cf2 = Vcf.read(spark, ChainVcfPath)
-          .withColumn("a_idx", explode(array_distinct(expr(
-            "filter(transform(split(gt, '/'), x -> try_cast(x AS INT))," +
-              " x -> x IS NOT NULL AND x > 0)"))))
-          .withColumn("va", element_at(split(col("alt"), ","), col("a_idx")))
-          .withColumn("zyg", when(element_at(gtParts, 1) === element_at(gtParts, 2),
-            "hom").otherwise("het"))
-          .withColumn("share",
-            (length(col("ref")) > 1 || length(col("va")) > 1) &&
-              substring(col("ref"), 1, 1) === substring(col("va"), 1, 1))
-          .withColumn("ref_nuc",
-            when(col("share"), expr("substring(ref, 2)")).otherwise(col("ref")))
-          .withColumn("var_nuc",
-            when(col("share"), expr("substring(va, 2)")).otherwise(col("va")))
-          .withColumn("position",
-            when(col("share"), col("pos") + 1).otherwise(col("pos")))
-          .withColumn("variant_type",
-            when(col("ref_nuc") === "" && col("var_nuc") =!= "", "ins")
-              .when(col("var_nuc") === "" && col("ref_nuc") =!= "", "del")
-              .when(length(col("ref_nuc")) === 1 && length(col("var_nuc")) === 1, "snv")
-              .when(length(col("ref_nuc")) === length(col("var_nuc")), "mnv")
-              .otherwise("delins"))
-          .withColumnRenamed("chrom", "chromosome")
-        // ---- load (J5/K3/K4): dedup to VARIANT rows + dense ids
-        // (assignDense materializes internally; downstream consumers
-        // read its checkpointed blocks, not the VCF parse)
-        val keys = Seq("chromosome", "position", "ref_nuc", "var_nuc")
-        val vars = graft.operators.IdAssign.assignDense(
-          cf2.groupBy(keys.map(col): _*)
-            .agg(max(col("variant_type")).as("variant_type"),
-              count(lit(1)).as("n_samples"),
-              sum(when(col("zyg") === "het", 1L).otherwise(0L)).as("n_het")),
-          keys, "assigned_id")
-        // ---- post-process inputs: genome chunk table + exon DNA
-        // (5 chromosomes x 9000 bp; same shapes as q82)
-        val chunks = Fasta.toChunks(Fasta.parseLines(Synthetic.genomeLines(
-            table(spark, dir, "nation").filter(col("n_nationkey") < 5)
-              .select((col("n_nationkey") + 1).as("c")), lines = 225, prefix = "")),
-          width = W)
-        val t = table(spark, dir, "part")
-          .filter(col("p_partkey") % 25 < 5)
-          .select(col("p_partkey").as("tid"),
-            (col("p_partkey") % 2 + 2).cast("int").as("n_exons"),
-            when(col("p_partkey") % 2 === 1, "-").otherwise("+").as("strand"),
-            (col("p_partkey") % 25 + 1).cast("string").as("chr"))
-        val ex = t.withColumn("exon_idx", explode(sequence(lit(0), col("n_exons") - 1)))
-          .withColumn("e_start",
-            (lit(37) + col("exon_idx") * 2500 + (col("tid") * 53) % 2300).cast("long"))
-          .withColumn("e_len", (lit(24) + (col("tid") * 7 + col("exon_idx") * 13) % 33).cast("int"))
-          .withColumn("e_stop", col("e_start") + col("e_len") - 1)
-        // consumed twice (cds + the variant interval join)
-        val asm = CdsAssembly.assemble(
-          Fasta.fetch(ex, chunks, W, start = "e_start", stop = "e_stop").localCheckpoint(true))
-        // ---- genic status + transcript hits from ONE interval join
-        val allHits = graft.operators.RangeJoin.pointInInterval(
-            vars.select(col("assigned_id"), col("chromosome"), col("position"),
-              col("variant_type"), col("var_nuc")),
-            asm.exons.drop("dna"), Seq("chromosome"), Seq("chr"),
-            "position", "e_start", "e_stop", binSize = 1024L)
-          .withColumn("rel_pos", col("prior_len") + (col("position") - col("e_start")) + 1)
-          .select(col("assigned_id"), col("variant_type"), col("var_nuc").as("var_base"),
-            col("tid"), col("rel_pos"))
-          // consumed twice (genic existence + SNV codon math)
-          .localCheckpoint(true)
-        val genic = allHits.select(col("assigned_id")).distinct()
-          .withColumn("genic_status", lit("GENIC"))
-        val aa = CdsAssembly.codonEffect(
-            allHits.filter(col("variant_type") === "snv").join(asm.cds, "tid"))
-          .select(col("assigned_id"), col("tid"), col("aa_pos"), col("syn_status"))
-        // ---- final: variant rows fanned out per transcript hit
-        vars
-          .join(genic, Seq("assigned_id"), "left_outer")
-          .withColumn("genic_status", coalesce(col("genic_status"), lit("INTERGENIC")))
-          .join(aa, Seq("assigned_id"), "left_outer")
+        System.setProperty("derby.stream.error.file", s"$FixtureDir/derby.log")
+        val p = writeChainFixture(spark, dir)
+        val out = StrainLoader.Out(new java.io.File(ChainRoot, "out").getPath)
+        StrainLoader.setup(spark, p)
+        val c = StrainLoader.pass(spark, p.in("wave1.vcf"), out, p, ChainGenders,
+          rewave = false).counters()
+        val facts = c.productElementNames.zip(c.productIterator.map(_.asInstanceOf[Long]))
+          .toSeq ++ Seq(
+          "polyphenRecords" ->
+            spark.read.text(out.polyphen).filter(col("value").startsWith(">")).count(),
+          "derbyRows" -> StrainLoader.derbyCount(p))
+        Jdbc.shutdownEmbeddedDerby(p.derby)
+        val perKey = spark.read.parquet(out.wave)
+          .join(spark.read.parquet(out.genic).select("rgd_id", "genic_status"), Seq("rgd_id"),
+            "left_outer")
+          .join(spark.read.parquet(out.vt), Seq("rgd_id"), "left_outer")
           .groupBy(col("variant_type"), col("genic_status"),
             coalesce(col("syn_status"), lit("none")).as("syn_status"))
           .agg(count(lit(1)).as("cnt"),
-            countDistinct(col("assigned_id")).as("n_vars"),
-            sum(col("assigned_id")).as("sum_id"),
+            countDistinct(col("rgd_id")).as("n_vars"),
+            sum(col("rgd_id")).as("sum_id"),
             sum(col("n_samples")).as("sum_samples"),
             sum(col("n_het")).as("sum_het"),
-            coalesce(sum(col("aa_pos")), lit(0L)).as("sum_aa_pos"))
+            coalesce(sum(col("aa_pos")), lit(0L)).as("sum_aa_pos"),
+            sum(when(col("frameshift") === "T", 1L).otherwise(0L)).as("n_frameshift"))
+        import spark.implicits._
+        perKey.unionByName(facts.toDF("genic_status", "cnt")
+            .select(Seq(lit("~pass").as("variant_type"), col("genic_status"),
+              lit("").as("syn_status"), col("cnt")) ++
+              ChainAggs.tail.map(lit(0L).as(_)): _*))
           .orderBy(col("variant_type"), col("genic_status"), col("syn_status"))
       },
       Some(chainOracle)),

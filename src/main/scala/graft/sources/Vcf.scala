@@ -35,8 +35,9 @@ object Vcf {
   }
 
   /** Read a VCF into long format: one row per (line, strain), with the
-    * fixed columns parsed and `gt` holding the strain's genotype column.
-    * Gzip input is transparent (codec by file extension). */
+    * fixed columns parsed and `gt` holding the strain's genotype column
+    * (null when the line ends before that strain's column). Gzip input
+    * is transparent (codec by file extension). */
   def read(spark: SparkSession, path: String): DataFrame = {
     val strains = strainNames(spark, path)
     val lines = spark.read.text(path)
@@ -45,7 +46,9 @@ object Vcf {
     val fixed = FixedCols.zipWithIndex.map { case (n, i) =>
       element_at(col("c"), i + 1).as(n)
     }
-    val strainArr = array(strains.indices.map(i => element_at(col("c"), i + 10)): _*)
+    // a line with fewer genotype cells than the header reads the
+    // missing strains' cells as null
+    val strainArr = array(strains.indices.map(i => try_element_at(col("c"), lit(i + 10))): _*)
     val strainName = array(strains.map(lit): _*)
     lines
       .select(fixed :+ posexplode(strainArr).as(Seq("strain_idx", "gt")): _*)

@@ -153,24 +153,16 @@ class OperatingPointBandSpec extends SparkSpec {
     // per-entity retraction on this corpus, artifacts/
     // r14_mmselect_features.md) with K=8 pinned for the gate's static
     // oracle. This is the band-membership bridge for that frame
-    // (VERDICT r14 item 2): the derivation below mirrors the gate's
-    // `feats` exactly (tokenize lowered text at whitespace, bigram
-    // polyhash mod 61, unit-normalize, offset-0 quantize). At
+    // (VERDICT r14 item 2): the frame below is the gate's own
+    // (`VectorFunctions.wordBigramHist`, unit-normalized and offset-0
+    // quantized by `IvfKmeans.unitVectors`). At
     // deployment the cover analysis inherits the q134-measured K for
     // the serving corpus instead of this pinned 8 — that hand-off is
     // what bounds its per-cell O((n/K)^2) growth.
     import DedupConfig.{MmK, MmIters}
-    val FD = 61
-    val histD = (0 until FD).map(b =>
-      s"size(filter(bg, x -> x = $b))").mkString(", ")
     val q = IvfKmeans.unitVectors(docs
-        .select(col("doc_id").as("vec_id"),
-          TextFunctions.tokens(lower(col("text"))).as("t"))
-        .filter(size(col("t")) >= 2)
-        .withColumn("bg", transform(sequence(lit(1), size(col("t")) - 1),
-          i => (TextFunctions.polyHash(element_at(col("t"), i)) * 31 +
-            TextFunctions.polyHash(element_at(col("t"), i + 1))) % FD))
-        .selectExpr("vec_id", s"CAST(array($histD) AS array<double>) AS v"))
+        .select(col("doc_id").as("vec_id"), VectorFunctions.wordBigramHist(col("text")).as("v"))
+        .filter(col("v").isNotNull))
       .select(col("vec_id"), col("qv"))
     val occ = geometryLadder(q, Seq(4, 8, 16), iters = MmIters)
     val band = occ.collect { case (k, (cells, total)) if total <= cells * 96 => k }

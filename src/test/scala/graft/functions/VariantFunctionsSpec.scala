@@ -7,8 +7,8 @@ class VariantFunctionsSpec extends SparkSpec {
   import spark.implicits._
 
   test("variantType: snv / ins / del per the empty-side encoding") {
-    // AC -> GT (an MNV) is "snv" under the reference's three-way rule;
-    // q84 types it "mnv" (see COVERAGE.md)
+    // AC -> GT (an MNV) is "snv" under the reference's three-way rule,
+    // which the strain loader (q84) applies (see COVERAGE.md)
     val rows = Seq(("A", "C"), ("", "AC"), ("AC", ""), ("ACG", "T"), ("AC", "GT"))
       .toDF("ref", "var")
       .select(VariantFunctions.variantType($"ref", $"var").as("t"))
@@ -86,26 +86,6 @@ class VariantFunctionsSpec extends SparkSpec {
     assert(rows(2).getLong(0) == 101L && rows(2).getString(1) == "CG" && rows(2).isNullAt(2)
       && rows(2).getString(3) == "A" && rows(2).getBoolean(4))
     assert(!rows(3).getBoolean(4))
-  }
-
-  test("clipExonsToCds trims straddling exons and drops UTR-only exons") {
-    val exonsExpr = "array(struct(100L AS start, 200L AS stop), " +
-      "struct(300L AS start, 400L AS stop), struct(500L AS start, 600L AS stop))"
-    val df = Seq(1).toDF("x")
-      .withColumn("exons", expr(exonsExpr))
-      .select(VariantFunctions.clipExonsToCds(
-        $"exons", lit(150L), lit(550L)).as("clipped"))
-    val got = df.collect().head.getSeq[org.apache.spark.sql.Row](0)
-      .map(r => (r.getLong(0), r.getLong(1)))
-    assert(got.toSeq == Seq((150L, 200L), (300L, 400L), (500L, 550L)))
-    // CDS wholly inside the middle exon: outer exons dropped
-    val df2 = Seq(1).toDF("x")
-      .withColumn("exons", expr(exonsExpr))
-      .select(VariantFunctions.clipExonsToCds(
-        $"exons", lit(320L), lit(380L)).as("clipped"))
-    val got2 = df2.collect().head.getSeq[org.apache.spark.sql.Row](0)
-      .map(r => (r.getLong(0), r.getLong(1)))
-    assert(got2.toSeq == Seq((320L, 380L)))
   }
 
   test("numAllele counts bases with reads") {

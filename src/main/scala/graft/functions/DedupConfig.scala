@@ -84,9 +84,13 @@ object DedupConfig {
 
   /** Size-ratio necessary condition for J >= JaccThreshold/1000:
     * J(A,B) <= min(|A|,|B|)/max(|A|,|B|), so pairs failing
-    * 10*min >= 7*max cannot reach 0.700 — the filter only skips
-    * intersections, never changes results. Keep the 7:10 literals in
-    * sync with [[JaccThreshold]]. */
+    * 1000·min >= JaccThreshold·max cannot reach the threshold — the
+    * filter only skips intersections, never changes results.
+    * [[sizeRatioOkSql]] is the twin. */
   def sizeRatioOk(sa: Column, sb: Column): Column =
-    least(sa, sb) * 10 >= greatest(sa, sb) * 7
+    least(sa, sb) * 1000L >= greatest(sa, sb) * JaccThreshold.toLong
+
+  /** Twin of [[sizeRatioOk]] over two DuckDB size expressions. */
+  def sizeRatioOkSql(a: String, b: String): String =
+    s"least($a, $b) * 1000 >= greatest($a, $b) * $JaccThreshold"
 }

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.functions.{VectorFunctions => VF}
+import graft.functions.{MinhashPipeline, VectorFunctions => VF}
 
 /** Exact integer-fixed-point k-means (Lloyd) training for IVF
   * similarity search — the producer side of the cell index that
@@ -244,14 +244,12 @@ object IvfKmeans {
     * [[capCellsCte]] is the oracle mirror. */
   def capCells(spilled: DataFrame, k: Int, cap: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    import graft.functions.{TextFunctions => TF}
     val tot = spilled.agg(count(lit(1)).as("tot")) // 1 row -> broadcast
     val cw = Window.partitionBy(col("cell"))
     spilled.crossJoin(broadcast(tot))
       .withColumn("hthr",
         greatest(lit(cap.toLong), expr(s"(tot * 3) DIV ${2 * k}")))
-      .withColumn("sg", aggregate(col("qv"), lit(0L),
-        (a, x) => (a * 31 + x) % TF.HashMod))
+      .withColumn("sg", MinhashPipeline.contentFp(col("qv")))
       .withColumn("grp",
         when(count(lit(1)).over(cw) > col("hthr"), col("sg"))
           .otherwise(lit(0L)))
@@ -401,8 +399,7 @@ object IvfKmeans {
   def capCellsCte(sp: String, k: Int, cap: Int): String =
     s"""${sp}g AS (
        |  SELECT vec_id, cell,
-       |    list_reduce(list_prepend(CAST(0 AS BIGINT), qv),
-       |      (a, x) -> (a * 31 + x) % ${graft.functions.TextFunctions.HashMod}) AS sg
+       |    ${MinhashPipeline.contentFpSql("qv")} AS sg
        |  FROM $sp),
        |${sp}thr AS (SELECT greatest($cap, (count(*) * 3) // ${2 * k}) AS h
        |             FROM $sp),

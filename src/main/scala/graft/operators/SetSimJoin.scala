@@ -19,9 +19,12 @@ import org.apache.spark.sql.functions._
   *    unavoidable pair enumeration from the bottleneck into a cheap
   *    scan.
   *
-  * This object implements the bitmap regime (the test corpus has a
-  * ~400-shingle universe); the candidate *enumeration* strategy (LSH
-  * bands, language blocking, size-ratio cuts) stays with the caller.
+  * This object implements both regimes (the test corpus has a
+  * ~400-shingle universe for the bitmap one) and the exact-text class
+  * collapse the quadratic baselines run under ([[textClasses]],
+  * [[expandClassPairs]]); the candidate *enumeration* strategy (LSH
+  * bands, language blocking, size-ratio cuts) stays with the caller
+  * (`graft.functions.MinhashPipeline` for the LSH family).
   */
 object SetSimJoin {
 
@@ -91,6 +94,82 @@ object SetSimJoin {
     val inter = interSize(bmA, bmB)
     ((inter * 1000).cast("long") / (szA + szB - inter)).cast("long")
   }
+
+  /** EXACT-TEXT CLASS COLLAPSE: documents with IDENTICAL text have
+    * identical shingle/bigram sets, hence identical bitmaps,
+    * signatures, band keys, and pairwise similarity against everything
+    * — so the quadratic dedup baselines (q41/q43/q52/q92/q108) run
+    * their candidate + verify stages over ONE representative per
+    * distinct text and re-expand qualifying class pairs to doc pairs
+    * with [[expandClassPairs]]. Exactness: within-class pairs are
+    * J=1000 by construction (callers guard the non-empty-set condition
+    * that made the doc-level Jaccard NULL — 0 DIV 0 — on empty sets),
+    * and a cross-class doc pair inherits its class pair's Jaccard
+    * because every per-doc derived quantity is a pure function of the
+    * text. `ClassBlockingEquivalenceSpec` pins it against the doc-level
+    * forms. 100 TB: exact-copy collapse BEFORE a quadratic stage is the
+    * q40/q88 discipline — copy-dense corpora are exactly where the
+    * baselines' candidate streams explode, and the heavy stage runs on
+    * ~n/10 class rows here.
+    *
+    * Groups by (keyCols..., text) with q40's 8-byte fingerprint as the
+    * shuffle key; returns (<keyCols>, text, rid = min doc_id,
+    * dids = sorted member doc ids). */
+  def textClasses(df: DataFrame, keyCols: Seq[String] = Nil): DataFrame = {
+    val keys = keyCols.map(col)
+    df.withColumn("fp", xxhash64(col("text")))
+      .repartition(keys :+ col("fp"): _*)
+      .groupBy(keys :+ col("fp") :+ col("text"): _*)
+      .agg(min(col("doc_id")).as("rid"),
+        sort_array(collect_list(col("doc_id"))).as("dids"))
+      .drop("fp")
+  }
+
+  /** Re-expansion of verified class pairs to doc pairs. `rpairs`
+    * carries (ra, rb, jacc_x1000) — two class representatives, ra < rb,
+    * and their Jaccard; `members` (doc_id, dids) re-attaches each
+    * class's member list to the survivors only (the candidate stream
+    * keeps the doc-level row width); `within` holds the `dids` of the
+    * classes whose members pair with each other at J=1000 (callers
+    * pre-filter the guards: >= 2 members, non-empty element set). Each
+    * unordered doc pair appears exactly once: cross pairs because each
+    * unordered class pair enters once and a doc belongs to exactly one
+    * class; within pairs by the x < y cut. [[expandClassPairsSql]] is
+    * the twin. */
+  def expandClassPairs(rpairs: DataFrame, members: DataFrame, within: DataFrame,
+                       aCol: String, bCol: String): DataFrame = {
+    val ids = members.select(col("doc_id"), col("dids"))
+    val cross = rpairs
+      .join(ids.select(col("doc_id").as("ra"), col("dids").as("da")), "ra")
+      .join(ids.select(col("doc_id").as("rb"), col("dids").as("db")), "rb")
+      .select(explode(col("da")).as("x"), col("db"), col("jacc_x1000"))
+      .select(col("x"), explode(col("db")).as("y"), col("jacc_x1000"))
+      .select(least(col("x"), col("y")).as(aCol),
+        greatest(col("x"), col("y")).as(bCol), col("jacc_x1000"))
+    val inner = within
+      .select(explode(col("dids")).as("x"), col("dids"))
+      .select(col("x"), explode(col("dids")).as("y"))
+      .filter(col("x") < col("y"))
+      .select(col("x").as(aCol), col("y").as(bCol),
+        lit(1000L).as("jacc_x1000"))
+    cross.unionByName(inner)
+  }
+
+  /** Twin of [[expandClassPairs]]: `cpx` names a relation of verified
+    * class pairs (da, db, jacc_x1000) carrying both member lists;
+    * `within` is a SELECT of the within-class `dids`. */
+  def expandClassPairsSql(cpx: String, within: String, aCol: String,
+                          bCol: String): String =
+    s"""SELECT least(x, y) AS $aCol, greatest(x, y) AS $bCol, jacc_x1000
+       |  FROM $cpx,
+       |    LATERAL (SELECT unnest(da) AS x) ux,
+       |    LATERAL (SELECT unnest(db) AS y) uy
+       |  UNION ALL
+       |  SELECT x AS $aCol, y AS $bCol, CAST(1000 AS BIGINT) AS jacc_x1000
+       |  FROM ($within) c,
+       |    LATERAL (SELECT unnest(dids) AS x) ux,
+       |    LATERAL (SELECT unnest(dids) AS y) uy
+       |  WHERE x < y""".stripMargin
 
   /** The LARGE-universe regime: exact Jaccard self-join via PPJoin-style
     * prefix filtering — no dictionary, no driver collect, no bitmap;

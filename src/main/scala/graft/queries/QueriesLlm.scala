@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.functions.{TextFunctions => TF, VectorFunctions => VF}
 import graft.functions.VectorFunctions.{dotSql, normSql, byteHist, byteHistSql}
-import graft.operators.{IvfKmeans, MinhashIndex, OperatingPoint, SemanticIndex}
+import graft.operators.{IvfKmeans, MinhashIndex, OperatingPoint, SemanticIndex, SetSimJoin}
 
 /** Large-scale training-data pipeline operators over the `documents`
   * and `embeddings` tables: deduplication (exact, MinHash+LSH, SimHash,
@@ -32,20 +32,22 @@ object QueriesLlm {
   final case class TypedUserStats(user_id: Long, n_events: Long, n_incr: Long)
 
   private val P = TF.HashMod            // 1e9+7
-  private val MP = TF.MinhashPrime      // 2^31-1
   // dedup-family tuning lives in DedupConfig
-  import graft.functions.DedupConfig.{K, Bands, Rpb, JaccThreshold, sizeRatioOk,
-    IndexBuckets, VecOffset, SemThreshX1e6, MmThreshX1e6, SemK, SemIters, MmK,
+  import graft.functions.DedupConfig.{JaccThreshold, sizeRatioOk,
+    HotBucketCap, IndexBuckets, VecOffset, SemThreshX1e6, MmThreshX1e6, SemK, SemIters, MmK,
     MmIters, MmAnnK}
   private val Dim = 64                  // embedding dimensionality
   private val Planes = 8                // LSH hyperplanes
 
-  // signedDocs / bandKeysOf / minhashCtes / verifiedDupCte — the
-  // shared minhash front end + oracle mirrors — live in
-  // functions/MinhashPipeline (one definition for q99/q108/q109/q110)
+  // the near-duplicate pair path and its DuckDB twins, one definition
+  // per step for the text-dedup gates
   import graft.functions.MinhashPipeline.{signedDocs, signedDocsWord,
-    bandKeysOf, minhashCtes, minhashWordCtes, minhashWordClassCtes,
-    verifiedDupCte, verifiedDupPairs}
+    bitmapSignedDocs, bandKeysOf, bandPairs, bitmapBandPairs, sortedJacc,
+    cappedCandidates, hotCapPairs, verifyPairs, contentFp, copyCorpus,
+    verifiedDupPairs, copyCorpusSql, shinglesCte, shingleHashesSql,
+    wordDocsSql, sigBandCtes, bandCandidatesSql, shingleDictCtes, verifySql,
+    minhashCtes, minhashWordCtes, minhashWordClassCtes, hotCapPairsCtes,
+    contentFpSql, verifiedDupCte, verifiedDupPairsSql}
 
   /** The corpus of the MinHash index gates (q99/q109/q110/q112/q138):
     * a doc_id%4 subset, for the same reason as q92 — the template
@@ -53,11 +55,9 @@ object QueriesLlm {
     * non-similar docs (q41's documented artifact), and here every false
     * candidate pays an exact verify; the subset keeps the gates at
     * catalog-friendly cost without changing any operator shape.
-    * `length(text) >= 3`: for sub-3-char strings native shingle_hashes
-    * falls back to one whole-string hash (doc kept) while the oracle's
-    * 3-gram comprehension yields an empty list (doc dropped) —
-    * filtering identically on both sides ([[dedupCorpusCte]]) removes
-    * the engine asymmetry. */
+    * `length(text) >= 3` on both sides ([[dedupCorpusCte]]) keeps the
+    * index corpus free of sub-3-char texts, whose single whole-text
+    * shingle the engine and `shinglesCte` both give (COVERAGE). */
   private def dedupCorpus(spark: org.apache.spark.sql.SparkSession,
                           dir: String): org.apache.spark.sql.DataFrame =
     table(spark, dir, "documents")
@@ -155,83 +155,18 @@ object QueriesLlm {
       .localCheckpoint(true)
   }
 
-  /** EXACT-TEXT CLASS COLLAPSE (r16 optimization round): documents
-    * with IDENTICAL text have identical shingle/bigram sets, hence
-    * identical bitmaps, signatures, band keys, and pairwise similarity
-    * against everything — so the quadratic dedup baselines
-    * (q41/q43/q52/q92/q108) run their candidate + verify stages over
-    * ONE representative per distinct text and re-expand qualifying
-    * class pairs to doc pairs afterwards. This is the engine-side twin
-    * of the r15 ORACLE class-blocking rewrites (minhashWordClassCtes,
-    * pairsCteSql's cls block): same collapse, same re-expansion, same
-    * exactness argument — within-class pairs are J=1000 by
-    * construction (callers guard the non-empty-set condition that made
-    * the doc-level jaccard NULL — 0 DIV 0 — on empty sets), and a
-    * cross-class doc pair inherits its class pair's jaccard because
-    * every per-doc derived quantity is a pure function of the text.
-    * Result sets are byte-identical (oracle hashes pin it;
-    * ClassBlockingEquivalenceSpec pins it against the doc-level forms
-    * on corpora with empty/short/copy-heavy texts). 100 TB: exact-copy
-    * collapse BEFORE a quadratic stage is the q40/q88 discipline —
-    * copy-dense corpora are exactly where the baselines' candidate
-    * streams explode (guide §2.3 shuffle fewer bytes / §8 decide on
-    * small rows: the heavy stage runs on ~n/10 class rows here).
-    *
-    * Groups by (keyCols..., text) with q40's 8-byte fingerprint as the
-    * shuffle key; returns (<keyCols>, text, rid = min doc_id,
-    * dids = sorted member doc ids). */
-  private def textClasses(df: org.apache.spark.sql.DataFrame,
-                          keyCols: Seq[String] = Nil): org.apache.spark.sql.DataFrame = {
-    val keys = keyCols.map(col)
-    df.withColumn("fp", xxhash64(col("text")))
-      .repartition(keys :+ col("fp"): _*)
-      .groupBy(keys :+ col("fp") :+ col("text"): _*)
-      .agg(min(col("doc_id")).as("rid"),
-        sort_array(collect_list(col("doc_id"))).as("dids"))
-      .drop("fp")
-  }
-
-  /** Re-expansion of class-level verified pairs to doc-level pairs
-    * (the LATERAL-unnest tail of the r15 oracle rewrites, in Spark):
-    * `cpx` carries (da, db, jacc_x1000) — the two classes' member-id
-    * lists and the class pair's jaccard — and `withinCls` the classes
-    * whose members pair with each other at J=1000 (callers pre-filter
-    * the guards: >= 2 members, non-empty element set). Each unordered
-    * doc pair appears exactly once: cross pairs because unordered
-    * class pairs enter `cpx` once (rid_a < rid_b) and a doc belongs to
-    * exactly one class; within pairs by the x < y cut. */
-  private def expandClassPairs(cpx: org.apache.spark.sql.DataFrame,
-                               withinCls: org.apache.spark.sql.DataFrame,
-                               aCol: String, bCol: String): org.apache.spark.sql.DataFrame = {
-    val cross = cpx
-      .select(explode(col("da")).as("x"), col("db"), col("jacc_x1000"))
-      .select(col("x"), explode(col("db")).as("y"), col("jacc_x1000"))
-      .select(least(col("x"), col("y")).as(aCol),
-        greatest(col("x"), col("y")).as(bCol), col("jacc_x1000"))
-    val within = withinCls
-      .select(explode(col("dids")).as("x"), col("dids"))
-      .select(col("x"), explode(col("dids")).as("y"))
-      .filter(col("x") < col("y"))
-      .select(col("x").as(aCol), col("y").as(bCol),
-        lit(1000L).as("jacc_x1000"))
-    cross.unionByName(within)
-  }
-
   /** Exact same-language Jaccard near-dup pairs via the SetSimJoin
     * bitmap pipeline — shared by q43 (pair listing) and q52
-    * (clustering). Columns: doc_a, doc_b, jacc_x1000.
-    *
-    * r16: class-blocked by (lang, text) — [[textClasses]]; the engine
-    * twin of pairsCteSql's cls block. The O(classes²) bitmap-popcount
-    * enumeration replaces the O(docs²) one; within-class pairs expand
-    * at J=1000 guarded by sz >= 1 (empty shingle sets made the
-    * doc-level jaccard NULL — 0 DIV 0 — and the threshold filter
-    * dropped them). */
+    * (clustering). Columns: doc_a, doc_b, jacc_x1000. Class-blocked by
+    * (lang, text): the O(classes²) bitmap-popcount enumeration replaces
+    * the O(docs²) one, and within-class pairs expand at J=1000 guarded
+    * by sz >= 1 (an empty shingle set made the doc-level Jaccard NULL
+    * — 0 DIV 0 — and the threshold filter dropped it). */
   private def jaccardPairs(spark: org.apache.spark.sql.SparkSession, dir: String) = {
-    val cls = textClasses(table(spark, dir, "documents"), keyCols = Seq("lang"))
+    val cls = SetSimJoin.textClasses(table(spark, dir, "documents"), keyCols = Seq("lang"))
     val sh = cls.select(col("rid").as("doc_id"), col("lang"), col("dids"),
       TF.shingles(col("text"), 3).as("sh"))
-    val bm = graft.operators.SetSimJoin.withBitmap(sh, "doc_id", "sh")
+    val bm = SetSimJoin.withBitmap(sh, "doc_id", "sh")
       .select(col("doc_id"), col("lang"), col("dids"), col("sz"), col("bm"))
       // materialized once — both sides of the class self-join read it
       .localCheckpoint(true)
@@ -242,93 +177,40 @@ object QueriesLlm {
         col("a.lang") === col("b.lang") &&
           col("a.doc_id") < col("b.doc_id") &&
           sizeRatioOk(col("a.sz"), col("b.sz")))
-      .withColumn("jacc_x1000", graft.operators.SetSimJoin.jaccardX1000(
+      .withColumn("jacc_x1000", SetSimJoin.jaccardX1000(
         col("a.bm"), col("b.bm"), col("a.sz"), col("b.sz")))
       .filter(col("jacc_x1000") >= JaccThreshold)
       .select(col("a.doc_id").as("ra"), col("b.doc_id").as("rb"), col("jacc_x1000"))
-    val ids = bm.select(col("doc_id"), col("dids"))
-    val cpx = rpairs
-      .join(ids.select(col("doc_id").as("ra"), col("dids").as("da")), "ra")
-      .join(ids.select(col("doc_id").as("rb"), col("dids").as("db")), "rb")
-      .select(col("da"), col("db"), col("jacc_x1000"))
-    expandClassPairs(cpx,
+    SetSimJoin.expandClassPairs(rpairs, bm,
       bm.filter(col("sz") >= 1 && size(col("dids")) >= 2), "doc_a", "doc_b")
   }
 
-  /** DuckDB CTE fragment producing the same near-dup pairs (exact
-    * quadratic form, r14 cost shape); expects `sh` from [[shCte]] in
-    * scope. Three semantics-free rewrites over the r13 form, which
-    * stalled q52's sf0.1 priming past the 30-min cap:
-    *  - shingles map through an exact dictionary (string → dense id,
-    *    collision-free by construction) so the per-pair intersect
-    *    runs on sorted INT lists, not ~250-element VARCHAR lists;
-    *  - per-doc set size `sz` is hoisted once and the union size is
-    *    derived as sz_a + sz_b - inter (lists are distinct), dropping
-    *    the per-pair list_distinct(list_concat);
-    *  - the size-ratio necessary condition (DedupConfig.sizeRatioOk:
-    *    J >= 0.7 requires 10·min >= 7·max) joins as a predicate —
-    *    the same cut the engine applies, provably result-free.
-    * `pairs` is MATERIALIZED: q52's recursive closure references it
-    * through `edges` on every fringe round, and un-materialized DuckDB
-    * CTEs re-inline — the r13 oracle re-ran the quadratic scan per
-    * recursion round (the actual infeasibility, not the scan itself:
-    * measured 148 s total at sf0.1 once materialized).
-    *
-    * r15 (VERDICT r14 item 5): the quadratic scan itself is blocked by
-    * DISTINCT (lang, shingle-id set) CLASS — the corpus carries exact
-    * copies (gen_sf corpora are 10x key-shifted copies, and identical
-    * shingle SETS have identical jacc against everything), so the
-    * intersect join runs over classes (`cls`, ~n/10 rows at sf1) and
-    * qualifying class pairs re-expand to doc pairs from the class doc
-    * lists. Exactness: cross-class pairs inherit the class pair's jacc
-    * (every (x in A, y in B) ordered least/greatest appears exactly
-    * once — the rid < rid join picks each unordered class pair once);
-    * within-class pairs are identical sets, J = 1000 >= threshold by
-    * construction, enumerated per class. This is what made the q43/q52
-    * sf1 oracles primeable (r14 estimates: ~10 h / ~4 h naive). */
+  /** DuckDB CTE fragment producing the same near-dup pairs; expects
+    * `sh` from [[shCte]] in scope. The quadratic scan runs over
+    * DISTINCT (lang, shingle-id set) classes through the exact shingle
+    * dictionary (`shingleDictCtes`), with the size-ratio cut as a join
+    * predicate; qualifying class pairs re-expand to doc pairs
+    * (`expandClassPairsSql`). `pairs` is MATERIALIZED: q52's recursive
+    * closure references it through `edges` on every fringe round, and
+    * un-materialized DuckDB CTEs re-inline (re-running the quadratic
+    * scan per recursion round). */
   private def pairsCteSql: String =
-    s"""shdict AS (SELECT s, row_number() OVER (ORDER BY s) AS sid
-       |           FROM (SELECT DISTINCT unnest(sh) AS s FROM sh)),
-       |shd AS MATERIALIZED (
-       |  SELECT u.doc_id, any_value(u.lang) AS lang,
-       |    list_sort(list(d.sid)) AS ids, count(*) AS sz
-       |  FROM (SELECT doc_id, lang, unnest(sh) AS s FROM sh) u
-       |  JOIN shdict d ON d.s = u.s
-       |  GROUP BY u.doc_id),
+    s"""${shingleDictCtes("shd", "sh", "doc_id", Seq("lang"))},
        |cls AS MATERIALIZED (
        |  SELECT lang, ids, sz, list_sort(list(doc_id)) AS dids,
        |    min(doc_id) AS rid
        |  FROM shd GROUP BY lang, ids, sz),
        |cpx AS (
-       |  SELECT da, db, jacc FROM (
-       |    SELECT da, db, inter * 1000 // (szsum - inter) AS jacc FROM (
-       |      SELECT a.dids AS da, b.dids AS db,
-       |        CAST(len(list_intersect(a.ids, b.ids)) AS BIGINT) AS inter,
-       |        a.sz + b.sz AS szsum
-       |      FROM cls a JOIN cls b ON a.lang = b.lang AND a.rid < b.rid
-       |        AND least(a.sz, b.sz) * 10 >= greatest(a.sz, b.sz) * 7))
-       |  WHERE jacc >= $JaccThreshold),
+       |  ${verifySql("x.dids AS da, y.dids AS db",
+           "cls x JOIN cls y ON x.lang = y.lang AND x.rid < y.rid", "ids")}),
        |pairs AS MATERIALIZED (
-       |  SELECT least(x, y) AS doc_a, greatest(x, y) AS doc_b,
-       |    jacc AS jacc_x1000
-       |  FROM cpx,
-       |    LATERAL (SELECT unnest(da) AS x) ux,
-       |    LATERAL (SELECT unnest(db) AS y) uy
-       |  UNION ALL
-       |  SELECT x AS doc_a, y AS doc_b, CAST(1000 AS BIGINT) AS jacc_x1000
-       |  FROM (SELECT dids FROM cls WHERE len(dids) >= 2) c,
-       |    LATERAL (SELECT unnest(dids) AS x) ux,
-       |    LATERAL (SELECT unnest(dids) AS y) uy
-       |  WHERE x < y)""".stripMargin
+       |  ${SetSimJoin.expandClassPairsSql("cpx",
+           "SELECT dids FROM cls WHERE len(dids) >= 2", "doc_a", "doc_b")})""".stripMargin
 
   // ---- shared DuckDB fragments (mirror the Spark expressions) --------
 
   /** char 3-gram distinct shingles of lower(text). */
-  private val shCte =
-    """sh AS (
-      |  SELECT doc_id, lang,
-      |    list_distinct([substr(t, i, 3) FOR i IN generate_series(1, len(t) - 2)]) AS sh
-      |  FROM (SELECT doc_id, lang, lower(text) AS t FROM documents))""".stripMargin
+  private val shCte = shinglesCte("sh", "doc_id, lang", "documents")
 
   /** per-token polynomial rolling hash (BIGINT) of distinct tokens. */
   private val tokHashCte =
@@ -626,10 +508,7 @@ object QueriesLlm {
     // text) groups are exactly the (lang, text) groups.
     Q("q40_dedup_exact",
       (spark, dir) => {
-        val d = table(spark, dir, "documents").select("doc_id", "lang", "text")
-        val dup = d.filter(col("doc_id") % 7 === 0)
-          .withColumn("doc_id", col("doc_id") + 100000L)
-        d.unionByName(dup)
+        copyCorpus(table(spark, dir, "documents").select("doc_id", "lang", "text"))
           .withColumn("fp", xxhash64(col("text")))
           .repartition(col("lang"), col("fp"))
           .groupBy(col("lang"), col("fp"), col("text"))
@@ -640,10 +519,8 @@ object QueriesLlm {
             sum(when(col("copies") > 1, 1L).otherwise(0L)).as("dup_groups"))
           .orderBy(col("lang"))
       },
-      Some("""WITH all_docs AS (
-             |  SELECT doc_id, lang, text FROM documents
-             |  UNION ALL
-             |  SELECT doc_id + 100000, lang, text FROM documents WHERE doc_id % 7 = 0)
+      Some(s"""WITH all_docs AS (
+             |  ${copyCorpusSql("lang, text")})
              |SELECT lang, count(*) AS distinct_docs,
              |  CAST(sum(copies) AS BIGINT) AS total_rows,
              |  CAST(sum(CASE WHEN copies > 1 THEN 1 ELSE 0 END) AS BIGINT) AS dup_groups
@@ -656,155 +533,48 @@ object QueriesLlm {
     // (band_idx, band_key) instead of forming n^2 pairs.
     Q("q41_dedup_minhash_lsh",
       (spark, dir) => {
-        // r16: engine-side CLASS BLOCKING — the r15 oracle rewrite's
-        // collapse, now mirrored by the engine (see textClasses).
-        // Identical texts share the shingle set, hence bitmap,
-        // signature, and band keys, so the band self-join + inline
-        // verify run over one representative per distinct text
-        // (~n/10 rows on copy-dense corpora) and qualifying class
-        // pairs re-expand to doc pairs. Within-class pairs collide in
-        // every band (identical non-NULL keys whenever the shingle set
-        // is non-empty — empty sets produce NULL band keys and NULL
-        // jaccard in the doc form, hence the sz >= 1 guard) and are
-        // J=1000 by construction. Identical output, verified by the
-        // unchanged oracle hash.
-        val cls = textClasses(table(spark, dir, "documents"))
-        val sh = cls.select(col("rid").as("doc_id"), col("dids"), col("text"),
-          TF.shingles(col("text"), 3).as("sh"))
-        // one frame carries signature AND verification bitmap, so the
-        // band self-join verifies candidates inline — no second join to
-        // fetch bitmaps for the (band-count x) candidate stream
-        val bmdf = graft.operators.SetSimJoin.withBitmap(sh, "doc_id", "sh")
-        // materialized once: the band self-join below would otherwise
-        // recompute the signature pipeline for each side. hl via the
-        // native one-pass shingle_hashes (== transform(sh, shingleHash3)
-        // element for element, spec-checked) — text rides through the
-        // bitmap frame for it and is dropped before the checkpoint
-        val sig = bmdf
-          .withColumn("hl", TF.shingleHashes(col("text")))
-          .withColumn("sig", TF.minhashSignatureNative(col("hl"), K))
-          .drop("text", "hl", "sh")
-          .localCheckpoint(true)
-        // the candidate stream is the expensive stage (flooded trigram
-        // buckets: ~20.5M collisions at sf0.1) — keep its row width
-        // EXACTLY the doc-level form's (id, sz, bm, band cols); the
-        // class member lists re-attach to the tiny survivor set below
-        // (measured: carrying `dids` through this join doubled q41)
-        val bands = sig.select(col("doc_id"), col("sz"), col("bm"),
-          posexplode(array((0 until Bands).map(b =>
-            TF.bandKey(col("sig"), b, Rpb)): _*)).as(Seq("band_idx", "band_key")))
-        // the size-ratio cut prunes pairs that provably cannot reach
-        // the threshold before any intersection is computed; the
-        // AND+popcount verify (native bitmap_inter_count) runs inside
-        // the join, and a class pair colliding in several bands is
-        // verified per collision and deduped AFTER the filter —
-        // re-running the cheap popcount beats a full shuffle dedup of
-        // the candidate stream, and only surviving near-dup rows reach
-        // the distinct. No broadcast hint: the bands frame is the
-        // class-collapsed corpus (x Bands), so the (band_idx, band_key)
-        // equi-join shuffles; band keys are uniform minhash outputs, so
-        // the buckets stay balanced at any scale.
-        val rpairs = bands.as("a")
-          .join(bands.as("b"),
-            col("a.band_idx") === col("b.band_idx") &&
-              col("a.band_key") === col("b.band_key") &&
-              col("a.doc_id") < col("b.doc_id") &&
-              sizeRatioOk(col("a.sz"), col("b.sz")))
-          .withColumn("jacc_x1000", graft.operators.SetSimJoin.jaccardX1000(
-            col("a.bm"), col("b.bm"), col("a.sz"), col("b.sz")))
-          .filter(col("jacc_x1000") >= JaccThreshold)
-          .select(col("a.doc_id").as("ra"), col("b.doc_id").as("rb"), col("jacc_x1000"))
-          .distinct()
-        val ids = sig.select(col("doc_id"), col("dids"))
-        val cpx = rpairs
-          .join(ids.select(col("doc_id").as("ra"), col("dids").as("da")), "ra")
-          .join(ids.select(col("doc_id").as("rb"), col("dids").as("db")), "rb")
-          .select(col("da"), col("db"), col("jacc_x1000"))
-        expandClassPairs(cpx,
+        // class-blocked (SetSimJoin.textClasses): identical texts share
+        // the shingle set, hence bitmap, signature and band keys, so the
+        // band self-join and its inline verify run over one
+        // representative per distinct text (~n/10 rows on copy-dense
+        // corpora) and qualifying class pairs re-expand to doc pairs.
+        // Within-class pairs collide in every band and are J=1000 by
+        // construction; the sz >= 1 guard mirrors the doc form, where an
+        // empty set had NULL band keys and NULL Jaccard.
+        val cls = SetSimJoin.textClasses(table(spark, dir, "documents"))
+        val sig = bitmapSignedDocs(
+          cls.select(col("rid").as("doc_id"), col("dids"), col("text")))
+        // the bitmap popcount is cheap, so each class pair is verified
+        // per band collision and only survivors reach the distinct
+        SetSimJoin.expandClassPairs(bitmapBandPairs(sig).distinct(), sig,
             sig.filter(col("sz") >= 1 && size(col("dids")) >= 2),
             "doc_a", "doc_b")
           .orderBy(col("doc_a"), col("doc_b"))
       },
-      Some {
-        // r15 (VERDICT r14 item 5): class-blocked like pairsCteSql —
-        // signatures, band keys, and jacc depend only on the shingle
-        // SET, so docs with identical sets form one class (`cls`), the
-        // band self-join and the candidate verify run over class
-        // representatives (~n/10 classes on gen_sf corpora, ~100x
-        // fewer band collisions and verifies), and qualifying class
-        // pairs re-expand to doc pairs. Within-class pairs collide in
-        // every band (identical non-NULL keys) and verify at J = 1000
-        // by construction; empty-shingle classes are excluded exactly
-        // as the doc form excludes them (NULL minhash keys never
-        // equi-match, and they drop out of the dictionary join). The
-        // verify itself takes pairsCteSql's two semantics-free cuts:
-        // the exact shingle dictionary (intersect on sorted INT lists,
-        // ~14x per pair vs 250-element VARCHARs — class blocking alone
-        // measured 995 s at sf0.1) and the size-ratio necessary
-        // condition (J >= 0.7 requires 10·min >= 7·max). This is what
-        // retired q41's sf1 oracle abandonment (r14: >5400 s at the
-        // prime cap).
-        val sigCols = (0 until K).map(i =>
-          s"list_min(list_transform(hl, h -> (${TF.minhashA(i)} * h + ${TF.minhashB(i)}) % $MP)) AS m$i")
-          .mkString(",\n    ")
-        val bandSelects = (0 until Bands).map { b =>
-          val key = (0 until Rpb).map(r => s"m${b * Rpb + r}")
-            .reduce((acc, m) => s"($acc * 31 + $m)")
-          s"SELECT rid, $b AS band_idx, $key AS band_key FROM sigt"
-        }.mkString("\n  UNION ALL\n  ")
+      // class-blocked by shingle SET (`cls0`): signatures, band keys and
+      // Jaccard depend only on the set, so the band self-join and the
+      // candidate verify run over class representatives, and the verify
+      // intersects dictionary ids (`shingleDictCtes`) behind the
+      // size-ratio cut. Within-class pairs collide in every band and
+      // verify at J = 1000 by construction.
+      Some(
         s"""WITH $shCte,
            |cls0 AS MATERIALIZED (
            |  SELECT sh, list_sort(list(doc_id)) AS dids, min(doc_id) AS rid
            |  FROM sh GROUP BY sh),
-           |shdict AS (SELECT s, row_number() OVER (ORDER BY s) AS sid
-           |           FROM (SELECT DISTINCT unnest(sh) AS s FROM cls0)),
-           |cls AS MATERIALIZED (
-           |  SELECT u.rid, any_value(u.dids) AS dids,
-           |    list_sort(list(d.sid)) AS ids, count(*) AS sz
-           |  FROM (SELECT rid, dids, unnest(sh) AS s FROM cls0) u
-           |  JOIN shdict d ON d.s = u.s
-           |  GROUP BY u.rid),
-           |shlc AS (
-           |  SELECT rid, list_transform(sh, s ->
-           |    CAST(((ascii(substr(s, 1, 1)) * 31 + ascii(substr(s, 2, 1))) * 31
-           |          + ascii(substr(s, 3, 1))) % $P AS BIGINT)) AS hl
-           |  FROM cls0),
-           |sigt AS (
-           |  SELECT rid,
-           |    $sigCols
-           |  FROM shlc),
-           |bands AS (
-           |  $bandSelects),
+           |${shingleDictCtes("cls", "cls0", "rid", Seq("dids"))},
+           |shlc AS (SELECT rid, ${shingleHashesSql("sh")} AS hl FROM cls0),
+           |${sigBandCtes("", "rid", "shlc")},
            |ccand AS (
-           |  SELECT DISTINCT a.rid AS ra, b.rid AS rb
-           |  FROM bands a JOIN bands b
-           |    ON a.band_idx = b.band_idx AND a.band_key = b.band_key
-           |    AND a.rid < b.rid),
+           |  ${bandCandidatesSql("", "rid")}),
            |cver AS (
-           |  SELECT da, db, jacc FROM (
-           |    SELECT da, db, inter * 1000 // (szsum - inter) AS jacc FROM (
-           |      SELECT x.dids AS da, y.dids AS db,
-           |        CAST(len(list_intersect(x.ids, y.ids)) AS BIGINT) AS inter,
-           |        x.sz + y.sz AS szsum
-           |      FROM ccand c
-           |      JOIN cls x ON x.rid = c.ra
-           |      JOIN cls y ON y.rid = c.rb
-           |        AND least(x.sz, y.sz) * 10 >= greatest(x.sz, y.sz) * 7))
-           |  WHERE jacc >= $JaccThreshold)
+           |  ${verifySql("x.dids AS da, y.dids AS db",
+               "ccand c JOIN cls x ON x.rid = c.ra JOIN cls y ON y.rid = c.rb", "ids")})
            |SELECT doc_a, doc_b, jacc_x1000 FROM (
-           |  SELECT least(x, y) AS doc_a, greatest(x, y) AS doc_b,
-           |    jacc AS jacc_x1000
-           |  FROM cver,
-           |    LATERAL (SELECT unnest(da) AS x) ux,
-           |    LATERAL (SELECT unnest(db) AS y) uy
-           |  UNION ALL
-           |  SELECT x AS doc_a, y AS doc_b, CAST(1000 AS BIGINT) AS jacc_x1000
-           |  FROM (SELECT dids FROM cls0 WHERE len(dids) >= 2 AND len(sh) >= 1) c,
-           |    LATERAL (SELECT unnest(dids) AS x) ux,
-           |    LATERAL (SELECT unnest(dids) AS y) uy
-           |  WHERE x < y)
-           |ORDER BY doc_a, doc_b""".stripMargin
-      }),
+           |  ${SetSimJoin.expandClassPairsSql("cver",
+               "SELECT dids FROM cls0 WHERE len(dids) >= 2 AND len(sh) >= 1",
+               "doc_a", "doc_b")})
+           |ORDER BY doc_a, doc_b""".stripMargin)),
 
     // -- The same Broder band scheme at PRODUCTION shingle granularity:
     // word bigrams instead of char 3-grams (Lee et al., "Deduplicating
@@ -822,86 +592,41 @@ object QueriesLlm {
     // char 3-grams on the same corpus at sf0.1).
     Q("q108_dedup_minhash_word",
       (spark, dir) => {
-        // the shared word-bigram front end (MinhashPipeline — one
-        // definition for this uncapped BASELINE and q127's
-        // hot-bucket-controlled production form); band self-join
-        // consumes both sides — materialize the signature pass once
-        // (the q41/q82 rule).
-        // r16: class-blocked by exact text (textClasses) — the engine
-        // twin of the oracle's minhashWordClassCtes: the self-join and
-        // the sorted-intersect verify run over class representatives
-        // and re-expand. Classes whose text fails signedDocsWord's
-        // >= 2-token filter drop out entirely, exactly as their member
+        // the shared word-bigram front end (one definition for this
+        // uncapped BASELINE and q127's hot-capped production form),
+        // class-blocked by exact text like q41. Classes whose text fails
+        // signedDocsWord's >= 2-token filter drop out, as their member
         // docs did in the doc-level form; surviving classes have a
         // non-empty hl, so every within-class pair collides (identical
-        // bands) at J=1000, no extra guard needed.
-        val cls = textClasses(table(spark, dir, "documents"))
+        // bands) at J=1000 with no extra guard. The band self-join reads
+        // both sides: materialize the signature pass once.
+        val cls = SetSimJoin.textClasses(table(spark, dir, "documents"))
           .select(col("rid").as("doc_id"), col("text"), col("dids"))
         val base = signedDocsWord(cls, passthru = Seq("dids"))
           .localCheckpoint(true)
-        // band join stays at the doc-level form's row width — the class
-        // member lists re-attach to the survivor pairs only (the q41
-        // measurement: arrays riding the candidate stream cost more
-        // than the collapse saves on a copy-free corpus)
-        val bands = bandKeysOf(base, passthru = Seq("sz", "hl"))
-        val rpairs = bands.as("a")
-          .join(bands.as("b"),
-            col("a.bkey") === col("b.bkey") &&
-              col("a.doc_id") < col("b.doc_id") &&
-              sizeRatioOk(col("a.sz"), col("b.sz")))
-          .select(col("a.doc_id").as("ra"), col("b.doc_id").as("rb"),
-            col("a.sz").as("sz_a"), col("b.sz").as("sz_b"),
-            call_function("sorted_inter_count",
-              col("a.hl"), col("b.hl")).as("inter"))
-          .withColumn("jacc_x1000",
-            expr("inter * 1000 DIV (sz_a + sz_b - inter)"))
-          .filter(col("jacc_x1000") >= JaccThreshold)
+        // band join at the doc-level row width, verified per collision
+        val rpairs = sortedJacc(bandPairs(bandKeysOf(base, passthru = Seq("sz", "hl")))
+            .select(col("a.doc_id").as("ra"), col("b.doc_id").as("rb"),
+              col("a.hl").as("hl_a"), col("b.hl").as("hl_b"),
+              col("a.sz").as("sz_a"), col("b.sz").as("sz_b")))
           .select(col("ra"), col("rb"), col("jacc_x1000"))
           .distinct()
-        val ids = base.select(col("doc_id"), col("dids"))
-        val cpx = rpairs
-          .join(ids.select(col("doc_id").as("ra"), col("dids").as("da")), "ra")
-          .join(ids.select(col("doc_id").as("rb"), col("dids").as("db")), "rb")
-          .select(col("da"), col("db"), col("jacc_x1000"))
-        expandClassPairs(cpx, base.filter(size(col("dids")) >= 2),
+        SetSimJoin.expandClassPairs(rpairs, base, base.filter(size(col("dids")) >= 2),
             "doc_a", "doc_b")
           .orderBy(col("doc_a"), col("doc_b"))
       },
-      // r15: class-blocked via minhashWordClassCtes (identical texts
-      // share signatures, bands, and jaccard — q41's rewrite at word
-      // granularity, with the result-free size-ratio cut); moved
-      // q108's sf1 oracle from a 663 s primed-only row to the inline
-      // band. Within-class pairs collide in every band (non-empty hl
-      // after the >= 2-token filter) and are J=1000 by construction.
+      // class-blocked via minhashWordClassCtes, q41's oracle at word
+      // granularity
       Some {
         s"""WITH ${minhashWordClassCtes("w", "documents")},
            |ccand AS (
-           |  SELECT DISTINCT a.rid AS ra, b.rid AS rb
-           |  FROM wbands a JOIN wbands b
-           |    ON a.bkey = b.bkey AND a.rid < b.rid),
+           |  ${bandCandidatesSql("w", "rid")}),
            |cver AS (
-           |  SELECT da, db, jacc FROM (
-           |    SELECT da, db, inter * 1000 // (szsum - inter) AS jacc FROM (
-           |      SELECT x.dids AS da, y.dids AS db,
-           |        CAST(len(list_intersect(x.hl, y.hl)) AS BIGINT) AS inter,
-           |        x.sz + y.sz AS szsum
-           |      FROM ccand c
-           |      JOIN wcls x ON x.rid = c.ra
-           |      JOIN wcls y ON y.rid = c.rb
-           |        AND least(x.sz, y.sz) * 10 >= greatest(x.sz, y.sz) * 7))
-           |  WHERE jacc >= $JaccThreshold)
+           |  ${verifySql("x.dids AS da, y.dids AS db",
+               "ccand c JOIN wcls x ON x.rid = c.ra JOIN wcls y ON y.rid = c.rb", "hl")})
            |SELECT doc_a, doc_b, jacc_x1000 FROM (
-           |  SELECT least(x, y) AS doc_a, greatest(x, y) AS doc_b,
-           |    jacc AS jacc_x1000
-           |  FROM cver,
-           |    LATERAL (SELECT unnest(da) AS x) ux,
-           |    LATERAL (SELECT unnest(db) AS y) uy
-           |  UNION ALL
-           |  SELECT x AS doc_a, y AS doc_b, CAST(1000 AS BIGINT) AS jacc_x1000
-           |  FROM (SELECT dids FROM wcls WHERE len(dids) >= 2) c,
-           |    LATERAL (SELECT unnest(dids) AS x) ux,
-           |    LATERAL (SELECT unnest(dids) AS y) uy
-           |  WHERE x < y)
+           |  ${SetSimJoin.expandClassPairsSql("cver",
+               "SELECT dids FROM wcls WHERE len(dids) >= 2", "doc_a", "doc_b")})
            |ORDER BY doc_a, doc_b""".stripMargin
       }),
 
@@ -941,12 +666,10 @@ object QueriesLlm {
     // provably identical to the plain quadratic scan the oracle runs.
     Q("q43_dedup_ngram_jaccard",
       (spark, dir) => jaccardPairs(spark, dir).orderBy(col("doc_a"), col("doc_b")),
-      // r15: shares pairsCteSql with q52 — the class-blocked exact
-      // form (same pairs, same jacc: the int shingle dictionary is
+      // shares pairsCteSql with q52 — the class-blocked exact form
+      // (same pairs, same jacc: the int shingle dictionary is
       // collision-free and union = sz_a + sz_b - inter on distinct
-      // lists); the plain sh-self-join form was the one remaining
-      // naive quadratic oracle and is what kept q43 un-primeable at
-      // sf1 (~10 h estimate)
+      // lists)
       Some(
         s"""WITH $shCte,
            |$pairsCteSql
@@ -1673,17 +1396,16 @@ object QueriesLlm {
         // elements are HASHED bigrams (the shared integer polynomial,
         // reproduced in the oracle): long compares/intersections beat
         // string ones throughout the pipeline — the standard
-        // hashed-shingle representation.
-        // r16: class-blocked by exact text (textClasses) — the engine
-        // twin of the oracle's bcls block: the prefix-filter join runs
-        // over class representatives and re-expands. Prefix filtering
-        // is exact under ANY global element order (the theorem in
+        // hashed-shingle representation. Class-blocked by exact text
+        // (SetSimJoin.textClasses): the prefix-filter join runs over
+        // class representatives and re-expands. Prefix filtering is
+        // exact under ANY global element order (the theorem in
         // SetSimJoin.prefixFilterJoin holds for every total order), so
         // class-level frequencies vs doc-level ones change only which
         // candidates are pruned, never the verified result set.
         // Surviving classes (>= 2 tokens) have non-empty sh, so every
         // within-class pair verifies at J=1000 in the doc form.
-        val cls = textClasses(
+        val cls = SetSimJoin.textClasses(
           table(spark, dir, "documents").filter(col("doc_id") % 4 === 0))
         val bg = cls
           .select(col("rid").as("doc_id"), col("dids"),
@@ -1696,60 +1418,31 @@ object QueriesLlm {
           // read by the prefix join input, the dids re-attach, and the
           // within-class expansion
           .localCheckpoint(true)
-        val reps = graft.operators.SetSimJoin
-          .prefixFilterJoin(bg.select("doc_id", "sh"), "doc_id", "sh", 700)
-        val dids = bg.select(col("doc_id"), col("dids"))
-        val cpx = reps
-          .join(dids.select(col("doc_id").as("id_a"), col("dids").as("da")), "id_a")
-          .join(dids.select(col("doc_id").as("id_b"), col("dids").as("db")), "id_b")
-          .select(col("da"), col("db"), col("jacc_x1000"))
-        expandClassPairs(cpx, bg.filter(size(col("dids")) >= 2), "id_a", "id_b")
+        val reps = SetSimJoin
+          .prefixFilterJoin(bg.select("doc_id", "sh"), "doc_id", "sh", JaccThreshold)
+          .select(col("id_a").as("ra"), col("id_b").as("rb"), col("jacc_x1000"))
+        SetSimJoin.expandClassPairs(reps, bg, bg.filter(size(col("dids")) >= 2),
+            "id_a", "id_b")
           .orderBy(col("id_a"), col("id_b"))
       },
-      // r15: the plain quadratic form, class-blocked like pairsCteSql
-      // (jaccard depends only on the hashed-bigram SET, so identical
+      // the plain quadratic form, class-blocked like pairsCteSql
+      // (Jaccard depends only on the hashed-bigram SET, so identical
       // sets form one class; the all-pairs scan runs over classes and
       // qualifying class pairs re-expand — within-class pairs are
-      // J=1000 by construction). The size-ratio predicate is the
-      // provably result-free cut at threshold 700. This moved q92's
-      // sf1 oracle from 1879-2336 s (r11 measurements, primed-only)
-      // to the inline band.
+      // J=1000 by construction), with the size-ratio cut.
       Some(
         s"""WITH bg AS (
-           |  SELECT doc_id, list_distinct(list_transform(
-           |    [t[i] || ' ' || t[i + 1] FOR i IN generate_series(1, len(t) - 1)],
-           |    s -> list_reduce(
-           |      list_prepend(CAST(0 AS BIGINT),
-           |        list_transform(string_split_regex(s, ''), c -> CAST(ascii(c) AS BIGINT))),
-           |      (acc, x) -> (acc * 31 + x) % $P))) AS sh
-           |  FROM (SELECT doc_id, string_split_regex(trim(lower(text)), '\\s+') AS t
-           |        FROM documents WHERE doc_id % 4 = 0)
-           |  WHERE len(t) >= 2),
+           |  ${wordDocsSql("doc_id",
+               "(SELECT doc_id, text FROM documents WHERE doc_id % 4 = 0)")}),
            |bcls AS MATERIALIZED (
-           |  SELECT sh, CAST(len(sh) AS BIGINT) AS sz,
-           |    list_sort(list(doc_id)) AS dids, min(doc_id) AS rid
-           |  FROM bg GROUP BY sh),
+           |  SELECT hl, sz, list_sort(list(doc_id)) AS dids, min(doc_id) AS rid
+           |  FROM bg GROUP BY hl, sz),
            |cpx AS (
-           |  SELECT da, db, jacc FROM (
-           |    SELECT da, db, inter * 1000 // (szsum - inter) AS jacc FROM (
-           |      SELECT a.dids AS da, b.dids AS db,
-           |        CAST(len(list_intersect(a.sh, b.sh)) AS BIGINT) AS inter,
-           |        a.sz + b.sz AS szsum
-           |      FROM bcls a JOIN bcls b ON a.rid < b.rid
-           |        AND least(a.sz, b.sz) * 10 >= greatest(a.sz, b.sz) * 7))
-           |  WHERE jacc >= 700)
+           |  ${verifySql("x.dids AS da, y.dids AS db",
+               "bcls x JOIN bcls y ON x.rid < y.rid", "hl")})
            |SELECT id_a, id_b, jacc_x1000 FROM (
-           |  SELECT least(x, y) AS id_a, greatest(x, y) AS id_b,
-           |    jacc AS jacc_x1000
-           |  FROM cpx,
-           |    LATERAL (SELECT unnest(da) AS x) ux,
-           |    LATERAL (SELECT unnest(db) AS y) uy
-           |  UNION ALL
-           |  SELECT x AS id_a, y AS id_b, CAST(1000 AS BIGINT) AS jacc_x1000
-           |  FROM (SELECT dids FROM bcls WHERE len(dids) >= 2) c,
-           |    LATERAL (SELECT unnest(dids) AS x) ux,
-           |    LATERAL (SELECT unnest(dids) AS y) uy
-           |  WHERE x < y)
+           |  ${SetSimJoin.expandClassPairsSql("cpx",
+               "SELECT dids FROM bcls WHERE len(dids) >= 2", "id_a", "id_b")})
            |ORDER BY id_a, id_b""".stripMargin)),
 
     // -- The dedup ladder composed as ONE production pipeline (the
@@ -1766,9 +1459,7 @@ object QueriesLlm {
     // clean actually runs, so it's gated end to end as one artifact.
     Q("q88_dedup_pipeline",
       (spark, dir) => {
-        val d = table(spark, dir, "documents").select("doc_id", "lang", "text")
-        val raw = d.unionByName(d.filter(col("doc_id") % 7 === 0)
-          .withColumn("doc_id", col("doc_id") + 100000L))
+        val raw = copyCorpus(table(spark, dir, "documents").select("doc_id", "lang", "text"))
         // stage 1: exact dedup, canonical = min doc_id per (lang, text)
         val exact = raw
           .withColumn("fp", xxhash64(col("text")))
@@ -1777,27 +1468,11 @@ object QueriesLlm {
           .agg(min(col("doc_id")).as("doc_id"), count(lit(1)).as("copies"))
           // consumed by the signature build AND the final rollup
           .localCheckpoint(true)
-        // stage 2: LSH candidates + inline verify over exact survivors
-        // (hl via native shingle_hashes, as q41)
-        val sh = exact.select(col("doc_id"), col("text"),
-          TF.shingles(col("text"), 3).as("sh"))
-        val sig = graft.operators.SetSimJoin.withBitmap(sh, "doc_id", "sh")
-          .withColumn("hl", TF.shingleHashes(col("text")))
-          .withColumn("sig", TF.minhashSignatureNative(col("hl"), K))
-          .drop("text", "hl")
-          .localCheckpoint(true)
-        val bands = sig.select(col("doc_id"), col("sz"), col("bm"),
-          posexplode(array((0 until Bands).map(b =>
-            TF.bandKey(col("sig"), b, Rpb)): _*)).as(Seq("band_idx", "band_key")))
-        val pairs = bands.as("a")
-          .join(bands.as("b"),
-            col("a.band_idx") === col("b.band_idx") &&
-              col("a.band_key") === col("b.band_key") &&
-              col("a.doc_id") < col("b.doc_id") &&
-              sizeRatioOk(col("a.sz"), col("b.sz")))
-          .filter(graft.operators.SetSimJoin.jaccardX1000(
-            col("a.bm"), col("b.bm"), col("a.sz"), col("b.sz")) >= JaccThreshold)
-          .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
+        // stage 2: LSH candidates + inline bitmap verify over exact
+        // survivors (q41's shape)
+        val sig = bitmapSignedDocs(exact.select(col("doc_id"), col("text")))
+        val pairs = bitmapBandPairs(sig)
+          .select(col("ra").as("doc_a"), col("rb").as("doc_b"))
         // no distinct here: ConnectedComponents symmetrizes + distincts
         // the edge list as its first step — a pre-distinct would be a
         // second shuffle of the same verified-pair stream
@@ -1815,59 +1490,21 @@ object QueriesLlm {
             sum(when(col("near_dup").isNull, col("doc_id"))).as("sum_kept_ids"))
           .orderBy(col("lang"))
       },
-      Some {
-        val sigCols = (0 until K).map(i =>
-          s"list_min(list_transform(hl, h -> (${TF.minhashA(i)} * h + ${TF.minhashB(i)}) % $MP)) AS m$i")
-          .mkString(",\n    ")
-        val bandSelects = (0 until Bands).map { b =>
-          val key = (0 until Rpb).map(r => s"m${b * Rpb + r}")
-            .reduce((acc, m) => s"($acc * 31 + $m)")
-          s"SELECT doc_id, $b AS band_idx, $key AS band_key FROM sigt"
-        }.mkString("\n  UNION ALL\n  ")
+      Some(
         s"""WITH RECURSIVE all_docs AS (
-           |  SELECT doc_id, lang, text FROM documents
-           |  UNION ALL
-           |  SELECT doc_id + 100000, lang, text FROM documents WHERE doc_id % 7 = 0),
+           |  ${copyCorpusSql("lang, text")}),
            |ex AS (
            |  SELECT lang, text, min(doc_id) AS doc_id, count(*) AS copies
            |  FROM all_docs GROUP BY lang, text),
-           |sh AS (
-           |  SELECT doc_id,
-           |    list_distinct([substr(t, i, 3) FOR i IN generate_series(1, len(t) - 2)]) AS sh
-           |  FROM (SELECT doc_id, lower(text) AS t FROM ex)),
-           |shl AS (
-           |  SELECT doc_id, list_transform(sh, s ->
-           |    CAST(((ascii(substr(s, 1, 1)) * 31 + ascii(substr(s, 2, 1))) * 31
-           |          + ascii(substr(s, 3, 1))) % $P AS BIGINT)) AS hl
-           |  FROM sh),
-           |sigt AS (
-           |  SELECT doc_id,
-           |    $sigCols
-           |  FROM shl),
-           |bands AS (
-           |  $bandSelects),
+           |${shinglesCte("sh", "doc_id", "ex")},
+           |shl AS (SELECT doc_id, ${shingleHashesSql("sh")} AS hl FROM sh),
+           |${sigBandCtes("", "doc_id", "shl")},
            |cand AS (
-           |  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-           |  FROM bands a JOIN bands b
-           |    ON a.band_idx = b.band_idx AND a.band_key = b.band_key
-           |    AND a.doc_id < b.doc_id),
-           |shdict AS (SELECT s, row_number() OVER (ORDER BY s) AS sid
-           |           FROM (SELECT DISTINCT unnest(sh) AS s FROM sh)),
-           |shd AS MATERIALIZED (
-           |  SELECT u.doc_id, list_sort(list(d.sid)) AS ids, count(*) AS sz
-           |  FROM (SELECT doc_id, unnest(sh) AS s FROM sh) u
-           |  JOIN shdict d ON d.s = u.s
-           |  GROUP BY u.doc_id),
+           |  ${bandCandidatesSql("", "doc_id")}),
+           |${shingleDictCtes("shd", "sh", "doc_id", Nil)},
            |pairs AS MATERIALIZED (
-           |  SELECT doc_a, doc_b FROM (
-           |    SELECT c.doc_a, c.doc_b,
-           |      CAST(len(list_intersect(x.ids, y.ids)) AS BIGINT) AS inter,
-           |      x.sz + y.sz AS szsum
-           |    FROM cand c
-           |    JOIN shd x ON x.doc_id = c.doc_a
-           |    JOIN shd y ON y.doc_id = c.doc_b
-           |    WHERE least(x.sz, y.sz) * 10 >= greatest(x.sz, y.sz) * 7)
-           |  WHERE inter * 1000 // (szsum - inter) >= $JaccThreshold),
+           |  ${verifySql("c.ra AS doc_a, c.rb AS doc_b",
+               "cand c JOIN shd x ON x.doc_id = c.ra JOIN shd y ON y.doc_id = c.rb", "ids")}),
            |edges AS MATERIALIZED (
            |  SELECT doc_a AS a, doc_b AS b FROM pairs
            |  UNION SELECT doc_b, doc_a FROM pairs),
@@ -1884,8 +1521,7 @@ object QueriesLlm {
            |  CAST(sum(CASE WHEN r.doc_id IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_kept,
            |  CAST(sum(CASE WHEN r.doc_id IS NULL THEN e.doc_id END) AS BIGINT) AS sum_kept_ids
            |FROM ex e LEFT JOIN removed r ON e.doc_id = r.doc_id
-           |GROUP BY e.lang ORDER BY e.lang""".stripMargin
-      }),
+           |GROUP BY e.lang ORDER BY e.lang""".stripMargin)),
 
     // -- Train/test contamination check: the eval-integrity gate every
     // training-data pipeline runs before shipping a split. Re-derives
@@ -2085,19 +1721,8 @@ object QueriesLlm {
            |  SELECT doc_id + 300000, lang, reverse(text) FROM corpus WHERE doc_id % 20 = 4),
            |${minhashCtes("i", "corpus")},
            |${minhashCtes("w", "wave")},
-           |cand AS (
-           |  SELECT DISTINCT w.doc_id AS w_id, i.doc_id AS idx_id
-           |  FROM wbands w JOIN ibands i ON w.bkey = i.bkey),
            |verified AS (
-           |  SELECT w_id, idx_id FROM (
-           |    SELECT c.w_id, c.idx_id,
-           |      CAST(len(list_intersect(wd.hl, id.hl)) AS BIGINT) AS inter,
-           |      wd.sz AS sz_w, id.sz AS sz_i
-           |    FROM cand c
-           |    JOIN wdocs wd ON wd.doc_id = c.w_id
-           |    JOIN idocs id ON id.doc_id = c.idx_id
-           |    WHERE least(wd.sz, id.sz) * 10 >= greatest(wd.sz, id.sz) * 7)
-           |  WHERE inter * 1000 // (sz_w + sz_i - inter) >= $JaccThreshold),
+           |  ${verifiedDupPairsSql("w", "idocs", "ibands")}),
            |m AS (
            |  SELECT w_id AS doc_id, count(*) AS n_matches, min(idx_id) AS first_match
            |  FROM verified GROUP BY w_id)
@@ -3366,58 +2991,18 @@ object QueriesLlm {
     // candidate set, never the corpus).
     Q("q121_dedup_lsh_hotcap",
       (spark, dir) => {
-        import graft.functions.DedupConfig.HotBucketCap
-        val d = table(spark, dir, "documents").select("doc_id", "lang", "text")
-        val corpus = d.unionByName(d.filter(col("doc_id") % 7 === 0)
-          .withColumn("doc_id", col("doc_id") + 100000L))
         // one signature pass feeds banding AND both verify sides
-        val sig = signedDocs(corpus).localCheckpoint(true)
-        // materialized once: both sides of the self-join read the
-        // capped frame (the window pipeline would otherwise run twice)
-        val capped = graft.functions.MinhashPipeline.capBands(sig, HotBucketCap)
+        val sig = signedDocs(copyCorpus(
+          table(spark, dir, "documents").select("doc_id", "lang", "text")))
           .localCheckpoint(true)
-        val cand = capped.as("a").join(capped.as("b"),
-            col("a.bkey") === col("b.bkey") && col("a.grp") === col("b.grp") &&
-              col("a.doc_id") < col("b.doc_id"))
-          .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-          .distinct()
-        cand
-          .join(sig.select(col("doc_id").as("doc_a"),
-            col("hl").as("hl_a"), col("sz").as("sz_a")), "doc_a")
-          .join(sig.select(col("doc_id").as("doc_b"),
-            col("hl").as("hl_b"), col("sz").as("sz_b")), "doc_b")
-          .filter(sizeRatioOk(col("sz_a"), col("sz_b")))
-          .withColumn("inter",
-            call_function("sorted_inter_count", col("hl_a"), col("hl_b")))
-          .withColumn("jacc_x1000",
-            expr("inter * 1000 DIV (sz_a + sz_b - inter)"))
-          .filter(col("jacc_x1000") >= JaccThreshold)
-          .select(col("doc_a"), col("doc_b"), col("jacc_x1000"))
-          .orderBy(col("doc_a"), col("doc_b"))
+        hotCapPairs(sig, HotBucketCap).orderBy(col("doc_a"), col("doc_b"))
       },
       Some {
-        import graft.functions.DedupConfig.HotBucketCap
-        import graft.functions.MinhashPipeline.capBandsCte
         s"""WITH cp AS (
-           |  SELECT doc_id, lang, text FROM documents
-           |  UNION ALL
-           |  SELECT doc_id + 100000, lang, text FROM documents WHERE doc_id % 7 = 0),
+           |  ${copyCorpusSql("lang, text")}),
            |${minhashCtes("c", "cp")},
-           |${capBandsCte("c", HotBucketCap)},
-           |cand AS (
-           |  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-           |  FROM ccap a JOIN ccap b
-           |    ON a.bkey = b.bkey AND a.grp = b.grp AND a.doc_id < b.doc_id)
-           |SELECT doc_a, doc_b, jacc_x1000 FROM (
-           |  SELECT c.doc_a, c.doc_b,
-           |    CAST(len(list_intersect(x.hl, y.hl)) AS BIGINT) * 1000
-           |      // (x.sz + y.sz - CAST(len(list_intersect(x.hl, y.hl)) AS BIGINT))
-           |      AS jacc_x1000
-           |  FROM cand c
-           |  JOIN cdocs x ON x.doc_id = c.doc_a
-           |  JOIN cdocs y ON y.doc_id = c.doc_b
-           |  WHERE least(x.sz, y.sz) * 10 >= greatest(x.sz, y.sz) * 7)
-           |WHERE jacc_x1000 >= $JaccThreshold
+           |${hotCapPairsCtes("c", HotBucketCap)}
+           |SELECT doc_a, doc_b, jacc_x1000 FROM cpairs
            |ORDER BY doc_a, doc_b""".stripMargin
       }),
 
@@ -3731,58 +3316,18 @@ object QueriesLlm {
     // corpus).
     Q("q127_dedup_word_hotcap",
       (spark, dir) => {
-        import graft.functions.DedupConfig.HotBucketCap
-        val d = table(spark, dir, "documents").select("doc_id", "text")
-        val corpus = d.unionByName(d.filter(col("doc_id") % 7 === 0)
-          .withColumn("doc_id", col("doc_id") + 100000L))
         // one signature pass feeds banding AND both verify sides
-        val sig = signedDocsWord(corpus).localCheckpoint(true)
-        // materialized once: both sides of the self-join read the
-        // capped frame (the window pipeline would otherwise run twice)
-        val capped = graft.functions.MinhashPipeline.capBands(sig, HotBucketCap)
+        val sig = signedDocsWord(copyCorpus(
+          table(spark, dir, "documents").select("doc_id", "text")))
           .localCheckpoint(true)
-        val cand = capped.as("a").join(capped.as("b"),
-            col("a.bkey") === col("b.bkey") && col("a.grp") === col("b.grp") &&
-              col("a.doc_id") < col("b.doc_id"))
-          .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-          .distinct()
-        cand
-          .join(sig.select(col("doc_id").as("doc_a"),
-            col("hl").as("hl_a"), col("sz").as("sz_a")), "doc_a")
-          .join(sig.select(col("doc_id").as("doc_b"),
-            col("hl").as("hl_b"), col("sz").as("sz_b")), "doc_b")
-          .filter(sizeRatioOk(col("sz_a"), col("sz_b")))
-          .withColumn("inter",
-            call_function("sorted_inter_count", col("hl_a"), col("hl_b")))
-          .withColumn("jacc_x1000",
-            expr("inter * 1000 DIV (sz_a + sz_b - inter)"))
-          .filter(col("jacc_x1000") >= JaccThreshold)
-          .select(col("doc_a"), col("doc_b"), col("jacc_x1000"))
-          .orderBy(col("doc_a"), col("doc_b"))
+        hotCapPairs(sig, HotBucketCap).orderBy(col("doc_a"), col("doc_b"))
       },
       Some {
-        import graft.functions.DedupConfig.HotBucketCap
-        import graft.functions.MinhashPipeline.capBandsCte
         s"""WITH cp AS (
-           |  SELECT doc_id, text FROM documents
-           |  UNION ALL
-           |  SELECT doc_id + 100000, text FROM documents WHERE doc_id % 7 = 0),
+           |  ${copyCorpusSql("text")}),
            |${minhashWordCtes("c", "cp")},
-           |${capBandsCte("c", HotBucketCap)},
-           |cand AS (
-           |  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-           |  FROM ccap a JOIN ccap b
-           |    ON a.bkey = b.bkey AND a.grp = b.grp AND a.doc_id < b.doc_id)
-           |SELECT doc_a, doc_b, jacc_x1000 FROM (
-           |  SELECT c.doc_a, c.doc_b,
-           |    CAST(len(list_intersect(x.hl, y.hl)) AS BIGINT) * 1000
-           |      // (x.sz + y.sz - CAST(len(list_intersect(x.hl, y.hl)) AS BIGINT))
-           |      AS jacc_x1000
-           |  FROM cand c
-           |  JOIN cdocs x ON x.doc_id = c.doc_a
-           |  JOIN cdocs y ON y.doc_id = c.doc_b
-           |  WHERE least(x.sz, y.sz) * 10 >= greatest(x.sz, y.sz) * 7)
-           |WHERE jacc_x1000 >= $JaccThreshold
+           |${hotCapPairsCtes("c", HotBucketCap)}
+           |SELECT doc_a, doc_b, jacc_x1000 FROM cpairs
            |ORDER BY doc_a, doc_b""".stripMargin
       }),
 
@@ -4269,7 +3814,6 @@ object QueriesLlm {
     // never the corpus).
     Q("q131_semantic_hotcell_cap",
       (spark, dir) => {
-        import graft.functions.DedupConfig.HotBucketCap
         val base = embeddings(spark, dir)
         val anchor = base.orderBy(col("vec_id")).limit(1).select(col("v").as("av"))
         val corpus = base
@@ -4285,7 +3829,6 @@ object QueriesLlm {
           .orderBy(col("vec_a"), col("vec_b"))
       },
       Some {
-        import graft.functions.DedupConfig.HotBucketCap
         s"""WITH corp AS (
            |  SELECT vec_id, embedding FROM embeddings
            |  UNION ALL
@@ -4652,7 +4195,6 @@ object QueriesLlm {
       val Ladder = Seq(16, 32, 64); val FloorPct = 50L; val MonsterN = 48
       Q("q135_hotcap_operating_point",
         (spark, dir) => {
-          import graft.functions.MinhashPipeline
           val d = table(spark, dir, "documents").select("doc_id", "text")
           // the planted flood: MonsterN exact copies of the lowest-id
           // doc. Offset 9e8 is BY CONSTRUCTION clear of both the source
@@ -4662,31 +4204,18 @@ object QueriesLlm {
           val monster = d.orderBy(col("doc_id")).limit(1).select(col("text"))
             .crossJoin(spark.range(MonsterN.toLong).toDF("i"))
             .select((col("i") + 900000000L).as("doc_id"), col("text"))
-          val corpus = d
-            .unionByName(d.filter(col("doc_id") % 7 === 0)
-              .withColumn("doc_id", col("doc_id") + 100000L))
-            .unionByName(monster)
           // one signature pass feeds every rung's banding + the verify
           // sides + the fingerprint ground truth
-          val sig = signedDocsWord(corpus).localCheckpoint(true)
-          val fps = sig.select(col("doc_id"),
-              aggregate(col("hl"), lit(0L), (a, x) => (a * 31 + x) % P).as("fp"))
+          val sig = signedDocsWord(copyCorpus(d).unionByName(monster))
+            .localCheckpoint(true)
+          val fps = sig.select(col("doc_id"), contentFp(col("hl")).as("fp"))
             .localCheckpoint(true) // ground truth + 3 rungs' TP tagging
           val totalTrue = fps.groupBy(col("fp")).agg(count(lit(1)).as("m"))
             .filter(col("m") >= 2)
             .agg(coalesce(sum(expr("m * (m - 1) DIV 2")), lit(0L))
               .as("total_true")) // 1 row -> broadcast
-          val rungs = Ladder.map { cap =>
-            val capped = MinhashPipeline.capBands(sig, cap)
-              .localCheckpoint(true) // both sides of the self-join
-            cap -> capped.as("a").join(capped.as("b"),
-                col("a.bkey") === col("b.bkey") &&
-                  col("a.grp") === col("b.grp") &&
-                  col("a.doc_id") < col("b.doc_id"))
-              .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-              .distinct()
-              .localCheckpoint(true) // TP/price row + the serving verify
-          }
+          val rungs = Ladder.map(cap => cap -> cappedCandidates(sig, cap)
+            .localCheckpoint(true)) // TP/price row + the serving verify
           val ladder = rungs.map { case (cap, cand) =>
             cand
               .join(fps.select(col("doc_id").as("doc_a"), col("fp").as("fp_a")),
@@ -4703,17 +4232,7 @@ object QueriesLlm {
           val chosen = OperatingPoint.choose(ladder, "cap",
             col("tp") * 100 >= col("total_true") * FloorPct, Ladder.max)
           val pairs = rungs.map { case (cap, cand) =>
-            cand
-              .join(sig.select(col("doc_id").as("doc_a"), col("hl").as("hl_a"),
-                col("sz").as("sz_a")), "doc_a")
-              .join(sig.select(col("doc_id").as("doc_b"), col("hl").as("hl_b"),
-                col("sz").as("sz_b")), "doc_b")
-              .filter(sizeRatioOk(col("sz_a"), col("sz_b")))
-              .withColumn("inter",
-                call_function("sorted_inter_count", col("hl_a"), col("hl_b")))
-              .withColumn("jacc_x1000",
-                expr("inter * 1000 DIV (sz_a + sz_b - inter)"))
-              .filter(col("jacc_x1000") >= JaccThreshold)
+            verifyPairs(cand, "doc_a", "doc_b", sig, sig)
               .select(lit(cap.toLong).as("cap"), col("doc_a"), col("doc_b"),
                 col("jacc_x1000"))
           }.reduce(_ unionByName _)
@@ -4730,48 +4249,29 @@ object QueriesLlm {
             .orderBy(col("sect"), col("id"), col("n1"))
         },
         Some {
-          import graft.functions.MinhashPipeline.capBandsCte
-          // list_sort: minhashWordCtes' hl is distinct-but-unsorted while
-          // the engine's signedDocsWord hl is sorted by construction
-          val fold = s"""list_reduce(list_prepend(CAST(0 AS BIGINT), list_sort(hl)),
-             |      (a, x) -> (a * 31 + x) % ${TF.HashMod})""".stripMargin
+          // each rung shares the one band derivation (`out` naming)
           val caps = Ladder.map(cap =>
-            s"""${capBandsCte("c", cap, out = s"k$cap")},
-               |cand$cap AS (
-               |  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-               |  FROM k${cap}cap a JOIN k${cap}cap b
-               |    ON a.bkey = b.bkey AND a.grp = b.grp AND a.doc_id < b.doc_id),
+            s"""${hotCapPairsCtes("c", cap, out = s"k$cap")},
                |row$cap AS (
                |  SELECT CAST($cap AS BIGINT) AS cap,
                |    CAST(coalesce(sum(CASE WHEN x.fp = y.fp THEN 1 ELSE 0 END), 0)
                |      AS BIGINT) AS tp,
                |    count(*) AS n_cand
-               |  FROM cand$cap c
+               |  FROM k${cap}cand c
                |  JOIN fps x ON x.doc_id = c.doc_a
                |  JOIN fps y ON y.doc_id = c.doc_b),
                |pr$cap AS (
                |  SELECT CAST($cap AS BIGINT) AS cap, doc_a, doc_b, jacc_x1000
-               |  FROM (
-               |    SELECT c.doc_a, c.doc_b,
-               |      CAST(len(list_intersect(x.hl, y.hl)) AS BIGINT) * 1000
-               |        // (x.sz + y.sz - CAST(len(list_intersect(x.hl, y.hl)) AS BIGINT))
-               |        AS jacc_x1000
-               |    FROM cand$cap c
-               |    JOIN cdocs x ON x.doc_id = c.doc_a
-               |    JOIN cdocs y ON y.doc_id = c.doc_b
-               |    WHERE least(x.sz, y.sz) * 10 >= greatest(x.sz, y.sz) * 7)
-               |  WHERE jacc_x1000 >= $JaccThreshold)""".stripMargin)
+               |  FROM k${cap}pairs)""".stripMargin)
             .mkString(",\n")
           s"""WITH m0 AS (SELECT text FROM documents ORDER BY doc_id LIMIT 1),
              |cp AS (
-             |  SELECT doc_id, text FROM documents
-             |  UNION ALL
-             |  SELECT doc_id + 100000, text FROM documents WHERE doc_id % 7 = 0
+             |  ${copyCorpusSql("text")}
              |  UNION ALL
              |  SELECT 900000000 + g.i AS doc_id, m0.text
              |  FROM m0, generate_series(0, ${MonsterN - 1}) AS g(i)),
              |${minhashWordCtes("c", "cp")},
-             |fps AS (SELECT doc_id, $fold AS fp FROM cdocs),
+             |fps AS (SELECT doc_id, ${contentFpSql("list_sort(hl)")} AS fp FROM cdocs),
              |tt AS (
              |  SELECT CAST(coalesce(sum(m * (m - 1) // 2), 0) AS BIGINT)
              |    AS total_true
@@ -5144,7 +4644,6 @@ object QueriesLlm {
     // (IndexAcceptCapSpec gates the plan + benign-corpus equivalence).
     Q("q138_index_accept_hotcap",
       (spark, dir) => {
-        import graft.functions.DedupConfig.HotBucketCap
         import graft.functions.MinhashPipeline.{contentFp, acceptAgainstIndexCapped}
         val idx = MinhashIndex.store(spark, s"${Fixtures.scratchRoot}/idxacccap",
           "graft_q138")
@@ -5188,7 +4687,6 @@ object QueriesLlm {
           .orderBy(col("lang"))
       },
       Some {
-        import graft.functions.DedupConfig.HotBucketCap
         import graft.functions.MinhashPipeline.verifiedDupCappedCte
         s"""WITH $dedupCorpusCte,
            |fl AS (SELECT lang, text FROM corpus WHERE len(text) >= 50

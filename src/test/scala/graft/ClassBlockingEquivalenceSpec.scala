@@ -6,10 +6,10 @@ import org.apache.spark.sql.functions._
 import graft.functions.{TextFunctions => TF}
 import graft.functions.DedupConfig.{K, Bands, Rpb, JaccThreshold, sizeRatioOk}
 
-/** r16 optimization round: the quadratic dedup baselines
-  * (q41/q43/q52/q92/q108) were class-blocked on the ENGINE side
-  * (QueriesLlm.textClasses / expandClassPairs — the r15 oracle
-  * rewrites' collapse, mirrored). The oracles pin equivalence on the
+/** The quadratic dedup baselines (q41/q43/q52/q92/q108) are
+  * class-blocked on the ENGINE side (SetSimJoin.textClasses /
+  * expandClassPairs — the oracles' class collapse, mirrored). The
+  * oracles pin equivalence on the
   * driver corpora; this spec pins it against the RETAINED doc-level
   * forms (reproduced verbatim below) on two corpora: the sf0.001
   * driver corpus, and an edge corpus exercising exactly the cases the

@@ -15,8 +15,9 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
   *
   * Determinism contract (the whole point of the fold): the result is
   * the IEEE-754 sequential left fold `((0.0 + a0*b0) + a1*b1) + …` —
-  * bit-identical to DuckDB's `list_reduce(list_prepend(0.0, […]),
-  * (x,y) -> x+y)`, so `floor(sim*1e6)` quantizations stay hash-stable.
+  * bit-identical to DuckDB's unrolled `a[1]*b[1] + a[2]*b[2] + …`
+  * (`VectorFunctions.dotSql`; the two differ only in the sign of a zero
+  * total), so `floor(sim*1e6)` quantizations stay hash-stable.
   * The loop below performs exactly that operation sequence (no FMA, no
   * reassociation).
   *

@@ -8,8 +8,9 @@ import org.apache.spark.sql.functions._
   *
   * Determinism contract: every reduction is a sequential left fold
   * (`aggregate` over the array in element order), so a DuckDB oracle
-  * computing the same fold (`list_reduce` after `list_prepend(0.0)`)
-  * produces bit-identical IEEE-754 doubles — which makes integer
+  * computing the same fold (`list_reduce` after `list_prepend(0.0)`, or
+  * the dot's unrolled sum, [[dotSql]]) produces bit-identical IEEE-754
+  * doubles — which makes integer
   * quantizations like `floor(sim * 1e6)` hash-stable across engines.
   *
   * Scale notes (100 TB): these are codegen'd expressions, so a
@@ -117,11 +118,16 @@ object VectorFunctions {
   // ---- DuckDB twins: each emits the SQL of the expression above it
   // in the same fold order, so the oracle computes identical doubles.
 
-  /** Twin of [[dot]] for `$a[i]`/`$b[i]`-style list refs of length
-    * `dim`. */
+  /** Twin of [[dot]] for list refs of length `dim`, unrolled to
+    * `a[1]*b[1] + … + a[dim]*b[dim]`: the same left-to-right sum as a
+    * fold from 0.0 (`0.0 + x == x`; only a `-0.0` total can differ in
+    * sign, which `floor(…)` and every comparison read as 0). DuckDB
+    * runs it faster per pair than a list comprehension + reduce (0.31 vs
+    * 0.44 s over sf0.01's 250k embedding pairs), but the expression is
+    * `dim` terms long: a CTE that DuckDB inlines at many references
+    * re-plans it at each (see `SemanticIndex.acceptWaveCtes`). */
   def dotSql(a: String, b: String, dim: Int): String =
-    s"""list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-       |  [$a[i] * $b[i] FOR i IN generate_series(1, $dim)]), (x, y) -> x + y)""".stripMargin
+    (1 to dim).map(i => s"$a[$i] * $b[$i]").mkString(" + ")
 
   /** Twin of [[normSq]]. */
   def normSqSql(a: String): String =

@@ -191,19 +191,26 @@ object IvfKmeans {
     * the candidate join shuffles by cell only, spill bounds index
     * inflation at exactly 2×. [[spillPairsCtes]] is the oracle
     * mirror. */
-  def spillPairs(e: DataFrame, cents: DataFrame, threshX1e6: Long): DataFrame = {
+  def spillPairs(e: DataFrame, cents: DataFrame, threshX1e6: Long): DataFrame =
     // materialized once: the spill assignment feeds both sides of the
     // candidate self-join, which would otherwise replay the centroid
     // ranking twice (at scale this frame IS the index — a bucketed
     // table, cf. q120)
-    val spilled = rankCells(e, "qv", cents, 2)
+    cellPairs(rankCells(e, "qv", cents, 2)
       .select(col("vec_id"), col("v"), col("nrm"), col("cell"))
-      .localCheckpoint(true)
-    val a = spilled.select(col("cell"), col("vec_id").as("vec_a"),
-      col("v").as("va"), col("nrm").as("na"))
-    val b = spilled.select(col("cell"), col("vec_id").as("vec_b"),
-      col("v").as("vb"), col("nrm").as("nb"))
-    a.join(b, Seq("cell")).filter(col("vec_a") < col("vec_b"))
+      .localCheckpoint(true), Seq("cell"), threshX1e6)
+
+  /** The same-cell verify both spill forms share: the self-join of a
+    * materialized `(vec_id, v, nrm, keys…)` index frame on `keys`,
+    * exact cosine for each candidate, pairs at >= `threshX1e6` as
+    * (vec_a, vec_b, sim_x1e6), vec_a < vec_b, DISTINCT.
+    * [[cellPairsCtes]] is its twin. */
+  private def cellPairs(idx: DataFrame, keys: Seq[String],
+                        threshX1e6: Long): DataFrame = {
+    def side(id: String, v: String, n: String) = idx.select(keys.map(col) ++
+      Seq(col("vec_id").as(id), col("v").as(v), col("nrm").as(n)): _*)
+    side("vec_a", "va", "na").join(side("vec_b", "vb", "nb"), keys)
+      .filter(col("vec_a") < col("vec_b"))
       .withColumn("sim_x1e6",
         VF.quantize1e6(VF.dot(col("va"), col("vb")) / (col("na") * col("nb"))))
       .filter(col("sim_x1e6") >= threshX1e6)
@@ -265,26 +272,15 @@ object IvfKmeans {
     * semantic family). Same contract: (vec_a, vec_b, sim_x1e6),
     * vec_a < vec_b, DISTINCT. */
   def cappedSpillPairs(e: DataFrame, cents: DataFrame, threshX1e6: Long,
-                       k: Int, cap: Int): DataFrame = {
+                       k: Int, cap: Int): DataFrame =
     // materialized once: the capped frame feeds both sides of the
     // candidate self-join (the cap windows would otherwise run twice)
-    val capped = capCells(
+    cellPairs(capCells(
         rankCells(e, "qv", cents, 2)
           .select(col("vec_id"), col("v"), col("nrm"), col("qv"), col("cell")),
         k, cap)
       .select(col("vec_id"), col("v"), col("nrm"), col("cell"), col("grp"))
-      .localCheckpoint(true)
-    val a = capped.select(col("cell"), col("grp"), col("vec_id").as("vec_a"),
-      col("v").as("va"), col("nrm").as("na"))
-    val b = capped.select(col("cell"), col("grp"), col("vec_id").as("vec_b"),
-      col("v").as("vb"), col("nrm").as("nb"))
-    a.join(b, Seq("cell", "grp")).filter(col("vec_a") < col("vec_b"))
-      .withColumn("sim_x1e6",
-        VF.quantize1e6(VF.dot(col("va"), col("vb")) / (col("na") * col("nb"))))
-      .filter(col("sim_x1e6") >= threshX1e6)
-      .select(col("vec_a"), col("vec_b"), col("sim_x1e6"))
-      .distinct()
-  }
+      .localCheckpoint(true), Seq("cell", "grp"), threshX1e6)
 
   /** `iters` Lloyd iterations from the id-seeded centroids. Each
     * iteration's K-row centroid frame is materialized
@@ -369,25 +365,34 @@ object IvfKmeans {
   }
 
   /** Oracle mirror of [[spillPairs]]: spill assignment (`sp`, from the
-    * [[lloydCtes]] `q` frame against `$cents`), vector fetch (`ev`, joining a CTE `e`
-    * of (vec_id, v) double lists), and the verified-pair set `spairs`
-    * (vec_a, vec_b, sim_x1e6). Norms are hoisted into the
-    * MATERIALIZED `ev` (one sqrt-of-fold per VECTOR, the engine's own
+    * [[lloydCtes]] `q` frame against `$cents`) and the verified-pair
+    * set `spairs` (vec_a, vec_b, sim_x1e6) over a CTE `e` of (vec_id, v)
+    * double lists. */
+  def spillPairsCtes(dim: Int, threshX1e6: Long, cents: String): String =
+    s"""${spillAssignCte("sp", "q", dim, cents = cents)},
+       |${cellPairsCtes("spairs", "sp", "e", Seq("cell"), dim, threshX1e6)}""".stripMargin
+
+  /** Twin of [[cellPairs]]: `${out}v`, the `$idx` rows (vec_id, keys…)
+    * joined to their (vec_id, v) vectors in `$vecs`, and `$out`
+    * (vec_a, vec_b, sim_x1e6). Norms are hoisted into the MATERIALIZED
+    * `${out}v` (one sqrt-of-fold per VECTOR, the engine's own
     * precomputed-`nrm` shape) and the cosine is computed once per pair
     * then filtered by alias — algebraically identical doubles to the
     * inline form, ~6x less per-pair work in DuckDB, which is what
     * makes the same-cell pair oracles feasible at sf1. */
-  def spillPairsCtes(dim: Int, threshX1e6: Long, cents: String): String =
-    s"""${spillAssignCte("sp", "q", dim, cents = cents)},
-       |ev AS MATERIALIZED (
-       |  SELECT sp.vec_id, sp.cell, e.v, ${VF.normSql("e.v")} AS nrm
-       |  FROM sp JOIN e USING (vec_id)),
-       |spairs AS (
+  def cellPairsCtes(out: String, idx: String, vecs: String, keys: Seq[String],
+                    dim: Int, threshX1e6: Long): String =
+    s"""${out}v AS MATERIALIZED (
+       |  SELECT ${("vec_id" +: keys).map(k => s"s.$k").mkString(", ")}, c.v,
+       |    ${VF.normSql("c.v")} AS nrm
+       |  FROM $idx s JOIN $vecs c USING (vec_id)),
+       |$out AS (
        |  SELECT DISTINCT vec_a, vec_b, sim_x1e6 FROM (
        |    SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
        |      CAST(floor(((${VF.dotSql("a.v", "b.v", dim)}) / (a.nrm * b.nrm)) * 1e6)
        |        AS BIGINT) AS sim_x1e6
-       |    FROM ev a JOIN ev b ON a.cell = b.cell AND a.vec_id < b.vec_id)
+       |    FROM ${out}v a JOIN ${out}v b
+       |      ON ${keys.map(k => s"a.$k = b.$k AND ").mkString}a.vec_id < b.vec_id)
        |  WHERE sim_x1e6 >= $threshX1e6)""".stripMargin
 
   /** Oracle mirror of [[capCells]] over a spill CTE `$sp` carrying

@@ -44,8 +44,7 @@ object SemanticIndex {
     * centroid frame its waves probe against. `threshX1e6` is the
     * cosine near-dup threshold (floor(cos*1e6)). [[build]] makes a new
     * index; construct a Handle directly only to attach to a store
-    * another job built, or to seed a store whose rows carry extra
-    * columns (q137's fingerprint). */
+    * another job built. */
   final case class Handle(store: EpochStore, cents: DataFrame, threshX1e6: Long)
 
   /** The one-table store `root/table`, bucketed on `cell`. Touches
@@ -72,25 +71,27 @@ object SemanticIndex {
       .localCheckpoint(true)
 
   /** A new index over `store`: trains the cells on `seed`
-    * `(vec_id, v, nrm, qv)`, then writes `seed` as epoch 0 at
-    * `buckets` (one bucketed shuffle, paid once — every later wave
-    * joins it exchange-free). */
+    * `(vec_id, v, nrm, qv [, extra...])`, then writes `seed` as epoch 0
+    * at `buckets` (one bucketed shuffle, paid once — every later wave
+    * joins it exchange-free). `extra` columns are stored as metadata
+    * on both spill rows (q137's entity fingerprint `fp`, which
+    * [[selfCoveredOnly]] reads); every later [[commit]] must carry
+    * them too. */
   def build(store: EpochStore, seed: DataFrame, k: Int, iters: Int,
-            threshX1e6: Long, buckets: Int): Handle = {
+            threshX1e6: Long, buckets: Int, extra: Seq[String] = Nil): Handle = {
     val h = Handle(store, trainCells(seed, k, iters), threshX1e6)
-    store.seed(buckets, spilled(h, seed).withColumn("epoch", lit(0)))
+    store.seed(buckets, spilled(h, seed, extra).withColumn("epoch", lit(0)))
     h
   }
 
   /** The ACCEPT side of the verify-before-insert contract: wave rows
     * with NO stored neighbor at >= threshX1e6 cosine in their crank-1
-    * probe cell. Wave needs (vec_id, v, nrm, qv). Materialized — the
-    * result feeds the spill-commit AND whatever count/replay the
-    * caller does — EXCEPT under `graft.planOnly`, a test-only escape
-    * hatch (SemanticIndexPlanSpec, always unset in a finally block)
-    * that returns the un-checkpointed declarative plan so the
-    * anti-join shape is assertable; a post-commit replay under that
-    * conf would re-evaluate against the already-committed store.
+    * probe cell. Wave needs (vec_id, v, nrm, qv). Materialized by
+    * [[materialize]] — the result feeds the spill-commit AND whatever
+    * count/replay the caller does; under its plan-inspection hatch
+    * (SemanticIndexPlanSpec) the anti-join shape stays assertable, and
+    * a post-commit replay there would re-evaluate against the
+    * already-committed store. [[acceptWaveCtes]] is its twin.
     *
     * Precondition: wave vec_ids must be unique (or duplicate vec_id
     * rows must carry identical vectors). The anti join keeps or drops
@@ -121,13 +122,49 @@ object SemanticIndex {
             (col("nrm") * col("inrm"))) >= h.threshX1e6,
         "left_anti")
       .select(col("vec_id"), col("v"), col("nrm"), col("qv"))
-    // graft.planOnly (SemanticIndexPlanSpec): return the declarative
-    // plan un-checkpointed so the anti-join shape is assertable;
-    // normal runs materialize — the result feeds the spill-commit AND
-    // whatever count/replay the caller does
-    if (h.store.spark.conf.getOption("graft.planOnly").contains("true")) acc
-    else acc.localCheckpoint(true)
+    materialize(acc)
   }
+
+  /** `df.localCheckpoint(true)`, except under `graft.planOnly=true` —
+    * a test-only plan-inspection hatch (SemanticIndexPlanSpec, the
+    * q130 case of PlanAssertionsSpec; always reset in a finally block)
+    * that returns the un-checkpointed declarative plan so a gate's
+    * join shapes stay assertable end to end. */
+  def materialize(df: DataFrame): DataFrame =
+    if (df.sparkSession.conf.getOption("graft.planOnly").contains("true")) df
+    else df.localCheckpoint(true)
+
+  /** Twin of [[acceptWave]]: `$a`(vec_id, v, qv, nrm), the rows of the
+    * wave relation `$wave`(vec_id, v, qv, …) with no row of the store
+    * relation `$idx`(cell, v, …) at >= `threshX1e6` cosine in their
+    * crank-1 `$cents` cell. Norms are hoisted into per-vector
+    * MATERIALIZED CTEs (`${a}p`/`${a}i`) so the probe x index join
+    * evaluates ONE fold per pair (the dot) instead of three (dot + both
+    * norms) — algebraically identical doubles (sqrt of the same fold,
+    * same multiply order), ~3x cheaper, the engine's precomputed-`nrm`
+    * shape. Per-pair norm recomputation was the dominant term of
+    * q128's sf1 oracle (>900 s). `qv` rides INTO the materialized
+    * `${a}p`, so the probe assignment is evaluated exactly once per
+    * wave (re-reading it from `$a` lets DuckDB evaluate it twice).
+    * `$a` is MATERIALIZED too: the later waves, spills and rollups all
+    * read it, and each inlined reference re-plans the whole chain above
+    * it, unrolled dots included (inlined, q128's sf0.01 oracle took
+    * 17 s, nearly all of it in DuckDB's planner; materialized, 7 s). */
+  def acceptWaveCtes(a: String, wave: String, idx: String, cents: String,
+                     dim: Int, threshX1e6: Long): String =
+    s"""${IvfKmeans.spillAssignCte(s"${a}c", wave, dim, Seq("v", "qv"), cents,
+         maxProbe = 1)},
+       |${a}p AS MATERIALIZED (
+       |  SELECT vec_id, v, qv, cell, ${VF.normSql("v")} AS nrm FROM ${a}c),
+       |${a}i AS MATERIALIZED (
+       |  SELECT cell, v, ${VF.normSql("v")} AS nrm FROM $idx),
+       |${a}d AS (
+       |  SELECT DISTINCT p.vec_id FROM ${a}p p JOIN ${a}i i ON i.cell = p.cell
+       |  WHERE CAST(floor(((${VF.dotSql("p.v", "i.v", dim)}) / (p.nrm * i.nrm)) * 1e6)
+       |    AS BIGINT) >= $threshX1e6),
+       |$a AS MATERIALIZED (
+       |  SELECT p.vec_id, p.v, p.qv, p.nrm FROM ${a}p p
+       |  LEFT JOIN ${a}d d ON d.vec_id = p.vec_id WHERE d.vec_id IS NULL)""".stripMargin
 
   /** SELF-COVERED-ONLY probes for a per-entity retraction selection
     * (q137): each probe row (vec_id, fp, v, nrm, qv) re-probes its
@@ -181,17 +218,48 @@ object SemanticIndex {
   }
 
   /** Commit an accepted frame as `epoch`: spill-assign and append at
-    * the store's current bucket count. */
-  def commit(h: Handle, acc: DataFrame, epoch: Int): Unit =
-    h.store.commit(spilled(h, acc).withColumn("epoch", lit(epoch)))
+    * the store's current bucket count. `extra` are the metadata
+    * columns the index was [[build]] with. */
+  def commit(h: Handle, acc: DataFrame, epoch: Int, extra: Seq[String] = Nil): Unit =
+    h.store.commit(spilled(h, acc, extra).withColumn("epoch", lit(epoch)))
 
   /** The gate rollup: per-epoch distinct-vector count + id sum (each
-    * vector has 2 spill rows; distinct collapses them). */
+    * vector has 2 spill rows; distinct collapses them). [[rollupSql]]
+    * is its twin. */
   def rollup(h: Handle): DataFrame =
     vecs(h).select(col("epoch"), col("vec_id")).distinct()
       .groupBy(col("epoch"))
       .agg(count(lit(1)).as("n_vecs"), sum(col("vec_id")).as("sum_id"))
       .orderBy(col("epoch"))
+
+  /** Twin of [[rollup]] over the committed vectors of each epoch: one
+    * `(epoch, relation)` pair per epoch, each relation carrying
+    * `vec_id` once per vector. */
+  def rollupSql(epochs: (Int, String)*): String = {
+    val committed = epochs.map { case (e, rel) => s"SELECT $e AS epoch, vec_id FROM $rel" }
+    s"""committed AS (
+       |  ${committed.mkString("\n  UNION ALL ")})
+       |SELECT epoch, count(*) AS n_vecs, CAST(sum(vec_id) AS BIGINT) AS sum_id
+       |FROM committed GROUP BY epoch ORDER BY epoch""".stripMargin
+  }
+
+  /** The geometry rollup of the retrain gates (q124/q128): per epoch,
+    * the distinct vectors, their id sum and the distinct cells their
+    * spill rows occupy — so the cell assignment itself is hashed, not
+    * just membership. Unordered. [[geometryRollupSql]] is its twin. */
+  def geometryRollup(h: Handle): DataFrame =
+    vecs(h).groupBy(col("epoch"))
+      .agg(count_distinct(col("vec_id")).as("n_vecs"),
+        sum_distinct(col("vec_id")).as("sum_id"),
+        count_distinct(col("cell")).as("n_cells"))
+
+  /** Twin of [[geometryRollup]] over a relation of (epoch, vec_id,
+    * cell) store rows. */
+  def geometryRollupSql(rows: String): String =
+    s"""SELECT epoch, count(DISTINCT vec_id) AS n_vecs,
+       |  CAST(sum(DISTINCT vec_id) AS BIGINT) AS sum_id,
+       |  count(DISTINCT cell) AS n_cells
+       |FROM $rows GROUP BY epoch""".stripMargin
 
   /** RETRACT a tombstone set (takedown / retention): filtered rewrite
     * of the store through the crash-safe staged swap — both spill

@@ -241,7 +241,9 @@ object StrainLoader {
       else {
         val store = spark.table(StoreTable)
         val incoming = agg.localCheckpoint(true)
-        maxSeedId = store.agg(max(col("rgd_id"))).head().getLong(0)
+        // an empty store has no max: its new keys number from 1, as on
+        // a fresh wave
+        maxSeedId = store.agg(coalesce(max(col("rgd_id")), lit(0L))).head().getLong(0)
         val fresh = IdAssign.assignDense(
           StreamingOps.upsertBatch(incoming, store, Keys), Keys, "rgd_id", maxSeedId)
         incoming.join(store.select((Keys :+ "rgd_id").map(col): _*), Keys)

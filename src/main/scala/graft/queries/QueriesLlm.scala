@@ -250,29 +250,11 @@ object QueriesLlm {
   private def semProbeCte(name: String, src: String, cents: String = semCents) =
     IvfKmeans.spillAssignCte(name, src, Dim, Seq("v", "qv"),
       cents, maxProbe = 1)
-  // Norms are hoisted into per-vector MATERIALIZED CTEs (${d}p/${d}i)
-  // so the probe x index join evaluates ONE 64-dim fold per pair (the
-  // dot) instead of three (dot + both norms) — algebraically identical
-  // doubles (sqrt of the same fold, same multiply order), ~3x cheaper.
-  // This mirrors the engine, which precomputes `nrm` per vector
-  // (SemanticIndex.acceptWave). Per-pair norm recomputation was the
-  // dominant term of q128's sf1 oracle (>900 s).
-  // `qv` rides INTO the materialized ${d}p so the accept CTE $a reads
-  // it back from there — the probe spill-assignment $p is scanned
-  // exactly once per wave ($a re-reading $p directly lets DuckDB
-  // evaluate the assignment twice)
-  private def semWaveCte(p: String, idx: String, d: String, a: String) =
-    s"""${d}p AS MATERIALIZED (
-       |  SELECT vec_id, v, qv, cell, ${normSql("v")} AS nrm FROM $p),
-       |${d}i AS MATERIALIZED (
-       |  SELECT cell, v, ${normSql("v")} AS nrm FROM $idx),
-       |$d AS (
-       |  SELECT DISTINCT p.vec_id FROM ${d}p p JOIN ${d}i i ON i.cell = p.cell
-       |  WHERE CAST(floor(((${dotSql("p.v", "i.v", Dim)}) / (p.nrm * i.nrm)) * 1e6)
-       |    AS BIGINT) >= $SemThreshX1e6),
-       |$a AS (
-       |  SELECT p.vec_id, p.v, p.qv FROM ${d}p p
-       |  LEFT JOIN $d d ON d.vec_id = p.vec_id WHERE d.vec_id IS NULL)""".stripMargin
+  /** `SemanticIndex.acceptWave`'s twin at the semantic family's
+    * dimension and threshold: `$a` accepts `wave` against `idx`. */
+  private def semAcceptCtes(a: String, wave: String, idx: String,
+                            cents: String = semCents) =
+    SemanticIndex.acceptWaveCtes(a, wave, idx, cents, Dim, SemThreshX1e6)
   /** The semantic family's Lloyd chain (`q`, `c0`..`c3`) over the whole
     * corpus. */
   private val semLloydCtes = IvfKmeans.lloydCtes(SemK, SemIters, Dim, VecOffset)
@@ -340,8 +322,7 @@ object QueriesLlm {
        |  SELECT vec_id + 300000 AS vec_id, v, qv FROM eall WHERE vec_id % 20 = 11
        |  UNION ALL
        |  SELECT vec_id + 400000, v, qv FROM eall WHERE vec_id % 20 = 1),
-       |${semProbeCte("p1", "w1")},
-       |${semWaveCte("p1", "i0", "dd1", "ac1")}""".stripMargin
+       |${semAcceptCtes("ac1", "w1", "i0")}""".stripMargin
 
   /** The two-sequential-waves SEMANTIC epoch-dedup oracle, shared
     * VERBATIM by q120 (plain batch ingest), q122 (ingest with a
@@ -356,14 +337,9 @@ object QueriesLlm {
        |${semSpillCte("sp1", "ac1")},
        |i1 AS (SELECT vec_id, v, cell FROM i0
        |       UNION ALL SELECT vec_id, v, cell FROM sp1),
-       |${semProbeCte("p2", "w2")},
-       |${semWaveCte("p2", "i1", "dd2", "ac2")},
-       |committed AS (
-       |  SELECT 0 AS epoch, vec_id FROM (SELECT DISTINCT vec_id FROM i0)
-       |  UNION ALL SELECT 1, vec_id FROM ac1
-       |  UNION ALL SELECT 2, vec_id FROM ac2)
-       |SELECT epoch, count(*) AS n_vecs, CAST(sum(vec_id) AS BIGINT) AS sum_id
-       |FROM committed GROUP BY epoch ORDER BY epoch""".stripMargin
+       |${semAcceptCtes("ac2", "w2", "i1")},
+       |${SemanticIndex.rollupSql(0 -> "(SELECT DISTINCT vec_id FROM i0)",
+          1 -> "ac1", 2 -> "ac2")}""".stripMargin
   }
 
   // ---- multimodal-index oracle building blocks (byte-histogram
@@ -418,25 +394,19 @@ object QueriesLlm {
        |${mmFeatsCte("f0", "(SELECT doc_id AS vec_id, text AS txt FROM dsrc)")},
        |${IvfKmeans.lloydCtes(MmK, MmIters, 8, 0L,
           src = "(SELECT vec_id, [x / nrm FOR x IN v] AS embedding FROM f0)")},
-       |${IvfKmeans.spillAssignCte("i0", "f0", 8, Seq("v", "nrm"), cents = mmCents)},
+       |${IvfKmeans.spillAssignCte("i0", "f0", 8, Seq("v"), cents = mmCents)},
        |${mmFeatsCte("w1f",
           """(SELECT doc_id + 100000 AS vec_id, text AS txt FROM dsrc
              |      WHERE doc_id % 5 = 0
              |      UNION ALL
              |      SELECT doc_id + 200000, upper(text) FROM dsrc
              |      WHERE doc_id % 5 = 1)""".stripMargin)},
-       |${IvfKmeans.spillAssignCte("p1", "w1f", 8, Seq("v", "nrm", "qv"),
-          cents = mmCents, maxProbe = 1)},
-       |${mmWaveCte("p1", "i0", "dd1", "ac1")}""".stripMargin
+       |${mmAcceptCtes("ac1", "w1f", "i0")}""".stripMargin
 
-  private def mmWaveCte(p: String, idx: String, d: String, a: String): String =
-    s"""$d AS (
-       |  SELECT DISTINCT p.vec_id FROM $p p JOIN $idx i ON i.cell = p.cell
-       |  WHERE CAST(floor(((${dotSql("p.v", "i.v", 8)}) / (p.nrm * i.nrm)) * 1e6)
-       |    AS BIGINT) >= $MmThreshX1e6),
-       |$a AS (
-       |  SELECT p.vec_id, p.v, p.nrm, p.qv FROM $p p
-       |  LEFT JOIN $d d ON d.vec_id = p.vec_id WHERE d.vec_id IS NULL)""".stripMargin
+  /** `SemanticIndex.acceptWave`'s twin at the multimodal family's
+    * dimension and threshold. */
+  private def mmAcceptCtes(a: String, wave: String, idx: String): String =
+    SemanticIndex.acceptWaveCtes(a, wave, idx, mmCents, 8, MmThreshX1e6)
 
   /** DuckDB LSH bucket of a DOUBLE list column `v`. */
   private def bucketSql(v: String): String =
@@ -450,34 +420,57 @@ object QueriesLlm {
 
   private val MaxProbe = 4 // q117/q125's widest nprobe level
 
-  /** q117/q125's IVF nprobe search state: K=8 cells trained by three
-    * Lloyd iterations, the probes (vec_id % 17, as `qid`/`pqv`) and ONE
-    * candidate join at the widest level `MaxProbe`, materialized.
-    * Narrower levels are `crank` filters over it; each corpus vector
-    * lives in one cell, so no dedup. Returns (probes, assigned, cand). */
-  private def ivfNprobe(spark: SparkSession, dir: String) = {
-    val q = IvfKmeans.vectors(embeddings(spark, dir), VecOffset).select("vec_id", "qv")
-    val cents = IvfKmeans.train(q, SemK, SemIters)
-    val assigned = IvfKmeans.assign(q, cents)
+  /** The semantic family's trained quantizer: the full-corpus vector
+    * row `(vec_id, v, nrm, qv)` and its SemK cells after SemIters Lloyd
+    * iterations. [[semLloydCtes]] is its twin. */
+  private def semQuantizer(spark: SparkSession, dir: String): (DataFrame, DataFrame) = {
+    val e = IvfKmeans.vectors(embeddings(spark, dir), VecOffset)
+    (e, IvfKmeans.train(e.select(col("vec_id"), col("qv")), SemK, SemIters))
+  }
+
+  /** Every vector's trained cell, `(vec_id, qv, cell)`, materialized —
+    * the index the IVF searches read on both sides. `assignCte`'s
+    * `afin` is its twin. */
+  private def semAssigned(e: DataFrame, cents: DataFrame): DataFrame =
+    IvfKmeans.assign(e.select(col("vec_id"), col("qv")), cents)
       .select(col("vec_id"), col("qv"), col("cid").as("cell"))
       .localCheckpoint(true)
+
+  /** The IVF search state of q114/q117/q125: the assigned corpus, its
+    * probes (vec_id % 17, as `qid`/`pqv`) and the trained cells.
+    * Returns (probes, assigned, cents). [[ivfNprobeCtes]] is its twin. */
+  private def ivfNprobe(spark: SparkSession, dir: String) = {
+    val (e, cents) = semQuantizer(spark, dir)
+    val assigned = semAssigned(e, cents)
     val probes = assigned.filter(col("vec_id") % 17 === 0)
       .select(col("vec_id").as("qid"), col("qv").as("pqv"))
-    // all K centroid distances ride in the 1-row broadcast; the
-    // (dist, cid) tie-break is exactly what the oracle replays
-    val ranked = IvfKmeans.rankCells(probes, "pqv", cents, MaxProbe)
-    val cand = ranked.join(assigned, Seq("cell"))
+    (probes, assigned, cents)
+  }
+
+  /** The nprobe candidate join: each probe searches its `maxProbe`
+    * nearest cells (all K centroid distances ride in the 1-row
+    * broadcast; the (dist, cid) tie-break is the oracle's), so
+    * (qid, vec_id, dist, crank). Narrower levels are `crank` filters
+    * over it; each corpus vector lives in one cell, so no dedup. */
+  private[graft] def ivfCandidates(probes: DataFrame, assigned: DataFrame,
+                                   cents: DataFrame, maxProbe: Int): DataFrame =
+    IvfKmeans.rankCells(probes, "pqv", cents, maxProbe)
+      .join(assigned, Seq("cell"))
       .filter(col("vec_id") =!= col("qid"))
       .withColumn("dist", IvfKmeans.distL2(col("pqv"), col("qv")))
       .select(col("qid"), col("vec_id"), col("dist"), col("crank"))
-      .localCheckpoint(true)
-    (probes, assigned, cand)
-  }
 
-  /** SQL twin of [[ivfNprobe]]: the Lloyd and final-assignment CTEs
-    * (`afin`), `ps` (probes), `pc` (each probe's ranked cells) and
-    * `cand`. */
-  private val ivfNprobeCtes: String = {
+  /** The exact leg the nprobe recall is measured against: every probe
+    * against the whole corpus, (qid, pqv, vec_id, qv, cell, dist).
+    * [[ivfExactSql]] is its twin. */
+  private def ivfExact(probes: DataFrame, assigned: DataFrame): DataFrame =
+    probes.join(assigned, col("vec_id") =!= col("qid"))
+      .withColumn("dist", IvfKmeans.distL2(col("pqv"), col("qv")))
+
+  /** SQL twin of [[ivfNprobe]] and [[ivfCandidates]]: the Lloyd and
+    * final-assignment CTEs (`afin`), `ps` (probes), `pc` (each probe's
+    * `maxProbe` ranked cells) and `cand`. */
+  private def ivfNprobeCtes(maxProbe: Int): String = {
     import graft.operators.IvfKmeans.{assignCte, distSql}
     s"""$semLloydCtes,
        |${assignCte(SemIters, Dim)},
@@ -488,12 +481,20 @@ object QueriesLlm {
        |      row_number() OVER (PARTITION BY p.qid
        |        ORDER BY ${distSql("p.pqv", "c.cqv", Dim)}, c.cid) AS crank
        |    FROM ps p, $semCents c)
-       |  WHERE crank <= $MaxProbe),
+       |  WHERE crank <= $maxProbe),
        |cand AS (
        |  SELECT pc.qid, a.vec_id,
        |    ${distSql("pc.pqv", "a.qv", Dim)} AS dist, pc.crank
        |  FROM pc JOIN afin a ON a.cell = pc.cell AND a.vec_id <> pc.qid)""".stripMargin
   }
+
+  /** SQL twin of [[ivfExact]] over [[ivfNprobeCtes]]: `exd`, with an
+    * optional probe filter `where`. */
+  private def ivfExactSql(where: String = ""): String =
+    s"""exd AS (
+       |  SELECT p.qid, a.vec_id,
+       |    ${IvfKmeans.distSql("p.pqv", "a.qv", Dim)} AS dist
+       |  FROM ps p JOIN afin a ON a.vec_id <> p.qid$where)""".stripMargin
 
   val all: Seq[Q] = Seq(
 
@@ -2399,52 +2400,38 @@ object QueriesLlm {
     // shuffle — the plan's only exchange is the final K-row rollup.
     // Lloyd's next iteration needs the per-dim sums, which are the
     // same one-exchange shape (posexplode + groupBy(cid, dim)).
-    Q("q113_kmeans_step",
-      (spark, dir) => {
-        val K8 = 8
-        // quantization / seeding / argmin are the shared IvfKmeans
-        // expressions (offset 0 — a single step needs no positive-sum
-        // guarantee); q114 iterates the same definitions
-        val q = spark.read.parquet(s"$dir/embeddings.parquet")
-          .select(col("vec_id"), IvfKmeans.quantize(col("embedding"), 0L).as("qv"))
-        val cents = IvfKmeans.seedCents(q, K8)
-        val best = q.crossJoin(cents) // 1-row side -> broadcast
-          .select(col("vec_id"),
-            aggregate(col("qv"), lit(0L), (a, x) => a + x).as("qsum"),
-            IvfKmeans.bestCentroid(col("qv"), col("cents")).as("best"))
-        best.groupBy(col("best.cid").as("cid"))
-          .agg(count(lit(1)).as("n_members"),
-            sum(col("vec_id")).as("sum_vid"),
-            sum(col("best.dist")).as("obj"),
-            sum(col("qsum")).as("centroid_sum"))
-          .orderBy(col("cid"))
-      },
-      Some(
-        s"""WITH q AS (
-           |  SELECT vec_id,
-           |    list_transform(embedding,
-           |      x -> CAST(floor(CAST(x AS DOUBLE) * 1000) AS BIGINT)) AS qv
-           |  FROM embeddings),
-           |c AS (SELECT vec_id AS cid, qv AS cqv FROM q WHERE vec_id < 8),
-           |d AS (
-           |  SELECT q.vec_id, c.cid,
-           |    list_reduce(list_prepend(CAST(0 AS BIGINT),
-           |      [(q.qv[i] - c.cqv[i]) * (q.qv[i] - c.cqv[i])
-           |       FOR i IN generate_series(1, ${Dim})]),
-           |      (a, x) -> a + x) AS dist,
-           |    list_reduce(list_prepend(CAST(0 AS BIGINT), q.qv),
-           |      (a, x) -> a + x) AS qsum
-           |  FROM q, c),
-           |a AS (
-           |  SELECT vec_id, cid, dist, qsum,
-           |    row_number() OVER (PARTITION BY vec_id ORDER BY dist, cid) AS rn
-           |  FROM d)
-           |SELECT cid, count(*) AS n_members,
-           |  CAST(sum(vec_id) AS BIGINT) AS sum_vid,
-           |  CAST(sum(dist) AS BIGINT) AS obj,
-           |  CAST(sum(qsum) AS BIGINT) AS centroid_sum
-           |FROM a WHERE rn = 1
-           |GROUP BY cid ORDER BY cid""".stripMargin)),
+    {
+      val K8 = 8
+      Q("q113_kmeans_step",
+        (spark, dir) => {
+          // the vector frame, seeding and argmin are the shared IvfKmeans
+          // definitions (offset 0 — a single step needs no positive-sum
+          // guarantee); q114 iterates the same definitions
+          val q = IvfKmeans.vectors(embeddings(spark, dir), 0L).select("vec_id", "qv")
+          val cents = IvfKmeans.seedCents(q, K8)
+          val best = q.crossJoin(cents) // 1-row side -> broadcast
+            .select(col("vec_id"),
+              aggregate(col("qv"), lit(0L), (a, x) => a + x).as("qsum"),
+              IvfKmeans.bestCentroid(col("qv"), col("cents")).as("best"))
+          best.groupBy(col("best.cid").as("cid"))
+            .agg(count(lit(1)).as("n_members"),
+              sum(col("vec_id")).as("sum_vid"),
+              sum(col("best.dist")).as("obj"),
+              sum(col("qsum")).as("centroid_sum"))
+            .orderBy(col("cid"))
+        },
+        // the first step of the shared Lloyd chain: `q`, the rank-seeded
+        // `c0` and the argmin `a1`
+        Some(
+          s"""WITH ${IvfKmeans.lloydCtes(K8, 1, Dim, 0L)}
+             |SELECT cid, count(*) AS n_members,
+             |  CAST(sum(vec_id) AS BIGINT) AS sum_vid,
+             |  CAST(sum(dist) AS BIGINT) AS obj,
+             |  CAST(sum(list_reduce(list_prepend(CAST(0 AS BIGINT), qv),
+             |    (a, x) -> a + x)) AS BIGINT) AS centroid_sum
+             |FROM a1 WHERE rn = 1
+             |GROUP BY cid ORDER BY cid""".stripMargin))
+    },
 
     // -- DATA MIXTURE: fill a per-language TOKEN BUDGET with a
     // deterministic, resample-stable document selection — the "data
@@ -2546,37 +2533,21 @@ object QueriesLlm {
     // keyed by anything but cell/qid.
     Q("q114_ivf_lifecycle",
       (spark, dir) => {
-        val q = IvfKmeans.vectors(embeddings(spark, dir), VecOffset).select("vec_id", "qv")
-        val cents = IvfKmeans.train(q, SemK, SemIters)
-        // one assignment pass against the trained centroids builds the
-        // index; materialized once — it feeds both sides of the search
-        val assigned = IvfKmeans.assign(q, cents)
-          .select(col("vec_id"), col("qv"), col("cid").as("cell"))
-          .localCheckpoint(true)
-        val probes = assigned.filter(col("vec_id") % 17 === 0)
-          .select(col("vec_id").as("qid"), col("qv").as("pqv"), col("cell"))
-        val w = Window.partitionBy(col("qid")).orderBy(col("dist"), col("vec_id"))
-        probes.join(assigned, Seq("cell")).filter(col("vec_id") =!= col("qid"))
-          .withColumn("dist", IvfKmeans.distL2(col("pqv"), col("qv")))
-          .withColumn("rn", row_number().over(w))
-          .filter(col("rn") <= 5)
+        // the trained, assigned index (materialized once — it feeds both
+        // sides of the search); each probe searches its own cell, the
+        // nprobe ladder's p = 1 rung (crank 1 IS the assignment cell)
+        val (probes, assigned, cents) = ivfNprobe(spark, dir)
+        OperatingPoint.topK(ivfCandidates(probes, assigned, cents, 1),
+            5, col("dist"), col("vec_id"))
           .select(col("qid"), col("rn").cast("long").as("rn"),
             col("vec_id"), col("dist"))
           .orderBy(col("qid"), col("rn"))
       },
       Some {
-        s"""WITH $semLloydCtes,
-           |${IvfKmeans.assignCte(SemIters, Dim)},
-           |cand AS (
-           |  SELECT p.vec_id AS qid, a.vec_id,
-           |    ${IvfKmeans.distSql("p.qv", "a.qv", Dim)} AS dist
-           |  FROM afin p JOIN afin a ON a.cell = p.cell AND a.vec_id <> p.vec_id
-           |  WHERE p.vec_id % 17 = 0)
+        s"""WITH ${ivfNprobeCtes(1)}
            |SELECT qid, CAST(rn AS BIGINT) AS rn, vec_id, CAST(dist AS BIGINT) AS dist
-           |FROM (SELECT qid, vec_id, dist,
-           |        row_number() OVER (PARTITION BY qid ORDER BY dist, vec_id) AS rn
-           |      FROM cand)
-           |WHERE rn <= 5 ORDER BY qid, rn""".stripMargin
+           |FROM (${OperatingPoint.topKSql("cand", 5, "dist, vec_id")})
+           |ORDER BY qid, rn""".stripMargin
       }),
 
     // -- ANN RECALL GATE: the search-quality number the approximate
@@ -2604,14 +2575,11 @@ object QueriesLlm {
     // 9x probe-side explode, never a corpus-side one.
     Q("q115_ann_recall",
       (spark, dir) => {
-        val e = IvfKmeans.vectors(embeddings(spark, dir), VecOffset)
-          .withColumn("bucket", VF.lshBucket(col("v"), Planes, Dim))
-        val cents = IvfKmeans.train(e.select(col("vec_id"), col("qv")), SemK, SemIters)
-        val cells = IvfKmeans.assign(e.select(col("vec_id"), col("qv")), cents)
-          .select(col("vec_id"), col("cid").as("cell"))
+        val (e, cents) = semQuantizer(spark, dir)
         // one row per vector with every retrieval key; materialized —
         // it feeds the probe side and all three candidate joins
-        val base = e.join(cells, "vec_id")
+        val base = e.withColumn("bucket", VF.lshBucket(col("v"), Planes, Dim))
+          .join(semAssigned(e, cents).select("vec_id", "cell"), "vec_id")
           .select("vec_id", "v", "nrm", "bucket", "cell")
           .localCheckpoint(true)
         val probes = base.filter(col("vec_id") % 50 === 0)
@@ -2769,11 +2737,13 @@ object QueriesLlm {
       val Levels = Seq(1, 2, MaxProbe)
       Q("q117_ivf_nprobe",
         (spark, dir) => {
-          val (probes, assigned, cand) = ivfNprobe(spark, dir)
+          val (probes, assigned, cents) = ivfNprobe(spark, dir)
+          // ONE candidate join at the widest level, materialized
+          val cand = ivfCandidates(probes, assigned, cents, MaxProbe)
+            .localCheckpoint(true)
           def top5(df: org.apache.spark.sql.DataFrame) =
             OperatingPoint.topK(df, 5, col("dist"), col("vec_id"))
-          val exact = top5(probes.join(assigned, col("vec_id") =!= col("qid"))
-            .withColumn("dist", IvfKmeans.distL2(col("pqv"), col("qv"))))
+          val exact = top5(ivfExact(probes, assigned))
           OperatingPoint.recall(exact,
             Levels.map(p => s"p${p}_hits" -> top5(cand.filter(col("crank") <= p))): _*)
             .orderBy(col("qid"))
@@ -2782,11 +2752,8 @@ object QueriesLlm {
           import OperatingPoint.{recallSql, topKSql}
           val tops = Levels.map(p =>
             s"t$p AS (${topKSql(s"cand WHERE crank <= $p", 5, "dist, vec_id")})")
-          s"""WITH $ivfNprobeCtes,
-             |exd AS (
-             |  SELECT p.qid, a.vec_id,
-             |    ${graft.operators.IvfKmeans.distSql("p.pqv", "a.qv", Dim)} AS dist
-             |  FROM ps p JOIN afin a ON a.vec_id <> p.qid),
+          s"""WITH ${ivfNprobeCtes(MaxProbe)},
+             |${ivfExactSql()},
              |ex AS (${topKSql("exd", 5, "dist, vec_id")}),
              |${tops.mkString(",\n")}
              |${recallSql("ex", Levels.map(p => s"p${p}_hits" -> s"t$p"): _*)}
@@ -2814,8 +2781,7 @@ object QueriesLlm {
     // sharing both cells.
     Q("q118_semantic_dedup_ivf",
       (spark, dir) => {
-        val e = IvfKmeans.vectors(embeddings(spark, dir), VecOffset)
-        val cents = IvfKmeans.train(e.select(col("vec_id"), col("qv")), SemK, SemIters)
+        val (e, cents) = semQuantizer(spark, dir)
         // spill-block + cosine-verify is the shared IvfKmeans
         // definition (one block for q118/q119, the acceptAgainstIndex
         // discipline applied to the embedding family)
@@ -2846,8 +2812,7 @@ object QueriesLlm {
     // rollup shuffles cluster-count rows only.
     Q("q119_semantic_dedup_pipeline",
       (spark, dir) => {
-        val e = IvfKmeans.vectors(embeddings(spark, dir), VecOffset)
-        val cents = IvfKmeans.train(e.select(col("vec_id"), col("qv")), SemK, SemIters)
+        val (e, cents) = semQuantizer(spark, dir)
         // same shared spill-block + verify as q118; only the pair set
         // feeds the clustering here
         val pairs = IvfKmeans.spillPairs(e, cents, SemThreshX1e6)
@@ -3075,13 +3040,9 @@ object QueriesLlm {
            |  SELECT vec_id + 600000 AS vec_id, v, qv FROM eall WHERE vec_id % 8 = 0
            |  UNION ALL
            |  SELECT vec_id + 700000, v, qv FROM eall WHERE vec_id % 8 = 4),
-           |${semProbeCte("p1", "wave")},
-           |${semWaveCte("p1", "i0", "dd1", "ac1")},
-           |committed AS (
-           |  SELECT 0 AS epoch, vec_id FROM (SELECT DISTINCT vec_id FROM i0)
-           |  UNION ALL SELECT 1, vec_id FROM ac1)
-           |SELECT epoch, count(*) AS n_vecs, CAST(sum(vec_id) AS BIGINT) AS sum_id
-           |FROM committed GROUP BY epoch ORDER BY epoch""".stripMargin
+           |${semAcceptCtes("ac1", "wave", "i0")},
+           |${SemanticIndex.rollupSql(0 -> "(SELECT DISTINCT vec_id FROM i0)",
+              1 -> "ac1")}""".stripMargin
       }),
 
     // -- CENTROID RETRAIN + REASSIGN — the maintenance half the
@@ -3108,9 +3069,8 @@ object QueriesLlm {
     // paid bucketed rewrite, amortized over every later wave.
     Q("q124_semantic_index_retrain",
       (spark, dir) => {
-        val tbl = "graft_q124_vecs"
         val e = IvfKmeans.vectors(embeddings(spark, dir), VecOffset)
-        val h = semanticIndex(spark, e, "semretrain", tbl)
+        val h = semanticIndex(spark, e, "semretrain", "graft_q124_vecs")
         val (w1, w2) = semanticWaves(e)
         SemanticIndex.commit(h, SemanticIndex.acceptWave(h, w1), 1)
         // ---- THE OPERATION UNDER TEST: retrain on the committed
@@ -3132,11 +3092,7 @@ object QueriesLlm {
         SemanticIndex.commit(h2, SemanticIndex.acceptWave(h2, w2), 2)
         // geometry-visible rollup: per-epoch distinct cells hash the
         // NEW cell assignment, not just membership
-        spark.table(tbl).groupBy(col("epoch"))
-          .agg(count_distinct(col("vec_id")).as("n_vecs"),
-            sum_distinct(col("vec_id")).as("sum_id"),
-            count_distinct(col("cell")).as("n_cells"))
-          .orderBy(col("epoch"))
+        SemanticIndex.geometryRollup(h2).orderBy(col("epoch"))
       },
       Some {
         s"""WITH $semWave1Ctes,
@@ -3144,16 +3100,11 @@ object QueriesLlm {
            |  SELECT 0 AS epoch, vec_id, v FROM (SELECT DISTINCT vec_id, v FROM i0)
            |  UNION ALL SELECT 1, vec_id, v FROM ac1),
            |$semRetrainCtes,
-           |${semProbeCte("p2", "w2", cents = retrainCents)},
-           |${semWaveCte("p2", "ri", "dd2", "ac2")},
-           |${IvfKmeans.spillAssignCte("sp2", "(SELECT vec_id, v, qv FROM ac2)",
-              Dim, Seq("v"), cents = retrainCents)},
+           |${semAcceptCtes("ac2", "w2", "ri", cents = retrainCents)},
+           |${semSpillCte("sp2", "ac2", cents = retrainCents)},
            |fin AS (SELECT epoch, vec_id, cell FROM ri
            |        UNION ALL SELECT 2, vec_id, cell FROM sp2)
-           |SELECT epoch, count(DISTINCT vec_id) AS n_vecs,
-           |  CAST(sum(DISTINCT vec_id) AS BIGINT) AS sum_id,
-           |  count(DISTINCT cell) AS n_cells
-           |FROM fin GROUP BY epoch ORDER BY epoch""".stripMargin
+           |${SemanticIndex.geometryRollupSql("fin")} ORDER BY epoch""".stripMargin
       }),
 
     // -- RECALL-TARGETED OPERATING POINT: the config-from-measurement
@@ -3178,13 +3129,15 @@ object QueriesLlm {
       val Tune = Seq(1, 2); val FloorPct = 50
       Q("q125_ivf_operating_point",
         (spark, dir) => {
-          val (probes, assigned, cand) = ivfNprobe(spark, dir)
+          val (probes, assigned, cents) = ivfNprobe(spark, dir)
+          // q117's serving shape: ONE candidate join at the widest
+          // level, materialized — the tuning views + the serving pass
+          val cand = ivfCandidates(probes, assigned, cents, MaxProbe)
+            .localCheckpoint(true)
           def top5(df: org.apache.spark.sql.DataFrame) =
             OperatingPoint.topK(df, 5, col("dist"), col("vec_id"))
           val sample = col("qid") % 34 === 0
-          val exactT = top5(broadcast(probes.filter(sample))
-            .join(assigned, col("vec_id") =!= col("qid"))
-            .withColumn("dist", IvfKmeans.distL2(col("pqv"), col("qv"))))
+          val exactT = top5(ivfExact(broadcast(probes.filter(sample)), assigned))
           val chosen = OperatingPoint.choose(
             OperatingPoint.recallLadder(exactT, "nprobe", Tune.map(p =>
               p -> top5(cand.filter(sample && col("crank") <= p))): _*),
@@ -3198,12 +3151,8 @@ object QueriesLlm {
           import OperatingPoint._
           val tune = Tune.map(p => s"t$p AS (${topKSql(
             s"cand WHERE qid % 34 = 0 AND crank <= $p", 5, "dist, vec_id")})")
-          s"""WITH $ivfNprobeCtes,
-             |exd AS (
-             |  SELECT p.qid, a.vec_id,
-             |    ${graft.operators.IvfKmeans.distSql("p.pqv", "a.qv", Dim)} AS dist
-             |  FROM ps p JOIN afin a ON a.vec_id <> p.qid
-             |  WHERE p.qid % 34 = 0),
+          s"""WITH ${ivfNprobeCtes(MaxProbe)},
+             |${ivfExactSql("\n  WHERE p.qid % 34 = 0")},
              |ex AS (${topKSql("exd", 5, "dist, vec_id")}),
              |${tune.mkString(",\n")},
              |lad AS (${recallLadderSql("ex", "nprobe", Tune.map(p => p -> s"t$p"): _*)}),
@@ -3416,15 +3365,10 @@ object QueriesLlm {
           (2L, mx2, tot2, nc2, if (fire2) 1L else 0L),
           (3L, mx3, tot3, nc3, if (fire3) 1L else 0L))
           .toDF("step", "n_max", "n_total", "n_cells", "fired")
-        val roll = spark.table(tbl)
-          .select(col("epoch"), col("vec_id"), col("cell")).distinct()
-          .groupBy(col("epoch"))
-          .agg(count_distinct(col("vec_id")).as("n_max"),
-            sum_distinct(col("vec_id")).as("n_total"),
-            count_distinct(col("cell")).as("n_cells"))
+        val roll = SemanticIndex.geometryRollup(h2)
           .select((col("epoch") + 10).cast("long").as("step"),
-            col("n_max"), col("n_total"), col("n_cells"),
-            lit(0L).as("fired"))
+            col("n_vecs").as("n_max"), col("sum_id").as("n_total"),
+            col("n_cells"), lit(0L).as("fired"))
         dec.unionByName(roll).orderBy(col("step"))
       },
       Some {
@@ -3439,8 +3383,7 @@ object QueriesLlm {
            |${semSpillCte("i0", "sd")},
            |w1 AS (SELECT vec_id + 100000 AS vec_id, v, qv FROM eall
            |       WHERE vec_id % 20 = 1),
-           |${semProbeCte("p1", "w1")},
-           |${semWaveCte("p1", "i0", "dd1", "ac1")},
+           |${semAcceptCtes("ac1", "w1", "i0")},
            |${semSpillCte("sp1", "ac1")},
            |occ1 AS (SELECT cell, count(*) AS n FROM (
            |  SELECT cell FROM i0 UNION ALL SELECT cell FROM sp1) GROUP BY cell),
@@ -3453,8 +3396,7 @@ object QueriesLlm {
            |    SELECT e.vec_id + 200000 AS vec_id,
            |      [e.v[i] + an.av[i] * 5 FOR i IN generate_series(1, $Dim)] AS v
            |    FROM eall e, an WHERE e.vec_id % 4 = 3)),
-           |${semProbeCte("p2", "w2")},
-           |${semWaveCte("p2", "i1", "dd2", "ac2")},
+           |${semAcceptCtes("ac2", "w2", "i1")},
            |${semSpillCte("sp2", "ac2")},
            |occ2 AS (SELECT cell, count(*) AS n FROM (
            |  SELECT cell FROM i0 UNION ALL SELECT cell FROM sp1
@@ -3467,18 +3409,14 @@ object QueriesLlm {
            |occ3 AS (SELECT cell, count(*) AS n FROM ri GROUP BY cell),
            |w3 AS (SELECT vec_id + 300000 AS vec_id, v, qv FROM eall
            |       WHERE vec_id % 20 = 11),
-           |${semProbeCte("p3", "w3", cents = retrainCents)},
-           |${semWaveCte("p3", "ri", "dd3", "ac3")},
-           |${IvfKmeans.spillAssignCte("sp3", "(SELECT vec_id, v, qv FROM ac3)",
-              Dim, Seq("v"), cents = retrainCents)},
+           |${semAcceptCtes("ac3", "w3", "ri", cents = retrainCents)},
+           |${semSpillCte("sp3", "ac3", cents = retrainCents)},
            |fin AS (SELECT epoch, vec_id, cell FROM ri
            |        UNION ALL SELECT 3, vec_id, cell FROM sp3),
            |roll AS (
-           |  SELECT CAST(epoch + 10 AS BIGINT) AS step,
-           |    count(DISTINCT vec_id) AS n_max,
-           |    CAST(sum(DISTINCT vec_id) AS BIGINT) AS n_total,
-           |    count(DISTINCT cell) AS n_cells, CAST(0 AS BIGINT) AS fired
-           |  FROM fin GROUP BY epoch)
+           |  SELECT CAST(epoch + 10 AS BIGINT) AS step, n_vecs AS n_max,
+           |    sum_id AS n_total, n_cells, CAST(0 AS BIGINT) AS fired
+           |  FROM (${SemanticIndex.geometryRollupSql("fin")}))
            |SELECT * FROM (
            |  ${dSql(1, "occ1")} UNION ALL ${dSql(2, "occ2")}
            |  UNION ALL ${dSql(3, "occ3")} UNION ALL SELECT * FROM roll)
@@ -3678,27 +3616,25 @@ object QueriesLlm {
     // of variant count.
     Q("q130_multimodal_ann",
       (spark, dir) => {
-        // plan-inspection mode (PlanAssertionsSpec): skip the stage
-        // materializations so the COMPLETE declarative plan — search
-        // join, exact recall leg, floor assert — is assertable end to
-        // end. Join strategies are unchanged (the spec forces the
-        // broadcast threshold off, so only the explicit hints decide);
-        // normal runs keep the checkpoints, which bound each stage to
-        // one execution.
-        val planOnly = spark.conf.getOption("graft.planOnly").contains("true")
-        def mat(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
-          if (planOnly) df else df.localCheckpoint(true)
+        // stage checkpoints go through SemanticIndex.materialize, whose
+        // plan-inspection hatch (PlanAssertionsSpec) skips them so the
+        // COMPLETE declarative plan — search join, exact recall leg,
+        // floor assert — is assertable end to end. Join strategies are
+        // unchanged (the spec forces the broadcast threshold off, so
+        // only the explicit hints decide); normal runs keep the
+        // checkpoints, which bound each stage to one execution.
+        import SemanticIndex.materialize
         // materialized once — feeds training, assignment, and the
         // exact tuning leg. The quantizer runs on the LENGTH-NORMALIZED
         // histogram (IvfKmeans.unitVectors): measured recall@3 was
         // 0.14/0.21 at sf0.01/sf0.1 on the raw counts vs 0.86+ required.
-        val e = mat(IvfKmeans.unitVectors(table(spark, dir, "documents")
+        val e = materialize(IvfKmeans.unitVectors(table(spark, dir, "documents")
           .select(col("doc_id").as("vec_id"), byteHist(col("text")).as("v"))))
-        val cents = mat(IvfKmeans.train(e.select(col("vec_id"), col("qv")),
+        val cents = materialize(IvfKmeans.train(e.select(col("vec_id"), col("qv")),
           MmAnnK, MmIters))
         // O(n·K) assignment against the trained frozen quantizer;
         // materialized once — probe side + candidate side + recall
-        val assign = mat(IvfKmeans.rankCells(e, "qv", cents, 1)
+        val assign = materialize(IvfKmeans.rankCells(e, "qv", cents, 1)
           .select(col("vec_id"), col("v"), col("nrm"), col("cell")))
         val q = assign.filter(col("vec_id") % 37 === 0)
           .select(col("vec_id").as("qid"), col("v").as("pv"),
@@ -3707,7 +3643,7 @@ object QueriesLlm {
           df.withColumn("sim_x1e6",
             VF.quantize1e6(VF.dot(col("pv"), col("v")) / (col("pnrm") * col("nrm")))),
           3, col("sim_x1e6").desc, col("vec_id"))
-        val served = mat(top3(q.join(assign, Seq("cell"))
+        val served = materialize(top3(q.join(assign, Seq("cell"))
             .filter(col("vec_id") =!= col("qid")))
           .select(col("qid"), col("rn").cast("long").as("rn"),
             col("vec_id"), col("sim_x1e6"))) // serve rows + recall join below
@@ -3722,7 +3658,7 @@ object QueriesLlm {
             .drop("cell"))
           .join(e.select(col("vec_id"), col("v"), col("nrm")),
             col("vec_id") =!= col("qid")))
-        val rec = mat(OperatingPoint.recall(exact, "n2" -> served)
+        val rec = materialize(OperatingPoint.recall(exact, "n2" -> served)
           .withColumnRenamed("n_exact", "n1"))
         // ABSOLUTE recall floor, enforced IN-PLAN: the hashed
         // numerators only catch engine/oracle ASYMMETRY — a
@@ -3843,16 +3779,9 @@ object QueriesLlm {
            |       FROM corp),
            |${IvfKmeans.spillAssignCte("sp", "q", Dim, Seq("qv"), semCents)},
            |${IvfKmeans.capCellsCte("sp", SemK, HotBucketCap)},
-           |ev AS MATERIALIZED (
-           |  SELECT s.vec_id, s.cell, s.grp, c.v, ${normSql("c.v")} AS nrm
-           |  FROM spcap s JOIN ce c USING (vec_id))
-           |SELECT vec_a, vec_b, sim_x1e6 FROM (
-           |  SELECT DISTINCT a.vec_id AS vec_a, b.vec_id AS vec_b,
-           |    CAST(floor(((${dotSql("a.v", "b.v", Dim)}) / (a.nrm * b.nrm)) * 1e6)
-           |      AS BIGINT) AS sim_x1e6
-           |  FROM ev a JOIN ev b ON a.cell = b.cell AND a.grp = b.grp
-           |    AND a.vec_id < b.vec_id)
-           |WHERE sim_x1e6 >= $SemThreshX1e6
+           |${IvfKmeans.cellPairsCtes("cpairs", "spcap", "ce", Seq("cell", "grp"),
+              Dim, SemThreshX1e6)}
+           |SELECT vec_a, vec_b, sim_x1e6 FROM cpairs
            |ORDER BY vec_a, vec_b""".stripMargin
       }),
 
@@ -4009,26 +3938,18 @@ object QueriesLlm {
       },
       Some {
         s"""WITH $mmWave1Ctes,
-           |${IvfKmeans.spillAssignCte("sp1",
-              "(SELECT vec_id, v, nrm, qv FROM ac1)", 8, Seq("v", "nrm"),
-              cents = mmCents)},
-           |i1 AS (SELECT vec_id, v, nrm, cell FROM i0
-           |       UNION ALL SELECT vec_id, v, nrm, cell FROM sp1),
+           |${IvfKmeans.spillAssignCte("sp1", "ac1", 8, Seq("v"), cents = mmCents)},
+           |i1 AS (SELECT vec_id, v, cell FROM i0
+           |       UNION ALL SELECT vec_id, v, cell FROM sp1),
            |${mmFeatsCte("w2f",
               """(SELECT doc_id + 300000 AS vec_id, upper(text) AS txt FROM dsrc
                  |      WHERE doc_id % 5 = 1
                  |      UNION ALL
                  |      SELECT doc_id + 400000, text || upper(text) FROM dsrc
                  |      WHERE doc_id % 5 = 2)""".stripMargin)},
-           |${IvfKmeans.spillAssignCte("p2", "w2f", 8, Seq("v", "nrm", "qv"),
-              cents = mmCents, maxProbe = 1)},
-           |${mmWaveCte("p2", "i1", "dd2", "ac2")},
-           |committed AS (
-           |  SELECT 0 AS epoch, vec_id FROM (SELECT DISTINCT vec_id FROM i0)
-           |  UNION ALL SELECT 1, vec_id FROM ac1
-           |  UNION ALL SELECT 2, vec_id FROM ac2)
-           |SELECT epoch, count(*) AS n_vecs, CAST(sum(vec_id) AS BIGINT) AS sum_id
-           |FROM committed GROUP BY epoch ORDER BY epoch""".stripMargin
+           |${mmAcceptCtes("ac2", "w2f", "i1")},
+           |${SemanticIndex.rollupSql(0 -> "(SELECT DISTINCT vec_id FROM i0)",
+              1 -> "ac1", 2 -> "ac2")}""".stripMargin
       }),
 
     // -- INDEX GEOMETRY OPERATING POINT (K from measurement, not
@@ -4379,15 +4300,9 @@ object QueriesLlm {
                  |      UNION ALL
                  |      SELECT doc_id + 500000, upper(text) FROM dsrc
                  |      WHERE doc_id % 5 = 1)""".stripMargin)},
-           |${IvfKmeans.spillAssignCte("p2", "w2f", 8, Seq("v", "nrm", "qv"),
-              cents = mmCents, maxProbe = 1)},
-           |${mmWaveCte("p2", "i0", "dd2", "ac2")},
-           |committed AS (
-           |  SELECT 0 AS epoch, vec_id FROM (SELECT DISTINCT vec_id FROM i0)
-           |  UNION ALL SELECT 2, vec_id FROM ac2
-           |  UNION ALL SELECT 11, vec_id FROM ac1)
-           |SELECT epoch, count(*) AS n_vecs, CAST(sum(vec_id) AS BIGINT) AS sum_id
-           |FROM committed GROUP BY epoch ORDER BY epoch""".stripMargin
+           |${mmAcceptCtes("ac2", "w2f", "i0")},
+           |${SemanticIndex.rollupSql(0 -> "(SELECT DISTINCT vec_id FROM i0)",
+              2 -> "ac2", 11 -> "ac1")}""".stripMargin
       }),
 
     // -- SELECTIVE multimodal retraction (q123's per-entity shape on
@@ -4446,16 +4361,14 @@ object QueriesLlm {
               VF.wordBigramHist(col("text")).as("v"))
             .filter(col("v").isNotNull))
           .localCheckpoint(true) // train + epoch-0 + cover sides + probes
-        val h = SemanticIndex.Handle(SemanticIndex.store(spark,
-            s"${Fixtures.scratchRoot}/mmsel", "graft_q137_mm"),
-          SemanticIndex.trainCells(seed, MmK, MmIters), MmThreshX1e6)
         // the index CARRIES the entity fingerprint as metadata (the
         // per-entity bookkeeping the reference anchor keeps) — so the
         // cover analysis reads fp off the bucket scan with no store
         // re-key, and the fingerprint-keyed tombstone derives from
         // the store itself
-        h.store.seed(IndexBuckets,
-          SemanticIndex.spilled(h, seed, Seq("fp")).withColumn("epoch", lit(0)))
+        val h = SemanticIndex.build(SemanticIndex.store(spark,
+            s"${Fixtures.scratchRoot}/mmsel", "graft_q137_mm"),
+          seed, MmK, MmIters, MmThreshX1e6, IndexBuckets, extra = Seq("fp"))
         // cover analysis: each content re-probes its crank-1 cell; a
         // cover is FOREIGN iff its text fingerprint differs, and the
         // selection only needs EXISTENCE. One cell-keyed ANTI join —
@@ -4512,11 +4425,9 @@ object QueriesLlm {
           "a copy of the RETAINED control entity re-entered — over-delete")
         // epoch-2 commit keeps the fingerprint metadata (joined back
         // from the wave — acceptWave's output drops extras)
-        h.store.commit(
-          SemanticIndex.spilled(h,
-              acc2.join(wave.select(col("vec_id"), col("fp")), "vec_id"),
-              Seq("fp"))
-            .withColumn("epoch", lit(2)))
+        SemanticIndex.commit(h,
+          acc2.join(wave.select(col("vec_id"), col("fp")), "vec_id"), 2,
+          extra = Seq("fp"))
         SemanticIndex.rollup(h)
           .unionByName(tomb.agg(count(lit(1)).as("n_vecs"),
               sum(col("vec_id")).as("sum_id"))
@@ -4528,12 +4439,10 @@ object QueriesLlm {
           .orderBy(col("epoch"))
       },
       Some {
-        // unrolled 61-term dot: same left-to-right summation order as
-        // the prior fold (0.0 + x1 == x1 bit-exact for the nonnegative
-        // histogram products), ~an order of magnitude less per-pair
-        // work in DuckDB than a per-pair list comprehension + reduce
-        val dot61 = (a: String, b: String) =>
-          (1 to VF.WordBigramBins).map(i => s"$a[$i] * $b[$i]").mkString(" + ")
+        // the post-retract epoch-0 store: every doc but the tombstones
+        val retained =
+          "(SELECT f.vec_id FROM f0 f LEFT JOIN tomb t ON t.vec_id = f.vec_id " +
+            "WHERE t.vec_id IS NULL)"
         // The q88 playbook: the corpus carries EXACT text copies
         // (gen_sf corpora are 10x key-shifted copies), and copies share
         // fp, v, nrm, qv and therefore cells — so features are derived ONCE per DISTINCT text (fd) and
@@ -4575,7 +4484,7 @@ object QueriesLlm {
            |  WHERE NOT EXISTS (
            |    SELECT 1 FROM idd i
            |    WHERE i.cell = p.cell AND i.fp <> p.fp
-           |      AND CAST(floor(((${dot61("p.v", "i.v")}) / (p.nrm * i.nrm))
+           |      AND CAST(floor(((${dotSql("p.v", "i.v", VF.WordBigramBins)}) / (p.nrm * i.nrm))
            |        * 1e6) AS BIGINT) >= $MmThreshX1e6)),
            |xsel AS (SELECT min(vec_id) AS x_id FROM nfz),
            |fpx AS (SELECT f.fp AS fp_x FROM fd f, xsel WHERE f.rep_id = xsel.x_id),
@@ -4592,24 +4501,11 @@ object QueriesLlm {
            |  UNION ALL
            |  SELECT f.vec_id + 800000000, f.v, f.nrm, f.qv
            |  FROM f0 f, fpy WHERE f.fp = fpy.fp_y),
-           |${IvfKmeans.spillAssignCte("pp", "pw", VF.WordBigramBins, Seq("v", "nrm"),
-              cents = mmCents, maxProbe = 1)},
-           |dd AS (
-           |  SELECT DISTINCT p.vec_id FROM pp p JOIN st2d i ON i.cell = p.cell
-           |  WHERE CAST(floor(((${dot61("p.v", "i.v")}) / (p.nrm * i.nrm)) * 1e6)
-           |    AS BIGINT) >= $MmThreshX1e6),
-           |ac2 AS (
-           |  SELECT p.vec_id FROM (SELECT DISTINCT vec_id FROM pp) p
-           |  LEFT JOIN dd d ON d.vec_id = p.vec_id WHERE d.vec_id IS NULL),
-           |committed AS (
-           |  SELECT 0 AS epoch, f.vec_id FROM f0 f
-           |  LEFT JOIN tomb t ON t.vec_id = f.vec_id WHERE t.vec_id IS NULL
-           |  UNION ALL SELECT 2, vec_id FROM ac2
-           |  UNION ALL SELECT 11, vec_id FROM tomb
-           |  UNION ALL SELECT 12, x_id FROM xsel
-           |  UNION ALL SELECT 13, y_id FROM ysel)
-           |SELECT epoch, count(*) AS n_vecs, CAST(sum(vec_id) AS BIGINT) AS sum_id
-           |FROM committed GROUP BY epoch ORDER BY epoch""".stripMargin
+           |${SemanticIndex.acceptWaveCtes("ac2", "pw", "st2d", mmCents,
+              VF.WordBigramBins, MmThreshX1e6)},
+           |${SemanticIndex.rollupSql(0 -> retained, 2 -> "ac2", 11 -> "tomb",
+              12 -> "(SELECT x_id AS vec_id FROM xsel)",
+              13 -> "(SELECT y_id AS vec_id FROM ysel)")}""".stripMargin
       }),
 
     // -- HOT-BUCKET-CONTROLLED wave-vs-INDEX accept: the production

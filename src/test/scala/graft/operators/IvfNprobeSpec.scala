@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.SparkSpec
+import graft.queries.QueriesLlm
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -35,6 +36,25 @@ class IvfNprobeSpec extends SparkSpec {
     val viaAssign = IvfKmeans.assign(q, cents)
       .select(col("vec_id"), col("cid").as("cell"))
     assert(viaRank.exceptAll(viaAssign).isEmpty && viaAssign.exceptAll(viaRank).isEmpty)
+  }
+
+  test("the shared maxProbe = 1 candidate join equals the assignment-cell self-join") {
+    val (q, cents) = frame()
+    val assigned = IvfKmeans.assign(q, cents)
+      .select(col("vec_id"), col("qv"), col("cid").as("cell"))
+    val probes = assigned.select(col("vec_id").as("qid"), col("qv").as("pqv"))
+    val shared = QueriesLlm.ivfCandidates(probes, assigned, cents, 1)
+    assert(shared.filter(col("crank") =!= 1).isEmpty)
+    // the search q114 ran before it shared the nprobe join: each probe
+    // joins the corpus rows of its own assignment cell
+    val selfJoin = assigned
+      .select(col("vec_id").as("qid"), col("qv").as("pqv"), col("cell"))
+      .join(assigned, Seq("cell")).filter(col("vec_id") =!= col("qid"))
+      .select(col("qid"), col("vec_id"),
+        IvfKmeans.distL2(col("pqv"), col("qv")).as("dist"))
+    val viaShared = shared.select("qid", "vec_id", "dist")
+    assert(viaShared.count() > 0)
+    assert(viaShared.exceptAll(selfJoin).isEmpty && selfJoin.exceptAll(viaShared).isEmpty)
   }
 
   test("nprobe candidate sets nest: widening the probe never loses a candidate") {

@@ -46,6 +46,34 @@ class SemanticIndexSpec extends SparkSpec {
     spark.sql(s"DROP TABLE ${table(h)}")
   }
 
+  test("build and commit with extra = fp keep fp on both spill rows; selfCoveredOnly reads it") {
+    // K = 2 cells with 2-cell spill: every vector is stored in both
+    // cells, so every probe's cell holds the whole store
+    val seed = vecs(Seq(0L -> Seq(1.0, 0.0), 1L -> Seq(0.0, 1.0),
+        2L -> Seq(0.99, 0.05), 3L -> Seq(0.0, 1.0)))
+      .join(Seq(0L -> 10L, 1L -> 11L, 2L -> 12L, 3L -> 11L).toDF("vec_id", "fp"), "vec_id")
+    val h = SemanticIndex.build(SemanticIndex.store(spark,
+        s"${graft.queries.Fixtures.scratchRoot}/semspec_extra", "graft_semspec_extra"),
+      seed, 2, 2, SemThreshX1e6, 2, extra = Seq("fp"))
+    val wave = vecs(Seq(100L -> Seq(-1.0, 0.001))).withColumn("fp", lit(20L))
+    // acceptWave drops extras: fp is joined back for the commit, as q137 does
+    val acc = SemanticIndex.acceptWave(h, wave)
+    SemanticIndex.commit(h, acc.join(wave.select("vec_id", "fp"), "vec_id"), 1,
+      extra = Seq("fp"))
+    val stored = spark.table(table(h)).groupBy("vec_id")
+      .agg(count(lit(1)).as("n"), collect_set(col("fp")).as("fps"))
+      .as[(Long, Long, Seq[Long])].collect()
+      .map { case (id, n, fps) => id -> (n, fps.toSet) }.toMap
+    assert(stored == Map(0L -> (2L, Set(10L)), 1L -> (2L, Set(11L)),
+      2L -> (2L, Set(12L)), 3L -> (2L, Set(11L)), 100L -> (2L, Set(20L))))
+    // 0 and 2 cover each other under different fingerprints; 1 and 3 are
+    // copies under one fingerprint, and 100 covers only itself
+    val probes = seed.unionByName(wave)
+    assert(SemanticIndex.selfCoveredOnly(h, probes).as[(Long, Long)].collect().toSet ==
+      Set(1L -> 11L, 3L -> 11L, 100L -> 20L))
+    spark.sql(s"DROP TABLE ${table(h)}")
+  }
+
   test("retract removes both spill rows and un-rejects copies of the retracted") {
     val seed = vecs(Seq(0L -> Seq(1.0, 0.0), 1L -> Seq(0.0, 1.0)))
     val h = handle("retract", seed)

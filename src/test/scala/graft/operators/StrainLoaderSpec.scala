@@ -17,39 +17,49 @@ class StrainLoaderSpec extends SparkSpec with BeforeAndAfterAll {
   private lazy val root: Path = Files.createTempDirectory("graft-strain-loader")
   private lazy val p = StrainLoader.Paths(root.toFile)
 
-  private def write(name: String, lines: Seq[String]): Unit = {
+  private def write(root: Path, name: String, lines: Seq[String]): Unit = {
     val f = root.resolve(s"in/$name")
     Files.createDirectories(f.getParent)
     Files.write(f, lines.mkString("", "\n", "\n").getBytes("UTF-8"))
   }
 
+  /** The genome, transcripts and exons every pass under `root` reads,
+    * then [[StrainLoader.setup]]. */
+  private def setup(root: Path, p: StrainLoader.Paths): Unit = {
+    write(root, "genome.fa", Seq(">1") ++ Seq.fill(3)("ACGTTGCAAC" * 6) ++ Seq(">2") ++
+      Seq.fill(3)(Chr2.take(60)))
+    write(root, "transcripts.tsv", Seq("1\t1\t+\t10\t150", "2\t2\t-\t20\t120"))
+    write(root, "exons.tsv", Seq("1\t0\t1\t10\t40", "1\t1\t1\t100\t150",
+      "2\t0\t2\t20\t60", "2\t1\t2\t90\t120"))
+    StrainLoader.setup(spark, p)
+  }
+
+  /** One pass over `root/in/$wave.vcf`: its counters and its wave rows,
+    * key -> (rgd_id, is_new, n_samples). */
+  private def load(root: Path, p: StrainLoader.Paths, wave: String,
+                   strains: Seq[(String, String)], rewave: Boolean) = {
+    val out = StrainLoader.Out(root.resolve(s"out/$wave").toString)
+    val c = StrainLoader.pass(spark, p.in(s"$wave.vcf"), out, p, strains.toMap, rewave)
+      .counters()
+    val rows = spark.read.parquet(out.wave).collect().map { r =>
+      Seq("chromosome", "position", "ref_nuc", "var_nuc").map(k => String.valueOf(r.getAs[Any](k)))
+        .mkString("|") -> (r.getAs[Long]("rgd_id"), r.getAs[Boolean]("is_new"),
+          r.getAs[Long]("n_samples"))
+    }.toMap
+    (c, rows)
+  }
+
   /** Both passes, run once: (counters, wave rows) per wave. */
   private lazy val run = {
     System.setProperty("derby.stream.error.file", root.resolve("derby.log").toString)
-    write("genome.fa", Seq(">1") ++ Seq.fill(3)("ACGTTGCAAC" * 6) ++ Seq(">2") ++
-      Seq.fill(3)(Chr2.take(60)))
-    write("transcripts.tsv", Seq("1\t1\t+\t10\t150", "2\t2\t-\t20\t120"))
-    write("exons.tsv", Seq("1\t0\t1\t10\t40", "1\t1\t1\t100\t150",
-      "2\t0\t2\t20\t60", "2\t1\t2\t90\t120"))
-    write("wave1.vcf", vcf(Wave1Strains, Wave1))
-    write("wave2.vcf", vcf(Wave2Strains, Wave2))
-    StrainLoader.setup(spark, p)
-    def load(wave: String, strains: Seq[(String, String)], rewave: Boolean) = {
-      val out = StrainLoader.Out(root.resolve(s"out/$wave").toString)
-      val c = StrainLoader.pass(spark, p.in(s"$wave.vcf"), out, p, strains.toMap, rewave)
-        .counters()
-      val rows = spark.read.parquet(out.wave).collect().map { r =>
-        Seq("chromosome", "position", "ref_nuc", "var_nuc").map(k => String.valueOf(r.getAs[Any](k)))
-          .mkString("|") -> (r.getAs[Long]("rgd_id"), r.getAs[Boolean]("is_new"),
-            r.getAs[Long]("n_samples"))
-      }.toMap
-      (c, rows)
-    }
-    val w1 = load("wave1", Wave1Strains, rewave = false)
+    write(root, "wave1.vcf", vcf(Wave1Strains, Wave1))
+    write(root, "wave2.vcf", vcf(Wave2Strains, Wave2))
+    setup(root, p)
+    val w1 = load(root, p, "wave1", Wave1Strains, rewave = false)
     // the re-wave reads the store through a fresh catalog entry, as a
     // loader restarted over an existing store does
     StrainLoader.registerStore(spark, p)
-    val w2 = load("wave2", Wave2Strains, rewave = true)
+    val w2 = load(root, p, "wave2", Wave2Strains, rewave = true)
     val derbyRows = StrainLoader.derbyCount(p)
     Jdbc.shutdownEmbeddedDerby(p.derby)
     (w1, w2, derbyRows)
@@ -117,6 +127,30 @@ class StrainLoaderSpec extends SparkSpec with BeforeAndAfterAll {
     val sub = vt("2|27|AC|GT")
     assert(Seq("ref_aa", "var_aa", "syn_status").forall(c => sub.getAs[String](c) == null))
     assert(sub.getAs[String]("frameshift") == "F")
+  }
+
+  test("a re-wave over an empty store numbers its keys from 1 and MERGEs every key") {
+    run // the shared store table is re-registered below, after the other cases
+    val root2 = Files.createTempDirectory("graft-strain-loader-empty")
+    val p2 = StrainLoader.Paths(root2.toFile)
+    try {
+      write(root2, "wave2.vcf", vcf(Wave2Strains, Wave2))
+      setup(root2, p2)
+      // a store registered before any wave wrote a row
+      StrainLoader.registerStore(spark, p2)
+      assert(spark.table(StrainLoader.StoreTable).count() == 0L)
+      val (c, rows) = load(root2, p2, "wave2", Wave2Strains, rewave = true)
+      val keys = expected(Wave2Strains, Wave2).keys.toSeq.sorted(KeyOrder)
+      assert(rows.keySet == keys.toSet)
+      assert(keys.map(k => rows(k)._1) == (1L to keys.size))
+      assert(keys.forall(k => rows(k)._2))
+      assert(c.maxSeedId == 0L && c.newKeys == keys.size)
+      assert(c.mergeAffected == keys.size)
+      assert(StrainLoader.derbyCount(p2) == keys.size)
+    } finally {
+      Jdbc.shutdownEmbeddedDerby(p2.derby)
+      graft.queries.Fixtures.rmrf(root2.toFile)
+    }
   }
 
   override def afterAll(): Unit = {

@@ -2,9 +2,17 @@
 """Dev-only harness (driver-side python, not part of the library):
 runs each oracle SQL in DuckDB against the same parquet tables and
 compares with the Verify output, approximating the driver's
-row/schema/hash match (columns sorted by name, rows sorted)."""
-import duckdb, hashlib, json, sys, os
+row/schema/hash match (columns sorted by name, rows sorted).
+
+Each result line carries the oracle's wall seconds and the process's
+peak RSS so far (ru_maxrss, a high-water mark: it only rises, so a line
+shows the largest footprint of any oracle up to and including its own).
+The summary line `== N ok, M fail ==` is followed by the slowest
+oracles."""
+import duckdb, hashlib, json, resource, sys, os, time
 import pandas as pd
+
+SLOWEST = 5  # oracles listed after the summary line
 
 TABLES = ['region','nation','customer','supplier','part','orders','lineitem',
           'events','documents','embeddings']
@@ -78,6 +86,12 @@ def compare(a, b, names=('spark', 'duck')):
     return '\n'.join(lines)
 
 
+def maxrss_mb():
+    """The process's peak RSS so far in MB (Linux reports ru_maxrss in
+    KiB)."""
+    return resource.getrusage(resource.RUSAGE_SELF).ru_maxrss / 1024
+
+
 def main():
     sf = sys.argv[1] if len(sys.argv) > 1 else '/root/testdata/sf0.01'
     out = sys.argv[2] if len(sys.argv) > 2 else '/root/repo/tmp/verify_out'
@@ -87,34 +101,44 @@ def main():
         con.sql(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf}/{t}.parquet')")
     oracle = json.load(open(f'{out}/oracle_sql.json'))
     n_ok = n_fail = 0
+    walls = {}
     for name in sorted(oracle):
         if not selected(name, only):
             continue
         sql = oracle[name]
+        t0 = time.monotonic()
         try:
             duck = run_oracle(con, sf, sql)
+            err = None
         except Exception as e:
-            print(f'{name}: ORACLE-ERROR {e}')
+            err = e
+        walls[name] = time.monotonic() - t0
+        cost = f'  [oracle {walls[name]:.2f} s, maxrss {maxrss_mb():.0f} MB]'
+        if err is not None:
+            print(f'{name}: ORACLE-ERROR {err}{cost}')
             n_fail += 1
             continue
         try:
             spark = pd.read_parquet(f'{out}/{name}')
         except Exception as e:
-            print(f'{name}: SPARK-MISSING {e}')
+            print(f'{name}: SPARK-MISSING {e}{cost}')
             n_fail += 1
             continue
         err = compare(spark, duck)
         if err:
-            print(f'{name}: {err}')
+            print(f'{name}: {err}{cost}')
             n_fail += 1
             continue
         # flag dtype divergences even when values stringify equal
         dt_note = ''
         if dtypes(spark) != dtypes(duck):
             dt_note = f'  [dtypes spark={dtypes(spark)} duck={dtypes(duck)}]'
-        print(f'{name}: OK rows={len(spark)}{dt_note}')
+        print(f'{name}: OK rows={len(spark)}{dt_note}{cost}')
         n_ok += 1
     print(f'== {n_ok} ok, {n_fail} fail ==')
+    print(f'slowest {SLOWEST} oracles:')
+    for name, wall in sorted(walls.items(), key=lambda kv: -kv[1])[:SLOWEST]:
+        print(f'  {wall:8.2f} s  {name}')
     sys.exit(1 if n_fail else 0)
 
 if __name__ == '__main__':

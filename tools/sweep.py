@@ -135,8 +135,9 @@ def main():
             ["timeout", budget, "python3", "-u", "tools/check.py",
              sf_dir, out_dir, n],
             capture_output=True, text=True, env=env)
-        lines = r.stdout.strip().splitlines()
-        tail = lines[-1] if lines else ""
+        # check.py's summary line; the slowest-oracle list follows it
+        tail = next((l for l in reversed(r.stdout.splitlines())
+                     if l.startswith("== ")), "")
         if r.returncode == 124:
             timed_out.append(n)
             print(f"{n}: TIMEOUT", flush=True)

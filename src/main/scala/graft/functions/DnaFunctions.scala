@@ -15,6 +15,10 @@ import org.apache.spark.sql.functions._
   *    (reference `VariantPostProcessing.java:589-610`) — A<->T, C<->G,
   *    N->N, '?'->'?', output always upper-case.
   *  - IUPAC ambiguity expansion: reference `convert/IUPAC.java:16-44`.
+  *
+  * `translateCodonSql` and `reverseComplementSql` are their rules as SQL
+  * text in the constructs Spark SQL and DuckDB share (see
+  * [[VariantFunctions]]); `translateDnaSql` is DuckDB-only.
   */
 object DnaFunctions {
 
@@ -43,6 +47,10 @@ object DnaFunctions {
   def translateCodon(codon: Column): Column =
     coalesce(element_at(codonMapCol, upper(codon)), lit("X"))
 
+  def translateCodonSql(codon: String): String =
+    CodonTable.toSeq.sortBy(_._1).map { case (c, a) => s"WHEN '$c' THEN '$a'" }
+      .mkString(s"CASE upper($codon) ", " ", " ELSE 'X' END")
+
   /** Translate a DNA string to a protein string, 3 bases per amino acid.
     * Trailing bases beyond a multiple of 3 are ignored (the reference
     * truncates the CDS to a multiple of 3 before translating,
@@ -59,10 +67,18 @@ object DnaFunctions {
       .otherwise(lit(""))
   }
 
+  /** DuckDB twin of [[translateDna]]. */
+  def translateDnaSql(dna: String): String =
+    s"""CASE WHEN length($dna) >= 3 THEN list_aggregate(
+       |  [${translateCodonSql(s"substr($dna, (j - 1) * 3 + 1, 3)")}
+       |   FOR j IN generate_series(1, length($dna) // 3)], 'string_agg', '') ELSE '' END""".stripMargin
+
   /** Reverse complement of a DNA string; case-insensitive input,
     * upper-case output; N and '?' map to themselves. */
   def reverseComplement(dna: Column): Column =
     reverse(translate(upper(dna), "ACGT", "TGCA"))
+
+  def reverseComplementSql(dna: String): String = s"reverse(translate(upper($dna), 'ACGT', 'TGCA'))"
 
   /** IUPAC ambiguity code -> string of concrete bases (R -> "AG", ...,
     * N -> "ATCG"); concrete bases map to themselves.

@@ -368,10 +368,7 @@ object MinhashPipeline {
     s"""SELECT $keep, hl, CAST(len(hl) AS BIGINT) AS sz FROM (
        |    SELECT $keep, list_distinct(list_transform(
        |      [t[i] || ' ' || t[i + 1] FOR i IN generate_series(1, len(t) - 1)],
-       |      s -> list_reduce(
-       |        list_prepend(CAST(0 AS BIGINT),
-       |          list_transform(string_split_regex(s, ''), c -> CAST(ascii(c) AS BIGINT))),
-       |        (acc, x) -> (acc * 31 + x) % ${TF.HashMod}))) AS hl
+       |      s -> ${TF.polyHashSql("s")})) AS hl
        |    FROM (SELECT $keep, string_split_regex(trim(lower(text)), '\\s+') AS t
        |          FROM $src)
        |    WHERE len(t) >= 2)""".stripMargin

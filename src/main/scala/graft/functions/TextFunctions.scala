@@ -27,13 +27,6 @@ object TextFunctions {
   def punctCount(text: Column): Column =
     length(regexp_replace(text, "[A-Za-z0-9\\s]", ""))
 
-  /** Deterministic 63-bit polynomial rolling hash of the full text:
-    * h = fold(h*31 + ascii(char)) mod 1e9+7. Engine-independent (pure
-    * integer arithmetic), unlike xxhash/murmur which differ per engine. */
-  def fingerprint(text: Column, mod: Long = 1000000007L): Column =
-    aggregate(split(text, ""), lit(0L),
-      (acc, ch) => (acc * 31 + ascii(ch)) % mod)
-
   /** Language marker words used by the n-gram-free heuristic language ID.
     * Tiny on purpose: the point is the operator shape (scored argmax over
     * per-language token matches), not linguistic accuracy. */
@@ -124,9 +117,17 @@ object TextFunctions {
           .as("n_singleton")))
   }
 
-  /** 63-bit polynomial hash of one string (for shingle/token hashing). */
-  def polyHash(s: Column, mod: Long = 1000000007L): Column =
-    aggregate(split(s, ""), lit(0L), (acc, ch) => (acc * 31 + ascii(ch)) % mod)
+  /** Deterministic polynomial rolling hash of a whole string (a text
+    * fingerprint, a token or shingle hash): h = fold(h*31 + ascii(char))
+    * mod [[HashMod]]. Engine-independent (pure integer arithmetic),
+    * unlike xxhash/murmur which differ per engine. */
+  def polyHash(s: Column): Column =
+    aggregate(split(s, ""), lit(0L), (acc, ch) => (acc * 31 + ascii(ch)) % HashMod)
+
+  /** DuckDB twin of [[polyHash]]. */
+  def polyHashSql(s: String): String =
+    s"list_reduce(list_prepend(CAST(0 AS BIGINT), list_transform(string_split_regex($s, ''), " +
+      s"c -> CAST(ascii(c) AS BIGINT))), (acc, x) -> (acc * 31 + x) % $HashMod)"
 
   // ---- MinHash + LSH dedup primitives ---------------------------------
   // Pipeline (shingle -> minhash -> band -> bucket-join) per the classic

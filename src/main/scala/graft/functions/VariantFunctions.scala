@@ -8,10 +8,16 @@ import org.apache.spark.sql.functions._
   * Conventions: `refNuc`/`varNuc` are nucleotide strings; for indels the
   * empty/null side encodes the indel ("" ref = insertion, "" var =
   * deletion) — reference `VariantLoad3.java:236-314`.
+  *
+  * Each rule's `...Sql` twin is the same rule as SQL text over column
+  * expressions, in constructs Spark SQL and DuckDB share, so the DuckDB
+  * oracles state it once; `TwinPropertySpec` runs every twin through
+  * Spark against its Column function on NULL, '', '-', N and lower case.
   */
 object VariantFunctions {
 
   private def emptyish(c: Column): Column = c.isNull || length(c) === 0
+  private def emptyishSql(c: String): String = s"($c IS NULL OR length($c) = 0)"
 
   /** snv / ins / del typing. Reference `VariantLoad3.determineVariantType:668-680`:
     * both sides non-empty -> "snv", empty ref -> "ins", empty var -> "del". */
@@ -19,6 +25,10 @@ object VariantFunctions {
     when(!emptyish(refNuc) && !emptyish(varNuc), "snv")
       .when(emptyish(refNuc), "ins")
       .otherwise("del")
+
+  def variantTypeSql(refNuc: String, varNuc: String): String =
+    s"CASE WHEN NOT ${emptyishSql(refNuc)} AND NOT ${emptyishSql(varNuc)} THEN 'snv' " +
+      s"WHEN ${emptyishSql(refNuc)} THEN 'ins' ELSE 'del' END"
 
   /** Variant typing exactly as the fixup job re-derives it — branch
     * order matters: ANY '-' on either side is "del" (even a '-' ref,
@@ -37,12 +47,23 @@ object VariantFunctions {
       .otherwise(lit(null).cast("string"))
   }
 
+  def variantTypeFixupSql(refNuc: String, varNuc: String): String = {
+    val (r, v) = (s"coalesce($refNuc, '')", s"coalesce($varNuc, '')")
+    s"CASE WHEN $r LIKE '%-%' OR $v LIKE '%-%' THEN 'del' " +
+      s"WHEN length($r) < length($v) THEN 'ins' WHEN length($r) > length($v) THEN 'del' " +
+      s"WHEN length($r) = 1 AND length($v) = 1 THEN 'snv' END"
+  }
+
   /** End position rule: snv -> start+1; insertion -> start;
     * deletion -> start + len(ref). Reference `VariantLoad3.java:299-315`. */
   def endPos(startPos: Column, refNuc: Column, varNuc: Column): Column =
     when(!emptyish(refNuc) && !emptyish(varNuc), startPos + 1)
       .when(emptyish(refNuc), startPos)
       .otherwise(startPos + length(refNuc))
+
+  def endPosSql(startPos: String, refNuc: String, varNuc: String): String =
+    s"CASE WHEN NOT ${emptyishSql(refNuc)} AND NOT ${emptyishSql(varNuc)} THEN $startPos + 1 " +
+      s"WHEN ${emptyishSql(refNuc)} THEN $startPos ELSE $startPos + length($refNuc) END"
 
   /** Quality score = rounded 100*readDepth/totalDepth with the reference's
     * exact integer semantics `(100*rd + td/2) / td` (integer division),
@@ -73,6 +94,12 @@ object VariantFunctions {
     when(lenDiff % 3 =!= 0, "T").otherwise("F")
   }
 
+  def frameshiftFlagSql(refNuc: String, varNuc: String): String = {
+    val (rl, vl) = (s"coalesce(length($refNuc), 0)", s"coalesce(length($varNuc), 0)")
+    s"CASE WHEN (CASE WHEN $varNuc LIKE '%-%' THEN $rl WHEN $refNuc LIKE '%-%' THEN $vl " +
+      s"ELSE abs($rl - $vl) END) % 3 <> 0 THEN 'T' ELSE 'F' END"
+  }
+
   /** Synonymous status: equal AAs -> "synonymous", else "nonsynonymous";
     * an "X" (untranslatable codon) on either side -> "unassignable".
     * Reference `VariantPostProcessing.java:531-534` + `changes.txt:113-123`. */
@@ -80,6 +107,10 @@ object VariantFunctions {
     when(refAa === "X" || varAa === "X", "unassignable")
       .when(refAa === varAa, "synonymous")
       .otherwise("nonsynonymous")
+
+  def synStatusSql(refAa: String, varAa: String): String =
+    s"CASE WHEN $refAa = 'X' OR $varAa = 'X' THEN 'unassignable' " +
+      s"WHEN $refAa = $varAa THEN 'synonymous' ELSE 'nonsynonymous' END"
 
   /** Indel normalization ("common format" encoding): for an insertion
     * (ref len 1, var longer, shared leading base) emit pos+1, ref null,
@@ -104,8 +135,22 @@ object VariantFunctions {
       (snv || ((ins || del) && sharedLead)).as("ok"))
   }
 
-  /** Number of distinct called alleles = count of A/C/G/T with reads > 0.
-    * Reference `Zygosity.computeZygosity` (decompiled rgdcore jar). */
-  def numAllele(a: Column, c: Column, g: Column, t: Column): Column =
-    (a > 0).cast("int") + (c > 0).cast("int") + (g > 0).cast("int") + (t > 0).cast("int")
+  /** [[adjustForIndels]]'s fields as (name, SQL expression) pairs, in
+    * its struct order. */
+  def adjustForIndelsSql(pos: String, refNuc: String, varNuc: String): Seq[(String, String)] = {
+    val shared = s"substr($refNuc, 1, 1) = substr($varNuc, 1, 1)"
+    val snv = s"(length($refNuc) = 1 AND length($varNuc) = 1)"
+    val ins = s"(length($refNuc) = 1 AND length($varNuc) > 1)"
+    val del = s"(length($varNuc) = 1 AND length($refNuc) > 1)"
+    val indel = s"($ins OR $del) AND $shared"
+    Seq(
+      "pos" -> s"CASE WHEN $snv THEN $pos WHEN $indel THEN $pos + 1 ELSE $pos END",
+      "ref_nuc" -> (s"CASE WHEN $snv THEN $refNuc WHEN $ins AND $shared THEN NULL " +
+        s"WHEN $del AND $shared THEN substr($refNuc, 2, length($refNuc)) ELSE $refNuc END"),
+      "var_nuc" -> (s"CASE WHEN $snv THEN $varNuc " +
+        s"WHEN $ins AND $shared THEN substr($varNuc, 2, length($varNuc)) " +
+        s"WHEN $del AND $shared THEN NULL ELSE $varNuc END"),
+      "padding_base" -> s"CASE WHEN $indel THEN substr($refNuc, 1, 1) END",
+      "ok" -> s"($snv OR ($indel))")
+  }
 }

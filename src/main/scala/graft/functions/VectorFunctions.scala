@@ -148,9 +148,7 @@ object VectorFunctions {
   /** Twin of [[wordBigramHist]]: a DOUBLE list of [[WordBigramBins]]
     * counts of `txt`, NULL for fewer than two tokens. */
   def wordBigramHistSql(txt: String): String = {
-    val hash = s"list_reduce(list_prepend(CAST(0 AS BIGINT), list_transform(" +
-      s"string_split_regex(t, ''), c -> CAST(ascii(c) AS BIGINT))), " +
-      s"(acc, x) -> (acc * 31 + x) % ${TextFunctions.HashMod})"
+    val hash = TextFunctions.polyHashSql("t")
     val counts = (0 until WordBigramBins)
       .map(b => s"CAST(len(list_filter(bg, x -> x = $b)) AS DOUBLE)")
     s"""list_transform([list_transform(string_split_regex(trim(lower($txt)), '\\s+'), t -> $hash)],

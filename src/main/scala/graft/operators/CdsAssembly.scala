@@ -11,8 +11,9 @@ import org.apache.spark.sql.functions._
   * reference `VariantPostProcessing.java:370-551`).
   *
   * The catalog (q60, q82) and [[StrainLoader]] (q84) call [[assemble]]
-  * and [[codonEffect]]. [[OrderedConcat]] is a typed [[Aggregator]] for
-  * the same ordered concatenation with explicit, incremental buffer
+  * and [[codonEffect]]; their oracles call the DuckDB twins
+  * [[assembleSql]] and [[codonEffectSql]]. [[OrderedConcat]] is a typed
+  * [[Aggregator]] for the same ordered concatenation with explicit, incremental buffer
   * management (partial aggregation runs map-side, only `finish` sorts);
   * it stays only because perfbench's own copy of the loader and
   * `CdsAssemblySkewSpec` call it, until perfbench calls [[StrainLoader]].
@@ -39,6 +40,17 @@ object CdsAssembly {
           sort_array(collect_list(struct(col("exon_idx"), col("dna")))),
           x => x("dna")), "").as("cds")))
   }
+
+  /** DuckDB twin of [[assemble]] over `exons`, a relation with (tid,
+    * strand, exon_idx, dna, ...): CTEs `exd` (`exons` with `prior_len`)
+    * and `cds` (tid, strand, cds). */
+  def assembleSql(exons: String): String =
+    s"""exd AS (
+       |  SELECT *, CAST(coalesce(sum(length(dna)) OVER (PARTITION BY tid ORDER BY exon_idx
+       |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS prior_len
+       |  FROM $exons),
+       |cds AS (SELECT tid, strand, string_agg(dna, '' ORDER BY exon_idx) AS cds
+       |        FROM $exons GROUP BY tid, strand)""".stripMargin
 
   /** Codon effect of the SNV `var_base` at CDS position `rel_pos` of
     * `cds` on a transcript read on `strand`. Adds:
@@ -80,6 +92,39 @@ object CdsAssembly {
         when(skip, "skipped").otherwise(DnaFunctions.translateCodon(col("var_codon"))))
       .withColumn("syn_status",
         when(skip, "skipped").otherwise(VariantFunctions.synStatus(col("ref_aa"), col("var_aa"))))
+  }
+
+  /** DuckDB CTEs `ori`, `fin`, `aa` and `codon` over `src`, a relation
+    * with (strand, cds, rel_pos, var_base) plus the `keep` columns: the
+    * oracle of [[codonEffect]], by a different algorithm. It applies the
+    * SNV to the whole CDS, reverse-complements both on '-', and
+    * translates the `aa_pos`-th codon of each. `codon` has `keep`,
+    * strand, rel2, triplet_error, aa_pos, ref_aa, var_aa, syn_status. */
+  def codonEffectSql(src: String, keep: Seq[String]): String = {
+    import DnaFunctions.{reverseComplementSql => revcomp, translateCodonSql => aa}
+    val k = keep.map(_ + ", ").mkString
+    s"""ori AS (
+       |  SELECT ${k}strand,
+       |    CASE WHEN strand = '-' THEN ${revcomp("cds")} ELSE cds END AS cds2,
+       |    CASE WHEN strand = '-' THEN ${revcomp("var_cds")} ELSE var_cds END AS var_cds2,
+       |    CASE WHEN strand = '-' THEN length(cds) - rel_pos + 1 ELSE rel_pos END AS rel2
+       |  FROM (SELECT *, substr(cds, 1, CAST(rel_pos - 1 AS INT)) || var_base ||
+       |          substr(cds, CAST(rel_pos + 1 AS INT)) AS var_cds FROM $src)),
+       |fin AS (
+       |  SELECT *, CASE WHEN rel2 > 3 * (length(cds2) // 3) THEN 'T' ELSE 'F' END AS triplet_error,
+       |    CASE WHEN rel2 > 3 * (length(cds2) // 3) THEN 0 ELSE (rel2 + 2) // 3 END AS aa_pos
+       |  FROM ori),
+       |aa AS (
+       |  SELECT ${k}strand, rel2, triplet_error, CAST(aa_pos AS BIGINT) AS aa_pos,
+       |    CASE WHEN triplet_error = 'T' THEN 'skipped'
+       |         ELSE ${aa("substr(cds2, CAST(3 * aa_pos - 2 AS INT), 3)")} END AS ref_aa,
+       |    CASE WHEN triplet_error = 'T' THEN 'skipped'
+       |         ELSE ${aa("substr(var_cds2, CAST(3 * aa_pos - 2 AS INT), 3)")} END AS var_aa
+       |  FROM fin),
+       |codon AS (
+       |  SELECT *, CASE WHEN triplet_error = 'T' THEN 'skipped'
+       |                 ELSE ${VariantFunctions.synStatusSql("ref_aa", "var_aa")} END AS syn_status
+       |  FROM aa)""".stripMargin
   }
 
   /** One exon's DNA chunk within transcript `tid`. */

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.functions.{VariantFunctions, ZygosityFunctions}
+import graft.functions.VariantFunctions
 
 /** Fix-up jobs (SURVEY §5.5) — the reference's maintenance pattern: a
   * full-table scan that RE-DERIVES a stored column from its source
@@ -85,35 +85,12 @@ object Fixup {
   /** NumAllelesFixUp (`fixup/NumAllelesFixUp.java:46-99`): among rows
     * with percent-read > 0, the allele count at one (sample, chr, pos)
     * site is the site's row count, plus one if any row there saw the
-    * reference allele. One window aggregation — the shuffle is the
-    * reference's ORDER BY sample,chromosome,start_pos cursor, keyed
-    * identically. Scoped to percent-read > 0 exactly as the job's
-    * WHERE clause; out-of-scope rows are never touched. */
-  def numAlleleDrift(variants: DataFrame): DataFrame = {
-    val w = Window.partitionBy(
-      col("sample_id"), col("chromosome"), col("start_pos"))
-    variants.filter(col("zygosity_percent_read") > 0)
-      .withColumn("recomputed",
-        (count(lit(1)).over(w) +
-          max(when(col("zygosity_ref_allele") === "Y", 1L).otherwise(0L)).over(w))
-          .cast("int"))
-      .withColumn("drifted", !(col("zygosity_num_allele") <=> col("recomputed")))
-  }
-
-  /** Join-free form of [[numAlleleDrift]]'s re-derivation, for callers
-    * that want the recomputed allele count ATTACHED to every row of the
-    * frame (in-scope rows get the site count, out-of-scope rows get
-    * NULL) instead of a filtered drift report. One window over the
-    * UNFILTERED frame replaces filter -> window -> join-back-on-vid —
-    * r17 (guide §2.4 remove shuffles outright): q106 used the
-    * join-back twice (fixture build and fix application), paying the
-    * site-key exchange PLUS two vid exchanges per use; this is the
-    * site-key exchange alone. Equivalence with
-    * filter(percent>0) -> [[numAlleleDrift]] -> join on unique vid is
-    * exact: the count counts only in-scope rows, the ref-allele bump
-    * sees only in-scope rows, and out-of-scope rows (which the
-    * filtered form never emits, so the join-back left NULL) get NULL
-    * here. Pinned in FixupDriftSpec. */
+    * reference allele. Attached to every row of the frame: in-scope
+    * rows get the site count, out-of-scope rows (percent-read <= 0,
+    * which the job's WHERE clause never touches) get NULL. One window
+    * over the unfiltered frame — the shuffle is the reference's
+    * ORDER BY sample,chromosome,start_pos cursor, keyed identically —
+    * whose count and ref-allele bump see only in-scope rows. */
   def numAlleleRecomputed: Column = {
     val w = Window.partitionBy(
       col("sample_id"), col("chromosome"), col("start_pos"))
@@ -130,13 +107,4 @@ object Fixup {
   def zygosityPercentScope(variants: DataFrame): DataFrame =
     variants.filter(col("variant_type") === "snv" &&
       !(col("zygosity_percent_read") <=> col("var_freq")))
-
-  /** The gender-free status ladder that fixup uses
-    * (`ZygosityPercReadFixUp.getZygosity:130-137` — unlike the loader's
-    * `ZygosityFunctions.zygosityStatus`, no hemizygous branch). */
-  def zygosityLadder(pct: Column): Column =
-    when(pct === ZygosityFunctions.HomozygousPercent, ZygosityFunctions.Homozygous)
-      .when(pct >= ZygosityFunctions.PossiblyHomozygousPercent,
-        ZygosityFunctions.PossiblyHomozygous)
-      .otherwise(ZygosityFunctions.Heterozygous)
 }

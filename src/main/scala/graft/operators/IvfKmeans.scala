@@ -313,8 +313,9 @@ object IvfKmeans {
     * the (vec_id, embedding) relation to train on — a table name or a
     * parenthesized subquery; `pfx` prefixes every emitted CTE name so
     * a SECOND training chain (q124's retrain on the committed corpus)
-    * can coexist with the first in one oracle. Defaults leave every
-    * existing gate's SQL unchanged. */
+    * can coexist with the first in one oracle. The centroid CTEs are
+    * MATERIALIZED: DuckDB would otherwise inline the chain, and re-run
+    * every iteration, at each reference to `c$iters`. */
   def lloydCtes(k: Int, iters: Int, dim: Int, offset: Long,
                 where: String = "", src: String = "embeddings",
                 pfx: String = ""): String = {
@@ -322,7 +323,7 @@ object IvfKmeans {
       s"""${pfx}q AS (
          |  SELECT vec_id, ${quantizeSql("embedding", offset)} AS qv
          |  FROM $src$where),
-         |${pfx}c0 AS (SELECT vec_id AS cid, qv AS cqv FROM ${pfx}q ORDER BY vec_id LIMIT $k)""".stripMargin
+         |${pfx}c0 AS MATERIALIZED (SELECT vec_id AS cid, qv AS cqv FROM ${pfx}q ORDER BY vec_id LIMIT $k)""".stripMargin
     val steps = (1 to iters).map { t =>
       s"""${pfx}d$t AS (
          |  SELECT q.vec_id, q.qv, c.cid,
@@ -338,7 +339,7 @@ object IvfKmeans {
          |          unnest(generate_series(1, $dim)) AS dim
          |        FROM ${pfx}a$t WHERE rn = 1)
          |  GROUP BY cid, dim),
-         |${pfx}c$t AS (SELECT cid, list(sd // n ORDER BY dim) AS cqv FROM ${pfx}s$t GROUP BY cid)""".stripMargin
+         |${pfx}c$t AS MATERIALIZED (SELECT cid, list(sd // n ORDER BY dim) AS cqv FROM ${pfx}s$t GROUP BY cid)""".stripMargin
     }
     (head +: steps).mkString(",\n")
   }
@@ -421,13 +422,14 @@ object IvfKmeans {
        |  WHERE grp = 0 OR rn <= $cap)""".stripMargin
 
   /** Final-assignment CTE against `c$iters` → `afin` (vec_id, qv,
-    * cell). Append after [[lloydCtes]]. */
+    * cell), MATERIALIZED for its several readers. Append after
+    * [[lloydCtes]]. */
   def assignCte(iters: Int, dim: Int): String =
     s"""dfin AS (
        |  SELECT q.vec_id, q.qv, c.cid,
        |    ${distSql("q.qv", "c.cqv", dim)} AS dist
        |  FROM q, c$iters c),
-       |afin AS (
+       |afin AS MATERIALIZED (
        |  SELECT vec_id, qv, cid AS cell FROM (
        |    SELECT vec_id, qv, cid,
        |      row_number() OVER (PARTITION BY vec_id ORDER BY dist, cid) AS rn

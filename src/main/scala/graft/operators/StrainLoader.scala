@@ -222,7 +222,11 @@ object StrainLoader {
   def variantLoad(spark: SparkSession, out: Out, p: Paths, genders: Map[String, String],
                   rewave: Boolean, obsCf2: Observation,
                   obsWave: Observation): Long = {
-    val cf2 = Cf2.read(spark, out.cf2)
+    val raw = Cf2.read(spark, out.cf2)
+    // a wave with no called allele writes no strain=<s> directory, so
+    // its (empty) CF2 read has no partition column
+    val cf2 = (if (raw.columns.contains("strain")) raw
+               else raw.withColumn("strain", lit(null).cast("string")))
       .observe(obsCf2, count(lit(1)).as("cf2_rows"))
       .withColumn("ref_nuc", coalesce(col("ref_nuc"), lit("")))
       .withColumn("var_nuc", coalesce(col("var_nuc"), lit("")))
@@ -339,7 +343,9 @@ object StrainLoader {
     private def l(o: String, k: String): Long = {
       val r = scala.concurrent.Await.result(obs(o).future,
         scala.concurrent.duration.Duration(60, "s"))
-      Option(r.getAs[Any](k)).map(_.asInstanceOf[Number].longValue).getOrElse(0L)
+      // a job over an empty input may report no row at all
+      Option(r.schema).filter(_.fieldNames.contains(k)).flatMap(_ => Option(r.getAs[Any](k)))
+        .map(_.asInstanceOf[Number].longValue).getOrElse(0L)
     }
     def counters(): Counters = Counters(
       l("in", "rows_in"), l("in", "hom_ref"), l("in", "missing"), l("in", "short"),

@@ -1,7 +1,11 @@
 package graft.queries
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.Column
 import graft.functions.{DnaFunctions, VariantFunctions, ZygosityFunctions}
+import graft.functions.DnaFunctions.{reverseComplementSql, translateCodonSql, translateDnaSql}
+import graft.functions.VariantFunctions.{frameshiftFlagSql, synStatusSql}
+import graft.functions.ZygosityFunctions._
 import graft.operators.RangeJoin
 
 /** Genomic operator coverage over the synthetic variant/gene tables
@@ -11,9 +15,7 @@ import graft.operators.RangeJoin
   */
 object QueriesGenomic {
 
-  /** DuckDB 'snv/ins/del' CASE mirroring VariantFunctions.variantType. */
-  private val vtypeSql =
-    "CASE WHEN ref_nuc <> '' AND var_nuc <> '' THEN 'snv' WHEN ref_nuc = '' THEN 'ins' ELSE 'del' END"
+  private val vtypeSql = VariantFunctions.variantTypeSql("ref_nuc", "var_nuc")
 
   private def withVG(body: String): String =
     s"WITH variants AS (${Synthetic.variantsSql}), genes AS (${Synthetic.genesSql})\n$body"
@@ -21,57 +23,31 @@ object QueriesGenomic {
   private def withV(body: String): String =
     s"WITH variants AS (${Synthetic.variantsSql})\n$body"
 
-  /** DuckDB codon CASE expression over variable `c`. */
-  private[queries] def codonCaseSql(c: String): String = {
-    val whens = DnaFunctions.CodonTable.toSeq.sortBy(_._1)
-      .map { case (codon, aa) => s"WHEN '$codon' THEN '$aa'" }.mkString(" ")
-    s"CASE $c $whens ELSE 'X' END"
-  }
+  /** Synthetic DNA of `len` bases per part row: base i is
+    * ACGT[(p_partkey * 7 + i * 13) % 4]. [[partDnaSql]] is its twin. */
+  private def partDna(len: Column): Column =
+    array_join(transform(sequence(lit(1), len),
+      i => element_at(split(lit("ACGT"), ""), ((col("p_partkey") * 7 + i * 13) % 4).cast("int") + 1)),
+      "")
 
-  /** DuckDB CTEs `ori`, `fin`, `aa` and `codon` over `src`, a relation
-    * with (strand, cds, rel_pos, var_base) plus the `keep` columns: the
-    * oracle of `CdsAssembly.codonEffect`, by a different algorithm. It
-    * applies the SNV to the whole CDS, reverse-complements both on '-',
-    * and translates the `aa_pos`-th codon of each. `codon` has `keep`,
-    * strand, rel2, triplet_error, aa_pos, ref_aa, var_aa, syn_status. */
-  private[queries] def codonEffectSql(src: String, keep: Seq[String]): String = {
-    val k = keep.map(_ + ", ").mkString
-    val revcomp = (c: String) => s"reverse(translate(upper($c), 'ACGT', 'TGCA'))"
-    s"""ori AS (
-       |  SELECT ${k}strand,
-       |    CASE WHEN strand = '-' THEN ${revcomp("cds")} ELSE cds END AS cds2,
-       |    CASE WHEN strand = '-' THEN ${revcomp("var_cds")} ELSE var_cds END AS var_cds2,
-       |    CASE WHEN strand = '-' THEN length(cds) - rel_pos + 1 ELSE rel_pos END AS rel2
-       |  FROM (SELECT *, substr(cds, 1, CAST(rel_pos - 1 AS INT)) || var_base ||
-       |          substr(cds, CAST(rel_pos + 1 AS INT)) AS var_cds FROM $src)),
-       |fin AS (
-       |  SELECT *, CASE WHEN rel2 > 3 * (length(cds2) // 3) THEN 'T' ELSE 'F' END AS triplet_error,
-       |    CASE WHEN rel2 > 3 * (length(cds2) // 3) THEN 0 ELSE (rel2 + 2) // 3 END AS aa_pos
-       |  FROM ori),
-       |aa AS (
-       |  SELECT ${k}strand, rel2, triplet_error, CAST(aa_pos AS BIGINT) AS aa_pos,
-       |    CASE WHEN triplet_error = 'T' THEN 'skipped'
-       |         ELSE ${codonCaseSql("substr(cds2, CAST(3 * aa_pos - 2 AS INT), 3)")} END AS ref_aa,
-       |    CASE WHEN triplet_error = 'T' THEN 'skipped'
-       |         ELSE ${codonCaseSql("substr(var_cds2, CAST(3 * aa_pos - 2 AS INT), 3)")} END AS var_aa
-       |  FROM fin),
-       |codon AS (
-       |  SELECT *, CASE WHEN triplet_error = 'T' THEN 'skipped'
-       |                 WHEN ref_aa = 'X' OR var_aa = 'X' THEN 'unassignable'
-       |                 WHEN ref_aa = var_aa THEN 'synonymous'
-       |                 ELSE 'nonsynonymous' END AS syn_status
-       |  FROM aa)""".stripMargin
-  }
+  private def partDnaSql(len: String): String =
+    s"""list_aggregate(
+       |    [substr('ACGT', CAST((p_partkey * 7 + i * 13) % 4 AS INT) + 1, 1)
+       |     for i in generate_series(1, $len)],
+       |    'string_agg', '')""".stripMargin
 
-  /** Shared DuckDB fragment: synthetic DNA per part row (must mirror the
-    * Spark derivation in q28 below). */
+  /** The q28/q29 DNA: 6, 9, 12 or 15 bases per part. */
+  private val dnaLen = lit(3) * (lit(2) + (col("p_partkey") % 4).cast("int"))
   private val dnaSqlCte =
-    """SELECT p_partkey,
-      |  list_aggregate(
-      |    [substr('ACGT', CAST((p_partkey * 7 + i * 13) % 4 AS INT) + 1, 1)
-      |     for i in generate_series(1, 3 * (2 + CAST(p_partkey % 4 AS INT)))],
-      |    'string_agg', '') AS dna
-      |FROM part""".stripMargin
+    s"SELECT p_partkey, ${partDnaSql("3 * (2 + CAST(p_partkey % 4 AS INT))")} AS dna FROM part"
+
+  /** q32's VCF-style alleles: the synthetic indel with a shared padding
+    * base ACGT[vid % 4] in front, in both engines. */
+  private val vcfAlleleCols: Seq[(String, String)] = {
+    val pad = "substr('ACGT', CAST(vid % 4 AS INT) + 1, 1)"
+    Seq("vcf_ref" -> s"CASE WHEN kind = 0 THEN $pad ELSE concat($pad, ref_nuc) END",
+      "vcf_var" -> s"CASE WHEN kind = 0 THEN concat($pad, var_nuc) ELSE $pad END")
+  }
 
   val all: Seq[Q] = Seq(
 
@@ -101,9 +77,8 @@ object QueriesGenomic {
           .orderBy(col("variant_type")),
       Some(withV(
         s"""SELECT $vtypeSql AS variant_type,
-           |  CAST(sum(CASE WHEN ref_nuc <> '' AND var_nuc <> '' THEN start_pos + 1
-           |                WHEN ref_nuc = '' THEN start_pos
-           |                ELSE start_pos + length(ref_nuc) END) AS BIGINT) AS sum_end_pos,
+           |  CAST(sum(${VariantFunctions.endPosSql("start_pos", "ref_nuc", "var_nuc")}) AS BIGINT)
+           |    AS sum_end_pos,
            |  count(*) AS cnt
            |FROM variants GROUP BY 1 ORDER BY 1""".stripMargin))),
 
@@ -144,44 +119,27 @@ object QueriesGenomic {
           .orderBy(col("zygosity_status"), col("zygosity_poss_error"),
             col("zygosity_in_pseudo"), col("zygosity_ref_allele")),
       Some(withV(
-        """SELECT zygosity_status, zygosity_poss_error, zygosity_in_pseudo, zygosity_ref_allele,
-          |  count(*) AS cnt, CAST(sum(pct_int) AS BIGINT) AS sum_pct,
-          |  CAST(sum(num_allele) AS BIGINT) AS sum_num_allele
-          |FROM (
-          |  SELECT *,
-          |    CAST(floor(pct + 0.5) AS INT) AS pct_int,
-          |    CASE WHEN hemi THEN
-          |      CASE WHEN pct = 100 THEN 'hemizygous'
-          |           WHEN pct >= 85 THEN 'probably hemizygous'
-          |           ELSE 'possibly hemizygous' END
-          |    ELSE
-          |      CASE WHEN pct = 100 THEN 'homozygous'
-          |           WHEN pct >= 85 THEN 'possibly homozygous'
-          |           ELSE 'heterozygous' END
-          |    END AS zygosity_status,
-          |    CASE WHEN pct <= 15 THEN 'Y' ELSE 'N' END AS zygosity_poss_error,
-          |    CASE WHEN male_sex_chr AND in_par THEN 'Y' ELSE 'N' END AS zygosity_in_pseudo,
-          |    CASE WHEN ref_nuc = 'A' AND count_a > 0 THEN 'Y'
-          |         WHEN ref_nuc = 'C' AND count_c > 0 THEN 'Y'
-          |         WHEN ref_nuc = 'G' AND count_g > 0 THEN 'Y'
-          |         WHEN ref_nuc = 'T' AND count_t > 0 THEN 'Y' ELSE 'N' END AS zygosity_ref_allele,
-          |    (CASE WHEN count_a > 0 THEN 1 ELSE 0 END + CASE WHEN count_c > 0 THEN 1 ELSE 0 END
-          |     + CASE WHEN count_g > 0 THEN 1 ELSE 0 END + CASE WHEN count_t > 0 THEN 1 ELSE 0 END) AS num_allele
-          |  FROM (
-          |    SELECT *,
-          |      CASE WHEN total > 0 THEN (var_count * 100.0) / total ELSE 0.0 END AS pct,
-          |      (gender IN ('M','P') AND chromosome IN ('X','Y')) AS male_sex_chr,
-          |      ((chromosome = 'X' AND ((start_pos BETWEEN 1 AND 2709520) OR (start_pos BETWEEN 154584238 AND 154913754)))
-          |       OR (chromosome = 'Y' AND ((start_pos BETWEEN 1 AND 2709520) OR (start_pos BETWEEN 57443438 AND 57772954)))) AS in_par,
-          |      (male_sex_chr AND NOT in_par) AS hemi
-          |    FROM (
-          |      SELECT *, count_a + count_c + count_g + count_t AS total,
-          |        CASE var_nuc WHEN 'A' THEN count_a WHEN 'C' THEN count_c
-          |                     WHEN 'G' THEN count_g WHEN 'T' THEN count_t ELSE 0 END AS var_count
-          |      FROM variants WHERE kind >= 2)))
-          |WHERE var_count > 0
-          |GROUP BY 1, 2, 3, 4
-          |ORDER BY 1, 2, 3, 4""".stripMargin))),
+        s"""SELECT zygosity_status, zygosity_poss_error, zygosity_in_pseudo, zygosity_ref_allele,
+           |  count(*) AS cnt, CAST(sum(${percentIntSql("pct")}) AS BIGINT) AS sum_pct,
+           |  CAST(sum(${numAlleleSql("count_a", "count_c", "count_g", "count_t")}) AS BIGINT)
+           |    AS sum_num_allele
+           |FROM (
+           |  SELECT *,
+           |    ${zygosityStatusSql("pct", "chromosome", "start_pos", "gender")} AS zygosity_status,
+           |    ${possibleErrorFlagSql("pct")} AS zygosity_poss_error,
+           |    ${inPseudoFlagSql("chromosome", "start_pos", "gender")} AS zygosity_in_pseudo,
+           |    ${refAlleleFlagSql("ref_nuc", "count_a", "count_c", "count_g", "count_t")}
+           |      AS zygosity_ref_allele
+           |  FROM (
+           |    SELECT *, ${percentReadSql("var_count", "count_a + count_c + count_g + count_t")} AS pct
+           |    FROM (
+           |      SELECT *,
+           |        CASE var_nuc WHEN 'A' THEN count_a WHEN 'C' THEN count_c
+           |                     WHEN 'G' THEN count_g WHEN 'T' THEN count_t ELSE 0 END AS var_count
+           |      FROM variants WHERE kind >= 2)))
+           |WHERE var_count > 0
+           |GROUP BY 1, 2, 3, 4
+           |ORDER BY 1, 2, 3, 4""".stripMargin))),
 
     // X3 indel path.
     Q("q24_zygosity_indel",
@@ -198,34 +156,19 @@ object QueriesGenomic {
             sum(col("zygosity_percent_read").cast("long")).as("sum_pct"))
           .orderBy(col("zygosity_status"), col("zygosity_poss_error"), col("zygosity_in_pseudo")),
       Some(withV(
-        """SELECT zygosity_status, zygosity_poss_error, zygosity_in_pseudo,
-          |  count(*) AS cnt, CAST(sum(pct_int) AS BIGINT) AS sum_pct
-          |FROM (
-          |  SELECT *,
-          |    CAST(floor(pct + 0.5) AS INT) AS pct_int,
-          |    CASE WHEN hemi THEN
-          |      CASE WHEN pct = 100 THEN 'hemizygous'
-          |           WHEN pct >= 85 THEN 'probably hemizygous'
-          |           ELSE 'possibly hemizygous' END
-          |    ELSE
-          |      CASE WHEN pct = 100 THEN 'homozygous'
-          |           WHEN pct >= 85 THEN 'possibly homozygous'
-          |           ELSE 'heterozygous' END
-          |    END AS zygosity_status,
-          |    CASE WHEN pct <= 15 THEN 'Y' ELSE 'N' END AS zygosity_poss_error,
-          |    CASE WHEN male_sex_chr AND in_par THEN 'Y' ELSE 'N' END AS zygosity_in_pseudo,
-          |    CASE WHEN allele_depth = 0 THEN 0 ELSE CAST(floor(pct + 0.5) AS INT) END AS score
-          |  FROM (
-          |    SELECT *,
-          |      CASE WHEN read_depth > 0 THEN (allele_depth * 100.0) / read_depth ELSE 0.0 END AS pct,
-          |      (gender IN ('M','P') AND chromosome IN ('X','Y')) AS male_sex_chr,
-          |      ((chromosome = 'X' AND ((start_pos BETWEEN 1 AND 2709520) OR (start_pos BETWEEN 154584238 AND 154913754)))
-          |       OR (chromosome = 'Y' AND ((start_pos BETWEEN 1 AND 2709520) OR (start_pos BETWEEN 57443438 AND 57772954)))) AS in_par,
-          |      (male_sex_chr AND NOT in_par) AS hemi
-          |    FROM variants WHERE kind < 2))
-          |WHERE score > 0
-          |GROUP BY 1, 2, 3
-          |ORDER BY 1, 2, 3""".stripMargin))),
+        s"""SELECT zygosity_status, zygosity_poss_error, zygosity_in_pseudo,
+           |  count(*) AS cnt, CAST(sum(${percentIntSql("pct")}) AS BIGINT) AS sum_pct
+           |FROM (
+           |  SELECT *,
+           |    ${zygosityStatusSql("pct", "chromosome", "start_pos", "gender")} AS zygosity_status,
+           |    ${possibleErrorFlagSql("pct")} AS zygosity_poss_error,
+           |    ${inPseudoFlagSql("chromosome", "start_pos", "gender")} AS zygosity_in_pseudo
+           |  FROM (
+           |    SELECT *, ${percentReadSql("allele_depth", "read_depth")} AS pct
+           |    FROM variants WHERE kind < 2))
+           |WHERE allele_depth <> 0 AND ${percentIntSql("pct")} > 0
+           |GROUP BY 1, 2, 3
+           |ORDER BY 1, 2, 3""".stripMargin))),
 
     // J1 left-outer interval join -> GENIC/INTERGENIC per variant.
     Q("q25_genic_status",
@@ -351,21 +294,13 @@ object QueriesGenomic {
     Q("q28_translate_dna",
       (spark, dir) =>
         table(spark, dir, "part")
-          .select(col("p_partkey"),
-            array_join(transform(
-              sequence(lit(1), lit(3) * (lit(2) + (col("p_partkey") % 4).cast("int"))),
-              i => element_at(split(lit("ACGT"), ""), ((col("p_partkey") * 7 + i * 13) % 4).cast("int") + 1)),
-              "").as("dna"))
+          .select(col("p_partkey"), partDna(dnaLen).as("dna"))
           .withColumn("protein", DnaFunctions.translateDna(col("dna")))
           .filter(col("p_partkey") % 20 === 0)
           .select(col("p_partkey"), col("dna"), col("protein"))
           .orderBy(col("p_partkey")),
       Some(s"""WITH dna_t AS ($dnaSqlCte)
-              |SELECT p_partkey, dna,
-              |  list_aggregate(
-              |    [${codonCaseSql("substr(dna, (j - 1) * 3 + 1, 3)")}
-              |     for j in generate_series(1, length(dna) // 3)],
-              |    'string_agg', '') AS protein
+              |SELECT p_partkey, dna, ${translateDnaSql("dna")} AS protein
               |FROM dna_t
               |WHERE p_partkey % 20 = 0
               |ORDER BY p_partkey""".stripMargin)),
@@ -374,11 +309,7 @@ object QueriesGenomic {
     Q("q29_reverse_complement",
       (spark, dir) =>
         table(spark, dir, "part")
-          .select(col("p_partkey"),
-            array_join(transform(
-              sequence(lit(1), lit(3) * (lit(2) + (col("p_partkey") % 4).cast("int"))),
-              i => element_at(split(lit("ACGT"), ""), ((col("p_partkey") * 7 + i * 13) % 4).cast("int") + 1)),
-              "").as("dna"))
+          .select(col("p_partkey"), partDna(dnaLen).as("dna"))
           .withColumn("revcomp", DnaFunctions.reverseComplement(col("dna")))
           .withColumn("involution_ok",
             (DnaFunctions.reverseComplement(col("revcomp")) === col("dna")).cast("int").cast("long"))
@@ -386,8 +317,8 @@ object QueriesGenomic {
           .select(col("p_partkey"), col("revcomp"), col("involution_ok"))
           .orderBy(col("p_partkey")),
       Some(s"""WITH dna_t AS ($dnaSqlCte)
-              |SELECT p_partkey, reverse(translate(dna, 'ACGT', 'TGCA')) AS revcomp,
-              |  CAST(CASE WHEN reverse(translate(reverse(translate(dna, 'ACGT', 'TGCA')), 'ACGT', 'TGCA')) = dna
+              |SELECT p_partkey, ${reverseComplementSql("dna")} AS revcomp,
+              |  CAST(CASE WHEN ${reverseComplementSql(reverseComplementSql("dna"))} = dna
               |    THEN 1 ELSE 0 END AS BIGINT) AS involution_ok
               |FROM dna_t
               |WHERE p_partkey % 20 = 0
@@ -406,7 +337,7 @@ object QueriesGenomic {
           .orderBy(col("variant_type"), col("frameshift")),
       Some(withV(
         s"""SELECT $vtypeSql AS variant_type,
-           |  CASE WHEN abs(length(ref_nuc) - length(var_nuc)) % 3 <> 0 THEN 'T' ELSE 'F' END AS frameshift,
+           |  ${frameshiftFlagSql("ref_nuc", "var_nuc")} AS frameshift,
            |  count(*) AS cnt
            |FROM variants GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin))),
 
@@ -414,10 +345,7 @@ object QueriesGenomic {
     Q("q31_syn_status",
       (spark, dir) => {
         val d = table(spark, dir, "part")
-          .select(col("p_partkey"),
-            array_join(transform(sequence(lit(1), lit(3)),
-              i => element_at(split(lit("ACGT"), ""), ((col("p_partkey") * 7 + i * 13) % 4).cast("int") + 1)),
-              "").as("ref_codon"))
+          .select(col("p_partkey"), partDna(lit(3)).as("ref_codon"))
           .withColumn("mut_pos", (col("p_partkey") % 3).cast("int") + 1)
           .withColumn("mut_base",
             element_at(split(lit("ACGT"), ""), ((col("p_partkey") * 11) % 4).cast("int") + 1))
@@ -434,9 +362,7 @@ object QueriesGenomic {
           .orderBy(col("syn_status"))
       },
       Some(s"""WITH d AS (
-              |  SELECT p_partkey,
-              |    list_aggregate([substr('ACGT', CAST((p_partkey * 7 + i * 13) % 4 AS INT) + 1, 1)
-              |                    for i in generate_series(1, 3)], 'string_agg', '') AS ref_codon,
+              |  SELECT p_partkey, ${partDnaSql("3")} AS ref_codon,
               |    CAST(p_partkey % 3 AS INT) + 1 AS mut_pos,
               |    substr('ACGT', CAST((p_partkey * 11) % 4 AS INT) + 1, 1) AS mut_base
               |  FROM part),
@@ -444,57 +370,36 @@ object QueriesGenomic {
               |  SELECT *, substr(ref_codon, 1, mut_pos - 1) || mut_base || substr(ref_codon, mut_pos + 1, 3) AS var_codon
               |  FROM d),
               |d3 AS (
-              |  SELECT ${codonCaseSql("ref_codon")} AS ref_aa, ${codonCaseSql("var_codon")} AS var_aa
+              |  SELECT ${translateCodonSql("ref_codon")} AS ref_aa,
+              |    ${translateCodonSql("var_codon")} AS var_aa
               |  FROM d2)
-              |SELECT CASE WHEN ref_aa = 'X' OR var_aa = 'X' THEN 'unassignable'
-              |            WHEN ref_aa = var_aa THEN 'synonymous'
-              |            ELSE 'nonsynonymous' END AS syn_status, count(*) AS cnt
+              |SELECT ${synStatusSql("ref_aa", "var_aa")} AS syn_status, count(*) AS cnt
               |FROM d3 GROUP BY 1 ORDER BY 1""".stripMargin)),
 
     // X7: indel normalization (padding-base encoding).
     Q("q32_indel_normalize",
-      (spark, dir) => {
-        val raw = Synthetic.variants(spark, dir)
+      (spark, dir) =>
+        Synthetic.variants(spark, dir)
           .filter(col("kind") < 2)
-          .select(col("vid"), col("start_pos"), col("kind"),
-            // VCF-style alleles with a shared padding base
-            substring(lit("ACGT"), 1, 1).as("__x"),
-            expr("substr('ACGT', CAST(vid % 4 AS INT) + 1, 1)").as("pad"),
-            col("ref_nuc"), col("var_nuc"))
-          .withColumn("vcf_ref",
-            when(col("kind") === 0, col("pad")).otherwise(concat(col("pad"), col("ref_nuc"))))
-          .withColumn("vcf_var",
-            when(col("kind") === 0, concat(col("pad"), col("var_nuc"))).otherwise(col("pad")))
-          .drop("__x")
-        raw.withColumn("adj",
+          .selectExpr("start_pos" +: vcfAlleleCols.map { case (n, e) => s"$e AS $n" }: _*)
+          .withColumn("adj",
             VariantFunctions.adjustForIndels(col("start_pos"), col("vcf_ref"), col("vcf_var")))
           .select(col("adj.*"))
           .groupBy(col("padding_base"), col("ok"))
           .agg(count(lit(1)).as("cnt"), sum(col("pos")).as("sum_pos"))
-          .orderBy(col("padding_base"), col("ok"))
-      },
-      Some(withV(
-        """SELECT padding_base, ok, count(*) AS cnt, CAST(sum(pos) AS BIGINT) AS sum_pos
-          |FROM (
-          |  SELECT
-          |    CASE WHEN NOT snv AND shared THEN substr(vcf_ref, 1, 1) ELSE NULL END AS padding_base,
-          |    (snv OR shared) AS ok,
-          |    CASE WHEN snv THEN start_pos WHEN shared THEN start_pos + 1 ELSE start_pos END AS pos
-          |  FROM (
-          |    SELECT start_pos, vcf_ref, vcf_var,
-          |      (length(vcf_ref) = 1 AND length(vcf_var) = 1) AS snv,
-          |      (substr(vcf_ref, 1, 1) = substr(vcf_var, 1, 1)
-          |       AND (length(vcf_ref) > 1 OR length(vcf_var) > 1)) AS shared
-          |    FROM (
-          |      SELECT vid, start_pos, kind,
-          |        substr('ACGT', CAST(vid % 4 AS INT) + 1, 1) AS pad,
-          |        CASE WHEN kind = 0 THEN substr('ACGT', CAST(vid % 4 AS INT) + 1, 1)
-          |             ELSE substr('ACGT', CAST(vid % 4 AS INT) + 1, 1) || ref_nuc END AS vcf_ref,
-          |        CASE WHEN kind = 0 THEN substr('ACGT', CAST(vid % 4 AS INT) + 1, 1) || var_nuc
-          |             ELSE substr('ACGT', CAST(vid % 4 AS INT) + 1, 1) END AS vcf_var
-          |      FROM variants WHERE kind < 2)))
-          |GROUP BY padding_base, ok
-          |ORDER BY padding_base, ok""".stripMargin))),
+          .orderBy(col("padding_base"), col("ok")),
+      Some(withV({
+        val adj = VariantFunctions.adjustForIndelsSql("start_pos", "vcf_ref", "vcf_var")
+          .map { case (n, e) => s"$e AS $n" }.mkString(",\n    ")
+        s"""SELECT padding_base, ok, count(*) AS cnt, CAST(sum(pos) AS BIGINT) AS sum_pos
+           |FROM (
+           |  SELECT $adj
+           |  FROM (
+           |    SELECT start_pos, ${vcfAlleleCols.map { case (n, e) => s"$e AS $n" }.mkString(", ")}
+           |    FROM variants WHERE kind < 2))
+           |GROUP BY padding_base, ok
+           |ORDER BY padding_base, ok""".stripMargin
+      }))),
 
     // X8: allele explode with per-allele depth lookup (posexplode +
     // element_at; DuckDB: generate_subscripts over the split list).
@@ -566,8 +471,7 @@ object QueriesGenomic {
           .agg(count(lit(1)).as("cnt"), sum(col("aa_pos").cast("long")).as("sum_aa_pos"))
           .orderBy(col("left_ok"), col("right_ok"), col("stop_in_middle"))
       },
-      Some {
-        val protSql = QueriesGenomic.codonCaseSql("substr(dna, (j - 1) * 3 + 1, 3)")
+      Some(
         s"""WITH dna_t AS (
            |  SELECT p_partkey,
            |    list_aggregate(
@@ -575,11 +479,7 @@ object QueriesGenomic {
            |       FOR i IN generate_series(1, 3 * (4 + CAST(p_partkey % 4 AS INT)))],
            |      'string_agg', '') AS dna
            |  FROM part),
-           |prot AS (
-           |  SELECT p_partkey,
-           |    list_aggregate([$protSql FOR j IN generate_series(1, length(dna) // 3)],
-           |      'string_agg', '') AS protein
-           |  FROM dna_t),
+           |prot AS (SELECT p_partkey, ${translateDnaSql("dna")} AS protein FROM dna_t),
            |st AS (
            |  SELECT p_partkey, protein, length(protein) AS plen,
            |    CAST(p_partkey % length(protein) AS INT) + 1 AS aa_pos
@@ -594,8 +494,7 @@ object QueriesGenomic {
            |  instr(protein, '*') BETWEEN 1 AND plen - 1 AS stop_in_middle,
            |  count(*) AS cnt, CAST(sum(aa_pos) AS BIGINT) AS sum_aa_pos
            |FROM stated_t
-           |GROUP BY 1, 2, 3 ORDER BY 1, 2, 3""".stripMargin
-      }),
+           |GROUP BY 1, 2, 3 ORDER BY 1, 2, 3""".stripMargin)),
 
     // J15: strand lookup — all map rows covering a position, DISTINCT
     // strands concatenated (reference `Polyphen.getStrand:387-410`).

@@ -217,10 +217,7 @@ object QueriesLlm {
     s"""th AS (
        |  SELECT doc_id, list_transform(
        |    list_distinct(string_split_regex(trim(lower(text)), '\\s+')),
-       |    t -> list_reduce(
-       |      list_prepend(CAST(0 AS BIGINT),
-       |        list_transform(string_split_regex(t, ''), c -> CAST(ascii(c) AS BIGINT))),
-       |      (acc, x) -> (acc * 31 + x) % $P)) AS hs
+       |    t -> ${TF.polyHashSql("t")}) AS hs
        |  FROM documents)""".stripMargin
 
   /** The catalog's embedding frame `(vec_id, v)`: the float embedding
@@ -1351,11 +1348,7 @@ object QueriesLlm {
            |  FROM t, LATERAL (SELECT unnest(generate_series(1, len(t), 24)) AS st))
            |SELECT doc_id, chunk_idx, CAST(len(chunk) AS BIGINT) AS n_toks,
            |  list_reduce(list_prepend(CAST(0 AS BIGINT),
-           |    list_transform(chunk, tok ->
-           |      list_reduce(list_prepend(CAST(0 AS BIGINT),
-           |          list_transform(string_split_regex(tok, ''),
-           |            c -> CAST(ascii(c) AS BIGINT))),
-           |        (acc, x) -> (acc * 31 + x) % $P))),
+           |    list_transform(chunk, tok -> ${TF.polyHashSql("tok")})),
            |    (acc, h) -> (acc * 31 + h) % $P) AS chunk_fp
            |FROM ch ORDER BY doc_id, chunk_idx""".stripMargin)),
 
@@ -1365,13 +1358,10 @@ object QueriesLlm {
       (spark, dir) =>
         table(spark, dir, "documents")
           .filter(col("doc_id") % 5 === 0)
-          .select(col("doc_id"), TF.fingerprint(col("text")).as("fp"))
+          .select(col("doc_id"), TF.polyHash(col("text")).as("fp"))
           .orderBy(col("doc_id")),
       Some(
-        """SELECT doc_id,
-          |  list_reduce(list_prepend(CAST(0 AS BIGINT),
-          |    list_transform(string_split_regex(text, ''), c -> CAST(ascii(c) AS BIGINT))),
-          |    (acc, x) -> (acc * 31 + x) % 1000000007) AS fp
+        s"""SELECT doc_id, ${TF.polyHashSql("text")} AS fp
           |FROM documents
           |WHERE doc_id % 5 = 0
           |ORDER BY doc_id""".stripMargin)),
@@ -1556,10 +1546,7 @@ object QueriesLlm {
            |g AS (
            |  SELECT doc_id, split, unnest(list_distinct([
            |    list_reduce(list_prepend(CAST(0 AS BIGINT),
-           |      list_transform(toks[i:i+4], tok ->
-           |        list_reduce(list_prepend(CAST(0 AS BIGINT),
-           |          list_transform(string_split_regex(tok, ''), c -> CAST(ascii(c) AS BIGINT))),
-           |          (acc, x) -> (acc * 31 + x) % $P))),
+           |      list_transform(toks[i:i+4], tok -> ${TF.polyHashSql("tok")})),
            |      (acc, h) -> (acc * 31 + h) % $P)
            |    FOR i IN generate_series(1, len(toks) - 4)])) AS fp
            |  FROM t WHERE len(toks) >= 5)
@@ -2097,10 +2084,7 @@ object QueriesLlm {
            |g AS (
            |  SELECT doc_id, lang, split, unnest(list_distinct([
            |    list_reduce(list_prepend(CAST(0 AS BIGINT),
-           |      list_transform(toks[i:i+4], tok ->
-           |        list_reduce(list_prepend(CAST(0 AS BIGINT),
-           |          list_transform(string_split_regex(tok, ''), c -> CAST(ascii(c) AS BIGINT))),
-           |          (acc, x) -> (acc * 31 + x) % $P))),
+           |      list_transform(toks[i:i+4], tok -> ${TF.polyHashSql("tok")})),
            |      (acc, h) -> (acc * 31 + h) % $P)
            |    FOR i IN generate_series(1, len(toks) - 4)])) AS fp
            |  FROM t WHERE len(toks) >= 5 AND split <> 'val'),
@@ -4357,7 +4341,7 @@ object QueriesLlm {
     Q("q137_multimodal_selective_retract",
       (spark, dir) => {
         val seed = IvfKmeans.unitVectors(table(spark, dir, "documents")
-            .select(col("doc_id").as("vec_id"), TF.fingerprint(col("text")).as("fp"),
+            .select(col("doc_id").as("vec_id"), TF.polyHash(col("text")).as("fp"),
               VF.wordBigramHist(col("text")).as("v"))
             .filter(col("v").isNotNull))
           .localCheckpoint(true) // train + epoch-0 + cover sides + probes
@@ -4460,10 +4444,7 @@ object QueriesLlm {
            |fdh AS (
            |  SELECT * FROM (
            |    SELECT text, rep_id,
-           |      list_reduce(list_prepend(CAST(0 AS BIGINT),
-           |        list_transform(string_split_regex(text, ''),
-           |          c -> CAST(ascii(c) AS BIGINT))),
-           |        (acc, x) -> (acc * 31 + x) % $P) AS fp,
+           |      ${TF.polyHashSql("text")} AS fp,
            |      ${VF.wordBigramHistSql("text")} AS v
            |    FROM dt)
            |  WHERE v IS NOT NULL),

@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.functions.VariantFunctions
+import graft.functions.{TextFunctions, VariantFunctions, ZygosityFunctions}
 import graft.operators.{CdsAssembly, WigParser}
 
 /** The reference's pipeline-shaped operators, re-expressed Spark-first:
@@ -33,13 +33,28 @@ object QueriesPipeline {
   // deterministic per-base DNA, one SNV per transcript landing in exon
   // (tid % n_exons).
 
+  /** The synthetic exon model of q60, q82 and q90, in both engines:
+    * exon `idx` of transcript `tid` starts at [[exonStartSql]] (q82's
+    * and q90's disjoint 250 bp bands) and is [[exonLenSql]] bases long. */
+  private def exonStartSql(tid: String, idx: String): String =
+    s"CAST(37 + $idx * 250 + ($tid * 53) % 190 AS BIGINT)"
+  private def exonLenSql(tid: String, idx: String): String =
+    s"CAST(24 + ($tid * 7 + $idx * 13) % 33 AS INT)"
+
+  /** q82's SNV per part: in exon `p_partkey % n_exons` of its own
+    * transcript, `(p_partkey * 13) % e_len` bases in. */
+  private val q82VariantPosSql: String = {
+    val hk = "p_partkey % (p_partkey % 2 + 2)"
+    s"${exonStartSql("p_partkey", s"($hk)")} + (p_partkey * 13) % ${exonLenSql("p_partkey", s"($hk)")}"
+  }
+
   private def cdsQuery(spark: org.apache.spark.sql.SparkSession, dir: String) = {
     val ex = table(spark, dir, "part").select(
         col("p_partkey").as("tid"),
         (col("p_partkey") % 3 + 2).cast("int").as("n_exons"),
         when(col("p_partkey") % 2 === 1, "-").otherwise("+").as("strand"))
       .withColumn("exon_idx", explode(sequence(lit(0), col("n_exons") - 1)))
-      .withColumn("e_len", (lit(24) + (col("tid") * 7 + col("exon_idx") * 13) % 33).cast("int"))
+      .withColumn("e_len", expr(exonLenSql("tid", "exon_idx")))
       .withColumn("dna", array_join(
         transform(sequence(lit(1), col("e_len")),
           i => element_at(split(lit("ACGT"), ""),
@@ -65,26 +80,22 @@ object QueriesPipeline {
        |    CASE WHEN p_partkey % 2 = 1 THEN '-' ELSE '+' END AS strand
        |  FROM part),
        |ex AS (
-       |  SELECT tid, n_exons, strand, exon_idx,
-       |    CAST(24 + (tid * 7 + exon_idx * 13) % 33 AS INT) AS e_len
+       |  SELECT tid, n_exons, strand, exon_idx, ${exonLenSql("tid", "exon_idx")} AS e_len
        |  FROM t, LATERAL (SELECT unnest(generate_series(0, n_exons - 1)) AS exon_idx)),
-       |exd AS (
+       |exn AS (
        |  SELECT *, list_aggregate(
        |    [substr('ACGT', CAST((tid * 31 + exon_idx * 7 + i * 3) % 4 AS INT) + 1, 1)
        |     FOR i IN generate_series(1, e_len)], 'string_agg', '') AS dna
        |  FROM ex),
+       |${CdsAssembly.assembleSql("exn")},
        |hit AS (
-       |  SELECT tid,
-       |    CAST(coalesce(sum(e_len) OVER (PARTITION BY tid ORDER BY exon_idx
-       |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT)
-       |      + ((tid * 13) % e_len) + 1 AS rel_pos,
+       |  SELECT tid, prior_len + ((tid * 13) % e_len) + 1 AS rel_pos,
        |    substr('ACGT', CAST((tid * 17 + 3) % 4 AS INT) + 1, 1) AS var_base
-       |  FROM exd QUALIFY exon_idx = tid % n_exons),
-       |cds AS (SELECT tid, string_agg(dna, '' ORDER BY exon_idx) AS cds FROM exd GROUP BY tid),
+       |  FROM exd WHERE exon_idx = tid % n_exons),
        |asm AS (
-       |  SELECT t.strand, c.cds, h.rel_pos, h.var_base
-       |  FROM t JOIN cds c ON c.tid = t.tid JOIN hit h ON h.tid = t.tid),
-       |${QueriesGenomic.codonEffectSql("asm", Nil)}
+       |  SELECT c.strand, c.cds, h.rel_pos, h.var_base
+       |  FROM cds c JOIN hit h ON h.tid = c.tid),
+       |${CdsAssembly.codonEffectSql("asm", Nil)}
        |SELECT strand, triplet_error, syn_status,
        |  count(*) AS cnt, CAST(sum(aa_pos) AS BIGINT) AS sum_aa_pos,
        |  CAST(sum(rel2) AS BIGINT) AS sum_rel_pos
@@ -173,23 +184,16 @@ object QueriesPipeline {
   private val fixupOracle: String =
     s"""WITH v AS (SELECT vid, ref_nuc, var_nuc FROM (${Synthetic.variantsSql})),
        |base AS (
-       |  SELECT *, CASE WHEN abs(length(ref_nuc) - length(var_nuc)) % 3 <> 0
-       |    THEN 'T' ELSE 'F' END AS fsc FROM v),
+       |  SELECT *, ${VariantFunctions.frameshiftFlagSql("ref_nuc", "var_nuc")} AS fsc FROM v),
        |stored AS (
        |  SELECT vid, ref_nuc, var_nuc, fsc,
        |    CASE WHEN vid % 7 = 0 THEN 'snp'
-       |         WHEN length(ref_nuc) > 0 AND length(var_nuc) > 0 THEN 'snv'
-       |         WHEN length(ref_nuc) = 0 THEN 'ins'
-       |         ELSE 'del' END AS variant_type,
+       |         ELSE ${VariantFunctions.variantTypeSql("ref_nuc", "var_nuc")} END AS variant_type,
        |    CASE WHEN vid % 11 = 0 THEN (CASE WHEN fsc = 'T' THEN 'F' ELSE 'T' END)
        |         ELSE fsc END AS frameshift
        |  FROM base),
        |vt AS (
-       |  SELECT *, CASE WHEN ref_nuc LIKE '%-%' OR var_nuc LIKE '%-%' THEN 'del'
-       |       WHEN length(ref_nuc) < length(var_nuc) THEN 'ins'
-       |       WHEN length(ref_nuc) > length(var_nuc) THEN 'del'
-       |       WHEN length(ref_nuc) = 1 AND length(var_nuc) = 1 THEN 'snv'
-       |       ELSE NULL END AS recomputed
+       |  SELECT *, ${VariantFunctions.variantTypeFixupSql("ref_nuc", "var_nuc")} AS recomputed
        |  FROM stored)
        |SELECT 'variant_type' AS check_name,
        |  (variant_type IS DISTINCT FROM recomputed) AS drifted,
@@ -221,18 +225,11 @@ object QueriesPipeline {
        |b AS (
        |  SELECT *, CAST(vid % 101 AS INT) AS var_freq,
        |    CASE WHEN vid % 4 = 0 THEN 'Y' ELSE 'N' END AS zra,
-       |    CASE WHEN ref_nuc LIKE '%-%' OR var_nuc LIKE '%-%' THEN 'del'
-       |         WHEN length(ref_nuc) < length(var_nuc) THEN 'ins'
-       |         WHEN length(ref_nuc) > length(var_nuc) THEN 'del'
-       |         WHEN length(ref_nuc) = 1 AND length(var_nuc) = 1 THEN 'snv'
-       |         ELSE NULL END AS variant_type,
+       |    ${VariantFunctions.variantTypeFixupSql("ref_nuc", "var_nuc")} AS variant_type,
        |    CAST(CASE WHEN vid % 19 = 0 THEN (vid % 101 + 7) % 101
        |              ELSE vid % 101 END AS INT) AS zpr
        |  FROM b0),
-       |bz AS (
-       |  SELECT *, CASE WHEN zpr = 100 THEN 'homozygous'
-       |                 WHEN zpr >= 85 THEN 'possibly homozygous'
-       |                 ELSE 'heterozygous' END AS zstat FROM b),
+       |bz AS (SELECT *, ${ZygosityFunctions.statusLadderSql("zpr")} AS zstat FROM b),
        |gt AS (
        |  SELECT bz.vid,
        |    CASE WHEN max(CASE WHEN g.gene_id IS NOT NULL THEN 1 ELSE 0 END) = 1
@@ -267,10 +264,7 @@ object QueriesPipeline {
        |  count(*), CAST(sum(vid) AS BIGINT)
        |FROM st2 WHERE zpr > 0 GROUP BY 1, 2, 3, 4
        |UNION ALL
-       |SELECT 'zygosity_perc_read', true, zstat,
-       |  CASE WHEN var_freq = 100 THEN 'homozygous'
-       |       WHEN var_freq >= 85 THEN 'possibly homozygous'
-       |       ELSE 'heterozygous' END,
+       |SELECT 'zygosity_perc_read', true, zstat, ${ZygosityFunctions.statusLadderSql("var_freq")},
        |  count(*), CAST(sum(vid) AS BIGINT)
        |FROM st2 WHERE variant_type = 'snv' AND zpr <> var_freq
        |GROUP BY 1, 2, 3, 4
@@ -525,7 +519,7 @@ object QueriesPipeline {
               ((col("var_freq") + 7) % 101).cast("int"))
               .otherwise(col("var_freq")))
           .withColumn("zygosity_status",
-            Fixup.zygosityLadder(col("zygosity_percent_read")))
+            ZygosityFunctions.statusLadder(col("zygosity_percent_read")))
         // corruption A: genic truth flipped on vid%13 rows
         val withGenic = Fixup.genicStatusDrift(
             b.withColumn("genic_status", lit("?")), g)
@@ -567,9 +561,10 @@ object QueriesPipeline {
         // (r17: the naFixed join-back that made it THREE consumers is
         // now an inline window, Fixup.numAlleleRecomputed).
         val a = Fixup.genicStatusDrift(stored, g).localCheckpoint(true)
-        val nA = Fixup.numAlleleDrift(stored)
+        val nA = Fixup.drift(stored, "zygosity_num_allele", Fixup.numAlleleRecomputed)
+          .filter(col("zygosity_percent_read") > 0)
         val c = Fixup.zygosityPercentScope(stored)
-          .withColumn("recomputed", Fixup.zygosityLadder(col("var_freq")))
+          .withColumn("recomputed", ZygosityFunctions.statusLadder(col("var_freq")))
           .withColumn("drifted", lit(true))
         // apply all three fixes: genic, then percent/status, then
         // num_allele recomputed over the post-fix percent>0 scope
@@ -583,7 +578,7 @@ object QueriesPipeline {
               .otherwise(col("zygosity_percent_read")))
           .withColumn("zygosity_status",
             when(col("__snvFix"),
-              Fixup.zygosityLadder(col("zygosity_percent_read")))
+              ZygosityFunctions.statusLadder(col("zygosity_percent_read")))
               .otherwise(col("zygosity_status")))
           .drop("__snvFix")
         // num_allele recomputed over the POST-fix percent>0 scope —
@@ -955,9 +950,8 @@ object QueriesPipeline {
           when(col("p_partkey") % 2 === 1, "-").otherwise("+").as("strand"),
           concat(lit("chr"), col("p_partkey") % 25 + 1).as("chr"))
         val ex = t.withColumn("exon_idx", explode(sequence(lit(0), col("n_exons") - 1)))
-          .withColumn("e_start",
-            (lit(37) + col("exon_idx") * 250 + (col("tid") * 53) % 190).cast("long"))
-          .withColumn("e_len", (lit(24) + (col("tid") * 7 + col("exon_idx") * 13) % 33).cast("int"))
+          .withColumn("e_start", expr(exonStartSql("tid", "exon_idx")))
+          .withColumn("e_len", expr(exonLenSql("tid", "exon_idx")))
           .withColumn("e_stop", col("e_start") + col("e_len") - 1)
         // consumed twice (cds aggregation + hits interval join) —
         // materialize once so the chunk join runs a single time
@@ -965,13 +959,10 @@ object QueriesPipeline {
           ex, chunks, W, start = "e_start", stop = "e_stop").localCheckpoint(true))
         // variants: one SNV per origin transcript, then matched to ALL
         // covering exons by (chr, position) — identity forgotten
-        val hk = col("p_partkey") % (col("p_partkey") % 2 + 2)
-        val vlen = lit(24) + (col("p_partkey") * 7 + hk * 13) % 33
         val v = table(spark, dir, "part").select(
           col("p_partkey").as("vid"),
           concat(lit("chr"), col("p_partkey") % 25 + 1).as("v_chr"),
-          (lit(37) + hk * 250 + (col("p_partkey") * 53) % 190
-            + (col("p_partkey") * 13) % vlen).cast("long").as("g_pos"),
+          expr(q82VariantPosSql).as("g_pos"),
           element_at(typedlit(Seq("A", "C", "G", "T")),
             ((col("p_partkey") * 17 + 3) % 4 + 1).cast("int")).as("var_base"))
         val hits = graft.operators.RangeJoin.pointInInterval(
@@ -994,22 +985,15 @@ object QueriesPipeline {
            |  FROM part),
            |ex AS (
            |  SELECT tid, n_exons, strand, chrn, exon_idx,
-           |    CAST(37 + exon_idx * 250 + (tid * 53) % 190 AS BIGINT) AS e_start,
-           |    CAST(24 + (tid * 7 + exon_idx * 13) % 33 AS INT) AS e_len
+           |    ${exonStartSql("tid", "exon_idx")} AS e_start, ${exonLenSql("tid", "exon_idx")} AS e_len
            |  FROM t, LATERAL (SELECT unnest(generate_series(0, n_exons - 1)) AS exon_idx)),
-           |exd AS (
+           |exn AS (
            |  SELECT ex.*, e_start + e_len - 1 AS e_stop,
-           |    substr(cs.seq, CAST(e_start AS INT), e_len) AS dna,
-           |    CAST(coalesce(sum(e_len) OVER (PARTITION BY tid ORDER BY exon_idx
-           |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS prior_len
+           |    substr(cs.seq, CAST(e_start AS INT), e_len) AS dna
            |  FROM ex JOIN chrseq cs ON cs.c = ex.chrn),
-           |cds AS (SELECT tid, strand, string_agg(dna, '' ORDER BY exon_idx) AS cds
-           |        FROM exd GROUP BY tid, strand),
+           |${CdsAssembly.assembleSql("exn")},
            |v AS (
-           |  SELECT p_partkey AS vid, (p_partkey % 25) + 1 AS chrn,
-           |    CAST(37 + (p_partkey % (p_partkey % 2 + 2)) * 250 + (p_partkey * 53) % 190
-           |      + (p_partkey * 13) % (24 + (p_partkey * 7 + (p_partkey % (p_partkey % 2 + 2)) * 13) % 33)
-           |      AS BIGINT) AS g_pos,
+           |  SELECT p_partkey AS vid, (p_partkey % 25) + 1 AS chrn, $q82VariantPosSql AS g_pos,
            |    substr('ACGT', CAST((p_partkey * 17 + 3) % 4 AS INT) + 1, 1) AS var_base
            |  FROM part),
            |hits AS (
@@ -1018,7 +1002,7 @@ object QueriesPipeline {
            |asm AS (
            |  SELECT h.vid, c.strand, c.cds, h.rel_pos, h.var_base
            |  FROM hits h JOIN cds c ON c.tid = h.tid),
-           |${QueriesGenomic.codonEffectSql("asm", Seq("vid"))}
+           |${CdsAssembly.codonEffectSql("asm", Seq("vid"))}
            |SELECT strand, triplet_error, syn_status,
            |  count(*) AS cnt, CAST(sum(aa_pos) AS BIGINT) AS sum_aa_pos,
            |  CAST(sum(rel2) AS BIGINT) AS sum_rel_pos,
@@ -1051,9 +1035,8 @@ object QueriesPipeline {
           (col("p_partkey") % 2 + 2).cast("int").as("n_exons"),
           (col("p_partkey") % 25 + 1).as("chrn"))
         val ex = t.withColumn("exon_idx", explode(sequence(lit(0), col("n_exons") - 1)))
-          .withColumn("start",
-            (lit(37) + col("exon_idx") * 250 + (col("tid") * 53) % 190).cast("long"))
-          .withColumn("e_len", (lit(24) + (col("tid") * 7 + col("exon_idx") * 13) % 33).cast("int"))
+          .withColumn("start", expr(exonStartSql("tid", "exon_idx")))
+          .withColumn("e_len", expr(exonLenSql("tid", "exon_idx")))
           .withColumn("stop", col("start") + col("e_len") - 1)
           .withColumn("chr", concat(lit("chr"), col("chrn")))
         val crossRows = ex.filter(col("tid") % 3 === 0 && col("exon_idx") === 1)
@@ -1073,14 +1056,10 @@ object QueriesPipeline {
         dna.groupBy(col("patched"), col("src_chr"))
           .agg(count(lit(1)).as("n_exons"),
             sum(length(col("dna")).cast("long")).as("sum_len"),
-            sum(graft.functions.TextFunctions.fingerprint(col("dna"))).as("sum_fp"))
+            sum(TextFunctions.polyHash(col("dna"))).as("sum_fp"))
           .orderBy(col("patched"), col("src_chr"))
       },
-      Some {
-        val fp = (c: String) =>
-          s"""list_reduce(list_prepend(CAST(0 AS BIGINT),
-             |  list_transform(string_split_regex($c, ''), ch -> CAST(ascii(ch) AS BIGINT))),
-             |  (acc, x) -> (acc * 31 + x) % 1000000007)""".stripMargin
+      Some(
         s"""WITH ${Synthetic.genomeSql("SELECT n_nationkey + 1 AS c FROM nation", 20)},
            |t AS (
            |  SELECT p_partkey AS tid, CAST(p_partkey % 2 + 2 AS INT) AS n_exons,
@@ -1088,8 +1067,7 @@ object QueriesPipeline {
            |  FROM part),
            |ex AS (
            |  SELECT tid, chrn, exon_idx,
-           |    CAST(37 + exon_idx * 250 + (tid * 53) % 190 AS BIGINT) AS e_start,
-           |    CAST(24 + (tid * 7 + exon_idx * 13) % 33 AS INT) AS e_len
+           |    ${exonStartSql("tid", "exon_idx")} AS e_start, ${exonLenSql("tid", "exon_idx")} AS e_len
            |  FROM t, LATERAL (SELECT unnest(generate_series(0, n_exons - 1)) AS exon_idx)),
            |ex2 AS (SELECT *, e_start + e_len - 1 AS e_stop FROM ex),
            |cross_m AS (
@@ -1111,8 +1089,7 @@ object QueriesPipeline {
            |  FROM patched p JOIN chrseq cs ON cs.c = p.src_chrn)
            |SELECT patched, src_chr, count(*) AS n_exons,
            |  CAST(sum(length(dna)) AS BIGINT) AS sum_len,
-           |  CAST(sum(${fp("dna")}) AS BIGINT) AS sum_fp
-           |FROM dna GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin
-      })
+           |  CAST(sum(${TextFunctions.polyHashSql("dna")}) AS BIGINT) AS sum_fp
+           |FROM dna GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin))
   )
 }

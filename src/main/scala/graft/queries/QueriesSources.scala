@@ -3,7 +3,8 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.operators.StrainLoader
+import graft.functions.{VariantFunctions, ZygosityFunctions}
+import graft.operators.{CdsAssembly, StrainLoader}
 import graft.sources.{Cf2, Fasta, Jdbc, Polyphen, Vcf}
 
 /** File-format source queries — the reference pipeline's *front door*
@@ -99,6 +100,25 @@ object QueriesSources {
 
   private val Cf2Path = s"$FixtureDir/cf2"
   private val Cf2FanPath = s"$FixtureDir/cf2_fanout"
+
+  /** The CF2 columns q79 and q107 write, from the synthetic SNV rows
+    * (`kind >= 2`: ins/del rows' empty alleles would read back as NULL). */
+  private val Cf2FixtureCols: Seq[String] = Seq(
+    "chromosome",
+    "CAST(start_pos AS BIGINT) AS position",
+    "ref_nuc", "var_nuc",
+    "concat('rs', CAST(vid AS STRING)) AS rs_id",
+    "CAST(count_a AS INT) AS reads_a",
+    "CAST(count_c AS INT) AS reads_c",
+    "CAST(count_g AS INT) AS reads_g",
+    "CAST(count_t AS INT) AS reads_t",
+    "CAST(total_depth AS INT) AS total_depth",
+    "concat(chromosome, ':', CAST(start_pos AS STRING)) AS hgvs_name",
+    "CAST(vid % 1000000 AS INT) AS rgd_id",
+    "CAST(allele_depth AS INT) AS allele_depth",
+    "CAST(allele_depth % 5 AS INT) AS allele_count",
+    "CAST(read_depth AS INT) AS read_depth",
+    "'N' AS padding_base")
 
   // q107 (K1 per-strain fan-out): unlike q79's oracle (which re-reads
   // the written .gz files to gate FORMAT interop), this oracle
@@ -418,10 +438,8 @@ object QueriesSources {
       s"SELECT c1 AS chrom, CAST(c2 AS BIGINT) AS pos, c4 AS ref, c5 AS alt, " +
         s"c${10 + i} AS gt, '${ChainGenders(s)}' AS gender FROM raw"
     }.mkString("\n  UNION ALL ")
-    // pseudo-autosomal regions of X and Y (build 36)
-    val par = "(chromosome = 'X' AND (position BETWEEN 1 AND 2709520 OR " +
-      "position BETWEEN 154584238 AND 154913754)) OR (chromosome = 'Y' AND " +
-      "(position BETWEEN 1 AND 2709520 OR position BETWEEN 57443438 AND 57772954))"
+    val adj = VariantFunctions.adjustForIndelsSql("pos", "ref", "va").toMap
+    val status = ZygosityFunctions.zygosityStatusSql("pct", "chromosome", "position", "gender")
     val facts = Seq(
       "rowsIn" -> "SELECT count(*) FROM parsed",
       "homRef" -> "SELECT count(*) FROM parsed WHERE call = '0/0'",
@@ -450,7 +468,7 @@ object QueriesSources {
        |    TRY_CAST(split_part(gt, ':', 3) AS INTEGER) AS dp
        |  FROM long),
        |al AS (
-       |  SELECT *, CASE WHEN dp > 0 THEN adA * 100.0 / dp ELSE 0.0 END AS pct FROM (
+       |  SELECT *, ${ZygosityFunctions.percentReadSql("adA", "dp")} AS pct FROM (
        |    SELECT p.chrom, p.pos, p.ref, p.gender, p.dp, string_split(p.alt, ',')[u.a] AS va,
        |      coalesce(TRY_CAST(p.ad[u.a + 1] AS INTEGER), 0) AS adA
        |    FROM parsed p, LATERAL (
@@ -458,36 +476,24 @@ object QueriesSources {
        |      FROM unnest(string_split(p.call, '/')) t(x)
        |      WHERE TRY_CAST(x AS INTEGER) > 0) u)),
        |conv AS (
-       |  SELECT chrom AS chromosome, gender, pct,
-       |    CASE WHEN indel AND shared THEN pos + 1 ELSE pos END AS position,
-       |    CASE WHEN ins AND shared THEN '' WHEN indel AND shared THEN substr(ref, 2)
-       |         ELSE ref END AS ref_nuc,
-       |    CASE WHEN ins AND shared THEN substr(va, 2) WHEN indel AND shared THEN ''
-       |         ELSE va END AS var_nuc
-       |  FROM (SELECT *, ins OR (length(va) = 1 AND length(ref) > 1) AS indel
-       |        FROM (SELECT *, length(ref) = 1 AND length(va) > 1 AS ins,
-       |                substr(ref, 1, 1) = substr(va, 1, 1) AS shared
-       |              FROM al WHERE pct > 15))),
+       |  SELECT chrom AS chromosome, gender, pct, ${adj("pos")} AS position,
+       |    coalesce(${adj("ref_nuc")}, '') AS ref_nuc, coalesce(${adj("var_nuc")}, '') AS var_nuc
+       |  FROM al WHERE ${ZygosityFunctions.possibleErrorFlagSql("pct")} = 'N'),
        |vars AS (
        |  SELECT chromosome, position, ref_nuc, var_nuc,
-       |    max(CASE WHEN ref_nuc = '' THEN 'ins' WHEN var_nuc = '' THEN 'del'
-       |             ELSE 'snv' END) AS variant_type,
+       |    max(${VariantFunctions.variantTypeSql("ref_nuc", "var_nuc")}) AS variant_type,
        |    count(*) AS n_samples,
-       |    sum(CASE WHEN gender = 'M' AND chromosome IN ('X', 'Y') AND NOT ($par) THEN 0
-       |             WHEN pct < 85 THEN 1 ELSE 0 END) AS n_het,
+       |    sum(CASE WHEN $status = '${ZygosityFunctions.Heterozygous}' THEN 1 ELSE 0 END) AS n_het,
        |    row_number() OVER (ORDER BY chromosome, position, ref_nuc, var_nuc) AS rgd_id
        |  FROM conv GROUP BY 1, 2, 3, 4),
        |${Synthetic.genomeSql(s"SELECT n_nationkey + 1 AS c FROM nation WHERE n_nationkey < $ChainChrs", ChainGenomeLines)},
        |tx AS (SELECT * FROM ${csv("transcripts.tsv", "'tid':'INTEGER','t_chr':'VARCHAR','strand':'VARCHAR','t_start':'BIGINT','t_stop':'BIGINT'")}),
-       |exd AS (
+       |exn AS (
        |  SELECT e.*, t.strand,
-       |    substr(cs.seq, CAST(e.e_start AS INT), CAST(e.e_stop - e.e_start + 1 AS INT)) AS dna,
-       |    coalesce(sum(e.e_stop - e.e_start + 1) OVER (PARTITION BY e.tid ORDER BY e.exon_idx
-       |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS prior_len
+       |    substr(cs.seq, CAST(e.e_start AS INT), CAST(e.e_stop - e.e_start + 1 AS INT)) AS dna
        |  FROM ${csv("exons.tsv", "'tid':'INTEGER','exon_idx':'INTEGER','e_chr':'VARCHAR','e_start':'BIGINT','e_stop':'BIGINT'")} e
        |  JOIN tx t USING (tid) JOIN chrseq cs ON CAST(cs.c AS VARCHAR) = e.e_chr),
-       |cds AS (SELECT tid, strand, string_agg(dna, '' ORDER BY exon_idx) AS cds
-       |        FROM exd GROUP BY tid, strand),
+       |${CdsAssembly.assembleSql("exn")},
        |genic AS (
        |  SELECT DISTINCT v.rgd_id FROM vars v
        |  JOIN tx t ON t.t_chr = v.chromosome AND v.position BETWEEN t.t_start AND t.t_stop),
@@ -499,13 +505,12 @@ object QueriesSources {
        |asm AS (
        |  SELECT h.rgd_id, h.tid, c.strand, c.cds, h.rel_pos, h.var_nuc AS var_base
        |  FROM hits h JOIN cds c USING (tid)),
-       |${QueriesGenomic.codonEffectSql("asm", Seq("rgd_id", "tid"))},
+       |${CdsAssembly.codonEffectSql("asm", Seq("rgd_id", "tid"))},
        |vt AS (
        |  SELECT h.rgd_id, c.aa_pos,
        |    CASE WHEN length(h.ref_nuc) = 1 AND length(h.var_nuc) = 1 THEN c.syn_status
        |         END AS syn_status,
-       |    CASE WHEN abs(length(h.ref_nuc) - length(h.var_nuc)) % 3 <> 0 THEN 'T'
-       |         ELSE 'F' END AS frameshift
+       |    ${VariantFunctions.frameshiftFlagSql("h.ref_nuc", "h.var_nuc")} AS frameshift
        |  FROM hits h JOIN codon c USING (rgd_id, tid)),
        |base AS (
        |  SELECT v.variant_type,
@@ -592,22 +597,7 @@ object QueriesSources {
         // the gate tests the format machinery, not empty-vs-null lore
         val cf2 = Synthetic.variants(spark, dir)
           .filter(col("kind") >= 2)
-          .selectExpr(
-            "chromosome",
-            "CAST(start_pos AS BIGINT) AS position",
-            "ref_nuc", "var_nuc",
-            "concat('rs', CAST(vid AS STRING)) AS rs_id",
-            "CAST(count_a AS INT) AS reads_a",
-            "CAST(count_c AS INT) AS reads_c",
-            "CAST(count_g AS INT) AS reads_g",
-            "CAST(count_t AS INT) AS reads_t",
-            "CAST(total_depth AS INT) AS total_depth",
-            "concat(chromosome, ':', CAST(start_pos AS STRING)) AS hgvs_name",
-            "CAST(vid % 1000000 AS INT) AS rgd_id",
-            "CAST(allele_depth AS INT) AS allele_depth",
-            "CAST(allele_depth % 5 AS INT) AS allele_count",
-            "CAST(read_depth AS INT) AS read_depth",
-            "'N' AS padding_base")
+          .selectExpr(Cf2FixtureCols: _*)
         Cf2.write(cf2, Cf2Path, compression = "gzip")
         Cf2.read(spark, Cf2Path)
           .groupBy(col("chromosome"))
@@ -638,24 +628,8 @@ object QueriesSources {
         val strains = Seq("BN", "SHR_OLA", "WKY")
         val cf2 = Synthetic.variants(spark, dir)
           .filter(col("kind") >= 2) // SNVs: empty-string-free fixture (q79's rule)
-          .selectExpr(
-            "chromosome",
-            "CAST(start_pos AS BIGINT) AS position",
-            "ref_nuc", "var_nuc",
-            "concat('rs', CAST(vid AS STRING)) AS rs_id",
-            "CAST(count_a AS INT) AS reads_a",
-            "CAST(count_c AS INT) AS reads_c",
-            "CAST(count_g AS INT) AS reads_g",
-            "CAST(count_t AS INT) AS reads_t",
-            "CAST(total_depth AS INT) AS total_depth",
-            "concat(chromosome, ':', CAST(start_pos AS STRING)) AS hgvs_name",
-            "CAST(vid % 1000000 AS INT) AS rgd_id",
-            "CAST(allele_depth AS INT) AS allele_depth",
-            "CAST(allele_depth % 5 AS INT) AS allele_count",
-            "CAST(read_depth AS INT) AS read_depth",
-            "'N' AS padding_base",
-            "CASE CAST(sample_id % 3 AS INT) WHEN 0 THEN 'BN' " +
-              "WHEN 1 THEN 'SHR_OLA' ELSE 'WKY' END AS strain")
+          .selectExpr(Cf2FixtureCols :+ ("CASE CAST(sample_id % 3 AS INT) WHEN 0 THEN 'BN' " +
+            "WHEN 1 THEN 'SHR_OLA' ELSE 'WKY' END AS strain"): _*)
         Cf2.write(cf2, Cf2FanPath, partitionBy = Seq("strain"),
           compression = "gzip")
         strains.map { s =>

@@ -79,7 +79,7 @@ class PropertySpec extends SparkSpec {
       Gen.listOfN(n, Gen.choose(32.toChar, 126.toChar)).map(_.mkString))
     val inputs = sample(txt, 300).distinct
     val rows = inputs.toDF("t")
-      .select($"t", TextFunctions.fingerprint($"t").as("fp")).collect()
+      .select($"t", TextFunctions.polyHash($"t").as("fp")).collect()
     rows.foreach { r =>
       val model = r.getString(0).foldLeft(0L)((acc, ch) => (acc * 31 + ch.toInt) % 1000000007L)
       assert(r.getLong(1) == model, s"text='${r.getString(0)}'")

@@ -40,7 +40,7 @@ class TextVectorFunctionsSpec extends SparkSpec {
     val s = "hello world"
     val expect = s.foldLeft(0L)((acc, ch) => (acc * 31 + ch.toInt) % 1000000007L)
     val got = Seq(s).toDF("t")
-      .select(TextFunctions.fingerprint($"t")).collect().head.getLong(0)
+      .select(TextFunctions.polyHash($"t")).collect().head.getLong(0)
     assert(got == expect)
   }
 

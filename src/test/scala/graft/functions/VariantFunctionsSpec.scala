@@ -91,7 +91,7 @@ class VariantFunctionsSpec extends SparkSpec {
   test("numAllele counts bases with reads") {
     val rows = Seq((0, 0, 0, 0), (1, 0, 2, 0), (5, 5, 5, 5))
       .toDF("a", "c", "g", "t")
-      .select(VariantFunctions.numAllele($"a", $"c", $"g", $"t").as("n"))
+      .select(ZygosityFunctions.numAllele($"a", $"c", $"g", $"t").as("n"))
       .collect().map(_.getInt(0))
     assert(rows.toSeq == Seq(0, 2, 4))
   }

@@ -66,30 +66,30 @@ class FixupDriftSpec extends SparkSpec {
       s"NULL-bound interval leaked into the merge: $merged")
   }
 
-  test("numAlleleRecomputed (inline window) equals the filter->drift->join-back form") {
+  test("numAlleleRecomputed equals the per-site allele counts computed in Scala") {
     val rows = (0 until 600).map { i =>
       val site = rnd.nextInt(60)
       (i.toLong, (site % 5).toLong, s"chr${site % 7}", (site * 13).toLong,
         // ~1/3 out of scope (percent 0), ref=Y sprinkled on BOTH scopes
         // (an out-of-scope Y must not bump the site count)
         if (rnd.nextInt(3) == 0) 0 else 1 + rnd.nextInt(99),
-        if (rnd.nextInt(4) == 0) "Y" else "N",
-        1 + rnd.nextInt(3))
-    }.toDF("vid", "sample_id", "chromosome", "start_pos",
-      "zygosity_percent_read", "zygosity_ref_allele", "zygosity_num_allele")
-
-    // the join-back form q106 used through r16, verbatim
-    val naTruth = Fixup.numAlleleDrift(rows)
-      .select(col("vid"), col("recomputed").as("__na"))
-    val want = rows.join(naTruth, Seq("vid"), "left_outer")
-      .withColumn("na2", coalesce(col("__na"), col("zygosity_num_allele")))
-      .select("vid", "na2")
-    val got = rows
-      .withColumn("na2",
-        coalesce(Fixup.numAlleleRecomputed, col("zygosity_num_allele")))
-      .select("vid", "na2")
-    assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty,
-      "inline window disagrees with the join-back form")
+        if (rnd.nextInt(4) == 0) "Y" else "N")
+    }
+    // NumAllelesFixUp over the percent > 0 scope: the site's in-scope
+    // row count, plus one if any in-scope row there saw the ref allele
+    val inScope = rows.filter(_._5 > 0).groupBy(r => (r._2, r._3, r._4))
+    val want = rows.map { r =>
+      r._1 -> (if (r._5 <= 0) None else {
+        val site = inScope((r._2, r._3, r._4))
+        Some(site.size + (if (site.exists(_._6 == "Y")) 1 else 0))
+      })
+    }.toMap
+    val got = rows.toDF("vid", "sample_id", "chromosome", "start_pos",
+        "zygosity_percent_read", "zygosity_ref_allele")
+      .select(col("vid"), Fixup.numAlleleRecomputed.as("na"))
+      .collect().map(r => r.getLong(0) -> Option(r.getAs[Integer](1)).map(_.intValue)).toMap
+    assert(want.values.exists(_.exists(_ > 1)) && want.values.exists(_.isEmpty))
+    assert(got == want)
   }
 
   test("genicStatusDrift equals the aggregate form (overlapping/nested genes)") {

@@ -153,6 +153,26 @@ class StrainLoaderSpec extends SparkSpec with BeforeAndAfterAll {
     }
   }
 
+  test("a fresh wave with no called allele loads no key and throws nothing") {
+    run // the shared store table is overwritten below, after the other cases
+    val root3 = Files.createTempDirectory("graft-strain-loader-homref")
+    val p3 = StrainLoader.Paths(root3.toFile)
+    try {
+      val homRef = Wave1.map { case (c, pos, ref, alt, _) =>
+        (c, pos, ref, alt, Wave1Strains.map(_ => "0/0:20,0:20")) }
+      write(root3, "homref.vcf", vcf(Wave1Strains, homRef))
+      setup(root3, p3)
+      val (c, rows) = load(root3, p3, "homref", Wave1Strains, rewave = false)
+      assert(c.rowsIn == Wave1.size * Wave1Strains.size && c.homRef == c.rowsIn)
+      assert(c == expected(Wave1Strains, homRef).counters(maxSeedId = 0L, mergeAffected = -1L))
+      assert(c.cf2Rows == 0L && c.waveKeys == 0L && rows.isEmpty)
+      assert(StrainLoader.derbyCount(p3) == 0L)
+    } finally {
+      Jdbc.shutdownEmbeddedDerby(p3.derby)
+      graft.queries.Fixtures.rmrf(root3.toFile)
+    }
+  }
+
   override def afterAll(): Unit = {
     try {
       spark.sql(s"DROP TABLE IF EXISTS ${StrainLoader.StoreTable}")

@@ -226,12 +226,14 @@ object MinhashPipeline {
   def hotCapPairs(sig: DataFrame, cap: Int): DataFrame =
     verifyPairs(cappedCandidates(sig, cap), "doc_a", "doc_b", sig, sig)
 
-  /** Content fingerprint of a list: a left fold — identical shingle
-    * SETS (sorted hash lists: exact copies and J=1.0 rewrites) or
-    * identical quantized vectors share it; differing content almost
-    * surely doesn't. The hot-bucket split key of [[capBands]],
-    * [[verifiedDupPairsCapped]] and `IvfKmeans.capCells`. A shingle
-    * list must be sorted ([[signedDocs]]' `hl` is, by construction).
+  /** Content fingerprint of a list: the left fold
+    * `(acc * 31 + x) % HashMod` from 0, in list order, so equal lists
+    * share it and differing ones almost surely don't. A caller that
+    * wants a SET fingerprint sorts first (shingle sets: exact copies
+    * and J=1.0 rewrites; [[signedDocs]]' `hl` is sorted by
+    * construction). The hot-bucket split key of [[capBands]],
+    * [[verifiedDupPairsCapped]] and `IvfKmeans.capCells`, and the
+    * token-gram and chunk fingerprints of q77, q93 and q104.
     * [[contentFpSql]] is the twin. */
   def contentFp(list: Column): Column =
     aggregate(list, lit(0L), (a, x) => (a * 31 + x) % TF.HashMod)

@@ -112,6 +112,15 @@ object VariantFunctions {
     s"CASE WHEN $refAa = 'X' OR $varAa = 'X' THEN 'unassignable' " +
       s"WHEN $refAa = $varAa THEN 'synonymous' ELSE 'nonsynonymous' END"
 
+  /** Genic status of a variant from `covered`, whether a gene interval
+    * contains it (`RangeJoin.covered`): "GENIC", else "INTERGENIC"
+    * (NULL too). Reference `VariantLoad3.java:294,682-694`. */
+  def genicStatus(covered: Column): Column =
+    when(covered, "GENIC").otherwise("INTERGENIC")
+
+  def genicStatusSql(covered: String): String =
+    s"CASE WHEN $covered THEN 'GENIC' ELSE 'INTERGENIC' END"
+
   /** Indel normalization ("common format" encoding): for an insertion
     * (ref len 1, var longer, shared leading base) emit pos+1, ref null,
     * var = inserted suffix, padding = shared base; symmetric for

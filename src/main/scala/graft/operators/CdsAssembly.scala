@@ -11,8 +11,9 @@ import org.apache.spark.sql.functions._
   * reference `VariantPostProcessing.java:370-551`).
   *
   * The catalog (q60, q82) and [[StrainLoader]] (q84) call [[assemble]]
-  * and [[codonEffect]]; their oracles call the DuckDB twins
-  * [[assembleSql]] and [[codonEffectSql]]. [[OrderedConcat]] is a typed
+  * and [[codonEffect]], q82 and the loader also [[exonHits]]; their
+  * oracles call the DuckDB twins [[assembleSql]], [[exonHitsSql]] and
+  * [[codonEffectSql]]. [[OrderedConcat]] is a typed
   * [[Aggregator]] for the same ordered concatenation with explicit, incremental buffer
   * management (partial aggregation runs map-side, only `finish` sorts);
   * it stays only because perfbench's own copy of the loader and
@@ -51,6 +52,30 @@ object CdsAssembly {
        |  FROM $exons),
        |cds AS (SELECT tid, strand, string_agg(dna, '' ORDER BY exon_idx) AS cds
        |        FROM $exons GROUP BY tid, strand)""".stripMargin
+
+  /** Bin width of [[exonHits]]: exon scale. */
+  private val ExonBin = 256L
+
+  /** Exon hits (`TranscriptFeatureCache`): every row of `points` paired
+    * with each exon of [[assemble]]'s `exons` (e_start, e_stop, tid,
+    * prior_len) on the same chromosome whose bounds contain `pos`
+    * (inclusive). Keeps the point columns and adds `tid` and `rel_pos`,
+    * the point's CDS position on that transcript. */
+  def exonHits(points: DataFrame, exons: DataFrame, pointChr: String, exonChr: String,
+               pos: String): DataFrame =
+    RangeJoin.pointInInterval(points, exons.drop("dna"), Seq(pointChr), Seq(exonChr),
+        pos, "e_start", "e_stop", binSize = ExonBin)
+      .select(points.columns.map(col) :+ col("tid") :+
+        (col("prior_len") + (col(pos) - col("e_start")) + 1).as("rel_pos"): _*)
+
+  /** DuckDB twin of [[exonHits]] over `points` and the `exd` CTE of
+    * [[assembleSql]]: CTE `hits`, the point columns plus `tid` and
+    * `rel_pos`. */
+  def exonHitsSql(points: String, pointChr: String, exonChr: String, pos: String): String =
+    s"""hits AS (
+       |  SELECT p.*, e.tid, e.prior_len + (p.$pos - e.e_start) + 1 AS rel_pos
+       |  FROM $points p JOIN exd e ON e.$exonChr = p.$pointChr
+       |    AND p.$pos BETWEEN e.e_start AND e.e_stop)""".stripMargin
 
   /** Codon effect of the SNV `var_base` at CDS position `rel_pos` of
     * `cds` on a transcript read on `strand`. Adds:

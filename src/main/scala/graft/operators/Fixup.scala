@@ -49,38 +49,26 @@ object Fixup {
       VariantFunctions.frameshiftFlag(col("ref_nuc"), col("var_nuc")))
 
   /** GenicStatusFixUp (`fixup/GenicStatusFixUp.java:103-109`): a
-    * variant is "genic" iff any gene interval contains its position —
-    * the one fixup whose re-derivation is NOT a projection but an
-    * interval join (the reference issues one indexed range query per
-    * row; here it's one binned broadcast join + a per-id aggregation,
-    * the q25 shape). `variants` must carry unique `vid`,
-    * `chromosome`, `start_pos`, `genic_status`; `genes` is the
-    * (g_chr, g_start, g_stop) dim. Compare is effectively the
-    * reference's case-insensitive one (both sides lowercase). */
-  def genicStatusDrift(variants: DataFrame, genes: DataFrame): DataFrame = {
-    // r16 (guide §2.4 remove shuffles outright): the re-derivation is
-    // an EXISTENCE test, so gene identity is irrelevant — merge
-    // overlapping gene intervals per chromosome first (two windows +
-    // one aggregation on the DIM side, which broadcasts anyway). The
-    // merged set is disjoint, so the binned broadcast join emits
-    // exactly one row per variant row and the former per-vid
-    // aggregation + join-back — TWO full-corpus exchanges per call,
-    // and q106 calls this three times — disappear: the whole
-    // re-derivation is now map-side against the broadcast. Identical
-    // result under the existing unique-vid contract (coverage is
-    // preserved exactly by the merge; FixupDriftSpec pins equivalence on
-    // overlapping/nested/duplicate-coverage fixtures).
-    val merged = RangeJoin.mergeIntervals(
-      genes.select(col("g_chr"), col("g_start"), col("g_stop")),
-      Seq("g_chr"), "g_start", "g_stop")
-    RangeJoin.pointInIntervalLeftOuter(
-        variants, merged, Seq("chromosome"), Seq("g_chr"), "start_pos",
-        "g_start", "g_stop", binSize = 100000L, broadcastIntervals = true)
-      .withColumn("recomputed",
-        when(col("g_start").isNotNull, "genic").otherwise("intergenic"))
-      .withColumn("drifted", !(col("genic_status") <=> col("recomputed")))
-      .drop("g_chr", "g_start", "g_stop")
-  }
+    * variant is genic iff some gene interval contains its position —
+    * the one fixup whose re-derivation is not a projection but an
+    * interval lookup (the reference issues one indexed range query per
+    * row; here it is [[genicCovered]], map-side against the broadcast
+    * merged genes). `variants` carries `chromosome`, `start_pos` and
+    * `genic_status`; `genes` is the (g_chr, g_start, g_stop) dim. Both
+    * sides of the compare are [[genicLabel]]'s lower case, the
+    * reference's case-insensitive compare. */
+  def genicStatusDrift(variants: DataFrame, genes: DataFrame): DataFrame =
+    drift(genicCovered(variants, genes), "genic_status", genicLabel(col("covered")))
+      .drop("covered")
+
+  /** `variants` with [[RangeJoin.covered]]'s `covered` against `genes`. */
+  def genicCovered(variants: DataFrame, genes: DataFrame): DataFrame =
+    RangeJoin.covered(variants, genes, Seq("chromosome"), Seq("g_chr"), "start_pos",
+      "g_start", "g_stop")
+
+  /** The fix-up's genic label: [[VariantFunctions.genicStatus]] in lower
+    * case. */
+  def genicLabel(covered: Column): Column = lower(VariantFunctions.genicStatus(covered))
 
   /** NumAllelesFixUp (`fixup/NumAllelesFixUp.java:46-99`): among rows
     * with percent-read > 0, the allele count at one (sample, chr, pos)

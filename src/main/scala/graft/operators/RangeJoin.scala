@@ -46,8 +46,7 @@ object RangeJoin {
 
   /** Left-outer variant: every point kept; interval columns null when no
     * interval covers it. A point can only match intervals in its own bin,
-    * so the left-outer of the binned equi-join is exact (used for
-    * GENIC/INTERGENIC status, `VariantLoad3.java:294,682-694`).
+    * so the left-outer of the binned equi-join is exact.
     */
   def pointInIntervalLeftOuter(points: DataFrame, intervals: DataFrame,
                                pointKeys: Seq[String], intervalKeys: Seq[String],
@@ -57,22 +56,42 @@ object RangeJoin {
     binnedPointJoin(points, intervals, pointKeys, intervalKeys, pos, start, stop,
       binSize, broadcastIntervals, "left_outer")
 
-  /** Left-semi variant: rows of `points` covered by at least one
-    * interval, each emitted once (the existence form — "is this
-    * variant near any splice site / inside any gene" — with no
-    * duplicate-match inflation and no post-join grouping). */
-  def pointInIntervalSemi(points: DataFrame, intervals: DataFrame,
-                          pointKeys: Seq[String], intervalKeys: Seq[String],
-                          pos: String, start: String, stop: String,
-                          binSize: Long = 1000000L,
-                          broadcastIntervals: Boolean = false): DataFrame =
-    binnedPointJoin(points, intervals, pointKeys, intervalKeys, pos, start, stop,
-      binSize, broadcastIntervals, "left_semi")
+  /** Bin width of [[covered]]: gene scale, so a merged interval
+    * replicates onto one or two bins. */
+  private val CoverBin = 100000L
 
-  /** The one binned point join behind the three variants above: an
-    * equi-join on (keys, bin) with the inclusive range as residual.
-    * A semi join outputs only the point side, so there is no bin
-    * column to drop. */
+  /** Every row of `points` once, plus boolean `covered`: some interval
+    * on the same keys contains `pos` (inclusive both ends) — the
+    * genic-status lookup (`GeneCache.getGeneRgdIds`, used by
+    * `VariantLoad3.isGenic` and `GenicStatusFixUp`). The intervals are
+    * merged first ([[mergeIntervals]]), so the broadcast binned
+    * left-outer join matches each point at most once and no per-point
+    * aggregate follows. A point with a NULL key or position is not
+    * covered; an interval with a NULL bound covers nothing. The
+    * interval columns must not clash with the point side. */
+  def covered(points: DataFrame, intervals: DataFrame,
+              pointKeys: Seq[String], intervalKeys: Seq[String],
+              pos: String, start: String, stop: String): DataFrame =
+    binnedPointJoin(points, mergeIntervals(intervals, intervalKeys, start, stop),
+        pointKeys, intervalKeys, pos, start, stop, CoverBin, broadcastIntervals = true,
+        "left_outer")
+      .withColumn("covered", col(start).isNotNull)
+      .drop(intervalKeys :+ start :+ stop: _*)
+
+  /** DuckDB twin of [[covered]]: a boolean expression, true iff some
+    * row of relation `intervals` on the point's keys contains `pos`. A
+    * plain BETWEEN existence test, no merge and no bins; NULL keys,
+    * positions and bounds never compare true, so they give false as in
+    * [[covered]]. Point-side arguments are expressions of the outer
+    * query, interval-side ones columns of `intervals`. */
+  def coveredSql(intervals: String, pointKeys: Seq[String], intervalKeys: Seq[String],
+                 pos: String, start: String, stop: String): String = {
+    val keys = pointKeys.zip(intervalKeys).map { case (pk, ik) => s"iv.$ik = $pk AND " }.mkString
+    s"EXISTS (SELECT 1 FROM $intervals iv WHERE $keys$pos BETWEEN iv.$start AND iv.$stop)"
+  }
+
+  /** The one binned point join behind the lookups above: an
+    * equi-join on (keys, bin) with the inclusive range as residual. */
   private def binnedPointJoin(points: DataFrame, intervals: DataFrame,
                               pointKeys: Seq[String], intervalKeys: Seq[String],
                               pos: String, start: String, stop: String,
@@ -85,8 +104,7 @@ object RangeJoin {
       .foldLeft(
         (floor(points(pos) / binSize) === right("__bin")) &&
           points(pos) >= right(start) && points(pos) <= right(stop))(_ && _)
-    val joined = points.join(right, joinCond, joinType)
-    if (joinType == "left_semi") joined else joined.drop("__bin")
+    points.join(right, joinCond, joinType).drop("__bin")
   }
 
   /** Interval-overlap inner join: pairs where
@@ -123,20 +141,19 @@ object RangeJoin {
     * point lies inside some input interval iff it lies inside exactly
     * ONE merged interval — so a point-in-interval join against the
     * merged set emits at most one row per point, which lets
-    * existence-style consumers (genic/intergenic status) skip the
-    * per-point aggregation + join-back entirely (r16: the q106 fixup
-    * path). Only the key/start/stop columns survive (identity of the
-    * covering interval is gone — by definition of the merge). Both
-    * windows partition by the interval keys: this runs on the DIM side
+    * [[covered]] skip the per-point aggregation and join-back. Only
+    * the key/start/stop columns survive (identity of the covering
+    * interval is gone — by definition of the merge). Both windows
+    * partition by the interval keys: this runs on the DIM side
     * (genes), never the corpus.
     *
-    * NULL bounds are DROPPED up front (r17, ADVICE r16): a NULL-start
-    * interval sorts first (NULLS FIRST), would start a group, and its
-    * stop would feed prevMax — a later interval could merge into it
-    * and inherit coverage no real interval has. A NULL-bound interval
-    * can never contain a point in any downstream range join (NULL
-    * comparisons are never true), so dropping it here preserves the
-    * coverage semantics exactly. */
+    * NULL bounds are DROPPED up front: a NULL-start interval sorts
+    * first (NULLS FIRST), would start a group, and its stop would feed
+    * prevMax — a later interval could merge into it and inherit
+    * coverage no real interval has. A NULL-bound interval can never
+    * contain a point in any downstream range join (NULL comparisons
+    * are never true), so dropping it here preserves the coverage
+    * semantics exactly. */
   def mergeIntervals(intervals: DataFrame, keys: Seq[String],
                      start: String, stop: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window

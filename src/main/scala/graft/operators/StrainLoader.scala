@@ -33,8 +33,8 @@ import graft.streaming.StreamingOps
   *    only its new keys from max+1 ([[StreamingOps.upsertBatch]]).
   *    Writes `wave` (new and matched rows, `is_new`) and appends the new
   *    keys to the store.
-  *  - [[genicJoin]]: GENIC / INTERGENIC of every new key -> `genic`.
-  *  - [[postprocess]]: exon hits of the new keys ([[RangeJoin]]), the CDS
+  *  - [[genicJoin]]: genic status of every new key -> `genic`.
+  *  - [[postprocess]]: exon hits of the new keys ([[CdsAssembly.exonHits]]), the CDS
   *    of every hit transcript -> `cds`, and [[CdsAssembly.codonEffect]]
   *    -> `variant_transcript`. Amino-acid and synonymous columns are null
   *    except for single-base substitutions (an equal-length multi-base
@@ -266,15 +266,13 @@ object StrainLoader {
   private def newVariants(spark: SparkSession, out: Out): DataFrame =
     spark.read.parquet(out.wave).filter(col("is_new"))
 
-  /** operators.genic_join: GENIC / INTERGENIC status of every new
-    * variant from a left-outer point-in-interval join on the genes. */
+  /** operators.genic_join: [[VariantFunctions.genicStatus]] of every
+    * new variant, from [[RangeJoin.covered]] on the genes. */
   def genicJoin(spark: SparkSession, out: Out, p: Paths): Unit =
-    RangeJoin.pointInIntervalLeftOuter(
-        newVariants(spark, out).select("rgd_id", "chromosome", "position"),
+    RangeJoin.covered(newVariants(spark, out).select("rgd_id", "chromosome", "position"),
         spark.read.parquet(p.table("genes")), Seq("chromosome"), Seq("g_chr"),
-        "position", "g_start", "g_stop", binSize = 8192L)
-      .groupBy("rgd_id").agg(count(col("gene_id")).as("n_genes"))
-      .withColumn("genic_status", when(col("n_genes") > 0, "GENIC").otherwise("INTERGENIC"))
+        "position", "g_start", "g_stop")
+      .select(col("rgd_id"), VariantFunctions.genicStatus(col("covered")).as("genic_status"))
       .write.mode("overwrite").parquet(out.genic)
 
   /** operators.postprocess: exon hits of the new variants, the CDS of
@@ -282,12 +280,9 @@ object StrainLoader {
     * VARIANT_TRANSCRIPT. */
   def postprocess(spark: SparkSession, out: Out, p: Paths): Unit = {
     val exd = spark.read.parquet(p.table("exon_dna"))
-    val hits = RangeJoin.pointInInterval(
+    val hits = CdsAssembly.exonHits(
         newVariants(spark, out).select("rgd_id", "chromosome", "position",
-          "ref_nuc", "var_nuc", "variant_type"),
-        exd.drop("dna"), Seq("chromosome"), Seq("e_chr"),
-        "position", "e_start", "e_stop", binSize = 1024L)
-      .withColumn("rel_pos", col("prior_len") + (col("position") - col("e_start")) + 1)
+          "ref_nuc", "var_nuc", "variant_type"), exd, "chromosome", "e_chr", "position")
       .select("rgd_id", "tid", "ref_nuc", "var_nuc", "variant_type", "rel_pos")
       // read twice: the CDS of the hit transcripts and the codon effect
       .localCheckpoint(true)

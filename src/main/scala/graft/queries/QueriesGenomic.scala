@@ -170,33 +170,34 @@ object QueriesGenomic {
            |GROUP BY 1, 2, 3
            |ORDER BY 1, 2, 3""".stripMargin))),
 
-    // J1 left-outer interval join -> GENIC/INTERGENIC per variant.
+    // J1 genic status per variant: RangeJoin.covered and its twin. vid
+    // is NOT row-unique in the synthetic data: a vid is genic iff ANY
+    // of its rows is covered.
     Q("q25_genic_status",
       (spark, dir) => {
         val v = Synthetic.variants(spark, dir)
           .select(col("vid"), col("chromosome"), col("start_pos"))
-        val g = Synthetic.genes(spark, dir)
-        val joined = RangeJoin.pointInIntervalLeftOuter(
-          v, g, Seq("chromosome"), Seq("g_chr"), "start_pos", "g_start", "g_stop",
-          binSize = 100000L, broadcastIntervals = true)
-        joined.groupBy(col("vid"), col("chromosome"))
-          .agg(max(when(col("gene_id").isNotNull, 1).otherwise(0)).as("hit"))
+        RangeJoin.covered(v, Synthetic.genes(spark, dir), Seq("chromosome"), Seq("g_chr"),
+            "start_pos", "g_start", "g_stop")
+          .groupBy(col("vid"), col("chromosome"))
+          .agg(max(col("covered")).as("covered"))
           .select(col("chromosome"),
-            when(col("hit") === 1, "GENIC").otherwise("INTERGENIC").as("genic_status"))
+            VariantFunctions.genicStatus(col("covered")).as("genic_status"))
           .groupBy(col("chromosome"), col("genic_status"))
           .agg(count(lit(1)).as("cnt"))
           .orderBy(col("chromosome"), col("genic_status"))
       },
       Some(withVG(
-        """SELECT chromosome, genic_status, count(*) AS cnt FROM (
-          |  SELECT v.vid, v.chromosome,
-          |    CASE WHEN count(g.gene_id) > 0 THEN 'GENIC' ELSE 'INTERGENIC' END AS genic_status
-          |  FROM variants v
-          |  LEFT JOIN genes g ON v.chromosome = g.g_chr
-          |    AND v.start_pos BETWEEN g.g_start AND g.g_stop
-          |  GROUP BY v.vid, v.chromosome)
-          |GROUP BY chromosome, genic_status
-          |ORDER BY chromosome, genic_status""".stripMargin))),
+        s"""SELECT chromosome, genic_status, count(*) AS cnt FROM (
+           |  SELECT vid, chromosome,
+           |    ${VariantFunctions.genicStatusSql("bool_or(covered)")} AS genic_status
+           |  FROM (
+           |    SELECT vid, chromosome, ${RangeJoin.coveredSql("genes", Seq("v.chromosome"),
+             Seq("g_chr"), "v.start_pos", "g_start", "g_stop")} AS covered
+           |    FROM variants v)
+           |  GROUP BY vid, chromosome)
+           |GROUP BY chromosome, genic_status
+           |ORDER BY chromosome, genic_status""".stripMargin))),
 
     // J1 inner interval join: variants per gene, top 20.
     Q("q26_variants_per_gene",
@@ -229,40 +230,36 @@ object QueriesGenomic {
           .select(col("vid"), col("chromosome"), col("start_pos"))
         val bounds = Synthetic.genes(spark, dir)
           .withColumn("k", explode(sequence(lit(1), lit(3))))
-          .select(col("g_chr"), col("gene_id"),
+          .select(col("g_chr"),
             (col("g_start") + col("k") * expr("(g_stop - g_start) div 4")).as("boundary"))
-          .select(col("g_chr"), col("gene_id"),
-            (col("boundary") - 10).as("b_lo"), (col("boundary") + 10).as("b_hi"))
+          .select(col("g_chr"), (col("boundary") - 10).as("b_lo"), (col("boundary") + 10).as("b_hi"))
         // vid is NOT row-unique in the synthetic data: a vid is Y iff
         // ANY of its rows is covered by ANY boundary, so the per-vid
-        // grouping is load-bearing. (A left-semi + count-distinct
-        // variant was measured no faster — the distinct over all vids
-        // costs what the groupBy did; RangeJoin.pointInIntervalSemi
-        // remains the right shape when no total/grouping is needed.)
-        val joined = RangeJoin.pointInIntervalLeftOuter(
-          v, bounds, Seq("chromosome"), Seq("g_chr"), "start_pos", "b_lo", "b_hi",
-          binSize = 100000L, broadcastIntervals = true)
-        joined.groupBy(col("vid"))
-          .agg(max(when(col("gene_id").isNotNull, 1).otherwise(0)).as("near"))
-          .select(when(col("near") === 1, "Y").otherwise("N").as("near_splice_site"))
+        // grouping is load-bearing.
+        RangeJoin.covered(v, bounds, Seq("chromosome"), Seq("g_chr"), "start_pos",
+            "b_lo", "b_hi")
+          .groupBy(col("vid"))
+          .agg(max(col("covered")).as("near"))
+          .select(when(col("near"), "Y").otherwise("N").as("near_splice_site"))
           .groupBy(col("near_splice_site"))
           .agg(count(lit(1)).as("cnt"))
           .orderBy(col("near_splice_site"))
       },
-      Some(withVG(
-        """SELECT near_splice_site, count(*) AS cnt FROM (
-          |  SELECT v.vid,
-          |    CASE WHEN count(b.gene_id) > 0 THEN 'Y' ELSE 'N' END AS near_splice_site
-          |  FROM variants v
-          |  LEFT JOIN (
-          |    SELECT g_chr, gene_id,
-          |      g_start + k * ((g_stop - g_start) // 4) AS boundary
-          |    FROM genes, (SELECT unnest(generate_series(1, 3)) AS k))
-          |    b ON v.chromosome = b.g_chr
-          |      AND v.start_pos BETWEEN b.boundary - 10 AND b.boundary + 10
-          |  GROUP BY v.vid)
-          |GROUP BY near_splice_site
-          |ORDER BY near_splice_site""".stripMargin))),
+      Some(withVG({
+        val bounds =
+          """(SELECT g_chr, g_start + k * ((g_stop - g_start) // 4) - 10 AS b_lo,
+            |  g_start + k * ((g_stop - g_start) // 4) + 10 AS b_hi
+            |FROM genes, (SELECT unnest(generate_series(1, 3)) AS k))""".stripMargin
+        s"""SELECT near_splice_site, count(*) AS cnt FROM (
+           |  SELECT vid, CASE WHEN bool_or(covered) THEN 'Y' ELSE 'N' END AS near_splice_site
+           |  FROM (
+           |    SELECT vid, ${RangeJoin.coveredSql(bounds, Seq("v.chromosome"), Seq("g_chr"),
+             "v.start_pos", "b_lo", "b_hi")} AS covered
+           |    FROM variants v)
+           |  GROUP BY vid)
+           |GROUP BY near_splice_site
+           |ORDER BY near_splice_site""".stripMargin
+      }))),
 
     // Interval-overlap join (RangeJoin.intervalOverlap): overlapping
     // gene pairs per chromosome. Both sides explode onto bins and the

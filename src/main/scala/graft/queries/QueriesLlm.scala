@@ -31,7 +31,6 @@ object QueriesLlm {
   final case class TypedEv(user_id: Long, ts_micros: Long, event_id: Long, cents: Long)
   final case class TypedUserStats(user_id: Long, n_events: Long, n_incr: Long)
 
-  private val P = TF.HashMod            // 1e9+7
   // dedup-family tuning lives in DedupConfig
   import graft.functions.DedupConfig.{JaccThreshold, sizeRatioOk,
     HotBucketCap, IndexBuckets, VecOffset, SemThreshX1e6, MmThreshX1e6, SemK, SemIters, MmK,
@@ -150,8 +149,8 @@ object QueriesLlm {
       .filter(size(col("t")) >= N)
     t.select(col("doc_id"), col("lang"), col("split"),
         explode(array_distinct(transform(sequence(lit(1), size(col("t")) - (N - 1)),
-          i => aggregate(transform(slice(col("t"), i, lit(N)), tok => TF.polyHash(tok)),
-            lit(0L), (acc, h) => (acc * 31 + h) % P)))).as("fp"))
+          i => contentFp(transform(slice(col("t"), i, lit(N)), tok => TF.polyHash(tok))))))
+          .as("fp"))
       .localCheckpoint(true)
   }
 
@@ -1334,8 +1333,7 @@ object QueriesLlm {
               st => slice(col("t"), st, lit(C)))).as(Seq("chunk_idx", "chunk")))
           .select(col("doc_id"), col("chunk_idx").cast("long").as("chunk_idx"),
             size(col("chunk")).cast("long").as("n_toks"),
-            aggregate(transform(col("chunk"), t => TF.polyHash(t)),
-              lit(0L), (acc, h) => (acc * 31 + h) % P).as("chunk_fp"))
+            contentFp(transform(col("chunk"), t => TF.polyHash(t))).as("chunk_fp"))
           .orderBy(col("doc_id"), col("chunk_idx"))
       },
       Some(
@@ -1347,9 +1345,7 @@ object QueriesLlm {
            |    t[st:st + 31] AS chunk
            |  FROM t, LATERAL (SELECT unnest(generate_series(1, len(t), 24)) AS st))
            |SELECT doc_id, chunk_idx, CAST(len(chunk) AS BIGINT) AS n_toks,
-           |  list_reduce(list_prepend(CAST(0 AS BIGINT),
-           |    list_transform(chunk, tok -> ${TF.polyHashSql("tok")})),
-           |    (acc, h) -> (acc * 31 + h) % $P) AS chunk_fp
+           |  ${contentFpSql(s"list_transform(chunk, tok -> ${TF.polyHashSql("tok")})")} AS chunk_fp
            |FROM ch ORDER BY doc_id, chunk_idx""".stripMargin)),
 
     // -- Rolling-hash document fingerprint (the exact-dedup / shard-key
@@ -1545,9 +1541,7 @@ object QueriesLlm {
            |        FROM documents)),
            |g AS (
            |  SELECT doc_id, split, unnest(list_distinct([
-           |    list_reduce(list_prepend(CAST(0 AS BIGINT),
-           |      list_transform(toks[i:i+4], tok -> ${TF.polyHashSql("tok")})),
-           |      (acc, h) -> (acc * 31 + h) % $P)
+           |    ${contentFpSql(s"list_transform(toks[i:i+4], tok -> ${TF.polyHashSql("tok")})")}
            |    FOR i IN generate_series(1, len(toks) - 4)])) AS fp
            |  FROM t WHERE len(toks) >= 5)
            |SELECT te.doc_id, count(DISTINCT tr.doc_id) AS n_train_docs,
@@ -2083,9 +2077,7 @@ object QueriesLlm {
            |        FROM documents)),
            |g AS (
            |  SELECT doc_id, lang, split, unnest(list_distinct([
-           |    list_reduce(list_prepend(CAST(0 AS BIGINT),
-           |      list_transform(toks[i:i+4], tok -> ${TF.polyHashSql("tok")})),
-           |      (acc, h) -> (acc * 31 + h) % $P)
+           |    ${contentFpSql(s"list_transform(toks[i:i+4], tok -> ${TF.polyHashSql("tok")})")}
            |    FOR i IN generate_series(1, len(toks) - 4)])) AS fp
            |  FROM t WHERE len(toks) >= 5 AND split <> 'val'),
            |hits AS (

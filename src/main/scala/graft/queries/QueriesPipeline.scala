@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.functions.{TextFunctions, VariantFunctions, ZygosityFunctions}
-import graft.operators.{CdsAssembly, WigParser}
+import graft.operators.{CdsAssembly, RangeJoin, WigParser}
 
 /** The reference's pipeline-shaped operators, re-expressed Spark-first:
   * CDS assembly + codon translation (SURVEY §3.3 / A10 / W4 / X18-X21),
@@ -214,6 +214,10 @@ object QueriesPipeline {
 
   // ============ q106: genic/num-allele/zygosity-percent fixups ========
 
+  /** Twin of `Fixup.genicLabel`. */
+  private def genicLabelSql(covered: String): String =
+    s"lower(${VariantFunctions.genicStatusSql(covered)})"
+
   private val fixup2Oracle: String =
     s"""WITH variants AS (${Synthetic.variantsSql}),
        |genes AS (${Synthetic.genesSql}),
@@ -231,18 +235,13 @@ object QueriesPipeline {
        |  FROM b0),
        |bz AS (SELECT *, ${ZygosityFunctions.statusLadderSql("zpr")} AS zstat FROM b),
        |gt AS (
-       |  SELECT bz.vid,
-       |    CASE WHEN max(CASE WHEN g.gene_id IS NOT NULL THEN 1 ELSE 0 END) = 1
-       |      THEN 'genic' ELSE 'intergenic' END AS truth
-       |  FROM bz LEFT JOIN genes g
-       |    ON g.g_chr = bz.chromosome
-       |      AND bz.start_pos BETWEEN g.g_start AND g.g_stop
-       |  GROUP BY bz.vid),
+       |  SELECT *, ${RangeJoin.coveredSql("genes", Seq("bz.chromosome"), Seq("g_chr"),
+         "bz.start_pos", "g_start", "g_stop")} AS covered
+       |  FROM bz),
        |st AS (
-       |  SELECT bz.*, CASE WHEN bz.vid % 13 = 0
-       |      THEN (CASE WHEN truth = 'genic' THEN 'intergenic' ELSE 'genic' END)
-       |      ELSE truth END AS genic_status, truth
-       |  FROM bz JOIN gt ON gt.vid = bz.vid),
+       |  SELECT *, ${genicLabelSql("covered <> (vid % 13 = 0)")} AS genic_status,
+       |    ${genicLabelSql("covered")} AS truth
+       |  FROM gt),
        |na AS (
        |  SELECT vid, CAST(count(*) OVER w
        |      + max(CASE WHEN zra = 'Y' THEN 1 ELSE 0 END) OVER w AS INT) AS na_comp
@@ -475,7 +474,7 @@ object QueriesPipeline {
 
     // §5.5 complete: the three remaining fixups as drift jobs.
     //  - genic_status (GenicStatusFixUp.java:35-109): re-derivation is
-    //    an interval join (binned broadcast, q25's shape), not a
+    //    an interval lookup (RangeJoin.covered, q25's), not a
     //    projection — the most valuable fixup.
     //  - num_allele (NumAllelesFixUp.java:25-110): per-(sample, chr,
     //    pos) site row count + ref-allele bump over the percent>0
@@ -520,27 +519,18 @@ object QueriesPipeline {
               .otherwise(col("var_freq")))
           .withColumn("zygosity_status",
             ZygosityFunctions.statusLadder(col("zygosity_percent_read")))
-        // corruption A: genic truth flipped on vid%13 rows
-        val withGenic = Fixup.genicStatusDrift(
-            b.withColumn("genic_status", lit("?")), g)
+        // corruption A: genic truth flipped on vid%13 rows. Not
+        // checkpointed: one consumer, and the lookup is map-side, so
+        // materializing it would only add a full pass
+        val withGenic = Fixup.genicCovered(b, g)
           .withColumn("genic_status",
-            when(col("vid") % 13 === 0,
-              when(col("recomputed") === "genic", "intergenic")
-                .otherwise("genic"))
-              .otherwise(col("recomputed")))
-          .drop("recomputed", "drifted")
-        // (r17: the r6-era localCheckpoint here is gone — it existed
-        // because naTruth and the stored0 join both consumed this
-        // subtree; the inline-window rewrite below leaves exactly ONE
-        // consumer, and the genic re-derivation is map-side since r16,
-        // so materializing it would only add an extra full pass)
+            Fixup.genicLabel(col("covered") =!= (col("vid") % 13 === 0)))
+          .drop("covered")
         // corruption B: site-count truth (over the stored percent>0
         // scope) bumped by one on vid%17 rows; out-of-scope rows
-        // store the untouched default 1. Inline window form (r17,
-        // Fixup.numAlleleRecomputed): the old filter -> window ->
-        // join-back-on-vid paid the site exchange plus two vid
-        // exchanges in this write job; one unfiltered window is
-        // row-identical under the unique-vid contract.
+        // store the untouched default 1. One unfiltered window
+        // (Fixup.numAlleleRecomputed), row-identical to filter ->
+        // window -> join-back under the unique-vid contract.
         val stored0 = withGenic
           .withColumn("zygosity_num_allele",
             coalesce(Fixup.numAlleleRecomputed +
@@ -558,8 +548,6 @@ object QueriesPipeline {
         // materialized once: `a` (an interval join over the stored
         // parquet) sits under the genic report AND — via fixedAC — the
         // fixed-table write; un-checkpointed it would execute twice
-        // (r17: the naFixed join-back that made it THREE consumers is
-        // now an inline window, Fixup.numAlleleRecomputed).
         val a = Fixup.genicStatusDrift(stored, g).localCheckpoint(true)
         val nA = Fixup.drift(stored, "zygosity_num_allele", Fixup.numAlleleRecomputed)
           .filter(col("zygosity_percent_read") > 0)
@@ -581,28 +569,21 @@ object QueriesPipeline {
               ZygosityFunctions.statusLadder(col("zygosity_percent_read")))
               .otherwise(col("zygosity_status")))
           .drop("__snvFix")
-        // num_allele recomputed over the POST-fix percent>0 scope —
-        // inline window (r17), replacing the second filter -> window ->
-        // join-back-on-vid of this query (fixedAC no longer feeds both
-        // sides of a self-join; the fixed-table write is one window
-        // over the map-side projection of the `a` checkpoint)
+        // num_allele recomputed over the POST-fix percent>0 scope: one
+        // window over the map-side projection of the `a` checkpoint
         val fixedPath = s"$path-fixed"
         fixedAC
           .withColumn("zygosity_num_allele",
             coalesce(Fixup.numAlleleRecomputed, col("zygosity_num_allele")))
           .write.mode("overwrite").parquet(fixedPath)
         val fixed = spark.read.parquet(fixedPath)
-        // after-fix recheck in ONE pass over the re-read fixed table
-        // (r17, guide §2.4/§6): the three separate afterFix branches
-        // each re-scanned `fixed` and paid their own aggregation
-        // exchange (22 Exchanges in the r16 report plan). All three
-        // rechecks are row-local once the genic re-derivation (map-side
-        // broadcast join) and the num-allele site window are attached,
-        // so one scan + one window + one aggregate computes all three
-        // remaining-drift counts; stack() re-shapes them into the same
-        // three report rows. Still computed from the persisted fixed
-        // table — the recheck semantics (a re-run job would read the
-        // store) are unchanged.
+        // after-fix recheck in ONE pass over the re-read fixed table:
+        // all three rechecks are row-local once the genic
+        // re-derivation (map-side lookup) and the num-allele site
+        // window are attached, so one scan + one window + one
+        // aggregate computes all three remaining-drift counts; stack()
+        // re-shapes them into the three report rows. Computed from the
+        // persisted fixed table, as a re-run job would read the store.
         val afterAll = Fixup.genicStatusDrift(fixed, g)
           .withColumn("__naRe", Fixup.numAlleleRecomputed)
           .agg(
@@ -965,10 +946,7 @@ object QueriesPipeline {
           expr(q82VariantPosSql).as("g_pos"),
           element_at(typedlit(Seq("A", "C", "G", "T")),
             ((col("p_partkey") * 17 + 3) % 4 + 1).cast("int")).as("var_base"))
-        val hits = graft.operators.RangeJoin.pointInInterval(
-            v, asm.exons.drop("dna"), Seq("v_chr"), Seq("chr"),
-            "g_pos", "e_start", "e_stop", binSize = 256L)
-          .withColumn("rel_pos", col("prior_len") + (col("g_pos") - col("e_start")) + 1)
+        val hits = CdsAssembly.exonHits(v, asm.exons, "v_chr", "chr", "g_pos")
           .select(col("vid"), col("tid"), col("rel_pos"), col("var_base"))
         CdsAssembly.codonEffect(hits.join(asm.cds, "tid"))
           .groupBy(col("strand"), col("triplet_error"), col("syn_status"))
@@ -996,9 +974,7 @@ object QueriesPipeline {
            |  SELECT p_partkey AS vid, (p_partkey % 25) + 1 AS chrn, $q82VariantPosSql AS g_pos,
            |    substr('ACGT', CAST((p_partkey * 17 + 3) % 4 AS INT) + 1, 1) AS var_base
            |  FROM part),
-           |hits AS (
-           |  SELECT v.vid, e.tid, e.prior_len + (v.g_pos - e.e_start) + 1 AS rel_pos, v.var_base
-           |  FROM v JOIN exd e ON v.chrn = e.chrn AND v.g_pos BETWEEN e.e_start AND e.e_stop),
+           |${CdsAssembly.exonHitsSql("v", "chrn", "chrn", "g_pos")},
            |asm AS (
            |  SELECT h.vid, c.strand, c.cds, h.rel_pos, h.var_base
            |  FROM hits h JOIN cds c ON c.tid = h.tid),

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.{VariantFunctions, ZygosityFunctions}
-import graft.operators.{CdsAssembly, StrainLoader}
+import graft.operators.{CdsAssembly, RangeJoin, StrainLoader}
 import graft.sources.{Cf2, Fasta, Jdbc, Polyphen, Vcf}
 
 /** File-format source queries — the reference pipeline's *front door*
@@ -440,6 +440,8 @@ object QueriesSources {
     }.mkString("\n  UNION ALL ")
     val adj = VariantFunctions.adjustForIndelsSql("pos", "ref", "va").toMap
     val status = ZygosityFunctions.zygosityStatusSql("pct", "chromosome", "position", "gender")
+    val genic = RangeJoin.coveredSql("tx", Seq("v.chromosome"), Seq("t_chr"), "v.position",
+      "t_start", "t_stop")
     val facts = Seq(
       "rowsIn" -> "SELECT count(*) FROM parsed",
       "homRef" -> "SELECT count(*) FROM parsed WHERE call = '0/0'",
@@ -494,14 +496,7 @@ object QueriesSources {
        |  FROM ${csv("exons.tsv", "'tid':'INTEGER','exon_idx':'INTEGER','e_chr':'VARCHAR','e_start':'BIGINT','e_stop':'BIGINT'")} e
        |  JOIN tx t USING (tid) JOIN chrseq cs ON CAST(cs.c AS VARCHAR) = e.e_chr),
        |${CdsAssembly.assembleSql("exn")},
-       |genic AS (
-       |  SELECT DISTINCT v.rgd_id FROM vars v
-       |  JOIN tx t ON t.t_chr = v.chromosome AND v.position BETWEEN t.t_start AND t.t_stop),
-       |hits AS (
-       |  SELECT v.rgd_id, e.tid, v.ref_nuc, v.var_nuc,
-       |    e.prior_len + (v.position - e.e_start) + 1 AS rel_pos
-       |  FROM vars v JOIN exd e ON e.e_chr = v.chromosome
-       |    AND v.position BETWEEN e.e_start AND e.e_stop),
+       |${CdsAssembly.exonHitsSql("vars", "chromosome", "e_chr", "position")},
        |asm AS (
        |  SELECT h.rgd_id, h.tid, c.strand, c.cds, h.rel_pos, h.var_nuc AS var_base
        |  FROM hits h JOIN cds c USING (tid)),
@@ -513,11 +508,10 @@ object QueriesSources {
        |    ${VariantFunctions.frameshiftFlagSql("h.ref_nuc", "h.var_nuc")} AS frameshift
        |  FROM hits h JOIN codon c USING (rgd_id, tid)),
        |base AS (
-       |  SELECT v.variant_type,
-       |    CASE WHEN g.rgd_id IS NOT NULL THEN 'GENIC' ELSE 'INTERGENIC' END AS genic_status,
+       |  SELECT v.variant_type, ${VariantFunctions.genicStatusSql(genic)} AS genic_status,
        |    coalesce(t.syn_status, 'none') AS syn_status,
        |    v.rgd_id, v.n_samples, v.n_het, t.aa_pos, t.frameshift
-       |  FROM vars v LEFT JOIN genic g USING (rgd_id) LEFT JOIN vt t USING (rgd_id))
+       |  FROM vars v LEFT JOIN vt t USING (rgd_id))
        |SELECT variant_type, genic_status, syn_status,
        |  count(*) AS cnt,
        |  CAST(count(DISTINCT rgd_id) AS BIGINT) AS n_vars,

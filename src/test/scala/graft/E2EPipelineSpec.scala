@@ -91,10 +91,9 @@ class E2EPipelineSpec extends SparkSpec {
       .withColumn("quality", VarF.qualityScore(col("read_depth"), col("total_depth")))
       .withColumn("zygosity", zyg)
     val genes = Seq(("1", 9001L, 50L, 150L)).toDF("g_chr", "gene_id", "g_start", "g_stop")
-    val annotated = RangeJoin.pointInIntervalLeftOuter(
-        typed, genes, Seq("chromosome"), Seq("g_chr"),
-        "position", "g_start", "g_stop", binSize = 1000L, broadcastIntervals = true)
-      .withColumn("genic", when(col("gene_id").isNotNull, "GENIC").otherwise("INTERGENIC"))
+    val annotated = RangeJoin.covered(typed, genes, Seq("chromosome"), Seq("g_chr"),
+        "position", "g_start", "g_stop")
+      .withColumn("genic", VarF.genicStatus(col("covered")))
 
     val got = annotated.select("strain", "chromosome", "position", "ref_nuc",
         "var_nuc", "variant_type", "end_pos", "quality", "zygosity", "genic")

@@ -4,14 +4,14 @@ import graft.SparkSpec
 import org.apache.spark.sql.functions._
 import scala.util.Random
 
-/** r16: genicStatusDrift's re-derivation switched from
-  * (interval join -> per-vid aggregation -> join-back) to a single
-  * map-side join against MERGED gene intervals
-  * ([[RangeJoin.mergeIntervals]]). These specs pin (a) the merge's
-  * coverage-equivalence + disjointness on random overlapping data and
-  * (b) the drift operator's row-for-row equivalence with the old
-  * aggregate form on fixtures that exercise nested, duplicated, and
-  * chained-overlap coverage. */
+/** genicStatusDrift re-derives genic status by one map-side join
+  * against MERGED gene intervals ([[RangeJoin.mergeIntervals]] under
+  * [[RangeJoin.covered]]), not interval join -> per-vid aggregation ->
+  * join-back. These specs pin (a) the merge's coverage-equivalence +
+  * disjointness on random overlapping data and (b) the drift
+  * operator's row-for-row equivalence with the aggregate form on
+  * fixtures that exercise nested, duplicated, and chained-overlap
+  * coverage. */
 class FixupDriftSpec extends SparkSpec {
   import spark.implicits._
 
@@ -109,7 +109,7 @@ class FixupDriftSpec extends SparkSpec {
       .select("vid", "chromosome", "start_pos", "genic_status",
         "recomputed", "drifted")
 
-    // the pre-r16 form, verbatim
+    // the aggregate form: every matching gene, then a per-vid max
     val hits = RangeJoin.pointInIntervalLeftOuter(
         variants.select(col("vid"), col("chromosome"), col("start_pos")),
         genes, Seq("chromosome"), Seq("g_chr"), "start_pos",

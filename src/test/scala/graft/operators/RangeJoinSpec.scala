@@ -58,20 +58,28 @@ class RangeJoinSpec extends SparkSpec {
     assert(gotUnmatched.length == unmatchedPids.size, "no duplicate null rows")
   }
 
-  test("left-semi variant emits each covered point exactly once") {
-    val (pts, ivs) = randomData(500, 80, 3000000L)
-    val p = pts.toDF("pid", "chr", "pos")
-    val iv = ivs.toDF("iid", "ichr", "istart", "istop")
-    val got = RangeJoin.pointInIntervalSemi(p, iv, Seq("chr"), Seq("ichr"),
-        "pos", "istart", "istop", binSize = 100000L)
-      .select("pid").collect().map(_.getLong(0)).toSeq
-    val expect = pts.collect {
-      case (pid, pchr, pos)
-          if ivs.exists { case (_, ichr, s, e) => pchr == ichr && pos >= s && pos <= e } =>
-        pid
+  test("covered flags every point once, as the brute-force existence test") {
+    val (pts0, ivs0) = randomData(500, 80, 3000000L)
+    val pts: Seq[(Long, String, java.lang.Long)] = pts0.map { case (i, c, pos) => (i, c, Long.box(pos)) } ++
+      Seq((1000L, null, 150L), (1001L, "1", null), (1002L, null, null), // NULL chr/pos
+        (1003L, "1", 10L), (1004L, "1", 20L), (1005L, "1", 30L), (1006L, "1", 31L))
+    val ivs: Seq[(Long, String, java.lang.Long, java.lang.Long)] = ivs0.map { case (i, c, s, e) => (i, c, Long.box(s), Long.box(e)) } ++
+      Seq((100L, "1", 10L, 30L), (101L, "1", 10L, 30L), // duplicates
+        (102L, "1", 15L, 20L),                           // nested
+        (103L, "1", null, 5000000L), (104L, "1", 0L, null), (105L, null, 0L, 9000000L))
+    val got = RangeJoin.covered(pts.toDF("pid", "chr", "pos"),
+        ivs.toDF("iid", "ichr", "istart", "istop"), Seq("chr"), Seq("ichr"),
+        "pos", "istart", "istop")
+      .select("pid", "covered").collect().map(r => (r.getLong(0), r.getBoolean(1))).toSeq
+    val expect = pts.map { case (pid, pchr, pos) =>
+      pid -> ivs.exists { case (_, ichr, s, e) =>
+        pchr != null && pos != null && ichr == pchr && s != null && e != null &&
+          pos >= s && pos <= e
+      }
     }
-    assert(got.sorted == expect.sorted) // once each, no duplicate-match inflation
-    assert(expect.nonEmpty)
+    assert(got.sortBy(_._1) == expect.sortBy(_._1)) // every point once, flag exact
+    assert(expect.exists(_._2) && expect.exists(!_._2))
+    assert(Seq(1000L, 1001L, 1002L, 1006L).forall(p => !expect.toMap.apply(p)))
   }
 
   test("interval-overlap join emits each overlapping pair exactly once") {

@@ -28,9 +28,8 @@ class StrainLoaderSpec extends SparkSpec with BeforeAndAfterAll {
   private def setup(root: Path, p: StrainLoader.Paths): Unit = {
     write(root, "genome.fa", Seq(">1") ++ Seq.fill(3)("ACGTTGCAAC" * 6) ++ Seq(">2") ++
       Seq.fill(3)(Chr2.take(60)))
-    write(root, "transcripts.tsv", Seq("1\t1\t+\t10\t150", "2\t2\t-\t20\t120"))
-    write(root, "exons.tsv", Seq("1\t0\t1\t10\t40", "1\t1\t1\t100\t150",
-      "2\t0\t2\t20\t60", "2\t1\t2\t90\t120"))
+    write(root, "transcripts.tsv", Transcripts.map(_.productIterator.mkString("\t")))
+    write(root, "exons.tsv", Exons.map(_.productIterator.mkString("\t")))
     StrainLoader.setup(spark, p)
   }
 
@@ -129,6 +128,32 @@ class StrainLoaderSpec extends SparkSpec with BeforeAndAfterAll {
     assert(sub.getAs[String]("frameshift") == "F")
   }
 
+  test("genic status and exon rel_pos of every key, first and last bases included, follow the gene model") {
+    run
+    val out = StrainLoader.Out(root.resolve("out/wave1").toString)
+    def key(r: org.apache.spark.sql.Row): (String, Long) =
+      (r.getAs[String]("chromosome"), r.getAs[Number]("position").longValue)
+    val wave = spark.read.parquet(out.wave)
+    val genic = wave.join(spark.read.parquet(out.genic), "rgd_id").collect()
+      .map(r => key(r) -> r.getAs[String]("genic_status")).toMap
+    val hits = wave.join(spark.read.parquet(out.vt), "rgd_id").collect()
+      .map(r => (key(r), r.getAs[Number]("transcript_id").intValue,
+        r.getAs[Number]("rel_pos").longValue)).toSet
+    val positions = Wave1Keys.map { k => val f = k.split("\\|", -1); (f(0), f(1).toLong) }
+    // a transcript's or an exon's first and last base are inside it
+    val bounds = (Transcripts.flatMap(t => Seq((t._2, t._4), (t._2, t._5))) ++
+      Exons.flatMap(e => Seq((e._3, e._4), (e._3, e._5)))).toSet
+    assert(bounds.subsetOf(positions) && positions.contains(("1", 151L)))
+    assert(genic == positions.map(k => k -> (if (Transcripts.exists(t =>
+      t._2 == k._1 && t._4 <= k._2 && k._2 <= t._5)) "GENIC" else "INTERGENIC")).toMap)
+    assert(hits == positions.flatMap { case (c, pos) =>
+      Exons.filter(e => e._3 == c && e._4 <= pos && pos <= e._5).map { e =>
+        val prior = Exons.filter(x => x._1 == e._1 && x._2 < e._2).map(x => x._5 - x._4 + 1).sum
+        ((c, pos), e._1, prior + pos - e._4 + 1)
+      }
+    })
+  }
+
   test("a re-wave over an empty store numbers its keys from 1 and MERGEs every key") {
     run // the shared store table is re-registered below, after the other cases
     val root2 = Files.createTempDirectory("graft-strain-loader-empty")
@@ -187,15 +212,31 @@ object StrainLoaderSpec {
 
   /** (chrom, pos, ref, alt, cells); a line may carry fewer cells than
     * the header has strains. */
+  /** The gene model: transcripts (tid, chr, strand, start, stop) and
+    * their exons (tid, exon_idx, chr, start, stop). */
+  val Transcripts: Seq[(Int, String, String, Long, Long)] =
+    Seq((1, "1", "+", 10L, 150L), (2, "2", "-", 20L, 120L))
+  val Exons: Seq[(Int, Int, String, Long, Long)] = Seq((1, 0, "1", 10L, 40L),
+    (1, 1, "1", 100L, 150L), (2, 0, "2", 20L, 60L), (2, 1, "2", 90L, 120L))
+
+  /** One called SNV, S1 heterozygous, S2 and S3 hom-ref. */
+  private def snv(c: String, pos: Int, ref: String, alt: String) =
+    (c, pos, ref, alt, Seq("0/1:10,10:20", "0/0:20,0:20", "0/0:20,0:20"))
+
   val Wave1: Seq[(String, Int, String, String, Seq[String])] = Seq(
+    snv("1", 9, "A", "G"), snv("1", 10, "C", "T"),  // before / at a transcript's first base
     ("1", 15, "A", "G", Seq("0/1:10,10:20", "1/1:0,20:20", "0/0:20,0:20")),
     ("1", 20, "C", "T,G", Seq("1/2:0,10,10:20", "0/2:18,0,2:20", "./.:.:.")),
     ("1", 30, "AT", "A", Seq("0/1:5,15:20", "./.:.:.", "0/1:10,10:20")),
+    snv("1", 40, "T", "A"), snv("1", 100, "G", "T"), // an exon's last / first base
     ("1", 105, "G", "C", Seq("1/1:0,20:20", "0/1:19,1:20", "0/1:3,17:20")),
+    snv("1", 150, "A", "C"), snv("1", 151, "C", "G"), // at / past a transcript's last base
+    snv("2", 20, "G", "C"), snv("2", 60, "T", "G"), snv("2", 90, "C", "A"),
     ("2", 27, "AC", "GT", Seq("1/1:0,20:20", "0/0:20,0:20", "0/0:20,0:20")),
     ("2", 37, "A", "G", Seq("0/1:10,10:20", "0/0:20,0:20", "0/0:20,0:20")),
     ("2", 50, "G", "GCA", Seq("1/1:0,30:30", "0/1:25,5:30", "0/0:30,0:30")),
     ("2", 100, "T", "C", Seq("0/1:10,10:20")),
+    snv("2", 120, "G", "T"),
     ("X", 5000000, "A", "T", Seq("0/1:4,16:20", "0/1:4,16:20", "1/1:0,20:20")))
   val Wave2: Seq[(String, Int, String, String, Seq[String])] = Seq(
     ("1", 5, "C", "A", Seq("1/1:0,20:20", "0/0:20,0:20")),
@@ -203,6 +244,9 @@ object StrainLoaderSpec {
     ("1", 30, "AT", "A", Seq("1/1:0,20:20", "0/1:10,10:20")),
     ("1", 60, "G", "A", Seq("0/1:2,18:20", "0/1:10,10:20")),
     ("2", 50, "G", "GT", Seq("0/1:10,10:20", "./.:.:.")))
+
+  /** The natural keys of the first wave. */
+  lazy val Wave1Keys: Set[String] = expected(Wave1Strains, Wave1).keys
 
   /** Chromosome 2 of the fixture genome (bases 1-180). */
   val Chr2: String = "GGCATTACGA" * 18

@@ -10,6 +10,7 @@ object Verify {
     val spark = GraftSession.local(GraftSession.envCpus)
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
+    stampFixtures(sfDir, outDir)
     // optional substring filter for targeted dev iteration (driver
     // runs with it unset = full dump)
     val filter = sys.env.get("SPARK_GRAFT_VERIFY_FILTER")
@@ -26,6 +27,17 @@ object Verify {
       System.err.println(s"[verify] ${failed.size} failed: ${failed.mkString(", ")}")
       sys.exit(1)
     }
+  }
+
+  /** Names this run's dump and SF dirs in `filegate/verify_stamp.json`.
+    * The file-gate oracles read the fixtures the LAST Verify on the
+    * scratch root wrote, so `tools/check.py` fails those oracles as
+    * FIXTURE-STALE when the stamp names another dump. */
+  def stampFixtures(sfDir: String, outDir: String): Unit = {
+    def abs(p: String) = jsonString(Paths.get(p).toAbsolutePath.normalize.toString)
+    val dir = Files.createDirectories(Paths.get(graft.queries.QueriesSources.FixtureDir))
+    Files.writeString(dir.resolve("verify_stamp.json"),
+      s"""{"dump": ${abs(outDir)}, "sf": ${abs(sfDir)}}""")
   }
 
   /** Writes query `name`'s result to `outDir/name` as parquet; false if

@@ -223,6 +223,14 @@ object SemanticIndex {
   def commit(h: Handle, acc: DataFrame, epoch: Int, extra: Seq[String] = Nil): Unit =
     h.store.commit(spilled(h, acc, extra).withColumn("epoch", lit(epoch)))
 
+  /** Twin of [[commit]]: the store `$to`(vec_id, v, cell), which is
+    * `$from`'s rows plus the accepted `$acc`(vec_id, v, qv) spilled
+    * into their 2 nearest `$cents` cells (`${to}sp`). */
+  def commitCtes(to: String, from: String, acc: String, dim: Int, cents: String): String =
+    s"""${IvfKmeans.spillAssignCte(s"${to}sp", acc, dim, Seq("v"), cents)},
+       |$to AS (SELECT vec_id, v, cell FROM $from
+       |  UNION ALL SELECT vec_id, v, cell FROM ${to}sp)""".stripMargin
+
   /** The gate rollup: per-epoch distinct-vector count + id sum (each
     * vector has 2 spill rows; distinct collapses them). [[rollupSql]]
     * is its twin. */

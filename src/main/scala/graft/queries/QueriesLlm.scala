@@ -6,6 +6,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.functions.{TextFunctions => TF, VectorFunctions => VF}
 import graft.functions.VectorFunctions.{dotSql, normSql, byteHist, byteHistSql}
 import graft.operators.{IvfKmeans, MinhashIndex, OperatingPoint, SemanticIndex, SetSimJoin}
+import graft.streaming.StreamingOps
 
 /** Large-scale training-data pipeline operators over the `documents`
   * and `embeddings` tables: deduplication (exact, MinHash+LSH, SimHash,
@@ -30,6 +31,9 @@ object QueriesLlm {
   /** Typed rows for the q59 Dataset pipeline. */
   final case class TypedEv(user_id: Long, ts_micros: Long, event_id: Long, cents: Long)
   final case class TypedUserStats(user_id: Long, n_events: Long, n_incr: Long)
+
+  // the planted strata of the index gates, declared once as data
+  import Waves._
 
   // dedup-family tuning lives in DedupConfig
   import graft.functions.DedupConfig.{JaccThreshold, sizeRatioOk,
@@ -57,8 +61,7 @@ object QueriesLlm {
     * `length(text) >= 3` on both sides ([[dedupCorpusCte]]) keeps the
     * index corpus free of sub-3-char texts, whose single whole-text
     * shingle the engine and `shinglesCte` both give (COVERAGE). */
-  private def dedupCorpus(spark: org.apache.spark.sql.SparkSession,
-                          dir: String): org.apache.spark.sql.DataFrame =
+  private[graft] def dedupCorpus(spark: SparkSession, dir: String): DataFrame =
     table(spark, dir, "documents")
       .filter(col("doc_id") % 4 === 0 && length(col("text")) >= 3)
       .select("doc_id", "lang", "text")
@@ -68,23 +71,6 @@ object QueriesLlm {
     """corpus AS (SELECT doc_id, lang, text FROM documents
       |  WHERE doc_id % 4 = 0 AND len(text) >= 3)""".stripMargin
 
-  /** The two ingest waves of q109/q110 (q99's wave is `w1`): wave 1
-    * mixes exact copies of indexed docs (%20==0, +200000 — rejected vs
-    * epoch 0) with reversed-text decoys (%20==4, +300000 — accepted);
-    * wave 2 replays the SAME decoy texts under new ids (+400000 —
-    * rejected, by their epoch-1 twin or by whatever matched it) plus
-    * fresh decoys (%20==8, +500000 — accepted). */
-  private def epochWaves(corpus: org.apache.spark.sql.DataFrame)
-      : (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) = {
-    def decoys(m: Int, shift: Long) = corpus.filter(col("doc_id") % 20 === m)
-      .withColumn("doc_id", col("doc_id") + shift)
-      .withColumn("text", reverse(col("text")))
-    val w1 = corpus.filter(col("doc_id") % 20 === 0)
-      .withColumn("doc_id", col("doc_id") + 200000L)
-      .unionByName(decoys(4, 300000L))
-    (w1, decoys(4, 400000L).unionByName(decoys(8, 500000L)))
-  }
-
   /** The two-sequential-waves epoch-dedup oracle, shared VERBATIM by
     * q109 (streaming path) and q110 (batch path with a mid-pipeline
     * index compaction): both engines must produce the identical
@@ -93,44 +79,16 @@ object QueriesLlm {
   private lazy val epochDedupOracle: String =
     s"""WITH $dedupCorpusCte,
        |w1 AS (
-       |  SELECT doc_id + 200000 AS doc_id, lang, text FROM corpus WHERE doc_id % 20 = 0
-       |  UNION ALL
-       |  SELECT doc_id + 300000, lang, reverse(text) FROM corpus WHERE doc_id % 20 = 4),
+       |  ${waveSql("corpus", DocCols, EpochWave1)}),
        |w2 AS (
-       |  SELECT doc_id + 400000 AS doc_id, lang, reverse(text) AS text
-       |  FROM corpus WHERE doc_id % 20 = 4
-       |  UNION ALL
-       |  SELECT doc_id + 500000, lang, reverse(text) FROM corpus WHERE doc_id % 20 = 8),
+       |  ${waveSql("corpus", DocCols, EpochWave2)}),
        |${minhashCtes("i", "corpus")},
        |${minhashCtes("a", "w1")},
        |${minhashCtes("b", "w2")},
-       |a_dup AS (
-       |  ${verifiedDupCte("a", "idocs", "ibands")}),
-       |acc1 AS (SELECT doc_id, lang, hl, sz FROM adocs
-       |         WHERE doc_id NOT IN (SELECT w_id FROM a_dup)),
-       |i1docs AS (SELECT doc_id, hl, sz FROM idocs
-       |           UNION ALL SELECT doc_id, hl, sz FROM acc1),
-       |i1bands AS (SELECT doc_id, bkey FROM ibands
-       |            UNION ALL
-       |            SELECT doc_id, bkey FROM abands
-       |            WHERE doc_id IN (SELECT doc_id FROM acc1)),
-       |b_dup AS (
-       |  ${verifiedDupCte("b", "i1docs", "i1bands")}),
-       |acc2 AS (SELECT doc_id, lang, hl, sz FROM bdocs
-       |         WHERE doc_id NOT IN (SELECT w_id FROM b_dup))
-       |SELECT * FROM (
-       |  SELECT CAST(0 AS INTEGER) AS epoch, lang, count(*) AS n_docs,
-       |    CAST(sum(sz) AS BIGINT) AS sum_sz, CAST(sum(doc_id) AS BIGINT) AS sum_id
-       |  FROM idocs GROUP BY 2
-       |  UNION ALL
-       |  SELECT CAST(1 AS INTEGER), lang, count(*),
-       |    CAST(sum(sz) AS BIGINT), CAST(sum(doc_id) AS BIGINT)
-       |  FROM acc1 GROUP BY 2
-       |  UNION ALL
-       |  SELECT CAST(2 AS INTEGER), lang, count(*),
-       |    CAST(sum(sz) AS BIGINT), CAST(sum(doc_id) AS BIGINT)
-       |  FROM acc2 GROUP BY 2)
-       |ORDER BY epoch, lang""".stripMargin
+       |${MinhashIndex.acceptCtes("acc1", "a", "idocs", "ibands")},
+       |${MinhashIndex.commitCtes("i1", "i", "acc1", "a")},
+       |${MinhashIndex.acceptCtes("acc2", "b", "i1docs", "i1bands")}
+       |${MinhashIndex.rollupSql(0 -> "idocs", 1 -> "acc1", 2 -> "acc2")}""".stripMargin
 
   /** Distinct 5-token-gram fingerprints per doc over the q76
     * deterministic train/test split (val dropped) — shared by q93
@@ -251,6 +209,9 @@ object QueriesLlm {
   private def semAcceptCtes(a: String, wave: String, idx: String,
                             cents: String = semCents) =
     SemanticIndex.acceptWaveCtes(a, wave, idx, cents, Dim, SemThreshX1e6)
+  /** `SemanticIndex.commit`'s twin at the semantic family's dimension. */
+  private def semCommitCtes(to: String, from: String, acc: String) =
+    SemanticIndex.commitCtes(to, from, acc, Dim, semCents)
   /** The semantic family's Lloyd chain (`q`, `c0`..`c3`) over the whole
     * corpus. */
   private val semLloydCtes = IvfKmeans.lloydCtes(SemK, SemIters, Dim, VecOffset)
@@ -283,18 +244,6 @@ object QueriesLlm {
        |$semEallCte,
        |sd AS (SELECT vec_id, v, qv FROM eall WHERE vec_id % 2 = 0)""".stripMargin
 
-  /** q120's two ingest waves over a vector frame, the Spark twin of
-    * [[semanticEpochOracle]]'s `w1`/`w2`: wave 1 is new vectors
-    * (vec_id % 20 = 1) plus exact copies of seeded ones
-    * (vec_id % 10 = 0); wave 2 is new vectors (vec_id % 20 = 11) plus
-    * copies of wave 1's new ones — rejected only if epoch 1 committed. */
-  private[graft] def semanticWaves(e: DataFrame): (DataFrame, DataFrame) = {
-    def shifted(m: Int, r: Int, by: Long) =
-      e.filter(col("vec_id") % m === r).withColumn("vec_id", col("vec_id") + by)
-    (shifted(20, 1, 100000L).unionByName(shifted(10, 0, 200000L)),
-      shifted(20, 11, 300000L).unionByName(shifted(20, 1, 400000L)))
-  }
-
   /** A fresh semantic index at `scratchRoot/dir` seeded with the
     * vec_id % 2 = 0 half of `e` (the [[semanticEpochOracle]] seed). */
   private def semanticIndex(spark: SparkSession, e: DataFrame, dir: String,
@@ -304,20 +253,16 @@ object QueriesLlm {
       e.filter(col("vec_id") % 2 === 0), SemK, SemIters, SemThreshX1e6,
       IndexBuckets)
 
-  /** Twin of [[semanticIndex]] and [[semanticWaves]] up to wave 1's
-    * accept: the seed-trained chain, `eall`, the epoch-0 store `i0`,
-    * the waves `w1`/`w2` and wave 1's accept set `ac1`. */
+  /** Twin of [[semanticIndex]] and its waves up to wave 1's accept:
+    * the seed-trained chain, `eall`, the epoch-0 store `i0`, the waves
+    * `w1`/`w2` and wave 1's accept set `ac1`. */
   private val semWave1Ctes =
     s"""$semSeedCtes,
        |${semSpillCte("i0", "sd")},
        |w1 AS (
-       |  SELECT vec_id + 100000 AS vec_id, v, qv FROM eall WHERE vec_id % 20 = 1
-       |  UNION ALL
-       |  SELECT vec_id + 200000, v, qv FROM eall WHERE vec_id % 10 = 0),
+       |  ${waveSql("eall", VecCols, SemWave1)}),
        |w2 AS (
-       |  SELECT vec_id + 300000 AS vec_id, v, qv FROM eall WHERE vec_id % 20 = 11
-       |  UNION ALL
-       |  SELECT vec_id + 400000, v, qv FROM eall WHERE vec_id % 20 = 1),
+       |  ${waveSql("eall", VecCols, SemWave2)}),
        |${semAcceptCtes("ac1", "w1", "i0")}""".stripMargin
 
   /** The two-sequential-waves SEMANTIC epoch-dedup oracle, shared
@@ -330,9 +275,7 @@ object QueriesLlm {
     * provably acceptance-neutral. */
   private lazy val semanticEpochOracle: String = {
     s"""WITH $semWave1Ctes,
-       |${semSpillCte("sp1", "ac1")},
-       |i1 AS (SELECT vec_id, v, cell FROM i0
-       |       UNION ALL SELECT vec_id, v, cell FROM sp1),
+       |${semCommitCtes("i1", "i0", "ac1")},
        |${semAcceptCtes("ac2", "w2", "i1")},
        |${SemanticIndex.rollupSql(0 -> "(SELECT DISTINCT vec_id FROM i0)",
           1 -> "ac1", 2 -> "ac2")}""".stripMargin
@@ -340,63 +283,44 @@ object QueriesLlm {
 
   // ---- multimodal-index oracle building blocks (byte-histogram
   // features, dim 8, accept threshold 0.9), shared by q133 (build +
-  // ingest) and q136 (compact + retract) — semWaveCte's discipline at
+  // ingest) and q136 (compact + retract) — semWave1Ctes' discipline at
   // the multimodal family's feature granularity, one definition so a
   // feature or threshold retune can never drift the two gates apart.
-  /** The multimodal feature row of `(vec_id, txt)` rows:
+  /** The multimodal feature row of `(vec_id, text)` rows:
     * [[IvfKmeans.unitVectors]] over the byte histogram. */
   private def mmFeats(src: DataFrame): DataFrame =
-    IvfKmeans.unitVectors(src.select(col("vec_id"), byteHist(col("txt")).as("v")))
+    IvfKmeans.unitVectors(src.select(col("vec_id"), byteHist(col("text")).as("v")))
   private def mmFeatsCte(name: String, src: String): String =
-    s"""${name}h AS (SELECT vec_id, ${byteHistSql("txt")} AS v FROM $src),
+    s"""${name}h AS (SELECT vec_id, ${byteHistSql("text")} AS v FROM $src),
        |$name AS (${IvfKmeans.unitVectorsSql("vec_id", s"${name}h")})""".stripMargin
   private val mmCents = s"c$MmIters" // the trained chain's last CTE
 
   /** The multimodal index q133 and q136 both drive, after its first
-    * wave: every document seeded as epoch 0, then wave 1 — exact
-    * copies (doc_id % 5 = 0, +100000), which must all reject, and
-    * case-flipped content (doc_id % 5 = 1, +200000), which must
-    * accept — committed as epoch 1. Returns the documents, the handle
-    * and wave 1's accept set. [[mmWave1Ctes]] is its twin. */
+    * wave: every document, as `(vec_id, text)` rows, seeded as epoch 0,
+    * then [[Waves.MmWave1]] committed as epoch 1. Returns the rows, the
+    * handle and wave 1's accept set. [[mmWave1Ctes]] is its twin. */
   private def mmIndexWave1(spark: SparkSession, dir: String, root: String,
                            tbl: String): (DataFrame, SemanticIndex.Handle, DataFrame) = {
-    val d = table(spark, dir, "documents").select(col("doc_id"), col("text"))
-    val seed = mmFeats(d.select(col("doc_id").as("vec_id"), col("text").as("txt")))
-      .localCheckpoint(true) // feeds training AND the epoch-0 write
+    val d = table(spark, dir, "documents").select(col("doc_id").as("vec_id"), col("text"))
+    val seed = mmFeats(d).localCheckpoint(true) // feeds training AND the epoch-0 write
     val h = SemanticIndex.build(
       SemanticIndex.store(spark, s"${Fixtures.scratchRoot}/$root", tbl),
       seed, MmK, MmIters, MmThreshX1e6, IndexBuckets)
-    val copy1 = d.filter(col("doc_id") % 5 === 0)
-      .select((col("doc_id") + 100000L).as("vec_id"))
-    val acc1 = SemanticIndex.acceptWave(h, mmFeats(
-      d.filter(col("doc_id") % 5 === 0)
-        .select((col("doc_id") + 100000L).as("vec_id"), col("text").as("txt"))
-      .unionByName(d.filter(col("doc_id") % 5 === 1)
-        .select((col("doc_id") + 200000L).as("vec_id"), upper(col("text")).as("txt")))))
-    // stratum membership BY CONSTRUCTION, not by id range: on
-    // key-shifted gen_sf corpora doc_id reaches k·1e6, so
-    // `vec_id < 200000` no longer bounds the stratum — the semi-join
-    // against the planted id frame does at any scale
-    require(acc1.join(copy1, Seq("vec_id"), "left_semi").count() == 0L,
-      "an exact byte-copy passed the multimodal accept gate")
-    require(acc1.count() > 0L,
-      "the case-flipped stratum was wholly rejected — accept path dead")
+    val acc1 = SemanticIndex.acceptWave(h, mmFeats(wave(d, MmWave1)))
+    requireFates(acc1, d)(
+      (ByteCopies, AllRejected, "an exact byte-copy passed the multimodal accept gate"),
+      (Flipped, SomeAccepted, "the case-flipped stratum was wholly rejected — accept path dead"))
     SemanticIndex.commit(h, acc1, 1)
     (d, h, acc1)
   }
 
   private lazy val mmWave1Ctes: String =
-    s"""dsrc AS (SELECT doc_id, text FROM documents),
-       |${mmFeatsCte("f0", "(SELECT doc_id AS vec_id, text AS txt FROM dsrc)")},
+    s"""dsrc AS (SELECT doc_id AS vec_id, text FROM documents),
+       |${mmFeatsCte("f0", "dsrc")},
        |${IvfKmeans.lloydCtes(MmK, MmIters, 8, 0L,
           src = "(SELECT vec_id, [x / nrm FOR x IN v] AS embedding FROM f0)")},
        |${IvfKmeans.spillAssignCte("i0", "f0", 8, Seq("v"), cents = mmCents)},
-       |${mmFeatsCte("w1f",
-          """(SELECT doc_id + 100000 AS vec_id, text AS txt FROM dsrc
-             |      WHERE doc_id % 5 = 0
-             |      UNION ALL
-             |      SELECT doc_id + 200000, upper(text) FROM dsrc
-             |      WHERE doc_id % 5 = 1)""".stripMargin)},
+       |${mmFeatsCte("w1f", s"(${waveSql("dsrc", TextCols, MmWave1)})")},
        |${mmAcceptCtes("ac1", "w1f", "i0")}""".stripMargin
 
   /** `SemanticIndex.acceptWave`'s twin at the multimodal family's
@@ -1677,8 +1601,8 @@ object QueriesLlm {
         MinhashIndex.seed(idx, IndexBuckets,
           signedDocs(corpus).localCheckpoint(true)) // docs write + bands write
         // ---- the ingest wave (exact copies + reversed decoys): q109's wave 1
-        val (wave, _) = epochWaves(corpus)
-        val wsig = signedDocs(wave).localCheckpoint(true) // bands + verify + rollup
+        val wsig = signedDocs(wave(corpus, EpochWave1))
+          .localCheckpoint(true) // bands + verify + rollup
         // candidate band join + size-ratio prune + native
         // sorted_inter_count verify — the shared engine-side block
         // (functions/MinhashPipeline), one definition with q109/q110/q112
@@ -1698,9 +1622,7 @@ object QueriesLlm {
         // shingle/minhash/band replay via the shared minhashCtes mirror
         s"""WITH $dedupCorpusCte,
            |wave AS (
-           |  SELECT doc_id + 200000 AS doc_id, lang, text FROM corpus WHERE doc_id % 20 = 0
-           |  UNION ALL
-           |  SELECT doc_id + 300000, lang, reverse(text) FROM corpus WHERE doc_id % 20 = 4),
+           |  ${waveSql("corpus", DocCols, EpochWave1)}),
            |${minhashCtes("i", "corpus")},
            |${minhashCtes("w", "wave")},
            |verified AS (
@@ -2145,12 +2067,12 @@ object QueriesLlm {
     // (sign + band join + verify on candidates); the index pays its
     // shuffle once at commit time, never per batch.
     //
-    // RETRY SAFETY (at-least-once -> effectively-once): Structured
-    // Streaming replays a failed micro-batch under the SAME batchId,
-    // so staging writes one directory PER BATCH keyed by that id with
-    // per-batch OVERWRITE — a retry rewrites its own directory
-    // instead of blind-appending a second copy of its novelties, and
-    // a partially-written attempt is erased by the overwrite. The
+    // RETRY SAFETY (at-least-once -> effectively-once): the staged
+    // epoch is `StreamingOps.stagedEpoch`, which stages one directory
+    // PER BATCH keyed by its batchId with per-batch OVERWRITE — a
+    // retry rewrites its own directory instead of blind-appending a
+    // second copy of its novelties, and a partially-written attempt
+    // is erased by the overwrite. The
     // deeper guarantee is index-level: acceptance is an anti-join
     // against the committed index, so even a whole-wave replay AFTER
     // its epoch committed re-accepts nothing (every novelty now
@@ -2163,7 +2085,6 @@ object QueriesLlm {
     // construction.
     Q("q109_stream_dedup",
       (spark, dir) => {
-        import org.apache.spark.sql.streaming.Trigger
         val root = s"${Fixtures.scratchRoot}/streamdedup"
         // stream sources, checkpoints and stages live beside the index
         Fixtures.rmrf(new java.io.File(root))
@@ -2174,82 +2095,17 @@ object QueriesLlm {
         // corpora
         MinhashIndex.seed(idx, IndexBuckets,
           signedDocs(corpus).localCheckpoint(true)) // 2 writes
-        // ---- wave sources on disk (4 files each -> 2 micro-batches)
-        val (w1, w2) = epochWaves(corpus)
-        w1.repartition(4).write.mode("overwrite").parquet(s"$root/src1")
-        w2.repartition(4).write.mode("overwrite").parquet(s"$root/src2")
-        val srcSchema = spark.read.parquet(s"$root/src1").schema
-        val stagedSchema = signedDocs(corpus.limit(0)).schema
-        def runStream(epoch: Int, srcPath: String): Unit = {
-          val stage = s"$root/stage_$epoch"
-          val q = spark.readStream.schema(srcSchema)
-            .option("maxFilesPerTrigger", 2).parquet(srcPath)
-            .writeStream
-            .option("checkpointLocation", s"$root/ckpt_$epoch")
-            .trigger(Trigger.AvailableNow())
-            .foreachBatch { (batch: org.apache.spark.sql.DataFrame, batchId: Long) =>
-              // 3 consumers (bands, verify, anti) -> materialize once;
-              // candidate/verify/anti is the shared acceptAgainstIndex
-              // (functions/MinhashPipeline) — store side exchange-free
-              val bs = signedDocs(batch).localCheckpoint(true)
-              // batchId is stable across retries -> a replayed batch
-              // OVERWRITES its own staging directory (idempotent),
-              // never appends a second copy
-              MinhashIndex.accept(idx, bs)
-                .select(col("doc_id"), col("lang"), col("hl"), col("sz"), col("sig"))
-                .write.mode("overwrite").parquet(s"$stage/batch=$batchId")
-            }
-            .start()
-          q.awaitTermination()
-        }
-        // commit the epoch: staged novelties enter the index; returns
-        // how many docs the commit added (0 on a replayed epoch OR a
-        // commit-level retry)
-        def commitEpoch(epoch: Int): Long = {
-          // enumerate the per-batch dirs with the Hadoop FS API, NOT a
-          // `batch=*` glob: FileStreamSink.hasMetadata stats the
-          // literal glob string, catches the FileNotFoundException,
-          // and logs the full stack trace at WARN — 4 crash-lookalike
-          // traces per bench pass. Each listed dir is its own
-          // base path, so no `batch` partition column is inferred and
-          // a zero-accept batch (dir with no part files) reads empty
-          // under the explicit schema — glob semantics, no traces.
-          val stageDir = new org.apache.hadoop.fs.Path(s"$root/stage_$epoch")
-          val sfs = stageDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-          val batchDirs =
-            if (!sfs.exists(stageDir)) Array.empty[String]
-            else sfs.listStatus(stageDir)
-              .filter(s => s.isDirectory && s.getPath.getName.startsWith("batch="))
-              .map(_.getPath.toString).sorted
-          val staged =
-            if (batchDirs.isEmpty)
-              spark.createDataFrame(
-                spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], stagedSchema)
-            else spark.read.schema(stagedSchema)
-              .parquet(batchDirs.toIndexedSeq: _*)
-          // commit is idempotent INDEPENDENTLY of staging: only docs
-          // not already committed are appended, so a driver retry
-          // between stream completion and commit — or a double
-          // commitEpoch call with stale staged files — adds 0 rows by
-          // construction, not by relying on staging overwrite
-          // semantics. Cost: one id-only anti-join against the
-          // bucketed index (exchange-free on the index side).
-          val novel = staged
-            .join(spark.table(MinhashIndex.docs(idx)).select("doc_id"),
-              Seq("doc_id"), "left_anti")
-            .localCheckpoint(true) // 2 writes + count
-          // bands BEFORE docs (MinhashIndex's declared order): a crash
-          // between the appends leaves no doc without its band rows
-          MinhashIndex.commit(idx, novel, epoch)
-          novel.count()
-        }
-        runStream(1, s"$root/src1")
-        commitEpoch(1)
-        // (commit-level retry and checkpoint-cleared replay both add 0
-        // by the anti-join construction — pinned in StreamReplaySpec,
-        // not re-proven per bench pass; see the RETRY SAFETY note.)
-        runStream(2, s"$root/src2")
-        commitEpoch(2)
+        val staged = signedDocs(corpus.limit(0)).schema
+        // each wave streams in 2 micro-batches, each batch accepted
+        // against the frozen epoch index (store side exchange-free),
+        // and the staged novelties commit as the next epoch, bands
+        // before docs (MinhashIndex's declared order)
+        for ((strata, epoch) <- Seq(EpochWave1 -> 1, EpochWave2 -> 2))
+          MinhashIndex.commit(idx, StreamingOps.stagedEpoch(spark, root, epoch,
+              wave(corpus, strata), staged, MinhashIndex.docs(idx), "doc_id") { batch =>
+            // 3 consumers (bands, verify, anti) -> materialize once
+            MinhashIndex.accept(idx, signedDocs(batch).localCheckpoint(true))
+          }, epoch)
         MinhashIndex.rollup(idx)
       },
       Some(epochDedupOracle)),
@@ -2281,12 +2137,11 @@ object QueriesLlm {
           MinhashIndex.commit(idx,
             MinhashIndex.accept(idx, signedDocs(wave)).localCheckpoint(true), // 2 writes
             epoch)
-        val (w1, w2) = epochWaves(corpus)
-        ingest(1, w1)
+        ingest(1, wave(corpus, EpochWave1))
         // ---- THE OPERATION UNDER TEST: collapse epoch file sets and
         // grow capacity 8 -> 16 buckets, at the epoch barrier
         idx.compact(IndexBuckets * 2)
-        ingest(2, w2)
+        ingest(2, wave(corpus, EpochWave2))
         MinhashIndex.rollup(idx)
       },
       Some(epochDedupOracle)),
@@ -2315,21 +2170,19 @@ object QueriesLlm {
         val corpus = dedupCorpus(spark, dir)
         MinhashIndex.seed(idx, IndexBuckets,
           signedDocs(corpus).localCheckpoint(true)) // 2 writes
-        // ---- retract R = every 10th indexed doc (doc_id % 40 == 0):
+        // ---- retract R = every 10th indexed doc (the members of
+        // RetractedCopies):
         // tombstone anti-join + staged rewrite of BOTH tables (the band
         // table must lose R's entries too, or ghosts remain); the kept
         // set is written to a sibling path from the OLD files before
         // anything is dropped
-        idx.retract(corpus.filter(col("doc_id") % 40 === 0)
+        idx.retract(corpus.filter(RetractedCopies.member(col("doc_id")))
           .select("doc_id").localCheckpoint(true)) // 2 rewrites
         // ---- the probe wave: exact copies of RETRACTED docs (must
         // now be accepted — the observable effect of deletion) mixed
         // with exact copies of RETAINED docs (must still be rejected)
-        val wave = corpus.filter(col("doc_id") % 40 === 0)
-          .withColumn("doc_id", col("doc_id") + 600000L)
-          .unionByName(corpus.filter(col("doc_id") % 40 === 20)
-            .withColumn("doc_id", col("doc_id") + 700000L))
-        val wsig = signedDocs(wave).localCheckpoint(true) // bands + verify + anti
+        val wsig = signedDocs(wave(corpus, Seq(RetractedCopies, RetainedCopies)))
+          .localCheckpoint(true) // bands + verify + anti
         // shared accept: index side exchange-free, verify is the native
         // sorted_inter_count (functions/MinhashPipeline); the epoch-1
         // commit appends band rows as well as docs
@@ -2339,26 +2192,14 @@ object QueriesLlm {
       },
       Some(
         s"""WITH $dedupCorpusCte,
-           |retained AS (SELECT * FROM corpus WHERE doc_id % 40 <> 0),
+           |retained AS (SELECT * FROM corpus
+           |  WHERE NOT (${RetractedCopies.memberSql("doc_id")})),
            |wave AS (
-           |  SELECT doc_id + 600000 AS doc_id, lang, text FROM corpus WHERE doc_id % 40 = 0
-           |  UNION ALL
-           |  SELECT doc_id + 700000, lang, text FROM corpus WHERE doc_id % 40 = 20),
+           |  ${waveSql("corpus", DocCols, Seq(RetractedCopies, RetainedCopies))}),
            |${minhashCtes("i", "retained")},
            |${minhashCtes("w", "wave")},
-           |w_dup AS (
-           |  ${verifiedDupCte("w", "idocs", "ibands")}),
-           |acc AS (SELECT doc_id, lang, hl, sz FROM wdocs
-           |        WHERE doc_id NOT IN (SELECT w_id FROM w_dup))
-           |SELECT * FROM (
-           |  SELECT CAST(0 AS INTEGER) AS epoch, lang, count(*) AS n_docs,
-           |    CAST(sum(sz) AS BIGINT) AS sum_sz, CAST(sum(doc_id) AS BIGINT) AS sum_id
-           |  FROM idocs GROUP BY 2
-           |  UNION ALL
-           |  SELECT CAST(1 AS INTEGER), lang, count(*),
-           |    CAST(sum(sz) AS BIGINT), CAST(sum(doc_id) AS BIGINT)
-           |  FROM acc GROUP BY 2)
-           |ORDER BY epoch, lang""".stripMargin)),
+           |${MinhashIndex.acceptCtes("acc", "w", "idocs", "ibands")}
+           |${MinhashIndex.rollupSql(0 -> "idocs", 1 -> "acc")}""".stripMargin)),
 
     // -- K-MEANS REFINEMENT STEP (IVF training): one exact Lloyd
     // iteration over the embedding table — assign every vector to its
@@ -2889,13 +2730,12 @@ object QueriesLlm {
         // ingest lifecycle is the shared SemanticIndex operator (one
         // definition for q120/q122/q123/q124)
         val h = semanticIndex(spark, e, "semdedup", "graft_q120_vecs")
-        val (w1, w2) = semanticWaves(e)
-        SemanticIndex.commit(h, SemanticIndex.acceptWave(h, w1), 1)
+        SemanticIndex.commit(h, SemanticIndex.acceptWave(h, wave(e, SemWave1)), 1)
         // (replay-accepts-0 — every wave-1 acceptance self-matches its
         // own index entry, probe cell ∈ its spilled cells at cos = 1 —
         // is pinned in StreamReplaySpec rather than re-proven per
         // bench pass; see q109's RETRY SAFETY note.)
-        SemanticIndex.commit(h, SemanticIndex.acceptWave(h, w2), 2)
+        SemanticIndex.commit(h, SemanticIndex.acceptWave(h, wave(e, SemWave2)), 2)
         SemanticIndex.rollup(h)
       },
       Some(semanticEpochOracle)),
@@ -2964,12 +2804,11 @@ object QueriesLlm {
       (spark, dir) => {
         val e = IvfKmeans.vectors(embeddings(spark, dir), VecOffset)
         val h = semanticIndex(spark, e, "semcompact", "graft_q122_vecs")
-        val (w1, w2) = semanticWaves(e)
-        SemanticIndex.commit(h, SemanticIndex.acceptWave(h, w1), 1)
+        SemanticIndex.commit(h, SemanticIndex.acceptWave(h, wave(e, SemWave1)), 1)
         // ---- THE OPERATION UNDER TEST: collapse epoch file sets and
         // grow capacity 8 -> 16 buckets, at the epoch barrier
         h.store.compact(IndexBuckets * 2)
-        SemanticIndex.commit(h, SemanticIndex.acceptWave(h, w2), 2)
+        SemanticIndex.commit(h, SemanticIndex.acceptWave(h, wave(e, SemWave2)), 2)
         SemanticIndex.rollup(h)
       },
       Some(semanticEpochOracle)),
@@ -2995,27 +2834,23 @@ object QueriesLlm {
         val h = semanticIndex(spark, e, "semretract", "graft_q123_vecs")
         // ---- retract R = every 4th seeded vector (vec_id % 8 == 0):
         // filtered rewrite of the store via the staged swap
-        val tombstones = e.filter(col("vec_id") % 8 === 0)
+        val tombstones = e.filter(RetractedVecCopies.member(col("vec_id")))
           .select("vec_id").localCheckpoint(true)
         SemanticIndex.retract(h, tombstones)
         // ---- probe wave: exact copies of RETRACTED vectors (now
         // judged against retained neighbors only) + exact copies of
         // RETAINED vectors (must still self-match and be rejected)
-        val wave = e.filter(col("vec_id") % 8 === 0)
-          .withColumn("vec_id", col("vec_id") + 600000L)
-          .unionByName(e.filter(col("vec_id") % 8 === 4)
-            .withColumn("vec_id", col("vec_id") + 700000L))
-        SemanticIndex.commit(h, SemanticIndex.acceptWave(h, wave), 1)
+        SemanticIndex.commit(h, SemanticIndex.acceptWave(h,
+          wave(e, Seq(RetractedVecCopies, RetainedVecCopies))), 1)
         SemanticIndex.rollup(h)
       },
       Some {
         s"""WITH $semSeedCtes,
-           |ret AS (SELECT vec_id, v, qv FROM sd WHERE vec_id % 8 <> 0),
+           |ret AS (SELECT vec_id, v, qv FROM sd
+           |  WHERE NOT (${RetractedVecCopies.memberSql("vec_id")})),
            |${semSpillCte("i0", "ret")},
            |wave AS (
-           |  SELECT vec_id + 600000 AS vec_id, v, qv FROM eall WHERE vec_id % 8 = 0
-           |  UNION ALL
-           |  SELECT vec_id + 700000, v, qv FROM eall WHERE vec_id % 8 = 4),
+           |  ${waveSql("eall", VecCols, Seq(RetractedVecCopies, RetainedVecCopies))}),
            |${semAcceptCtes("ac1", "wave", "i0")},
            |${SemanticIndex.rollupSql(0 -> "(SELECT DISTINCT vec_id FROM i0)",
               1 -> "ac1")}""".stripMargin
@@ -3047,8 +2882,7 @@ object QueriesLlm {
       (spark, dir) => {
         val e = IvfKmeans.vectors(embeddings(spark, dir), VecOffset)
         val h = semanticIndex(spark, e, "semretrain", "graft_q124_vecs")
-        val (w1, w2) = semanticWaves(e)
-        SemanticIndex.commit(h, SemanticIndex.acceptWave(h, w1), 1)
+        SemanticIndex.commit(h, SemanticIndex.acceptWave(h, wave(e, SemWave1)), 1)
         // ---- THE OPERATION UNDER TEST: retrain on the committed
         // corpus, reassign the store to the new cells, swap; waves
         // from here on probe the NEW frozen centroids
@@ -3065,7 +2899,7 @@ object QueriesLlm {
         // under the new geometry — replay idempotence for an index
         // means "never duplicate an existing entry", not "reproduce old
         // rejections".)
-        SemanticIndex.commit(h2, SemanticIndex.acceptWave(h2, w2), 2)
+        SemanticIndex.commit(h2, SemanticIndex.acceptWave(h2, wave(e, SemWave2)), 2)
         // geometry-visible rollup: per-epoch distinct cells hash the
         // NEW cell assignment, not just membership
         SemanticIndex.geometryRollup(h2).orderBy(col("epoch"))
@@ -3298,9 +3132,7 @@ object QueriesLlm {
           (r.getLong(0), r.getLong(1), r.getLong(2))
         }
         // wave 1: in-distribution growth -> trigger must HOLD
-        val w1 = e.filter(col("vec_id") % 20 === 1)
-          .withColumn("vec_id", col("vec_id") + 100000L)
-        SemanticIndex.commit(h, SemanticIndex.acceptWave(h, w1), 1)
+        SemanticIndex.commit(h, SemanticIndex.acceptWave(h, NewVecs.rows(e)), 1)
         val (mx1, tot1, nc1) = skew()
         val fire1 = mx1 * nc1 * 2 >= tot1 * 3
         require(!fire1, s"drift trigger fired on in-distribution " +
@@ -3329,9 +3161,7 @@ object QueriesLlm {
         val (mx3, tot3, nc3) = skew() // post-retrain read (informational)
         val fire3 = mx3 * nc3 * 2 >= tot3 * 3
         // wave 3 probes whatever geometry the decision produced
-        val w3 = e.filter(col("vec_id") % 20 === 11)
-          .withColumn("vec_id", col("vec_id") + 300000L)
-        SemanticIndex.commit(h2, SemanticIndex.acceptWave(h2, w3), 3)
+        SemanticIndex.commit(h2, SemanticIndex.acceptWave(h2, NewVecs2.rows(e)), 3)
         // hashed output: decision rows (step 1-3: n_max/n_total =
         // occupancy max/total) + per-epoch rollup rows (step 10+epoch:
         // n_max/n_total = n_vecs/sum_id) on the final geometry
@@ -3357,14 +3187,10 @@ object QueriesLlm {
              |FROM $occ""".stripMargin
         s"""WITH $semSeedCtes,
            |${semSpillCte("i0", "sd")},
-           |w1 AS (SELECT vec_id + 100000 AS vec_id, v, qv FROM eall
-           |       WHERE vec_id % 20 = 1),
+           |w1 AS (${NewVecs.sql("eall", VecCols)}),
            |${semAcceptCtes("ac1", "w1", "i0")},
-           |${semSpillCte("sp1", "ac1")},
-           |occ1 AS (SELECT cell, count(*) AS n FROM (
-           |  SELECT cell FROM i0 UNION ALL SELECT cell FROM sp1) GROUP BY cell),
-           |i1 AS (SELECT vec_id, v, cell FROM i0
-           |       UNION ALL SELECT vec_id, v, cell FROM sp1),
+           |${semCommitCtes("i1", "i0", "ac1")},
+           |occ1 AS (SELECT cell, count(*) AS n FROM i1 GROUP BY cell),
            |an AS (SELECT v AS av FROM eall WHERE vec_id % 20 = 3
            |       ORDER BY vec_id LIMIT 1),
            |w2 AS (
@@ -3373,18 +3199,15 @@ object QueriesLlm {
            |      [e.v[i] + an.av[i] * 5 FOR i IN generate_series(1, $Dim)] AS v
            |    FROM eall e, an WHERE e.vec_id % 4 = 3)),
            |${semAcceptCtes("ac2", "w2", "i1")},
-           |${semSpillCte("sp2", "ac2")},
-           |occ2 AS (SELECT cell, count(*) AS n FROM (
-           |  SELECT cell FROM i0 UNION ALL SELECT cell FROM sp1
-           |  UNION ALL SELECT cell FROM sp2) GROUP BY cell),
+           |${semCommitCtes("i2", "i1", "ac2")},
+           |occ2 AS (SELECT cell, count(*) AS n FROM i2 GROUP BY cell),
            |cm AS (
            |  SELECT 0 AS epoch, vec_id, v FROM (SELECT DISTINCT vec_id, v FROM i0)
            |  UNION ALL SELECT 1, vec_id, v FROM ac1
            |  UNION ALL SELECT 2, vec_id, v FROM ac2),
            |$semRetrainCtes,
            |occ3 AS (SELECT cell, count(*) AS n FROM ri GROUP BY cell),
-           |w3 AS (SELECT vec_id + 300000 AS vec_id, v, qv FROM eall
-           |       WHERE vec_id % 20 = 11),
+           |w3 AS (${NewVecs2.sql("eall", VecCols)}),
            |${semAcceptCtes("ac3", "w3", "ri", cents = retrainCents)},
            |${semSpillCte("sp3", "ac3", cents = retrainCents)},
            |fin AS (SELECT epoch, vec_id, cell FROM ri
@@ -3787,81 +3610,27 @@ object QueriesLlm {
     // second is also semantic: every wave-1 acceptance self-matches
     // its own spill entry at cos = 1). Both proofs are pinned in
     // `StreamReplaySpec` rather than re-run per bench pass (q109's
-    // RETRY SAFETY note). Batch dirs are enumerated with the Hadoop FS
-    // API, not a `batch=*` glob (q109's FileStreamSink WARN-trace
-    // note). 100 TB:
+    // RETRY SAFETY note); both gates stage and commit through the one
+    // `StreamingOps.stagedEpoch`. 100 TB:
     // per-batch cost is batch-sized (probe assignment vs the 1-row
     // broadcast centroid frame + one cell-keyed join); the store pays
     // one bucketed shuffle per EPOCH at commit, never per batch.
     Q("q132_stream_semantic_dedup",
       (spark, dir) => {
-        import org.apache.spark.sql.streaming.Trigger
         val root = s"${Fixtures.scratchRoot}/semstream"
         // stream sources, checkpoints and stages live beside the index
         Fixtures.rmrf(new java.io.File(root))
         val e = IvfKmeans.vectors(embeddings(spark, dir), VecOffset)
         val tbl = "graft_q132_vecs"
         val h = semanticIndex(spark, e, "semstream", tbl)
-        // q120's wave strata, verbatim (the shared-oracle contract)
-        val (w1, w2) = semanticWaves(e)
-        // 4 files per wave source -> 2 micro-batches at trigger=2
-        w1.repartition(4).write.mode("overwrite").parquet(s"$root/src1")
-        w2.repartition(4).write.mode("overwrite").parquet(s"$root/src2")
-        val srcSchema = spark.read.parquet(s"$root/src1").schema
-        def runStream(epoch: Int, srcPath: String): Unit = {
-          // a fresh stream run owns its stage directory: clear it so a
-          // checkpoint-cleared replay that happened to produce FEWER
-          // micro-batches than the prior run could never leave stale
-          // batch= dirs for commitEpoch to union in (the id anti-join
-          // makes stale dirs harmless too, but the invariant should be
-          // structural, not incidental)
-          Fixtures.rmrf(new java.io.File(s"$root/stage_$epoch"))
-          val q = spark.readStream.schema(srcSchema)
-            .option("maxFilesPerTrigger", 2).parquet(srcPath)
-            .writeStream
-            .option("checkpointLocation", s"$root/ckpt_$epoch")
-            .trigger(Trigger.AvailableNow())
-            .foreachBatch { (batch: org.apache.spark.sql.DataFrame, batchId: Long) =>
-              // per-row accept vs the FROZEN index — batch-composable
-              SemanticIndex.acceptWave(h, batch)
-                .write.mode("overwrite")
-                .parquet(s"$root/stage_$epoch/batch=$batchId")
-            }
-            .start()
-          q.awaitTermination()
+        // q120's waves (the shared-oracle contract); each batch is
+        // accepted per row against the FROZEN index, so batching
+        // cannot change what commits
+        for ((strata, epoch) <- Seq(SemWave1 -> 1, SemWave2 -> 2)) {
+          val w = wave(e, strata)
+          SemanticIndex.commit(h, StreamingOps.stagedEpoch(spark, root, epoch, w,
+            w.schema, tbl, "vec_id")(SemanticIndex.acceptWave(h, _)), epoch)
         }
-        // commit the epoch: staged novelties spill-commit; idempotent
-        // INDEPENDENTLY of staging via the id anti-join (q109's
-        // contract — a stale-stage double commit adds 0 by
-        // construction)
-        def commitEpoch(epoch: Int): Long = {
-          val stageDir = new org.apache.hadoop.fs.Path(s"$root/stage_$epoch")
-          val sfs = stageDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-          val batchDirs =
-            if (!sfs.exists(stageDir)) Array.empty[String]
-            else sfs.listStatus(stageDir)
-              .filter(s => s.isDirectory && s.getPath.getName.startsWith("batch="))
-              .map(_.getPath.toString).sorted
-          val staged =
-            if (batchDirs.isEmpty)
-              spark.createDataFrame(
-                spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], srcSchema)
-            else spark.read.schema(srcSchema)
-              .parquet(batchDirs.toIndexedSeq: _*)
-          val novel = staged
-            .join(spark.table(tbl).select("vec_id").distinct(),
-              Seq("vec_id"), "left_anti")
-            .localCheckpoint(true) // commit write + count
-          SemanticIndex.commit(h, novel, epoch)
-          novel.count()
-        }
-        runStream(1, s"$root/src1")
-        commitEpoch(1)
-        // (commit-level retry and checkpoint-cleared replay both add 0
-        // by the anti-join construction — pinned in StreamReplaySpec,
-        // not re-proven per bench pass; see q109's RETRY SAFETY note.)
-        runStream(2, s"$root/src2")
-        commitEpoch(2)
         SemanticIndex.rollup(h)
       },
       Some(semanticEpochOracle)),
@@ -3895,34 +3664,17 @@ object QueriesLlm {
     Q("q133_multimodal_index",
       (spark, dir) => {
         val (d, h, _) = mmIndexWave1(spark, dir, "mmindex", "graft_q133_mm")
-        val w2 = mmFeats(
-          d.filter(col("doc_id") % 5 === 1)
-            .select((col("doc_id") + 300000L).as("vec_id"),
-              upper(col("text")).as("txt"))
-          .unionByName(d.filter(col("doc_id") % 5 === 2)
-            .select((col("doc_id") + 400000L).as("vec_id"),
-              concat(col("text"), upper(col("text"))).as("txt"))))
-        val acc2 = SemanticIndex.acceptWave(h, w2)
-        val copy2 = d.filter(col("doc_id") % 5 === 1)
-          .select((col("doc_id") + 300000L).as("vec_id"))
-        require(acc2.join(copy2, Seq("vec_id"), "left_semi").count() == 0L,
-          "a copy of an epoch-1 commit re-entered — commit not visible")
-        require(acc2.count() > 0L,
-          "the mixed-case stratum was wholly rejected — accept path dead")
+        val acc2 = SemanticIndex.acceptWave(h, mmFeats(wave(d, Seq(FlippedAgain, Mixed))))
+        requireFates(acc2, d)(
+          (FlippedAgain, AllRejected, "a copy of an epoch-1 commit re-entered — commit not visible"),
+          (Mixed, SomeAccepted, "the mixed-case stratum was wholly rejected — accept path dead"))
         SemanticIndex.commit(h, acc2, 2)
         SemanticIndex.rollup(h)
       },
       Some {
         s"""WITH $mmWave1Ctes,
-           |${IvfKmeans.spillAssignCte("sp1", "ac1", 8, Seq("v"), cents = mmCents)},
-           |i1 AS (SELECT vec_id, v, cell FROM i0
-           |       UNION ALL SELECT vec_id, v, cell FROM sp1),
-           |${mmFeatsCte("w2f",
-              """(SELECT doc_id + 300000 AS vec_id, upper(text) AS txt FROM dsrc
-                 |      WHERE doc_id % 5 = 1
-                 |      UNION ALL
-                 |      SELECT doc_id + 400000, text || upper(text) FROM dsrc
-                 |      WHERE doc_id % 5 = 2)""".stripMargin)},
+           |${SemanticIndex.commitCtes("i1", "i0", "ac1", 8, mmCents)},
+           |${mmFeatsCte("w2f", s"(${waveSql("dsrc", TextCols, Seq(FlippedAgain, Mixed))})")},
            |${mmAcceptCtes("ac2", "w2f", "i1")},
            |${SemanticIndex.rollupSql(0 -> "(SELECT DISTINCT vec_id FROM i0)",
               1 -> "ac1", 2 -> "ac2")}""".stripMargin
@@ -4239,27 +3991,13 @@ object QueriesLlm {
         h.store.compact(IndexBuckets * 2)
         SemanticIndex.retract(h, acc1.select("vec_id"))
         // ---- probe wave against the compacted, retracted store
-        val w2 = mmFeats(
-          d.filter(col("doc_id") % 4 === 2)
-            .select((col("doc_id") + 400000L).as("vec_id"), col("text").as("txt"))
-          .unionByName(d.filter(col("doc_id") % 5 === 1)
-            .select((col("doc_id") + 500000L).as("vec_id"),
-              upper(col("text")).as("txt"))))
-        val acc2 = SemanticIndex.acceptWave(h, w2)
-        val retainedCopies = d.filter(col("doc_id") % 4 === 2)
-          .select((col("doc_id") + 400000L).as("vec_id"))
-        require(acc2.join(retainedCopies, Seq("vec_id"), "left_semi")
-            .count() == 0L,
-          "a copy of a retained seed re-entered — over-delete or ghost accept")
-        val retractedCopies = d.filter(col("doc_id") % 5 === 1)
-          .select((col("doc_id") + 500000L).as("vec_id"))
-          .localCheckpoint(true) // count + semi-join
-        val nRetr = retractedCopies.count()
-        val nAcc = acc2.join(retractedCopies, Seq("vec_id"), "left_semi").count()
-        require(nRetr > 0L, "empty retraction stratum — gate is vacuous")
-        require(nAcc == nRetr,
-          s"only $nAcc of $nRetr copies of retracted content re-accepted — " +
-            "ghost index rows survive retraction")
+        val acc2 = SemanticIndex.acceptWave(h,
+          mmFeats(wave(d, Seq(SeedCopies, FlippedRetracted))))
+        requireFates(acc2, d)(
+          (SeedCopies, AllRejected,
+            "a copy of a retained seed re-entered — over-delete or ghost accept"),
+          (FlippedRetracted, AllAccepted, "copies of retracted content must all " +
+            "re-accept — ghost index rows survive retraction"))
         SemanticIndex.commit(h, acc2, 2)
         // epoch-11 accounting row: wave-1's accept set is retracted
         // from the store, so the rollup alone would not hash it
@@ -4271,11 +4009,7 @@ object QueriesLlm {
       Some {
         s"""WITH $mmWave1Ctes,
            |${mmFeatsCte("w2f",
-              """(SELECT doc_id + 400000 AS vec_id, text AS txt FROM dsrc
-                 |      WHERE doc_id % 4 = 2
-                 |      UNION ALL
-                 |      SELECT doc_id + 500000, upper(text) FROM dsrc
-                 |      WHERE doc_id % 5 = 1)""".stripMargin)},
+              s"(${waveSql("dsrc", TextCols, Seq(SeedCopies, FlippedRetracted))})")},
            |${mmAcceptCtes("ac2", "w2f", "i0")},
            |${SemanticIndex.rollupSql(0 -> "(SELECT DISTINCT vec_id FROM i0)",
               2 -> "ac2", 11 -> "ac1")}""".stripMargin
@@ -4513,7 +4247,6 @@ object QueriesLlm {
     // (IndexAcceptCapSpec gates the plan + benign-corpus equivalence).
     Q("q138_index_accept_hotcap",
       (spark, dir) => {
-        import graft.functions.MinhashPipeline.{contentFp, acceptAgainstIndexCapped}
         val idx = MinhashIndex.store(spark, s"${Fixtures.scratchRoot}/idxacccap",
           "graft_q138")
         val corpus = dedupCorpus(spark, dir)
@@ -4533,15 +4266,11 @@ object QueriesLlm {
         MinhashIndex.seed(idx, IndexBuckets,
           signedDocs(seed).localCheckpoint(true)
             .withColumn("sg", contentFp(col("hl"))), passthru = Seq("sg"))
-        val wave = corpus.filter(col("doc_id") % 20 === 0)
-          .withColumn("doc_id", col("doc_id") + 200000L) // exact copies -> reject
-          .unionByName(copies(750000L, 6)) // flood re-sends -> reject THROUGH the hot bucket
-          .unionByName(corpus.filter(col("doc_id") % 20 === 4)
-            .withColumn("doc_id", col("doc_id") + 400000L)
-            .withColumn("text", reverse(col("text")))) // decoys -> accept
-        val wsig = signedDocs(wave).localCheckpoint(true)
-        val acc = acceptAgainstIndexCapped(wsig, MinhashIndex.docs(idx),
-          MinhashIndex.bands(idx), HotBucketCap).localCheckpoint(true)
+        val wsig = signedDocs(Copies.rows(corpus) // exact copies -> reject
+            .unionByName(copies(750000L, 6)) // flood re-sends -> reject THROUGH the hot bucket
+            .unionByName(DecoysAgain.rows(corpus))) // decoys -> accept
+          .localCheckpoint(true)
+        val acc = MinhashIndex.acceptCapped(idx, wsig, HotBucketCap).localCheckpoint(true)
         // recall-through-the-cap proof the oracle hash cannot give:
         // the flood family's wave copies must still be FOUND (rejected)
         // even though their bucket is over-cap
@@ -4550,13 +4279,9 @@ object QueriesLlm {
         require(floodAccepted == 0L,
           s"$floodAccepted flood-family wave copies were accepted as novel; " +
             "the hot-bucket cap must keep exact-copy families findable")
-        acc.groupBy(col("lang"))
-          .agg(count(lit(1)).as("n_docs"), sum(col("sz")).as("sum_sz"),
-            sum(col("doc_id")).as("sum_id"))
-          .orderBy(col("lang"))
+        MinhashIndex.langRollup(acc)
       },
       Some {
-        import graft.functions.MinhashPipeline.verifiedDupCappedCte
         s"""WITH $dedupCorpusCte,
            |fl AS (SELECT lang, text FROM corpus WHERE len(text) >= 50
            |       ORDER BY doc_id LIMIT 1),
@@ -4565,22 +4290,16 @@ object QueriesLlm {
            |  UNION ALL
            |  SELECT 700000 + i.i, lang, text FROM fl, generate_series(0, 47) i(i)),
            |wv AS (
-           |  SELECT doc_id + 200000 AS doc_id, lang, text FROM corpus
-           |  WHERE doc_id % 20 = 0
+           |  ${Copies.sql("corpus", DocCols)}
            |  UNION ALL
            |  SELECT 750000 + i.i, lang, text FROM fl, generate_series(0, 5) i(i)
            |  UNION ALL
-           |  SELECT doc_id + 400000, lang, reverse(text) FROM corpus
-           |  WHERE doc_id % 20 = 4),
+           |  ${DecoysAgain.sql("corpus", DocCols)}),
            |${minhashCtes("i", "seedt")},
            |${minhashCtes("w", "wv")},
-           |dup AS (
-           |  ${verifiedDupCappedCte("w", "idocs", "ibands", HotBucketCap)}),
-           |acc AS (SELECT doc_id, lang, sz FROM wdocs
-           |        WHERE doc_id NOT IN (SELECT w_id FROM dup))
-           |SELECT lang, count(*) AS n_docs, CAST(sum(sz) AS BIGINT) AS sum_sz,
-           |  CAST(sum(doc_id) AS BIGINT) AS sum_id
-           |FROM acc GROUP BY lang ORDER BY lang""".stripMargin
+           |${MinhashIndex.acceptCtes("acc", "w", "idocs", "ibands", Some(HotBucketCap))}
+           |SELECT lang, n_docs, sum_sz, sum_id
+           |FROM (${MinhashIndex.rollupSql(1 -> "acc")})""".stripMargin
       })
   )
 }

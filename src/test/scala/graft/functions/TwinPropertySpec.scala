@@ -120,4 +120,13 @@ class TwinPropertySpec extends SparkSpec {
       ("reverseComplement", DnaFunctions.reverseComplement(d),
         DnaFunctions.reverseComplementSql("dna")))
   }
+
+  test("wave content-rule twins equal their Column functions, NULL and '' included") {
+    import graft.queries.Waves.{Reversed, Same, TextUpper, Upper}
+    val texts = Seq(null, "", " ", "a", "Ab", "abc def", "MiXeD case 42!", "tab\tend") ++
+      Seq.fill(50)(Seq.fill(rnd.nextInt(12))("aZ 9.-"(rnd.nextInt(6))).mkString)
+    val t = col("text")
+    agree(texts.toDF("text"))(Seq(Same, Reversed, Upper, TextUpper).map(c =>
+      (c.toString, c.col(t), c.sql("text"))): _*)
+  }
 }

@@ -3,6 +3,9 @@ package graft.streaming
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
 
+import graft.queries.QueriesLlm.dedupCorpus
+import graft.queries.Waves.{Copies, Decoys, DecoysAgain, NewDecoys}
+
 /** Epoch semantics of the streaming incremental dedup (q109).
   *
   * The DuckDB oracle pins the aggregate result; this spec pins the two
@@ -13,19 +16,17 @@ import org.apache.spark.sql.functions._
   *     streaming engine) rebuilt from scratch twice produces the
   *     identical rollup — the frozen-epoch design makes acceptance
   *     independent of how files land in batches.
-  *  2. Per-doc epoch placement: wave-1 exact copies (+200000 ids) and
-  *     wave-2 replayed-decoy twins (+400000 ids) never enter the
+  *  2. Per-doc epoch placement: wave-1 exact copies ([[Copies]]) and
+  *     wave-2 replayed-decoy twins ([[DecoysAgain]]) never enter the
   *     index — the twins are rejected EITHER because their wave-1 twin
   *     committed in epoch 1 or because whatever matched the twin in
   *     epoch 0 still matches, so their rejection is deterministic even
-  *     though its reason is not. Epoch 1 holds only +300000 decoys,
-  *     epoch 2 only +500000 fresh decoys, and epoch 0 is exactly the
-  *     seed corpus.
+  *     though its reason is not. Epoch 1 holds only [[Decoys]],
+  *     epoch 2 only [[NewDecoys]], and epoch 0 is exactly the seed
+  *     corpus. Each stratum's ids come from its declaration.
   *
   * A third property — replay/commit idempotence — is pinned by
-  * `StreamReplaySpec` (r17: the in-gate replay leg that re-ran wave 1
-  * end-to-end every bench pass was removed; it contributed 0 rows by
-  * construction). Per-batch staging writes are batchId-keyed
+  * `StreamReplaySpec`. Per-batch staging writes are batchId-keyed
   * overwrites, so a retried batch rewrites its own directory rather
   * than appending a second copy of its novelties.
   */
@@ -47,21 +48,20 @@ class StreamDedupSpec extends SparkSpec {
       .collect().map(r => r.getInt(0) -> (r.getLong(1), r.getLong(2), r.getLong(3)))
       .toMap
 
-    val corpusN = spark.read.parquet(s"$sf/documents.parquet")
-      .filter(col("doc_id") % 4 === 0 && length(col("text")) >= 3)
-      .count()
-    assert(byEpoch(0)._3 == corpusN, s"epoch 0 must be the seed corpus: $byEpoch")
+    val corpus = dedupCorpus(spark, sf)
+    assert(byEpoch(0)._3 == corpus.count(), s"epoch 0 must be the seed corpus: $byEpoch")
 
     // rejected strata never commit
-    val rejected = store.filter(
-      (col("doc_id") >= 200000L && col("doc_id") < 300000L) ||
-        (col("doc_id") >= 400000L && col("doc_id") < 500000L)).count()
+    val rejected = store.join(Copies.ids(corpus).unionByName(DecoysAgain.ids(corpus)),
+      Seq("doc_id"), "left_semi").count()
     assert(rejected == 0L, "an exact copy or a replayed decoy twin entered the index")
 
     // accepted strata land in the right epoch and only there
-    assert(byEpoch.get(1).forall { case (lo, hi, _) => lo >= 300000L && hi < 400000L },
-      s"epoch 1 must hold only +300000 decoys: $byEpoch")
-    assert(byEpoch.get(2).forall { case (lo, hi, _) => lo >= 500000L && hi < 600000L },
-      s"epoch 2 must hold only +500000 decoys: $byEpoch")
+    def strays(epoch: Int, ids: org.apache.spark.sql.DataFrame) =
+      store.filter(col("epoch") === epoch).join(ids, Seq("doc_id"), "left_anti").count()
+    assert(strays(1, Decoys.ids(corpus)) == 0L,
+      s"epoch 1 must hold only reversed decoys: $byEpoch")
+    assert(strays(2, NewDecoys.ids(corpus)) == 0L,
+      s"epoch 2 must hold only fresh decoys: $byEpoch")
   }
 }

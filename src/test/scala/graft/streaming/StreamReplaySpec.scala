@@ -6,18 +6,15 @@ import org.apache.spark.sql.functions._
 import graft.functions.DedupConfig.{SemIters, SemK, SemThreshX1e6, VecOffset}
 import graft.functions.MinhashPipeline.{acceptAgainstIndex, signedDocs}
 import graft.operators.{IvfKmeans, SemanticIndex}
-import graft.queries.QueriesLlm.{embeddings, semanticWaves}
+import graft.queries.QueriesLlm.embeddings
+import graft.queries.Waves.{SemWave1, wave}
 
 /** Replay / retry idempotence of the streaming index gates (q91, q109,
-  * q120, q132) — the properties their in-gate replay legs used to
-  * re-prove on EVERY bench pass until r17 (VERDICT r16 item 1: the
-  * q109 replay leg alone re-derived all of wave 1 — 2 extra
-  * micro-batches + 2 no-op commits, ~4.3 s of a ~9 s row,
-  * artifacts/r16_q109_attrib.md — for a corpus-independent property).
-  * The legs were removed from the gates (their contribution to every
-  * result was exactly 0 rows, by the same anti-join construction
-  * asserted here); this spec pins the properties once per build
-  * instead:
+  * q120, q132). The properties do not depend on the corpus, and a
+  * replay leg inside a gate adds exactly 0 rows by the anti-join
+  * construction asserted here (q109's cost ~4.3 s of a ~9 s row,
+  * artifacts/r16_q109_attrib.md), so this spec pins them once per
+  * build:
   *
   *  1. POST-COMMIT WHOLE-WAVE REPLAY ACCEPTS 0. After an epoch
   *     commits, every wave doc/vector matches the index — acceptances
@@ -61,11 +58,10 @@ class StreamReplaySpec extends SparkSpec {
     // disk; the commit's doc_id anti-join must make a re-commit a no-op
     val stagedSchema = signedDocs(
       w1.select(col("doc_id"), col("lang"), col("text")).limit(0)).schema
-    val staged = spark.read.schema(stagedSchema)
-      .parquet(s"$root/stage_1/batch=*")
-    val reAdded = staged
-      .join(spark.table("graft_q109_docs").select("doc_id"),
-        Seq("doc_id"), "left_anti").count()
+    val staged = StreamingOps.readStage(spark, s"$root/stage_1", stagedSchema)
+    assert(!staged.isEmpty, "no staged epoch-1 rows: the retry leg is vacuous")
+    val reAdded = StreamingOps.novel(staged, spark.table("graft_q109_docs"), "doc_id")
+      .count()
     assert(reAdded == 0L,
       s"commit-level retry of epoch 1 would add $reAdded docs")
   }
@@ -86,10 +82,10 @@ class StreamReplaySpec extends SparkSpec {
     assert(replayAccepted == 0L,
       s"checkpoint-cleared replay of wave 1 would commit $replayAccepted vectors")
     // commit-level retry over the staged epoch-1 files
-    val staged = spark.read.schema(w1.schema).parquet(s"$root/stage_1/batch=*")
-    val reAdded = staged
-      .join(spark.table("graft_q132_vecs").select("vec_id").distinct(),
-        Seq("vec_id"), "left_anti").count()
+    val staged = StreamingOps.readStage(spark, s"$root/stage_1", w1.schema)
+    assert(!staged.isEmpty, "no staged epoch-1 rows: the retry leg is vacuous")
+    val reAdded = StreamingOps.novel(staged, spark.table("graft_q132_vecs"), "vec_id")
+      .count()
     assert(reAdded == 0L,
       s"commit-level retry of epoch 1 would add $reAdded vectors")
     // q120 shares the wave strata and the acceptWave operator; its
@@ -98,8 +94,7 @@ class StreamReplaySpec extends SparkSpec {
     graft.SparkEntry.queries("q120_incremental_semantic_dedup")(spark, sf).collect()
     val h120 = h.copy(store =
       SemanticIndex.store(spark, s"$scratch/semdedup", "graft_q120_vecs"))
-    val (w1b, _) = semanticWaves(e)
-    val re120 = SemanticIndex.acceptWave(h120, w1b).count()
+    val re120 = SemanticIndex.acceptWave(h120, wave(e, SemWave1)).count()
     assert(re120 == 0L,
       s"post-commit replay of q120's wave 1 accepted $re120 vectors")
   }

@@ -39,4 +39,53 @@ class StreamingOpsSpec extends SparkSpec {
     val merged = existing.unionByName(first)
     assert(StreamingOps.upsertBatch(batch, merged, Seq("id")).count() == 0)
   }
+
+  test("readStage reads a missing stage, a zero-accept batch and a replayed batch id as the staged rows") {
+    val root = s"${graft.queries.Fixtures.scratchRoot}/stagespec"
+    graft.queries.Fixtures.rmrf(new java.io.File(root))
+    // nullable fields, as a file read gives them
+    val schema = Seq((Option(1L), "a")).toDF("id", "v").schema
+    def ids(df: org.apache.spark.sql.DataFrame) =
+      df.select("id").collect().map(_.getLong(0)).sorted.toSeq
+
+    val missing = StreamingOps.readStage(spark, s"$root/none", schema)
+    assert(missing.schema == schema && missing.isEmpty)
+
+    // a wave source of 4 one-file parts, oldest first, so the stream's
+    // 2-file batch 0 holds ids 1-4, which the accept rule rejects
+    val src = new java.io.File(s"$root/src")
+    src.mkdirs()
+    for (k <- 0 until 4) {
+      val d = s"$root/part$k"
+      Seq(2L * k + 1, 2L * k + 2).map(i => (i, s"t$i")).toDF("id", "v")
+        .coalesce(1).write.parquet(d)
+      val part = new java.io.File(d).listFiles().filter(_.getName.endsWith(".parquet")).head
+      val to = new java.io.File(src, s"part$k.parquet")
+      assert(part.renameTo(to) && to.setLastModified(1000000000000L + k * 60000L))
+    }
+    val stage = s"$root/stage"
+    def run(): Unit = StreamingOps.stageWave(spark, src.getPath, schema,
+      s"$root/ckpt", stage)(_.filter(col("id") > 4L))
+    run()
+    assert(new java.io.File(stage).list().filter(_.startsWith("batch=")).sorted.toSeq ==
+      Seq("batch=0", "batch=1"))
+    assert(spark.read.schema(schema).parquet(s"$stage/batch=0").isEmpty)
+    // a stray file and a dir that is not a batch are skipped
+    new java.io.File(s"$stage/not_a_batch").mkdirs()
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$stage/stray"), "x")
+    val staged = StreamingOps.readStage(spark, stage, schema)
+    assert(staged.schema == schema && ids(staged) == Seq(5L, 6L, 7L, 8L))
+
+    // a replay under the same batch ids (checkpoint cleared) starts from
+    // a cleared stage, so a stale batch dir of an earlier run is gone,
+    // and overwrites each batch dir: the stage reads the same rows, once
+    Seq((99L, "stale")).toDF("id", "v").write.parquet(s"$stage/batch=7")
+    graft.queries.Fixtures.rmrf(new java.io.File(s"$root/ckpt"))
+    run()
+    val replayed = StreamingOps.readStage(spark, stage, schema)
+    assert(ids(replayed) == Seq(5L, 6L, 7L, 8L))
+    // the commit filter keeps the staged ids the store lacks
+    assert(ids(StreamingOps.novel(replayed, Seq((5L, 0)).toDF("id", "n"), "id")) ==
+      Seq(6L, 7L, 8L))
+  }
 }

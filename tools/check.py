@@ -8,8 +8,9 @@ Each result line carries the oracle's wall seconds and the process's
 peak RSS so far (ru_maxrss, a high-water mark: it only rises, so a line
 shows the largest footprint of any oracle up to and including its own).
 The summary line `== N ok, M fail ==` is followed by the slowest
-oracles."""
-import duckdb, hashlib, json, resource, sys, os, time
+oracles. A file-gate oracle whose fixtures were written by a Verify of
+another dump fails as FIXTURE-STALE without running."""
+import duckdb, hashlib, json, re, resource, sys, os, time
 import pandas as pd
 
 SLOWEST = 5  # oracles listed after the summary line
@@ -45,6 +46,27 @@ def run_oracle(con, sf, sql):
     duck.to_parquet(tmp)
     os.replace(tmp, cpath)  # atomic: a killed run never leaves a torn cache
     return duck
+
+FIXTURE_DIR = re.compile(r"'([^']*/filegate)/")
+
+
+def stale_fixtures(sql, sf, out):
+    """None when every `filegate` fixture dir the oracle reads carries
+    the stamp of the Verify that wrote the dump `out` from `sf`, else
+    the FIXTURE-STALE report. A later Verify on the same scratch root
+    rewrites the fixtures (and the stamp), so the oracle would read
+    another run's files."""
+    want = {'dump': os.path.abspath(out), 'sf': os.path.abspath(sf)}
+    for d in sorted(set(FIXTURE_DIR.findall(sql))):
+        try:
+            with open(f'{d}/verify_stamp.json') as f:
+                stamp = json.load(f)
+        except (OSError, ValueError):
+            return f'FIXTURE-STALE {d} has no Verify stamp'
+        if stamp != want:
+            return f"FIXTURE-STALE {d} holds the fixtures of dump {stamp.get('dump')} ({stamp.get('sf')})"
+    return None
+
 
 def selected(name, only):
     """True when `name` contains one of the comma-separated substrings in
@@ -106,6 +128,11 @@ def main():
         if not selected(name, only):
             continue
         sql = oracle[name]
+        stale = stale_fixtures(sql, sf, out)
+        if stale:
+            print(f'{name}: {stale}')
+            n_fail += 1
+            continue
         t0 = time.monotonic()
         try:
             duck = run_oracle(con, sf, sql)

@@ -2,9 +2,10 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.functions.{DnaFunctions, VariantFunctions, ZygosityFunctions}
-import graft.sources.{Bucketed, Cf2, Fasta, Jdbc, Polyphen, Vcf}
+import graft.sources.{Bucketed, Cf2, Fasta, Jdbc, Polyphen, Tsv, Vcf}
 import graft.streaming.StreamingOps
 
 /** The strain loader: the reference's production chain
@@ -65,10 +66,16 @@ object StrainLoader {
   val StageColumnTypes =
     "chromosome VARCHAR(8), ref_nuc VARCHAR(16), var_nuc VARCHAR(16), variant_type VARCHAR(8)"
 
+  /** The columns of `in/transcripts.tsv` and `in/exons.tsv` ([[Tsv.read]];
+    * DuckDB twin [[Tsv.readSql]]). */
+  val TranscriptsSchema: StructType =
+    StructType.fromDDL("tid INT, t_chr STRING, strand STRING, t_start LONG, t_stop LONG")
+  val ExonsSchema: StructType =
+    StructType.fromDDL("tid INT, exon_idx INT, e_chr STRING, e_start LONG, e_stop LONG")
+
   /** Where one loader keeps its inputs (`in/genome.fa`,
-    * `in/transcripts.tsv` = tid, chr, strand, start, stop,
-    * `in/exons.tsv` = tid, exon_idx, chr, start, stop, and the VCFs),
-    * its tables, the bucketed store and the Derby database. */
+    * `in/transcripts.tsv`, `in/exons.tsv` and the VCFs), its tables,
+    * the bucketed store and the Derby database. */
   final case class Paths(root: java.io.File) {
     def in(n: String): String = new java.io.File(root, s"in/$n").getPath
     def table(n: String): String = new java.io.File(root, s"tables/$n").getPath
@@ -105,10 +112,8 @@ object StrainLoader {
 
   // ------------------------------------------------------------ set-up
 
-  private def tsv(spark: SparkSession, path: String, schema: String): DataFrame =
-    spark.read.option("sep", "\t").schema(schema).csv(path)
   private def transcripts(spark: SparkSession, p: Paths): DataFrame =
-    tsv(spark, p.in("transcripts.tsv"), "tid INT, t_chr STRING, strand STRING, t_start LONG, t_stop LONG")
+    Tsv.read(spark, p.in("transcripts.tsv"), TranscriptsSchema)
 
   /** The gene table: one interval per transcript span. */
   def genes(spark: SparkSession, p: Paths): Unit =
@@ -124,7 +129,7 @@ object StrainLoader {
     val lines = spark.read.text(p.in("genome.fa")).rdd.zipWithIndex()
       .map { case (r, i) => (i, r.getString(0)) }.toDF("line_id", "line")
     val chunks = Fasta.toChunks(Fasta.parseLines(lines), width = ChunkWidth)
-    val ex = tsv(spark, p.in("exons.tsv"), "tid INT, exon_idx INT, e_chr STRING, e_start LONG, e_stop LONG")
+    val ex = Tsv.read(spark, p.in("exons.tsv"), ExonsSchema)
       .join(transcripts(spark, p).select("tid", "strand"), "tid")
     CdsAssembly.assemble(Fasta.fetch(ex, chunks, ChunkWidth, "e_chr", "e_start", "e_stop")).exons
       .write.mode("overwrite").parquet(p.table("exon_dna"))
@@ -167,6 +172,41 @@ object StrainLoader {
   private def singleBase(ref: Column, alt: Column): Column =
     length(ref) === 1 && length(alt) === 1
 
+  /** The genotype cell `gt` (GT:AD:DP) of each [[Vcf.read]] row as `call`,
+    * `ad` (the AD list) and `dp`, each NULL when missing (`dp` also when not a number). */
+  def genotypeCells(vcf: DataFrame): DataFrame =
+    vcf.withColumn("f", split(col("gt"), ":"))
+      .withColumn("call", element_at(col("f"), 1))
+      .withColumn("ad", split(try_element_at(col("f"), lit(2)), ","))
+      .withColumn("dp", expr("try_cast(try_element_at(f, 3) AS INT)"))
+
+  /** DuckDB twin of [[genotypeCells]] over the relation `rows`. */
+  def genotypeCellsSql(rows: String): String =
+    s"""SELECT *, f[1] AS call, string_split(f[2], ',') AS ad, TRY_CAST(f[3] AS INTEGER) AS dp
+       |FROM (SELECT *, string_split(gt, ':') AS f FROM $rows)""".stripMargin
+
+  /** The reads of allele `i` (1 = REF) in the AD list, 0 past its end. */
+  private def depth(i: Column): Column = coalesce(try_element_at(col("ad"), i).cast("int"), lit(0))
+
+  /** One row per distinct allele index `a_idx` > 0 of each `/`-split call
+    * (all of them in `called`), with its alt allele `va` and `allele_depth`. */
+  def calledAlleles(cells: DataFrame): DataFrame =
+    cells
+      .withColumn("called", expr("array_distinct(filter(transform(split(call, '/'), " +
+        "x -> try_cast(x AS INT)), x -> x IS NOT NULL AND x > 0))"))
+      .withColumn("a_idx", explode(col("called")))
+      .withColumn("va", element_at(split(col("alt"), ","), col("a_idx")))
+      .withColumn("allele_depth", depth(col("a_idx") + 1))
+
+  /** DuckDB twin of [[calledAlleles]] over the relation `cells`. */
+  def calledAllelesSql(cells: String): String =
+    s"""SELECT *, string_split(alt, ',')[a_idx] AS va,
+       |  coalesce(CAST(ad[a_idx + 1] AS INTEGER), 0) AS allele_depth
+       |FROM (SELECT *, unnest(called) AS a_idx FROM (
+       |  SELECT * EXCLUDE (ix), list_filter(ix, (x, i) -> x > 0 AND list_position(ix, x) = i) AS called
+       |  FROM (SELECT *, list_transform(string_split(call, '/'), x -> TRY_CAST(x AS INTEGER)) AS ix
+       |    FROM $cells)))""".stripMargin
+
   /** sources.vcf_convert: VCF -> per-strain gzip CF2, with the
     * converter's skip rules counted by rule. */
   def vcfConvert(spark: SparkSession, vcf: String, out: Out,
@@ -174,22 +214,11 @@ object StrainLoader {
     val call = col("call")
     val called = call =!= "0/0" && call =!= "./."
     def n(c: Column): Column = sum(when(c, 1L).otherwise(0L))
-    val g = Vcf.read(spark, vcf)
-      .withColumn("f", split(col("gt"), ":"))
-      .withColumn("call", element_at(col("f"), 1))
-      .withColumn("ad", split(try_element_at(col("f"), lit(2)), ","))
-      .withColumn("dp", expr("try_cast(try_element_at(f, 3) AS INT)"))
+    val g = genotypeCells(Vcf.read(spark, vcf))
       .observe(obsIn, count(lit(1)).as("rows_in"), n(call === "0/0").as("hom_ref"),
         n(call === "./.").as("missing"), n(col("gt").isNull).as("short"),
         n(called).as("called"))
-    val alleles = expr("array_distinct(filter(transform(split(call, '/'), " +
-      "x -> try_cast(x AS INT)), x -> x IS NOT NULL AND x > 0))")
-    def depth(i: Column): Column = coalesce(try_element_at(col("ad"), i).cast("int"), lit(0))
-    val a = g
-      .withColumn("called", alleles)
-      .withColumn("a_idx", explode(col("called")))
-      .withColumn("va", element_at(split(col("alt"), ","), col("a_idx")))
-      .withColumn("allele_depth", depth(col("a_idx") + 1))
+    val a = calledAlleles(g)
       .withColumn("poss_err", ZygosityFunctions.possibleErrorFlag(
         ZygosityFunctions.percentRead(col("allele_depth"), col("dp"))) === "Y")
       .observe(obsAllele, count(lit(1)).as("allele_rows"),

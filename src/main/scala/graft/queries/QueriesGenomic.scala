@@ -45,8 +45,8 @@ object QueriesGenomic {
     * base ACGT[vid % 4] in front, in both engines. */
   private val vcfAlleleCols: Seq[(String, String)] = {
     val pad = "substr('ACGT', CAST(vid % 4 AS INT) + 1, 1)"
-    Seq("vcf_ref" -> s"CASE WHEN kind = 0 THEN $pad ELSE concat($pad, ref_nuc) END",
-      "vcf_var" -> s"CASE WHEN kind = 0 THEN concat($pad, var_nuc) ELSE $pad END")
+    Seq("vcf_ref" -> s"CASE WHEN kind = 0 THEN $pad ELSE $pad || ref_nuc END",
+      "vcf_var" -> s"CASE WHEN kind = 0 THEN $pad || var_nuc ELSE $pad END")
   }
 
   val all: Seq[Q] = Seq(

@@ -3,14 +3,16 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import scala.jdk.CollectionConverters._
+
 import graft.functions.{VariantFunctions, ZygosityFunctions}
 import graft.operators.{CdsAssembly, RangeJoin, StrainLoader}
-import graft.sources.{Cf2, Fasta, Jdbc, Polyphen, Vcf}
+import graft.sources.{Cf2, Fasta, Jdbc, Polyphen, Tsv, Vcf}
 
 /** File-format source queries — the reference pipeline's *front door*
   * (S1-S3/K1): real text files written to disk, read back through the
-  * graft readers, and hash-compared against a DuckDB `read_csv` oracle
-  * over the very same files.
+  * graft readers, and hash-compared against a DuckDB oracle that reads
+  * the very same files through the readers' `...Sql` twins.
   *
   * Fixture files live under a fixed path so the static oracle SQL can
   * reference them; each query (re)writes its fixture when invoked, so
@@ -31,64 +33,39 @@ object QueriesSources {
   private val VcfGts = Array("0/0", "0/1", "1/1", "0/1", "./.")
   private val VcfPath = s"$FixtureDir/sample.vcf"
   private val VcfLines = 600
+  private val VcfHeader = (Vcf.FixedCols.map(_.toUpperCase).updated(0, "#CHROM") ++ VcfStrains).mkString(Tsv.Tab)
+
+  /** Write `lines` to `path`, each ended by a newline. */
+  private def writeLines(path: String, lines: Seq[String]): Unit = {
+    val f = java.nio.file.Paths.get(path)
+    java.nio.file.Files.createDirectories(f.getParent)
+    java.nio.file.Files.write(f, lines.asJava)
+  }
 
   /** Deterministic VCF fixture: pure function of the line index — the
     * file IS the input under test (the reference's VCFs arrive from
     * sequencing pipelines); generation is driver-side by design. */
-  private def writeVcfFixture(): Unit = {
-    val f = new java.io.File(VcfPath)
-    f.getParentFile.mkdirs()
-    val w = new java.io.PrintWriter(f)
-    try {
-      w.println("##fileformat=VCFv4.2")
-      w.println("##source=graft-filegate")
-      w.println((Seq("#CHROM", "POS", "ID", "REF", "ALT", "QUAL", "FILTER",
-        "INFO", "FORMAT") ++ VcfStrains).mkString("\t"))
+  private def writeVcfFixture(): Unit = writeLines(VcfPath, Seq(
+    "##fileformat=VCFv4.2", "##source=graft-filegate",
+    VcfHeader) ++
+    (0 until VcfLines).map { i =>
       val bases = "ACGT"
-      var i = 0
-      while (i < VcfLines) {
-        val chrom = ((i % 5) + 1).toString
-        val pos = 1000 + i * 13 + (i % 7)
-        val id = "rs" + (100000 + i * 3)
-        val ref = bases.charAt(i % 4).toString
-        val alt = bases.charAt((i + 1 + i % 3) % 4).toString
-        val qual = (i % 60).toString
-        val filt = if (i % 10 == 0) "q10" else "PASS"
-        val info = "DP=" + (20 + i % 80)
-        val gts = VcfStrains.indices.map(s => VcfGts((i * 7 + s * 3) % 5))
-        w.println((Seq(chrom, pos.toString, id, ref, alt, qual, filt, info,
-          "GT") ++ gts).mkString("\t"))
-        i += 1
-      }
-    } finally w.close()
-  }
+      (Seq(((i % 5) + 1).toString, (1000 + i * 13 + (i % 7)).toString, "rs" + (100000 + i * 3),
+        bases.charAt(i % 4).toString, bases.charAt((i + 1 + i % 3) % 4).toString,
+        (i % 60).toString, if (i % 10 == 0) "q10" else "PASS", "DP=" + (20 + i % 80), "GT") ++
+        VcfStrains.indices.map(s => VcfGts((i * 7 + s * 3) % 5))).mkString(Tsv.Tab)
+    })
 
-  /** A literal TAB character for DuckDB `delim` (triple-quoted Scala
-    * strings keep `\t` as two chars, which DuckDB's sniffer rejects). */
-  private val Tab = "\t"
-
-  private val vcfOracle: String = {
-    val cols = (1 to 13).map(i => s"'c$i':'VARCHAR'").mkString("{", ",", "}")
-    val perStrain = VcfStrains.zipWithIndex.map { case (s, i) =>
-      s"""SELECT c1 AS chrom, CAST(c2 AS BIGINT) AS pos, c8 AS info,
-         |       '$s' AS strain, c${10 + i} AS gt FROM raw""".stripMargin
-    }.mkString("\nUNION ALL\n")
-    s"""WITH raw AS (
-       |  SELECT * FROM read_csv('$VcfPath', delim='$Tab', header=false,
-       |    auto_detect=false, null_padding=true, columns=$cols)
-       |  WHERE c1 NOT LIKE '#%'
-       |), long AS (
-       |$perStrain
-       |)
-       |SELECT chrom, strain,
+  private val vcfOracle: String =
+    s"""SELECT chrom, strain,
        |  count(*) AS n_rows,
        |  CAST(sum(CASE WHEN gt <> './.' THEN 1 ELSE 0 END) AS BIGINT) AS n_called,
        |  CAST(sum(CASE WHEN gt = '0/1' THEN 1 ELSE 0 END) AS BIGINT) AS n_het,
        |  CAST(sum(CASE WHEN gt = '1/1' THEN 1 ELSE 0 END) AS BIGINT) AS n_hom_alt,
        |  CAST(sum(pos) AS BIGINT) AS sum_pos,
        |  CAST(sum(CAST(substr(info, 4) AS BIGINT)) AS BIGINT) AS sum_dp
-       |FROM long GROUP BY chrom, strain ORDER BY chrom, strain""".stripMargin
-  }
+       |FROM (${Vcf.readSql(VcfPath, VcfStrains)})
+       |GROUP BY chrom, strain ORDER BY chrom, strain""".stripMargin
 
   // ---------------------------------------------------------------- q79
   // K1+S3: CF2 writer/reader round trip (16-col gzip TSV,
@@ -138,24 +115,14 @@ object QueriesSources {
        |FROM variants WHERE kind >= 2
        |GROUP BY 1 ORDER BY 1""".stripMargin
 
-  private val cf2Oracle: String = {
-    val typed = Cf2.schema.fields.map { f =>
-      val t = f.dataType.typeName match {
-        case "long" => "BIGINT"
-        case "integer" => "INTEGER"
-        case _ => "VARCHAR"
-      }
-      s"'${f.name}':'$t'"
-    }.mkString("{", ",", "}")
+  private val cf2Oracle: String =
     s"""SELECT chromosome, count(*) AS n,
        |  CAST(sum(position) AS BIGINT) AS sum_pos,
        |  CAST(sum(total_depth) AS BIGINT) AS sum_depth,
        |  CAST(sum(reads_a + reads_c + reads_g + reads_t) AS BIGINT) AS sum_reads,
        |  CAST(count(DISTINCT rs_id) AS BIGINT) AS n_rs
-       |FROM read_csv('$Cf2Path/*.csv.gz', delim='$Tab', header=false,
-       |  auto_detect=false, columns=$typed)
+       |FROM (${Cf2.readSql(s"$Cf2Path/*.csv.gz")})
        |GROUP BY chromosome ORDER BY chromosome""".stripMargin
-  }
 
   // ---------------------------------------------------------------- q80
   // S15+F12+J11: PolyPhen results loader (`PolyphenLoader.java:97-180`):
@@ -179,99 +146,54 @@ object QueriesSources {
     * 13th line (→ unmatched results dropped, and the positional rank
     * of later duplicates shifts, which the oracle must reproduce). */
   private def writePolyphenFixture(): Unit = {
-    val rf = new java.io.File(PolyphenPath)
-    rf.getParentFile.mkdirs()
-    val rw = new java.io.PrintWriter(rf)
-    val iw = new java.io.PrintWriter(new java.io.File(PolyphenInfoPath))
-    try {
-      rw.println("#" + graft.sources.Polyphen.schema.fieldNames.mkString("\t"))
-      iw.println("#" + graft.sources.Polyphen.infoSchema.fieldNames.mkString("\t"))
-      var i = 0
-      while (i < PolyphenRows) {
-        val prot = "NP_" + (1000 + i % 40)
-        val pos = (100 + (i % 25) * 3).toString
-        val refAA = AAs.charAt(i % 20).toString
-        val varAA = AAs.charAt((i + 7) % 20).toString
-        val swapped = i % 11 == 0
-        val (o1, o2) = if (swapped) (varAA, refAA) else (refAA, varAA)
-        val pred = Seq("benign", "possibly damaging", "probably damaging")(i % 3)
-        val prob = (i % 64).toDouble / 64.0 // binary-exact → exact sums
-        val byName = Map(
-          "o_acc" -> ("  " + prot), // space-padded: the reader must trim
-          // every 17th o_pos is zero-padded: the pairing must normalize
-          // positions numerically ('042' == '42'), as the reference's
-          // Integer.parseInt round-trip does
-          "o_pos" -> (if (i % 17 == 0) "0" + pos else pos),
-          "o_aa1" -> o1, "o_aa2" -> o2,
-          "rsid" -> ("rs" + (500000 + i)), // monotone == file order
-          "acc" -> prot, "pos" -> pos,
-          "aa1" -> refAA, "aa2" -> varAA,
-          "nt1" -> "A", "nt2" -> "G",
-          "prediction" -> (pred + " "), // trailing pad: trim again
-          "based_on" -> "alignment", "effect" -> ".",
-          "pph2_class" -> (if (prob > 0.5) "deleterious" else "neutral"),
-          "pph2_prob" -> prob.toString)
-        rw.println(Polyphen.schema.fieldNames
-          .map(n => byName.getOrElse(n, ".")).mkString("\t"))
-        if (i % 13 != 0) {
-          iw.println(Seq((9000000 + i).toString, "Gene" + (i % 30), prot,
-            pos, refAA, varAA, if (i % 2 == 0) "+" else "-",
-            (70000 + i % 50).toString).mkString("\t"))
-        }
-        i += 1
-      }
-    } finally { rw.close(); iw.close() }
+    val rows = (0 until PolyphenRows).map { i =>
+      val prot = "NP_" + (1000 + i % 40)
+      val pos = (100 + (i % 25) * 3).toString
+      val refAA = AAs.charAt(i % 20).toString
+      val varAA = AAs.charAt((i + 7) % 20).toString
+      val (o1, o2) = if (i % 11 == 0) (varAA, refAA) else (refAA, varAA) // swapped: rejected
+      val pred = Seq("benign", "possibly damaging", "probably damaging")(i % 3)
+      val prob = (i % 64).toDouble / 64.0 // binary-exact → exact sums
+      val byName = Map(
+        "o_acc" -> ("  " + prot), // space-padded: the reader must trim
+        // every 17th o_pos is zero-padded: the pairing must normalize
+        // positions numerically ('042' == '42'), as the reference's
+        // Integer.parseInt round-trip does
+        "o_pos" -> (if (i % 17 == 0) "0" + pos else pos),
+        "o_aa1" -> o1, "o_aa2" -> o2,
+        "rsid" -> ("rs" + (500000 + i)), // monotone == file order
+        "acc" -> prot, "pos" -> pos,
+        "aa1" -> refAA, "aa2" -> varAA,
+        "nt1" -> "A", "nt2" -> "G",
+        "prediction" -> (pred + " "), // trailing pad: trim again
+        "based_on" -> "alignment", "effect" -> ".",
+        "pph2_class" -> (if (prob > 0.5) "deleterious" else "neutral"),
+        "pph2_prob" -> prob.toString)
+      (Polyphen.schema.fieldNames.map(n => byName.getOrElse(n, ".")).mkString(Tsv.Tab),
+        Option.when(i % 13 != 0)(Seq((9000000 + i).toString, "Gene" + (i % 30), prot,
+          pos, refAA, varAA, if (i % 2 == 0) "+" else "-", (70000 + i % 50).toString)
+          .mkString(Tsv.Tab)))
+    }
+    writeLines(PolyphenPath, ("#" + Polyphen.schema.fieldNames.mkString(Tsv.Tab)) +: rows.map(_._1))
+    writeLines(PolyphenInfoPath,
+      ("#" + Polyphen.infoSchema.fieldNames.mkString(Tsv.Tab)) +: rows.flatMap(_._2))
   }
 
-  private val polyphenOracle: String = {
-    val rcols = Polyphen.schema.fieldNames
-      .map(n => s"'$n':'VARCHAR'").mkString("{", ",", "}")
-    val icols = Polyphen.infoSchema.fieldNames
-      .map(n => s"'$n':'VARCHAR'").mkString("{", ",", "}")
-    s"""WITH rraw AS (
-       |  SELECT * FROM read_csv('$PolyphenPath', delim='$Tab', header=false,
-       |    auto_detect=false, null_padding=true, columns=$rcols)
-       |  WHERE o_acc NOT LIKE '#%'
-       |), res AS (
-       |  SELECT trim(o_acc) AS r_acc, TRY_CAST(trim(o_pos) AS BIGINT) AS r_pos,
-       |         trim(o_aa1) AS r_aa1, trim(o_aa2) AS r_aa2,
-       |         trim(rsid) AS rsid, trim(prediction) AS prediction,
-       |         CAST(trim(pph2_prob) AS DOUBLE) AS pph2_prob
-       |  FROM rraw
-       |  WHERE NOT (trim(o_aa1) = trim(aa2) AND trim(o_aa2) = trim(aa1))
-       |), rn_res AS (
-       |  SELECT *, row_number() OVER (
-       |    PARTITION BY r_acc, r_pos, r_aa1, r_aa2 ORDER BY rsid) AS rn
-       |  FROM res
-       |), inf AS (
-       |  SELECT CAST(variant_id AS BIGINT) AS variant_id, gene_symbol,
-       |         protein_acc_id, TRY_CAST(i_pos AS BIGINT) AS i_pos, ref_aa, var_aa,
-       |         row_number() OVER (
-       |           PARTITION BY protein_acc_id, TRY_CAST(i_pos AS BIGINT), ref_aa, var_aa
-       |           ORDER BY CAST(variant_id AS BIGINT)) AS rn
-       |  FROM read_csv('$PolyphenInfoPath', delim='$Tab', header=false,
-       |    auto_detect=false, null_padding=true, columns=$icols)
-       |  WHERE variant_id NOT LIKE '#%'
-       |)
+  private val polyphenOracle: String =
+    s"""WITH res AS (
+       |  SELECT * FROM (${Polyphen.readSql(PolyphenPath)}) WHERE NOT (${Polyphen.SwappedAASql})),
+       |inf AS (${Polyphen.readInfoSql(PolyphenInfoPath)})
        |SELECT prediction, count(*) AS n,
-       |  round(sum(pph2_prob), 6) AS sum_prob,
+       |  round(sum(CAST(pph2_prob AS DOUBLE)), 6) AS sum_prob,
        |  CAST(count(DISTINCT gene_symbol) AS BIGINT) AS n_genes,
        |  CAST(sum(variant_id) AS BIGINT) AS sum_vid
-       |FROM rn_res JOIN inf ON r_acc = protein_acc_id AND r_pos = i_pos
-       |  AND r_aa1 = ref_aa AND r_aa2 = var_aa AND rn_res.rn = inf.rn
+       |FROM (${Polyphen.pairWithInfoSql("res", "inf", "rsid", "variant_id")})
        |GROUP BY prediction
        |UNION ALL
-       |SELECT '__unmatched' AS prediction, count(*) AS n,
-       |  round(CAST(0 AS DOUBLE), 6) AS sum_prob,
-       |  CAST(count(DISTINCT u.r_acc) AS BIGINT) AS n_genes,
-       |  CAST(0 AS BIGINT) AS sum_vid
-       |FROM (
-       |  SELECT r.r_acc FROM rn_res r LEFT JOIN inf i
-       |    ON r.r_acc = i.protein_acc_id AND r.r_pos = i.i_pos
-       |    AND r.r_aa1 = i.ref_aa AND r.r_aa2 = i.var_aa AND r.rn = i.rn
-       |  WHERE i.protein_acc_id IS NULL) u
+       |SELECT '__unmatched', count(*), round(CAST(0 AS DOUBLE), 6),
+       |  CAST(count(DISTINCT o_acc) AS BIGINT), CAST(0 AS BIGINT)
+       |FROM (${Polyphen.unmatchedResultsSql("res", "inf", "rsid", "variant_id")})
        |ORDER BY prediction""".stripMargin
-  }
 
   // ---------------------------------------------------------------- q83
   // S16: PolyPhen log scraper (`PolyphenFasta.readProteinAccIds:
@@ -283,50 +205,24 @@ object QueriesSources {
   private val LogPath = s"$FixtureDir/polyphen_run.log"
   private val LogLines = 400
 
-  private def writeLogFixture(): Unit = {
-    val f = new java.io.File(LogPath)
-    f.getParentFile.mkdirs()
-    val w = new java.io.PrintWriter(f)
-    try {
-      var i = 0
-      while (i < LogLines) {
-        val line = (i % 7) match {
-          case 0 => s"ERROR: Unable to locate protein entry NP_${1000 + i % 60} for map key 372"
-          case 1 => "ERROR: transcript mapping failed downstream"
-          case 2 => "WARN: Unable to locate protein entry NP_9999 ignored"
-          case _ => s"INFO: processed chunk $i"
-        }
-        w.println(line)
-        i += 1
-      }
-    } finally w.close()
-  }
+  private def writeLogFixture(): Unit = writeLines(LogPath, (0 until LogLines).map { i =>
+    (i % 7) match {
+      case 0 => s"ERROR: Unable to locate protein entry NP_${1000 + i % 60} for map key 372"
+      case 1 => "ERROR: transcript mapping failed downstream"
+      case 2 => "WARN: Unable to locate protein entry NP_9999 ignored"
+      case _ => s"INFO: processed chunk $i"
+    }
+  })
 
-  private val logOracle: String = {
-    val icols = Polyphen.infoSchema.fieldNames
-      .map(n => s"'$n':'VARCHAR'").mkString("{", ",", "}")
-    s"""WITH lines AS (
-       |  SELECT line FROM read_csv('$LogPath', delim='$Tab', header=false,
-       |    auto_detect=false, columns={'line':'VARCHAR'})),
-       |missing AS (
-       |  SELECT DISTINCT acc AS protein_acc_id FROM (
-       |    SELECT regexp_extract(line,
-       |      '^ERROR: Unable to locate protein entry (\\S+) ', 1) AS acc
-       |    FROM lines
-       |    WHERE line LIKE 'ERROR: Unable to locate protein entry %')
-       |  WHERE acc <> ''),
-       |known AS (
-       |  SELECT DISTINCT protein_acc_id
-       |  FROM read_csv('$PolyphenInfoPath', delim='$Tab', header=false,
-       |    auto_detect=false, null_padding=true, columns=$icols)
-       |  WHERE variant_id NOT LIKE '#%')
-       |SELECT (k.protein_acc_id IS NOT NULL) AS in_info,
+  private val logOracle: String =
+    s"""SELECT (k.protein_acc_id IS NOT NULL) AS in_info,
        |  count(*) AS n_accs,
        |  min(m.protein_acc_id) AS first_acc,
        |  max(m.protein_acc_id) AS last_acc
-       |FROM missing m LEFT JOIN known k ON m.protein_acc_id = k.protein_acc_id
+       |FROM (${Polyphen.scrapeMissingProteinsSql(LogPath)}) m
+       |LEFT JOIN (SELECT DISTINCT protein_acc_id FROM (${Polyphen.readInfoSql(PolyphenInfoPath)})) k
+       |  ON m.protein_acc_id = k.protein_acc_id
        |GROUP BY 1 ORDER BY 1""".stripMargin
-  }
 
   // ---------------------------------------------------------------- q84
   // The reference's production flow end to end over one input
@@ -403,7 +299,7 @@ object QueriesSources {
         "substr('ACGT', CAST(vid % 4 AS INT) + 1, 1) AS pad")
       .selectExpr("chromosome AS chrom", "CAST(pos AS BIGINT) AS pos",
         "concat('rs', CAST(vid AS STRING)) AS id",
-        s"""concat_ws('$Tab', chromosome, CAST(pos AS STRING), concat('rs', CAST(vid AS STRING)),
+        s"""concat_ws('${Tsv.Tab}', chromosome, CAST(pos AS STRING), concat('rs', CAST(vid AS STRING)),
            |  CASE WHEN kind = 0 THEN pad WHEN kind = 1 AND vid % 3 = 0 THEN ref_nuc
            |       WHEN kind = 1 THEN concat(pad, ref_nuc) ELSE ref_nuc END,
            |  CASE WHEN kind = 0 THEN concat(pad, var_nuc)
@@ -419,7 +315,7 @@ object QueriesSources {
     Vcf.writeSorted(spark, lines, Seq("##fileformat=VCFv4.2", "##source=graft-chain",
       "##FORMAT=<ID=GT,Number=1,Type=String>", "##FORMAT=<ID=AD,Number=R,Type=Integer>",
       "##FORMAT=<ID=DP,Number=1,Type=Integer>",
-      (Vcf.FixedCols.map(_.toUpperCase).updated(0, "#CHROM") ++ VcfStrains).mkString(Tab)),
+      VcfHeader),
       p.in("wave1.vcf"))
     p
   }
@@ -430,14 +326,9 @@ object QueriesSources {
 
   private val chainOracle: String = {
     val p = StrainLoader.Paths(ChainRoot)
-    def csv(name: String, cols: String, extra: String = "") =
-      s"read_csv('${p.in(name)}/part-*', delim='$Tab', header=false, auto_detect=false$extra, " +
-        s"columns={$cols})"
-    val cols = (1 to 9 + VcfStrains.size).map(i => s"'c$i':'VARCHAR'").mkString(",")
-    val perStrain = VcfStrains.zipWithIndex.map { case (s, i) =>
-      s"SELECT c1 AS chrom, CAST(c2 AS BIGINT) AS pos, c4 AS ref, c5 AS alt, " +
-        s"c${10 + i} AS gt, '${ChainGenders(s)}' AS gender FROM raw"
-    }.mkString("\n  UNION ALL ")
+    def in(name: String) = p.in(name) + "/part-*"
+    val gender = ChainGenders.map { case (s, g) => s"WHEN '$s' THEN '$g'" }
+      .mkString("CASE strain ", " ", " END")
     val adj = VariantFunctions.adjustForIndelsSql("pos", "ref", "va").toMap
     val status = ZygosityFunctions.zygosityStatusSql("pct", "chromosome", "position", "gender")
     val genic = RangeJoin.coveredSql("tx", Seq("v.chromosome"), Seq("t_chr"), "v.position",
@@ -460,23 +351,12 @@ object QueriesSources {
       .map { case (n, q) =>
         s"SELECT '~pass', '$n', '', CAST(($q) AS BIGINT)${", 0" * (ChainAggs.size - 1)}"
       }.mkString("\nUNION ALL ")
-    s"""WITH raw AS (
-       |  SELECT * FROM ${csv("wave1.vcf", cols, ", quote='', null_padding=true")}
-       |  WHERE c1 NOT LIKE '#%'),
-       |long AS ($perStrain),
-       |parsed AS (
-       |  SELECT chrom, pos, ref, alt, gender, gt, split_part(gt, ':', 1) AS call,
-       |    string_split(split_part(gt, ':', 2), ',') AS ad,
-       |    TRY_CAST(split_part(gt, ':', 3) AS INTEGER) AS dp
-       |  FROM long),
-       |al AS (
-       |  SELECT *, ${ZygosityFunctions.percentReadSql("adA", "dp")} AS pct FROM (
-       |    SELECT p.chrom, p.pos, p.ref, p.gender, p.dp, string_split(p.alt, ',')[u.a] AS va,
-       |      coalesce(TRY_CAST(p.ad[u.a + 1] AS INTEGER), 0) AS adA
-       |    FROM parsed p, LATERAL (
-       |      SELECT DISTINCT TRY_CAST(x AS INTEGER) AS a
-       |      FROM unnest(string_split(p.call, '/')) t(x)
-       |      WHERE TRY_CAST(x AS INTEGER) > 0) u)),
+    // MATERIALIZED: several facts read parsed and al, which DuckDB would rescan per reference
+    s"""WITH parsed AS MATERIALIZED (${StrainLoader.genotypeCellsSql(
+         s"(SELECT chrom, pos, ref, alt, gt, $gender AS gender FROM (${Vcf.readSql(in("wave1.vcf"), VcfStrains)}))")}),
+       |al AS MATERIALIZED (
+       |  SELECT *, ${ZygosityFunctions.percentReadSql("allele_depth", "dp")} AS pct
+       |  FROM (${StrainLoader.calledAllelesSql("parsed")})),
        |conv AS (
        |  SELECT chrom AS chromosome, gender, pct, ${adj("pos")} AS position,
        |    coalesce(${adj("ref_nuc")}, '') AS ref_nuc, coalesce(${adj("var_nuc")}, '') AS var_nuc
@@ -489,11 +369,11 @@ object QueriesSources {
        |    row_number() OVER (ORDER BY chromosome, position, ref_nuc, var_nuc) AS rgd_id
        |  FROM conv GROUP BY 1, 2, 3, 4),
        |${Synthetic.genomeSql(s"SELECT n_nationkey + 1 AS c FROM nation WHERE n_nationkey < $ChainChrs", ChainGenomeLines)},
-       |tx AS (SELECT * FROM ${csv("transcripts.tsv", "'tid':'INTEGER','t_chr':'VARCHAR','strand':'VARCHAR','t_start':'BIGINT','t_stop':'BIGINT'")}),
+       |tx AS (${Tsv.readSql(in("transcripts.tsv"), StrainLoader.TranscriptsSchema)}),
        |exn AS (
        |  SELECT e.*, t.strand,
        |    substr(cs.seq, CAST(e.e_start AS INT), CAST(e.e_stop - e.e_start + 1 AS INT)) AS dna
-       |  FROM ${csv("exons.tsv", "'tid':'INTEGER','exon_idx':'INTEGER','e_chr':'VARCHAR','e_start':'BIGINT','e_stop':'BIGINT'")} e
+       |  FROM (${Tsv.readSql(in("exons.tsv"), StrainLoader.ExonsSchema)}) e
        |  JOIN tx t USING (tid) JOIN chrseq cs ON CAST(cs.c AS VARCHAR) = e.e_chr),
        |${CdsAssembly.assembleSql("exn")},
        |${CdsAssembly.exonHitsSql("vars", "chromosome", "e_chr", "position")},

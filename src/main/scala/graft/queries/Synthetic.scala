@@ -83,8 +83,8 @@ object Synthetic {
         |  WHEN 4 THEN 'copy number gain'
         |  ELSE 'microsatellite'
         |END""".stripMargin,
-    "name" -> "concat('NM_00', CAST(o_orderkey % 97 AS STRING), '.3(p.Val', CAST(o_orderkey % 50 AS STRING), 'Met)')",
-    "rs_id" -> "CASE WHEN o_orderkey % 4 = 0 THEN concat('rs', CAST(o_orderkey * 3 + 101 AS STRING)) END",
+    "name" -> "'NM_00' || CAST(o_orderkey % 97 AS STRING) || '.3(p.Val' || CAST(o_orderkey % 50 AS STRING) || 'Met)'",
+    "rs_id" -> "CASE WHEN o_orderkey % 4 = 0 THEN 'rs' || CAST(o_orderkey * 3 + 101 AS STRING) END",
     "ref_nuc" ->
       """CASE (o_orderkey % 11)
         |  WHEN 0 THEN ''
@@ -121,11 +121,11 @@ object Synthetic {
   val elementCols: Seq[(String, String)] = Seq(
     "rgd_id" -> "o_orderkey",
     "source" -> "CASE (o_orderkey % 3) WHEN 0 THEN 'ClinVar' WHEN 1 THEN 'CLINVAR' ELSE 'OMIM' END",
-    "symbol" -> "concat('RCV', CAST(o_orderkey * 7 + 13 AS STRING))")
+    "symbol" -> "'RCV' || CAST(o_orderkey * 7 + 13 AS STRING)")
   val elementExtraCols: Seq[(String, String)] = Seq(
     "rgd_id" -> "o_orderkey",
     "source" -> "'OMIM'",
-    "symbol" -> "concat('OM', CAST(o_orderkey AS STRING))")
+    "symbol" -> "'OM' || CAST(o_orderkey AS STRING)")
 
   private def selectList(cols: Seq[(String, String)]): String =
     cols.map { case (n, e) => s"($e) AS $n" }.mkString(", ")

@@ -44,6 +44,9 @@ object Cf2 {
       .option("emptyValue", "")
       .csv(path)
 
+  /** DuckDB twin of [[read]] ([[Tsv.readSql]]). */
+  def readSql(files: String): String = Tsv.readSql(files, schema, comment = true)
+
   /** Write CF2 TSV; `compression = "gzip"` for .gz output. Partitioning
     * by a strain/sample column reproduces the reference's per-strain
     * file fan-out (`VcfToCommonFormat2Converter.getOutputFile:393-405`)

@@ -59,30 +59,18 @@ object Polyphen {
     StructField("strand", StringType),
     StructField("transcript_rgd_id", IntegerType)))
 
-  private def trimmed(df: DataFrame): DataFrame =
-    df.select(df.schema.fields.map { f =>
-      if (f.dataType == StringType) trim(col(f.name)).as(f.name)
-      else col(f.name)
-    }.toIndexedSeq: _*)
-
   /** Read a `.polyphen` results file; the `#o_acc` header line is a
     * comment line to the csv reader. Values are trimmed (the file is
     * space-padded for human eyes; `PolyphenLoader.java:112-169` trims
     * every column). */
   def read(spark: SparkSession, path: String): DataFrame =
-    trimmed(spark.read
-      .schema(schema)
-      .option("sep", "\t")
-      .option("comment", "#")
-      .csv(path))
+    Tsv.read(spark, path, schema, comment = true, trim = true)
+  def readSql(files: String): String = Tsv.readSql(files, schema, comment = true, trim = true)
 
   /** Read a PolyPhen `.info` file (comment lines skipped). */
   def readInfo(spark: SparkSession, path: String): DataFrame =
-    trimmed(spark.read
-      .schema(infoSchema)
-      .option("sep", "\t")
-      .option("comment", "#")
-      .csv(path))
+    Tsv.read(spark, path, infoSchema, comment = true, trim = true)
+  def readInfoSql(files: String): String = Tsv.readSql(files, infoSchema, comment = true, trim = true)
 
   /** S16: scrape a PolyPhen run log for "Unable to locate protein
     * entry" errors (`PolyphenFasta.readProteinAccIds:128-151`): lines
@@ -92,14 +80,21 @@ object Polyphen {
     * space); the regexp form keeps that contract and simply drops a
     * malformed truncated line instead of throwing. */
   val MissingProteinPrefix = "ERROR: Unable to locate protein entry "
+  private val MissingProteinRegex = s"^$MissingProteinPrefix(\\S+) "
 
   def scrapeMissingProteins(spark: SparkSession, path: String): DataFrame =
     spark.read.text(path)
       .filter(col("value").startsWith(MissingProteinPrefix))
-      .select(regexp_extract(col("value"),
-        "^ERROR: Unable to locate protein entry (\\S+) ", 1).as("protein_acc_id"))
+      .select(regexp_extract(col("value"), MissingProteinRegex, 1).as("protein_acc_id"))
       .filter(col("protein_acc_id") =!= "")
       .distinct()
+
+  /** DuckDB twin of [[scrapeMissingProteins]] over the lines of `files`. */
+  def scrapeMissingProteinsSql(files: String): String =
+    s"""SELECT DISTINCT protein_acc_id FROM (
+       |  SELECT regexp_extract(value, '$MissingProteinRegex', 1) AS protein_acc_id
+       |  FROM (${Tsv.linesSql(files)}) WHERE starts_with(value, '$MissingProteinPrefix'))
+       |WHERE protein_acc_id <> ''""".stripMargin
 
   /** K7/X15: protein-FASTA input writer — re-expression of
     * `Polyphen.writeFastaFile:357-372`: each record is a `>acc` header
@@ -120,7 +115,8 @@ object Polyphen {
   /** F12: the swapped-AA rejection predicate — true for rows that must
     * be DROPPED (`o_aa1==varAA && o_aa2==refAA`,
     * `PolyphenLoader.java:171-180`). */
-  def swappedAA: Column = col("o_aa1") === col("aa2") && col("o_aa2") === col("aa1")
+  val SwappedAASql = "o_aa1 = aa2 AND o_aa2 = aa1"
+  def swappedAA: Column = expr(SwappedAASql)
 
   /** Rank both sides for positional pairing. Positions are normalized
     * NUMERICALLY (`try_cast` to BIGINT): the reference round-trips
@@ -131,21 +127,18 @@ object Polyphen {
     * join), and surfaces through [[unmatchedResults]] instead. */
   private def ranked(results: DataFrame, info: DataFrame,
                      resultOrder: Column, infoOrder: Column): (DataFrame, DataFrame, Column) = {
-    val rw = Window.partitionBy(col("o_acc"), col("__rpos"), col("o_aa1"), col("o_aa2"))
-      .orderBy(resultOrder)
-    val iw = Window.partitionBy(col("protein_acc_id"), col("__ipos"), col("ref_aa"), col("var_aa"))
-      .orderBy(infoOrder)
+    val rw = Window.partitionBy(PairKey.map(k => col(k._1)): _*).orderBy(resultOrder)
+    val iw = Window.partitionBy(PairKey.map(k => col(k._2)): _*).orderBy(infoOrder)
     val r = results.withColumn("__rpos", expr("try_cast(o_pos AS BIGINT)"))
       .withColumn("rn", row_number().over(rw))
     val i = info.withColumn("__ipos", expr("try_cast(i_pos AS BIGINT)"))
       .withColumn("rn", row_number().over(iw))
-    val cond = col("o_acc") === col("protein_acc_id") &&
-      col("__rpos") === col("__ipos") &&
-      col("o_aa1") === col("ref_aa") &&
-      col("o_aa2") === col("var_aa") &&
-      r("rn") === i("rn")
-    (r, i, cond)
+    (r, i, PairKey.map { case (a, b) => col(a) === col(b) }.reduce(_ && _) && r("rn") === i("rn"))
   }
+
+  /** The 4-part pairing key: (results column, info column). */
+  private val PairKey = Seq("o_acc" -> "protein_acc_id", "__rpos" -> "__ipos",
+    "o_aa1" -> "ref_aa", "o_aa2" -> "var_aa")
 
   /** J11/W5: pair results with info lines on
     * (protein_acc_id, numeric pos, ref_aa, var_aa), duplicates consumed
@@ -158,10 +151,9 @@ object Polyphen {
     * reproduce global file line order.
     * Returns matched rows: all result columns + info enrichment. */
   def pairWithInfo(results: DataFrame, info: DataFrame,
-                   resultOrder: Column, infoOrder: Column,
-                   joinType: String = "inner"): DataFrame = {
+                   resultOrder: Column, infoOrder: Column): DataFrame = {
     val (r, i, cond) = ranked(results, info, resultOrder, infoOrder)
-    r.join(i, cond, joinType).drop("rn", "__rpos", "__ipos")
+    r.join(i, cond).drop("rn", "__rpos", "__ipos")
   }
 
   /** K9 QC side: results that fail to pair with any info line — the
@@ -173,4 +165,27 @@ object Polyphen {
     val (r, i, cond) = ranked(results, info, resultOrder, infoOrder)
     r.join(i, cond, "left_anti").drop("rn", "__rpos")
   }
+
+  /** DuckDB twin of [[ranked]]: `r` `join` `i` on the pairing condition; a
+    * position is [[Tsv.number]] of its trimmed text (Spark's `try_cast`). */
+  private def rankedSql(join: String, results: String, info: String, resultOrder: String,
+                        infoOrder: String): String = {
+    def side(rel: String, pos: String, np: String, keys: Seq[String], order: String) =
+      s"""(SELECT *, row_number() OVER (PARTITION BY ${keys.mkString(", ")} ORDER BY $order) AS rn
+         |  FROM (SELECT *, ${Tsv.number(s"trim($pos)", "BIGINT")} AS $np FROM $rel))""".stripMargin
+    s"""${side(results, "o_pos", "__rpos", PairKey.map(_._1), resultOrder)} r
+       |$join ${side(info, "i_pos", "__ipos", PairKey.map(_._2), infoOrder)} i
+       |  ON ${PairKey.map { case (a, b) => s"r.$a = i.$b AND " }.mkString}r.rn = i.rn""".stripMargin
+  }
+
+  /** DuckDB twins of [[pairWithInfo]] and [[unmatchedResults]]; the
+    * order arguments are SQL expressions over the two relations. */
+  def pairWithInfoSql(results: String, info: String, resultOrder: String,
+                      infoOrder: String): String =
+    "SELECT r.* EXCLUDE (rn, __rpos), i.* EXCLUDE (rn, __ipos) FROM " +
+      rankedSql("JOIN", results, info, resultOrder, infoOrder)
+  def unmatchedResultsSql(results: String, info: String, resultOrder: String,
+                          infoOrder: String): String =
+    "SELECT r.* EXCLUDE (rn, __rpos) FROM " +
+      rankedSql("ANTI JOIN", results, info, resultOrder, infoOrder)
 }

@@ -57,6 +57,19 @@ object Vcf {
       .drop("strain_idx")
   }
 
+  /** DuckDB twin of [[read]] for a VCF whose `#CHROM` row names `strains`: a raw
+    * tab split with no quoting, NULL past a short line's end; a non-numeric `pos` raises. */
+  def readSql(files: String, strains: Seq[String]): String = {
+    val fixed = FixedCols.zipWithIndex.map {
+      case ("pos", i) => s"CAST(c[${i + 1}] AS BIGINT) AS pos"
+      case (n, i) => s"c[${i + 1}] AS $n"
+    }
+    val s = strains.zipWithIndex.map { case (n, i) => s"($i, '$n')" }.mkString(", ")
+    s"""SELECT ${fixed.mkString(", ")}, c[${FixedCols.size + 1} + s.i] AS gt, s.strain
+       |FROM (SELECT string_split(value, '${Tsv.Tab}') AS c FROM (${Tsv.linesSql(files)})
+       |  WHERE NOT starts_with(value, '#')), (VALUES $s) s(i, strain)""".stripMargin
+  }
+
   /** Sort data lines by (chr, numeric pos, case-insensitive id) and
     * write a single VCF text file with header lines first. `lines` must
     * have columns (chrom, pos, id, line) where `line` is the full

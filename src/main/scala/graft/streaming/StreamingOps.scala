@@ -86,8 +86,9 @@ object StreamingOps {
       .awaitTermination()
   }
 
-  /** The rows [[stageWave]] staged under `stage`, read under `schema`;
-    * none when the stage does not exist. The `batch=` dirs are listed
+  /** The rows [[stageWave]] staged under `stage`, read under `schema`
+    * with every field nullable, as a file read gives them; none when the
+    * stage does not exist. The `batch=` dirs are listed
     * with the Hadoop FS API, not read through a `batch=*` glob:
     * FileStreamSink.hasMetadata stats the literal glob string, catches
     * the FileNotFoundException and logs its full stack trace at WARN.
@@ -102,7 +103,8 @@ object StreamingOps {
       else fs.listStatus(dir).toSeq
         .filter(s => s.isDirectory && s.getPath.getName.startsWith("batch="))
         .map(_.getPath.toString).sorted
-    if (batches.isEmpty) spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
+    if (batches.isEmpty) spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
+      StructType(schema.fields.map(_.copy(nullable = true))))
     else spark.read.schema(schema).parquet(batches: _*)
   }
 

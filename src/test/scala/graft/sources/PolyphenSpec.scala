@@ -35,6 +35,19 @@ class PolyphenSpec extends SparkSpec {
     assert(r.getAs[String]("prediction") == "benign")
   }
 
+  test("read: a result row missing its trailing columns reads NULL there") {
+    val dir = tmp("pph-short")
+    val fields = Polyphen.schema.fieldNames
+    val row = fields.map(_ + "_v")
+    java.nio.file.Files.writeString(
+      java.nio.file.Paths.get(s"$dir/r.polyphen"),
+      Seq("#" + fields.mkString("\t"), row.mkString("\t"), row.take(12).mkString("\t"))
+        .mkString("\n") + "\n")
+    val got = Polyphen.read(spark, s"$dir/r.polyphen").orderBy(col("based_on").asc_nulls_first)
+      .collect().map(_.toSeq)
+    assert(got.toSeq == Seq((row.take(12) ++ Seq.fill(fields.length - 12)(null)).toSeq, row.toSeq))
+  }
+
   test("swappedAA rejects exactly the (o_aa1,o_aa2)=(aa2,aa1) rows") {
     val df = Seq(
       ("R", "H", "R", "H"), // aligned -> keep

@@ -35,6 +35,23 @@ class VcfFastaSpec extends SparkSpec {
     assert(kept.count() == 2)
   }
 
+  test("VCF read: a cell starting with a quote and a CRLF file read as raw tab-split cells") {
+    val hdr = "#CHROM\tPOS\tID\tREF\tALT\tQUAL\tFILTER\tINFO\tFORMAT\tA\tB"
+    val quoted = "1\t100\t\"rs1\tA\tC\t50\tPASS\tDP=10\tGT\t\"0/1\t1/1"
+    val plain = "2\t200\trs2\tG\tT\t60\tPASS\tDP=20\tGT\t0/0\t./."
+    def cells(content: String) = Vcf.read(spark, writeTemp("vcf", content))
+      .select($"pos", $"id", $"strain", $"gt").as[(Long, String, String, String)]
+      .collect().sortBy(r => (r._1, r._3)).toSeq
+    // no quoting: the quote stays in the cell and the tab after it splits
+    assert(cells(Seq(hdr, quoted).mkString("\n") + "\n") ==
+      Seq((100L, "\"rs1", "A", "\"0/1"), (100L, "\"rs1", "B", "1/1")))
+    // CRLF line ends: the last cell of each line carries no \r
+    val crlf = cells(Seq("##fileformat=VCFv4.2", hdr, plain).mkString("\r\n") + "\r\n")
+    assert(crlf == Seq((200L, "rs2", "A", "0/0"), (200L, "rs2", "B", "./.")))
+    assert(Vcf.strainNames(spark, writeTemp("vcf", Seq(hdr, plain).mkString("\r\n"))) ==
+      Seq("A", "B"))
+  }
+
   test("VCF writeSorted: header first, then numeric (chr, pos, id) order") {
     val lines = Seq(
       ("2", 5L, "b", "2\t5\tb\t..."),

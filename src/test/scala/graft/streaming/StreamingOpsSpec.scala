@@ -43,13 +43,14 @@ class StreamingOpsSpec extends SparkSpec {
   test("readStage reads a missing stage, a zero-accept batch and a replayed batch id as the staged rows") {
     val root = s"${graft.queries.Fixtures.scratchRoot}/stagespec"
     graft.queries.Fixtures.rmrf(new java.io.File(root))
-    // nullable fields, as a file read gives them
-    val schema = Seq((Option(1L), "a")).toDF("id", "v").schema
+    // a non-null id: both a missing and a present stage read it nullable
+    val schema = Seq((1L, "a")).toDF("id", "v").schema
+    assert(!schema("id").nullable)
     def ids(df: org.apache.spark.sql.DataFrame) =
       df.select("id").collect().map(_.getLong(0)).sorted.toSeq
 
     val missing = StreamingOps.readStage(spark, s"$root/none", schema)
-    assert(missing.schema == schema && missing.isEmpty)
+    assert(missing.isEmpty && missing.schema.forall(_.nullable))
 
     // a wave source of 4 one-file parts, oldest first, so the stream's
     // 2-file batch 0 holds ids 1-4, which the accept rule rejects
@@ -74,7 +75,7 @@ class StreamingOpsSpec extends SparkSpec {
     new java.io.File(s"$stage/not_a_batch").mkdirs()
     java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$stage/stray"), "x")
     val staged = StreamingOps.readStage(spark, stage, schema)
-    assert(staged.schema == schema && ids(staged) == Seq(5L, 6L, 7L, 8L))
+    assert(staged.schema == missing.schema && ids(staged) == Seq(5L, 6L, 7L, 8L))
 
     // a replay under the same batch ids (checkpoint cleared) starts from
     // a cleared stage, so a stale batch dir of an earlier run is gone,

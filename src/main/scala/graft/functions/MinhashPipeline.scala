@@ -74,13 +74,15 @@ object MinhashPipeline {
     val kept = col("doc_id") +: passthru.map(col)
     df.select(keep: _*)
       .filter(size(col("t")) >= 2)
-      .select(kept :+ sort_array(array_distinct(
-        transform(sequence(lit(1), size(col("t")) - 1),
-          i => TF.polyHash(concat(element_at(col("t"), i), lit(" "),
-            element_at(col("t"), i + 1)))))).as("hl"): _*)
+      .select(kept :+ sort_array(wordHashes(col("t"))).as("hl"): _*)
       .withColumn("sz", size(col("hl")).cast("long"))
       .withColumn("sig", TF.minhashSignatureNative(col("hl"), K))
   }
+
+  /** The distinct hashed `tok tok` word bigrams of a token list, the
+    * element set of the word-granularity dedup (unsorted). */
+  def wordHashes(toks: Column): Column =
+    array_distinct(transform(TF.wordBigrams(toks, " "), b => TF.polyHash(b)))
 
   /** Char-3-gram signing with the verification bitmap, for the small
     * shingle universe (q41/q88): one frame carries the signature AND
@@ -369,10 +371,8 @@ object MinhashPipeline {
   def wordDocsSql(keep: String, src: String): String =
     s"""SELECT $keep, hl, CAST(len(hl) AS BIGINT) AS sz FROM (
        |    SELECT $keep, list_distinct(list_transform(
-       |      [t[i] || ' ' || t[i + 1] FOR i IN generate_series(1, len(t) - 1)],
-       |      s -> ${TF.polyHashSql("s")})) AS hl
-       |    FROM (SELECT $keep, string_split_regex(trim(lower(text)), '\\s+') AS t
-       |          FROM $src)
+       |      ${TF.wordBigramsSql("t", " ")}, s -> ${TF.polyHashSql("s")})) AS hl
+       |    FROM (SELECT $keep, ${TF.tokensSql("lower(text)")} AS t FROM $src)
        |    WHERE len(t) >= 2)""".stripMargin
 
   /** Twin of the K-column min-hash signature and [[bandKeysOf]]:

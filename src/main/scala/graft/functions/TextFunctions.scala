@@ -6,51 +6,119 @@ import org.apache.spark.sql.functions._
 /** Text-analysis functions for large-scale training-data pipelines:
   * token counting, language ID, quality scoring, fingerprinting.
   * All pure `Column` expressions (codegen'd; no UDFs), so they scan
-  * 100 TB of documents at parquet-read speed.
+  * 100 TB of documents at parquet-read speed. Each text rule the gates
+  * read has its DuckDB twin (`...Sql`) beside it, and every oracle
+  * calls the twin rather than restating the rule. The twins are
+  * DuckDB dialect (Spark SQL reads the literal `'\S+'` as `'S+'`).
   */
 object TextFunctions {
 
-  /** Whitespace tokenization. */
+  /** Whitespace tokenization: the space-trimmed text split on runs of
+    * whitespace; a blank text has no tokens, NULL stays NULL. `trim`
+    * drops spaces only, so a tab-leading text keeps a leading `''`
+    * token in both engines. [[tokensSql]] is its twin. */
   def tokens(text: Column): Column =
     when(length(trim(text)) === 0, array().cast("array<string>"))
       .otherwise(split(trim(text), "\\s+"))
 
+  /** Twin of [[tokens]]. The blank guard is load-bearing: DuckDB splits
+    * `''` and `'   '` into `['']`, one token. */
+  def tokensSql(text: String): String =
+    s"CASE WHEN length(trim($text)) = 0 THEN []::VARCHAR[] " +
+      s"ELSE string_split_regex(trim($text), '\\s+') END"
+
   /** Whitespace token count. */
   def tokenCount(text: Column): Column = size(tokens(text))
+
+  /** Twin of [[tokenCount]]. */
+  def tokenCountSql(text: String): String = s"len(${tokensSql(text)})"
+
+  /** `f(x_i, x_i+1)` over the adjacent elements of `arr`, NULL below
+    * two elements. The size guard is load-bearing, not defensive:
+    * `sequence(1, 0)` counts DOWN to `[1, 0]`, and `element_at(arr, 0)`
+    * always throws. [[adjacentPairsSql]] is its twin. */
+  def adjacentPairs(arr: Column)(f: (Column, Column) => Column): Column =
+    when(size(arr) >= 2, transform(sequence(lit(1), size(arr) - 1),
+      i => f(element_at(arr, i), element_at(arr, i + 1))))
+
+  /** Twin of [[adjacentPairs]] over the list reference `arr`, empty
+    * below two elements (`generate_series(1, 0)` is empty in DuckDB). */
+  def adjacentPairsSql(arr: String)(f: (String, String) => String): String =
+    s"[${f(s"$arr[i]", s"$arr[i + 1]")} FOR i IN generate_series(1, len($arr) - 1)]"
+
+  /** Word bigrams `t_i <sep> t_i+1`, empty below two tokens.
+    * [[wordBigramsSql]] is its twin. */
+  def wordBigrams(toks: Column, sep: String): Column =
+    coalesce(adjacentPairs(toks)((a, b) => concat(a, lit(sep), b)),
+      array().cast("array<string>"))
+
+  /** Twin of [[wordBigrams]] over the token-list reference `toks`. */
+  def wordBigramsSql(toks: String, sep: String): String =
+    adjacentPairsSql(toks)((a, b) => s"$a || '$sep' || $b")
+
+  /** Mean token length ×100, floored; 0 for no tokens. The `.cast`
+    * is load-bearing: Spark's `/` on longs is DOUBLE division, and the
+    * truncating cast makes it the floor the twin's `//` computes.
+    * [[meanTokLenX100Sql]] is its twin. */
+  def meanTokLenX100(toks: Column): Column =
+    when(size(toks) > 0,
+      (aggregate(toks, lit(0L), (acc, t) => acc + length(t)) * 100 / size(toks)).cast("long"))
+      .otherwise(0L)
+
+  /** Twin of [[meanTokLenX100]] over the token-list reference `toks`. */
+  def meanTokLenX100Sql(toks: String): String =
+    s"CAST(CASE WHEN len($toks) > 0 THEN " +
+      s"list_sum(list_transform($toks, t -> length(t))) * 100 // len($toks) ELSE 0 END AS BIGINT)"
+
+  private val SubTokenRe = "[A-Za-z]+|[0-9]+|[^A-Za-z0-9\\s]"
+  private val NonPunctRe = "[A-Za-z0-9\\s]"
 
   /** BPE-ish sub-token count: runs of letters, runs of digits, or single
     * non-alphanumeric chars — a cheap proxy for tokenizer load. */
   def subTokenCount(text: Column): Column =
-    size(regexp_extract_all(text, lit("[A-Za-z]+|[0-9]+|[^A-Za-z0-9\\s]"), lit(0)))
+    size(regexp_extract_all(text, lit(SubTokenRe), lit(0)))
 
   /** Count of punctuation / non-alphanumeric, non-space chars. */
   def punctCount(text: Column): Column =
-    length(regexp_replace(text, "[A-Za-z0-9\\s]", ""))
+    length(regexp_replace(text, NonPunctRe, ""))
 
   /** Language marker words used by the n-gram-free heuristic language ID.
     * Tiny on purpose: the point is the operator shape (scored argmax over
     * per-language token matches), not linguistic accuracy. */
-  val LangMarkers: Map[String, Seq[String]] = Map(
+  private val LangMarkers: Map[String, Seq[String]] = Map(
     "en" -> Seq("the", "and", "of", "to", "is"),
     "de" -> Seq("der", "die", "und", "ist", "das"),
     "es" -> Seq("el", "la", "de", "que", "es"))
 
+  private val Langs: Seq[String] = LangMarkers.keys.toSeq.sorted
+
   private def markerHits(text: Column, markers: Seq[String]): Column =
     size(filter(tokens(lower(text)), t => t.isInCollection(markers)))
 
+  private def markerHitsSql(toks: String, markers: Seq[String]): String =
+    s"len(list_filter($toks, t -> t IN (${markers.map(m => s"'$m'").mkString(", ")})))"
+
   /** Heuristic language ID: argmax of marker-token hits with
     * deterministic alphabetical tiebreak; "und" (undetermined) when no
-    * marker hits at all. */
+    * marker hits at all. [[langIdSql]] is its twin. */
   def langId(text: Column): Column = {
-    val scored = LangMarkers.toSeq.sortBy(_._1).map { case (lang, ms) =>
-      (lang, markerHits(text, ms))
-    }
+    val scored = Langs.map(lang => (lang, markerHits(text, LangMarkers(lang))))
     val best = scored.map(_._2).reduce((a, b) => greatest(a, b))
     // first (alphabetical) language reaching the max score
-    val pick = scored.foldRight(lit("und")) { case ((lang, s), acc) =>
+    scored.foldRight(lit("und")) { case ((lang, s), acc) =>
       when(s === best && best > 0, lang).otherwise(acc)
     }
-    pick
+  }
+
+  /** Twin of [[langId]]: the tokens and the hit list `h` are each bound
+    * once per row by a one-element `list_transform`. */
+  def langIdSql(text: String): String = {
+    val hits = Langs.map(l => markerHitsSql("tk", LangMarkers(l))).mkString(", ")
+    val pick = Langs.zipWithIndex.map { case (l, i) =>
+      s"WHEN h[${i + 1}] = list_max(h) AND list_max(h) > 0 THEN '$l'"
+    }.mkString(" ")
+    s"list_transform([${tokensSql(s"lower($text)")}], tk -> list_transform([[$hits]], " +
+      s"h -> CASE $pick ELSE 'und' END)[1])[1]"
   }
 
   /** Stopword ratio numerator: tokens that are English stopwords. */
@@ -60,19 +128,48 @@ object TextFunctions {
   /** Document quality heuristics as a struct of exact-integer metrics
     * (ratios are left to the caller so results stay hash-stable):
     * n_chars, n_tokens, n_subtokens, n_punct, n_stopwords, mean token
-    * length ×100 (integer). */
+    * length ×100 (integer). [[qualityMetricsSql]] is its twin. */
   def qualityMetrics(text: Column): Column = {
     val toks = tokens(text)
-    val nTok = size(toks)
-    val sumLen = aggregate(toks, lit(0L), (acc, t) => acc + length(t))
     struct(
       length(text).cast("long").as("n_chars"),
-      nTok.cast("long").as("n_tokens"),
+      size(toks).cast("long").as("n_tokens"),
       subTokenCount(text).cast("long").as("n_subtokens"),
       punctCount(text).cast("long").as("n_punct"),
       stopwordCount(text).cast("long").as("n_stopwords"),
-      when(nTok > 0, (sumLen * 100 / nTok).cast("long")).otherwise(0L).as("mean_tok_len_x100"))
+      meanTokLenX100(toks).as("mean_tok_len_x100"))
   }
+
+  /** Twin of [[qualityMetrics]]: the same fields as a DuckDB struct. */
+  def qualityMetricsSql(text: String): String =
+    s"""list_transform([${tokensSql(text)}], tk -> {
+       |  'n_chars': CAST(length($text) AS BIGINT),
+       |  'n_tokens': CAST(len(tk) AS BIGINT),
+       |  'n_subtokens': CAST(len(regexp_extract_all($text, '$SubTokenRe')) AS BIGINT),
+       |  'n_punct': CAST(length(regexp_replace($text, '$NonPunctRe', '', 'g')) AS BIGINT),
+       |  'n_stopwords': CAST(
+       |    ${markerHitsSql(tokensSql(s"lower($text)"), LangMarkers("en"))} AS BIGINT),
+       |  'mean_tok_len_x100': ${meanTokLenX100Sql("tk")}})[1]""".stripMargin
+
+  /** The deterministic 80/10/10 train/val/test split of a document id:
+    * an LCG bucket (q55's) in [0, 100) with no RNG state, so the split
+    * is the same on any engine and partitioning, and new ids never move
+    * old ones. [[dataSplitSql]] is its twin. */
+  def dataSplit(id: Column): Column = {
+    val b = ((id * 1103515245L + 12345L) % 2147483647L) % 100
+    when(b < 80, "train").when(b < 90, "val").otherwise("test")
+  }
+
+  /** Twin of [[dataSplit]]. */
+  def dataSplitSql(id: String): String = {
+    val b = s"((($id * 1103515245 + 12345) % 2147483647) % 100)"
+    s"CASE WHEN $b < 80 THEN 'train' WHEN $b < 90 THEN 'val' ELSE 'test' END"
+  }
+
+  /** The PII patterns of the redaction pass, one regex each for both
+    * engines (Java and RE2 read them alike). */
+  val EmailRe = "[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}"
+  val PhoneRe = "[0-9]{3}-[0-9]{3}-[0-9]{4}"
 
   /** Character n-gram shingles (distinct), the input to MinHash/Jaccard
     * dedup. */
@@ -117,6 +214,14 @@ object TextFunctions {
           .as("n_singleton")))
   }
 
+  /** Twin of [[elementCountStats]] over the STRING list reference
+    * `arr`, from DuckDB's per-list histogram (NULL for an empty list,
+    * hence the `coalesce`). */
+  def elementCountStatsSql(arr: String): String =
+    s"""list_transform([coalesce(map_values(list_aggregate($arr, 'histogram')), [])], c -> {
+       |  'top_c': CAST(coalesce(list_max(c), 0) AS BIGINT),
+       |  'n_singleton': CAST(len(list_filter(c, x -> x = 1)) AS BIGINT)})[1]""".stripMargin
+
   /** Deterministic polynomial rolling hash of a whole string (a text
     * fingerprint, a token or shingle hash): h = fold(h*31 + ascii(char))
     * mod [[HashMod]]. Engine-independent (pure integer arithmetic),
@@ -126,8 +231,15 @@ object TextFunctions {
 
   /** DuckDB twin of [[polyHash]]. */
   def polyHashSql(s: String): String =
-    s"list_reduce(list_prepend(CAST(0 AS BIGINT), list_transform(string_split_regex($s, ''), " +
-      s"c -> CAST(ascii(c) AS BIGINT))), (acc, x) -> (acc * 31 + x) % $HashMod)"
+    s"list_reduce(list_prepend(CAST(0 AS BIGINT), ${asciiCodesSql(s)}), " +
+      s"(acc, x) -> (acc * 31 + x) % $HashMod)"
+
+  /** The ascii code of each char of `s`. [[asciiCodesSql]] is its twin. */
+  def asciiCodes(s: Column): Column = transform(split(s, ""), c => ascii(c))
+
+  /** Twin of [[asciiCodes]], as a BIGINT list. */
+  def asciiCodesSql(s: String): String =
+    s"list_transform(string_split_regex($s, ''), c -> CAST(ascii(c) AS BIGINT))"
 
   // ---- MinHash + LSH dedup primitives ---------------------------------
   // Pipeline (shingle -> minhash -> band -> bucket-join) per the classic

@@ -57,7 +57,7 @@ object VectorFunctions {
   def byteHist(txt: Column): Column =
     // the single-element transform binds the code list to a lambda
     // variable, so it is built once per row, not once per bin
-    element_at(transform(array(transform(split(txt, ""), c => ascii(c))),
+    element_at(transform(array(TextFunctions.asciiCodes(txt)),
       codes => array((0 until 8).map(b => size(filter(codes,
         c => call_function("div", c, lit(16)) === b))): _*)), 1)
       .cast("array<double>")
@@ -76,9 +76,8 @@ object VectorFunctions {
     // once per row, as in byteHist
     element_at(transform(array(TextFunctions.tokens(lower(txt))), t =>
       when(size(t) >= 2, element_at(transform(
-        array(transform(sequence(lit(1), size(t) - 1),
-          i => (TextFunctions.polyHash(element_at(t, i)) * 31 +
-            TextFunctions.polyHash(element_at(t, i + 1))) % WordBigramBins)),
+        array(TextFunctions.adjacentPairs(t)((a, b) =>
+          (TextFunctions.polyHash(a) * 31 + TextFunctions.polyHash(b)) % WordBigramBins)),
         bg => array((0 until WordBigramBins).map(b => size(filter(bg, x => x === b))): _*)),
         1))), 1)
       .cast("array<double>")
@@ -139,7 +138,7 @@ object VectorFunctions {
 
   /** Twin of [[byteHist]]: a DOUBLE list of 8 bin counts of `txt`. */
   def byteHistSql(txt: String): String = {
-    val codes = s"list_transform(string_split_regex($txt, ''), c -> ascii(c))"
+    val codes = TextFunctions.asciiCodesSql(txt)
     (0 until 8).map(b =>
       s"CAST(len(list_filter($codes, c -> c // 16 = $b)) AS DOUBLE)")
       .mkString("[", ",\n    ", "]")
@@ -151,9 +150,9 @@ object VectorFunctions {
     val hash = TextFunctions.polyHashSql("t")
     val counts = (0 until WordBigramBins)
       .map(b => s"CAST(len(list_filter(bg, x -> x = $b)) AS DOUBLE)")
-    s"""list_transform([list_transform(string_split_regex(trim(lower($txt)), '\\s+'), t -> $hash)],
+    s"""list_transform([list_transform(${TextFunctions.tokensSql(s"lower($txt)")}, t -> $hash)],
        |  h -> CASE WHEN len(h) >= 2 THEN list_transform(
-       |    [[(h[i] * 31 + h[i + 1]) % $WordBigramBins FOR i IN generate_series(1, len(h) - 1)]],
+       |    [${TextFunctions.adjacentPairsSql("h")((a, b) => s"($a * 31 + $b) % $WordBigramBins")}],
        |    bg -> [${counts.mkString(", ")}])[1] END)[1]""".stripMargin
   }
 }

@@ -189,13 +189,15 @@ object StrainLoader {
   private def depth(i: Column): Column = coalesce(try_element_at(col("ad"), i).cast("int"), lit(0))
 
   /** One row per distinct allele index `a_idx` > 0 of each `/`-split call
-    * (all of them in `called`), with its alt allele `va` and `allele_depth`. */
+    * (all of them in `called`), with its alt allele `va` and `allele_depth`.
+    * An index past the ALT list has no allele and yields no row. */
   def calledAlleles(cells: DataFrame): DataFrame =
     cells
       .withColumn("called", expr("array_distinct(filter(transform(split(call, '/'), " +
         "x -> try_cast(x AS INT)), x -> x IS NOT NULL AND x > 0))"))
       .withColumn("a_idx", explode(col("called")))
-      .withColumn("va", element_at(split(col("alt"), ","), col("a_idx")))
+      .withColumn("va", try_element_at(split(col("alt"), ","), col("a_idx")))
+      .filter(col("va").isNotNull)
       .withColumn("allele_depth", depth(col("a_idx") + 1))
 
   /** DuckDB twin of [[calledAlleles]] over the relation `cells`. */
@@ -205,7 +207,8 @@ object StrainLoader {
        |FROM (SELECT *, unnest(called) AS a_idx FROM (
        |  SELECT * EXCLUDE (ix), list_filter(ix, (x, i) -> x > 0 AND list_position(ix, x) = i) AS called
        |  FROM (SELECT *, list_transform(string_split(call, '/'), x -> TRY_CAST(x AS INTEGER)) AS ix
-       |    FROM $cells)))""".stripMargin
+       |    FROM $cells)))
+       |WHERE string_split(alt, ',')[a_idx] IS NOT NULL""".stripMargin
 
   /** sources.vcf_convert: VCF -> per-strain gzip CF2, with the
     * converter's skip rules counted by rule. */

@@ -48,7 +48,7 @@ object QueriesLlm {
     bitmapSignedDocs, bandKeysOf, bandPairs, bitmapBandPairs, sortedJacc,
     cappedCandidates, hotCapPairs, verifyPairs, contentFp, copyCorpus,
     verifiedDupPairs, copyCorpusSql, shinglesCte, shingleHashesSql,
-    wordDocsSql, sigBandCtes, bandCandidatesSql, shingleDictCtes, verifySql,
+    wordHashes, wordDocsSql, sigBandCtes, bandCandidatesSql, shingleDictCtes, verifySql,
     minhashCtes, minhashWordCtes, minhashWordClassCtes, hotCapPairsCtes,
     contentFpSql, verifiedDupCte, verifiedDupPairsSql}
 
@@ -90,27 +90,40 @@ object QueriesLlm {
        |${MinhashIndex.acceptCtes("acc2", "b", "i1docs", "i1bands")}
        |${MinhashIndex.rollupSql(0 -> "idocs", 1 -> "acc1", 2 -> "acc2")}""".stripMargin
 
+  /** Gram width of [[splitGrams]]: long enough that collisions mean leakage. */
+  private val GramN = 5
+
   /** Distinct 5-token-gram fingerprints per doc over the q76
     * deterministic train/test split (val dropped) — shared by q93
     * (contamination equi-join) and q104 (Bloom pre-filtered variant).
     * Columns: doc_id, lang, split, fp. Checkpointed: both consumers
     * read it at least twice (test side + train side). */
   private def splitGrams(spark: org.apache.spark.sql.SparkSession, dir: String) = {
-    val N = 5 // gram width: long enough that collisions mean leakage
-    val b = ((col("doc_id") * 1103515245L + 12345L) % 2147483647L) % 100
     val t = table(spark, dir, "documents")
-      .withColumn("split",
-        when(b < 80, "train").when(b < 90, "val").otherwise("test"))
+      .withColumn("split", TF.dataSplit(col("doc_id")))
       .filter(col("split") =!= "val")
       .select(col("doc_id"), col("lang"), col("split"),
         TF.tokens(lower(col("text"))).as("t"))
-      .filter(size(col("t")) >= N)
+      .filter(size(col("t")) >= GramN)
     t.select(col("doc_id"), col("lang"), col("split"),
-        explode(array_distinct(transform(sequence(lit(1), size(col("t")) - (N - 1)),
-          i => contentFp(transform(slice(col("t"), i, lit(N)), tok => TF.polyHash(tok))))))
+        explode(array_distinct(transform(sequence(lit(1), size(col("t")) - (GramN - 1)),
+          i => contentFp(transform(slice(col("t"), i, lit(GramN)), tok => TF.polyHash(tok))))))
           .as("fp"))
       .localCheckpoint(true)
   }
+
+  /** Twin of [[splitGrams]]: the CTEs `t` and `g(doc_id, lang, split, fp)`. */
+  private val splitGramsCtes: String =
+    s"""t AS (
+       |  SELECT doc_id, lang, ${TF.dataSplitSql("doc_id")} AS split,
+       |    ${TF.tokensSql("lower(text)")} AS toks
+       |  FROM documents),
+       |g AS (
+       |  SELECT doc_id, lang, split, unnest(list_distinct([
+       |    ${contentFpSql(
+              s"list_transform(toks[i:i+${GramN - 1}], tok -> ${TF.polyHashSql("tok")})")}
+       |    FOR i IN generate_series(1, len(toks) - ${GramN - 1})])) AS fp
+       |  FROM t WHERE len(toks) >= $GramN AND split <> 'val')""".stripMargin
 
   /** Exact same-language Jaccard near-dup pairs via the SetSimJoin
     * bitmap pipeline — shared by q43 (pair listing) and q52
@@ -173,7 +186,7 @@ object QueriesLlm {
   private val tokHashCte =
     s"""th AS (
        |  SELECT doc_id, list_transform(
-       |    list_distinct(string_split_regex(trim(lower(text)), '\\s+')),
+       |    list_distinct(${TF.tokensSql("lower(text)")}),
        |    t -> ${TF.polyHashSql("t")}) AS hs
        |  FROM documents)""".stripMargin
 
@@ -999,12 +1012,9 @@ object QueriesLlm {
     Q("q74_bigram_topk",
       (spark, dir) => {
         val toks = table(spark, dir, "documents")
-          .select(col("lang"), split(trim(lower(col("text"))), "\\s+").as("t"))
+          .select(col("lang"), TF.tokens(lower(col("text"))).as("t"))
           .filter(size(col("t")) >= 2)
-          .select(col("lang"), explode(transform(
-            sequence(lit(1), size(col("t")) - 1),
-            i => concat(element_at(col("t"), i), lit("_"),
-              element_at(col("t"), i + 1)))).as("bigram"))
+          .select(col("lang"), explode(TF.wordBigrams(col("t"), "_")).as("bigram"))
         val w = Window.partitionBy(col("lang")).orderBy(col("cnt").desc, col("bigram"))
         toks.groupBy(col("lang"), col("bigram")).agg(count(lit(1)).as("cnt"))
           .withColumn("rn", row_number().over(w))
@@ -1014,12 +1024,11 @@ object QueriesLlm {
           .orderBy(col("lang"), col("rn"))
       },
       Some(
-        """WITH t AS (
-          |  SELECT lang, string_split_regex(trim(lower(text)), '\s+') AS t
+        s"""WITH t AS (
+          |  SELECT lang, ${TF.tokensSql("lower(text)")} AS t
           |  FROM documents),
           |bg AS (
-          |  SELECT lang, unnest([t[i] || '_' || t[i+1]
-          |    FOR i IN generate_series(1, len(t) - 1)]) AS bigram
+          |  SELECT lang, unnest(${TF.wordBigramsSql("t", "_")}) AS bigram
           |  FROM t WHERE len(t) >= 2),
           |c AS (SELECT lang, bigram, count(*) AS cnt FROM bg GROUP BY 1, 2)
           |SELECT lang, CAST(rn AS BIGINT) AS rn, bigram, cnt
@@ -1072,22 +1081,12 @@ object QueriesLlm {
           .groupBy(col("lang_actual"), col("lang_pred"))
           .agg(count(lit(1)).as("cnt"))
           .orderBy(col("lang_actual"), col("lang_pred")),
-      Some {
-        val hits = TF.LangMarkers.toSeq.sortBy(_._1).map { case (lang, ms) =>
-          val inList = ms.map(m => s"'$m'").mkString(", ")
-          lang -> s"len(list_filter(string_split_regex(trim(lower(text)), '\\s+'), t -> t IN ($inList)))"
-        }
-        val best = s"greatest(${hits.map(_._2).mkString(", ")})"
-        val pick = hits.map { case (lang, h) =>
-          s"WHEN $h = best AND best > 0 THEN '$lang'"
-        }.mkString(" ")
+      Some(
         s"""SELECT lang_actual, lang_pred, count(*) AS cnt FROM (
-           |  SELECT lang AS lang_actual,
-           |    CASE $pick ELSE 'und' END AS lang_pred
-           |  FROM (SELECT lang, text, $best AS best FROM documents))
+           |  SELECT lang AS lang_actual, ${TF.langIdSql("text")} AS lang_pred
+           |  FROM documents)
            |GROUP BY lang_actual, lang_pred
-           |ORDER BY lang_actual, lang_pred""".stripMargin
-      }),
+           |ORDER BY lang_actual, lang_pred""".stripMargin)),
 
     // -- Document quality metrics aggregated per language (all exact
     // integers, so the per-doc structs hash-match through the rollup).
@@ -1105,24 +1104,15 @@ object QueriesLlm {
             sum(col("m.mean_tok_len_x100")).as("sum_mean_tok_len_x100"))
           .orderBy(col("lang")),
       Some(
-        """SELECT lang, count(*) AS docs,
-          |  CAST(sum(length(text)) AS BIGINT) AS sum_chars,
-          |  CAST(sum(n_tok) AS BIGINT) AS sum_tokens,
-          |  CAST(sum(len(regexp_extract_all(text, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]'))) AS BIGINT) AS sum_subtokens,
-          |  CAST(sum(length(regexp_replace(text, '[A-Za-z0-9\s]', '', 'g'))) AS BIGINT) AS sum_punct,
-          |  CAST(sum(n_stop) AS BIGINT) AS sum_stopwords,
-          |  CAST(sum(CASE WHEN n_tok > 0 THEN floor((sum_len * 100.0) / n_tok) ELSE 0 END) AS BIGINT)
-          |    AS sum_mean_tok_len_x100
-          |FROM (
-          |  SELECT lang, text,
-          |    len(string_split_regex(trim(text), '\s+')) AS n_tok,
-          |    list_reduce(list_prepend(CAST(0 AS BIGINT),
-          |      list_transform(string_split_regex(trim(text), '\s+'),
-          |        t -> CAST(length(t) AS BIGINT))), (a, x) -> a + x) AS sum_len,
-          |    len(list_filter(string_split_regex(trim(lower(text)), '\s+'),
-          |      t -> t IN ('the', 'and', 'of', 'to', 'is'))) AS n_stop
-          |  FROM documents)
-          |GROUP BY lang ORDER BY lang""".stripMargin)),
+        s"""SELECT lang, count(*) AS docs,
+           |  CAST(sum(m.n_chars) AS BIGINT) AS sum_chars,
+           |  CAST(sum(m.n_tokens) AS BIGINT) AS sum_tokens,
+           |  CAST(sum(m.n_subtokens) AS BIGINT) AS sum_subtokens,
+           |  CAST(sum(m.n_punct) AS BIGINT) AS sum_punct,
+           |  CAST(sum(m.n_stopwords) AS BIGINT) AS sum_stopwords,
+           |  CAST(sum(m.mean_tok_len_x100) AS BIGINT) AS sum_mean_tok_len_x100
+           |FROM (SELECT lang, ${TF.qualityMetricsSql("text")} AS m FROM documents)
+           |GROUP BY lang ORDER BY lang""".stripMargin)),
 
     // -- Token frequency top-k (explode -> groupBy -> global top-k with
     // deterministic tiebreak): word-count, the canonical shuffle shape.
@@ -1135,8 +1125,8 @@ object QueriesLlm {
           .orderBy(col("cnt").desc, col("token"))
           .limit(20),
       Some(
-        """SELECT token, count(*) AS cnt
-          |FROM (SELECT unnest(string_split_regex(trim(lower(text)), '\s+')) AS token
+        s"""SELECT token, count(*) AS cnt
+          |FROM (SELECT unnest(${TF.tokensSql("lower(text)")}) AS token
           |      FROM documents)
           |GROUP BY token
           |ORDER BY cnt DESC, token
@@ -1162,14 +1152,13 @@ object QueriesLlm {
           .orderBy(col("source"))
       },
       Some(
-        """WITH f AS (
+        s"""WITH f AS (
           |  SELECT source, doc_id, text,
           |    (length(text) + 15) // 16 AS n_frames
           |  FROM documents),
           |fr AS (
           |  SELECT source, doc_id, frame_idx,
-          |    list_transform(string_split_regex(substr(text, CAST(frame_idx * 16 + 1 AS INT), 16), ''),
-          |      c -> CAST(ascii(c) AS BIGINT)) AS bytes
+          |    ${TF.asciiCodesSql("substr(text, CAST(frame_idx * 16 + 1 AS INT), 16)")} AS bytes
           |  FROM f, LATERAL (SELECT unnest(generate_series(0, CAST(n_frames - 1 AS BIGINT), 4)) AS frame_idx))
           |SELECT source, count(*) AS frames,
           |  CAST(sum(list_reduce(list_prepend(CAST(0 AS BIGINT), bytes), (a, x) -> a + x)) AS BIGINT) AS sum_bytes,
@@ -1210,32 +1199,22 @@ object QueriesLlm {
            |  CAST(sum(comp) AS BIGINT) AS sum_canonical
            |FROM cl GROUP BY 1 ORDER BY 1""".stripMargin)),
 
-    // -- Deterministic stratified train/val/test split: the dataset-
-    // assembly primitive — a pure hash of the stable doc id (the q55
-    // LCG) buckets every row 80/10/10 with no RNG state, so the split
-    // is reproducible on any engine and any partitioning, and re-runs
-    // place new docs without moving old ones. At 100 TB this is a
-    // map-only pass (no shuffle before the per-(lang,split) rollup).
+    // -- Deterministic stratified train/val/test split (`TF.dataSplit`),
+    // the dataset-assembly primitive. At 100 TB this is a map-only pass
+    // (no shuffle before the per-(lang,split) rollup).
     Q("q76_stratified_split",
-      (spark, dir) => {
-        val b = ((col("doc_id") * 1103515245L + 12345L) % 2147483647L) % 100
+      (spark, dir) =>
         table(spark, dir, "documents")
-          .withColumn("split",
-            when(b < 80, "train").when(b < 90, "val").otherwise("test"))
+          .withColumn("split", TF.dataSplit(col("doc_id")))
           .groupBy(col("lang"), col("split"))
           .agg(count(lit(1)).as("n_docs"),
             sum(length(col("text")).cast("long")).as("sum_chars"))
-          .orderBy(col("lang"), col("split"))
-      },
+          .orderBy(col("lang"), col("split")),
       Some(
-        """SELECT lang, split, count(*) AS n_docs,
+        s"""SELECT lang, split, count(*) AS n_docs,
           |  CAST(sum(length(text)) AS BIGINT) AS sum_chars
-          |FROM (SELECT lang, text,
-          |        CASE WHEN b < 80 THEN 'train' WHEN b < 90 THEN 'val'
-          |             ELSE 'test' END AS split
-          |      FROM (SELECT lang, text,
-          |              ((doc_id * 1103515245 + 12345) % 2147483647) % 100 AS b
-          |            FROM documents))
+          |FROM (SELECT lang, text, ${TF.dataSplitSql("doc_id")} AS split
+          |      FROM documents)
           |GROUP BY lang, split ORDER BY lang, split""".stripMargin)),
 
     // -- Overlapping token-window chunking (size 32, stride 24): the
@@ -1262,7 +1241,7 @@ object QueriesLlm {
       },
       Some(
         s"""WITH t AS (
-           |  SELECT doc_id, string_split_regex(trim(lower(text)), '\\s+') AS t
+           |  SELECT doc_id, ${TF.tokensSql("lower(text)")} AS t
            |  FROM documents WHERE doc_id % 25 = 0 AND length(trim(text)) > 0),
            |ch AS (
            |  SELECT doc_id, CAST((st - 1) // 24 AS BIGINT) AS chunk_idx,
@@ -1322,10 +1301,7 @@ object QueriesLlm {
           .select(col("rid").as("doc_id"), col("dids"),
             TF.tokens(lower(col("text"))).as("t"))
           .filter(size(col("t")) >= 2)
-          .select(col("doc_id"), col("dids"), array_distinct(
-            transform(sequence(lit(1), size(col("t")) - 1),
-              i => TF.polyHash(concat(element_at(col("t"), i), lit(" "),
-                element_at(col("t"), i + 1))))).as("sh"))
+          .select(col("doc_id"), col("dids"), wordHashes(col("t")).as("sh"))
           // read by the prefix join input, the dids re-attach, and the
           // within-class expansion
           .localCheckpoint(true)
@@ -1456,18 +1432,7 @@ object QueriesLlm {
           .orderBy(col("doc_id"))
       },
       Some(
-        s"""WITH t AS (
-           |  SELECT doc_id,
-           |    CASE WHEN b < 80 THEN 'train' WHEN b < 90 THEN 'val' ELSE 'test' END AS split,
-           |    string_split_regex(trim(lower(text)), '\\s+') AS toks
-           |  FROM (SELECT doc_id, text,
-           |          ((doc_id * 1103515245 + 12345) % 2147483647) % 100 AS b
-           |        FROM documents)),
-           |g AS (
-           |  SELECT doc_id, split, unnest(list_distinct([
-           |    ${contentFpSql(s"list_transform(toks[i:i+4], tok -> ${TF.polyHashSql("tok")})")}
-           |    FOR i IN generate_series(1, len(toks) - 4)])) AS fp
-           |  FROM t WHERE len(toks) >= 5)
+        s"""WITH $splitGramsCtes
            |SELECT te.doc_id, count(DISTINCT tr.doc_id) AS n_train_docs,
            |  count(DISTINCT te.fp) AS n_shared_grams
            |FROM g te JOIN g tr ON te.fp = tr.fp
@@ -1491,8 +1456,7 @@ object QueriesLlm {
         val t = table(spark, dir, "documents")
           .select(col("doc_id"), col("lang"), TF.tokens(lower(col("text"))).as("t"))
           .filter(size(col("t")) >= 2)
-          .withColumn("gs", transform(sequence(lit(1), size(col("t")) - 1),
-            i => concat(element_at(col("t"), i), lit(" "), element_at(col("t"), i + 1))))
+          .withColumn("gs", TF.wordBigrams(col("t"), " "))
           .withColumn("st", TF.elementCountStats(col("gs")))
           .select(col("lang"),
             col("st.top_c").as("top_c"),
@@ -1509,19 +1473,16 @@ object QueriesLlm {
           .orderBy(col("lang"))
       },
       Some(
-        """WITH t AS (
-          |  SELECT doc_id, lang, string_split_regex(trim(lower(text)), '\s+') AS toks
+        s"""WITH t AS (
+          |  SELECT lang, ${TF.tokensSql("lower(text)")} AS toks
           |  FROM documents),
           |bg AS (
-          |  SELECT doc_id, lang,
-          |    unnest([toks[i] || ' ' || toks[i+1]
-          |            FOR i IN generate_series(1, len(toks) - 1)]) AS g
+          |  SELECT lang, ${TF.wordBigramsSql("toks", " ")} AS gs
           |  FROM t WHERE len(toks) >= 2),
-          |bgc AS (SELECT doc_id, lang, g, count(*) AS c FROM bg GROUP BY 1, 2, 3),
           |perdoc AS (
-          |  SELECT doc_id, lang, max(c) AS top_c, sum(c) AS tot,
-          |    sum(CASE WHEN c >= 2 THEN c ELSE 0 END) AS dup_mass
-          |  FROM bgc GROUP BY 1, 2)
+          |  SELECT lang, st.top_c AS top_c, len(gs) AS tot,
+          |    len(gs) - st.n_singleton AS dup_mass
+          |  FROM (SELECT lang, gs, ${TF.elementCountStatsSql("gs")} AS st FROM bg))
           |SELECT lang, count(*) AS docs,
           |  CAST(sum(CASE WHEN top_c * 1000 >= tot * 100 THEN 1 ELSE 0 END) AS BIGINT)
           |    AS flagged_topbg,
@@ -1545,7 +1506,7 @@ object QueriesLlm {
       (spark, dir) => {
         val t = table(spark, dir, "documents")
           .select(col("doc_id"), col("lang"), (col("doc_id") % 8).as("shard"),
-            size(TF.tokens(lower(col("text")))).cast("long").as("n_tok"))
+            TF.tokenCount(lower(col("text"))).cast("long").as("n_tok"))
         val w = Window.partitionBy(col("lang"), col("shard"))
           .orderBy(col("doc_id"))
           .rowsBetween(Window.unboundedPreceding, -1)
@@ -1556,9 +1517,9 @@ object QueriesLlm {
           .orderBy(col("lang"), col("shard"), col("pack_id"))
       },
       Some(
-        """WITH t AS (
+        s"""WITH t AS (
           |  SELECT doc_id, lang, doc_id % 8 AS shard,
-          |    CAST(len(string_split_regex(trim(lower(text)), '\s+')) AS BIGINT) AS n_tok
+          |    CAST(${TF.tokenCountSql("lower(text)")} AS BIGINT) AS n_tok
           |  FROM documents),
           |c AS (
           |  SELECT doc_id, lang, shard, n_tok,
@@ -1663,27 +1624,11 @@ object QueriesLlm {
           .withColumn("doc_id", col("doc_id") + 400000L))
         val flagged = corpus
           .withColumn("toks", TF.tokens(lower(col("text"))))
-          .withColumn("n_tok", size(col("toks")).cast("long"))
-          // .cast("long") is load-bearing: Spark's `/` on longs is
-          // DOUBLE division; the truncating cast makes it the floor the
-          // oracle's `//` computes (TextFunctions.qualityMetrics form)
-          .withColumn("mean_len_x100", when(col("n_tok") > 0,
-            (aggregate(col("toks"), lit(0L), (acc, t) => acc + length(t))
-              * 100 / col("n_tok")).cast("long")).otherwise(0L))
-          // the size>=2 branch is load-bearing, not defensive:
-          // sequence(1, 0) yields [1, 0] (descending), so the
-          // un-guarded transform evaluates element_at(toks, 0) — which
-          // ALWAYS throws — on any 0/1-token doc. greatest() cannot fix
-          // that; only skipping the transform entirely can.
-          .withColumn("gs", when(size(col("toks")) >= 2,
-            transform(sequence(lit(1), size(col("toks")) - 1),
-              i => concat(element_at(col("toks"), i), lit(" "),
-                element_at(col("toks"), i + 1))))
-            .otherwise(array().cast("array<string>")))
+          .withColumn("gs", TF.wordBigrams(col("toks"), " "))
           .withColumn("top_c", TF.elementCountStats(col("gs")).getField("top_c"))
           .select(col("doc_id"), col("text"),
             (TF.langId(col("text")) =!= "und").as("f_lang"),
-            (col("n_tok") >= 15 && col("mean_len_x100").between(420, 470))
+            (size(col("toks")) >= 15 && TF.meanTokLenX100(col("toks")).between(420, 470))
               .as("f_quality"),
             when(size(col("gs")) > 0,
               col("top_c") * 1000 < size(col("gs")).cast("long") * 100)
@@ -1714,49 +1659,25 @@ object QueriesLlm {
           .select(col("s.*"))
           .orderBy(col("stage_idx"))
       },
-      Some {
-        // stage predicates mirror q47 (lang pick), q48 (mean token
-        // length), q94 (top-bigram mass) exactly
-        val hits = TF.LangMarkers.toSeq.sortBy(_._1).map { case (lang, ms) =>
-          val inList = ms.map(m => s"'$m'").mkString(", ")
-          lang -> s"len(list_filter(string_split_regex(trim(lower(text)), '\\s+'), t -> t IN ($inList)))"
-        }
-        val best = s"greatest(${hits.map(_._2).mkString(", ")})"
-        val pick = hits.map { case (lang, h) =>
-          s"WHEN $h = best AND best > 0 THEN '$lang'"
-        }.mkString(" ")
+      Some(
+        // stage predicates are q47's lang pick, q48's mean token
+        // length and q94's top-bigram mass, each through its twin
         s"""WITH corpus AS (
            |  SELECT doc_id, text FROM documents
            |  UNION ALL
            |  SELECT doc_id + 400000, text FROM documents WHERE doc_id % 9 = 0),
            |base AS (
-           |  SELECT doc_id, text,
-           |    string_split_regex(trim(lower(text)), '\\s+') AS toks,
-           |    $best AS best
-           |  FROM corpus),
-           |f1 AS (
-           |  SELECT doc_id, text, toks,
-           |    (CASE $pick ELSE 'und' END) <> 'und' AS f_lang,
-           |    CAST(len(toks) AS BIGINT) AS n_tok,
-           |    CASE WHEN len(toks) > 0 THEN
-           |      list_reduce(list_prepend(CAST(0 AS BIGINT),
-           |        list_transform(toks, t -> CAST(length(t) AS BIGINT))),
-           |        (a, x) -> a + x) * 100 // len(toks)
-           |    ELSE 0 END AS mean_len_x100
-           |  FROM base),
-           |bg AS (
-           |  SELECT doc_id, unnest([toks[i] || ' ' || toks[i+1]
-           |    FOR i IN generate_series(1, len(toks) - 1)]) AS g
-           |  FROM base WHERE len(toks) >= 2),
-           |bgc AS (SELECT doc_id, g, count(*) AS c FROM bg GROUP BY 1, 2),
-           |rep AS (
-           |  SELECT doc_id, max(c) AS top_c, sum(c) AS tot
-           |  FROM bgc GROUP BY doc_id),
+           |  SELECT doc_id, text, toks, ${TF.wordBigramsSql("toks", " ")} AS gs
+           |  FROM (SELECT doc_id, text, ${TF.tokensSql("lower(text)")} AS toks FROM corpus)),
            |fl AS (
-           |  SELECT f1.doc_id, f1.text, f_lang,
-           |    (n_tok >= 15 AND mean_len_x100 BETWEEN 420 AND 470) AS f_quality,
-           |    COALESCE(r.top_c * 1000 < r.tot * 100, TRUE) AS f_rep
-           |  FROM f1 LEFT JOIN rep r ON r.doc_id = f1.doc_id),
+           |  SELECT doc_id, text,
+           |    ${TF.langIdSql("text")} <> 'und' AS f_lang,
+           |    (len(toks) >= 15 AND ${TF.meanTokLenX100Sql("toks")} BETWEEN 420 AND 470)
+           |      AS f_quality,
+           |    CASE WHEN len(gs) > 0
+           |      THEN (${TF.elementCountStatsSql("gs")}).top_c * 1000 < len(gs) * 100
+           |      ELSE TRUE END AS f_rep
+           |  FROM base),
            |c AS (
            |  SELECT count(*) AS n0,
            |    CAST(sum(CASE WHEN f_lang THEN 1 ELSE 0 END) AS BIGINT) AS n1,
@@ -1775,8 +1696,7 @@ object QueriesLlm {
            |  SELECT 3, 'repetition', n2 - n3, n3 FROM c
            |  UNION ALL
            |  SELECT 4, 'exact_dedup', n3 - d.n4, d.n4 FROM c, d)
-           |ORDER BY stage_idx""".stripMargin
-      }),
+           |ORDER BY stage_idx""".stripMargin)),
 
     // -- PII scrubbing (email + phone redaction with audit counts):
     // the compliance pass every training corpus runs before release.
@@ -1790,8 +1710,6 @@ object QueriesLlm {
     // redacted before phone on BOTH sides so chars_removed agrees.
     Q("q101_pii_redaction",
       (spark, dir) => {
-        val emailRe = "[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}"
-        val phoneRe = "[0-9]{3}-[0-9]{3}-[0-9]{4}"
         val withPii = table(spark, dir, "documents")
           .select(col("doc_id"), col("lang"),
             concat(col("text"),
@@ -1804,11 +1722,11 @@ object QueriesLlm {
                   lit("-0199"))).otherwise(lit(""))).as("text"))
         val scrubbed = withPii
           .withColumn("n_email",
-            size(regexp_extract_all(col("text"), lit(emailRe), lit(0))).cast("long"))
+            size(regexp_extract_all(col("text"), lit(TF.EmailRe), lit(0))).cast("long"))
           .withColumn("n_phone",
-            size(regexp_extract_all(col("text"), lit(phoneRe), lit(0))).cast("long"))
+            size(regexp_extract_all(col("text"), lit(TF.PhoneRe), lit(0))).cast("long"))
           .withColumn("red", regexp_replace(
-            regexp_replace(col("text"), emailRe, "<EMAIL>"), phoneRe, "<PHONE>"))
+            regexp_replace(col("text"), TF.EmailRe, "<EMAIL>"), TF.PhoneRe, "<PHONE>"))
         scrubbed.groupBy(col("lang"))
           .agg(count(lit(1)).as("n_docs"),
             sum(when(col("n_email") + col("n_phone") > 0, 1L).otherwise(0L))
@@ -1819,9 +1737,7 @@ object QueriesLlm {
               .as("chars_removed"))
           .orderBy(col("lang"))
       },
-      Some {
-        val emailRe = "[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}"
-        val phoneRe = "[0-9]{3}-[0-9]{3}-[0-9]{4}"
+      Some(
         s"""WITH p AS (
            |  SELECT lang,
            |    text ||
@@ -1833,10 +1749,10 @@ object QueriesLlm {
            |  FROM documents),
            |s AS (
            |  SELECT lang, text,
-           |    CAST(len(regexp_extract_all(text, '$emailRe')) AS BIGINT) AS n_email,
-           |    CAST(len(regexp_extract_all(text, '$phoneRe')) AS BIGINT) AS n_phone,
-           |    regexp_replace(regexp_replace(text, '$emailRe', '<EMAIL>', 'g'),
-           |      '$phoneRe', '<PHONE>', 'g') AS red
+           |    CAST(len(regexp_extract_all(text, '${TF.EmailRe}')) AS BIGINT) AS n_email,
+           |    CAST(len(regexp_extract_all(text, '${TF.PhoneRe}')) AS BIGINT) AS n_phone,
+           |    regexp_replace(regexp_replace(text, '${TF.EmailRe}', '<EMAIL>', 'g'),
+           |      '${TF.PhoneRe}', '<PHONE>', 'g') AS red
            |  FROM p)
            |SELECT lang, count(*) AS n_docs,
            |  CAST(sum(CASE WHEN n_email + n_phone > 0 THEN 1 ELSE 0 END) AS BIGINT)
@@ -1844,8 +1760,7 @@ object QueriesLlm {
            |  CAST(sum(n_email) AS BIGINT) AS n_emails,
            |  CAST(sum(n_phone) AS BIGINT) AS n_phones,
            |  CAST(sum(length(text) - length(red)) AS BIGINT) AS chars_removed
-           |FROM s GROUP BY lang ORDER BY lang""".stripMargin
-      }),
+           |FROM s GROUP BY lang ORDER BY lang""".stripMargin)),
 
     // -- Global sub-document (chunk-level) deduplication — the C4 /
     // CCNet "drop duplicated lines across the whole corpus" pass,
@@ -1990,18 +1905,7 @@ object QueriesLlm {
           .orderBy(col("lang"))
       },
       Some(
-        s"""WITH t AS (
-           |  SELECT doc_id, lang,
-           |    CASE WHEN b < 80 THEN 'train' WHEN b < 90 THEN 'val' ELSE 'test' END AS split,
-           |    string_split_regex(trim(lower(text)), '\\s+') AS toks
-           |  FROM (SELECT doc_id, lang, text,
-           |          ((doc_id * 1103515245 + 12345) % 2147483647) % 100 AS b
-           |        FROM documents)),
-           |g AS (
-           |  SELECT doc_id, lang, split, unnest(list_distinct([
-           |    ${contentFpSql(s"list_transform(toks[i:i+4], tok -> ${TF.polyHashSql("tok")})")}
-           |    FOR i IN generate_series(1, len(toks) - 4)])) AS fp
-           |  FROM t WHERE len(toks) >= 5 AND split <> 'val'),
+        s"""WITH $splitGramsCtes,
            |hits AS (
            |  SELECT DISTINCT doc_id, fp FROM g
            |  WHERE split = 'test' AND fp IN (SELECT fp FROM g WHERE split = 'train')),
@@ -2315,9 +2219,9 @@ object QueriesLlm {
           .orderBy(col("lang"))
       },
       Some(
-        """WITH d AS (
+        s"""WITH d AS (
           |  SELECT doc_id, lang,
-          |    CAST(len(string_split_regex(trim(text), '\s+')) AS BIGINT) AS t,
+          |    CAST(${TF.tokenCountSql("text")} AS BIGINT) AS t,
           |    md5(CAST(doc_id AS VARCHAR) || ':mix') AS h
           |  FROM documents),
           |c AS (
@@ -2497,7 +2401,7 @@ object QueriesLlm {
           .orderBy(col("source"), col("format"))
       },
       Some(
-        """WITH d AS (
+        s"""WITH d AS (
           |  SELECT doc_id, source, text,
           |    CAST(doc_id % 3 + 2 AS INT) AS w, CAST(doc_id % 2 + 2 AS INT) AS h
           |  FROM documents
@@ -2526,7 +2430,7 @@ object QueriesLlm {
           |  WHERE m.format = 'raw'),
           |fc AS (
           |  SELECT source, format,
-          |    list_transform(string_split_regex(fb, ''), c -> CAST(ascii(c) AS BIGINT)) AS bytes
+          |    ${TF.asciiCodesSql("fb")} AS bytes
           |  FROM fr)
           |SELECT source, format, count(*) AS frames,
           |  CAST(sum(list_reduce(list_prepend(CAST(0 AS BIGINT), bytes), (a, x) -> a + x)) AS BIGINT) AS sum_bytes,

@@ -36,15 +36,16 @@ object Vcf {
 
   /** Read a VCF into long format: one row per (line, strain), with the
     * fixed columns parsed and `gt` holding the strain's genotype column
-    * (null when the line ends before that strain's column). Gzip input
-    * is transparent (codec by file extension). */
+    * (null when the line ends before that column, fixed or genotype, so
+    * a line short of the 9 fixed fields reads NULL, not an error). Gzip
+    * input is transparent (codec by file extension). */
   def read(spark: SparkSession, path: String): DataFrame = {
     val strains = strainNames(spark, path)
     val lines = spark.read.text(path)
       .filter(!col("value").startsWith("#"))
       .select(split(col("value"), "\t").as("c"))
     val fixed = FixedCols.zipWithIndex.map { case (n, i) =>
-      element_at(col("c"), i + 1).as(n)
+      try_element_at(col("c"), lit(i + 1)).as(n)
     }
     // a line with fewer genotype cells than the header reads the
     // missing strains' cells as null

@@ -17,6 +17,33 @@ class TextVectorFunctionsSpec extends SparkSpec {
     assert(r.getInt(2) == 6) // the, quick, ',', brown, fox, '!'
   }
 
+  test("whitespace rule: blank, NULL, one-token and tab-leading texts") {
+    // trim drops spaces only: the tab-leading text keeps a leading '' token
+    val texts = Seq("", "   ", null, "Tok", "\tx")
+    val got = texts.toDF("t")
+      .select(TextFunctions.tokens($"t").as("toks"),
+        TextFunctions.tokenCount($"t").as("n"),
+        TextFunctions.wordBigrams(TextFunctions.tokens($"t"), "_").as("bg"),
+        TextFunctions.qualityMetrics($"t").as("m"),
+        TextFunctions.langId($"t").as("lang"))
+      .collect()
+    def opt[A](r: org.apache.spark.sql.Row, f: String): Option[A] =
+      Option(r.getAs[A](f))
+    def list(r: org.apache.spark.sql.Row, f: String): Option[Seq[String]] =
+      opt[collection.Seq[String]](r, f).map(_.toSeq)
+    assert(got.map(list(_, "toks")).toSeq ==
+      Seq(Some(Nil), Some(Nil), None, Some(Seq("Tok")), Some(Seq("", "x"))))
+    assert(got.map(r => opt[Int](r, "n")).toSeq == Seq(Some(0), Some(0), None, Some(1), Some(2)))
+    assert(got.map(list(_, "bg")).toSeq ==
+      Seq(Some(Nil), Some(Nil), Some(Nil), Some(Nil), Some(Seq("_x"))))
+    val m = got.map(_.getAs[org.apache.spark.sql.Row]("m"))
+    assert(m.map(r => opt[Long](r, "n_tokens")).toSeq ==
+      Seq(Some(0L), Some(0L), None, Some(1L), Some(2L)))
+    // ('' + 'x') * 100 / 2 tokens; no tokens -> 0
+    assert(m.map(_.getAs[Long]("mean_tok_len_x100")).toSeq == Seq(0L, 0L, 0L, 300L, 50L))
+    assert(got.map(_.getAs[String]("lang")).toSeq == Seq.fill(5)("und"))
+  }
+
   test("elementCountStats: run-length scan equals brute-force counts") {
     val cases = Seq(
       (Seq.empty[String], 0L, 0L),            // empty -> (0, 0)
@@ -82,6 +109,10 @@ class TextVectorFunctionsSpec extends SparkSpec {
       .toDF("t").select(TextFunctions.langId($"t").as("l"))
       .collect().map(_.getString(0))
     assert(r.toSeq == Seq("en", "de", "und"))
+    // equal marker hits break alphabetically; markers match lower-cased tokens
+    val ties = Seq("THE Der", "la the", "el la the and").toDF("t")
+      .select(TextFunctions.langId($"t")).collect().map(_.getString(0))
+    assert(ties.toSeq == Seq("de", "en", "en"))
   }
 
   test("cosine: identical vectors 1.0, orthogonal 0.0; quantization stable") {

@@ -198,6 +198,30 @@ class StrainLoaderSpec extends SparkSpec with BeforeAndAfterAll {
     }
   }
 
+  test("a call of an allele index past the ALT list drops that allele and loads the rest") {
+    run // the shared store table is overwritten below, after the other cases
+    val root4 = Files.createTempDirectory("graft-strain-loader-pastalt")
+    val p4 = StrainLoader.Paths(root4.toFile)
+    try {
+      // S1 calls allele 2 of a one-ALT line; S2's allele 1 is real
+      val lines = Seq(("1", 15, "A", "G", Seq("0/2:10,10:20", "1/1:0,20:20", "0/0:20,0:20")),
+        ("1", 105, "G", "C", Seq("1/2:0,10:20", "0/1:10,10:20", "0/0:20,0:20")))
+      write(root4, "pastalt.vcf", vcf(Wave1Strains, lines))
+      setup(root4, p4)
+      val (c, rows) = load(root4, p4, "pastalt", Wave1Strains, rewave = false)
+      val e = expected(Wave1Strains, lines)
+      assert(e.keys == Set("1|15|A|G", "1|105|G|C") && e.alleleRows == 3L)
+      assert(c == e.counters(maxSeedId = 0L, mergeAffected = -1L))
+      assert(rows.keySet == e.keys)
+      val cf2 = graft.sources.Cf2.read(spark, StrainLoader.Out(root4.resolve("out/pastalt").toString).cf2)
+      assert(cf2.filter(col("var_nuc").isNull).count() == 0L)
+      assert(StrainLoader.derbyCount(p4) == e.keys.size)
+    } finally {
+      Jdbc.shutdownEmbeddedDerby(p4.derby)
+      graft.queries.Fixtures.rmrf(root4.toFile)
+    }
+  }
+
   override def afterAll(): Unit = {
     try {
       spark.sql(s"DROP TABLE IF EXISTS ${StrainLoader.StoreTable}")
@@ -280,8 +304,9 @@ object StrainLoaderSpec {
 
   /** The converter's rules over the fixture: a cell is hom-ref (0/0),
     * missing (./.), short (absent) or called; each distinct alt allele
-    * of a call is rejected when its AD share of DP is <= 15 %, else
-    * keyed with the shared padding base of an indel dropped. */
+    * of a call (an index past the ALT list has none) is rejected when
+    * its AD share of DP is <= 15 %, else keyed with the shared padding
+    * base of an indel dropped. */
   def expected(strains: Seq[(String, String)],
                lines: Seq[(String, Int, String, String, Seq[String])]): Expected = {
     val cells = for ((c, pos, ref, alt, cs) <- lines; i <- strains.indices)
@@ -290,10 +315,10 @@ object StrainLoaderSpec {
       (c, pos, ref, alts, Some(cell)) <- cells
       f = cell.split(":")
       a <- f(0).split("/").flatMap(_.toIntOption).filter(_ > 0).distinct
+      va <- alts.lift(a - 1)
     } yield {
       val ad = f(1).split(",")(a).toInt
       val dp = f(2).toInt
-      val va = alts(a - 1)
       val indel = ref.length != va.length && (ref.length == 1 || va.length == 1)
       val key =
         if (indel && ref.head == va.head) s"$c|${pos + 1}|${ref.tail}|${va.tail}"

@@ -52,6 +52,18 @@ class VcfFastaSpec extends SparkSpec {
       Seq("A", "B"))
   }
 
+  test("VCF read: a line short of the 9 fixed fields reads NULL cells, not an error") {
+    val hdr = "#CHROM\tPOS\tID\tREF\tALT\tQUAL\tFILTER\tINFO\tFORMAT\tA\tB"
+    val short = "3\t300\trs3\tA\tC"
+    val plain = "2\t200\trs2\tG\tT\t60\tPASS\tDP=20\tGT\t0/0\t./."
+    val rows = Vcf.read(spark, writeTemp("vcf", Seq(hdr, short, plain).mkString("\n") + "\n"))
+      .select($"pos", $"alt", $"qual", $"format", $"strain", $"gt")
+      .as[(Long, String, String, String, String, String)]
+      .collect().sortBy(r => (r._1, r._5)).toSeq
+    assert(rows == Seq((200L, "T", "60", "GT", "A", "0/0"), (200L, "T", "60", "GT", "B", "./."),
+      (300L, "C", null, null, "A", null), (300L, "C", null, null, "B", null)))
+  }
+
   test("VCF writeSorted: header first, then numeric (chr, pos, id) order") {
     val lines = Seq(
       ("2", 5L, "b", "2\t5\tb\t..."),

@@ -1,9 +1,8 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
 
@@ -82,15 +81,4 @@ case class ArrayDotProduct(left: Expression, right: Expression)
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): Expression =
     copy(left = newLeft, right = newRight)
-}
-
-object ArrayDotProduct {
-  /** (identifier, info, builder) triple for `SparkSessionExtensions.injectFunction`. */
-  val functionDescription: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("array_dot"),
-    new ExpressionInfo(classOf[ArrayDotProduct].getCanonicalName, "array_dot"),
-    (args: Seq[Expression]) => {
-      require(args.length == 2, s"array_dot takes 2 arguments, got ${args.length}")
-      ArrayDotProduct(args(0), args(1))
-    })
 }

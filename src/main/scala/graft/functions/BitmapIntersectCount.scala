@@ -1,9 +1,8 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
 
@@ -75,15 +74,4 @@ case class BitmapIntersectCount(left: Expression, right: Expression)
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): Expression =
     copy(left = newLeft, right = newRight)
-}
-
-object BitmapIntersectCount {
-  /** (identifier, info, builder) triple for `SparkSessionExtensions.injectFunction`. */
-  val functionDescription: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("bitmap_inter_count"),
-    new ExpressionInfo(classOf[BitmapIntersectCount].getCanonicalName, "bitmap_inter_count"),
-    (args: Seq[Expression]) => {
-      require(args.length == 2, s"bitmap_inter_count takes 2 arguments, got ${args.length}")
-      BitmapIntersectCount(args(0), args(1))
-    })
 }

@@ -1,9 +1,8 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, TernaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, TernaryExpression}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -130,13 +129,4 @@ object DictBitmap {
     }
     new GenericArrayData(words)
   }
-
-  /** (identifier, info, builder) triple for `SparkSessionExtensions.injectFunction`. */
-  val functionDescription: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("dict_bitmap"),
-    new ExpressionInfo(classOf[DictBitmap].getCanonicalName, "dict_bitmap"),
-    (args: Seq[Expression]) => {
-      require(args.length == 3, s"dict_bitmap takes 3 arguments, got ${args.length}")
-      DictBitmap(args(0), args(1), args(2))
-    })
 }

@@ -1,9 +1,8 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType}
 
@@ -116,15 +115,4 @@ case class MinhashSignature(left: Expression, right: Expression)
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): Expression =
     copy(left = newLeft, right = newRight)
-}
-
-object MinhashSignature {
-  /** (identifier, info, builder) triple for `SparkSessionExtensions.injectFunction`. */
-  val functionDescription: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("minhash_sig"),
-    new ExpressionInfo(classOf[MinhashSignature].getCanonicalName, "minhash_sig"),
-    (args: Seq[Expression]) => {
-      require(args.length == 2, s"minhash_sig takes 2 arguments, got ${args.length}")
-      MinhashSignature(args(0), args(1))
-    })
 }

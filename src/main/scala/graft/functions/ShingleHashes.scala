@@ -1,9 +1,8 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -95,13 +94,4 @@ object ShingleHashes {
     }
     new GenericArrayData(java.util.Arrays.copyOf(out, m))
   }
-
-  /** (identifier, info, builder) triple for `SparkSessionExtensions.injectFunction`. */
-  val functionDescription: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("shingle_hashes"),
-    new ExpressionInfo(classOf[ShingleHashes].getCanonicalName, "shingle_hashes"),
-    (args: Seq[Expression]) => {
-      require(args.length == 1, s"shingle_hashes takes 1 argument, got ${args.length}")
-      ShingleHashes(args(0))
-    })
 }

@@ -75,6 +75,16 @@ object VariantFunctions {
       .otherwise(lit(0))
   }
 
+  /** Twin of [[qualityScore]]. The quotient truncates toward zero, as
+    * Java's integer division and Spark's double-to-long cast do, built
+    * from `floor` of its magnitude: DuckDB has no `DIV`, and its CAST of
+    * a double to an integer rounds where Spark's truncates. */
+  def qualityScoreSql(readDepth: String, totalDepth: String): String = {
+    val td = s"CAST($totalDepth AS BIGINT)"
+    val n = s"(CAST($readDepth AS BIGINT) * 100 + floor($td / 2))"
+    s"CASE WHEN $td > 0 THEN CAST(sign($n) * floor(abs($n) / $td) AS INT) ELSE 0 END"
+  }
+
   /** Allele string QC: only A,C,G,T,N,'-' allowed.
     * Reference `VariantLoad3.alleleIsValid:368-376`. */
   def alleleIsValid(allele: Column): Column = allele.rlike("^[ACGTN-]*$")

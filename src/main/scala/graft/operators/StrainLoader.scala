@@ -32,8 +32,8 @@ import graft.streaming.StreamingOps
   *    wave numbers its keys 1..n ([[IdAssign.assignDense]]); a re-wave
   *    keeps the ids of keys already in the bucketed store and numbers
   *    only its new keys from max+1 ([[StreamingOps.upsertBatch]]).
-  *    Writes `wave` (new and matched rows, `is_new`) and appends the new
-  *    keys to the store.
+  *    Writes `wave` (new and matched rows, `is_new`) and adds the new
+  *    keys to the store ([[variantStore]]).
   *  - [[genicJoin]]: genic status of every new key -> `genic`.
   *  - [[postprocess]]: exon hits of the new keys ([[CdsAssembly.exonHits]]), the CDS
   *    of every hit transcript -> `cds`, and [[CdsAssembly.codonEffect]]
@@ -55,6 +55,8 @@ object StrainLoader {
   val Keys: Seq[String] = Seq("chromosome", "position", "ref_nuc", "var_nuc")
   val StoreTable = "variant_store"
   val StoreCols: Seq[String] = Keys ++ Seq("rgd_id", "variant_type")
+  val StoreDdl: String = "chromosome STRING, position BIGINT, ref_nuc STRING, var_nuc STRING, " +
+    "rgd_id BIGINT, variant_type STRING"
   val SinkCols: Seq[String] = Seq("rgd_id") ++ Keys ++ Seq("variant_type", "n_samples", "n_het")
   val Buckets = 4
   val ChunkWidth = 1000
@@ -79,7 +81,7 @@ object StrainLoader {
   final case class Paths(root: java.io.File) {
     def in(n: String): String = new java.io.File(root, s"in/$n").getPath
     def table(n: String): String = new java.io.File(root, s"tables/$n").getPath
-    val store: String = new java.io.File(root, "store/variant").getPath
+    val store: String = new java.io.File(root, s"store/$StoreTable").getPath
     val derby: String = new java.io.File(root, "derby/db").getPath
     def url: String = s"jdbc:derby:$derby;create=true"
   }
@@ -156,14 +158,16 @@ object StrainLoader {
     } finally conn.close()
   }
 
+  /** The bucketed store of loaded keys: one [[Bucketed.EpochStore]]
+    * table, [[StoreTable]] at `p.store`. A fresh wave seeds it, a
+    * re-wave commits its new keys to it. */
+  def variantStore(spark: SparkSession, p: Paths): Bucketed.EpochStore =
+    Bucketed.EpochStore(spark, new java.io.File(p.store).getParent, Seq(StoreTable -> Keys))
+
   /** (Re)register the path-backed bucketed store in the session catalog. */
   def registerStore(spark: SparkSession, p: Paths): Unit = {
-    val ks = Keys.mkString(", ")
     spark.sql(s"DROP TABLE IF EXISTS $StoreTable")
-    spark.sql(s"CREATE TABLE $StoreTable (chromosome STRING, position BIGINT, " +
-      s"ref_nuc STRING, var_nuc STRING, rgd_id BIGINT, variant_type STRING) USING PARQUET " +
-      s"CLUSTERED BY ($ks) SORTED BY ($ks) INTO $Buckets BUCKETS LOCATION '${p.store}'")
-    spark.catalog.refreshByPath(p.store)
+    Bucketed.attach(spark, StoreTable, StoreDdl, Buckets, Keys, p.store)
   }
 
   // ------------------------------------------------------------- spans
@@ -249,8 +253,9 @@ object StrainLoader {
 
   /** operators.variant_load: CF2 -> natural-key rows with dense ids,
     * written as the wave table (`is_new` marks keys not yet stored); the
-    * new keys are appended to the bucketed store. Returns the store's
-    * largest id before the wave. */
+    * new keys seed the bucketed store ([[variantStore]]) on a fresh wave
+    * and are committed to it on a re-wave. Returns the store's largest
+    * id before the wave. */
   def variantLoad(spark: SparkSession, out: Out, p: Paths, genders: Map[String, String],
                   rewave: Boolean, obsCf2: Observation,
                   obsWave: Observation): Long = {
@@ -289,9 +294,8 @@ object StrainLoader {
     wave.observe(obsWave, count(lit(1)).as("wave_keys"),
         sum(when(col("is_new"), 1L).otherwise(0L)).as("new_keys"))
       .write.mode("overwrite").parquet(out.wave)
-    Bucketed.writeBucketed(newVariants(spark, out).select(StoreCols.map(col): _*),
-      StoreTable, Buckets, Keys, mode = if (rewave) "append" else "overwrite",
-      path = Some(p.store))
+    val added = newVariants(spark, out).select(StoreCols.map(col): _*)
+    if (rewave) variantStore(spark, p).commit(added) else variantStore(spark, p).seed(Buckets, added)
     maxSeedId
   }
 

@@ -1,6 +1,7 @@
 package graft.plans
 
 import org.apache.spark.sql.SparkSessionExtensions
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.Inner
 import org.apache.spark.sql.catalyst.plans.logical.{Generate, Join, LogicalPlan}
@@ -101,14 +102,30 @@ object BinnedIntervalJoinRule extends Rule[LogicalPlan] with PredicateHelper {
   * native functions. Every session the library builds (`Verify`,
   * `Bench`, smoke, tests) gets it from `graft.GraftSession.local`. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
+  import graft.functions._
+
   override def apply(ext: SparkSessionExtensions): Unit = {
     ext.injectOptimizerRule(_ => BinnedIntervalJoinRule)
-    ext.injectFunction(graft.functions.BitmapIntersectCount.functionDescription)
-    ext.injectFunction(graft.functions.ArrayDotProduct.functionDescription)
-    ext.injectFunction(graft.functions.ArrayL2Sq.functionDescription)
-    ext.injectFunction(graft.functions.MinhashSignature.functionDescription)
-    ext.injectFunction(graft.functions.SortedIntersectCount.functionDescription)
-    ext.injectFunction(graft.functions.ShingleHashes.functionDescription)
-    ext.injectFunction(graft.functions.DictBitmap.functionDescription)
+    Seq(
+      native[BitmapIntersectCount]("bitmap_inter_count", 2)(a => BitmapIntersectCount(a(0), a(1))),
+      native[ArrayDotProduct]("array_dot", 2)(a => ArrayDotProduct(a(0), a(1))),
+      native[ArrayL2Sq]("array_l2sq", 2)(a => ArrayL2Sq(a(0), a(1))),
+      native[MinhashSignature]("minhash_sig", 2)(a => MinhashSignature(a(0), a(1))),
+      native[SortedIntersectCount]("sorted_inter_count", 2)(a => SortedIntersectCount(a(0), a(1))),
+      native[ShingleHashes]("shingle_hashes", 1)(a => ShingleHashes(a(0))),
+      native[DictBitmap]("dict_bitmap", 3)(a => DictBitmap(a(0), a(1), a(2)))
+    ).foreach(ext.injectFunction)
   }
+
+  /** The (identifier, info, builder) triple `injectFunction` takes for
+    * the SQL function `name` of expression class `E`, whose builder
+    * checks the argument count. */
+  private def native[E <: Expression](name: String, arity: Int)(make: Seq[Expression] => E)(
+      implicit tag: scala.reflect.ClassTag[E]): (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) =
+    (FunctionIdentifier(name), new ExpressionInfo(tag.runtimeClass.getCanonicalName, name),
+      (args: Seq[Expression]) => {
+        require(args.length == arity,
+          s"$name takes $arity argument${if (arity == 1) "" else "s"}, got ${args.length}")
+        make(args)
+      })
 }

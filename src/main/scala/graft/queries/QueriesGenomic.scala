@@ -93,11 +93,9 @@ object QueriesGenomic {
           .agg(count(lit(1)).as("cnt"), sum(col("q")).as("sum_q"))
           .orderBy(col("q_bucket")),
       Some(withV(
-        """SELECT CAST(q // 10 AS BIGINT) AS q_bucket, count(*) AS cnt,
+        s"""SELECT CAST(q // 10 AS BIGINT) AS q_bucket, count(*) AS cnt,
           |  CAST(sum(q) AS BIGINT) AS sum_q
-          |FROM (SELECT CASE WHEN total_depth > 0
-          |               THEN CAST((100 * read_depth + total_depth // 2) // total_depth AS INT)
-          |               ELSE 0 END AS q
+          |FROM (SELECT ${VariantFunctions.qualityScoreSql("read_depth", "total_depth")} AS q
           |      FROM variants)
           |GROUP BY 1 ORDER BY 1""".stripMargin))),
 

@@ -882,7 +882,7 @@ object QueriesLlm {
       (spark, dir) => {
         val e = table(spark, dir, "events")
           .select(col("event_type"),
-            expr("CAST(floor(value * 100 + 0.5) AS BIGINT)").as("cents"))
+            expr(centsSql("value")).as("cents"))
         val w = Window.partitionBy(col("event_type")).orderBy(col("cents"))
         e.withColumn("rn", row_number().over(w).cast("long"))
           .join(e.groupBy(col("event_type")).agg(count(lit(1)).as("n")), "event_type")
@@ -893,8 +893,8 @@ object QueriesLlm {
           .orderBy(col("event_type"))
       },
       Some(
-        """WITH e AS (SELECT event_type,
-          |            CAST(floor(value * 100 + 0.5) AS BIGINT) AS cents FROM events),
+        s"""WITH e AS (SELECT event_type,
+          |            ${centsSql("value")} AS cents FROM events),
           |r AS (SELECT event_type, cents,
           |        row_number() OVER (PARTITION BY event_type ORDER BY cents) AS rn
           |      FROM e),
@@ -960,7 +960,7 @@ object QueriesLlm {
         import spark.implicits._
         val ds = table(spark, dir, "events")
           .selectExpr("user_id", "unix_micros(ts) AS ts_micros", "event_id",
-            "CAST(floor(value * 100 + 0.5) AS BIGINT) AS cents")
+            s"${centsSql("value")} AS cents")
           .as[TypedEv]
         ds.groupByKey(_.user_id)
           .mapGroups { (u, it) =>
@@ -975,8 +975,8 @@ object QueriesLlm {
           .orderBy(col("bucket"))
       },
       Some(
-        """WITH e AS (SELECT user_id, ts, event_id,
-          |            CAST(floor(value * 100 + 0.5) AS BIGINT) AS cents FROM events),
+        s"""WITH e AS (SELECT user_id, ts, event_id,
+          |            ${centsSql("value")} AS cents FROM events),
           |l AS (SELECT user_id,
           |        CASE WHEN cents > lag(cents) OVER (PARTITION BY user_id
           |          ORDER BY ts, event_id) THEN 1 ELSE 0 END AS inc
@@ -995,15 +995,15 @@ object QueriesLlm {
         table(spark, dir, "events")
           .select(dayofmonth(col("ts")).cast("long").as("dom"),
             (hour(col("ts")).cast("long") / 6).cast("long").as("band"),
-            expr("CAST(floor(value * 100 + 0.5) AS BIGINT)").as("cents"))
+            expr(centsSql("value")).as("cents"))
           .groupBy(col("dom"), col("band"))
           .agg(count(lit(1)).as("cnt"), sum(col("cents")).as("sum_cents"))
           .orderBy(col("dom"), col("band")),
       Some(
-        """SELECT CAST(extract(day FROM ts) AS BIGINT) AS dom,
+        s"""SELECT CAST(extract(day FROM ts) AS BIGINT) AS dom,
           |  CAST(extract(hour FROM ts) // 6 AS BIGINT) AS band,
           |  count(*) AS cnt,
-          |  CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT)) AS BIGINT) AS sum_cents
+          |  CAST(sum(${centsSql("value")}) AS BIGINT) AS sum_cents
           |FROM events GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin)),
 
     // -- Word-bigram top-k per language: token-level n-grams (the
@@ -1047,7 +1047,7 @@ object QueriesLlm {
         import spark.implicits._
         val ds = table(spark, dir, "events")
           .select(col("event_type"),
-            expr("CAST(floor(value * 100 + 0.5) AS BIGINT)").as("cents"),
+            expr(centsSql("value")).as("cents"),
             col("event_id"))
           .as[(String, Long, Long)]
         ds.groupByKey(_._1)
@@ -1060,12 +1060,12 @@ object QueriesLlm {
           .orderBy(col("event_type"), col("rn"))
       },
       Some(
-        """SELECT event_type, CAST(rn AS BIGINT) AS rn, cents, event_id
+        s"""SELECT event_type, CAST(rn AS BIGINT) AS rn, cents, event_id
           |FROM (SELECT event_type, cents, event_id,
           |        row_number() OVER (PARTITION BY event_type
           |          ORDER BY cents DESC, event_id) AS rn
           |      FROM (SELECT event_type,
-          |              CAST(floor(value * 100 + 0.5) AS BIGINT) AS cents,
+          |              ${centsSql("value")} AS cents,
           |              event_id
           |            FROM events))
           |WHERE rn <= 5 ORDER BY event_type, rn""".stripMargin)),

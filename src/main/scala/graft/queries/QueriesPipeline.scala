@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.functions.{TextFunctions, VariantFunctions, ZygosityFunctions}
-import graft.operators.{CdsAssembly, RangeJoin, WigParser}
+import graft.operators.{CdsAssembly, Fixup, RangeJoin, WigParser}
 
 /** The reference's pipeline-shaped operators, re-expressed Spark-first:
   * CDS assembly + codon translation (SURVEY §3.3 / A10 / W4 / X18-X21),
@@ -191,32 +191,13 @@ object QueriesPipeline {
        |         ELSE ${VariantFunctions.variantTypeSql("ref_nuc", "var_nuc")} END AS variant_type,
        |    CASE WHEN vid % 11 = 0 THEN (CASE WHEN fsc = 'T' THEN 'F' ELSE 'T' END)
        |         ELSE fsc END AS frameshift
-       |  FROM base),
-       |vt AS (
-       |  SELECT *, ${VariantFunctions.variantTypeFixupSql("ref_nuc", "var_nuc")} AS recomputed
-       |  FROM stored)
-       |SELECT 'variant_type' AS check_name,
-       |  (variant_type IS DISTINCT FROM recomputed) AS drifted,
-       |  coalesce(variant_type, '?') AS stored,
-       |  coalesce(recomputed, '?') AS recomputed,
-       |  count(*) AS n, CAST(sum(vid) AS BIGINT) AS sum_vid
-       |FROM vt GROUP BY 1, 2, 3, 4
-       |UNION ALL
-       |SELECT 'frameshift', (frameshift IS DISTINCT FROM fsc),
-       |  coalesce(frameshift, '?'), coalesce(fsc, '?'),
-       |  count(*), CAST(sum(vid) AS BIGINT)
-       |FROM stored GROUP BY 1, 2, 3, 4
-       |UNION ALL
-       |SELECT 'variant_type:after_fix', false, '*', '*', 0, 0
-       |UNION ALL
-       |SELECT 'frameshift:after_fix', false, '*', '*', 0, 0
-       |ORDER BY 1, 2, 3, 4""".stripMargin
+       |  FROM base)
+       |${Fixup.reportSql("stored",
+         Fixup.CheckSql("variant_type", "variant_type",
+           VariantFunctions.variantTypeFixupSql("ref_nuc", "var_nuc")),
+         Fixup.CheckSql("frameshift", "frameshift", "fsc"))}""".stripMargin
 
   // ============ q106: genic/num-allele/zygosity-percent fixups ========
-
-  /** Twin of `Fixup.genicLabel`. */
-  private def genicLabelSql(covered: String): String =
-    s"lower(${VariantFunctions.genicStatusSql(covered)})"
 
   private val fixup2Oracle: String =
     s"""WITH variants AS (${Synthetic.variantsSql}),
@@ -239,8 +220,8 @@ object QueriesPipeline {
          "bz.start_pos", "g_start", "g_stop")} AS covered
        |  FROM bz),
        |st AS (
-       |  SELECT *, ${genicLabelSql("covered <> (vid % 13 = 0)")} AS genic_status,
-       |    ${genicLabelSql("covered")} AS truth
+       |  SELECT *, ${Fixup.genicLabelSql("covered <> (vid % 13 = 0)")} AS genic_status,
+       |    ${Fixup.genicLabelSql("covered")} AS truth
        |  FROM gt),
        |na AS (
        |  SELECT vid, CAST(count(*) OVER w
@@ -252,25 +233,12 @@ object QueriesPipeline {
        |    coalesce(na.na_comp + CASE WHEN st.vid % 17 = 0 THEN 1 ELSE 0 END, 1) AS zna,
        |    na.na_comp
        |  FROM st LEFT JOIN na ON na.vid = st.vid)
-       |SELECT 'genic_status' AS check_name,
-       |  (genic_status IS DISTINCT FROM truth) AS drifted,
-       |  genic_status AS stored, truth AS recomputed,
-       |  count(*) AS n, CAST(sum(vid) AS BIGINT) AS sum_vid
-       |FROM st2 GROUP BY 1, 2, 3, 4
-       |UNION ALL
-       |SELECT 'num_allele', (zna IS DISTINCT FROM na_comp),
-       |  CAST(zna AS VARCHAR), CAST(na_comp AS VARCHAR),
-       |  count(*), CAST(sum(vid) AS BIGINT)
-       |FROM st2 WHERE zpr > 0 GROUP BY 1, 2, 3, 4
-       |UNION ALL
-       |SELECT 'zygosity_perc_read', true, zstat, ${ZygosityFunctions.statusLadderSql("var_freq")},
-       |  count(*), CAST(sum(vid) AS BIGINT)
-       |FROM st2 WHERE variant_type = 'snv' AND zpr <> var_freq
-       |GROUP BY 1, 2, 3, 4
-       |UNION ALL SELECT 'genic_status:after_fix', false, '*', '*', 0, 0
-       |UNION ALL SELECT 'num_allele:after_fix', false, '*', '*', 0, 0
-       |UNION ALL SELECT 'zygosity_perc_read:after_fix', false, '*', '*', 0, 0
-       |ORDER BY 1, 2, 3, 4""".stripMargin
+       |${Fixup.reportSql("st2",
+         Fixup.CheckSql("genic_status", "genic_status", "truth"),
+         Fixup.CheckSql("num_allele", "zna", "na_comp", scope = "zpr > 0"),
+         Fixup.CheckSql("zygosity_perc_read", "zpr", "var_freq",
+           scope = "variant_type = 'snv' AND zpr IS DISTINCT FROM var_freq",
+           status = Some("zstat" -> ZygosityFunctions.statusLadderSql("var_freq"))))}""".stripMargin
 
   // ================= q64: positional pairing join =====================
 
@@ -412,9 +380,6 @@ object QueriesPipeline {
       },
       Some(upsertOracle)),
 
-    // J11/W5: equal keys on both sides pair off positionally (the
-    // reference consumes first-match with iterator.remove; row_number on
-    // both sides + equi-join is the deterministic distributed form).
     // §5.5 fixups as drift-assertion jobs: a legacy-loaded VARIANT
     // table (deliberately drifted labels baked in: every 7th vid a
     // 'snp'-era type, every 11th a flipped frameshift flag) is WRITTEN
@@ -422,57 +387,27 @@ object QueriesPipeline {
     // (`fixup/VariantTypeFixUp.java:47-63`,
     // `fixup/FrameShiftFixUp.java:55-64`), drift reported per
     // (stored, recomputed) pair, then the fix is applied, re-written,
-    // and re-checked — the after_fix rows assert 0 remaining drift
-    // against the oracle's literal zeros. Map-only at any scale: the
-    // re-derivation is a projection; only the report aggregates.
+    // and re-checked in one pass — the after_fix rows assert 0
+    // remaining drift against the oracle's literal zeros. Map-only at
+    // any scale: the re-derivation is a projection; only the report and
+    // the recheck aggregate.
     Q("q86_fixup_drift",
       (spark, dir) => {
-        import graft.operators.Fixup
         val fsc = VariantFunctions.frameshiftFlag(col("ref_nuc"), col("var_nuc"))
-        val stored0 = Synthetic.variants(spark, dir)
-          .select(col("vid"), col("ref_nuc"), col("var_nuc"))
-          .withColumn("variant_type",
-            when(col("vid") % 7 === 0, "snp")
-              .otherwise(VariantFunctions.variantType(col("ref_nuc"), col("var_nuc"))))
-          .withColumn("frameshift",
-            when(col("vid") % 11 === 0,
-              when(fsc === "T", "F").otherwise("T")).otherwise(fsc))
-        val path = s"${QueriesSources.FixtureDir}/fixup_variants"
-        stored0.write.mode("overwrite").parquet(path)
-        val stored = spark.read.parquet(path)
-        def report(name: String, d: org.apache.spark.sql.DataFrame,
-                   storedCol: String) =
-          d.groupBy(lit(name).as("check_name"), col("drifted"),
-              coalesce(col(storedCol), lit("?")).as("stored"),
-              coalesce(col("recomputed"), lit("?")).as("recomputed"))
-            .agg(count(lit(1)).as("n"), sum(col("vid")).as("sum_vid"))
-        def afterFix(name: String, d: org.apache.spark.sql.DataFrame) =
-          d.filter(col("drifted")).agg(count(lit(1)).as("n"))
-            .select(lit(name).as("check_name"), lit(false).as("drifted"),
-              lit("*").as("stored"), lit("*").as("recomputed"),
-              col("n"), lit(0L).as("sum_vid"))
-        val vt = Fixup.variantTypeDrift(stored)
-        val fs = Fixup.frameshiftDrift(stored)
-        // fix, write the corrected table, read back, re-assert
-        val fixedPath = s"$path-fixed"
-        Fixup.applyFix(
-            Fixup.applyFix(stored, "variant_type",
-              VariantFunctions.variantTypeFixup(col("ref_nuc"), col("var_nuc"))),
-            "frameshift", fsc)
-          .write.mode("overwrite").parquet(fixedPath)
-        val fixed = spark.read.parquet(fixedPath)
-        report("variant_type", vt, "variant_type")
-          .unionByName(report("frameshift", fs, "frameshift"))
-          .unionByName(afterFix("variant_type:after_fix",
-            Fixup.variantTypeDrift(fixed)))
-          .unionByName(afterFix("frameshift:after_fix",
-            Fixup.frameshiftDrift(fixed)))
-          .orderBy(col("check_name"), col("drifted"), col("stored"),
-            col("recomputed"))
+        Fixup.run(Synthetic.variants(spark, dir)
+            .select(col("vid"), col("ref_nuc"), col("var_nuc"))
+            .withColumn("variant_type",
+              when(col("vid") % 7 === 0, "snp")
+                .otherwise(VariantFunctions.variantType(col("ref_nuc"), col("var_nuc"))))
+            .withColumn("frameshift",
+              when(col("vid") % 11 === 0,
+                when(fsc === "T", "F").otherwise("T")).otherwise(fsc)),
+          s"${QueriesSources.FixtureDir}/fixup_variants", Seq(Fixup.VariantType, Fixup.FrameShift))
       },
       Some(fixupOracle)),
 
-    // §5.5 complete: the three remaining fixups as drift jobs.
+    // §5.5 complete: the three remaining fixups as drift jobs
+    // (Fixup.siteJobs, in fix order).
     //  - genic_status (GenicStatusFixUp.java:35-109): re-derivation is
     //    an interval lookup (RangeJoin.covered, q25's), not a
     //    projection — the most valuable fixup.
@@ -483,16 +418,13 @@ object QueriesPipeline {
     //  - zygosity_percent_read (ZygosityPercReadFixUp.java:35-117):
     //    SNV rows whose stored percent disagrees with var_freq get
     //    percent := var_freq and the gender-free status ladder.
-    // The fixture corrupts disjoint vid strata (%13 / %17 / %19), runs
-    // each drift report, applies all three fixes (genic, then percent
-    // — which re-shapes the percent>0 scope — then num_allele over the
-    // POST-fix scope, since that is the state a re-run job would see),
-    // persists the fixed table, and re-asserts zero drift per check.
+    // The fixture corrupts disjoint vid strata (%13 / %17 / %19); the
+    // percent fix re-shapes the percent>0 scope, so num_allele is fixed
+    // over the POST-fix scope, the state a re-run job would see.
     // 100 TB: one broadcast interval join + one window shuffle +
-    // map-only projections; the after-fix recheck repeats the same.
+    // map-only projections per table read.
     Q("q106_fixup_drift2",
       (spark, dir) => {
-        import graft.operators.Fixup
         val g = Synthetic.genes(spark, dir)
         // unique-vid stored table (vid repeats in the synthetic corpus;
         // fixups address rows by id) — the corpus-wide groupBy(vid)
@@ -531,88 +463,17 @@ object QueriesPipeline {
         // store the untouched default 1. One unfiltered window
         // (Fixup.numAlleleRecomputed), row-identical to filter ->
         // window -> join-back under the unique-vid contract.
-        val stored0 = withGenic
-          .withColumn("zygosity_num_allele",
-            coalesce(Fixup.numAlleleRecomputed +
-              when(col("vid") % 17 === 0, 1).otherwise(0), lit(1)))
-        val path = s"${QueriesSources.FixtureDir}/fixup2_variants"
-        stored0.write.mode("overwrite").parquet(path)
-        val stored = spark.read.parquet(path)
-        def report(name: String, d: org.apache.spark.sql.DataFrame,
-                   storedC: org.apache.spark.sql.Column,
-                   recomputedC: org.apache.spark.sql.Column) =
-          d.groupBy(lit(name).as("check_name"), col("drifted"),
-              storedC.cast("string").as("stored"),
-              recomputedC.cast("string").as("recomputed"))
-            .agg(count(lit(1)).as("n"), sum(col("vid")).as("sum_vid"))
-        // materialized once: `a` (an interval join over the stored
-        // parquet) sits under the genic report AND — via fixedAC — the
-        // fixed-table write; un-checkpointed it would execute twice
-        val a = Fixup.genicStatusDrift(stored, g).localCheckpoint(true)
-        val nA = Fixup.drift(stored, "zygosity_num_allele", Fixup.numAlleleRecomputed)
-          .filter(col("zygosity_percent_read") > 0)
-        val c = Fixup.zygosityPercentScope(stored)
-          .withColumn("recomputed", ZygosityFunctions.statusLadder(col("var_freq")))
-          .withColumn("drifted", lit(true))
-        // apply all three fixes: genic, then percent/status, then
-        // num_allele recomputed over the post-fix percent>0 scope
-        val fixedAC = a.withColumn("genic_status", col("recomputed"))
-          .drop("recomputed", "drifted")
-          .withColumn("__snvFix",
-            col("variant_type") === "snv" &&
-              !(col("zygosity_percent_read") <=> col("var_freq")))
-          .withColumn("zygosity_percent_read",
-            when(col("__snvFix"), col("var_freq"))
-              .otherwise(col("zygosity_percent_read")))
-          .withColumn("zygosity_status",
-            when(col("__snvFix"),
-              ZygosityFunctions.statusLadder(col("zygosity_percent_read")))
-              .otherwise(col("zygosity_status")))
-          .drop("__snvFix")
-        // num_allele recomputed over the POST-fix percent>0 scope: one
-        // window over the map-side projection of the `a` checkpoint
-        val fixedPath = s"$path-fixed"
-        fixedAC
-          .withColumn("zygosity_num_allele",
-            coalesce(Fixup.numAlleleRecomputed, col("zygosity_num_allele")))
-          .write.mode("overwrite").parquet(fixedPath)
-        val fixed = spark.read.parquet(fixedPath)
-        // after-fix recheck in ONE pass over the re-read fixed table:
-        // all three rechecks are row-local once the genic
-        // re-derivation (map-side lookup) and the num-allele site
-        // window are attached, so one scan + one window + one
-        // aggregate computes all three remaining-drift counts; stack()
-        // re-shapes them into the three report rows. Computed from the
-        // persisted fixed table, as a re-run job would read the store.
-        val afterAll = Fixup.genicStatusDrift(fixed, g)
-          .withColumn("__naRe", Fixup.numAlleleRecomputed)
-          .agg(
-            coalesce(sum(when(col("drifted"), 1L)), lit(0L)).as("n_genic"),
-            coalesce(sum(when(col("zygosity_percent_read") > 0 &&
-              !(col("zygosity_num_allele") <=> col("__naRe")), 1L)),
-              lit(0L)).as("n_na"),
-            coalesce(sum(when(col("variant_type") === "snv" &&
-              !(col("zygosity_percent_read") <=> col("var_freq")), 1L)),
-              lit(0L)).as("n_zyg"))
-          .select(expr("""stack(3,
-              'genic_status:after_fix', n_genic,
-              'num_allele:after_fix', n_na,
-              'zygosity_perc_read:after_fix', n_zyg)
-            AS (check_name, n)"""))
-          .select(col("check_name"), lit(false).as("drifted"),
-            lit("*").as("stored"), lit("*").as("recomputed"),
-            col("n"), lit(0L).as("sum_vid"))
-        report("genic_status", a, col("genic_status"), col("recomputed"))
-          .unionByName(report("num_allele", nA,
-            col("zygosity_num_allele"), col("recomputed")))
-          .unionByName(report("zygosity_perc_read", c,
-            col("zygosity_status"), col("recomputed")))
-          .unionByName(afterAll)
-          .orderBy(col("check_name"), col("drifted"), col("stored"),
-            col("recomputed"))
+        Fixup.run(withGenic
+            .withColumn("zygosity_num_allele",
+              coalesce(Fixup.numAlleleRecomputed +
+                when(col("vid") % 17 === 0, 1).otherwise(0), lit(1))),
+          s"${QueriesSources.FixtureDir}/fixup2_variants", Fixup.siteJobs(g))
       },
       Some(fixup2Oracle)),
 
+    // J11/W5: equal keys on both sides pair off positionally (the
+    // reference consumes first-match with iterator.remove; row_number on
+    // both sides + equi-join is the deterministic distributed form).
     Q("q64_pairing_join",
       (spark, dir) => {
         val li = table(spark, dir, "lineitem")

@@ -8,13 +8,12 @@ import org.apache.spark.sql.expressions.Window
   * set ops — each with a DuckDB oracle.
   *
   * Determinism rules for oracle hash-parity: money sums are computed as
-  * integer cents via floor(x*100 + 0.5) (identical IEEE evaluation in
-  * both engines); every output is int/long/string; every window has a
-  * total tiebreak order.
+  * integer cents ([[centsSql]]); every output is int/long/string; every
+  * window has a total tiebreak order.
   */
 object QueriesRelational {
 
-  private val centsL = "CAST(floor(l_extendedprice * (1 - l_discount) * 100 + 0.5) AS BIGINT)"
+  private val centsL = centsSql("l_extendedprice * (1 - l_discount)")
 
   val all: Seq[Q] = Seq(
 
@@ -107,7 +106,7 @@ object QueriesRelational {
         val o = table(spark, dir, "orders")
         val j = o.join(c, o("o_custkey") === c("c_custkey"))
           .select(c("c_mktsegment").as("seg"), o("o_orderkey").as("o_orderkey"),
-            expr("CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT)").as("price_cents"))
+            expr(centsSql("o_totalprice")).as("price_cents"))
         val w = Window.partitionBy(col("seg"))
           .orderBy(col("price_cents").desc, col("o_orderkey"))
         j.withColumn("rn", row_number().over(w))
@@ -115,11 +114,11 @@ object QueriesRelational {
           .select(col("seg"), col("rn").cast("long").as("rn"), col("o_orderkey"), col("price_cents"))
           .orderBy(col("seg"), col("rn"))
       },
-      Some("""SELECT seg, rn, o_orderkey, price_cents FROM (
+      Some(s"""SELECT seg, rn, o_orderkey, price_cents FROM (
              |  SELECT c_mktsegment AS seg, o_orderkey,
-             |    CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT) AS price_cents,
+             |    ${centsSql("o_totalprice")} AS price_cents,
              |    CAST(row_number() OVER (PARTITION BY c_mktsegment
-             |      ORDER BY CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT) DESC, o_orderkey) AS BIGINT) AS rn
+             |      ORDER BY ${centsSql("o_totalprice")} DESC, o_orderkey) AS BIGINT) AS rn
              |  FROM orders JOIN customer ON o_custkey = c_custkey)
              |WHERE rn <= 3
              |ORDER BY seg, rn""".stripMargin)),
@@ -131,13 +130,13 @@ object QueriesRelational {
           .rowsBetween(Window.unboundedPreceding, Window.currentRow)
         table(spark, dir, "events")
           .select(col("user_id"), col("event_id"), col("ts"),
-            expr("CAST(floor(value * 100 + 0.5) AS BIGINT)").as("cents"))
+            expr(centsSql("value")).as("cents"))
           .withColumn("run_cents", sum(col("cents")).over(w))
           .select(col("user_id"), col("event_id"), col("run_cents"))
           .orderBy(col("user_id"), col("event_id"))
       },
-      Some("""SELECT user_id, event_id,
-             |  CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT))
+      Some(s"""SELECT user_id, event_id,
+             |  CAST(sum(${centsSql("value")})
              |    OVER (PARTITION BY user_id ORDER BY ts, event_id
              |          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS run_cents
              |FROM events
@@ -169,7 +168,7 @@ object QueriesRelational {
       (spark, dir) => {
         table(spark, dir, "events")
           .select(col("event_type"), (col("user_id") % 10).as("bucket"),
-            expr("CAST(floor(value * 100 + 0.5) AS BIGINT)").as("cents"))
+            expr(centsSql("value")).as("cents"))
           .cube(col("event_type"), col("bucket"))
           .agg(count(lit(1)).as("cnt"), sum(col("cents")).as("sum_cents"))
           .select(
@@ -178,11 +177,11 @@ object QueriesRelational {
             col("cnt"), col("sum_cents"))
           .orderBy(col("event_type"), col("bucket"))
       },
-      Some("""SELECT coalesce(event_type, 'ALL') AS event_type,
+      Some(s"""SELECT coalesce(event_type, 'ALL') AS event_type,
              |  coalesce(bucket, -1) AS bucket, count(*) AS cnt,
              |  CAST(sum(cents) AS BIGINT) AS sum_cents
              |FROM (SELECT event_type, user_id % 10 AS bucket,
-             |        CAST(floor(value * 100 + 0.5) AS BIGINT) AS cents FROM events)
+             |        ${centsSql("value")} AS cents FROM events)
              |GROUP BY CUBE(event_type, bucket)
              |ORDER BY event_type, bucket""".stripMargin)),
 
@@ -195,7 +194,7 @@ object QueriesRelational {
         val types = Seq("click", "error", "purchase", "signup", "view")
         table(spark, dir, "events")
           .select((col("user_id") % 10).as("bucket"), col("event_type"),
-            expr("CAST(floor(value * 100 + 0.5) AS BIGINT)").as("cents"))
+            expr(centsSql("value")).as("cents"))
           .groupBy(col("bucket"))
           .pivot("event_type", types)
           .agg(sum(col("cents")))
@@ -208,7 +207,7 @@ object QueriesRelational {
         s"""SELECT user_id % 10 AS bucket,
            |  $cols
            |FROM (SELECT user_id, event_type,
-           |        CAST(floor(value * 100 + 0.5) AS BIGINT) AS cents FROM events)
+           |        ${centsSql("value")} AS cents FROM events)
            |GROUP BY 1 ORDER BY 1""".stripMargin
       }),
 
@@ -274,7 +273,7 @@ object QueriesRelational {
       (spark, dir) => {
         val e = table(spark, dir, "events")
           .select(col("event_type"), col("ts"), col("event_id"),
-            expr("CAST(floor(value * 100 + 0.5) AS BIGINT)").as("cents"))
+            expr(centsSql("value")).as("cents"))
         val w = Window.partitionBy(col("event_type")).orderBy(col("ts"), col("event_id"))
         e.withColumn("gap_us",
             unix_micros(col("ts")) - lag(unix_micros(col("ts")), 1).over(w))
@@ -286,8 +285,8 @@ object QueriesRelational {
             sum(coalesce(col("nxt"), lit(0L))).as("sum_next"))
           .orderBy(col("event_type"), col("tile"))
       },
-      Some("""WITH e AS (SELECT event_type, ts, event_id,
-             |            CAST(floor(value * 100 + 0.5) AS BIGINT) AS cents FROM events),
+      Some(s"""WITH e AS (SELECT event_type, ts, event_id,
+             |            ${centsSql("value")} AS cents FROM events),
              |w AS (SELECT event_type, cents,
              |        epoch_us(ts) - lag(epoch_us(ts)) OVER win AS gap_us,
              |        lead(cents) OVER win AS nxt,
@@ -308,7 +307,7 @@ object QueriesRelational {
       (spark, dir) => {
         val o = table(spark, dir, "orders")
           .select(col("o_custkey"), col("o_orderkey"),
-            expr("CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT)").as("cents"))
+            expr(centsSql("o_totalprice")).as("cents"))
           .withColumn("ord", col("cents") * 10000000L + col("o_orderkey"))
         val c = table(spark, dir, "customer").select(col("c_custkey"), col("c_mktsegment"))
         o.join(broadcast(c), col("o_custkey") === col("c_custkey"))
@@ -318,11 +317,11 @@ object QueriesRelational {
             min_by(col("o_orderkey"), col("ord")).as("bottom_order"))
           .orderBy(col("c_mktsegment"))
       },
-      Some("""SELECT c_mktsegment, count(*) AS n_orders,
+      Some(s"""SELECT c_mktsegment, count(*) AS n_orders,
              |  CAST(max_by(o_orderkey, ord) AS BIGINT) AS top_order,
              |  CAST(min_by(o_orderkey, ord) AS BIGINT) AS bottom_order
              |FROM (SELECT o_custkey, o_orderkey,
-             |        CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT) * 10000000
+             |        ${centsSql("o_totalprice")} * 10000000
              |          + o_orderkey AS ord
              |      FROM orders) o
              |JOIN customer ON o_custkey = c_custkey
@@ -397,10 +396,10 @@ object QueriesRelational {
       (spark, dir) =>
         table(spark, dir, "orders")
           .select(col("o_orderkey"),
-            expr("CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT)").as("price_cents"))
+            expr(centsSql("o_totalprice")).as("price_cents"))
           .orderBy(col("price_cents").desc, col("o_orderkey"))
           .limit(10),
-      Some("""SELECT o_orderkey, CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT) AS price_cents
+      Some(s"""SELECT o_orderkey, ${centsSql("o_totalprice")} AS price_cents
              |FROM orders
              |ORDER BY price_cents DESC, o_orderkey
              |LIMIT 10""".stripMargin)),
@@ -413,14 +412,14 @@ object QueriesRelational {
         table(spark, dir, "events")
           .groupBy(window(col("ts"), "1 hour"), col("event_type"))
           .agg(count(lit(1)).as("cnt"),
-            sum(expr("CAST(floor(value * 100 + 0.5) AS BIGINT)")).as("sum_cents"))
+            sum(expr(centsSql("value"))).as("sum_cents"))
           .select(
             date_format(col("window.start"), "yyyy-MM-dd HH:mm").as("w_start"),
             col("event_type"), col("cnt"), col("sum_cents"))
           .orderBy(col("w_start"), col("event_type")),
-      Some("""SELECT strftime(time_bucket(INTERVAL '1 hour', ts), '%Y-%m-%d %H:%M') AS w_start,
+      Some(s"""SELECT strftime(time_bucket(INTERVAL '1 hour', ts), '%Y-%m-%d %H:%M') AS w_start,
              |  event_type, count(*) AS cnt,
-             |  CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT)) AS BIGINT) AS sum_cents
+             |  CAST(sum(${centsSql("value")}) AS BIGINT) AS sum_cents
              |FROM events
              |GROUP BY 1, 2
              |ORDER BY 1, 2""".stripMargin)),
@@ -451,15 +450,15 @@ object QueriesRelational {
       (spark, dir) => {
         val e = table(spark, dir, "events")
           .select(col("event_type"), (col("user_id") % 100).as("a"),
-            expr("CAST(floor(value * 100 + 0.5) AS BIGINT)").as("cents"))
+            expr(centsSql("value")).as("cents"))
         graft.operators.SkewSalt.saltedSumCount(
             e, Seq("event_type"), Seq(col("a"), col("cents")), salts = 16,
             sums = Seq("a", "cents"))
           .orderBy(col("event_type"))
       },
-      Some("""SELECT event_type, count(*) AS cnt,
+      Some(s"""SELECT event_type, count(*) AS cnt,
              |  CAST(sum(user_id % 100) AS BIGINT) AS sum_a,
-             |  CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT)) AS BIGINT) AS sum_cents
+             |  CAST(sum(${centsSql("value")}) AS BIGINT) AS sum_cents
              |FROM events
              |GROUP BY event_type
              |ORDER BY event_type""".stripMargin)),
@@ -472,7 +471,7 @@ object QueriesRelational {
     Q("q18_asof_join",
       (spark, dir) => {
         val e = table(spark, dir, "events")
-        val cents = expr("CAST(floor(value * 100 + 0.5) AS BIGINT)")
+        val cents = expr(centsSql("value"))
         val clicks = e.filter(col("event_type") === "click")
           .groupBy(col("user_id"), col("ts")).agg(max(cents).as("click_cents"))
         val purchases = e.filter(col("event_type") === "purchase")
@@ -485,8 +484,8 @@ object QueriesRelational {
             sum(coalesce(col("click_cents"), lit(0L))).as("sum_click_cents"))
           .orderBy(col("bucket"))
       },
-      Some("""WITH e AS (SELECT user_id, ts, event_type,
-             |            CAST(floor(value * 100 + 0.5) AS BIGINT) AS cents FROM events),
+      Some(s"""WITH e AS (SELECT user_id, ts, event_type,
+             |            ${centsSql("value")} AS cents FROM events),
              |c AS (SELECT user_id, ts, CAST(max(cents) AS BIGINT) AS click_cents
              |      FROM e WHERE event_type = 'click' GROUP BY 1, 2),
              |p AS (SELECT user_id, ts FROM e WHERE event_type = 'purchase')

@@ -11,6 +11,12 @@ package object queries {
       fn: (SparkSession, String) => DataFrame,
       oracle: Option[String])
 
+  /** Money `x` as integer cents, rounded half up, in the dialect Spark
+    * SQL and DuckDB share: both evaluate `floor(x * 100 + 0.5)` in the
+    * same IEEE doubles, so sums of it agree exactly. Spark reads it
+    * through `expr`; the oracles splice it into their SQL. */
+  def centsSql(x: String): String = s"CAST(floor($x * 100 + 0.5) AS BIGINT)"
+
   /** Read one test table (parquet) from the scale-factor directory.
     * The driver's `events.ts` is TIMESTAMP(NANOS) in the parquet, which
     * Spark reads only as a long (nanosAsLong); convert to a microsecond

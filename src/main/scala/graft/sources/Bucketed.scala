@@ -102,11 +102,19 @@ object Bucketed {
     fs.delete(new Path(p), true)
     require(fs.rename(new Path(stagingPath), new Path(p)),
       s"rename $stagingPath -> $p failed; staged file set left intact")
+    attach(spark, table, ddl, buckets, keys, p)
+  }
+
+  /** Create the catalog entry `table` (columns `ddl`, bucketed and
+    * sorted by `keys` into `buckets`) over the parquet files at `path`,
+    * and refresh the path so later reads see them. */
+  def attach(spark: org.apache.spark.sql.SparkSession, table: String, ddl: String,
+             buckets: Int, keys: Seq[String], path: String): Unit = {
     val cols = keys.mkString(", ")
     spark.sql(s"CREATE TABLE $table ($ddl) USING PARQUET " +
       s"CLUSTERED BY ($cols) SORTED BY ($cols) INTO $buckets BUCKETS " +
-      s"LOCATION '$p'")
-    spark.catalog.refreshByPath(p)
+      s"LOCATION '$path'")
+    spark.catalog.refreshByPath(path)
   }
 
   /** Compact a bucketed table: rewrite it under a fresh bucket spec,
@@ -136,9 +144,11 @@ object Bucketed {
     * path-backed bucketed tables, `(name, keys)` each, stored at
     * `root/name`. Both dedup index kinds are built on it: the MinHash index
     * (`(bands, docs)`, [[graft.operators.MinhashIndex]]) and the
-    * embedding cell index (`(vecs)`, [[graft.operators.SemanticIndex]]).
-    * It is the verify-before-insert store of
-    * `VariantLoad3.saveVariants:479-589`, kept on disk across waves.
+    * embedding cell index (`(vecs)`, [[graft.operators.SemanticIndex]]),
+    * and so is the strain loader's variant store
+    * ([[graft.operators.StrainLoader.variantStore]]). It is the
+    * verify-before-insert store of `VariantLoad3.saveVariants:479-589`,
+    * kept on disk across waves.
     *
     * Constructing a store touches nothing, so a reader can attach to a
     * store another job left behind. The lifecycle rules live here once:

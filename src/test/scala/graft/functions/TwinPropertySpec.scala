@@ -64,6 +64,19 @@ class TwinPropertySpec extends SparkSpec {
         (s"adjustForIndels_$f", adj.getField(f), sql) }: _*)
   }
 
+  test("quality-score twin equals its Column function on NULL, zero, negative and large depths") {
+    val depths: Seq[Option[Int]] = None +:
+      Seq(0, 1, 2, 3, 7, 99, 100, -1, -2, -7, -100, 1000000, Int.MaxValue / 100, Int.MaxValue)
+        .map(Some(_))
+    // pairs whose score fits an INT (a larger one overflows the cast in both)
+    val pairs = for (r <- depths; t <- depths
+      if !r.zip(t).exists { case (r, t) => t > 0 && ((100L * r + t / 2) / t).abs > Int.MaxValue })
+      yield (r, t)
+    agree(pairs.toDF("rd", "td"))(
+      ("qualityScore", VariantFunctions.qualityScore(col("rd"), col("td")),
+        VariantFunctions.qualityScoreSql("rd", "td")))
+  }
+
   test("synonymous-status twin equals its Column function") {
     val aas = Seq(null, "", "X", "x", "M", "m", "K", "*", "skipped")
     agree((for (a <- aas; b <- aas) yield (a, b)).toDF("a", "b"))(

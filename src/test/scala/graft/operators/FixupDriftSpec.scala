@@ -1,21 +1,26 @@
 package graft.operators
 
 import graft.SparkSpec
+import org.apache.spark.sql.Row
+import org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import scala.util.Random
 
-/** genicStatusDrift re-derives genic status by one map-side join
-  * against MERGED gene intervals ([[RangeJoin.mergeIntervals]] under
-  * [[RangeJoin.covered]]), not interval join -> per-vid aggregation ->
-  * join-back. These specs pin (a) the merge's coverage-equivalence +
-  * disjointness on random overlapping data and (b) the drift
-  * operator's row-for-row equivalence with the aggregate form on
-  * fixtures that exercise nested, duplicated, and chained-overlap
-  * coverage. */
+/** The fix-up lifecycle ([[Fixup.run]]) and its jobs. The genic job
+  * re-derives genic status by one map-side join against MERGED gene
+  * intervals ([[RangeJoin.mergeIntervals]] under [[RangeJoin.covered]]),
+  * not interval join -> per-vid aggregation -> join-back. These specs
+  * pin (a) the merge's coverage-equivalence + disjointness on random
+  * overlapping data, (b) the genic report's equivalence with the
+  * aggregate form on fixtures that exercise nested, duplicated, and
+  * chained-overlap coverage, and (c) the lifecycle on random tables:
+  * drift counts, convergence after the ordered fix, and a clean re-run. */
 class FixupDriftSpec extends SparkSpec {
   import spark.implicits._
 
   private val rnd = new Random(7)
+  private lazy val tmp = java.nio.file.Files.createTempDirectory("fixup").toString
 
   private def randomIntervals(n: Int, span: Long) =
     (0 until n).map { i =>
@@ -92,7 +97,7 @@ class FixupDriftSpec extends SparkSpec {
     assert(got == want)
   }
 
-  test("genicStatusDrift equals the aggregate form (overlapping/nested genes)") {
+  test("the genic job's report equals the aggregate form (overlapping/nested genes)") {
     val genes = (randomIntervals(60, 1500000L) ++
       Seq(("1", 0L, 300000L), ("1", 100000L, 400000L), // chained overlaps
         ("1", 150000L, 160000L)))                      // nested
@@ -105,9 +110,8 @@ class FixupDriftSpec extends SparkSpec {
         if (rnd.nextBoolean()) "genic" else "intergenic")
     }.toDF("vid", "chromosome", "start_pos", "genic_status")
 
-    val got = Fixup.genicStatusDrift(variants, genes)
-      .select("vid", "chromosome", "start_pos", "genic_status",
-        "recomputed", "drifted")
+    val got = Fixup.run(variants, s"$tmp/genic", Seq(Fixup.genicStatus(genes)))
+      .filter(col("check_name") === "genic_status")
 
     // the aggregate form: every matching gene, then a per-vid max
     val hits = RangeJoin.pointInIntervalLeftOuter(
@@ -119,12 +123,85 @@ class FixupDriftSpec extends SparkSpec {
       .select(col("vid"),
         when(col("__hit") === 1, "genic").otherwise("intergenic").as("recomputed"))
     val want = variants.join(hits, "vid")
-      .withColumn("drifted", !(col("genic_status") <=> col("recomputed")))
-      .select("vid", "chromosome", "start_pos", "genic_status",
-        "recomputed", "drifted")
+      .groupBy(lit("genic_status").as("check_name"),
+        (!(col("genic_status") <=> col("recomputed"))).as("drifted"),
+        col("genic_status").as("stored"), col("recomputed"))
+      .agg(count(lit(1)).as("n"), sum(col("vid")).as("sum_vid"))
 
-    assert(got.count() === variants.count(), "must stay one row per variant")
+    assert(got.agg(sum("n")).head().getLong(0) === variants.count(),
+      "must count every variant once")
     assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty,
       "merged-interval drift disagrees with the aggregate form")
+  }
+
+  test("lifecycle property: drift counts match Scala, the fix converges, a re-run finds no drift") {
+    val genes = Seq(("1", 50L, 150L), ("1", 140L, 300L), ("2", 1000L, 6000L))
+      .toDF("g_chr", "g_start", "g_stop")
+    def covered(c: Option[String], p: Option[Long]) = (c, p) match {
+      case (Some(c), Some(p)) => Seq(("1", 50L, 150L), ("1", 140L, 300L), ("2", 1000L, 6000L))
+        .exists { case (gc, s, e) => gc == c && s <= p && p <= e }
+      case _ => false
+    }
+    // NULL in every stored column; percents on both sides of 0, so the
+    // percent fix moves rows into and out of the num-allele scope
+    def pick[T](xs: T*): Option[T] = if (rnd.nextInt(8) == 0) None else Some(xs(rnd.nextInt(xs.size)))
+    def pct(): Option[Int] = pick(-5, 0, 0, 1 + rnd.nextInt(100), 1 + rnd.nextInt(100))
+    val schema = StructType.fromDDL("vid BIGINT, sample_id BIGINT, chromosome STRING, " +
+      "start_pos BIGINT, genic_status STRING, variant_type STRING, var_freq INT, " +
+      "zygosity_percent_read INT, zygosity_status STRING, zygosity_num_allele INT, " +
+      "zygosity_ref_allele STRING")
+    for (round <- 0 until 3) {
+      val rows: Seq[Row] = (0 until 300).map { i =>
+        new GenericRowWithSchema(Array(i.toLong, pick(1L, 2L).map(Long.box).orNull, pick("1", "2").orNull,
+          pick(100L, 145L, 200L, 400L, 5000L).map(Long.box).orNull,
+          pick("genic", "intergenic").orNull, pick("snv", "snv", "ins").orNull,
+          pct().map(Int.box).orNull, pct().map(Int.box).orNull,
+          pick("Homozygous", "Heterozygous").orNull,
+          pick(1, 2, 3).map(Int.box).orNull, pick("Y", "N").orNull), schema)
+      }
+      val stored = spark.createDataFrame(spark.sparkContext.parallelize(rows, 3), schema)
+
+      // the three jobs' scopes and drift, computed row by row in Scala
+      def get[T](r: Row, c: String): Option[T] = Option(r.getAs[Any](c)).map(_.asInstanceOf[T])
+      def zygScope(r: Row) = get[String](r, "variant_type").contains("snv") &&
+        get[Int](r, "zygosity_percent_read") != get[Int](r, "var_freq")
+      def naScope(r: Row) = get[Int](r, "zygosity_percent_read").exists(_ > 0)
+      val sites = rows.filter(naScope).groupBy(r =>
+        (get[Long](r, "sample_id"), get[String](r, "chromosome"), get[Long](r, "start_pos")))
+      def naTruth(r: Row) = {
+        val site = sites((get[Long](r, "sample_id"), get[String](r, "chromosome"),
+          get[Long](r, "start_pos")))
+        site.size + (if (site.exists(x => get[String](x, "zygosity_ref_allele").contains("Y"))) 1 else 0)
+      }
+      val want = Map(
+        "genic_status" -> (rows.size, rows.count { r =>
+          !get[String](r, "genic_status").contains(
+            if (covered(get[String](r, "chromosome"), get[Long](r, "start_pos"))) "genic"
+            else "intergenic") }),
+        "num_allele" -> (rows.count(naScope), rows.filter(naScope).count(r =>
+          !get[Int](r, "zygosity_num_allele").contains(naTruth(r)))),
+        "zygosity_perc_read" -> (rows.count(zygScope), rows.count(zygScope)))
+      // non-vacuous: rows on both sides of each scope, drift and no
+      // drift, and the percent fix moving rows across the num-allele scope
+      def crosses(in: Boolean) = rows.exists(r => zygScope(r) && naScope(r) != in &&
+        get[Int](r, "var_freq").exists(_ > 0) == in)
+      assert(want.values.forall { case (n, d) => d > 0 } &&
+        rows.exists(r => !naScope(r)) && rows.exists(r => !zygScope(r)) &&
+        want("num_allele")._2 < want("num_allele")._1 && crosses(true) && crosses(false))
+
+      val path = s"$tmp/property$round"
+      val jobs = Fixup.siteJobs(genes)
+      val report = Fixup.run(stored, path, jobs).collect()
+      val got = jobs.map(_.check).map { c =>
+        val rs = report.filter(_.getString(0) == c)
+        c -> (rs.map(_.getLong(4)).sum, rs.filter(_.getBoolean(1)).map(_.getLong(4)).sum)
+      }.toMap
+      assert(got == want, s"round $round: report (rows, drifted) per check")
+      val after = report.filter(_.getString(0).endsWith(":after_fix"))
+      assert(after.length == jobs.size && after.forall(_.getLong(4) == 0L),
+        s"round $round: drift left after the fix: ${after.mkString("; ")}")
+      val rerun = Fixup.run(spark.read.parquet(s"$path-fixed"), s"$path-rerun", jobs)
+      assert(rerun.filter(col("drifted")).isEmpty, s"round $round: a re-run found drift")
+    }
   }
 }
